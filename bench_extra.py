@@ -7,7 +7,6 @@ bench queries, plus optional plan dumps. Prints one JSON line.
 Usage:
   python bench_extra.py                 # time the 4 declared queries, noop sink
   python bench_extra.py plans OUTDIR    # dump explain('formatted') per query
-  python bench_extra.py pipeline        # stage-level er_pipeline timings
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
 SPARK_GRAFT_BENCH_REPS (default 3).
@@ -68,29 +67,6 @@ def dump_plans(spark, outdir: str, suffix: str) -> None:
             f.write(plan)
 
 
-def time_pipeline_stages(spark) -> dict:
-    """Stage-level wall clock of the fused ER pipeline at bench scale
-    (mirrors tools/profile_pipeline.py but uses noop sinks)."""
-    import shutil
-
-    from bench import _bench_fixture_docs
-
-    from blink_spark.pipeline import PipelineConfig, run_pipeline
-
-    docs_path = _bench_fixture_docs()
-    out: dict[str, float] = {}
-    for rep in range(max(REPS, 2)):
-        out_dir = f"/tmp/bench_extra_{os.getpid()}_{rep}"
-        spark.sparkContext.setJobDescription(f"er_pipeline rep{rep}")
-        t0 = time.time()
-        run_pipeline(spark, docs_path, out_dir).count()
-        dt = round(time.time() - t0, 3)
-        out[f"rep{rep}"] = dt
-        shutil.rmtree(out_dir, ignore_errors=True)
-    spark.sparkContext.setJobDescription(None)
-    return out
-
-
 def main() -> None:
     from blink_spark.session import get_spark
 
@@ -102,10 +78,7 @@ def main() -> None:
         dump_plans(spark, outdir, suffix)
         print(json.dumps({"mode": "plans", "outdir": outdir, "suffix": suffix}))
         return
-    if mode == "pipeline":
-        res = time_pipeline_stages(spark)
-    else:
-        res = time_queries(spark)
+    res = time_queries(spark)
     print(json.dumps({"mode": mode, "sf": SF_DIR, "cpus": CPUS, "results": res}))
 
 

@@ -1,5 +1,5 @@
 """S2 — blocking: assign (block_key, record_id) so only same-block records
-are ever paired. Three strategies, unionable:
+are ever paired. Two strategies, unionable:
 
 1. token-pair blocking — every unordered pair of distinct tokens is a key.
    Guarantees candidate coverage whenever two surfaces share >= 2 tokens
@@ -7,11 +7,9 @@ are ever paired. Three strategies, unionable:
 2. MinHash-LSH band blocking — char-shingle minhash signatures banded into
    bucket keys; the scalable analogue of the reference's FAISS ANN index
    (/root/reference/blink/indexer/faiss_indexer.py:71-141).
-3. embedding sign-LSH bucketing — random-hyperplane bucket of the
-   hashing-trick embedding; IVF-coarse-quantizer analogue
-   (/root/reference/elq/index/faiss_indexer.py:71-91).
 
-All three emit the same shape: (block_key string, record_id string, text).
+Both emit (block_key string, record_id string) rows; select those two
+columns before a union.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from blink_spark.functions.hashing import embed_text_udf, sign_lsh_bucket
 from blink_spark.functions.text import tokens
 
 
@@ -121,28 +118,6 @@ def minhash_blocks(
     )
     return sig.select(
         "record_id", F.explode(band_keys).alias("block_key")
-    )
-
-
-def embedding_blocks(
-    df: DataFrame, id_col: str, text_col: str, n_planes: int = 8
-) -> DataFrame:
-    """Sign-LSH bucket of the hashing-trick embedding as block key.
-
-    The embedding is computed by an Arrow-batched pandas UDF (the biencoder
-    stand-in); the bucket id is JVM-side arithmetic over the array.
-    """
-    with_emb = df.select(
-        df[id_col].alias("record_id"),
-        df[text_col].alias("text"),
-        embed_text_udf(df[text_col]).alias("emb"),
-    )
-    return with_emb.select(
-        "record_id",
-        "text",
-        F.concat(F.lit("e:"), sign_lsh_bucket("emb", n_planes=n_planes)).alias(
-            "block_key"
-        ),
     )
 
 
@@ -252,12 +227,6 @@ def union_blocks(*assignments: DataFrame) -> DataFrame:
     for a in assignments[1:]:
         out = out.unionByName(a)
     return out
-
-
-def block_size_metrics(assignments: DataFrame) -> DataFrame:
-    """Per-block sizes — the skew observability feed (north rule: oversize
-    buckets are logged, not silently dropped)."""
-    return assignments.groupBy("block_key").agg(F.count("*").alias("block_size"))
 
 
 def blocking_quality(assignments: DataFrame, records: DataFrame) -> DataFrame:

@@ -19,20 +19,6 @@ from blink_spark.operators.pairs import candidate_pairs, pairs_with_attrs
 from blink_spark.operators.scoring import match_edges
 
 
-def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Bag-of-words-exact dedup: groups share the sorted-token fingerprint;
-    keeper = min id (deterministic). One shuffle."""
-    return (
-        df.select(F.col(id_col).alias("record_id"), fingerprint(df[text_col]).alias("fp"))
-        .groupBy("fp")
-        .agg(
-            F.count("*").alias("group_size"),
-            F.min("record_id").alias("keeper"),
-            F.sort_array(F.collect_list("record_id")).alias("members"),
-        )
-    )
-
-
 # position field width inside the packed winnowing key: supports documents
 # up to 2^21 = 2M normalized chars; h < 2^32, so pack < 2^53 (exact in BIGINT
 # on both engines, and even in a double — the DuckDB-oracle safety margin).

@@ -126,20 +126,11 @@ def _base_features(pairs_attrs: DataFrame) -> DataFrame:
     )
 
 
-def score_pairs_prepped_cheap(pairs_attrs: DataFrame) -> DataFrame:
-    """Cheap-feature scoring over prepped pairs (long-text dedup: no O(n²)
-    string kernels, no Python anywhere in the plan)."""
-    return _base_features(pairs_attrs).withColumn(
-        "score",
-        F.round(F.when(F.col("norm_eq"), F.lit(1.0)).otherwise(F.col("jaccard")), 6),
-    )
-
-
 def score_pairs_cascade(
     pairs_attrs: DataFrame,
     with_emb: bool = False,
     plausible_threshold: float = 0.9,
-    with_jw: bool = True,
+    with_jw: bool = False,
 ) -> DataFrame:
     """Cascade scoring over **prepped** pair attributes (see
     ``prepare_records``: columns norm_a/b, toks_a/b, optional emb_a/b).
@@ -167,10 +158,16 @@ def score_pairs_cascade(
     results are identical — it only feeds the diagnostic ``score`` — and
     the whole stage stays in codegen. Default for the clustering pipeline.
     """
+    # coalesced: a NULL norm/toks value makes the guard NULL, and both forms
+    # must then send the row down the cold branch (a filter on NULL would
+    # drop it from both union branches, while CASE WHEN keeps it)
     base = _base_features(pairs_attrs).withColumn(
         "plausible",
-        F.col("is_match")
-        | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * plausible_threshold)),
+        F.coalesce(
+            F.col("is_match")
+            | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * plausible_threshold)),
+            F.lit(False),
+        ),
     )
     m = F.greatest(F.length("norm_a"), F.length("norm_b"))
     exact_lev = F.when(

@@ -51,12 +51,6 @@ def enumerate_token_spans(
     )
 
 
-def exclusive_to_inclusive(df: DataFrame, end_col: str = "end_excl") -> DataFrame:
-    """[start, end) → [start, end] — the off-by-one discipline of
-    /root/reference/elq/biencoder/data_process.py:410-411."""
-    return df.withColumn("end_incl", F.col(end_col) - 1)
-
-
 def greedy_overlap_prune(
     scored_spans: DataFrame,
     group_col: str = "record_id",
@@ -246,18 +240,4 @@ def threshold_prune_topk(
             | ((F.col("_np") == 0) & (F.col("_rk") <= k))
         )
         .drop("_np", "_rk")
-    )
-
-
-def sort_spans_canonical(df: DataFrame, group_col: str = "record_id") -> DataFrame:
-    """Canonical (start, end) span order within each group — the span-order
-    invariant of /root/reference/elq/biencoder/data_process.py:202-248.
-    Returns one row per group with the sorted span struct array."""
-    return (
-        df.groupBy(group_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("start", "end_excl", "span_text"))
-            ).alias("spans_sorted")
-        )
     )

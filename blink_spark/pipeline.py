@@ -1,21 +1,31 @@
-"""End-to-end staged ER pipeline with checkpointed, resumable stage tables.
+"""End-to-end ER pipeline: one stage chain, two materializers.
 
 Stage graph (SURVEY.md §7):
 
-    documents ─ S1 extract ─→ mentions
-    mentions  ─ S2 block   ─→ blocks        (token-pair ∪ MinHash-LSH keys)
-    blocks    ─ S3 pairs   ─→ cand_pairs    (skew-aware salted self-join)
-    cand_pairs─ S4 score   ─→ scored_pairs  (vectorized features + decision)
-    scored    ─ S5 cluster ─→ clusters      (large-star/small-star CC)
-    *         ─ S6 metrics ─→ lineage       (per-stage rows)
+    documents  ─ S1  extract  ─→ mentions
+    mentions   ─ S2a contract ─→ reps          (one row per distinct surface)
+    reps       ─ S2b block    ─→ blocks        (token-pair ∪ MinHash-LSH keys)
+    blocks     ─ S3  pairs    ─→ cand_pairs    (skew-aware salted self-join)
+    cand_pairs ─ S4  score    ─→ scored_pairs  (cascade features + decision)
+    scored     ─ S5  cluster  ─→ clusters      (CC over reps, expanded back)
 
-Every stage writes parquet and is skipped when its output already exists —
-the Spark translation of the reference's "output exists → exit" guards
-(/root/reference/blink/candidate_retrieval/process_wikidata.py:35-37,
-enrich_data.py:27-29) and its try-load-else-compute caches
-(/root/reference/blink/biencoder/eval_biencoder.py:169-201). That gives the
-north rule's checkpoint resumability: kill the job after any stage and a
-re-run resumes from the next one.
+``_run_chain`` is the only place the chain is written. It runs under one of
+two materializers:
+
+- ``_Checkpoint`` (``PipelineConfig.checkpoints=True``, the default): each
+  stage is a parquet table, skipped when ``<stage>/_SUCCESS`` exists,
+  otherwise written with its metrics observed during the write, logged to
+  ``lineage.jsonl`` and read back. This is the Spark translation of the
+  reference's "output exists → exit" guards
+  (blink/candidate_retrieval/process_wikidata.py) and its
+  try-load-else-compute caches (blink/biencoder/eval_biencoder.py): kill the
+  job after any stage and a re-run resumes from the next one.
+- ``_InMemory`` (fused linking, document dedup): one DAG. Only the frames
+  with more than one consumer (the S1 records and ``reps``) persist, and
+  every persist is released before the entry point returns.
+
+The entry points differ only in their S1 frame, their terminal step and
+their block families.
 """
 
 from __future__ import annotations
@@ -23,7 +33,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +50,6 @@ from blink_spark.operators.scoring import (
     match_edges,
     prepare_records,
     score_pairs_cascade,
-    score_pairs_prepped_cheap,
 )
 from blink_spark.functions.text import normalize_text
 
@@ -125,7 +134,6 @@ class PipelineConfig:
     max_block_size: int = 64
     hard_cap: int = 4096
     n_salt: int = 8
-    use_minhash: bool = True
     minhash_bands: int = 4
     # 8 rows/band: short similar-vocab strings collide far less (p ≈ j^8)
     # while true near-dups (j ≳ 0.9) still land together w.p. ~1-(1-0.43)^4
@@ -149,14 +157,6 @@ class PipelineConfig:
     # in disk bandwidth, which does not scale with cores — on a real cluster
     # the same trade is checkpoint-to-object-store vs fused stages.
     checkpoints: bool = True
-    stages: tuple[str, ...] = (
-        "mentions",
-        "blocks",
-        "cand_pairs",
-        "scored_pairs",
-        "clusters",
-    )
-    extra: dict = field(default_factory=dict)
 
 
 def _estimated_partitions(df: DataFrame) -> int:
@@ -186,11 +186,19 @@ def _read_documents(spark: SparkSession, documents_path: str) -> DataFrame:
     EnsureRequirements and the ~10x-larger exploded span table is never
     re-shuffled. doc_id is unique per row, so the keyed shuffle is as
     uniform as round-robin."""
-    documents = spark.read.parquet(documents_path)
-    par = spark.sparkContext.defaultParallelism
-    if _estimated_partitions(documents) < par:
-        documents = documents.repartition(par, "doc_id")
-    return documents
+    return _spread(spark.read.parquet(documents_path), "doc_id")
+
+
+def _spread(df: DataFrame, key: str, source: DataFrame | None = None) -> DataFrame:
+    """Repartition ``df`` to the session's parallelism, keyed on the unique
+    column ``key``, when ``source`` (default: ``df``) is estimated to arrive
+    in fewer partitions than cores. A keyed hash repartition skips the
+    round-robin path's sort-before-repartition (SPARK-23207) and spreads
+    exactly as uniformly."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if _estimated_partitions(df if source is None else source) < par:
+        return df.repartition(par, key)
+    return df
 
 
 def _stage_path(out_dir: str, stage: str) -> str:
@@ -247,6 +255,137 @@ def _log_lineage(out_dir: str, stage: str, metrics: dict, path: str | None = Non
         f.write(json.dumps(line) + "\n")
 
 
+class _Checkpoint:
+    """Resumable materializer: a stage whose ``<stage>/_SUCCESS`` exists is
+    skipped; otherwise it is written to parquet with its metrics observed
+    during the write, logged to ``lineage.jsonl`` and read back."""
+
+    logs_stages = True
+
+    def __init__(self, spark: SparkSession, out_dir: str, force: bool):
+        os.makedirs(out_dir, exist_ok=True)
+        self.spark, self.out_dir, self.force = spark, out_dir, force
+
+    def stage(self, name, build, observe=None, shared=False, releases=()):
+        """``build()`` returns the stage frame, or ``(frame, {key: stats})``
+        whose small stats frames are collected into the lineage line.
+        ``releases`` are persists the build registered; they are dropped as
+        soon as the stage is on disk."""
+        path = _stage_path(self.out_dir, name)
+        if self.force or not _exists(path):
+            df, logged = _with_stats(build())
+            metrics = _write_stage(df, path, observe=observe or {"rows": F.count(F.lit(1))})
+            for held in releases:
+                held.unpersist()
+            for key, stats in logged.items():
+                metrics[key] = [r.asDict() for r in stats.collect()]
+            _log_lineage(self.out_dir, name, metrics, path)
+        return self.spark.read.parquet(path)
+
+    def release(self) -> None:
+        pass
+
+
+class _InMemory:
+    """Fused materializer: stages stay lazy in one DAG. Frames with more than
+    one consumer persist; ``release()`` drops every persist of the run."""
+
+    logs_stages = False
+
+    def __init__(self):
+        self._held: list[DataFrame] = []
+
+    def stage(self, name, build, observe=None, shared=False, releases=()):
+        df, _ = _with_stats(build())
+        self._held.extend(releases)
+        if shared:
+            df = df.persist()
+            self._held.append(df)
+        return df
+
+    def release(self) -> None:
+        for held in self._held:
+            held.unpersist()
+
+
+def _with_stats(built) -> tuple[DataFrame, dict]:
+    return built if isinstance(built, tuple) else (built, {})
+
+
+def _run_chain(mat, records, id_col: str, text_col: str, cfg: PipelineConfig,
+               finish, token_blocks: bool = True) -> DataFrame:
+    """The stage chain, from ``exact_contract`` through
+    ``expand_contracted_clusters``, under materializer ``mat``.
+
+    ``records()`` builds the S1 frame (at least ``id_col`` and ``text_col``);
+    ``finish(build)`` materializes the clusters that ``build()`` computes;
+    ``token_blocks`` adds df-aware token blocks to the MinHash-LSH ones
+    (linking), while long-document dedup blocks on MinHash alone."""
+    # token_classes/skew stats are small extra jobs; only lineage reads them
+    stats = cfg.rich_metrics and mat.logs_stages
+    recs = mat.stage("mentions", records, shared=True)
+    # S2a — exact contraction: one representative per distinct surface
+    reps = mat.stage("reps", lambda: exact_contract(recs, id_col, text_col), shared=True)
+
+    def block():
+        families, logged = [], {}
+        if token_blocks:
+            tb, token_stats = df_aware_blocks(
+                reps, "record_id", "norm",
+                rare_df=cfg.max_block_size, max_df=cfg.hard_cap,
+                cache_freq=stats,  # stats unread ⇒ freq has 1 consumer
+            )
+            families.append(tb)
+            if stats:
+                logged["token_classes"] = token_stats
+        families.append(minhash_blocks(
+            reps, "record_id", "norm",
+            bands=cfg.minhash_bands, rows=cfg.minhash_rows,
+            shingle_n=cfg.minhash_shingle_n,
+        ).select("block_key", "record_id"))
+        return union_blocks(*families).select("block_key", "record_id"), logged
+
+    blocks = mat.stage("blocks", block)
+
+    def pair():
+        pairs, skew = candidate_pairs(
+            blocks,
+            max_block_size=cfg.max_block_size,
+            hard_cap=cfg.hard_cap,
+            n_salt=cfg.n_salt,
+        )
+        return pairs, {"skew": skew} if stats else {}
+
+    # candidate_pairs persists its input
+    pairs = mat.stage("cand_pairs", pair, releases=(blocks,))
+
+    # S4 — cascade scoring with biencoder-style embeddings on the hot branch.
+    # When only match_edges reads the result (fused, dedup), Catalyst prunes
+    # the expensive columns and the embedding UDF out of the plan.
+    def score():
+        prep = prepare_records(reps, "record_id", "norm", with_emb=True,
+                               pre_normalized=True)
+        attrs = pairs_with_attrs(pairs, prep, "record_id", ["norm", "toks", "emb", "emb_n"])
+        return score_pairs_cascade(attrs, with_emb=True, with_jw=cfg.with_jw).select(
+            "record_id_a", "record_id_b", "jaccard", "lev_ratio", "emb_cos", "score",
+            "is_match",
+        )
+
+    scored = mat.stage("scored_pairs", score, observe={
+        "rows": F.count(F.lit(1)),
+        "matches": F.sum(F.col("is_match").cast("long")),
+    })
+
+    # S5 — clustering over representatives, expanded back to all records
+    out = finish(lambda: expand_contracted_clusters(
+        recs, id_col, text_col,
+        assign_clusters(reps, "record_id", match_edges(scored),
+                        assume_unique=True, edges_canonical=True),
+    ))
+    mat.release()
+    return out
+
+
 def run_pipeline(
     spark: SparkSession,
     documents_path: str,
@@ -254,197 +393,41 @@ def run_pipeline(
     config: PipelineConfig | None = None,
     force: bool = False,
 ) -> DataFrame:
-    """Run (or resume) the full pipeline; returns the clusters DataFrame."""
+    """Run (or resume) the full pipeline; returns the clusters DataFrame.
+
+    ``config.checkpoints`` picks the materializer; the two modes differ in
+    their S1 frame on purpose. Checkpointed runs keep the full mention
+    schema (the stage table is the resumable contract) and repartition the
+    documents by doc_id before the explode, which the per-doc context
+    windows need. Fused runs consume only ``(mention_id, mention)``:
+    selecting them before the persist lets Catalyst drop the per-doc Sort
+    and two Window passes, and the under-parallel repartition moves after
+    the explode onto the skinny mention rows, so the span/text payload never
+    crosses an exchange. Both write the clusters with a lineage line; fused
+    runs always rewrite them."""
     cfg = config or PipelineConfig()
-    if not cfg.checkpoints:
-        return _run_pipeline_fused(spark, documents_path, out_dir, cfg)
-    os.makedirs(out_dir, exist_ok=True)
+    out = _Checkpoint(spark, out_dir, force=force or not cfg.checkpoints)
+    if cfg.checkpoints:
+        mat = out
 
-    _rows_obs = {"rows": F.count(F.lit(1))}
+        def mentions():
+            return extract_mentions(_read_documents(spark, documents_path))
+    else:
+        mat = _InMemory()
 
-    # S1 — extract
-    p_mentions = _stage_path(out_dir, "mentions")
-    if force or not _exists(p_mentions):
-        documents = _read_documents(spark, documents_path)
-        mentions = extract_mentions(documents)
-        m = _write_stage(mentions, p_mentions, observe=_rows_obs)
-        _log_lineage(out_dir, "mentions", m, p_mentions)
-    mentions = spark.read.parquet(p_mentions)
+        def mentions():
+            documents = spark.read.parquet(documents_path)
+            return _spread(extract_mentions(documents).select("mention_id", "mention"),
+                           "mention_id", source=documents)
 
-    # S2a — exact contraction: one representative per distinct surface
-    p_reps = _stage_path(out_dir, "reps")
-    if force or not _exists(p_reps):
-        m = _write_stage(
-            exact_contract(mentions, "mention_id", "mention"), p_reps,
-            observe=_rows_obs,
-        )
-        _log_lineage(out_dir, "reps", m, p_reps)
-    reps = spark.read.parquet(p_reps)
-
-    # S2b — blocking over representatives (df-aware keys ∪ MinHash-LSH)
-    p_blocks = _stage_path(out_dir, "blocks")
-    if force or not _exists(p_blocks):
-        tb, token_stats = df_aware_blocks(
-            reps,
-            "record_id",
-            "norm",
-            rare_df=cfg.max_block_size,
-            max_df=cfg.hard_cap,
-            cache_freq=cfg.rich_metrics,  # stats unread ⇒ freq has 1 consumer
-        )
-        assignments = tb
-        if cfg.use_minhash:
-            mh = minhash_blocks(
-                reps,
-                "record_id",
-                "norm",
-                bands=cfg.minhash_bands,
-                rows=cfg.minhash_rows,
-                shingle_n=cfg.minhash_shingle_n,
-            ).select("block_key", "record_id")
-            assignments = union_blocks(tb, mh)
-        metrics = _write_stage(
-            assignments.select("block_key", "record_id"), p_blocks,
-            observe=_rows_obs,
-        )
-        if cfg.rich_metrics:
-            metrics["token_classes"] = [r.asDict() for r in token_stats.collect()]
-        _log_lineage(out_dir, "blocks", metrics, p_blocks)
-    blocks = spark.read.parquet(p_blocks)
-
-    # S3 — candidate pairs (skew-aware)
-    p_pairs = _stage_path(out_dir, "cand_pairs")
-    if force or not _exists(p_pairs):
-        pairs, skew = candidate_pairs(
-            blocks,
-            max_block_size=cfg.max_block_size,
-            hard_cap=cfg.hard_cap,
-            n_salt=cfg.n_salt,
-        )
-        metrics = _write_stage(pairs, p_pairs, observe=_rows_obs)
-        blocks.unpersist()  # candidate_pairs persisted it; pairs are on disk
-        if cfg.rich_metrics:
-            metrics["skew"] = [r.asDict() for r in skew.collect()]
-        _log_lineage(out_dir, "cand_pairs", metrics, p_pairs)
-    pairs = spark.read.parquet(p_pairs)
-
-    # S4 — cascade scoring with biencoder-style embeddings on the hot branch
-    p_scored = _stage_path(out_dir, "scored_pairs")
-    if force or not _exists(p_scored):
-        prep = prepare_records(reps, "record_id", "norm", with_emb=True,
-                           pre_normalized=True)
-        attrs = pairs_with_attrs(pairs, prep, "record_id", ["norm", "toks", "emb", "emb_n"])
-        scored = score_pairs_cascade(attrs, with_emb=True, with_jw=cfg.with_jw)
-        metrics = _write_stage(
-            scored.select(
-                "record_id_a",
-                "record_id_b",
-                "jaccard",
-                "lev_ratio",
-                "emb_cos",
-                "score",
-                "is_match",
-            ),
-            p_scored,
-            observe={
-                "rows": F.count(F.lit(1)),
-                "matches": F.sum(F.col("is_match").cast("long")),
-            },
-        )
-        _log_lineage(out_dir, "scored_pairs", metrics, p_scored)
-    scored = spark.read.parquet(p_scored)
-
-    # S5 — clustering over representatives, expanded back to all mentions
-    p_clusters = _stage_path(out_dir, "clusters")
-    if force or not _exists(p_clusters):
-        edges = match_edges(scored)
-        rep_clusters = assign_clusters(reps, "record_id", edges,
-                                   assume_unique=True, edges_canonical=True)
-        clusters = expand_contracted_clusters(
-            mentions, "mention_id", "mention", rep_clusters
-        )
-        metrics = _write_stage(
-            clusters, p_clusters,
-            observe={
-                "rows": F.count(F.lit(1)),
-                # observed during the write (no second scan); approximate by
-                # construction — the exact distinct needs its own aggregate
-                "n_clusters_approx": F.approx_count_distinct("cluster_id"),
-            },
-        )
-        _log_lineage(out_dir, "clusters", metrics, p_clusters)
-    return spark.read.parquet(p_clusters)
-
-
-def _run_pipeline_fused(
-    spark: SparkSession,
-    documents_path: str,
-    out_dir: str,
-    cfg: PipelineConfig,
-) -> DataFrame:
-    """Checkpoint-free variant: one fused DAG from documents to clusters.
-
-    Multi-consumer frames persist in the block cache instead of parquet, so
-    the pair table is never round-tripped through disk. Same operators,
-    same results; no resumability (that's what checkpoints=True is for).
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    # fused mode consumes only (mention_id, mention): contraction and the
-    # final expansion both key on the surface. Selecting them BEFORE the
-    # persist lets Catalyst prune the context_left/right columns, which
-    # removes the per-doc Sort + two Window passes over the exploded span
-    # table from the plan (the checkpointed path keeps the full S1 schema —
-    # its stage table is the resumable contract). With no per-doc window
-    # left, the under-parallel-input repartition moves AFTER the explode,
-    # onto the skinny mention rows — the same parallelism for every
-    # downstream map-side agg at a fraction of the shuffled bytes (the
-    # span/text payload never crosses an exchange).
-    documents = spark.read.parquet(documents_path)
-    m = extract_mentions(documents).select("mention_id", "mention")
-    if _estimated_partitions(documents) < spark.sparkContext.defaultParallelism:
-        # keyed on the unique mention_id: hash repartition skips the
-        # round-robin path's sort-before-repartition (SPARK-23207) and
-        # spreads exactly as uniformly
-        m = m.repartition(spark.sparkContext.defaultParallelism, "mention_id")
-    mentions = m.persist()
-    reps = exact_contract(mentions, "mention_id", "mention").persist()
-
-    tb, _ = df_aware_blocks(
-        reps, "record_id", "norm",
-        rare_df=cfg.max_block_size, max_df=cfg.hard_cap,
-        cache_freq=False,  # fused mode never reads token_stats
-    )
-    assignments = tb
-    if cfg.use_minhash:
-        mh = minhash_blocks(
-            reps, "record_id", "norm",
-            bands=cfg.minhash_bands, rows=cfg.minhash_rows,
-            shingle_n=cfg.minhash_shingle_n,
-        ).select("block_key", "record_id")
-        assignments = union_blocks(tb, mh)
-
-    pairs, _ = candidate_pairs(
-        assignments,
-        max_block_size=cfg.max_block_size,
-        hard_cap=cfg.hard_cap,
-        n_salt=cfg.n_salt,
-    )
-    prep = prepare_records(reps, "record_id", "norm", with_emb=True,
-                           pre_normalized=True)
-    attrs = pairs_with_attrs(pairs, prep, "record_id", ["norm", "toks", "emb", "emb_n"])
-    scored = score_pairs_cascade(attrs, with_emb=True, with_jw=cfg.with_jw)
-    edges = match_edges(scored)
-    rep_clusters = assign_clusters(reps, "record_id", edges,
-                                   assume_unique=True, edges_canonical=True)
-    clusters = expand_contracted_clusters(
-        mentions, "mention_id", "mention", rep_clusters
-    )
-    p_clusters = _stage_path(out_dir, "clusters")
-    _write_stage(clusters, p_clusters)
-    mentions.unpersist()
-    reps.unpersist()
-    assignments.unpersist()  # candidate_pairs persisted its input
-    return spark.read.parquet(p_clusters)
+    return _run_chain(mat, mentions, "mention_id", "mention", cfg, finish=lambda build: out.stage(
+        "clusters", build, observe={
+            "rows": F.count(F.lit(1)),
+            # observed during the write (no second scan); approximate by
+            # construction — the exact distinct needs its own aggregate
+            "n_clusters_approx": F.approx_count_distinct("cluster_id"),
+        },
+    ))
 
 
 def dedup_documents_pipeline(
@@ -454,42 +437,17 @@ def dedup_documents_pipeline(
     text_col: str,
     cfg: PipelineConfig | None = None,
 ) -> DataFrame:
-    """In-memory variant over a flat (id, text) table — near-duplicate
-    clustering (the flagship `entry()` query). No stage writes; same
-    operators. Default config: wide shingles (see minhash_shingle_n)."""
+    """In-memory run over a flat (id, text) table — near-duplicate
+    clustering (the flagship `entry()` query), MinHash blocks only. Default
+    config: wide shingles (see minhash_shingle_n)."""
     cfg = cfg or PipelineConfig(minhash_shingle_n=7, minhash_rows=4)
-    recs = documents.select(
-        F.col(id_col).cast("string").alias("record_id"), F.col(text_col).alias("text")
-    )
-    if _estimated_partitions(recs) < spark.sparkContext.defaultParallelism:
-        # keyed on the unique record_id (vs round-robin): no
-        # sort-before-repartition of the document payload (SPARK-23207)
-        recs = recs.repartition(spark.sparkContext.defaultParallelism, "record_id")
-    recs = recs.persist()
-    reps = exact_contract(recs, "record_id", "text").persist()
-    mh = minhash_blocks(reps, "record_id", "norm",
-                        bands=cfg.minhash_bands, rows=cfg.minhash_rows,
-                        shingle_n=cfg.minhash_shingle_n)
-    assignments = mh.select("block_key", "record_id")
-    pairs, _ = candidate_pairs(
-        assignments,
-        max_block_size=cfg.max_block_size,
-        hard_cap=cfg.hard_cap,
-        n_salt=cfg.n_salt,
-    )
-    prep = prepare_records(reps, "record_id", "norm", pre_normalized=True)
-    attrs = pairs_with_attrs(pairs, prep, "record_id", ["norm", "toks"])
-    scored = score_pairs_prepped_cheap(attrs)
-    edges = match_edges(scored)
-    rep_clusters = assign_clusters(reps, "record_id", edges,
-                                   assume_unique=True, edges_canonical=True)
-    # localCheckpoint is eager: the whole plan materializes here, so every
-    # persist this pipeline (or candidate_pairs) registered can be released
-    # before returning — no leaked cached RDDs outlive the call.
-    out = expand_contracted_clusters(
-        recs, "record_id", "text", rep_clusters
-    ).localCheckpoint()
-    assignments.unpersist()
-    reps.unpersist()
-    recs.unpersist()
-    return out
+
+    def records():
+        return _spread(documents.select(
+            F.col(id_col).cast("string").alias("record_id"), F.col(text_col).alias("text")
+        ), "record_id")
+
+    # localCheckpoint is eager: the whole plan materializes before the
+    # chain releases its persists, so no cached RDD outlives the call.
+    return _run_chain(_InMemory(), records, "record_id", "text", cfg,
+                      finish=lambda build: build().localCheckpoint(), token_blocks=False)

@@ -43,10 +43,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df)
 
 
-def count_shuffles(df: DataFrame) -> int:
-    return explain_str(df).count("Exchange")
-
-
 def partition_filters(df: DataFrame) -> list[str]:
     """PartitionFilters entries across scans — non-empty means the scan
     prunes hive-style partitions instead of reading them all."""

@@ -66,8 +66,3 @@ def unresolved_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     /root/reference/blink/main_dense.py:162-169)."""
     kb = entities.select(F.lower("title").alias("label_title"))
     return mentions.join(F.broadcast(kb), "label_title", "left_anti")
-
-
-def write_jsonl(df: DataFrame, path: str) -> None:
-    """One JSON object per line (/root/reference/blink/utils.py:110-117)."""
-    df.write.mode("overwrite").json(path)

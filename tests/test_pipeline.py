@@ -69,16 +69,30 @@ def test_blocking_recall_is_total(spark, fixture_paths):
     assert row.recall >= 0.999, f"blocking recall {row.recall}"
 
 
-def test_resume_skips_completed_stages(spark, fixture_paths, tmp_path):
-    """Kill-and-restart semantics: delete a late stage, re-run, earlier
-    stage outputs must be reused (mtime unchanged)."""
+_CHECKPOINTS = ("mentions", "reps", "blocks", "cand_pairs", "scored_pairs")
+
+
+@pytest.mark.parametrize("deleted", _CHECKPOINTS)
+def test_resume_skips_completed_stages(spark, fixture_paths, pipe_out, tmp_path, deleted):
+    """Kill-and-restart semantics: delete one stage table (and the clusters),
+    re-run; the result equals the fresh run and every stage upstream of the
+    deleted one is reused (its _SUCCESS mtime unchanged)."""
     out = str(tmp_path / "resume")
-    run_pipeline(spark, fixture_paths["documents"], out)
-    m_before = os.path.getmtime(os.path.join(out, "mentions", "_SUCCESS"))
+    shutil.copytree(pipe_out, out)  # copy2 keeps the mtimes
+    upstream = _CHECKPOINTS[: _CHECKPOINTS.index(deleted)]
+
+    def mtimes():
+        return {s: os.path.getmtime(os.path.join(out, s, "_SUCCESS")) for s in upstream}
+
+    before = mtimes()
+    shutil.rmtree(os.path.join(out, deleted))
     shutil.rmtree(os.path.join(out, "clusters"))
     clusters = run_pipeline(spark, fixture_paths["documents"], out)
-    assert clusters.count() > 0
-    assert os.path.getmtime(os.path.join(out, "mentions", "_SUCCESS")) == m_before
+    fresh = spark.read.parquet(os.path.join(pipe_out, "clusters"))
+    assert clusters.exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(clusters).count() == 0
+    assert os.path.exists(os.path.join(out, deleted, "_SUCCESS"))
+    assert mtimes() == before
 
 
 def test_skew_metrics_logged(spark, fixture_paths, pipe_out):

@@ -89,13 +89,18 @@ def prepped_pairs(spark, fixture_paths):
 
 
 def _union_form_cascade(pa, with_emb):
-    """The pre-round-6 structural filter→union cascade, verbatim."""
+    """The pre-round-6 structural filter→union cascade, verbatim except for
+    the guard, which is coalesced to false as score_pairs_cascade now builds
+    it (a NULL guard would drop the row from both branches)."""
     from blink_spark.functions.similarity import JACCARD_THRESHOLD, dot
     from blink_spark.operators.scoring import _base_features
 
     base = _base_features(pa).withColumn(
         "plausible",
-        F.col("is_match") | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * 0.9)),
+        F.coalesce(
+            F.col("is_match") | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * 0.9)),
+            F.lit(False),
+        ),
     )
     m = F.greatest(F.length("norm_a"), F.length("norm_b"))
     exact_lev = F.when(
@@ -132,16 +137,31 @@ def _union_form_cascade(pa, with_emb):
 def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
     from blink_spark.operators.scoring import score_pairs_cascade
 
+    # a NULL norm with disjoint tokens makes the plausible guard NULL
+    null_norm = (
+        prepped_pairs.orderBy("record_id_a", "record_id_b").limit(1)
+        .withColumn("record_id_a", F.lit("~null_norm"))
+        .withColumn("norm_a", F.lit(None).cast("string"))
+        .withColumn("toks_a", F.array(F.lit("~")))
+    )
+    pa = prepped_pairs.unionByName(null_norm)
     cols = [
         "record_id_a", "record_id_b", "norm_eq", "jaccard", "is_match",
         "lev_ratio", "jw", "score",
     ] + (["emb_cos"] if with_emb else [])
-    old = _union_form_cascade(prepped_pairs, with_emb)
-    new = score_pairs_cascade(prepped_pairs, with_emb=with_emb, with_jw=False)
+    old = _union_form_cascade(pa, with_emb)
+    new = score_pairs_cascade(pa, with_emb=with_emb, with_jw=False)
     assert old.columns == new.columns
     a = sorted(tuple(r) for r in old.select(cols).collect())
     b = sorted(tuple(r) for r in new.select(cols).collect())
     assert a == b and len(a) > 0
+    assert "~null_norm" in {r[0] for r in b}
+    # the library's own union form (with_jw=True) keeps the same rows; only
+    # its jw and score columns differ
+    keep = [c for c in cols if c not in ("jw", "score")]
+    union = score_pairs_cascade(pa, with_emb=with_emb, with_jw=True)
+    u = sorted(tuple(r) for r in union.select(keep).collect())
+    assert u == sorted(tuple(r) for r in new.select(keep).collect())
 
 
 def test_assign_clusters_fast_flags_equal_defensive_path(spark):
