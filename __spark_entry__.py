@@ -4088,39 +4088,21 @@ def _doc_winnow(spark: SparkSession, sf: str) -> DataFrame:
 def _ann_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
     """Exact dense top-k — the biencoder retrieval core
     (/root/reference/blink/biencoder/biencoder.py:148-166 dot-product + topk;
-    tie rule fixed to (score DESC, id ASC) per SURVEY §7).
+    tie rule fixed to (score DESC, id ASC) per SURVEY §7): the
+    ``brute_force_topk`` operator itself, whose default score is the rounded
+    cosine over per-record L2 norms."""
+    from blink_spark.operators.ann import brute_force_topk
 
-    The L2 norms are hoisted to per-record columns BELOW the join (the
-    prepare_records ``emb_n`` trick): the naive ``cosine()`` inlines
-    ``sqrt(dot(x,x))`` for both sides into the per-pair projection — and the
-    CASE WHEN guard evaluates the denominator twice — i.e. five interpreted
-    array folds per pair (Spark HOFs are CodegenFallback). Hoisting leaves
-    one cross-dot fold per pair + one norm fold per record. Bit-identical:
-    the same double values flow through the same multiply/divide/round."""
-    from blink_spark.functions.similarity import dot
-
-    e = _t(spark, sf, "embeddings").withColumn(
-        "nrm", F.sqrt(dot("embedding", "embedding"))
-    )
-    q = e.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    denom = F.col("qn") * F.col("nrm")
-    pairs = q.join(e, F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        F.round(
-            F.when(denom > 0, dot("qv", "embedding") / denom).otherwise(F.lit(0.0)),
-            6,
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("qid", "vec_id", "cos", "rank")
+    e = _t(spark, sf, "embeddings")
+    return brute_force_topk(
+        e.filter(F.col("vec_id") < 16), e, k=5,
+        query_id="vec_id", query_emb="embedding",
+        item_id="vec_id", item_emb="embedding",
+    ).select(
+        F.col("query_id").alias("qid"),
+        F.col("item_id").alias("vec_id"),
+        F.col("score").alias("cos"),
+        "rank",
     )
 
 

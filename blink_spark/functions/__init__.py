@@ -15,6 +15,7 @@ from blink_spark.functions.similarity import (  # noqa: F401
     cosine,
     dot,
     jaro_winkler_udf,
+    l2_norm,
     lev_ratio,
     pair_score,
     token_jaccard,

@@ -2,9 +2,9 @@
 
 The match-decision features (token Jaccard, Levenshtein ratio, exact
 normalized equality) are pure JVM Column expressions — the entire scoring
-stage runs in whole-stage codegen. The crossencoder-style blended score adds
-Jaro-Winkler (pandas UDF; Spark has no builtin) and an embedding dot product,
-mirroring the reference's pair scorer
+stage runs in whole-stage codegen. The crossencoder-style pair score adds
+Jaro-Winkler (pandas UDF; Spark has no builtin), and ``cosine`` is the one
+embedding similarity, mirroring the reference's pair scorer
 (/root/reference/blink/crossencoder/crossencoder.py:135-144) as
 embedding-similarity + lexical features per BASELINE.json north_star.
 """
@@ -84,26 +84,47 @@ def is_match(a: Column | str, b: Column | str) -> Column:
     )
 
 
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
 def dot(a: Column | str, b: Column | str) -> Column:
     """Inner product of two array<float/double> columns, in column order —
     analogue of the biencoder score
     (/root/reference/blink/biencoder/biencoder.py:148-166)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
     return F.aggregate(
-        F.zip_with(ca, cb, lambda x, y: x.cast("double") * y.cast("double")),
+        F.zip_with(
+            _col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double")
+        ),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    norm_a = F.sqrt(dot(ca, ca))
-    norm_b = F.sqrt(dot(cb, cb))
-    denom = norm_a * norm_b
-    return F.when(denom > 0, dot(ca, cb) / denom).otherwise(F.lit(0.0))
+def l2_norm(v: Column | str) -> Column:
+    """Euclidean length of an array<float/double> column."""
+    return F.sqrt(dot(v, v))
+
+
+def cosine(
+    a: Column | str,
+    b: Column | str,
+    norm_a: Column | str | None = None,
+    norm_b: Column | str | None = None,
+) -> Column:
+    """Cosine of two embedding columns, 0.0 when either is the zero vector.
+
+    The norms are per-record quantities: a caller holding ``l2_norm``
+    columns for each side passes them, so a pair pays for one interpreted
+    array fold (the cross dot) instead of up to five: the guard reads the
+    norm product twice, and Spark HOFs are CodegenFallback. A missing norm
+    is computed inline; the doubles and the arithmetic are the same either
+    way, so the result is bit-identical.
+    """
+    na = l2_norm(a) if norm_a is None else _col(norm_a)
+    nb = l2_norm(b) if norm_b is None else _col(norm_b)
+    denom = na * nb
+    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
 def _jaro_winkler(s1: str, s2: str) -> float:
@@ -169,26 +190,16 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 def pair_score(
     text_a: Column | str,
     text_b: Column | str,
-    emb_a: Column | str | None = None,
-    emb_b: Column | str | None = None,
-    w_emb: float = 0.4,
     w_jw: float = 0.3,
     w_lev: float = 0.3,
 ) -> Column:
-    """Crossencoder-style blended pair score in [0, 1].
-
-    embedding cosine + Jaro-Winkler + Levenshtein ratio, the vectorized
-    stand-in for the reference's joint BERT pair logit
-    (/root/reference/blink/crossencoder/crossencoder.py:135-144).
-    Without embeddings the weight shifts onto the lexical features.
-    """
+    """Lexical pair score in [0, 1]: Jaro-Winkler + Levenshtein ratio, the
+    vectorized stand-in for the reference's joint BERT pair logit
+    (/root/reference/blink/crossencoder/crossencoder.py:135-144)."""
     na = normalize_text(text_a)
     nb = normalize_text(text_b)
     jw = jaro_winkler_udf(na, nb)
     lv = lev_ratio(text_a, text_b)
-    if emb_a is not None and emb_b is not None:
-        emb_sim = (cosine(emb_a, emb_b) + 1.0) / 2.0
-        return F.round(w_emb * emb_sim + w_jw * jw + w_lev * lv, 6)
     total = w_jw + w_lev
     return F.round((w_jw / total) * jw + (w_lev / total) * lv, 6)
 

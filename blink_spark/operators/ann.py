@@ -11,6 +11,11 @@
   nlist=100 cells). At 100 TB the bucket id is the partition key: the join
   is co-located, never all-pairs.
 
+Each side projects its L2 norms once per record (``_embedded``), and the
+default pair score is ``similarity.cosine`` over them, so a pair pays for
+one interpreted fold, the cross dot. A custom ``scorer(qv, iv)`` ignores the
+norms and Catalyst prunes them.
+
 Tie rule fixed to (score DESC, id ASC) for reproducibility (SURVEY.md §7).
 """
 
@@ -20,11 +25,34 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blink_spark.functions.hashing import sign_lsh_bucket
-from blink_spark.functions.similarity import cosine
+from blink_spark.functions.similarity import cosine, l2_norm
+
+_QUERY = ("query_id", "qv", "qn")
+_ITEM = ("item_id", "iv", "itn")
 
 
 def _default_scorer(qv, iv):
+    """Rounded cosine with per-pair norms: scores a vector against the
+    literal IVF codebook, whose centroids carry no norm column."""
     return F.round(cosine(qv, iv), 6)
+
+
+def _embedded(df: DataFrame, id_col: str, emb_col: str, names) -> DataFrame:
+    """``(id, vector, norm)`` renamed to ``names`` (``_QUERY``/``_ITEM``):
+    the L2 norm is computed here, once per record."""
+    id_as, emb_as, norm_as = names
+    emb = F.col(emb_col)
+    return df.select(
+        F.col(id_col).alias(id_as), emb.alias(emb_as), l2_norm(emb).alias(norm_as)
+    )
+
+
+def _pair_score(scorer) -> F.Column:
+    """A query-item row's score: ``scorer(qv, iv)`` when given, else the
+    rounded cosine from both sides' per-record norms."""
+    if scorer is None:
+        return F.round(cosine("qv", "iv", "qn", "itn"), 6)
+    return scorer(F.col("qv"), F.col("iv"))
 
 
 def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
@@ -57,12 +85,11 @@ def brute_force_topk(
     overrides the rounded-cosine score (e.g. ``cosine_exact`` over quantized
     embeddings for bit-reproducible oracle parity).
     """
-    scorer = scorer or _default_scorer
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(query_emb).alias("qv"))
-    it = items.select(F.col(item_id).alias("item_id"), F.col(item_emb).alias("iv"))
+    q = _embedded(queries, query_id, query_emb, _QUERY)
+    it = _embedded(items, item_id, item_emb, _ITEM)
     cond = F.lit(True) if not exclude_self else (F.col("item_id") != F.col("query_id"))
     pairs = q.crossJoin(it).filter(cond).select(
-        "query_id", "item_id", scorer(F.col("qv"), F.col("iv")).alias("score")
+        "query_id", "item_id", _pair_score(scorer).alias("score")
     )
     return _rank_topk(pairs, k)
 
@@ -88,24 +115,23 @@ def lsh_topk(
     join anywhere. ``bucket_fn(emb) -> Column`` overrides the float sign-LSH
     bucket (e.g. ``sign_lsh_bucket_exact`` over quantized embeddings).
     """
-    scorer = scorer or _default_scorer
     bucket_fn = bucket_fn or (lambda c: sign_lsh_bucket(c, n_planes=n_planes))
-    it = items.select(
-        F.col(item_id).alias("item_id"), F.col(item_emb).alias("iv")
-    ).withColumn("bucket", bucket_fn(F.col("iv")))
+    it = _embedded(items, item_id, item_emb, _ITEM).withColumn(
+        "bucket", bucket_fn(F.col("iv"))
+    )
 
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_emb).alias("qv")
-    ).withColumn("bucket0", bucket_fn(F.col("qv")))
+    q = _embedded(queries, query_id, query_emb, _QUERY).withColumn(
+        "bucket0", bucket_fn(F.col("qv"))
+    )
     probes = [F.col("bucket0")]
     if probe_bits >= 1:
         probes += [F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
     qp = q.select(
-        "query_id", "qv", F.explode(F.array(*probes)).alias("bucket")
+        "query_id", "qv", "qn", F.explode(F.array(*probes)).alias("bucket")
     )
 
     pairs = qp.join(it, "bucket").filter(F.col("item_id") != F.col("query_id")).select(
-        "query_id", "item_id", scorer(F.col("qv"), F.col("iv")).alias("score")
+        "query_id", "item_id", _pair_score(scorer).alias("score")
     ).dropDuplicates(["query_id", "item_id"])
     return _rank_topk(pairs, k)
 
@@ -201,7 +227,7 @@ def _assign_cells_lit(it: DataFrame, carr, cid_t: str, scorer) -> DataFrame:
             x,
         ).otherwise(acc),
     )
-    return it.select("item_id", "iv", best.getField("cid").alias("cid"))
+    return it.select(*it.columns, best.getField("cid").alias("cid"))
 
 
 def _probe_cells_lit(
@@ -220,8 +246,8 @@ def _probe_cells_lit(
         .otherwise(F.lit(0)),
     )
     return q.select(
-        "query_id", "qv", F.explode(F.slice(ordered, 1, nprobe)).alias("p")
-    ).select("query_id", "qv", F.col("p").getField("cid").alias("cid"))
+        *q.columns, F.explode(F.slice(ordered, 1, nprobe)).alias("p")
+    ).select(*q.columns, F.col("p").getField("cid").alias("cid"))
 
 
 def assign_cells(it: DataFrame, cents: DataFrame, scorer) -> DataFrame:
@@ -272,8 +298,8 @@ def ivf_topk(
     projection per row on each side, no join, no window, no Exchange
     before the cell equi-join.
     """
-    scorer = scorer or _default_scorer
-    it = items.select(F.col(item_id).alias("item_id"), F.col(item_emb).alias("iv"))
+    cell_scorer = scorer or _default_scorer
+    it = _embedded(items, item_id, item_emb, _ITEM)
     if codebook == "kmeans":
         cents = kmeans_codebook(it, n_centroids, seed=seed)
     else:
@@ -282,7 +308,7 @@ def ivf_topk(
             .limit(n_centroids)
             .select(F.col("item_id").alias("cid"), F.col("iv").alias("cv"))
         )
-    q = queries.select(F.col(query_id).alias("query_id"), F.col(query_emb).alias("qv"))
+    q = _embedded(queries, query_id, query_emb, _QUERY)
     carr, cid_t = _centroid_literal_array(cents)  # ONE collect, both sides
     if carr is None:  # empty codebook → nothing assignable/probable
         empty = it.filter(F.lit(False)).select(
@@ -291,12 +317,12 @@ def ivf_topk(
             F.lit(0.0).alias("score"),
         )
         return _rank_topk(empty, k)
-    assigned = _assign_cells_lit(it, carr, cid_t, scorer)
-    probes = _probe_cells_lit(q, carr, cid_t, scorer, nprobe)
+    assigned = _assign_cells_lit(it, carr, cid_t, cell_scorer)
+    probes = _probe_cells_lit(q, carr, cid_t, cell_scorer, nprobe)
     pairs = (
         probes.join(assigned, "cid")
         .filter(F.col("item_id") != F.col("query_id"))
-        .select("query_id", "item_id", scorer(F.col("qv"), F.col("iv")).alias("score"))
+        .select("query_id", "item_id", _pair_score(scorer).alias("score"))
         .dropDuplicates(["query_id", "item_id"])
     )
     return _rank_topk(pairs, k)

@@ -204,7 +204,7 @@ def _local_cc(cur: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 20, check_every: int = 1,
+    edges: DataFrame, max_iter: int = 20,
     local_threshold: int = LOCAL_CC_THRESHOLD,
     edges_canonical: bool = False,
 ) -> DataFrame:
@@ -221,8 +221,8 @@ def connected_components(
     superstep costs 1 superstep + 2 tests instead of 2 supersteps + 2
     tests (~6 shuffles saved — pure serial fraction, the term that caps
     N→4N scaling efficiency). Already-forest inputs (common in incremental
-    micro-batches) exit before any superstep. ``check_every`` is kept for
-    signature compatibility; the per-round test is one cheap job.
+    micro-batches) exit before any superstep; the per-round test is one
+    cheap job.
     """
     if edges_canonical:
         # Caller guarantees DISTINCT, self-loop-free pairs with src < dst

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blink_spark.functions.hashing import embed_text_udf, hamming64
-from blink_spark.functions.similarity import cosine
+from blink_spark.functions.similarity import cosine, l2_norm
 from blink_spark.functions.text import fingerprint, normalize_text, shingles
 from blink_spark.operators.cluster import assign_clusters
 from blink_spark.operators.pairs import candidate_pairs, pairs_with_attrs
@@ -326,7 +326,7 @@ def embedding_dedup(
     recs = df.select(
         F.col(id_col).cast("string").alias("record_id"),
         embed_text_udf(df[text_col]).alias("emb"),
-    ).persist()
+    ).withColumn("emb_n", l2_norm("emb")).persist()
     blocks = recs.select(
         "record_id",
         F.concat(F.lit("e:"), sign_lsh_bucket("emb", n_planes=n_planes)).alias(
@@ -334,9 +334,9 @@ def embedding_dedup(
         ),
     ).select("block_key", "record_id")
     pairs = _pairs_from_blocks(blocks)
-    attrs = pairs_with_attrs(pairs, recs, "record_id", ["emb"])
+    attrs = pairs_with_attrs(pairs, recs, "record_id", ["emb", "emb_n"])
     scored = attrs.withColumn(
-        "cos", F.round(cosine("emb_a", "emb_b"), 6)
+        "cos", F.round(cosine("emb_a", "emb_b", "emb_n_a", "emb_n_b"), 6)
     ).withColumn("is_match", F.col("cos") >= cosine_threshold)
     out = assign_clusters(recs, "record_id", match_edges(scored))
     blocks.unpersist()  # candidate_pairs persisted it

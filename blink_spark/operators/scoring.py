@@ -20,6 +20,7 @@ from blink_spark.functions.similarity import (
     JACCARD_THRESHOLD,
     cosine,
     jaro_winkler_udf,
+    l2_norm,
     lev_ratio,
     lev_within,
     lev_within_norm,
@@ -57,59 +58,35 @@ def prepare_records(
     ]
     if with_emb:
         from blink_spark.functions.hashing import embed_text_udf
-        from blink_spark.functions.similarity import dot
 
         cols.append(embed_text_udf(records[text_col]).alias("emb"))
-        out = records.select(*cols)
-        # the embedding L2 norm is a PER-RECORD quantity: hoisting it here
-        # removes 2 of the 3 interpreted array folds (Spark HOFs are
-        # CodegenFallback) every hot-branch pair would otherwise pay inside
-        # cosine() — same expression shape, bit-identical result.
-        return out.withColumn("emb_n", F.sqrt(dot("emb", "emb")))
+        # the per-record norm that score_pairs_cascade hands to cosine()
+        return records.select(*cols).withColumn("emb_n", l2_norm("emb"))
     return records.select(*cols)
 
 
 def score_pairs(
-    pairs_attrs: DataFrame,
-    text_a: str = "text_a",
-    text_b: str = "text_b",
-    emb_a: str | None = None,
-    emb_b: str | None = None,
-    features: str = "full",
+    pairs_attrs: DataFrame, text_a: str = "text_a", text_b: str = "text_b"
 ) -> DataFrame:
-    """Add feature + decision columns to a pairs-with-attributes frame.
-
-    ``features='full'``  — exact lev_ratio + Jaro-Winkler + blended score
-                           (short strings: mentions, titles).
-    ``features='cheap'`` — Jaccard + banded Levenshtein decision only
-                           (long texts: document dedup). O(n·k) per pair,
-                           no Python in the plan.
-    The match decision is identical in both modes (banded levenshtein is
-    integer-exact equivalent of the ratio threshold).
+    """Add feature + decision columns to a pairs-with-attributes frame:
+    exact lev_ratio, the match decision (banded Levenshtein, the
+    integer-exact equivalent of the ratio threshold) and the Jaro-Winkler +
+    Levenshtein ``pair_score`` (short strings: mentions, titles).
     """
-    out = pairs_attrs.withColumn(
-        "norm_eq", normalize_text(text_a) == normalize_text(text_b)
-    ).withColumn("jaccard", F.round(token_jaccard(text_a, text_b), 6))
-    if features == "full":
-        out = out.withColumn("lev_ratio", F.round(lev_ratio(text_a, text_b), 6))
-    if emb_a and emb_b:
-        out = out.withColumn("emb_cos", F.round(cosine(emb_a, emb_b), 6))
-    out = out.withColumn(
-        "is_match",
-        F.col("norm_eq")
-        | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
-        | lev_within(text_a, text_b),
-    )
-    if features == "full":
-        out = out.withColumn("score", pair_score(text_a, text_b, emb_a, emb_b))
-    else:
-        out = out.withColumn(
-            "score",
-            F.round(
-                F.when(F.col("norm_eq"), F.lit(1.0)).otherwise(F.col("jaccard")), 6
-            ),
+    return (
+        pairs_attrs.withColumn(
+            "norm_eq", normalize_text(text_a) == normalize_text(text_b)
         )
-    return out
+        .withColumn("jaccard", F.round(token_jaccard(text_a, text_b), 6))
+        .withColumn("lev_ratio", F.round(lev_ratio(text_a, text_b), 6))
+        .withColumn(
+            "is_match",
+            F.col("norm_eq")
+            | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
+            | lev_within(text_a, text_b),
+        )
+        .withColumn("score", pair_score(text_a, text_b))
+    )
 
 
 def _base_features(pairs_attrs: DataFrame) -> DataFrame:
@@ -133,7 +110,8 @@ def score_pairs_cascade(
     with_jw: bool = False,
 ) -> DataFrame:
     """Cascade scoring over **prepped** pair attributes (see
-    ``prepare_records``: columns norm_a/b, toks_a/b, optional emb_a/b).
+    ``prepare_records``: columns norm_a/b, toks_a/b and, ``with_emb``,
+    emb_a/b with their per-record norms emb_n_a/b).
 
     Cheap JVM features (norm equality, token Jaccard, banded Levenshtein)
     decide the match on every row; the expensive crossencoder-style features
@@ -173,6 +151,7 @@ def score_pairs_cascade(
     exact_lev = F.when(
         m > 0, 1.0 - F.levenshtein("norm_a", "norm_b").cast("double") / m
     ).otherwise(F.lit(1.0))
+    emb_cos = cosine("emb_a", "emb_b", "emb_n_a", "emb_n_b") if with_emb else None
     if not with_jw:
         # No Python node in the plan ⇒ the structural filter→union cascade
         # is unnecessary: codegen CASE WHEN evaluates the expensive branch
@@ -181,7 +160,7 @@ def score_pairs_cascade(
         # per branch — only the exchanges are reused); this single-pass form
         # runs it once. Per-row values are identical: same expressions,
         # same guard, NULLs on the cold rows.
-        return _score_cascade_single_pass(base, exact_lev, with_emb)
+        return _score_cascade_single_pass(base, exact_lev, emb_cos)
     jw_col = F.round(jaro_winkler_udf("norm_a", "norm_b"), 6)
     hot = (
         base.filter(F.col("plausible"))
@@ -199,18 +178,7 @@ def score_pairs_cascade(
         else F.col("lev_ratio")
     )
     if with_emb:
-        if "emb_n_a" in hot.columns:
-            # prepped per-record norms: one interpreted fold per pair
-            # (the cross dot) instead of three
-            from blink_spark.functions.similarity import dot
-
-            denom = F.col("emb_n_a") * F.col("emb_n_b")
-            cos_expr = F.when(denom > 0, dot("emb_a", "emb_b") / denom).otherwise(
-                F.lit(0.0)
-            )
-        else:
-            cos_expr = cosine("emb_a", "emb_b")
-        hot = hot.withColumn("emb_cos", F.round(cos_expr, 6))
+        hot = hot.withColumn("emb_cos", F.round(emb_cos, 6))
         cold = cold.withColumn("emb_cos", F.lit(None).cast("double"))
         hot = hot.withColumn(
             "score",
@@ -222,9 +190,7 @@ def score_pairs_cascade(
     return hot.unionByName(cold).drop("plausible")
 
 
-def _score_cascade_single_pass(
-    base: DataFrame, exact_lev, with_emb: bool
-) -> DataFrame:
+def _score_cascade_single_pass(base: DataFrame, exact_lev, emb_cos) -> DataFrame:
     """One-pass cascade (no Python in the plan): CASE WHEN computes the
     expensive features only on plausible rows, NULL otherwise — the same
     per-row values and column order the filter→union form produces, without
@@ -234,19 +200,8 @@ def _score_cascade_single_pass(
         "jw", F.lit(None).cast("double")
     )
     lexical = F.col("lev_ratio")
-    if with_emb:
-        if "emb_n_a" in base.columns:
-            # prepped per-record norms: one interpreted fold per pair
-            # (the cross dot) instead of three
-            from blink_spark.functions.similarity import dot
-
-            denom = F.col("emb_n_a") * F.col("emb_n_b")
-            cos_expr = F.when(denom > 0, dot("emb_a", "emb_b") / denom).otherwise(
-                F.lit(0.0)
-            )
-        else:
-            cos_expr = cosine("emb_a", "emb_b")
-        out = out.withColumn("emb_cos", F.when(p, F.round(cos_expr, 6)))
+    if emb_cos is not None:
+        out = out.withColumn("emb_cos", F.when(p, F.round(emb_cos, 6)))
         hot_score = F.round(0.4 * (F.col("emb_cos") + 1.0) / 2.0 + 0.6 * lexical, 6)
     else:
         hot_score = F.round(lexical, 6)

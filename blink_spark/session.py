@@ -12,7 +12,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def _default_driver_memory() -> str:
@@ -30,9 +30,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` controls ``local[N]`` — the bench harness uses two values
-    (8 and 32) to evidence throughput scaling efficiency between cluster
-    sizes N and 4N.
+    ``cores`` controls ``local[N]``; it defaults to ``DEFAULT_CPUS``, the
+    host's CPU count unless ``SPARK_GRAFT_CPUS`` overrides it.
     """
     cores = cores or DEFAULT_CPUS
     shuffle_partitions = shuffle_partitions or max(cores, 8)

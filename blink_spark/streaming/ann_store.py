@@ -29,9 +29,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from blink_spark.functions.similarity import l2_norm
 from blink_spark.operators.ann import (
+    _QUERY,
     _centroid_literal_array,
     _default_scorer,
+    _embedded,
+    _pair_score,
     _probe_cells_lit,
     _rank_topk,
     assign_cells,
@@ -80,10 +84,7 @@ def probe_store_topk(
     """IVF probe against the store: pick each query's ``nprobe`` cells from
     the literal codebook (zero shuffle), read ONLY those cell partitions,
     equi-join on cell id, exact-score within, top-k."""
-    scorer = scorer or _default_scorer
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(query_emb).alias("qv")
-    )
+    q = _embedded(queries, query_id, query_emb, _QUERY)
     carr, cid_t = _centroid_literal_array(cents)
     if carr is None:
         return q.filter(F.lit(False)).select(
@@ -92,13 +93,17 @@ def probe_store_topk(
             F.lit(0.0).alias("score"),
             F.lit(0).alias("rank"),
         )
-    probes = _probe_cells_lit(q, carr, cid_t, scorer, nprobe)
+    probes = _probe_cells_lit(q, carr, cid_t, scorer or _default_scorer, nprobe)
     touched = sorted(
         r["cid"] for r in probes.select("cid").distinct().collect()
     )  # <= n_centroids rows — the touched-bucket collect pattern
-    store = spark.read.parquet(store_dir).filter(F.col("cid").isin(touched))
+    store = (
+        spark.read.parquet(store_dir)
+        .filter(F.col("cid").isin(touched))
+        .withColumn("itn", l2_norm("iv"))
+    )
     pairs = probes.join(store, "cid").select(
-        "query_id", "item_id", scorer(F.col("qv"), F.col("iv")).alias("score")
+        "query_id", "item_id", _pair_score(scorer).alias("score")
     )
     return _rank_topk(pairs, k)
 

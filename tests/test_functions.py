@@ -48,14 +48,24 @@ def test_lev_ratio_and_banded_equivalence(spark):
 
 
 def test_dot_and_cosine(spark):
-    from blink_spark.functions.similarity import cosine, dot
+    from blink_spark.functions.similarity import cosine, dot, l2_norm
 
     df = spark.createDataFrame(
-        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "a array<double>, b array<double>"
+        [([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]), ([0.0, 0.0, 0.0], [4.0, 5.0, 6.0])],
+        "a array<double>, b array<double>",
     )
-    r = df.select(dot("a", "b").alias("d"), cosine("a", "b").alias("c")).collect()[0]
+    normed = df.withColumn("na", l2_norm("a")).withColumn("nb", l2_norm("b"))
+    r, z = normed.select(
+        dot("a", "b").alias("d"),
+        cosine("a", "b").alias("c"),
+        cosine("a", "b", l2_norm("a"), l2_norm("b")).alias("ch"),
+        cosine("a", "b", "na", "nb").alias("cn"),
+    ).collect()
     assert r.d == pytest.approx(32.0)
     assert r.c == pytest.approx(32.0 / (math.sqrt(14) * math.sqrt(77)))
+    # given norms (as columns or names) change nothing, bit for bit
+    assert r.c == r.ch == r.cn
+    assert z.c == z.ch == z.cn == 0.0
 
 
 def test_jaro_winkler_reference_values():

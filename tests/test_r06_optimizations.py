@@ -88,11 +88,20 @@ def prepped_pairs(spark, fixture_paths):
     ).persist()
 
 
+def _per_pair_cosine(a, b):
+    """The rounded embedding cosine with both norms folded per pair — the
+    form every per-record-norm caller must reproduce bit for bit."""
+    from blink_spark.functions.similarity import dot
+
+    denom = F.sqrt(dot(a, a)) * F.sqrt(dot(b, b))
+    return F.round(F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0)), 6)
+
+
 def _union_form_cascade(pa, with_emb):
     """The pre-round-6 structural filter→union cascade, verbatim except for
     the guard, which is coalesced to false as score_pairs_cascade now builds
     it (a NULL guard would drop the row from both branches)."""
-    from blink_spark.functions.similarity import JACCARD_THRESHOLD, dot
+    from blink_spark.functions.similarity import JACCARD_THRESHOLD
     from blink_spark.operators.scoring import _base_features
 
     base = _base_features(pa).withColumn(
@@ -117,11 +126,7 @@ def _union_form_cascade(pa, with_emb):
         .withColumn("jw", F.lit(None).cast("double"))
     )
     if with_emb:
-        denom = F.col("emb_n_a") * F.col("emb_n_b")
-        cos_expr = F.when(denom > 0, dot("emb_a", "emb_b") / denom).otherwise(
-            F.lit(0.0)
-        )
-        hot = hot.withColumn("emb_cos", F.round(cos_expr, 6))
+        hot = hot.withColumn("emb_cos", _per_pair_cosine("emb_a", "emb_b"))
         cold = cold.withColumn("emb_cos", F.lit(None).cast("double"))
         hot = hot.withColumn(
             "score",
@@ -135,6 +140,7 @@ def _union_form_cascade(pa, with_emb):
 
 @pytest.mark.parametrize("with_emb", [True, False])
 def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
+    from blink_spark.functions.similarity import l2_norm
     from blink_spark.operators.scoring import score_pairs_cascade
 
     # a NULL norm with disjoint tokens makes the plausible guard NULL
@@ -144,7 +150,13 @@ def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
         .withColumn("norm_a", F.lit(None).cast("string"))
         .withColumn("toks_a", F.array(F.lit("~")))
     )
-    pa = prepped_pairs.unionByName(null_norm)
+    # embeddings are unit-length; scale one side so a caller that read the
+    # wrong norm column would change the cosine
+    pa = (
+        prepped_pairs.unionByName(null_norm)
+        .withColumn("emb_b", F.transform("emb_b", lambda x: x * 3.0))
+        .withColumn("emb_n_b", l2_norm("emb_b"))
+    )
     cols = [
         "record_id_a", "record_id_b", "norm_eq", "jaccard", "is_match",
         "lev_ratio", "jw", "score",
@@ -162,6 +174,44 @@ def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
     union = score_pairs_cascade(pa, with_emb=with_emb, with_jw=True)
     u = sorted(tuple(r) for r in union.select(keep).collect())
     assert u == sorted(tuple(r) for r in new.select(keep).collect())
+
+
+@pytest.mark.parametrize("op", ["brute_force_topk", "lsh_topk", "ivf_topk"])
+def test_topk_norm_hoist_equals_per_pair_cosine(spark, fixture_paths, op):
+    """The default top-k score reads per-record L2 norms; it must equal the
+    per-pair cosine exactly, the empty text's zero embedding included. The
+    queries are scaled per record, since the embeddings are unit-length and
+    a swapped norm would not show otherwise."""
+    from blink_spark.operators import ann
+    from blink_spark.operators.scoring import prepare_records
+
+    m = spark.read.parquet(fixture_paths["mentions"]).select(
+        "mention_id", "mention"
+    )
+    empty = spark.createDataFrame([("~empty", "")], m.schema)
+    emb = prepare_records(
+        m.unionByName(empty), "mention_id", "mention", with_emb=True
+    )
+    items = emb.select(
+        F.col("record_id").alias("item_id"), F.col("emb").alias("item_emb")
+    )
+    queries = (
+        emb.orderBy("record_id").limit(40).unionByName(emb.filter("text = ''"))
+        .select(
+            F.col("record_id").alias("query_id"),
+            F.transform(
+                "emb", lambda x: x * (F.length("text") % 5 + 1).cast("float")
+            ).alias("query_emb"),
+        )
+    )
+    assert emb.filter("text = ''").first().emb_n == 0.0
+    topk = getattr(ann, op)
+    hoisted = topk(queries, items, k=10)
+    per_pair = topk(queries, items, k=10, scorer=_per_pair_cosine)
+    got = sorted(tuple(r) for r in hoisted.collect())
+    want = sorted(tuple(r) for r in per_pair.collect())
+    assert got == want and len(got) > 0
+    assert "~empty" in {r[0] for r in got}
 
 
 def test_assign_clusters_fast_flags_equal_defensive_path(spark):

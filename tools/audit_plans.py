@@ -490,7 +490,7 @@ def main() -> int:
     sys.path.insert(0, repo)
     from blink_spark.session import get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     findings = audit(spark, sf)
     bad = 0
     for name, pats in sorted(findings.items()):

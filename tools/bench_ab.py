@@ -115,7 +115,7 @@ def main() -> None:
 
     docs = _fixture(n_docs)
     warm = _fixture(40_000)
-    spark = get_spark("bench_ab", cores=8, shuffle_partitions=8)
+    spark = get_spark("bench_ab")
     cfg = PipelineConfig(rich_metrics=False, checkpoints=False)
 
     for m in ("base", variant):  # warm BOTH plan shapes (JIT)

@@ -55,7 +55,7 @@ def main() -> int:
     import __spark_entry__ as entry
     from blink_spark.session import get_spark
 
-    spark = get_spark("oracle_check", cores=8, shuffle_partitions=8)
+    spark = get_spark("oracle_check")
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
