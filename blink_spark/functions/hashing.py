@@ -10,6 +10,7 @@ text, stable across machines and partitionings (SURVEY.md §7 determinism).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import numpy as np
@@ -115,22 +116,13 @@ EMB_DIM = 64
 
 # token -> (64-bit hash int, sign). The featurizer is a pure function of the
 # token, so memoizing is semantics-free; the cache lives in the (reused)
-# Python worker process and is bounded below. blake2b per token OCCURRENCE
-# was the dominant cost of the old row loop — now it runs once per DISTINCT
-# token per process.
-_TOK_CACHE: dict[str, tuple[int, float]] = {}
-_TOK_CACHE_MAX = 4_000_000
-
-
+# Python worker process and evicts least-recently-used tokens past its
+# bound. blake2b per token OCCURRENCE was the dominant cost of the old row
+# loop — now it runs once per DISTINCT token per process.
+@functools.lru_cache(maxsize=4_000_000)
 def _tok_feature(tok: str) -> tuple[int, float]:
-    f = _TOK_CACHE.get(tok)
-    if f is None:
-        d = hashlib.blake2b(tok.encode(), digest_size=9).digest()
-        f = (int.from_bytes(d[:8], "big"), 1.0 if d[8] & 1 else -1.0)
-        if len(_TOK_CACHE) >= _TOK_CACHE_MAX:
-            _TOK_CACHE.clear()
-        _TOK_CACHE[tok] = f
-    return f
+    d = hashlib.blake2b(tok.encode(), digest_size=9).digest()
+    return int.from_bytes(d[:8], "big"), 1.0 if d[8] & 1 else -1.0
 
 
 def _embed_batch(texts: pd.Series, dim: int) -> pd.Series:

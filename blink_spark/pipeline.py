@@ -258,7 +258,10 @@ def _log_lineage(out_dir: str, stage: str, metrics: dict, path: str | None = Non
 class _Checkpoint:
     """Resumable materializer: a stage whose ``<stage>/_SUCCESS`` exists is
     skipped; otherwise it is written to parquet with its metrics observed
-    during the write, logged to ``lineage.jsonl`` and read back."""
+    during the write, logged to ``lineage.jsonl`` and read back. A stage
+    written in this run is read back with the schema of the frame it wrote
+    (file sources make it nullable, so it equals the inferred one), which
+    saves the schema-inference job; a skipped stage infers it."""
 
     logs_stages = True
 
@@ -280,6 +283,7 @@ class _Checkpoint:
             for key, stats in logged.items():
                 metrics[key] = [r.asDict() for r in stats.collect()]
             _log_lineage(self.out_dir, name, metrics, path)
+            return self.spark.read.schema(df.schema).parquet(path)
         return self.spark.read.parquet(path)
 
     def release(self) -> None:

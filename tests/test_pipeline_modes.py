@@ -1,14 +1,19 @@
 """Fused vs checkpointed pipeline equivalence, fused lineage, dedup against
-the inline operator chain, and contraction correctness."""
+the inline operator chain, contraction correctness, and the fixed costs a
+warm session must not pay again (codegen compiles, stage schema inference)."""
 
 from __future__ import annotations
 
+import contextlib
+import io
 import json
 import os
 import random
+import re
 
 import pytest
 
+from blink_spark import pipeline
 from blink_spark.pipeline import PipelineConfig, run_pipeline
 
 
@@ -36,6 +41,57 @@ def test_fused_run_logs_clusters_lineage(spark, fused_out):
     assert [r["stage"] for r in rows] == ["clusters"]
     n = spark.read.parquet(os.path.join(fused_out, "clusters")).count()
     assert rows[0]["rows"] == n > 0
+
+
+def _compilations(spark) -> int:
+    """Whole-stage-codegen classes Janino has compiled in this JVM."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.mark.parametrize("checkpoints", [True, False], ids=["checkpointed", "fused"])
+def test_warm_run_reuses_generated_classes(spark, fixture_paths, tmp_path, checkpoints):
+    """A second run in the same session finds its generated classes in the
+    codegen cache. The cache must outsize the classes of one run: at Spark's
+    default of 100 entries the LRU misses on every class of a checkpointed
+    or fused run (154 and 124 recompiles on this fixture)."""
+    cfg = PipelineConfig(checkpoints=checkpoints)
+    run_pipeline(spark, fixture_paths["documents"], str(tmp_path), config=cfg, force=True)
+    before = _compilations(spark)
+    run_pipeline(spark, fixture_paths["documents"], str(tmp_path), config=cfg, force=True)
+    assert _compilations(spark) - before < 20
+
+
+def _formatted_plan(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return re.sub(r"#\d+", "#", buf.getvalue())
+
+
+def test_written_stage_reread_carries_inferred_schema(spark, fixture_paths, tmp_path,
+                                                      monkeypatch):
+    """A stage written in this run is read back with the schema of the frame
+    it wrote. That schema equals the one Spark infers from the parquet files
+    (nullable and containsNull included), and so do the re-read plans."""
+    returned = {}
+    stage = pipeline._Checkpoint.stage
+
+    def recording(self, name, build, **kw):
+        returned[name] = stage(self, name, build, **kw)
+        return returned[name]
+
+    monkeypatch.setattr(pipeline._Checkpoint, "stage", recording)
+    out = str(tmp_path / "ck")
+    run_pipeline(spark, fixture_paths["documents"], out)
+
+    assert set(returned) == {"mentions", "reps", "blocks", "cand_pairs",
+                             "scored_pairs", "clusters"}
+    for name, df in returned.items():
+        inferred = spark.read.parquet(os.path.join(out, name))
+        assert df.schema == inferred.schema, name
+        if name in ("scored_pairs", "clusters"):
+            assert _formatted_plan(df) == _formatted_plan(inferred), name
 
 
 def _near_dup_docs(spark):

@@ -59,6 +59,30 @@ def test_embed_batch_matches_reference_token_loop():
     assert all(x == y for x, y in zip(b, c))
 
 
+def test_tok_feature_memo_is_bounded_and_semantics_free(monkeypatch):
+    """The token memo is a bounded LRU cache: its values are the blake2b
+    features themselves, and evicting entries mid-batch leaves
+    ``_embed_batch`` bit-identical."""
+    import functools
+
+    from blink_spark.functions import hashing
+
+    assert hashing._tok_feature.cache_info().maxsize == 4_000_000
+    for tok in ["", "a", "Ünïcode", "tok17", "x" * 300]:
+        d = hashlib.blake2b(tok.encode(), digest_size=9).digest()
+        want = (int.from_bytes(d[:8], "big"), 1.0 if d[8] & 1 else -1.0)
+        assert hashing._tok_feature(tok) == want
+
+    texts = pd.Series([f"tok{i} tok{i % 7} shared common" for i in range(200)] + [None, ""],
+                      dtype=object)
+    want = hashing._embed_batch(texts, hashing.EMB_DIM)
+    tiny = functools.lru_cache(maxsize=8)(hashing._tok_feature.__wrapped__)
+    monkeypatch.setattr(hashing, "_tok_feature", tiny)
+    got = hashing._embed_batch(texts, hashing.EMB_DIM)
+    assert tiny.cache_info().currsize == 8 and tiny.cache_info().misses > 200
+    assert all(x == y for x, y in zip(want, got))
+
+
 @pytest.fixture(scope="module")
 def prepped_pairs(spark, fixture_paths):
     """Real prepped pair attributes from the fixture mentions."""

@@ -1,9 +1,11 @@
 """Two-parallelism scaling benchmark → BENCH/BASELINE.md.
 
-The north rule's N→4N-executor scaling criterion can't use a real cluster in
-this sandbox, so we evidence it the sanctioned way: the same job at local[8]
-and local[32] on the same input, reporting docs/sec at both plus scaling
-efficiency = (throughput_4N / throughput_N) / 4.
+The north rule's N→4N-executor scaling criterion is evidenced without a
+real cluster, the sanctioned way: the same job at local[N] and local[4N] on
+the same input, reporting docs/sec at both plus scaling
+efficiency = (throughput_4N / throughput_N) / 4. N defaults to a quarter of
+the host's CPUs (``session.DEFAULT_CPUS``), so the 4N leg never has more
+threads than cores: local[1]→local[4] on a 4-CPU host.
 
 Each configuration runs in its own subprocess (fresh JVM) so neither run
 inherits the other's JIT/page-cache state. The measured section is the ER
@@ -18,17 +20,21 @@ import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from blink_spark.session import DEFAULT_CPUS  # noqa: E402
+
 # 2.4M docs (7.2M mentions): large enough that per-stage scheduling overhead
 # (~29s fixed, measured via the Amdahl decomposition of the 600k run) is
 # amortized — the regime a real cluster on real data operates in. At 600k
 # the same job measures ~0.55 efficiency purely from that fixed overhead.
 DOCS = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "2400000"))
 WARM_DOCS = 40000
-# N and 4N parallelism levels. Default N=2: raw sustained-CPU scaling of
-# this sandbox host measured 3.37x from 2->8 procs but only 2.8x from
-# 8->32 (clock/memory-bandwidth ceiling), so 8->32 cannot reach 0.8
-# efficiency for ANY workload here; 2->8 is the honest N->4N regime.
-SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N", "2"))
+# N and 4N parallelism levels. Default N = CPUs / 4: more threads than
+# cores only oversubscribes the 4N leg, and even below that the host
+# ceiling shows (a 32-CPU host measured 3.37x raw sustained-CPU scaling
+# from 2->8 procs but only 2.8x from 8->32).
+SCALE_N = int(os.environ.get("SPARK_GRAFT_SCALE_N") or max(1, DEFAULT_CPUS // 4))
 # Reps per leg. The min-of-reps estimator needs at least one burst-free rep
 # per leg; on a noisy evening raise this (5 reps catch a quiet window far
 # more reliably than 3 at +30 min total cost).
@@ -107,9 +113,9 @@ def _run(cores: int, docs_path: str, warm_path: str) -> dict:
         [sys.executable, "-c", script, str(cores), docs_path, str(DOCS), warm_path],
         capture_output=True,
         text=True,
-        # warmup + REPS reps; the slowest leg (local[2] at 2.4M) runs ~10
-        # min/rep on a quiet host, far more under a co-tenant burst
-        timeout=1200 + 1200 * REPS,
+        # warmup + REPS reps; local[2] at 2.4M ran ~10 min/rep on a quiet
+        # host, far more under a co-tenant burst, and local[1] twice that
+        timeout=(1200 + 1200 * REPS) * max(1, 2 // cores),
     )
     for line in reversed(out.stdout.strip().splitlines()):
         if line.startswith("{"):
@@ -150,12 +156,12 @@ checkpointed mode is the resumability configuration).
 **Scaling efficiency (throughput_4N / throughput_N) / 4 = {eff:.3f}**
 (target ≥ 0.8; local-mode stand-in for N→4N executors per driver contract).
 
-Why N={SCALE_N}: this sandbox's raw sustained-CPU throughput (measured with
-a Spark-free multiprocessing md5 benchmark) scales 3.37x from 2→8 workers
-but only 2.8x from 8→32 — the host clock/memory ceiling makes ≥0.8
-efficiency at 8→32 unreachable for ANY workload, so N=2→4N=8 is the honest
-cores-quadrupling regime this machine can express. All reps at both levels
-are recorded in the JSON line printed by the tool.
+Why N={SCALE_N}: N defaults to a quarter of the host's {DEFAULT_CPUS} CPUs,
+so the 4N={SCALE_N*4} leg has no more threads than cores; more would only
+oversubscribe it. Even within the core count the host ceiling shows: on a
+32-CPU host a Spark-free multiprocessing md5 benchmark scaled 3.37x from
+2→8 workers but only 2.8x from 8→32. All reps at both levels are recorded
+in the JSON line printed by the tool.
 
 Correctness at this configuration: pairwise F1 vs gold links at shared
 blocking key = 1.0 on the 2,000-doc labeled fixture (both fused and
