@@ -4,13 +4,15 @@ The match-decision features (token Jaccard, Levenshtein ratio, exact
 normalized equality) are pure JVM Column expressions — the entire scoring
 stage runs in whole-stage codegen. The crossencoder-style pair score adds
 Jaro-Winkler (pandas UDF; Spark has no builtin), and ``cosine`` is the one
-embedding similarity, mirroring the reference's pair scorer
+embedding similarity (``cosine_block`` is its numpy batch form, bit for
+bit), mirroring the reference's pair scorer
 (/root/reference/blink/crossencoder/crossencoder.py:135-144) as
 embedding-similarity + lexical features per BASELINE.json north_star.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -125,6 +127,35 @@ def cosine(
     nb = l2_norm(b) if norm_b is None else _col(norm_b)
     denom = na * nb
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
+
+
+def cosine_guard(denom: np.ndarray) -> np.ndarray:
+    """numpy form of ``cosine``'s ``denom > 0``: Spark orders NaN above
+    every number, so ``NaN > 0`` holds there and not in numpy."""
+    return (denom > 0) | np.isnan(denom)
+
+
+def cosine_block(
+    a: np.ndarray, norm_a: np.ndarray, b: np.ndarray, norm_b: np.ndarray
+) -> np.ndarray:
+    """The numpy batch form of ``cosine(a, b, norm_a, norm_b)``: the
+    ``(len(a), len(b))`` matrix of cosines between the float64 rows of
+    ``a`` and ``b`` (equal lengths, no NULL norm), bit-identical to the
+    Spark expression.
+
+    The cross dot accumulates dimension by dimension from 0.0, the same
+    IEEE double products and sums in the same order as ``dot``'s fold, so
+    it is exact where a BLAS matmul (blocked, fused, reordered) is not.
+    """
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    prod = np.empty_like(acc)
+    bt = np.ascontiguousarray(b.T)
+    for d in range(a.shape[1]):
+        np.multiply(a[:, d, None], bt[None, d], out=prod)
+        acc += prod
+    denom = norm_a[:, None] * norm_b[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(cosine_guard(denom), acc / denom, 0.0)
 
 
 def _jaro_winkler(s1: str, s2: str) -> float:

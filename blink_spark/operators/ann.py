@@ -2,8 +2,12 @@
 
 - ``brute_force_topk``: exact cosine top-k — the reference's dense
   dot-product retrieval (/root/reference/blink/biencoder/biencoder.py:148-166
-  + main_dense.py:237-260). Correct baseline at any scale where the query
-  side is small or the join is blocked.
+  + main_dense.py:237-260). With the default score it runs as the
+  reference does, one score matrix per batch of items: the query side is
+  collected once (one eager job at call time) and scored against every
+  Arrow batch of items by ``similarity.cosine_block`` in ``mapInArrow``,
+  so the query side must fit on the driver. A custom ``scorer`` keeps the
+  relational cross join.
 - ``lsh_topk``: sign-LSH bucketed variant — queries only score candidates in
   their bucket (± multi-probe), the IVF/HNSW analogue
   (/root/reference/blink/indexer/faiss_indexer.py:71-141,
@@ -12,23 +16,42 @@
   is co-located, never all-pairs.
 
 Each side projects its L2 norms once per record (``_embedded``), and the
-default pair score is ``similarity.cosine`` over them, so a pair pays for
-one interpreted fold, the cross dot. A custom ``scorer(qv, iv)`` ignores the
-norms and Catalyst prunes them.
+default pair score is ``similarity.cosine`` over them (or its numpy batch
+form, bit for bit), rounded to 6 places by Spark's ``F.round``. A custom
+``scorer(qv, iv)`` ignores the norms and Catalyst prunes them.
 
 Tie rule fixed to (score DESC, id ASC) for reproducibility (SURVEY.md §7).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from blink_spark.functions.hashing import sign_lsh_bucket
-from blink_spark.functions.similarity import cosine, l2_norm
+from blink_spark.functions.similarity import (
+    cosine,
+    cosine_block,
+    cosine_guard,
+    l2_norm,
+)
+from blink_spark.plans.inspect import spread
 
 _QUERY = ("query_id", "qv", "qn")
 _ITEM = ("item_id", "iv", "itn")
+
+# One score block (query rows × batch items) holds at most this many
+# doubles (2 MiB); a larger batch is scored in chunks of query rows.
+_BLOCK_DOUBLES = 1 << 18
+
+# F.round(_, 6) is monotone and moves a score by at most 5e-7, so two raw
+# scores that round equal differ by less than 1e-6: every item of the
+# rounded top-k lies within this margin of its batch's k-th raw score.
+_ROUND_MARGIN = 2e-6
 
 
 def _default_scorer(qv, iv):
@@ -66,6 +89,120 @@ def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _rows_by_length(vecs: pa.Array, norms: pa.Array):
+    """Arrow ``(vector, norm)`` columns → ``(lengths, norms, groups)``.
+
+    ``lengths`` is each row's vector length, -1 where its norm is NULL (a
+    NULL vector or a NULL element; such a row scores 0.0 against anything).
+    ``norms`` is float64 with NULL as 0.0. ``groups`` maps a length to the
+    ``(rows, float64 matrix)`` of the rows of that length.
+    """
+    rows = np.flatnonzero(norms.is_valid().to_numpy(zero_copy_only=False))
+    sub = vecs.take(pa.array(rows, pa.int64()))
+    lens = pc.list_value_length(sub).to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = sub.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    starts = np.cumsum(lens) - lens
+    lengths = np.full(len(norms), -1, np.int64)
+    lengths[rows] = lens
+    groups = {
+        int(n): (rows[lens == n], flat[starts[lens == n, None] + np.arange(n)])
+        for n in np.unique(lens)
+    }
+    return lengths, pc.fill_null(norms, 0.0).to_numpy(zero_copy_only=False), groups
+
+
+def _exact_topk_pairs(q: DataFrame, it: DataFrame, k: int, exclude_self: bool) -> DataFrame:
+    """``(query_id, item_id, raw)`` for every pair that can reach the
+    rounded top-k: per Arrow batch of items, each query keeps the items
+    within ``_ROUND_MARGIN`` of its k-th raw score there.
+
+    ``raw`` is ``similarity.cosine`` over the ``qn``/``itn`` norms, with
+    its corner cases as Spark evaluates them: a NULL norm scores 0.0; two
+    lengths differ → NULL when the guard holds, else 0.0; NaN ranks first
+    and NULL last. ``exclude_self`` drops a pair before the k-th score is
+    chosen, as SQL ``item_id != query_id`` does (a NULL id matches nothing).
+
+    The batches cross as Arrow (``mapInArrow``), not pandas: pandas turns a
+    NULL double into NaN and a nullable BIGINT into float64, and the kernel
+    needs NULL apart from NaN and every id exact.
+    """
+    qt = q.toArrow()
+    qids = qt.column("query_id").combine_chunks()
+    qlen, qn, qgroups = _rows_by_length(
+        qt.column("qv").combine_chunks(), qt.column("qn").combine_chunks()
+    )
+    nq, kk, block = len(qids), max(k, 1), _BLOCK_DOUBLES
+    qpos: dict = {}
+    for i, v in enumerate(qids.to_pylist()):
+        qpos.setdefault(v, []).append(i)
+    q_null = np.array(qpos.pop(None, []), np.int64)
+
+    def exclusions(iid: pa.Array):
+        """Item columns with a NULL id, and the (row, col) pairs of equal
+        ids: the pairs SQL ``item_id != query_id`` does not keep."""
+        null_cols, er, ec = [], [], []
+        for j, v in enumerate(iid.to_pylist()):
+            if v is None:
+                null_cols.append(j)
+            for i in qpos.get(v, ()):  # None was popped: a NULL matches nothing
+                er.append(i)
+                ec.append(j)
+        return null_cols, np.array(er, np.int64), np.array(ec, np.int64)
+
+    def score(batch: pa.RecordBatch):
+        iid, ni = batch.column("item_id"), batch.num_rows
+        ilen, itn, igroups = _rows_by_length(batch.column("iv"), batch.column("itn"))
+        if exclude_self:
+            null_cols, er, ec = exclusions(iid)
+        step = max(1, block // max(1, ni))
+        for a in range(0, nq, step):
+            b = min(nq, a + step)
+            raw = np.zeros((b - a, ni))
+            for n, (cols, imat) in igroups.items():
+                rows, qmat = qgroups.get(n, (np.empty(0, np.int64), None))
+                sel = (rows >= a) & (rows < b)
+                if sel.any():
+                    raw[np.ix_(rows[sel] - a, cols)] = cosine_block(
+                        qmat[sel], qn[rows[sel]], imat, itn[cols]
+                    )
+            ql = qlen[a:b, None]
+            null = (ql >= 0) & (ilen >= 0) & (ql != ilen)
+            null &= cosine_guard(qn[a:b, None] * itn)
+            # ascending sort key: NaN ranks first in Spark, NULL last, and
+            # an excluded pair (NaN here, sorted past everything) not at all
+            neg = -raw
+            neg[np.isnan(raw)] = -np.inf
+            neg[null] = np.inf
+            if exclude_self:
+                neg[:, null_cols] = np.nan
+                neg[q_null[(q_null >= a) & (q_null < b)] - a] = np.nan
+                own = (er >= a) & (er < b)
+                neg[er[own] - a, ec[own]] = np.nan
+            if ni > kk:
+                kth = np.partition(neg, kk - 1, axis=1)[:, kk - 1]
+                keep = neg <= np.where(np.isnan(kth), np.inf, kth + _ROUND_MARGIN)[:, None]
+            else:
+                keep = ~np.isnan(neg)
+            r, c = np.nonzero(keep)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    qids.take(pa.array(r + a, pa.int64())),
+                    iid.take(pa.array(c, pa.int64())),
+                    pa.array(raw[r, c], pa.float64(), mask=null[r, c]),
+                ],
+                names=["query_id", "item_id", "raw"],
+            )
+
+    def kernel(batches):
+        for batch in batches:
+            yield from score(batch)
+
+    schema = T.StructType(
+        [q.schema["query_id"], it.schema["item_id"], T.StructField("raw", T.DoubleType())]
+    )
+    return it.mapInArrow(kernel, schema)
+
+
 def brute_force_topk(
     queries: DataFrame,
     items: DataFrame,
@@ -77,16 +214,30 @@ def brute_force_topk(
     exclude_self: bool = True,
     scorer=None,
 ) -> DataFrame:
-    """Exact cosine top-k: queries × items scored, per-query window top-k.
+    """Exact cosine top-k: every query against every item, per-query
+    window top-k over (score DESC, item_id ASC).
 
-    Spark computes this as partial top-k per partition then merge (the
-    chunked-topk of /root/reference/elq/main_dense.py:304-334 for free).
-    Broadcast the smaller side when it fits. ``scorer(qv, iv) -> Column``
-    overrides the rounded-cosine score (e.g. ``cosine_exact`` over quantized
-    embeddings for bit-reproducible oracle parity).
+    Default score: the query side is collected once, an eager job at call
+    time (the mention batch BLINK's ``main_dense`` holds), and shipped
+    with the kernel as a float64 matrix. The items are spread over the
+    session's cores and each Arrow batch is scored as one matrix by
+    ``similarity.cosine_block``, the same doubles as the Spark fold; per
+    batch only the pairs near each query's k-th raw score leave the
+    kernel. Rounding to 6 places and ranking stay in Spark, so the result
+    equals the relational form row for row (the chunked top-k of the
+    reference's elq/main_dense.py:304-334).
+
+    ``scorer(qv, iv) -> Column`` overrides the rounded cosine (e.g.
+    ``cosine_exact`` over quantized embeddings for bit-reproducible oracle
+    parity); it is scored relationally over the queries × items cross join.
     """
     q = _embedded(queries, query_id, query_emb, _QUERY)
     it = _embedded(items, item_id, item_emb, _ITEM)
+    if scorer is None:
+        pairs = _exact_topk_pairs(q, spread(it, "item_id"), k, exclude_self).select(
+            "query_id", "item_id", F.round("raw", 6).alias("score")
+        )
+        return _rank_topk(pairs, k)
     cond = F.lit(True) if not exclude_self else (F.col("item_id") != F.col("query_id"))
     pairs = q.crossJoin(it).filter(cond).select(
         "query_id", "item_id", _pair_score(scorer).alias("score")

@@ -52,6 +52,7 @@ from blink_spark.operators.scoring import (
     score_pairs_cascade,
 )
 from blink_spark.functions.text import normalize_text
+from blink_spark.plans.inspect import spread
 
 
 def exact_contract(mentions: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -159,20 +160,6 @@ class PipelineConfig:
     checkpoints: bool = True
 
 
-def _estimated_partitions(df: DataFrame) -> int:
-    """Plan-side scan-parallelism estimate: Catalyst's sizeInBytes statistic
-    over the session's maxPartitionBytes. Replaces df.rdd.getNumPartitions(),
-    which instantiates the RDD lineage just to count — a needless analysis
-    barrier under AQE. Only the 'is this input tiny relative to the cluster'
-    decision rides on it, so the byte-based estimate is exactly as good:
-    large inputs are never repartitioned, and mis-estimating a small input
-    merely adds a cheap small-input shuffle (the intended behavior)."""
-    spark = df.sparkSession
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes", str(128 << 20)))
-    return max(1, (size + mpb - 1) // mpb)
-
-
 def _read_documents(spark: SparkSession, documents_path: str) -> DataFrame:
     """Read the input at full parallelism. Row-group splitting (see
     session.py maxPartitionBytes) usually parallelizes the scan itself; the
@@ -186,19 +173,7 @@ def _read_documents(spark: SparkSession, documents_path: str) -> DataFrame:
     EnsureRequirements and the ~10x-larger exploded span table is never
     re-shuffled. doc_id is unique per row, so the keyed shuffle is as
     uniform as round-robin."""
-    return _spread(spark.read.parquet(documents_path), "doc_id")
-
-
-def _spread(df: DataFrame, key: str, source: DataFrame | None = None) -> DataFrame:
-    """Repartition ``df`` to the session's parallelism, keyed on the unique
-    column ``key``, when ``source`` (default: ``df``) is estimated to arrive
-    in fewer partitions than cores. A keyed hash repartition skips the
-    round-robin path's sort-before-repartition (SPARK-23207) and spreads
-    exactly as uniformly."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if _estimated_partitions(df if source is None else source) < par:
-        return df.repartition(par, key)
-    return df
+    return spread(spark.read.parquet(documents_path), "doc_id")
 
 
 def _stage_path(out_dir: str, stage: str) -> str:
@@ -421,8 +396,8 @@ def run_pipeline(
 
         def mentions():
             documents = spark.read.parquet(documents_path)
-            return _spread(extract_mentions(documents).select("mention_id", "mention"),
-                           "mention_id", source=documents)
+            return spread(extract_mentions(documents).select("mention_id", "mention"),
+                          "mention_id", source=documents)
 
     return _run_chain(mat, mentions, "mention_id", "mention", cfg, finish=lambda build: out.stage(
         "clusters", build, observe={
@@ -447,7 +422,7 @@ def dedup_documents_pipeline(
     cfg = cfg or PipelineConfig(minhash_shingle_n=7, minhash_rows=4)
 
     def records():
-        return _spread(documents.select(
+        return spread(documents.select(
             F.col(id_col).cast("string").alias("record_id"), F.col(text_col).alias("text")
         ), "record_id")
 

@@ -37,7 +37,8 @@ def test_revenue_by_region_broadcasts_dimensions(spark):
 
 def test_lsh_topk_is_not_a_cross_join(spark):
     """The approximate path must be a bucket equi-join; only the documented
-    exact baseline (brute_force_topk) is allowed a cartesian product."""
+    exact baseline (brute_force_topk) with a custom scorer is allowed a
+    cartesian product. Its default score is a batch kernel over the items."""
     from pyspark.sql import functions as F
 
     from blink_spark.functions.hashing import cosine_exact, quantize_emb, sign_lsh_bucket_exact
@@ -61,6 +62,12 @@ def test_lsh_topk_is_not_a_cross_join(spark):
     )
     plan_e = explain_str(exact)
     assert "CartesianProduct" in plan_e or "BroadcastNestedLoopJoin" in plan_e
+    kernel = brute_force_topk(
+        q, e, k=5, query_id="qid", query_emb="qv", item_id="vec_id", item_emb="q"
+    )
+    plan_k = explain_str(kernel)
+    assert "CartesianProduct" not in plan_k and "BroadcastNestedLoopJoin" not in plan_k
+    assert "MapInArrow" in plan_k
 
 
 def test_mention_projection_prunes_documents_scan(spark, fixture_paths):

@@ -8,8 +8,8 @@ Detected patterns and why they matter at 100 TB:
   fine when the child is a partial aggregation (the exchange then moves one
   pre-aggregated row per task, the canonical scalar-metric finalization).
 - ``BatchEvalPython``: row-at-a-time Python in the plan — never acceptable
-  (Arrow-batched pandas nodes show up as ArrowEvalPython/FlatMapGroupsInPandas
-  and are allowed where grouped-sequential semantics require them).
+  (Arrow-batched nodes show up as ArrowEvalPython/FlatMapGroupsInPandas/
+  MapInArrow and are allowed where batch semantics require them).
 
 The pytest wrapper (tests/test_plan_audit.py) asserts findings match the
 explicit allowlist below EXACTLY — a new anti-pattern fails the suite, and a
@@ -37,8 +37,6 @@ PATTERNS = (
 #   main table — broadcast of exactly one row.
 # - finalize-count SinglePartition: the exchange's child is a partial_count /
 #   partial_sum HashAggregate, so only per-task partial rows move.
-# - ann_bruteforce_topk: the documented exact all-pairs baseline (plan tests
-#   pin that the LSH/IVF scale paths contain NO such node).
 ALLOWLIST: dict[str, frozenset[str]] = {
     "er_pairwise_f1": frozenset({"Exchange SinglePartition"}),
     "er_bm25_topk": frozenset(
@@ -65,7 +63,6 @@ ALLOWLIST: dict[str, frozenset[str]] = {
     "order_key_set_ops": frozenset({"Exchange SinglePartition"}),
     "er_span_f1_weak_strong": frozenset({"Exchange SinglePartition"}),
     "macro_micro_value": frozenset({"Exchange SinglePartition"}),
-    "ann_bruteforce_topk": frozenset({"BroadcastNestedLoopJoin"}),
     "er_recall_at_k": frozenset({"Exchange SinglePartition"}),
     # er_fs_weights is ONE global scalar aggregate (2 + 2·n_features
     # counters) with map-side partial agg; the SinglePartition is the

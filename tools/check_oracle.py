@@ -48,6 +48,14 @@ def value_hash(rows: list[tuple], cols: list[str]) -> str:
     return h.hexdigest()[:16]
 
 
+def _duckdb_memory_limit() -> str:
+    """A quarter of the host's physical memory. DuckDB's default (80 %)
+    beside the Spark driver's half-of-RAM heap overcommits the host, and
+    the kernel OOM-kills the sweep."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, total >> 32)}GiB"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
@@ -56,7 +64,7 @@ def main() -> int:
     from blink_spark.session import get_spark
 
     spark = get_spark("oracle_check")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": _duckdb_memory_limit()})
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
