@@ -8,14 +8,12 @@ interleaved text+media documents.
 Layout
 ------
 - ``session``    SparkSession factory tuned for the pipeline
-- ``schemas``    explicit StructType schemas for every table
 - ``synth``      deterministic synthetic fixture generator (seed=42)
 - ``functions``  scalar/vectorized text, hashing, similarity functions
 - ``operators``  relational operators: extract, blocking, pairs, scoring,
                  clustering, top-k, dedup, ANN, skew handling, eval
 - ``sources``    scans for jsonl / conll / wiki-extractor shaped inputs
 - ``pipeline``   end-to-end staged pipeline with checkpointed stage tables
-- ``streaming``  incremental (Structured Streaming) re-linking
 """
 
 __version__ = "0.1.0"

@@ -23,5 +23,4 @@ from blink_spark.functions.similarity import (  # noqa: F401
 from blink_spark.functions.hashing import (  # noqa: F401
     embed_text_udf,
     minhash_signature,
-    simhash64,
 )

@@ -19,7 +19,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from blink_spark.functions.text import shingles, tokens
+from blink_spark.functions.text import shingles
 
 
 def _hash16(c: Column, salt: int) -> Column:
@@ -83,26 +83,6 @@ def minhash_band_keys(col: Column | str, bands: int = 4, rows: int = 4,
     )
 
 
-def simhash64(col: Column | str) -> Column:
-    """64-bit SimHash over tokens, as SQL bit arithmetic (portable).
-
-    For each of 64 bit positions, the bit is 1 iff more token hashes have a
-    1 in that position than a 0. Near-duplicate texts agree on most bits.
-    """
-    toks = tokens(col)
-    n = F.size(toks)
-    hashed = F.transform(toks, lambda t: _hash16(t, 99))
-    def _bit_test(b: int):
-        # 1-arg lambda on purpose (see minhash_signature note)
-        return lambda h: h.bitwiseAND(F.lit(1 << b)) > 0
-
-    acc = F.lit(0).cast("long")
-    for bit in range(60):  # 60 usable bits of the 15-hex-digit hash
-        ones = F.size(F.filter(hashed, _bit_test(bit)))
-        acc = acc + F.when(ones * 2 > n, F.lit(1 << bit)).otherwise(F.lit(0)).cast("long")
-    return acc
-
-
 def hamming64(a: Column | str, b: Column | str) -> Column:
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
@@ -161,11 +141,6 @@ def _embed_batch(texts: pd.Series, dim: int) -> pd.Series:
 def embed_text_udf(texts: pd.Series) -> pd.Series:
     """Arrow-batched deterministic text embedding (unit-norm, dim 64)."""
     return _embed_batch(texts, EMB_DIM)
-
-
-def embed_text_py(text: str, dim: int = EMB_DIM) -> list[float]:
-    """Driver-side single-text version (oracle/tests) — same function."""
-    return _embed_batch(pd.Series([text]), dim).iloc[0]
 
 
 def sign_lsh_bucket(emb: Column | str, n_planes: int = 8, seed: int = 7) -> Column:

@@ -11,8 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from blink_spark.functions.hashing import embed_text_udf, hamming64
-from blink_spark.functions.similarity import cosine, l2_norm
 from blink_spark.functions.text import fingerprint, normalize_text, shingles
 from blink_spark.operators.cluster import assign_clusters
 from blink_spark.operators.pairs import candidate_pairs, pairs_with_attrs
@@ -185,9 +183,9 @@ def _pairs_from_blocks(blocks: DataFrame, **kw) -> DataFrame:
 
 def simhash_relational(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(record_id, sh): 60-bit token SimHash via explode + 60 conditional-sum
-    aggregates — the codegen-friendly form of ``functions.hashing.simhash64``
-    (whose per-bit array filters are interpreted CodegenFallback HOFs).
-    Identical values: majority vote over distinct-token hash bits."""
+    aggregates, so it stays in whole-stage codegen: per-bit array filters
+    over a token array would be interpreted CodegenFallback HOFs. Each bit
+    is the majority vote over distinct-token hash bits."""
     from blink_spark.functions.hashing import _hash16
     from blink_spark.functions.text import tokens
 
@@ -279,69 +277,6 @@ def simhash_band_cols(sh_col, max_hamming: int):
         )
         for b, (off, width) in enumerate(simhash_band_splits(max_hamming))
     ]
-
-
-def simhash_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """SimHash near-dup clustering: 60-bit token simhash, pigeonhole-banded
-    blocking with ``max_hamming + 1`` bands (guaranteed recall at the
-    verification radius — see ``simhash_band_splits``), exact hamming
-    verification."""
-    recs = simhash_relational(df, id_col, text_col).persist()
-    banded = recs.select(
-        "record_id",
-        "sh",
-        F.explode(F.array(*simhash_band_cols(F.col("sh"), max_hamming))).alias(
-            "block_key"
-        ),
-    )
-    blocks = banded.select("block_key", "record_id")
-    pairs = _pairs_from_blocks(blocks)
-    attrs = pairs_with_attrs(pairs, recs, "record_id", ["sh"])
-    scored = attrs.withColumn("hamming", hamming64("sh_a", "sh_b")).withColumn(
-        "is_match", F.col("hamming") <= max_hamming
-    )
-    out = assign_clusters(recs, "record_id", match_edges(scored))
-    blocks.unpersist()  # candidate_pairs persisted it
-    recs.unpersist()
-    return out
-
-
-def embedding_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    cosine_threshold: float = 0.95,
-    n_planes: int = 12,
-) -> DataFrame:
-    """Embedding-cosine near-dup clustering: hashing-trick embeddings
-    (Arrow-batched UDF), sign-LSH bucket blocking, exact cosine
-    verification."""
-    from blink_spark.functions.hashing import sign_lsh_bucket
-
-    recs = df.select(
-        F.col(id_col).cast("string").alias("record_id"),
-        embed_text_udf(df[text_col]).alias("emb"),
-    ).withColumn("emb_n", l2_norm("emb")).persist()
-    blocks = recs.select(
-        "record_id",
-        F.concat(F.lit("e:"), sign_lsh_bucket("emb", n_planes=n_planes)).alias(
-            "block_key"
-        ),
-    ).select("block_key", "record_id")
-    pairs = _pairs_from_blocks(blocks)
-    attrs = pairs_with_attrs(pairs, recs, "record_id", ["emb", "emb_n"])
-    scored = attrs.withColumn(
-        "cos", F.round(cosine("emb_a", "emb_b", "emb_n_a", "emb_n_b"), 6)
-    ).withColumn("is_match", F.col("cos") >= cosine_threshold)
-    out = assign_clusters(recs, "record_id", match_edges(scored))
-    blocks.unpersist()  # candidate_pairs persisted it
-    recs.unpersist()
-    return out
 
 
 def prefix_jaccard_pairs(

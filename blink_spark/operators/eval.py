@@ -208,16 +208,6 @@ def bcubed(
     )
 
 
-def valid_candidate_mask(
-    scored: DataFrame, score_col: str = "score", sentinel: float = -1.0
-) -> DataFrame:
-    """Drop invalid candidate rows: NaN scores and the -1 'no result'
-    sentinel (/root/reference/scripts/tune_hyperparams_new.py:144:
-    ``(dists[:,0] != -1) & (dists == dists)``)."""
-    c = F.col(score_col)
-    return scored.filter(c.isNotNull() & ~F.isnan(c) & (c != F.lit(sentinel)))
-
-
 def reciprocal_best(
     scored: DataFrame,
     left_col: str,

@@ -5,10 +5,8 @@ Media payloads are opaque ``binary``/ref columns; decode / feature-extract /
 resize / frame-sample are Arrow-batched ``mapInPandas`` stages.
 ``decode_media_stub`` produces a deterministic md5-derived fake so the
 plumbing — schema, batch shape, partitioning — is oracle-checkable end to
-end; ``decode_media_real`` actually decodes headerful uncompressed rasters
-(24-bit BMP, binary PPM) in pure Python/numpy, classifying anything else
-``unknown`` — the branch where a compressed-codec library (absent from this
-container) would plug in.
+end. A real codec would replace ``_fake_decode`` behind the same
+``MEDIA_META`` contract; nothing upstream changes.
 """
 
 from __future__ import annotations
@@ -82,108 +80,6 @@ def decode_media_stub(media_spans: DataFrame) -> DataFrame:
     return media_spans.select("doc_id", "span_idx", "media_ref").mapInPandas(
         decode, MEDIA_META
     )
-
-
-def _decode_bmp(buf: bytes) -> tuple[int, int, list[float] | None] | None:
-    """24-bit uncompressed BMP: header parse + vectorized mean-RGB feature.
-    Returns (width, height, feature) or None if not a decodable BMP."""
-    import numpy as np
-
-    if len(buf) < 54 or buf[:2] != b"BM":
-        return None
-    w = int.from_bytes(buf[18:22], "little", signed=True)
-    h = int.from_bytes(buf[22:26], "little", signed=True)  # <0 = top-down
-    bpp = int.from_bytes(buf[28:30], "little")
-    comp = int.from_bytes(buf[30:34], "little")
-    height = abs(h)
-    if w <= 0 or height <= 0:
-        return None
-    feature = None
-    if bpp == 24 and comp == 0:
-        off = int.from_bytes(buf[10:14], "little")
-        row_bytes = (w * 3 + 3) & ~3  # rows padded to 4 bytes
-        need = off + row_bytes * height
-        if need <= len(buf):
-            px = (
-                np.frombuffer(buf, np.uint8, row_bytes * height, off)
-                .reshape(height, row_bytes)[:, : w * 3]
-                .reshape(height, w, 3)
-            )
-            b, g, r = (px[..., i].astype(np.float64).mean() for i in range(3))
-            feature = [round(r / 255.0, 6), round(g / 255.0, 6), round(b / 255.0, 6)]
-    return w, height, feature
-
-
-def _decode_ppm(buf: bytes) -> tuple[int, int, list[float] | None] | None:
-    """Binary PPM ('P6'): ASCII header + raw RGB. Returns like _decode_bmp."""
-    import re
-
-    import numpy as np
-
-    m = re.match(rb"P6\s+(\d+)\s+(\d+)\s+(\d+)[ \t\r\n]", buf[:64])
-    if not m:
-        return None
-    w, h, maxval = int(m.group(1)), int(m.group(2)), int(m.group(3))
-    if w <= 0 or h <= 0 or maxval != 255:
-        return None
-    off = m.end()
-    feature = None
-    if off + w * h * 3 <= len(buf):
-        px = np.frombuffer(buf, np.uint8, w * h * 3, off).reshape(h, w, 3)
-        r, g, b = (px[..., i].astype(np.float64).mean() for i in range(3))
-        feature = [round(r / 255.0, 6), round(g / 255.0, 6), round(b / 255.0, 6)]
-    return w, h, feature
-
-
-def decode_media_real(media_spans: DataFrame) -> DataFrame:
-    """Real in-sandbox decode for headerful uncompressed raster formats —
-    24-bit BMP and binary PPM ('P6') — pure Python/numpy, no codec
-    libraries. Input rows carry the media BYTES: (doc_id, span_idx,
-    media_ref, payload binary). Output is the same MEDIA_META contract as
-    the stub, with ``feature`` = mean-RGB (3 floats, [0,1]).
-
-    Undecodable payloads are classified ``media_kind='unknown'`` with NULL
-    dims — cap-and-report, never a mid-stream throw. Compressed codecs
-    (JPEG/PNG/MP4) remain the documented library plug point; swapping one in
-    means adding a branch here, nothing upstream changes.
-    """
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            kinds, ws, hs, feats = [], [], [], []
-            for buf in pdf["payload"]:
-                got = None
-                if buf is not None:
-                    b = bytes(buf)
-                    got = _decode_bmp(b) or _decode_ppm(b)
-                if got is None:
-                    kinds.append("unknown")
-                    ws.append(None)
-                    hs.append(None)
-                    feats.append(None)
-                else:
-                    kinds.append("image")
-                    ws.append(got[0])
-                    hs.append(got[1])
-                    feats.append(got[2])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "span_idx": pdf["span_idx"].astype("int32").values,
-                    "media_ref": pdf["media_ref"].values,
-                    "media_kind": kinds,
-                    "width": pd.array(ws, dtype="Int32"),
-                    "height": pd.array(hs, dtype="Int32"),
-                    "n_frames": pd.array(
-                        [1 if k == "image" else None for k in kinds], dtype="Int32"
-                    ),
-                    "feature": feats,
-                }
-            )
-
-    return media_spans.select(
-        "doc_id", "span_idx", "media_ref", "payload"
-    ).mapInPandas(decode, MEDIA_META)
 
 
 def resize_plan(decoded: DataFrame, max_dim: int = 512) -> DataFrame:

@@ -117,8 +117,8 @@ def hll_distinct(
     Shape at 100 TB: identical to ``kmv_distinct`` — one distinct on
     (group, hash) with map-side partial dedup, then a (group, register)
     partial aggregation and an m-row-per-group final aggregation. The
-    register table is ``m × n_groups`` rows: tiny, mergeable (max of
-    register maxes), and the natural shape for an incremental store.
+    register table is ``m × n_groups`` rows: tiny and mergeable (max of
+    register maxes).
     """
     _check_hll_p(p)
     m = 1 << p
@@ -202,47 +202,6 @@ def _hll_est_col(m: int):
     )
 
 
-def hll_registers(
-    df: DataFrame,
-    key_col: str,
-    group_col: str,
-    p: int = 4,
-) -> DataFrame:
-    """The HLL sketch STATE: the (group, j, mj) register table for ``df``.
-
-    This is the mergeable form — union any number of register tables (from
-    other partitions, other days, other micro-batches) and take
-    ``max(mj)`` per (group, j); the estimate of the union of the inputs
-    falls out of ``hll_estimate``. m × n_groups rows: a sketch store stays
-    tiny no matter how much data flowed through it.
-    """
-    _check_hll_p(p)
-    return (
-        _hll_rho_rows(df, key_col, group_col, p)
-        .groupBy(F.col("grp").alias(group_col), "j")
-        .agg(F.max("rho").cast("int").alias("mj"))
-    )
-
-
-def hll_estimate(regs: DataFrame, group_col: str, p: int = 4) -> DataFrame:
-    """Distinct-count estimate from a (group, j, mj) register table (as
-    produced by ``hll_registers`` or a merged store). Returns
-    (group, v_empty, s_scaled, est_distinct) — no ``n_exact``: the whole
-    point of keeping registers is not having to keep the keys."""
-    _check_hll_p(p)
-    m = 1 << p
-    agg = regs.groupBy(F.col(group_col).alias("grp")).agg(
-        (F.lit(m) - F.count("*")).cast("long").alias("v_empty"),
-        _hll_s_scaled(m).alias("s_scaled"),
-    )
-    return agg.select(
-        F.col("grp").alias(group_col),
-        "v_empty",
-        "s_scaled",
-        _hll_est_col(m).alias("est_distinct"),
-    )
-
-
 def _cm_hash(col: Column, j: int, w: int) -> Column:
     """Row-j count-min hash into [0, w): first 8 md5 hex digits of the
     salted key as a long, mod w (DuckDB-portable:
@@ -264,10 +223,10 @@ def count_min_counters(
 ) -> DataFrame:
     """The count-min sketch STATE (Cormode & Muthukrishnan 2005): a
     ``d x w`` counter grid — row ``j`` buckets every occurrence of the key
-    under an independently salted hash. Like ``hll_registers`` this is the
-    mergeable form: union counter tables from other partitions / days /
-    micro-batches and ``sum(c)`` per (j, bucket); estimates of the merged
-    stream fall out of ``count_min_estimate``'s min-over-rows.
+    under an independently salted hash. This is the mergeable form: union
+    counter tables from other partitions / days / micro-batches and
+    ``sum(c)`` per (j, bucket); estimates of the merged stream fall out of
+    ``count_min_estimate``'s min-over-rows.
 
     Shape at 100 TB: the explode inflates the scan d-fold but feeds a
     map-side-combinable (j, bucket) partial aggregation whose output is

@@ -59,10 +59,3 @@ def read_mentions_jsonl(
         kb = entities.select(F.lower("title").alias("label_title"))
         m = m.join(F.broadcast(kb), "label_title", "left_semi")
     return m
-
-
-def unresolved_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
-    """The drop-and-report side (missing_pages counter of
-    /root/reference/blink/main_dense.py:162-169)."""
-    kb = entities.select(F.lower("title").alias("label_title"))
-    return mentions.join(F.broadcast(kb), "label_title", "left_anti")

@@ -17,7 +17,9 @@ TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata/sf0.001")
 def spark():
     from blink_spark.session import get_spark
 
-    spark = get_spark("blink_spark_tests", cores=8, shuffle_partitions=8)
+    # local[N] follows the host (SPARK_GRAFT_CPUS or the CPU count); the
+    # shuffle width stays fixed so partition-sensitive plans do not vary
+    spark = get_spark("blink_spark_tests", shuffle_partitions=8)
     yield spark
 
 

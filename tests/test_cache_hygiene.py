@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 
 def _persistent_noncheckpoint_ids(spark) -> set[int]:
@@ -63,37 +62,12 @@ def test_run_pipeline_releases_caches(spark, tmp_path, fixture_paths, checkpoint
     assert not leaked, f"leaked persisted RDD ids: {leaked}"
 
 
-def test_link_batch_releases_caches(spark, tmp_path):
-    from blink_spark.streaming.incremental import _link_batch
-
-    docs = _docs_df(spark, 10).select(
-        F.col("id").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("mention").alias("kind"),
-                F.col("text").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
-    before = _persistent_noncheckpoint_ids(spark)
-    _link_batch(spark, docs, str(tmp_path / "store"))
-    leaked = _persistent_noncheckpoint_ids(spark) - before
-    assert not leaked, f"leaked persisted RDD ids: {leaked}"
-
-
 def test_dedup_operators_release_caches(spark):
-    from blink_spark.operators.dedup import (
-        embedding_dedup,
-        minhash_dedup,
-        simhash_dedup,
-    )
+    from blink_spark.operators.dedup import minhash_dedup
 
     docs = _docs_df(spark, 40)
     before = _persistent_noncheckpoint_ids(spark)
-    for fn in (minhash_dedup, simhash_dedup, embedding_dedup):
-        out = fn(docs, "id", "text")
-        assert out.count() == 40
+    out = minhash_dedup(docs, "id", "text")
+    assert out.count() == 40
     leaked = _persistent_noncheckpoint_ids(spark) - before
     assert not leaked, f"leaked persisted RDD ids: {leaked}"

@@ -4,10 +4,11 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from blink_spark.functions.hashing import embed_text_py
+from blink_spark.functions.hashing import EMB_DIM, _embed_batch
 from blink_spark.functions.similarity import _jaro_winkler
 
 
@@ -77,12 +78,15 @@ def test_jaro_winkler_reference_values():
 
 
 def test_embedding_deterministic_unit_norm():
-    a = embed_text_py("alpha bravo cedar")
-    b = embed_text_py("alpha bravo cedar")
+    def embed(text):
+        return _embed_batch(pd.Series([text]), EMB_DIM).iloc[0]
+
+    a = embed("alpha bravo cedar")
+    b = embed("alpha bravo cedar")
     assert a == b
     assert sum(x * x for x in a) == pytest.approx(1.0, abs=1e-5)
     # order-insensitive by construction (bag of tokens)
-    c = embed_text_py("cedar bravo alpha")
+    c = embed("cedar bravo alpha")
     assert a == c
 
 
@@ -104,21 +108,21 @@ def test_minhash_similar_texts_share_bands(spark):
 
 
 def test_simhash_hamming(spark):
-    from blink_spark.functions.hashing import hamming64, simhash64
+    from blink_spark.functions.hashing import hamming64
+    from blink_spark.operators.dedup import simhash_relational
 
     df = spark.createDataFrame(
         [
-            ("the quick brown fox jumps over the lazy dog",
-             "the quick brown fox jumps over the lazy dot"),
-            ("the quick brown fox jumps over the lazy dog",
-             "totally different words entirely unrelated here"),
+            ("dog", "the quick brown fox jumps over the lazy dog"),
+            ("dot", "the quick brown fox jumps over the lazy dot"),
+            ("far", "totally different words entirely unrelated here"),
         ],
-        "a string, b string",
+        "id string, t string",
     )
-    rows = df.select(
-        hamming64(simhash64("a"), simhash64("b")).alias("h")
-    ).collect()
-    assert rows[0].h < rows[1].h
+    sh = {r.record_id: r.sh for r in simhash_relational(df, "id", "t").collect()}
+    near = _one(spark, hamming64(F.lit(sh["dog"]), F.lit(sh["dot"])))
+    far = _one(spark, hamming64(F.lit(sh["dog"]), F.lit(sh["far"])))
+    assert near < far
 
 
 def test_quality_and_lang(spark):

@@ -234,92 +234,6 @@ def test_hll_rejects_unsupported_p(spark):
         hll_distinct(df, key_col="tok", group_col="grp", p=10)
 
 
-def test_hll_registers_merge_equals_whole(spark):
-    """Mergeability: registers of two overlapping halves, merged by max,
-    estimate exactly what one pass over the union estimates."""
-    from blink_spark.operators.sketch import (
-        hll_distinct,
-        hll_estimate,
-        hll_registers,
-    )
-
-    rows_a = [("g", f"k{i}") for i in range(1000)]
-    rows_b = [("g", f"k{i}") for i in range(500, 1500)]  # overlaps a
-    df_a = spark.createDataFrame(rows_a, "grp string, tok string")
-    df_b = spark.createDataFrame(rows_b, "grp string, tok string")
-    merged = (
-        hll_registers(df_a, "tok", "grp", p=4)
-        .unionByName(hll_registers(df_b, "tok", "grp", p=4))
-        .groupBy("grp", "j")
-        .agg(F.max("mj").cast("int").alias("mj"))
-    )
-    [got] = hll_estimate(merged, "grp", p=4).collect()
-    [want] = hll_distinct(df_a.unionByName(df_b), "tok", "grp", p=4).collect()
-    assert (got["v_empty"], got["s_scaled"], got["est_distinct"]) == (
-        want["v_empty"], want["s_scaled"], want["est_distinct"],
-    )
-
-
-def test_streaming_hll_register_store(spark, tmp_path):
-    """Two micro-batches maintain the register store; the store's estimate
-    equals the one-shot batch estimate over everything seen, and re-merging
-    a batch is a no-op (max is idempotent → at-least-once safe)."""
-    import pandas as pd
-
-    from blink_spark.operators.sketch import hll_distinct, hll_estimate
-    from blink_spark.streaming.sketches import update_hll_register_store
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    store = str(tmp_path / "hll_store")
-    ckpt = str(tmp_path / "ckpt")
-
-    def sink(batch_df, batch_id):
-        update_hll_register_store(
-            batch_df.sparkSession, batch_df, store, "tok", "grp", p=4
-        )
-
-    def run_once():
-        q = (
-            spark.readStream.schema("grp string, tok string")
-            .parquet(str(in_dir))
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    b1 = [("x", f"a{i}") for i in range(800)] + [("y", f"b{i}") for i in range(3)]
-    b2 = [("x", f"a{i}") for i in range(400, 1200)] + [("y", f"b{i}") for i in range(2)]
-    pd.DataFrame(b1, columns=["grp", "tok"]).to_parquet(in_dir / "b1.parquet")
-    run_once()
-    pd.DataFrame(b2, columns=["grp", "tok"]).to_parquet(in_dir / "b2.parquet")
-    run_once()
-
-    est = {
-        r["grp"]: (r["v_empty"], r["s_scaled"], r["est_distinct"])
-        for r in hll_estimate(spark.read.parquet(store), "grp", p=4).collect()
-    }
-    full = spark.createDataFrame(b1 + b2, "grp string, tok string")
-    want = {
-        r["grp"]: (r["v_empty"], r["s_scaled"], r["est_distinct"])
-        for r in hll_distinct(full, "tok", "grp", p=4).collect()
-    }
-    assert est == want
-    # "y" stayed in the linear-counting regime (5 distinct keys)
-    assert est["y"][2] < 16
-
-    # idempotence: merging batch 2 again leaves the store byte-identical
-    before = sorted(map(tuple, spark.read.parquet(store).collect()))
-    update_hll_register_store(
-        spark, spark.createDataFrame(b2, "grp string, tok string"),
-        store, "tok", "grp", p=4,
-    )
-    after = sorted(map(tuple, spark.read.parquet(store).collect()))
-    assert before == after
-
-
 def test_temporal_null_semantics_match_sql_equijoin(spark):
     """NULL keys / NULL timestamps never match (= / <= semantics): NULL-key
     or NULL-ts left rows come out unmatched / zero, NULL right rows are
@@ -348,37 +262,6 @@ def test_temporal_null_semantics_match_sql_equijoin(spark):
         ).collect()
     }
     assert counts == {301: 0, 302: 0, 303: 1}
-
-
-def test_hll_store_survives_crashed_swap(spark, tmp_path):
-    """Two-generation store protocol: if a crash interrupts the swap after
-    the live generation moved to .prev, the next merge falls back to .prev
-    and no history is lost."""
-    import os
-
-    from blink_spark.operators.sketch import hll_distinct, hll_estimate
-    from blink_spark.streaming.sketches import update_hll_register_store
-    from blink_spark.streaming.stores import resolve_store
-
-    store = str(tmp_path / "regs")
-    b1 = spark.createDataFrame(
-        [("g", f"a{i}") for i in range(600)], "grp string, tok string"
-    )
-    b2 = spark.createDataFrame(
-        [("g", f"b{i}") for i in range(600)], "grp string, tok string"
-    )
-    update_hll_register_store(spark, b1, store, "tok", "grp", p=4)
-    # simulate a crash between the two renames of commit_store: the live
-    # generation sits at .prev, the main path is gone
-    os.rename(store, store + ".prev")
-    assert resolve_store(store) == store + ".prev"
-    update_hll_register_store(spark, b2, store, "tok", "grp", p=4)
-
-    [got] = hll_estimate(spark.read.parquet(store), "grp", p=4).collect()
-    [want] = hll_distinct(b1.unionByName(b2), "tok", "grp", p=4).collect()
-    assert (got["v_empty"], got["s_scaled"], got["est_distinct"]) == (
-        want["v_empty"], want["s_scaled"], want["est_distinct"],
-    )
 
 
 def test_asof_join_carries_left_and_right_payloads(spark):
