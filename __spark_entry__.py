@@ -444,7 +444,7 @@ def _doc_winnow_excerpts(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import winnow_excerpt_pairs
 
     d = _t(spark, sf, "documents")
-    return winnow_excerpt_pairs(d, "doc_id", "text", k=5, w=4)
+    return winnow_excerpt_pairs(d, "doc_id", "text")
 
 
 @_q(
@@ -631,7 +631,7 @@ def _doc_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
     indexing over the corpus document-frequency table."""
     from blink_spark.operators.corpus import tfidf_top_terms
 
-    return tfidf_top_terms(_t(spark, sf, "documents"), k=3)
+    return tfidf_top_terms(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -701,7 +701,7 @@ def _doc_chunk_windows(spark: SparkSession, sf: str) -> DataFrame:
     Zero-shuffle narrow plan."""
     from blink_spark.operators.corpus import chunk_windows
 
-    return chunk_windows(_t(spark, sf, "documents"), size=16)
+    return chunk_windows(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -726,7 +726,7 @@ def _doc_vocab_coverage(spark: SparkSession, sf: str) -> DataFrame:
     shuffle, TakeOrderedAndProject election, broadcast vocab probe."""
     from blink_spark.operators.corpus import vocab_coverage
 
-    return vocab_coverage(_t(spark, sf, "documents"), vocab_size=16)
+    return vocab_coverage(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -759,7 +759,7 @@ def _doc_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     walking the same greedy rule."""
     from blink_spark.operators.corpus import pack_sequences
 
-    return pack_sequences(_t(spark, sf, "documents"), budget=128, n_shards=4)
+    return pack_sequences(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -3278,7 +3278,6 @@ def _events_window_counts(spark: SparkSession, sf: str) -> DataFrame:
         e.filter(F.col("event_type") == "click"),
         e.filter(F.col("event_type") == "view"),
         on="user_id",
-        lookback_s=21600,
     )
 
 
@@ -3306,7 +3305,7 @@ def _events_kmv_distinct(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.sketch import kmv_distinct
 
     return kmv_distinct(
-        _t(spark, sf, "events"), key_col="user_id", group_col="event_type", k=8
+        _t(spark, sf, "events"), key_col="user_id", group_col="event_type"
     )
 
 
@@ -3346,7 +3345,7 @@ def _doc_token_hll(spark: SparkSession, sf: str) -> DataFrame:
     t = docs.select(
         "source", F.explode(F.split(normalize_text("text"), " ")).alias("tok")
     )
-    return hll_distinct(t, key_col="tok", group_col="source", p=4)
+    return hll_distinct(t, key_col="tok", group_col="source")
 
 
 @_q(
@@ -3381,7 +3380,7 @@ def _events_count_min(spark: SparkSession, sf: str) -> DataFrame:
 
     ev = _t(spark, sf, "events")
     return (
-        count_min_estimate(ev, key_col="user_id", d=4, w=64)
+        count_min_estimate(ev, key_col="user_id")
         .orderBy(F.col("est_count").desc(), F.col("user_id").asc())
         .limit(50)
     )
@@ -3410,7 +3409,7 @@ def _doc_chunk_dedup(spark: SparkSession, sf: str) -> DataFrame:
     content-keyed shuffle is the dedup itself."""
     from blink_spark.operators.corpus import chunk_dedup_stats
 
-    return chunk_dedup_stats(_t(spark, sf, "documents"), size=16)
+    return chunk_dedup_stats(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -3514,7 +3513,7 @@ def _corpus_mix_plan(spark: SparkSession, sf: str) -> DataFrame:
     stratified_sample thresholds directly."""
     from blink_spark.operators.corpus import mix_plan
 
-    return mix_plan(_t(spark, sf, "documents"), budget_tokens=25_000)
+    return mix_plan(_t(spark, sf, "documents"))
 
 
 @_q(
@@ -3597,8 +3596,7 @@ def _ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     e = _t(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 64)
     approx = pq_topk(
-        q, e, k=10, n_sub=16, d_sub=4, n_centroids=64,
-        query_id="vec_id", query_emb="embedding",
+        q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     # the exact baseline mirrors the oracle's WHERE len(embedding) = 64
@@ -3819,8 +3817,7 @@ def _ann_ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
     e = _t(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 64)
     approx = ivfpq_topk(
-        q, e, k=10, n_coarse=16, nprobe=4, n_sub=16, d_sub=4,
-        pq_centroids=64, query_id="vec_id", query_emb="embedding",
+        q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     eq = e.select("vec_id", quantize_emb("embedding").alias("q")).filter(
@@ -3860,7 +3857,7 @@ def _doc_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
 
     d = _t(spark, sf, "documents")
     return decontaminate(
-        d.filter(F.col("doc_id") % 31 != 0), d.filter(F.col("doc_id") % 31 == 0), n=4
+        d.filter(F.col("doc_id") % 31 != 0), d.filter(F.col("doc_id") % 31 == 0)
     )
 
 
@@ -4015,7 +4012,7 @@ def _doc_minhash_bands(spark: SparkSession, sf: str) -> DataFrame:
     d = _t(spark, sf, "documents")
     return d.select(
         "doc_id",
-        F.explode(minhash_band_keys("text", bands=4, rows=4)).alias("band_key"),
+        F.explode(minhash_band_keys("text")).alias("band_key"),
     )
 
 
@@ -4054,7 +4051,7 @@ def _doc_winnow(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import winnow_fingerprints
 
     d = _t(spark, sf, "documents")
-    return winnow_fingerprints(d, "doc_id", "text", k=5, w=4).withColumnRenamed(
+    return winnow_fingerprints(d, "doc_id", "text").withColumnRenamed(
         "record_id", "doc_id"
     )
 
@@ -4801,7 +4798,7 @@ def _doc_sentences(spark: SparkSession, sf: str) -> DataFrame:
     return s.select(
         "sent_id",
         F.size(sentences("text")).alias("n_sentences"),
-        first_n_sentences("text", 2).alias("first_two"),
+        first_n_sentences("text").alias("first_two"),
     )
 
 
@@ -4822,9 +4819,7 @@ def _er_threshold_prune(spark: SparkSession, sf: str) -> DataFrame:
         ).cast("double")
         / 100.0,
     )
-    return threshold_prune_topk(
-        scored, "record_id", "score", threshold=14.0, k=2
-    )
+    return threshold_prune_topk(scored, "record_id", "score")
 
 
 @_q("er_bm25_topk", None)  # oracle injected below (fixture path)
@@ -5095,7 +5090,7 @@ def _ann_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
         item_id="vec_id", item_emb="q", scorer=scorer,
     )
     approx = ivf_topk(
-        q, e, k=10, n_centroids=16, nprobe=4, query_id="qid", query_emb="qv",
+        q, e, nprobe=4, query_id="qid", query_emb="qv",
         item_id="vec_id", item_emb="q", scorer=scorer,
     )
     return ann_recall_vs_exact(approx, exact)
@@ -5125,7 +5120,7 @@ def _ann_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
     out = None
     for np in (1, 2, 4):
         approx = ivf_topk(
-            q, e, k=10, n_centroids=16, nprobe=np, query_id="qid",
+            q, e, nprobe=np, query_id="qid",
             query_emb="qv", item_id="vec_id", item_emb="q", scorer=scorer,
         )
         r = ann_recall_vs_exact(approx, exact).select(
@@ -5239,7 +5234,7 @@ def _er_span_scores(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.spans import span_scores_prefix_sum
 
     q = _fx(spark, "questions")
-    return span_scores_prefix_sum(q, "id", "text", max_len=3)
+    return span_scores_prefix_sum(q, "id", "text")
 
 
 @_q("wiki_extractor_scan", None)  # oracle injected below (fixture path)
@@ -5249,7 +5244,7 @@ def _wiki_extractor_scan(spark: SparkSession, sf: str) -> DataFrame:
     process_wiki_extractor_output_full.py:52-94)."""
     from blink_spark.sources.wiki import read_wiki_extractor
 
-    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"], full_text=True)
+    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"])
     return d.select(
         "wikipedia_id", "title", "num_tokens", F.md5("text").alias("text_md5")
     )
@@ -5262,7 +5257,7 @@ def _wiki_links(spark: SparkSession, sf: str) -> DataFrame:
     process_wiki_extractor_output_links.py:56-131)."""
     from blink_spark.sources.wiki import extract_anchor_links, read_wiki_extractor
 
-    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"], full_text=True)
+    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"])
     return extract_anchor_links(d)
 
 
@@ -5278,7 +5273,7 @@ def _wiki_incoming_links(spark: SparkSession, sf: str) -> DataFrame:
         read_wiki_extractor,
     )
 
-    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"], full_text=True)
+    d = read_wiki_extractor(spark, _fixtures()["wiki_extractor"])
     ents = d.select(F.col("wikipedia_id").alias("entity_id"), "title")
     return incoming_link_counts(extract_anchor_links(d), ents)
 
@@ -5510,7 +5505,7 @@ def _er_media_frames(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.multimodal import decode_media_stub, frame_sample
 
     d = _fx(spark, "documents")
-    return frame_sample(decode_media_stub(media_spans(d)), every_n=10)
+    return frame_sample(decode_media_stub(media_spans(d)))
 
 
 @_q("er_media_resize", None)  # oracle injected below (fixture path)
@@ -5521,7 +5516,7 @@ def _er_media_resize(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.multimodal import decode_media_stub, resize_plan
 
     d = _fx(spark, "documents")
-    return resize_plan(decode_media_stub(media_spans(d)), max_dim=700)
+    return resize_plan(decode_media_stub(media_spans(d)))
 
 
 @_q(
@@ -5819,7 +5814,7 @@ def _er_kb_ingest_filter(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.sources.kb_filters import kb_ingestion_filter
 
     kb = _fx(spark, "kb_raw")
-    kept, _counters = kb_ingestion_filter(kb, min_tokens=5)
+    kept, _counters = kb_ingestion_filter(kb)
     return kept.select(
         "entity_id",
         "title",
@@ -5993,8 +5988,7 @@ def _doc_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import minhash_dedup
 
     d = _t(spark, sf, "documents")
-    return minhash_dedup(d, "doc_id", "text",
-                         bands=4, rows=8, shingle_n=7, jaccard_threshold=0.8)
+    return minhash_dedup(d, "doc_id", "text")
 
 
 @_q(
@@ -6071,9 +6065,7 @@ def _doc_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import minhash_calibration
 
     d = _t(spark, sf, "documents")
-    return minhash_calibration(
-        d, "doc_id", "text", bands=4, rows=8, shingle_n=7
-    )
+    return minhash_calibration(d, "doc_id", "text")
 
 
 def _q_emb(col: str = "embedding") -> str:
@@ -6289,7 +6281,7 @@ def _ann_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
         item_id="vec_id", item_emb="q", scorer=scorer,
     )
     approx = lsh_topk(
-        q, e, k=10, n_planes=_ANN_PLANES, probe_bits=1, query_id="qid",
+        q, e, n_planes=_ANN_PLANES, query_id="qid",
         query_emb="qv", item_id="vec_id", item_emb="q", scorer=scorer,
         bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=_ANN_PLANES, dim=64),
     )
@@ -6403,7 +6395,7 @@ def _emb_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     e = _fx(spark, "embeddings_fx").select(
         "vec_id", quantize_emb("embedding").alias("q")
     )
-    return semdedup(e, "vec_id", "q", n_cells=8, tau=0.95)
+    return semdedup(e, "vec_id", "q")
 
 
 @_q(
@@ -6552,7 +6544,7 @@ def _er_sorted_neighborhood(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.blocking import sorted_neighborhood_pairs
 
     m = _fx(spark, "mentions")
-    return sorted_neighborhood_pairs(m, "mention_id", "mention", window=3)
+    return sorted_neighborhood_pairs(m, "mention_id", "mention")
 
 
 @_q("er_fs_weights", None)  # oracle injected below (fixture path)
@@ -6858,7 +6850,7 @@ def _er_em_weights(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("jaccard") >= F.lit(0.65)).alias("jacc_hi"),
         (F.col("lev_ratio") >= F.lit(0.93)).alias("lev_hi"),
     )
-    return em_fs_weights(feats, ["norm_eq", "jacc_hi", "lev_hi"], iters=3)
+    return em_fs_weights(feats, ["norm_eq", "jacc_hi", "lev_hi"])
 
 
 @_q("er_review_queue", None)  # oracle injected below (fixture path)
@@ -6907,7 +6899,7 @@ def _er_review_queue(spark: SparkSession, sf: str) -> DataFrame:
     )
     w = {
         r["feature"]: r
-        for r in em_fs_weights(feats.select(*fcols), fcols, iters=3).collect()
+        for r in em_fs_weights(feats.select(*fcols), fcols).collect()
     }
     t = F.lit(int(w["lambda"]["weight_micro"])).cast("long")
     for f in fcols:
@@ -7567,9 +7559,7 @@ def _er_blocking_budget(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.blocking import blocking_budget_frontier
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    return blocking_budget_frontier(
-        m, "mention_id", "mention", pair_budget=100_000
-    )
+    return blocking_budget_frontier(m, "mention_id", "mention")
 
 
 @_q("er_sorted_lev", None)  # oracle injected below (fixture path)
@@ -7855,13 +7845,13 @@ def _er_blocking_ensemble(spark: SparkSession, sf: str) -> DataFrame:
         canon(_er_cand_pairs(spark, sf), "token_pair")
         .unionByName(
             canon(
-                sorted_neighborhood_pairs(m, "mention_id", "mention", window=3),
+                sorted_neighborhood_pairs(m, "mention_id", "mention"),
                 "snm",
             )
         )
         .unionByName(
             canon(
-                phonetic_pairs(m, "mention_id", "mention", max_block=100),
+                phonetic_pairs(m, "mention_id", "mention"),
                 "phonetic",
             )
         )
@@ -7956,7 +7946,7 @@ def _er_phonetic_blocks(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.blocking import phonetic_pairs
 
     m = _fx(spark, "mentions")
-    return phonetic_pairs(m, "mention_id", "mention", max_block=100)
+    return phonetic_pairs(m, "mention_id", "mention")
 
 
 @_q("er_suffix_blocks", None)  # oracle injected below (fixture path)
@@ -7971,9 +7961,7 @@ def _er_suffix_blocks(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.blocking import suffix_pairs
 
     m = _fx(spark, "mentions")
-    return suffix_pairs(
-        m, "mention_id", "mention", min_len=8, max_suffixes=12, max_block=50
-    )
+    return suffix_pairs(m, "mention_id", "mention")
 
 
 @_q("er_edit_distance_pairs", None)  # oracle injected below (fixture path)
@@ -7985,7 +7973,7 @@ def _er_edit_distance_pairs(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import edit_distance_pairs
 
     m = _fx(spark, "mentions")
-    return edit_distance_pairs(m, "mention_id", "mention", max_dist=2, q=3)
+    return edit_distance_pairs(m, "mention_id", "mention")
 
 
 @_q("er_cluster_repair", None)  # oracle injected below (fixture path)
@@ -8099,7 +8087,7 @@ def _er_one_to_one(spark: SparkSession, sf: str) -> DataFrame:
         "entity_id",
         F.round(lev_ratio("mention", F.lower("title")), 6).alias("sim"),
     )
-    return greedy_one_to_one(pairs, "mention_id", "entity_id", "sim", rounds=3)
+    return greedy_one_to_one(pairs, "mention_id", "entity_id", "sim")
 
 
 @_q("er_meta_blocking", None)  # oracle injected below (fixture path)
@@ -8112,7 +8100,7 @@ def _er_meta_blocking(spark: SparkSession, sf: str) -> DataFrame:
 
     m = _fx(spark, "mentions")
     assignments = token_pair_blocks(m, "mention_id", "mention")
-    return meta_block_prune(assignments, max_block=1024)
+    return meta_block_prune(assignments)
 
 
 @_q(
@@ -8158,7 +8146,7 @@ def _doc_duplicate_ngram_spans(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import duplicate_ngram_spans
 
     d = _t(spark, sf, "documents")
-    return duplicate_ngram_spans(d, "doc_id", "text", n=5, min_docs=2).withColumnRenamed(
+    return duplicate_ngram_spans(d, "doc_id", "text").withColumnRenamed(
         "record_id", "doc_id"
     )
 
@@ -8262,9 +8250,7 @@ def _doc_ngram_novelty(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import ngram_novelty
 
     d = _t(spark, sf, "documents")
-    return ngram_novelty(d, "doc_id", "text", n=5).withColumnRenamed(
-        "record_id", "doc_id"
-    )
+    return ngram_novelty(d, "doc_id", "text").withColumnRenamed("record_id", "doc_id")
 
 
 @_q(
@@ -8294,7 +8280,7 @@ def _events_retention_cohorts(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.temporal import retention_cohorts
 
     ev = _t(spark, sf, "events")
-    return retention_cohorts(ev, "user_id", "ts", epoch="2024-01-01", period_days=7)
+    return retention_cohorts(ev, "user_id", "ts")
 
 
 def _gold_match_edges(spark: SparkSession) -> DataFrame:
@@ -8366,7 +8352,7 @@ def _er_match_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     er_cluster_repair attacks structurally; this ranks them for triage."""
     from blink_spark.operators.cluster import integer_pagerank
 
-    return integer_pagerank(_gold_match_edges(spark), iters=3)
+    return integer_pagerank(_gold_match_edges(spark))
 
 
 @_q("er_match_kcore", None)  # oracle injected below (fixture path)
@@ -8376,7 +8362,7 @@ def _er_match_kcore(spark: SparkSession, sf: str) -> DataFrame:
     eviction round orders the periphery for review."""
     from blink_spark.operators.cluster import kcore_peel
 
-    return kcore_peel(_gold_match_edges(spark), k=3, rounds=3)
+    return kcore_peel(_gold_match_edges(spark))
 
 
 @_q("er_match_bfs_depth", None)  # oracle injected below (fixture path)
@@ -8387,7 +8373,7 @@ def _er_match_bfs_depth(spark: SparkSession, sf: str) -> DataFrame:
     (transitive drift), the over-merge mode per-pair scores cannot see."""
     from blink_spark.operators.cluster import bfs_seed_distance
 
-    return bfs_seed_distance(_gold_match_edges(spark), rounds=3)
+    return bfs_seed_distance(_gold_match_edges(spark))
 
 
 @_q("er_missing_links", None)  # oracle injected below (fixture path)
@@ -8431,7 +8417,7 @@ def _er_missing_links(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    return link_prediction(edges, min_common=2)
+    return link_prediction(edges)
 
 
 @_q("er_clustering_coefficient", None)  # oracle injected below (fixture path)
@@ -8454,7 +8440,7 @@ def _er_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     chains a reviewer should cut."""
     from blink_spark.operators.cluster import label_propagation
 
-    return label_propagation(_gold_match_edges(spark), rounds=3)
+    return label_propagation(_gold_match_edges(spark))
 
 
 @_q("er_cluster_churn", None)  # oracle injected below (fixture path)
@@ -9013,7 +8999,7 @@ def _er_pprl_bloom_dice(spark: SparkSession, sf: str) -> DataFrame:
         F.col("mention_id_a").alias("record_id_a"),
         F.col("mention_id_b").alias("record_id_b"),
     )
-    return pprl_bloom_dice(recs, prs, "mention_id", "mention", m=64, k=3)
+    return pprl_bloom_dice(recs, prs, "mention_id", "mention")
 
 
 @_q("er_group_linkage", None)  # oracle injected below (fixture path)
@@ -9078,7 +9064,7 @@ def _er_dynamic_blocking(spark: SparkSession, sf: str) -> DataFrame:
         F.col("mention_id").alias("record_id"),
         F.explode(tokens(F.col("mention"))).alias("block_key"),
     )
-    return dynamic_blocking(blocks, cap=32)
+    return dynamic_blocking(blocks)
 
 
 @_q("er_resource_allocation", None)  # oracle injected below (fixture path)
@@ -9121,7 +9107,7 @@ def _er_resource_allocation(spark: SparkSession, sf: str) -> DataFrame:
         )
         .distinct()
     )
-    return resource_allocation(edges, min_common=2)
+    return resource_allocation(edges)
 
 
 @_q("er_swoosh_merge", None)  # oracle injected below (fixture path)
@@ -9134,7 +9120,7 @@ def _er_swoosh_merge(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.swoosh import swoosh_merge
 
     m = _fx(spark, "mentions")
-    return swoosh_merge(m, "mention_id", "mention", rounds=2)
+    return swoosh_merge(m, "mention_id", "mention")
 
 
 @_q("er_canopy_assign", None)  # oracle injected below (fixture path)

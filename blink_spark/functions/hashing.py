@@ -64,21 +64,21 @@ def minhash_signature(col: Column | str, k: int = 16, shingle_n: int = 3) -> Col
     return F.aggregate(hashed, init, _fold)
 
 
-def minhash_band_keys(col: Column | str, bands: int = 4, rows: int = 4,
-                      shingle_n: int = 3) -> Column:
-    """array<string> of LSH band keys: md5 of each band of the signature.
+def minhash_band_keys(col: Column | str) -> Column:
+    """array<string> of LSH band keys: md5 of each band of a 4-band × 4-row
+    signature over 3-char shingles.
 
-    Two texts share a band key iff their signature agrees on all ``rows``
-    hashes of that band — the classic banding construction.
+    Two texts share a band key iff their signature agrees on all 4 hashes
+    of that band — the classic banding construction.
     """
-    sig = minhash_signature(col, k=bands * rows, shingle_n=shingle_n)
+    sig = minhash_signature(col, k=16, shingle_n=3)
     return F.array(
         *[
             F.concat(
                 F.lit(f"b{b}:"),
-                F.md5(F.array_join(F.slice(sig, b * rows + 1, rows), ",")),
+                F.md5(F.array_join(F.slice(sig, b * 4 + 1, 4), ",")),
             )
-            for b in range(bands)
+            for b in range(4)
         ]
     )
 
@@ -92,6 +92,8 @@ def hamming64(a: Column | str, b: Column | str) -> Column:
 # --- hashing-trick embeddings (the biencoder stand-in) ---------------------
 
 EMB_DIM = 64
+# seed of the sign-LSH hyperplanes (both the float and the integer forms)
+LSH_SEED = 7
 
 
 # token -> (64-bit hash int, sign). The featurizer is a pure function of the
@@ -143,17 +145,17 @@ def embed_text_udf(texts: pd.Series) -> pd.Series:
     return _embed_batch(texts, EMB_DIM)
 
 
-def sign_lsh_bucket(emb: Column | str, n_planes: int = 8, seed: int = 7) -> Column:
+def sign_lsh_bucket(emb: Column | str, n_planes: int = 8) -> Column:
     """Random-hyperplane LSH bucket id for an embedding column.
 
-    Hyperplanes are seeded constants (blake2b of (seed, plane, coord)) so the
+    Hyperplanes are seeded constants (blake2b of (LSH_SEED, plane, coord)) so the
     bucket id is a pure function of the embedding — the IVF-coarse-quantizer
     analogue (/root/reference/elq/index/faiss_indexer.py:71-91).
     """
     c = F.col(emb) if isinstance(emb, str) else emb
     acc = F.lit(0)
     for p in range(n_planes):
-        plane = _plane(seed, p, EMB_DIM)
+        plane = _plane(LSH_SEED, p, EMB_DIM)
         proj = F.aggregate(
             F.zip_with(
                 c,
@@ -243,7 +245,7 @@ def cosine_exact(a_q: Column | str, b_q: Column | str) -> Column:
 
 
 def sign_lsh_bucket_exact(
-    emb_q: Column | str, n_planes: int = 8, seed: int = 7, dim: int = EMB_DIM
+    emb_q: Column | str, n_planes: int = 8, dim: int = EMB_DIM
 ) -> Column:
     """Sign-LSH bucket over a QUANTIZED embedding with integer hyperplanes —
     the sign test is exact integer arithmetic (no float-boundary flips), so
@@ -251,7 +253,7 @@ def sign_lsh_bucket_exact(
     c = F.col(emb_q) if isinstance(emb_q, str) else emb_q
     acc = F.lit(0)
     for p in range(n_planes):
-        plane = F.array(*[F.lit(x).cast("long") for x in int_plane(seed, p, dim)])
+        plane = F.array(*[F.lit(x).cast("long") for x in int_plane(LSH_SEED, p, dim)])
         proj = F.aggregate(
             F.zip_with(c, plane, lambda x, y: x * y),
             F.lit(0).cast("long"),

@@ -221,18 +221,16 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 def pair_score(
     text_a: Column | str,
     text_b: Column | str,
-    w_jw: float = 0.3,
-    w_lev: float = 0.3,
 ) -> Column:
-    """Lexical pair score in [0, 1]: Jaro-Winkler + Levenshtein ratio, the
-    vectorized stand-in for the reference's joint BERT pair logit
+    """Lexical pair score in [0, 1]: the mean of Jaro-Winkler and the
+    Levenshtein ratio, the vectorized stand-in for the reference's joint
+    BERT pair logit
     (/root/reference/blink/crossencoder/crossencoder.py:135-144)."""
     na = normalize_text(text_a)
     nb = normalize_text(text_b)
     jw = jaro_winkler_udf(na, nb)
     lv = lev_ratio(text_a, text_b)
-    total = w_jw + w_lev
-    return F.round((w_jw / total) * jw + (w_lev / total) * lv, 6)
+    return F.round(0.5 * jw + 0.5 * lv, 6)
 
 
 def softmax_over(score: Column, window) -> Column:

@@ -145,10 +145,10 @@ def sentences(col: Column | str) -> Column:
     return F.filter(parts, lambda s: s != "")
 
 
-def first_n_sentences(col: Column | str, n: int = 10) -> Column:
-    """First N sentences re-joined (the intro-sentence projection,
+def first_n_sentences(col: Column | str) -> Column:
+    """First two sentences re-joined (the intro-sentence projection,
     /root/reference/blink/candidate_retrieval/process_intro_sents.py:61-64)."""
-    return F.array_join(F.slice(sentences(col), 1, n), " ")
+    return F.array_join(F.slice(sentences(col), 1, 2), " ")
 
 
 def fingerprint(col: Column | str) -> Column:

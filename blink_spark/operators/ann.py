@@ -41,6 +41,18 @@ from blink_spark.functions.similarity import (
 )
 from blink_spark.plans.inspect import spread
 
+# result size of the approximate top-k family (lsh, ivf, pq, ivf-pq)
+ANN_K = 10
+# coarse cells of ivf_topk and ivfpq_topk; ivfpq_topk probes IVFPQ_NPROBE
+IVF_CELLS = 16
+IVFPQ_NPROBE = 4
+# PQ search geometry (16 subspaces × 4 dims over a 64-centroid codebook)
+# and pq_encode's (8 × 8 over 16 centroids)
+PQ_N_SUB, PQ_D_SUB, PQ_CENTROIDS = 16, 4, 64
+PQ_ENCODE_N_SUB, PQ_ENCODE_D_SUB, PQ_ENCODE_CENTROIDS = 8, 8, 16
+# codebook sizes elbow_inertia sweeps
+ELBOW_KS = (4, 8, 16)
+
 _QUERY = ("query_id", "qv", "qn")
 _ITEM = ("item_id", "iv", "itn")
 
@@ -248,9 +260,7 @@ def brute_force_topk(
 def lsh_topk(
     queries: DataFrame,
     items: DataFrame,
-    k: int = 10,
     n_planes: int = 8,
-    probe_bits: int = 1,
     query_id: str = "query_id",
     query_emb: str = "query_emb",
     item_id: str = "item_id",
@@ -261,7 +271,7 @@ def lsh_topk(
     """Approximate cosine top-k via random-hyperplane buckets.
 
     Items land in their own bucket; queries probe their bucket plus every
-    bucket at Hamming distance <= probe_bits (the nprobe analogue). The
+    bucket at Hamming distance 1 (the nprobe analogue). The
     scoring join is an equi-join on bucket id — co-partitioned, no cross
     join anywhere. ``bucket_fn(emb) -> Column`` overrides the float sign-LSH
     bucket (e.g. ``sign_lsh_bucket_exact`` over quantized embeddings).
@@ -275,8 +285,7 @@ def lsh_topk(
         "bucket0", bucket_fn(F.col("qv"))
     )
     probes = [F.col("bucket0")]
-    if probe_bits >= 1:
-        probes += [F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
+    probes += [F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
     qp = q.select(
         "query_id", "qv", "qn", F.explode(F.array(*probes)).alias("bucket")
     )
@@ -284,39 +293,7 @@ def lsh_topk(
     pairs = qp.join(it, "bucket").filter(F.col("item_id") != F.col("query_id")).select(
         "query_id", "item_id", _pair_score(scorer).alias("score")
     ).dropDuplicates(["query_id", "item_id"])
-    return _rank_topk(pairs, k)
-
-
-def kmeans_codebook(
-    items_iv: DataFrame, n_centroids: int, seed: int = 42, max_iter: int = 20
-) -> DataFrame:
-    """Trained IVF codebook: seeded ``pyspark.ml.clustering.KMeans`` centers
-    over the item embeddings — the coarse-quantizer *training* step of
-    /root/reference/elq/index/faiss_indexer.py:71-91 (faiss
-    ``train()`` before ``add()``). The fitted centers (a tiny driver-side
-    list, <= n_centroids × dim floats) become the broadcastable centroid
-    table; everything downstream stays the same relational assign/probe.
-
-    Seeded and single-job deterministic; across different partitionings
-    k-means|| init can legitimately differ, which is why the ORACLE path
-    keeps the ``first_items`` codebook (bit-reproducible anywhere) and this
-    is the quality path.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = items_iv.select(
-        array_to_vector(F.col("iv").cast("array<double>")).alias("features")
-    )
-    model = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, initMode="k-means||"
-    ).fit(feats)
-    rows = [
-        (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return items_iv.sparkSession.createDataFrame(
-        rows, "cid BIGINT, cv ARRAY<DOUBLE>"
-    )
+    return _rank_topk(pairs, ANN_K)
 
 
 def _centroid_literal_array(cents: DataFrame):
@@ -423,16 +400,12 @@ def assign_cells(it: DataFrame, cents: DataFrame, scorer) -> DataFrame:
 def ivf_topk(
     queries: DataFrame,
     items: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
     nprobe: int = 4,
     query_id: str = "query_id",
     query_emb: str = "query_emb",
     item_id: str = "item_id",
     item_emb: str = "item_emb",
     scorer=None,
-    codebook: str = "first_items",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-style approximate top-k — the coarse-quantizer analogue of
     /root/reference/elq/index/faiss_indexer.py:71-91 (nlist cells, nprobe
@@ -440,25 +413,19 @@ def ivf_topk(
     queries probe their ``nprobe`` nearest centroids, and scoring is an
     equi-join on the cell id.
 
-    ``codebook`` picks the centroid source: ``"kmeans"`` trains a seeded
-    KMeans codebook (better cells → higher recall at equal nprobe — the
-    production path); ``"first_items"`` uses the ``n_centroids`` lowest-id
-    items — bit-reproducible on any engine, which is what the DuckDB oracle
-    requires. Assignment AND probe selection are shuffle-free literal-
-    codebook expressions (argmax fold / comparator-sort + slice) — one
-    projection per row on each side, no join, no window, no Exchange
-    before the cell equi-join.
+    The codebook is the ``IVF_CELLS`` lowest-id items — bit-reproducible
+    on any engine, which is what the DuckDB oracle requires. Assignment AND
+    probe selection are shuffle-free literal-codebook expressions (argmax
+    fold / comparator-sort + slice) — one projection per row on each side,
+    no join, no window, no Exchange before the cell equi-join.
     """
     cell_scorer = scorer or _default_scorer
     it = _embedded(items, item_id, item_emb, _ITEM)
-    if codebook == "kmeans":
-        cents = kmeans_codebook(it, n_centroids, seed=seed)
-    else:
-        cents = (
-            it.orderBy(F.col("item_id").asc())
-            .limit(n_centroids)
-            .select(F.col("item_id").alias("cid"), F.col("iv").alias("cv"))
-        )
+    cents = (
+        it.orderBy(F.col("item_id").asc())
+        .limit(IVF_CELLS)
+        .select(F.col("item_id").alias("cid"), F.col("iv").alias("cv"))
+    )
     q = _embedded(queries, query_id, query_emb, _QUERY)
     carr, cid_t = _centroid_literal_array(cents)  # ONE collect, both sides
     if carr is None:  # empty codebook → nothing assignable/probable
@@ -467,7 +434,7 @@ def ivf_topk(
             "item_id",
             F.lit(0.0).alias("score"),
         )
-        return _rank_topk(empty, k)
+        return _rank_topk(empty, ANN_K)
     assigned = _assign_cells_lit(it, carr, cid_t, cell_scorer)
     probes = _probe_cells_lit(q, carr, cid_t, cell_scorer, nprobe)
     pairs = (
@@ -476,7 +443,7 @@ def ivf_topk(
         .select("query_id", "item_id", _pair_score(scorer).alias("score"))
         .dropDuplicates(["query_id", "item_id"])
     )
-    return _rank_topk(pairs, k)
+    return _rank_topk(pairs, ANN_K)
 
 
 def ann_recall_vs_exact(approx: DataFrame, exact: DataFrame) -> DataFrame:
@@ -495,9 +462,6 @@ def ann_recall_vs_exact(approx: DataFrame, exact: DataFrame) -> DataFrame:
 
 def pq_encode(
     emb: DataFrame,
-    n_sub: int = 8,
-    d_sub: int = 8,
-    n_centroids: int = 16,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
 ) -> DataFrame:
@@ -506,9 +470,9 @@ def pq_encode(
     /root/reference/elq/index/faiss_indexer.py:71-91 trains coarse+PQ
     quantizers before ``add()``): the ``n_sub·d_sub``-dim vector is split
     into ``n_sub`` subvectors and each is snapped to its nearest of
-    ``n_centroids`` subspace centroids, so a vector stores as ``n_sub``
-    byte-sized codes (here 8×4 bits ≈ 4 bytes vs 256 float bytes, 64×
-    compression) plus the codebook.
+    ``n_centroids`` subspace centroids (``PQ_ENCODE_*``: 8 × 8 over 16), so
+    a vector stores as ``n_sub`` byte-sized codes (here 8×4 bits ≈ 4 bytes
+    vs 256 float bytes, 64× compression) plus the codebook.
 
     Output: one row per (vector, subspace) — ``vec_id, sub, code,
     sq_err`` — where ``sq_err`` is the exact integer squared L2
@@ -519,7 +483,7 @@ def pq_encode(
     Determinism/parity: embeddings are micro-quantized (floor(v·1e6) →
     BIGINT); the codebook is the subvectors of the first ``n_centroids``
     vectors by id (the ``first_items`` convention the IVF oracle path
-    uses — bit-reproducible anywhere, vs the seeded-KMeans quality path);
+    uses — bit-reproducible anywhere);
     distances are exact integer sums, argmin ties break to the lowest
     centroid id. Everything is integer arithmetic — no floats at all.
 
@@ -530,6 +494,8 @@ def pq_encode(
     corpus-sized moves. Vectors whose length ≠ n_sub·d_sub are dropped
     (malformed input guard).
     """
+    n_sub, d_sub = PQ_ENCODE_N_SUB, PQ_ENCODE_D_SUB
+    n_centroids = PQ_ENCODE_CENTROIDS
     dim = n_sub * d_sub
     q = _pq_quantized(emb, id_col, emb_col, dim, "vec_id")
     cb = _pq_codebook(q, "vec_id", n_centroids)
@@ -630,10 +596,6 @@ def _pq_best_struct(cb, s: int, d_sub: int, with_err: bool):
 def pq_topk(
     queries: DataFrame,
     items: DataFrame,
-    k: int = 10,
-    n_sub: int = 8,
-    d_sub: int = 8,
-    n_centroids: int = 16,
     query_id: str = "query_id",
     query_emb: str = "query_emb",
     item_id: str = "item_id",
@@ -654,12 +616,14 @@ def pq_topk(
     window. Exhaustive over items BY DESIGN (IndexPQ is a scan —
     compose with IVF cells for the bucketed scale path); the PQ win is
     scanning 8 small integers per item instead of the 64-dim vector.
-    All distances are exact integers; ties rank item_id ASC.
+    All distances are exact integers; ties rank item_id ASC. Geometry:
+    ``PQ_N_SUB × PQ_D_SUB`` over ``PQ_CENTROIDS`` centroids.
     """
+    n_sub, d_sub = PQ_N_SUB, PQ_D_SUB
     dim = n_sub * d_sub
     it = _pq_quantized(items, item_id, item_emb, dim, "item_id")
     qs = _pq_quantized(queries, query_id, query_emb, dim, "query_id")
-    cb = _pq_codebook(it, "item_id", n_centroids)
+    cb = _pq_codebook(it, "item_id", PQ_CENTROIDS)
     if not cb:
         return it.select(
             F.col("item_id").alias("query_id"),
@@ -676,7 +640,7 @@ def pq_topk(
         .groupBy("query_id", "item_id")
         .agg(F.sum("qd2").cast("long").alias("adc"))
     )
-    return _rank_by_adc(adc, k)
+    return _rank_by_adc(adc, ANN_K)
 
 
 def _pq_codes(it: DataFrame, cb, n_sub: int, d_sub: int) -> DataFrame:
@@ -734,12 +698,6 @@ def _rank_by_adc(adc: DataFrame, k: int) -> DataFrame:
 def ivfpq_topk(
     queries: DataFrame,
     items: DataFrame,
-    k: int = 10,
-    n_coarse: int = 16,
-    nprobe: int = 4,
-    n_sub: int = 16,
-    d_sub: int = 4,
-    pq_centroids: int = 64,
     query_id: str = "query_id",
     query_emb: str = "query_emb",
     item_id: str = "item_id",
@@ -748,9 +706,10 @@ def ivfpq_topk(
     """IVF-PQ top-k — the production FAISS ``IndexIVFPQ`` shape
     (/root/reference/elq/index/faiss_indexer.py:71-91 trains exactly this
     coarse+PQ pair before ``add()``): a coarse L2 quantizer restricts each
-    query to its ``nprobe`` nearest of ``n_coarse`` cells, and within those
-    cells distance is the PQ asymmetric sum over stored codes — the query
-    touches neither full item vectors nor items outside its probed cells.
+    query to its ``IVFPQ_NPROBE`` nearest of ``IVF_CELLS`` cells, and within
+    those cells distance is the PQ asymmetric sum over stored codes — the
+    query touches neither full item vectors nor items outside its probed
+    cells.
 
     Everything stays integer-exact: the coarse quantizer scores by negative
     integer L2 (argmax of −d² == argmin d², same NULLS-LAST/min-cid tie
@@ -767,16 +726,17 @@ def ivfpq_topk(
     """
     from blink_spark.functions.hashing import int_l2
 
+    n_sub, d_sub = PQ_N_SUB, PQ_D_SUB
     dim = n_sub * d_sub
     it = _pq_quantized(items, item_id, item_emb, dim, "item_id")
     qs = _pq_quantized(queries, query_id, query_emb, dim, "query_id")
     coarse = (
         it.orderBy("item_id")
-        .limit(n_coarse)
+        .limit(IVF_CELLS)
         .select(F.col("item_id").alias("cid"), F.col("qv").alias("cv"))
     )
     carr, cid_t = _centroid_literal_array(coarse)
-    cb = _pq_codebook(it, "item_id", pq_centroids)
+    cb = _pq_codebook(it, "item_id", PQ_CENTROIDS)
     if carr is None or not cb:
         return it.select(
             F.col("item_id").alias("query_id"),
@@ -791,7 +751,7 @@ def ivfpq_topk(
     assigned = _assign_cells_lit(
         it.select("item_id", F.col("qv").alias("iv")), carr, cid_t, neg_l2
     ).select("item_id", "cid")
-    probes = _probe_cells_lit(qs, carr, cid_t, neg_l2, nprobe).select(
+    probes = _probe_cells_lit(qs, carr, cid_t, neg_l2, IVFPQ_NPROBE).select(
         "query_id", "cid"
     )
     icodes = assigned.join(_pq_codes(it, cb, n_sub, d_sub), "item_id")
@@ -804,20 +764,19 @@ def ivfpq_topk(
         .groupBy("query_id", "item_id")
         .agg(F.sum("qd2").cast("long").alias("adc"))
     )
-    return _rank_by_adc(adc, k)
+    return _rank_by_adc(adc, ANN_K)
 
 
 def jl_projection_ratio(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 8,
 ) -> DataFrame:
     """Johnson–Lindenstrauss distance-preservation readout for a
     deterministic ±1 sign projection (Achlioptas 2003: random-sign
     matrices satisfy JL — E[(Σ sᵢ·δᵢ)²] = ‖δ‖², so the k-plane projected
     squared distance divided by k estimates the original): projects the
-    1e6-quantized embeddings onto ``n_planes`` md5-derived sign vectors,
+    1e6-quantized embeddings onto 8 md5-derived sign vectors,
     pairs consecutive ids, and histograms the projected/original
     squared-distance ratio — the empirical evidence that a k-dim sketch
     preserves the distances the ANN/dedup family consumes, and the
@@ -835,7 +794,7 @@ def jl_projection_ratio(
     Returns one row per ratio bucket (bucket = ratio_ppm div 200000
     capped at 9): (bucket, n_pairs, min_ratio_ppm, max_ratio_ppm).
     """
-    k = int(n_planes)
+    k = 8
     ex = emb.select(
         F.col(id_col).alias("id"),
         F.posexplode(vec_col).alias("pos", "v"),
@@ -913,12 +872,11 @@ def jl_projection_ratio(
 
 def elbow_inertia(
     items: DataFrame,
-    ks: tuple[int, ...] = (4, 8, 16),
     item_id: str = "item_id",
     item_emb: str = "iv",
 ) -> DataFrame:
     """IVF cell-count calibration: k-means inertia (Σ per-item min
-    squared distance to a centroid) at several codebook sizes — the
+    squared distance to a centroid) at the ``ELBOW_KS`` codebook sizes — the
     elbow readout that picks ``n_centroids`` before building the IVF
     index. Centroids are the ``first_items`` codebook (lowest-id items —
     the bit-reproducible oracle convention the IVF family already uses);
@@ -945,7 +903,7 @@ def elbow_inertia(
         lambda acc, x: acc + x,
     )
     out = None
-    for k in ks:
+    for k in ELBOW_KS:
         cents = (
             it.orderBy(F.col("item_id").asc())
             .limit(int(k))

@@ -19,6 +19,23 @@ from pyspark.sql import functions as F
 
 from blink_spark.functions.text import tokens
 
+# block-size caps (cap-and-report: larger blocks are dropped whole)
+PHONETIC_MAX_BLOCK = 100
+META_MAX_BLOCK = 1024
+SUFFIX_MAX_BLOCK = 50
+# suffix_pairs keys: suffixes of at least SUFFIX_MIN_LEN chars, at most
+# SUFFIX_MAX_KEYS per record
+SUFFIX_MIN_LEN = 8
+SUFFIX_MAX_KEYS = 12
+# canopy_assign's informative-token document-frequency ceiling
+CANOPY_DF_MAX = 20
+# blocks kept per record by block_filter_top_r
+BLOCK_FILTER_R = 3
+# dynamic_blocking's block-size cap
+DYNAMIC_CAP = 32
+# blocking_budget_frontier's candidate-pair budget
+PAIR_BUDGET = 100_000
+
 
 def token_pair_blocks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Emit one row per unordered token pair per record.
@@ -127,9 +144,6 @@ def df_aware_blocks(
     text_col: str,
     rare_df: int = 64,
     max_df: int = 4096,
-    max_tokens_per_record: int = 8,
-    emit_fallback: bool = True,
-    freq: DataFrame | None = None,
     cache_freq: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Document-frequency-aware blocking — the scalable default.
@@ -147,14 +161,10 @@ def df_aware_blocks(
     - **mid**   (otherwise): only *pairs* of non-stop tokens form keys —
       a pair key's block is at most min(df_a, df_b) rows.
 
-    Per record only the ``max_tokens_per_record`` least-frequent (most
-    selective) non-stop tokens participate in pair keys. Records whose
-    tokens are all stop tokens get a least-frequent-token fallback key when
-    ``emit_fallback`` (their oversized block is then capped/logged
-    downstream by candidate_pairs).
-
-    ``freq`` (tok, df) overrides the corpus frequencies — the incremental
-    path maintains a frequency store and blocks only the new batch with it.
+    Per record only the 8 least-frequent (most selective) non-stop tokens
+    participate in pair keys. Records whose tokens are all stop tokens get
+    a least-frequent-token fallback key (their oversized block is then
+    capped/logged downstream by candidate_pairs).
 
     Returns (assignments(block_key, record_id), token_stats).
     """
@@ -162,18 +172,17 @@ def df_aware_blocks(
     tok = recs.select(
         "record_id", F.explode(tokens("text")).alias("tok")
     )
-    if freq is None:
-        freq = tok.groupBy("tok").agg(F.count("*").alias("df"))
-        if cache_freq:
-            # localCheckpoint, not persist: same multi-consumer reuse
-            # (stats + join), but the cache entry is owned by the
-            # GC/ContextCleaner instead of leaking a persist() the caller
-            # can't see or release. ``cache_freq=False`` when the caller
-            # won't consume token_stats (fused throughput mode): freq then
-            # has ONE consumer and inlining it into the main DAG avoids an
-            # eager materialization job — one less barrier, pure serial
-            # fraction at high parallelism.
-            freq = freq.localCheckpoint()
+    freq = tok.groupBy("tok").agg(F.count("*").alias("df"))
+    if cache_freq:
+        # localCheckpoint, not persist: same multi-consumer reuse
+        # (stats + join), but the cache entry is owned by the
+        # GC/ContextCleaner instead of leaking a persist() the caller
+        # can't see or release. ``cache_freq=False`` when the caller
+        # won't consume token_stats (fused throughput mode): freq then
+        # has ONE consumer and inlining it into the main DAG avoids an
+        # eager materialization job — one less barrier, pure serial
+        # fraction at high parallelism.
+        freq = freq.localCheckpoint()
 
     token_stats = freq.select(
         F.when(F.col("df") <= rare_df, F.lit("rare"))
@@ -192,7 +201,7 @@ def df_aware_blocks(
         .agg(F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("all_ts"))
     )
     nonstop = F.filter("all_ts", lambda x: x["df"] <= max_df)
-    ts = F.slice(nonstop, 1, max_tokens_per_record)
+    ts = F.slice(nonstop, 1, 8)
     sel = F.transform(ts, lambda x: x["tok"])
     pair_keys = F.flatten(
         F.transform(
@@ -209,14 +218,12 @@ def df_aware_blocks(
         F.filter(ts, lambda x: x["df"] <= rare_df),
         lambda x: F.concat(F.lit("t1:"), x["tok"]),
     )
-    keys = F.array_union(pair_keys, rare_keys)
-    if emit_fallback:
-        # records with every token above max_df: fall back to their single
-        # least-frequent token so they are not silently unblockable.
-        fallback = F.array(
-            F.concat(F.lit("t1:"), F.element_at("all_ts", 1)["tok"])
-        )
-        keys = F.when(F.size(nonstop) == 0, fallback).otherwise(keys)
+    # records with every token above max_df: fall back to their single
+    # least-frequent token so they are not silently unblockable.
+    fallback = F.array(F.concat(F.lit("t1:"), F.element_at("all_ts", 1)["tok"]))
+    keys = F.when(F.size(nonstop) == 0, fallback).otherwise(
+        F.array_union(pair_keys, rare_keys)
+    )
 
     keyed = sets.select("record_id", F.explode(keys).alias("block_key"))
     return keyed.select("block_key", "record_id"), token_stats
@@ -282,13 +289,11 @@ def blocking_quality(assignments: DataFrame, records: DataFrame) -> DataFrame:
     )
 
 
-def sorted_neighborhood_pairs(
-    df: DataFrame, id_col: str, text_col: str, window: int = 3
-) -> DataFrame:
+def sorted_neighborhood_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Sorted-neighborhood blocking (Hernandez & Stolfo '95): total-order
-    records by their normalized surface key and pair each record with its
-    ``window`` successors. The classic complement to token/LSH blocking for
-    corruptions that preserve sort order (prefix typos, suffix noise) —
+    records by their normalized surface key and pair each record with its 3
+    successors (the window w). The classic complement to token/LSH blocking
+    for corruptions that preserve sort order (prefix typos, suffix noise) —
     the same "cheap ordered candidate neighbourhood" role as the reference's
     lexical candidate generators, which rank a small neighbourhood per
     mention surface (/root/reference/blink/candidate_retrieval/
@@ -299,11 +304,11 @@ def sorted_neighborhood_pairs(
       range partition + broadcast per-partition offsets, never a
       no-partition ``row_number()`` window (Exchange SinglePartition);
     - the neighbour pairing is a band EQUI-join, not an inequality join:
-      bucket ``rank div window``; a pair within distance w spans at most two
+      bucket ``rank div w``; a pair within distance w spans at most two
       adjacent buckets, so the successor side duplicates into
       (bucket, bucket-1) and the join key is a small dense integer. 2x row
       duplication on one side, zero cross-join, skew-free by construction
-      (every bucket holds exactly ``window`` ranks).
+      (every bucket holds exactly w ranks).
     """
     from blink_spark.functions.text import normalize_text
     from blink_spark.operators.ids import dense_ids
@@ -318,15 +323,15 @@ def sorted_neighborhood_pairs(
     left = ranked.select(
         F.col("record_id").alias("record_id_a"),
         F.col("rank").alias("rank_a"),
-        F.expr(f"rank div {int(window)}").alias("jb"),
+        F.expr("rank div 3").alias("jb"),
     )
     right = ranked.select(
         F.col("record_id").alias("record_id_b"),
         F.col("rank").alias("rank_b"),
         F.explode(
             F.array(
-                F.expr(f"rank div {int(window)}"),
-                F.expr(f"rank div {int(window)} - 1"),
+                F.expr("rank div 3"),
+                F.expr("rank div 3 - 1"),
             )
         ).alias("jb"),
     )
@@ -334,7 +339,7 @@ def sorted_neighborhood_pairs(
         left.join(right, "jb")
         .filter(
             (F.col("rank_b") - F.col("rank_a") >= 1)
-            & (F.col("rank_b") - F.col("rank_a") <= window)
+            & (F.col("rank_b") - F.col("rank_a") <= 3)
         )
         .select(
             "record_id_a",
@@ -344,9 +349,7 @@ def sorted_neighborhood_pairs(
     )
 
 
-def phonetic_pairs(
-    df: DataFrame, id_col: str, text_col: str, max_block: int = 100
-) -> DataFrame:
+def phonetic_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Phonetic blocking: candidate pairs whose simplified-Soundex keys
     (``functions.text.phonetic_key``) collide — the classic third blocking
     strategy next to token/LSH (sound-preserving misspellings like
@@ -358,10 +361,10 @@ def phonetic_pairs(
     Scale shape: one map-side-combinable groupBy for block sizes, a
     BROADCAST join of the (distinct-key sized) size table to apply the
     cap-and-report discipline every other blocker here follows — blocks
-    larger than ``max_block`` are dropped whole (a degenerate key like
-    'S000' over initials would otherwise go quadratic), then a key
-    equi-join bounded by max_block²/2 per block. No inequality join, no
-    skew: the cap IS the skew bound.
+    larger than ``PHONETIC_MAX_BLOCK`` are dropped whole (a degenerate key
+    like 'S000' over initials would otherwise go quadratic), then a key
+    equi-join bounded by PHONETIC_MAX_BLOCK²/2 per block. No inequality
+    join, no skew: the cap IS the skew bound.
 
     Output: (record_id_a, record_id_b, phonetic_key, block_size) with
     record_id_a < record_id_b, exactly once per colliding pair.
@@ -376,7 +379,7 @@ def phonetic_pairs(
         F.count(F.lit(1)).cast("long").alias("block_size")
     )
     capped = keyed.join(
-        F.broadcast(sizes.filter(F.col("block_size") <= max_block)), "pkey"
+        F.broadcast(sizes.filter(F.col("block_size") <= PHONETIC_MAX_BLOCK)), "pkey"
     )
     left = capped.select(
         "pkey", "block_size", F.col("record_id").alias("record_id_a")
@@ -394,9 +397,7 @@ def phonetic_pairs(
     )
 
 
-def meta_block_prune(
-    assignments: DataFrame, max_block: int = 1024
-) -> DataFrame:
+def meta_block_prune(assignments: DataFrame) -> DataFrame:
     """Meta-blocking: CBS edge weighting + weighted node pruning over a
     block collection (Papadakis et al., "Meta-Blocking: Taking
     Entity Resolution to the Next Level", TKDE 2014). Redundancy in a
@@ -415,7 +416,7 @@ def meta_block_prune(
     cross-multiplication (``w·deg ≥ wsum``), so there is no division
     anywhere and both engines agree at the boundary.
 
-    Scale shape: block purging (size > ``max_block`` dropped — canonical
+    Scale shape: block purging (size > ``META_MAX_BLOCK`` dropped — canonical
     meta-blocking block-cleaning, same cap-and-report discipline as
     ``pairs.candidate_pairs``) bounds the within-block self-join; the CBS
     weight is a map-side-combinable pair-keyed count; node statistics are
@@ -429,7 +430,7 @@ def meta_block_prune(
 
     a = assignments.withColumn(
         "bs", F.count("*").over(Window.partitionBy("block_key"))
-    ).filter((F.col("bs") >= 2) & (F.col("bs") <= max_block))
+    ).filter((F.col("bs") >= 2) & (F.col("bs") <= META_MAX_BLOCK))
     left = a.select("block_key", F.col("record_id").alias("record_id_a"))
     right = a.select("block_key", F.col("record_id").alias("record_id_b"))
     edges = (
@@ -470,16 +471,13 @@ def canopy_assign(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    df_min: int = 2,
-    df_max: int = 20,
-    t1: int = 2,
 ) -> DataFrame:
     """Deterministic canopy blocking (McCallum/Nigam/Ungar KDD 2000,
     distributed-relational recast): overlapping canopies grown around
     ELECTED centers under a cheap token-overlap metric, with the classic
     two-radius contract — a LOOSE membership (>= 1 shared informative
     token, the T2 radius: the record must be compared against this
-    canopy) and a TIGHT core (>= ``t1`` shared tokens, the T1 radius:
+    canopy) and a TIGHT core (>= 2 shared tokens, the T1 radius:
     the record needs no other canopy). The original algorithm picks
     centers by sequential random draws, which no distributed engine can
     reproduce; here each informative token elects the minimum record id
@@ -489,9 +487,9 @@ def canopy_assign(
     (/root/reference/elq/index/faiss_indexer.py:71-91: IVF cells =
     canopies under inner-product) for the lexical path.
 
-    "Informative" = document frequency in [``df_min``, ``df_max``]:
+    "Informative" = document frequency in [2, ``CANOPY_DF_MAX``]:
     df-1 tokens elect only singleton canopies (no pairs — dropped),
-    df > ``df_max`` tokens are stopword-like and would produce the mega
+    df > ``CANOPY_DF_MAX`` tokens are stopword-like and would produce the mega
     blocks the cap-and-report discipline exists to prevent.
 
     Exactness: counts and a min-election only — no floats, no order
@@ -499,7 +497,7 @@ def canopy_assign(
 
     Scale notes (100 TB): explode → token-keyed df agg (map-side
     combinable) → min-election on the same key layout → assignment join
-    fan-out bounded by ``df_max`` per token → (center, record)-keyed
+    fan-out bounded by ``CANOPY_DF_MAX`` per token → (center, record)-keyed
     partial agg. Every step is keyed; no window, no driver collection,
     no all-pairs.
 
@@ -509,7 +507,7 @@ def canopy_assign(
         df[id_col].alias("record_id"), F.explode(tokens(df[text_col])).alias("tok")
     )
     dfreq = tk.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    kept = dfreq.filter((F.col("df") >= df_min) & (F.col("df") <= df_max)).select(
+    kept = dfreq.filter((F.col("df") >= 2) & (F.col("df") <= CANOPY_DF_MAX)).select(
         "tok"
     )
     ktk = tk.join(kept, "tok")
@@ -522,7 +520,7 @@ def canopy_assign(
             "center_id",
             "record_id",
             "n_shared",
-            (F.col("n_shared") >= t1).alias("is_tight"),
+            (F.col("n_shared") >= 2).alias("is_tight"),
         )
     )
 
@@ -531,14 +529,13 @@ def block_filter_top_r(
     blocks: DataFrame,
     block_col: str = "block_key",
     id_col: str = "record_id",
-    r: int = 3,
 ) -> DataFrame:
     """Block filtering (Papadakis et al., "Comparative analysis of
     approximate blocking techniques for entity resolution", PVLDB 2016):
-    every record keeps only its ``r`` SMALLEST blocks — small blocks are
-    the most discriminative, and dropping a record from a mega block
-    removes |block|-1 candidate comparisons at the cost of recall only if
-    NO small block covers the pair. This is the per-record counterpart of
+    every record keeps only its ``BLOCK_FILTER_R`` SMALLEST blocks — small
+    blocks are the most discriminative, and dropping a record from a mega
+    block removes |block|-1 candidate comparisons at the cost of recall only
+    if NO small block covers the pair. This is the per-record counterpart of
     the per-edge WNP pruning in ``meta_block_prune``; pipelines run it
     between block building and pair generation.
 
@@ -563,7 +560,7 @@ def block_filter_top_r(
         blocks.join(sizes, block_col)
         .filter(F.col("block_size") >= 2)
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= r)
+        .filter(F.col("rank") <= BLOCK_FILTER_R)
         .select(
             id_col,
             block_col,
@@ -577,10 +574,10 @@ def dynamic_blocking(
     blocks: DataFrame,
     block_col: str = "block_key",
     id_col: str = "record_id",
-    cap: int = 32,
 ) -> DataFrame:
     """Size-capped dynamic blocking (McNeill, Kardes & Borthwick, "Dynamic
-    record blocking", QDB 2012): blocks within the cap are accepted as-is;
+    record blocking", QDB 2012): blocks within the cap (``DYNAMIC_CAP``)
+    are accepted as-is;
     every OVERSIZED block is split by extending its key with each member's
     other blocking tokens, and the sub-blocks are re-measured. One split
     round is unrolled (the paper recurses until all blocks fit; at one
@@ -607,6 +604,7 @@ def dynamic_blocking(
     exceeds it. Singletons at either depth generate no comparisons and
     are dropped (block purging).
     """
+    cap = DYNAMIC_CAP
     b1 = blocks.select(F.col(id_col).alias("rid"), F.col(block_col).alias("k"))
     s1 = b1.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("sz"))
     ok1 = s1.filter((F.col("sz") >= 2) & (F.col("sz") <= cap)).select(
@@ -723,9 +721,6 @@ def suffix_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    min_len: int = 5,
-    max_suffixes: int = 12,
-    max_block: int = 50,
 ) -> DataFrame:
     """Suffix-array blocking (Aizawa & Oyama 2005): two records become
     candidates when any sufficiently-long SUFFIX of their space-stripped
@@ -734,18 +729,19 @@ def suffix_pairs(
     the string head), which token/phonetic/shingle blocks handle poorly
     because the intact evidence is the string TAIL.
 
-    Keys: suffixes starting at positions 1..min(len − min_len + 1,
-    ``max_suffixes``) — the length floor kills degenerate short keys, the
-    position cap bounds the per-record fan-out (the 100-TB lever: blow-up
-    is ≤ max_suffixes×, independent of string length). Strings shorter
-    than ``min_len`` fall back to the whole string as their single key
+    Keys: suffixes starting at positions 1..min(len − SUFFIX_MIN_LEN + 1,
+    ``SUFFIX_MAX_KEYS``) — the length floor kills degenerate short keys, the
+    position cap bounds the per-record fan-out (the 100-TB lever: blow-up is
+    ≤ SUFFIX_MAX_KEYS×, independent of string length). Strings shorter than
+    ``SUFFIX_MIN_LEN`` fall back to the whole string as their single key
     (the token_pair_blocks t1: convention). Suffixes of one record are
     distinct by construction (distinct start ⇒ distinct length).
 
     Scale shape: explode → one map-side-combinable groupBy for block
-    sizes, cap-and-report (blocks > ``max_block`` dropped whole — shared
-    long tails like a common company suffix would otherwise go quadratic),
-    then a key equi-join bounded by max_block²/2 per block. Unlike
+    sizes, cap-and-report (blocks > ``SUFFIX_MAX_BLOCK`` dropped whole —
+    shared long tails like a common company suffix would otherwise go
+    quadratic), then a key equi-join bounded by SUFFIX_MAX_BLOCK²/2 per
+    block. Unlike
     phonetic_pairs the size table is NOT broadcast: suffix cardinality is
     O(total chars), so the cap filter stays a shuffle equi-join and AQE
     picks the strategy. Nested suffixes of the same pair collapse into one
@@ -764,8 +760,8 @@ def suffix_pairs(
         "record_id",
         F.explode(
             F.expr(
-                f"transform(sequence(1, greatest(least(length(_s) - {min_len}"
-                f" + 1, {max_suffixes}), 1)), i -> substring(_s, i, {1 << 18}))"
+                f"transform(sequence(1, greatest(least(length(_s) - {SUFFIX_MIN_LEN}"
+                f" + 1, {SUFFIX_MAX_KEYS}), 1)), i -> substring(_s, i, {1 << 18}))"
             )
         ).alias("sfx"),
     )
@@ -774,7 +770,7 @@ def suffix_pairs(
     )
     capped = sfx.join(
         sizes.filter(
-            (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
+            (F.col("block_size") >= 2) & (F.col("block_size") <= SUFFIX_MAX_BLOCK)
         ),
         "sfx",
     )
@@ -795,13 +791,12 @@ def blocking_budget_frontier(
     records: DataFrame,
     id_col: str,
     text_col: str,
-    pair_budget: int = 1_000_000,
 ) -> DataFrame:
     """Pair-budget frontier for df-capped token blocking: for every
     candidate document-frequency cap (each observed df value), the
     cumulative token types kept and candidate pairs generated if the
     cap were set there — Σ_{df ≤ cap} C(df,2)·(#tokens at df). The
-    largest cap still under ``pair_budget`` is the data-driven setting
+    largest cap still under ``PAIR_BUDGET`` is the data-driven setting
     the df-aware blocker should run with (the planning readout behind
     dynamic blocking's fixed cap: budget first, cap derived).
 
@@ -847,7 +842,5 @@ def blocking_budget_frontier(
         "n_token_types",
         F.col("cum_token_types").cast("long"),
         F.col("cum_pairs").cast("long"),
-        (F.col("cum_pairs") <= F.lit(int(pair_budget))).alias(
-            "within_budget"
-        ),
+        (F.col("cum_pairs") <= F.lit(PAIR_BUDGET)).alias("within_budget"),
     )

@@ -105,6 +105,9 @@ def _is_star_forest(edges: DataFrame) -> bool:
 # superstep path unchanged.
 LOCAL_CC_THRESHOLD = 2_000_000
 
+# supersteps of integer_pagerank
+PAGERANK_ITERS = 3
+
 
 def _local_cc(cur: DataFrame) -> DataFrame:
     """Single-task min-root union-find over a small canonical edge set.
@@ -204,15 +207,16 @@ def _local_cc(cur: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame, max_iter: int = 20,
+    edges: DataFrame,
     local_threshold: int = LOCAL_CC_THRESHOLD,
     edges_canonical: bool = False,
 ) -> DataFrame:
     """edges(src, dst) → assignments(record_id, cluster_id).
 
     Converges when the edge set is a star forest (every u points at its
-    component minimum). Each superstep localCheckpoints to cut lineage
-    (plan blowup is the classic iterative-Spark failure mode).
+    component minimum), within at most 20 supersteps. Each superstep
+    localCheckpoints to cut lineage (plan blowup is the classic
+    iterative-Spark failure mode).
 
     The convergence test is the DIRECT star-forest property of the current
     edge set (``_is_star_forest``), tested before each superstep — unlike
@@ -220,9 +224,8 @@ def connected_components(
     superstep to observe a fixed point, so a graph that converges in one
     superstep costs 1 superstep + 2 tests instead of 2 supersteps + 2
     tests (~6 shuffles saved — pure serial fraction, the term that caps
-    N→4N scaling efficiency). Already-forest inputs (common in incremental
-    micro-batches) exit before any superstep; the per-round test is one
-    cheap job.
+    N→4N scaling efficiency). Already-forest inputs exit before any
+    superstep; the per-round test is one cheap job.
     """
     if edges_canonical:
         # Caller guarantees DISTINCT, self-loop-free pairs with src < dst
@@ -241,7 +244,7 @@ def connected_components(
         # canonical set may go local — it provably contains every
         # edge-connected node, which mid-iteration sets need not.
         return _local_cc(cur)
-    for _ in range(max_iter):
+    for _ in range(20):
         if _is_star_forest(cur):
             break
         cur = _small_star(_large_star(cur)).localCheckpoint()
@@ -514,8 +517,9 @@ def triangle_census(edges: DataFrame) -> DataFrame:
     )
 
 
-def integer_pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
-    """Fixed-iteration PageRank in exact integer micro-units over the
+def integer_pagerank(edges: DataFrame) -> DataFrame:
+    """``PAGERANK_ITERS``-iteration PageRank in exact integer micro-units
+    over the
     undirected match graph (damping 0.85; no dangling redistribution —
     every node of an edge list has degree >= 1).
 
@@ -541,7 +545,7 @@ def integer_pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     both = _bidirectional(edges)
     deg = both.groupBy("u").agg(F.count("*").alias("deg"))
     ranks = deg.select(F.col("u").alias("n"), F.lit(1_000_000).cast("long").alias("r"))
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             both.join(ranks.withColumnRenamed("n", "u"), "u")
             .join(deg, "u")
@@ -562,10 +566,10 @@ def integer_pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
     )
 
 
-def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
-    """Bounded k-core peeling of the match graph: repeatedly drop nodes
-    whose degree (within the currently surviving subgraph) is below ``k``,
-    for a fixed number of rounds, recording WHICH round evicted each node.
+def kcore_peel(edges: DataFrame) -> DataFrame:
+    """Bounded 3-core peeling of the match graph: repeatedly drop nodes
+    whose degree (within the currently surviving subgraph) is below 3, for
+    3 rounds, recording WHICH round evicted each node.
 
     The third leg of the structural-triage family: ``integer_pagerank``
     ranks hub suspects, ``triangle_census`` measures corpus-wide closure,
@@ -580,8 +584,8 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
 
     Bounded rounds (not run-to-fixpoint) keep the oracle expressible as an
     unrolled CTE chain (same contract as ``integer_pagerank``); peeling
-    converges geometrically in practice, and survivors of round R with
-    degree < k are visible in core_deg for anyone who needs the exact core.
+    converges geometrically in practice, and survivors of round 3 with
+    degree < 3 are visible in core_deg for anyone who needs the exact core.
 
     Exactness: degrees are integer counts; no division, no floats.
     Scale notes (100 TB): each round is one groupBy-degree shuffle plus two
@@ -593,7 +597,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
 
     edges: canonical undirected pairs (u, v), u != v, deduped.
     Returns (record_id, deg0, removed_round, core_deg): initial degree,
-    eviction round in 1..rounds (0 = survived), and the node's degree
+    eviction round in 1..3 (0 = survived), and the node's degree
     among fellow survivors (0 for evicted nodes).
     """
     both = _bidirectional(edges)
@@ -602,12 +606,12 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     cur = both
     deg = deg0.select("u", F.col("deg0").alias("deg"))
     removed = None
-    for r in range(1, rounds + 1):
-        dead = deg.filter(F.col("deg") < k).select(
+    for r in range(1, 4):
+        dead = deg.filter(F.col("deg") < 3).select(
             "u", F.lit(r).cast("long").alias("removed_round")
         )
         removed = dead if removed is None else removed.unionByName(dead)
-        alive = deg.filter(F.col("deg") >= k).select("u")
+        alive = deg.filter(F.col("deg") >= 3).select("u")
         cur = cur.join(alive, "u", "left_semi").join(
             alive.withColumnRenamed("u", "v"), "v", "left_semi"
         ).localCheckpoint()
@@ -631,10 +635,10 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     )
 
 
-def bfs_seed_distance(edges: DataFrame, rounds: int = 3) -> DataFrame:
+def bfs_seed_distance(edges: DataFrame) -> DataFrame:
     """Multi-source BFS hop distance from local-minimum seeds: a node is a
     seed iff its id is smaller than every neighbor's, and every other node
-    gets the hop count to its nearest seed, bounded at ``rounds``.
+    gets the hop count to its nearest seed, bounded at 3.
 
     The fourth superstep primitive in the match-graph triage family —
     connected components (star contraction), PageRank (full relaxation),
@@ -645,7 +649,7 @@ def bfs_seed_distance(edges: DataFrame, rounds: int = 3) -> DataFrame:
     (/root/reference/blink/main_dense.py:479-498) cannot see. Every
     connected component contains its global-minimum node, which is a local
     minimum, so every node has a seed in its component — ``bfs_dist = -1``
-    genuinely means "further than ``rounds`` hops", not "no seed".
+    genuinely means "further than 3 hops", not "no seed".
 
     Exactness: hop counts are set-deterministic integers (min distance to
     the nearest seed); no floats, no tie-breaks.
@@ -656,8 +660,8 @@ def bfs_seed_distance(edges: DataFrame, rounds: int = 3) -> DataFrame:
     a flat union of materialized frontiers, not re-derived lineage.
 
     edges: canonical undirected pairs (u, v), u != v, deduped.
-    Returns (record_id, bfs_dist): 0 for seeds, 1..rounds for reached
-    nodes, -1 for nodes beyond ``rounds`` hops from every seed.
+    Returns (record_id, bfs_dist): 0 for seeds, 1..3 for reached
+    nodes, -1 for nodes beyond 3 hops from every seed.
     """
     both = _bidirectional(edges)
     nbr_min = both.groupBy("u").agg(F.min("v").alias("mn"))
@@ -665,7 +669,7 @@ def bfs_seed_distance(edges: DataFrame, rounds: int = 3) -> DataFrame:
 
     visited = seeds.select("u", F.lit(0).cast("long").alias("bfs_dist"))
     frontier = seeds
-    for r in range(1, rounds + 1):
+    for r in range(1, 4):
         nxt = (
             both.join(frontier, "u", "left_semi")
             .select(F.col("v").alias("u"))
@@ -688,7 +692,7 @@ def bfs_seed_distance(edges: DataFrame, rounds: int = 3) -> DataFrame:
     )
 
 
-def link_prediction(edges: DataFrame, min_common: int = 2) -> DataFrame:
+def link_prediction(edges: DataFrame) -> DataFrame:
     """Common-neighbor link prediction over the match graph: every
     NON-adjacent pair at distance 2 ranked by shared-neighbor support —
     the classic "suggest the missing match" pass run after pairwise
@@ -706,15 +710,15 @@ def link_prediction(edges: DataFrame, min_common: int = 2) -> DataFrame:
 
     Scale notes (100 TB): the wedge self-join is keyed on the shared
     neighbor — cost is sum over nodes of C(deg, 2), the same bound as the
-    triangle census, kept polynomially small by the blocking cap-and-
-    report discipline upstream; ``min_common`` prunes the candidate set
-    before the degree joins. The anti-join against existing edges is an
+    triangle census, kept polynomially small by the blocking cap-and-report
+    discipline upstream; requiring 2 common neighbors prunes the candidate
+    set before the degree joins. The anti-join against existing edges is an
     equi-join on the canonical pair key. Nothing touches the driver.
 
     edges: canonical undirected pairs (u, v), u != v, deduped (either
     orientation — adjacency is symmetrized internally).
     Returns (record_id_a, record_id_b, common_neighbors, jaccard_ppm)
-    with record_id_a < record_id_b, common_neighbors >= min_common.
+    with record_id_a < record_id_b, common_neighbors >= 2.
     """
     both = _bidirectional(edges)
     deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -724,7 +728,7 @@ def link_prediction(edges: DataFrame, min_common: int = 2) -> DataFrame:
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(F.count(F.lit(1)).cast("long").alias("common_neighbors"))
-        .filter(F.col("common_neighbors") >= min_common)
+        .filter(F.col("common_neighbors") >= 2)
     )
     existing = both.filter(F.col("u") < F.col("v")).select(
         F.col("u").alias("a"), F.col("v").alias("b")
@@ -747,7 +751,7 @@ def link_prediction(edges: DataFrame, min_common: int = 2) -> DataFrame:
     )
 
 
-def resource_allocation(edges: DataFrame, min_common: int = 2) -> DataFrame:
+def resource_allocation(edges: DataFrame) -> DataFrame:
     """Resource-Allocation link prediction (Zhou, Lü & Zhang, EPJ B 2009)
     over the match graph: like ``link_prediction`` it surfaces non-adjacent
     distance-2 pairs, but each common neighbor ``w`` contributes ``1/deg(w)``
@@ -768,7 +772,7 @@ def resource_allocation(edges: DataFrame, min_common: int = 2) -> DataFrame:
 
     edges: canonical undirected pairs (u, v), u != v, deduped.
     Returns (record_id_a, record_id_b, common_neighbors, ra_nano) with
-    record_id_a < record_id_b, common_neighbors >= min_common.
+    record_id_a < record_id_b, common_neighbors >= 2.
     """
     both = _bidirectional(edges)
     deg = both.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -784,7 +788,7 @@ def resource_allocation(edges: DataFrame, min_common: int = 2) -> DataFrame:
             .cast("long")
             .alias("ra_nano"),
         )
-        .filter(F.col("common_neighbors") >= min_common)
+        .filter(F.col("common_neighbors") >= 2)
     )
     existing = both.filter(F.col("u") < F.col("v")).select(
         F.col("u").alias("a"), F.col("v").alias("b")
@@ -923,14 +927,14 @@ def threshold_dendrogram(
     a_col: str = "record_id_a",
     b_col: str = "record_id_b",
     score_col: str = "jaccard",
-    thresholds: tuple[float, ...] = (0.5, 0.65, 0.8),
 ) -> DataFrame:
     """Multi-threshold cluster hierarchy — the dendrogram cut sweep a
-    linkage pipeline runs to CHOOSE its match threshold (dedupe's cluster-
-    threshold sweep; the cluster-level companion of the pairwise PR curve):
-    for each candidate threshold, connected components over the edges at or
-    above it, summarized as cluster count / clustered-record mass / largest
-    cluster. Reading the three rows top-down shows exactly where chains
+    linkage
+    pipeline runs to CHOOSE its match threshold (dedupe's cluster-threshold
+    sweep; the cluster-level companion of the pairwise PR curve): for each
+    candidate threshold (0.5, 0.65, 0.8), connected components over the edges
+    at or above it, summarized as cluster count / clustered-record mass /
+    largest cluster. Reading the three rows top-down shows exactly where chains
     start gluing blocks together (max_cluster_size jumping while n_clusters
     falls is the over-merge signature).
 
@@ -948,7 +952,7 @@ def threshold_dendrogram(
     (threshold_ppm, n_clusters, n_records, max_cluster_size).
     """
     out = None
-    for t in thresholds:
+    for t in (0.5, 0.65, 0.8):
         edges = scored.filter(F.col(score_col) >= F.lit(t)).select(
             F.col(a_col).alias("src"), F.col(b_col).alias("dst")
         )
@@ -1126,11 +1130,11 @@ def nmi(assignments: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) with a fully
     deterministic update: each round every node adopts the label that is
     MOST FREQUENT among its neighbors, ties broken by the smallest label.
-    Labels start as the node's own id; ``rounds`` fixed sweeps (no
+    Labels start as the node's own id; 3 fixed sweeps (no
     convergence test — bounded work, reproducible output).
 
     Community detection for ER triage that is deliberately NOT connected
@@ -1156,7 +1160,7 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     labels = both.select(F.col("u").alias("n")).distinct().withColumn(
         "lbl", F.col("n")
     )
-    for _ in range(rounds):
+    for _ in range(3):
         cnt = (
             both.join(labels.withColumnRenamed("n", "v"), "v")
             .groupBy("u", "lbl")

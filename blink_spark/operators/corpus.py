@@ -35,6 +35,27 @@ from pyspark.sql import functions as F
 
 from blink_spark.functions.text import normalize_text, tokens
 
+# curation_pipeline keeps a document when its md5 sample draw (ppm) is
+# below CURATION_SAMPLE_PPM
+CURATION_SAMPLE_PPM = 800_000
+# top-V vocabulary vocab_coverage elects
+VOCAB_SIZE = 16
+# pack_sequences: tokens per training sequence, shards per stratum
+PACK_BUDGET = 128
+PACK_SHARDS = 4
+# mix_plan's total training-token budget
+MIX_BUDGET_TOKENS = 25_000
+# dsir_weights' bigram hash buckets
+DSIR_BUCKETS = 1024
+# domain_keyness ignores tokens in fewer than KEYNESS_MIN_DF documents
+KEYNESS_MIN_DF = 3
+# heaps_fit samples at most HEAPS_MAX_POINTS points
+HEAPS_MAX_POINTS = 64
+# zipf_fit fits the ZIPF_TOP_R most frequent tokens
+ZIPF_TOP_R = 100
+# chunk_windows' chunk length, in tokens
+CHUNK_SIZE = 16
+
 
 def _hex_long(col: Column, n_hex: int) -> Column:
     """First ``n_hex`` hex digits of an md5 as a non-negative long
@@ -131,9 +152,9 @@ def repetition_features(
 
 
 def tfidf_top_terms(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Per-document top-``k`` salient terms by a tf-idf-style integer rank.
+    """Per-document top-3 salient terms by a tf-idf-style integer rank.
 
     Rank order is (tf desc, df asc, term asc): a term beats another when it
     is more frequent in the doc, then rarer in the corpus, then smaller
@@ -154,7 +175,7 @@ def tfidf_top_terms(
     return (
         tc.join(df_tbl, "tok")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 3)
         .select("doc_id", F.col("tok").alias("term"), "tf", "df", "rank")
     )
 
@@ -163,13 +184,10 @@ def curation_pipeline(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_tokens: int = 5,
-    min_ttr: float = 0.3,
-    max_dup5: float = 0.5,
-    sample_ppm: int = 800_000,
 ) -> DataFrame:
     """Composed training-data curation — the canonical 100 TB cleaning job:
-    length floor AND repetition floor (Gopher-style) AND exact-duplicate
+    length floor (>= 5 tokens) AND repetition floor (Gopher-style: type-token
+    ratio >= 0.3, duplicated-5-gram fraction <= 0.5) AND exact-duplicate
     keeper election AND deterministic hash downsampling, in one plan.
 
     Returns the kept documents with their quality features
@@ -200,11 +218,11 @@ def curation_pipeline(
         base.withColumn("keeper", keeper)
         .join(feats, "doc_id")
         .filter(
-            (F.col("n_toks") >= min_tokens)
-            & (F.col("ttr") >= min_ttr)
-            & (F.col("dup_5gram_frac") <= max_dup5)
+            (F.col("n_toks") >= 5)
+            & (F.col("ttr") >= 0.3)
+            & (F.col("dup_5gram_frac") <= 0.5)
             & (F.col("doc_id") == F.col("keeper"))
-            & (F.col("smp") < sample_ppm)
+            & (F.col("smp") < CURATION_SAMPLE_PPM)
         )
         .select("doc_id", "n_toks", "ttr", "dup_5gram_frac")
     )
@@ -214,7 +232,6 @@ def chunk_windows(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    size: int = 16,
 ) -> DataFrame:
     """Split each document into fixed-size token chunks (training-sequence
     construction). Returns (doc_id, chunk_idx, start_pos, n_chunk_toks,
@@ -226,6 +243,7 @@ def chunk_windows(
     makes the output joinable against chunk-level dedup/decontamination
     without re-materializing chunk text.
     """
+    size = CHUNK_SIZE
     toks = F.split(normalize_text(text_col), " ")
     base = docs.select(F.col(id_col).alias("doc_id"), toks.alias("tk"))
     n_chunks_last = ((F.size("tk") - F.lit(1)) / F.lit(size)).cast("int")
@@ -249,9 +267,8 @@ def vocab_coverage(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    vocab_size: int = 16,
 ) -> DataFrame:
-    """Tokenizer-coverage analysis: elect the top-``vocab_size`` corpus
+    """Tokenizer-coverage analysis: elect the top-``VOCAB_SIZE`` corpus
     vocabulary (by total count desc, token asc — deterministic ties), then
     report each document's out-of-vocabulary token count and fraction.
 
@@ -265,7 +282,7 @@ def vocab_coverage(
     counts = t.groupBy("tok").agg(F.count("*").alias("c"))
     vocab = (
         counts.orderBy(F.col("c").desc(), F.col("tok").asc())
-        .limit(vocab_size)
+        .limit(VOCAB_SIZE)
         .select("tok", F.lit(1).alias("in_vocab"))
     )
     return (
@@ -369,17 +386,16 @@ def pack_sequences(
     id_col: str = "doc_id",
     text_col: str = "text",
     strata_col: str = "source",
-    budget: int = 128,
-    n_shards: int = 4,
 ) -> DataFrame:
     """Greedy next-fit sequence packing: within each (stratum, shard), walk
     documents in doc_id order and append each to the current training
-    sequence until its token budget would overflow, then open a new one.
+    sequence until its token budget (``PACK_BUDGET``) would overflow, then
+    open a new one.
     Returns (doc_id, stratum, shard, seq_id, n_toks).
 
     Packing is inherently sequential (the bin a doc lands in depends on every
     prior doc), so it runs as a grouped ``applyInPandas`` — the standard
-    hierarchical-packing factoring: shard BOUNDS the group (``n_shards``
+    hierarchical-packing factoring: shard BOUNDS the group (``PACK_SHARDS``
     scales with corpus size so each group fits one task), and packing quality
     is unaffected because next-fit never looks across bins anyway. The only
     shuffle is the (stratum, shard) grouping; state per task is O(1).
@@ -388,6 +404,7 @@ def pack_sequences(
     """
     import pandas as pd
 
+    budget, n_shards = PACK_BUDGET, PACK_SHARDS
     sid = F.col(id_col).cast("string")
     base = docs.select(
         F.col(id_col).alias("doc_id"),
@@ -420,13 +437,12 @@ def chunk_dedup_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    size: int = 16,
 ) -> DataFrame:
     """Cross-document span-level exact dedup (the "Deduplicating Training
     Data Makes Language Models Better" finding, at fixed-chunk granularity):
-    per document, how many of its ``size``-token chunks are NOT the corpus's
-    first occurrence of that chunk content — the repeated-span mass a
-    span-level deduper would cut, measured without cutting anything.
+    per document, how many of its ``CHUNK_SIZE``-token chunks are NOT the
+    corpus's first occurrence of that chunk content — the repeated-span mass
+    a span-level deduper would cut, measured without cutting anything.
 
     First occurrence = the smallest (doc_id, chunk_idx), packed into one
     BIGINT (``doc_id * 2^20 + chunk_idx``) so a plain integer ``min`` window
@@ -440,7 +456,7 @@ def chunk_dedup_stats(
     doc-keyed aggregation. No joins, no collect; skew is bounded by the most
     repeated chunk, which is exactly the thing being measured.
     """
-    ch = chunk_windows(docs, id_col, text_col, size)
+    ch = chunk_windows(docs, id_col, text_col)
     pack = F.when(
         F.col("chunk_idx") < F.lit(1 << 20),
         F.col("doc_id") * F.lit(1 << 20) + F.col("chunk_idx"),
@@ -474,12 +490,12 @@ def mix_plan(
     id_col: str = "doc_id",
     text_col: str = "text",
     strata_col: str = "source",
-    budget_tokens: int = 25_000,
 ) -> DataFrame:
     """Domain-mixing plan (the DoReMi-style reweighting step, uniform
-    target): given a total training token budget, compute each stratum's
-    deterministic sampling rate so every stratum contributes an equal share,
-    capped at keep-everything for strata smaller than their share.
+    target):
+    given a total training token budget (``MIX_BUDGET_TOKENS``), compute each
+    stratum's deterministic sampling rate so every stratum contributes an equal
+    share, capped at keep-everything for strata smaller than their share.
 
     Returns (stratum, n_docs, n_toks, rate_ppm, exp_toks) where
     ``rate_ppm = min(1e6, (budget div n_strata) * 1e6 div n_toks)`` and
@@ -511,14 +527,12 @@ def mix_plan(
         )
     )
     n_strata = per.agg(F.count("*").alias("ns"))
-    share = F.expr(f"{budget_tokens} div ns")
+    share = F.expr(f"{MIX_BUDGET_TOKENS} div ns")
     rate = (
         F.when(share >= F.col("n_toks"), F.lit(1_000_000).cast("long"))
         .when(
             share <= F.lit(1 << 43),
-            F.expr(
-                f"(({budget_tokens} div ns) * 1000000) div greatest(n_toks, 1)"
-            ),
+            F.expr(f"(({MIX_BUDGET_TOKENS} div ns) * 1000000) div greatest(n_toks, 1)"),
         )
         .otherwise(
             F.raise_error(
@@ -662,10 +676,9 @@ def decontaminate(
     eval_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n: int = 4,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
-    ``n``-gram with a held-out evaluation set.
+    4-gram with a held-out evaluation set.
 
     Returns (doc_id, n_shared_grams) for contaminated corpus docs. The eval
     gram set is broadcast — benchmark suites are small by construction
@@ -686,10 +699,10 @@ def decontaminate(
 
     grams = corpus.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(word_ngrams(text_col, n)).alias("gram"),
+        F.explode(word_ngrams(text_col, 4)).alias("gram"),
     )
     eval_grams = (
-        eval_docs.select(F.explode(word_ngrams(text_col, n)).alias("gram")).distinct()
+        eval_docs.select(F.explode(word_ngrams(text_col, 4)).alias("gram")).distinct()
     )
     return (
         grams.join(F.broadcast(eval_grams), "gram")
@@ -702,15 +715,13 @@ def stratified_sample(
     docs: DataFrame,
     id_col: str = "doc_id",
     strata_col: str = "source",
-    base_ppm: int = 250_000,
-    spread_ppm: int = 500_001,
 ) -> DataFrame:
     """Deterministic hash-based stratified sampling (domain mixing).
 
     Each row's sampling key is ``md5('smp:' || id) % 1e6`` — uniform, stable
     across runs and cluster sizes. Each stratum's keep-threshold (parts per
-    million) is ``base_ppm + md5('rate:' || stratum) % spread_ppm``, so every
-    stratum gets a deterministic rate in [base_ppm, base_ppm + spread_ppm)
+    million) is ``250000 + md5('rate:' || stratum) % 500001``, so every
+    stratum gets a deterministic rate in [250000, 750001) ppm
     without a hand-maintained rate table. Pure narrow projection + filter:
     no shuffle, no state, re-runnable on any subset with identical decisions
     (the property that makes hash sampling composable with incremental
@@ -719,11 +730,11 @@ def stratified_sample(
     sid = F.col(id_col).cast("string")
     bucket = _hex_long(F.md5(F.concat(F.lit("smp:"), sid)), 8) % F.lit(1_000_000)
     # 8 hex digits (2^32 range), not 4: a 4-digit window caps the hash at
-    # 65535 and `% spread_ppm` would never wrap for spreads above that,
+    # 65535 and `% 500001` would never wrap for spreads above that,
     # silently shrinking the documented rate range.
-    thr = F.lit(base_ppm) + _hex_long(
+    thr = F.lit(250_000) + _hex_long(
         F.md5(F.concat(F.lit("rate:"), F.col(strata_col))), 8
-    ) % F.lit(spread_ppm)
+    ) % F.lit(500_001)
     return (
         docs.withColumn("smp_bucket", bucket)
         .withColumn("keep_thr", thr)
@@ -847,7 +858,6 @@ def dsir_weights(
     is_target: Column,
     id_col: str = "doc_id",
     text_col: str = "text",
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): score
@@ -856,7 +866,7 @@ def dsir_weights(
     background — the standard way to up-sample domain-relevant web data
     into a training mix without a trained classifier.
 
-    Model: bigram occurrences hash into ``n_buckets`` buckets
+    Model: bigram occurrences hash into ``DSIR_BUCKETS`` buckets
     (md5-derived, engine-portable); each bucket's weight is the add-one-
     smoothed log-likelihood ratio
 
@@ -868,7 +878,7 @@ def dsir_weights(
 
     Shape at 100 TB: one doc-keyed window builds the bigram stream (the
     same shuffle the repetition/perplexity features ride); the model is a
-    ``n_buckets``-row aggregation (constant-size, broadcast back); totals
+    ``DSIR_BUCKETS``-row aggregation (constant-size, broadcast back); totals
     are a one-row scalar crossJoin. With the hashed model pre-trained the
     corpus side is a pure map + one doc-keyed partial agg — the property
     that makes DSIR run as a side pass over an ingest scan.
@@ -887,7 +897,7 @@ def dsir_weights(
                 _hex_long(
                     F.md5(F.concat(F.col("tok"), F.lit("\x1f"), F.col("nxt"))), 8
                 )
-                % F.lit(n_buckets)
+                % F.lit(DSIR_BUCKETS)
             ).alias("bucket"),
         )
         .join(flags, "doc_id")
@@ -906,14 +916,14 @@ def dsir_weights(
             F.floor(
                 F.log(
                     (F.col("ct") + F.lit(1)).cast("double")
-                    / (F.col("tt") + F.lit(n_buckets)).cast("double")
+                    / (F.col("tt") + F.lit(DSIR_BUCKETS)).cast("double")
                 )
                 * F.lit(1000000.0)
             ).cast("long")
             - F.floor(
                 F.log(
                     (F.col("cb") + F.lit(1)).cast("double")
-                    / (F.col("tb") + F.lit(n_buckets)).cast("double")
+                    / (F.col("tb") + F.lit(DSIR_BUCKETS)).cast("double")
                 )
                 * F.lit(1000000.0)
             ).cast("long")
@@ -1054,10 +1064,8 @@ def domain_keyness(
     domain_col: str = "source",
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_df: int = 3,
-    k: int = 10,
 ) -> DataFrame:
-    """Per-domain keyness table: the ``k`` tokens most over-represented in
+    """Per-domain keyness table: the 10 tokens most over-represented in
     each domain relative to the whole corpus, by document-frequency lift —
     the domain-shift / data-mixing diagnostic a curation pipeline runs
     before deciding per-source sampling weights (which tokens make src X
@@ -1073,8 +1081,9 @@ def domain_keyness(
     (integer div throughout, nonnegative operands). ``excess_milli`` =
     observed-minus-expected in-domain df in milli-docs, same regime.
 
-    Tokens with global df < ``min_df`` are noise-suppressed. Rank order is
-    (lift_ppm desc, rate_in_ppm desc, token asc) — fully deterministic.
+    Tokens with global df < ``KEYNESS_MIN_DF`` are noise-suppressed. Rank
+    order is (lift_ppm desc, rate_in_ppm desc, token asc) — fully
+    deterministic.
 
     Scale notes (100 TB): distinct-token explode → (domain, token) partial
     agg; the global token table derives from it by a second partial agg on
@@ -1101,7 +1110,7 @@ def domain_keyness(
     n = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
     keyed = (
         a_tbl.join(t_tot, "tok")
-        .filter(F.col("t_tot") >= min_df)
+        .filter(F.col("t_tot") >= KEYNESS_MIN_DF)
         .join(F.broadcast(d_tot), "domain")
         .crossJoin(F.broadcast(n))
         .withColumn("rate_in_ppm", F.expr("(df_domain * 1000000) div d_tot"))
@@ -1120,7 +1129,7 @@ def domain_keyness(
     )
     return (
         keyed.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 10)
         .select(
             "domain",
             F.col("tok").alias("term"),
@@ -1137,16 +1146,14 @@ def stratified_split(
     docs: DataFrame,
     id_col: str = "doc_id",
     strata_col: str = "source",
-    train_pct: int = 80,
-    val_pct: int = 10,
 ) -> DataFrame:
     """EXACT deterministic train/val/test split, stratified per stratum —
     the eval-hygiene counterpart of ``stratified_sample``: sampling tunes
     the corpus mix, this pins the holdout so no stratum leaks train rows
     into test when the corpus regenerates. Rows are ranked inside each
     stratum by ``md5('split:' || id)`` (a stable total order independent
-    of ingestion order and cluster size); the first ``train_pct`` percent
-    by rank go to train, the next ``val_pct`` to val, the rest to test.
+    of ingestion order and cluster size); the first 80 percent by rank go
+    to train, the next 10 to val, the rest to test.
     Boundaries are exact integer comparisons (``rank * 100 <= n * pct``),
     so per-stratum counts are the floor-exact quotas, not rates in
     expectation — a 9-row stratum still yields a non-empty test split.
@@ -1174,11 +1181,9 @@ def stratified_split(
         "doc_id",
         "stratum",
         "split_rank",
-        F.when(
-            F.col("split_rank") * 100 <= F.col("n") * train_pct, F.lit("train")
-        )
+        F.when(F.col("split_rank") * 100 <= F.col("n") * 80, F.lit("train"))
         .when(
-            F.col("split_rank") * 100 <= F.col("n") * (train_pct + val_pct),
+            F.col("split_rank") * 100 <= F.col("n") * 90,
             F.lit("val"),
         )
         .otherwise(F.lit("test"))
@@ -1336,7 +1341,6 @@ def heaps_fit(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_points: int = 64,
 ) -> DataFrame:
     """Heaps'-law vocabulary-growth fit (Heaps 1978): V(N) ≈ K·N^β, the
     least-squares slope of ln(vocab-so-far) on ln(tokens-so-far) over
@@ -1351,8 +1355,8 @@ def heaps_fit(
     and both cumulative curves (tokens, vocabulary) plus the doc
     sequence number come from ONE ``partitioned_running_sums`` pass —
     one range shuffle, no single-task global window. Checkpoints are
-    every ceil(n/max_points)-th document, so the fit always runs on at
-    most ``max_points`` points.
+    every ceil(n/HEAPS_MAX_POINTS)-th document, so the fit always runs on
+    at most ``HEAPS_MAX_POINTS`` points.
 
     Overflow bound: ln values are floor(ln·1000) milli-nats ≤ 41,447
     for any corpus under e^41.4 ≈ 1e18 tokens, so the binding
@@ -1394,7 +1398,7 @@ def heaps_fit(
         {"tokens_so_far": "n_tok", "vocab_so_far": "new_v", "doc_seq": "one"},
     )
     n = per.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    step = f"(n_docs + {int(max_points) - 1}) div {int(max_points)}"
+    step = f"(n_docs + {HEAPS_MAX_POINTS - 1}) div {HEAPS_MAX_POINTS}"
     cp = (
         cum.crossJoin(F.broadcast(n))
         .filter(F.expr(f"doc_seq % ({step}) = 0"))
@@ -1432,12 +1436,12 @@ def zipf_fit(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    top_r: int = 100,
 ) -> DataFrame:
     """Zipf rank-frequency fit over the corpus vocabulary: the least-squares
-    slope of ln(freq) on ln(rank) for the ``top_r`` most frequent tokens —
-    natural language sits near −1; synthetic/boilerplate-heavy corpora
-    drift shallower, a one-number drift diagnostic next to domain_keyness.
+    slope of ln(freq) on ln(rank) for the ``ZIPF_TOP_R`` most frequent
+    tokens — natural language sits near −1; synthetic/boilerplate-heavy
+    corpora drift shallower, a one-number drift diagnostic next to
+    domain_keyness.
 
     Exactness: ln values are ``floor(ln(k)·1000)`` integer MILLI-nats
     (milli, not the usual micro, keeps every closed-form product inside
@@ -1458,7 +1462,7 @@ def zipf_fit(
         F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok")
     ).filter(F.col("tok") != "")
     counts = tok.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("freq"))
-    top = counts.orderBy(F.col("freq").desc(), F.col("tok").asc()).limit(top_r)
+    top = counts.orderBy(F.col("freq").desc(), F.col("tok").asc()).limit(ZIPF_TOP_R)
     w = Window.orderBy(F.col("freq").desc(), F.col("tok").asc())
     xy = top.select(
         F.floor(
@@ -1588,7 +1592,6 @@ def collocations(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_count: int = 5,
 ) -> DataFrame:
     """Collocation detection over adjacent token bigrams: lift =
     T·c_xy/(c_x·c_y) (the pointwise-mutual-information RATIO without the
@@ -1598,8 +1601,8 @@ def collocations(
     is chance co-occurrence — the phrase-mining readout a tokenizer/
     stopword pipeline consumes.
 
-    Deterministic output discipline: every bigram with count ≥
-    ``min_count`` is emitted (no top-k, no global sort — thresholds
+    Deterministic output discipline: every bigram with count ≥ 5 is
+    emitted (no top-k, no global sort — thresholds
     reproduce; a rank would need a single-task window). Staged lift:
     binding term 1e6·T·c_xy needs T·c_xy ≤ 9.2e12 — past that (hot
     bigram × trillion-token corpus) divide the denominator down first,
@@ -1631,7 +1634,7 @@ def collocations(
         a.join(b, ["d", "pos"])
         .groupBy("tok_a", "tok_b")
         .agg(F.count(F.lit(1)).cast("long").alias("n_bigram"))
-        .filter(F.col("n_bigram") >= int(min_count))
+        .filter(F.col("n_bigram") >= 5)
     )
     out = (
         bg.join(
@@ -1802,8 +1805,6 @@ def rake_keywords(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_phrase_len: int = 4,
-    min_occurrences: int = 2,
 ) -> DataFrame:
     """RAKE keyword extraction (Rose et al. 2010) — stopword-delimited
     candidate phrases scored by their words' degree/frequency ratio:
@@ -1812,7 +1813,7 @@ def rake_keywords(
     segmentation is PURELY relational: a per-doc running count of
     stopword positions numbers the phrase segments (no word-boundary
     regex — cross-engine \\b semantics stay out of the parity surface);
-    candidate phrases longer than ``max_phrase_len`` are dropped before
+    candidate phrases longer than 4 words are dropped before
     scoring (the RAKE convention — degenerate runs otherwise dominate
     degree).
 
@@ -1820,7 +1821,7 @@ def rake_keywords(
     freq(w) = occurrence count, word score = (1000·deg) div freq,
     phrase score = Σ word scores — identical for identical phrase text,
     so the final text-keyed collapse takes max = min. Deterministic
-    threshold (``min_occurrences``) instead of top-k.
+    threshold (2 occurrences) instead of top-k.
 
     Scale notes: one doc-keyed window (the sessionize layout), phrase
     and vocabulary partial aggs, a vocabulary-keyed score join back —
@@ -1859,7 +1860,7 @@ def rake_keywords(
                 " ",
             ).alias("phrase"),
         )
-        .filter(F.col("plen") <= int(max_phrase_len))
+        .filter(F.col("plen") <= 4)
     )
     wk = words.join(ph.select("d", "seg", "plen"), ["d", "seg"])
     ws = wk.groupBy("tok").agg(
@@ -1882,5 +1883,5 @@ def rake_keywords(
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
             F.max("score_milli").cast("long").alias("score_milli"),
         )
-        .filter(F.col("n_occurrences") >= int(min_occurrences))
+        .filter(F.col("n_occurrences") >= 2)
     )

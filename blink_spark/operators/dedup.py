@@ -21,17 +21,30 @@ from blink_spark.operators.scoring import match_edges
 # up to 2^21 = 2M normalized chars; h < 2^32, so pack < 2^53 (exact in BIGINT
 # on both engines, and even in a double — the DuckDB-oracle safety margin).
 WINNOW_POS_BITS = 21
+# winnowing geometry: WINNOW_K-char grams, windows of WINNOW_W grams
+WINNOW_K, WINNOW_W = 5, 4
+
+# document MinHash geometry shared by minhash_dedup and minhash_calibration:
+# DOC_BANDS bands of DOC_ROWS rows over DOC_SHINGLE_N-char shingles
+DOC_BANDS, DOC_ROWS, DOC_SHINGLE_N = 4, 8, 7
+# prefix_jaccard_pairs' Jaccard threshold, in ppm
+PREFIX_JACCARD_PPM = 800_000
+# edit_distance_pairs: Levenshtein bound and q-gram width
+ED_MAX_DIST, ED_Q = 2, 3
+# word n-gram width of duplicate_ngram_spans and ngram_novelty
+NGRAM_N = 5
+# semdedup's codebook size
+SEMDEDUP_CELLS = 8
 
 
-def winnow_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, w: int = 4
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Winnowing document fingerprints — the rolling-hash fingerprint scheme
     (Schleimer, Wilkerson, Aiken: "Winnowing: Local Algorithms for Document
     Fingerprinting", SIGMOD 2003; the MOSS algorithm).
 
-    Rolling k-gram hashes over the normalized text; every window of ``w``
-    consecutive hashes selects its RIGHTMOST MINIMUM; the distinct selected
+    Rolling k-gram hashes (k = ``WINNOW_K``, w = ``WINNOW_W``) over the
+    normalized text; every window of ``w`` consecutive hashes selects its
+    RIGHTMOST MINIMUM; the distinct selected
     (position, hash) pairs are the document's fingerprints. Guarantees: any
     substring match of length >= w + k - 1 between two documents shares at
     least one fingerprint hash, and expected density is 2/(w+1) — the
@@ -52,6 +65,7 @@ def winnow_fingerprints(
     """
     from blink_spark.functions.text import normalize_text
 
+    k, w = WINNOW_K, WINNOW_W
     maxp = (1 << WINNOW_POS_BITS) - 1
     base = df.select(
         F.col(id_col).cast("string").alias("record_id"),
@@ -117,12 +131,6 @@ def winnow_excerpt_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    w: int = 4,
-    min_shared: int = 3,
-    max_fp_df: int = 64,
-    ngram_n: int = 2,
-    containment_threshold: float = 0.8,
 ) -> DataFrame:
     """Excerpt-duplicate pairs via shared winnowed fingerprints — the
     blocking MinHash cannot provide: a short excerpt inside a long document
@@ -131,27 +139,27 @@ def winnow_excerpt_pairs(
     fingerprints regardless of what surrounds it (the plagiarism-detection
     use the scheme was designed for).
 
-    Plan: distinct per-doc fingerprint hashes → per-hash document frequency
-    via a count window (ONE shuffle on fp_hash, whose partitioning feeds the
-    self-join below with no further exchange — the candidate_pairs trick) →
-    stop-fingerprints (df > ``max_fp_df``, boilerplate shared by everything)
-    dropped so per-hash pair work is bounded by max_fp_df² → pairs sharing
-    >= ``min_shared`` fingerprints → verified by asymmetric word-n-gram
-    containment |A∩B| / min(|A|,|B|).
+    Plan: distinct per-doc fingerprint hashes → per-hash document
+    frequency via a count window (ONE shuffle on fp_hash, whose partitioning
+    feeds the self-join below with no further exchange — the candidate_pairs
+    trick) → stop-fingerprints (df > 64, boilerplate shared by everything)
+    dropped so per-hash pair work is bounded by 64² → pairs sharing >= 3
+    fingerprints → verified by asymmetric word-bigram containment
+    |A∩B| / min(|A|,|B|) >= 0.8.
 
     Returns (record_id_a, record_id_b, n_shared, containment).
     """
     from blink_spark.functions.text import word_ngrams
 
     fph = (
-        winnow_fingerprints(df, id_col, text_col, k=k, w=w)
+        winnow_fingerprints(df, id_col, text_col)
         .select("record_id", "fp_hash")
         .distinct()
     )
     sized = fph.withColumn(
         "dfh", F.count("*").over(Window.partitionBy("fp_hash"))
     )
-    kept = sized.filter(F.col("dfh") <= max_fp_df)
+    kept = sized.filter(F.col("dfh") <= 64)
     a = kept.select("fp_hash", F.col("record_id").alias("record_id_a"))
     b = kept.select("fp_hash", F.col("record_id").alias("record_id_b"))
     shared = (
@@ -159,11 +167,11 @@ def winnow_excerpt_pairs(
         .filter(F.col("record_id_a") < F.col("record_id_b"))
         .groupBy("record_id_a", "record_id_b")
         .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
     recs = df.select(
         F.col(id_col).cast("string").alias("record_id"),
-        word_ngrams(df[text_col], ngram_n).alias("grams"),
+        word_ngrams(df[text_col], 2).alias("grams"),
     )
     attrs = pairs_with_attrs(shared, recs, "record_id", ["grams"])
     inter = F.size(F.array_intersect("grams_a", "grams_b")).cast("double")
@@ -173,12 +181,7 @@ def winnow_excerpt_pairs(
         "record_id_b",
         "n_shared",
         F.round(inter / F.greatest(mn, F.lit(1)), 6).alias("containment"),
-    ).filter(F.col("containment") >= containment_threshold)
-
-
-def _pairs_from_blocks(blocks: DataFrame, **kw) -> DataFrame:
-    pairs, _ = candidate_pairs(blocks, **kw)
-    return pairs
+    ).filter(F.col("containment") >= 0.8)
 
 
 def simhash_relational(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -213,13 +216,9 @@ def minhash_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bands: int = 4,
-    rows: int = 8,
-    shingle_n: int = 7,
-    jaccard_threshold: float = 0.8,
 ) -> DataFrame:
     """MinHash-LSH near-dup clustering: band-bucket blocking, exact
-    shingle-Jaccard verification, CC. The verification step makes LSH a
+    shingle-Jaccard verification (>= 0.8), CC. The verification step makes LSH a
     candidate generator, not the decision — false band collisions are
     filtered by the true Jaccard."""
     from blink_spark.operators.blocking import minhash_blocks
@@ -227,18 +226,19 @@ def minhash_dedup(
     recs = df.select(
         F.col(id_col).cast("string").alias("record_id"),
         df[text_col].alias("text"),
-        shingles(df[text_col], n=shingle_n).alias("sh"),
+        shingles(df[text_col], n=DOC_SHINGLE_N).alias("sh"),
     ).persist()
     blocks = minhash_blocks(
-        recs, "record_id", "text", bands=bands, rows=rows, shingle_n=shingle_n
+        recs, "record_id", "text",
+        bands=DOC_BANDS, rows=DOC_ROWS, shingle_n=DOC_SHINGLE_N,
     ).select("block_key", "record_id")
-    pairs = _pairs_from_blocks(blocks)
+    pairs, _ = candidate_pairs(blocks)
     attrs = pairs_with_attrs(pairs, recs, "record_id", ["sh"])
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     scored = attrs.withColumn(
         "shingle_jaccard", F.round(F.when(union > 0, inter / union).otherwise(0.0), 6)
-    ).withColumn("is_match", F.col("shingle_jaccard") >= jaccard_threshold)
+    ).withColumn("is_match", F.col("shingle_jaccard") >= 0.8)
     # assign_clusters materializes the edge set eagerly (CC localCheckpoint),
     # so both caches can be released before returning; the returned frame
     # only re-reads recs' pruned id column.
@@ -283,13 +283,12 @@ def prefix_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    threshold_ppm: int = 800_000,
 ) -> DataFrame:
     """EXACT set-similarity join via prefix filtering (the AllPairs/PPJoin
     family, Bayardo et al. WWW'07): every pair of documents whose distinct
-    token sets have Jaccard >= threshold, with ZERO false negatives — the
-    exact-guarantee complement to the MinHash/SimHash paths, whose recall
-    is only probabilistic.
+    token sets have Jaccard >= t (``PREFIX_JACCARD_PPM``), with ZERO false
+    negatives — the exact-guarantee complement to the MinHash/SimHash paths,
+    whose recall is only probabilistic.
 
     Prefix principle: order each doc's distinct tokens canonically by
     (corpus df asc, token asc) — rarest first — and keep only the first
@@ -330,9 +329,7 @@ def prefix_jaccard_pairs(
     )
     # prefix length = n - ceil(t*n) + 1, all integer:
     # ceil(t_ppm*n/1e6) = (t_ppm*n + 999999) div 1e6
-    plen = F.expr(
-        f"n - (({threshold_ppm} * n + 999999) div 1000000) + 1"
-    )
+    plen = F.expr(f"n - (({PREFIX_JACCARD_PPM} * n + 999999) div 1000000) + 1")
     prefix = ranked.filter(F.col("rnk") <= plen).select("doc", "tok", "n")
     cand = (
         prefix.alias("x")
@@ -356,7 +353,7 @@ def prefix_jaccard_pairs(
     )
     kept = inter.filter(
         F.col("inter") * F.lit(1_000_000)
-        >= F.lit(threshold_ppm) * (F.col("na") + F.col("nb") - F.col("inter"))
+        >= F.lit(PREFIX_JACCARD_PPM) * (F.col("na") + F.col("nb") - F.col("inter"))
     )
     return kept.select(
         "a",
@@ -376,12 +373,11 @@ def edit_distance_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_dist: int = 2,
-    q: int = 3,
 ) -> DataFrame:
     """EXACT edit-distance similarity join via q-gram prefix filtering (the
     Ed-Join family, Xiao et al. VLDB'08): every pair of records whose
-    normalized texts are within ``max_dist`` Levenshtein operations, with
+    normalized texts are within ``d = ED_MAX_DIST`` Levenshtein operations
+    (``q = ED_Q``), with
     ZERO false negatives — typo-class duplicates that token/Jaccard joins
     miss (a one-char edit changes no token-set member count enough) and
     phonetic keys only approximate.
@@ -414,7 +410,7 @@ def edit_distance_pairs(
     """
     from blink_spark.functions.text import normalize_text
 
-    d = int(max_dist)
+    d, q = ED_MAX_DIST, ED_Q
     plen = d * q + 1
     norm = normalize_text(docs[text_col])
     base = docs.select(
@@ -597,10 +593,6 @@ def minhash_calibration(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bands: int = 4,
-    rows: int = 8,
-    shingle_n: int = 7,
-    max_block: int = 4096,
 ) -> DataFrame:
     """MinHash estimator calibration over the LSH-blocked candidate pairs:
     per signature-agreement level, how far the sketch estimate
@@ -610,7 +602,7 @@ def minhash_calibration(
     measures the realized error on the corpus, including banding bias).
 
     Same block construction as ``minhash_dedup`` (bands x rows signature,
-    cap-and-keep blocks), so the measured pairs are exactly the pairs the
+    blocks of at most 4096), so the measured pairs are exactly the pairs the
     dedup path would verify. All quantities exact integer ppm with floor
     means — no float enters the parity surface.
 
@@ -626,15 +618,16 @@ def minhash_calibration(
     from blink_spark.functions.hashing import minhash_signature
     from blink_spark.functions.text import shingles
 
+    bands, rows = DOC_BANDS, DOC_ROWS
     k = bands * rows
-    sig = minhash_signature(df[text_col], k=k, shingle_n=shingle_n)
+    sig = minhash_signature(df[text_col], k=k, shingle_n=DOC_SHINGLE_N)
     # localCheckpoint (eager, GC-owned — cache-hygiene rule): the signature
     # is an interpreted per-shingle HOF fold, and `kept` feeds BOTH sides
     # of the block self-join — without this the most expensive projection
     # of the query evaluates twice.
     base = df.select(
         F.col(id_col).cast("string").alias("record_id"),
-        shingles(df[text_col], n=shingle_n).alias("sh"),
+        shingles(df[text_col], n=DOC_SHINGLE_N).alias("sh"),
         sig.alias("sig"),
     ).localCheckpoint()
     assign = base.select(
@@ -656,7 +649,7 @@ def minhash_calibration(
     sized = assign.withColumn(
         "bs", F.count(F.lit(1)).over(Window.partitionBy("block_key"))
     )
-    kept = sized.filter(F.col("bs") <= max_block)
+    kept = sized.filter(F.col("bs") <= 4096)
     a = kept.select(
         F.col("record_id").alias("ra"),
         F.col("sh").alias("sha"),
@@ -715,10 +708,10 @@ def duplicate_ngram_spans(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 5,
-    min_docs: int = 2,
 ) -> DataFrame:
-    """Maximal cross-document duplicated word-n-gram spans — the relational
+    """Maximal cross-document duplicated word-n-gram spans (n = ``NGRAM_N``)
+    —
+    the relational
     form of exact-substring dedup (Lee et al. 2022, "Deduplicating Training
     Data Makes Language Models Better": suffix-array ExactSubstr, recast as
     gram-hash document-frequency counting + gaps-and-islands interval merge).
@@ -742,15 +735,16 @@ def duplicate_ngram_spans(
     inclusive. Spans are the merged extents of duplicated-gram starts whose
     [pos, pos + n - 1] windows overlap OR touch, so two duplicated passages
     shared with DIFFERENT partner docs coalesce when token-adjacent: every
-    token in the span is covered by some >=``min_docs`` gram, but interior
+    token in the span is covered by some gram in >= 2 docs, but interior
     gram STARTS between two touching islands need not themselves be
     duplicated (``n_dup_grams`` counts the starts that are).
     """
+    n = NGRAM_N
     grams = word_ngram_hashes(docs, id_col, text_col, n)
     dup = (
         grams.groupBy("gh")
         .agg(F.countDistinct("record_id").alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .filter(F.col("nd") >= 2)
         .select("gh")
     )
     hits = grams.join(dup, "gh").select("record_id", "pos")
@@ -797,10 +791,9 @@ def word_ngram_hashes(
     )
 
 
-def ngram_novelty(
-    docs: DataFrame, id_col: str, text_col: str, n: int = 5
-) -> DataFrame:
-    """Per-document n-gram novelty profile: the share of a doc's distinct
+def ngram_novelty(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document n-gram novelty profile (n = ``NGRAM_N``): the share of a
+    doc's distinct
     word-n-grams whose corpus-FIRST occurrence (minimum record id — the
     deterministic "earlier document" order) is this document. The curation
     signal behind novelty-ordered data mixing: low-novelty docs restate
@@ -819,7 +812,11 @@ def ngram_novelty(
     Returns (record_id, n_grams, n_novel, novelty_ppm) — distinct-gram
     counts, ppm in BIGINT floor division.
     """
-    g = word_ngram_hashes(docs, id_col, text_col, n).select("record_id", "gh").distinct()
+    g = (
+        word_ngram_hashes(docs, id_col, text_col, NGRAM_N)
+        .select("record_id", "gh")
+        .distinct()
+    )
     first = g.groupBy("gh").agg(F.min("record_id").alias("first_id"))
     return (
         g.join(first, "gh")
@@ -843,24 +840,21 @@ def semdedup(
     vectors: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "q",
-    n_cells: int = 8,
-    tau: float = 0.95,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by clustering the
-    embedding space into cells, finding near-duplicate pairs WITHIN each
-    cell (cosine >= ``tau``), and keeping ONE representative per duplicate
-    group — the member with the LOWEST cosine to its cell centroid (the
-    paper's keep rule: retain the least prototypical example; it preserves
-    diversity where random-keep would not). Cross-cell near-dups are
-    missed by construction — the paper's own stated approximation.
+    embedding space into ``SEMDEDUP_CELLS`` cells, finding near-duplicate
+    pairs WITHIN each cell (cosine >= 0.95), and keeping ONE representative
+    per duplicate group — the member with the LOWEST cosine to its cell
+    centroid (the paper's keep rule: retain the least prototypical example;
+    it preserves diversity where random-keep would not). Cross-cell
+    near-dups are missed by construction — the paper's own stated
+    approximation.
 
-    Deterministic codebook: the ``n_cells`` lowest-id vectors (the
-    ``ivf_topk`` ``first_items`` convention — bit-reproducible on any
-    engine; a trained KMeans codebook plugs in the same way via
-    ``ann.kmeans_codebook``). Assignment is the shuffle-free literal-
-    codebook argmax fold; all cosines are exact integer dots over
-    quantized embeddings with one sqrt/divide on identical doubles,
-    rounded to 6 — the established cross-engine parity surface.
+    Deterministic codebook: the lowest-id vectors (the ``ivf_topk``
+    convention — bit-reproducible on any engine). Assignment is the
+    shuffle-free literal-codebook argmax fold; all cosines are exact
+    integer dots over quantized embeddings with one sqrt/divide on identical
+    doubles, rounded to 6 — the established cross-engine parity surface.
 
     Scale notes (100 TB): cell assignment is one projection (no join, no
     Exchange); the within-cell pair join is an equi-join on cid whose cost
@@ -868,7 +862,7 @@ def semdedup(
     uses ~10k clusters for LAION) precisely to bound cells, the same
     block-size discussion as candidate_pairs; per-record norms are hoisted
     so each pair does one dot, not three. The dup graph is far smaller
-    than the corpus (only pairs >= tau), so CC runs on the match edges
+    than the corpus (only pairs >= 0.95), so CC runs on the match edges
     only; the keep window partitions by dup group (bounded by cell size).
 
     Returns (``id_col``, cid, group_id, cos_centroid, keep).
@@ -889,7 +883,7 @@ def semdedup(
     it = vectors.select(F.col(id_col).alias("item_id"), F.col(vec_col).alias("iv"))
     cents = (
         it.orderBy(F.col("item_id").asc())
-        .limit(n_cells)
+        .limit(SEMDEDUP_CELLS)
         .select(F.col("item_id").alias("cid"), F.col("iv").alias("cv"))
     )
     assigned = assign_cells(it, cents, scorer)
@@ -920,7 +914,7 @@ def semdedup(
             F.col("ib").alias("dst"),
             _cos(int_dot("va", "vb"), F.col("n2a"), F.col("n2b")).alias("cos"),
         )
-        .filter(F.col("cos") >= F.lit(tau))
+        .filter(F.col("cos") >= F.lit(0.95))
         .select("src", "dst")
     )
     comp = connected_components(dup_edges).withColumnRenamed(
@@ -948,7 +942,6 @@ def dedup_ensemble_report(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_hamming: int = 3,
 ) -> DataFrame:
     """Multi-strategy dedup ensemble report — er_blocking_ensemble's
     question asked of the DEDUP stack: which near-duplicate pairs does each
@@ -957,7 +950,7 @@ def dedup_ensemble_report(
     linear pair set CC induces, never the quadratic all-pairs), ``minhash``
     (4×4 char-3-shingle LSH bands, exact integer shingle-Jaccard >= 1/2
     verify: ``3·|∩| >= |A|+|B|``), ``simhash`` (pigeonhole bands, exact
-    hamming <= ``max_hamming``). A pair only one strategy finds is that
+    hamming <= 3). A pair only one strategy finds is that
     strategy's reason to exist; pairs all three find are the safe core.
 
     Scale notes (100 TB): each strategy is its production shape (keyed
@@ -990,7 +983,7 @@ def dedup_ensemble_report(
     )
     # minhash: band candidates + exact integer shingle-jaccard >= 1/2
     bands = d.select(
-        "id", F.explode(minhash_band_keys("text", bands=4, rows=4)).alias("bk")
+        "id", F.explode(minhash_band_keys("text")).alias("bk")
     )
     cand = (
         bands.select(F.col("id").alias("a"), "bk")
@@ -1018,9 +1011,7 @@ def dedup_ensemble_report(
     sbanded = shs.select(
         "id",
         "sh",
-        F.explode(F.array(*simhash_band_cols(F.col("sh"), max_hamming))).alias(
-            "band"
-        ),
+        F.explode(F.array(*simhash_band_cols(F.col("sh"), 3))).alias("band"),
     )
     p_simhash = (
         sbanded.select(F.col("id").alias("a"), F.col("sh").alias("sha"), "band")
@@ -1031,7 +1022,7 @@ def dedup_ensemble_report(
         .filter(F.col("a") < F.col("b"))
         .select("a", "b", hamming64("sha", "shb").alias("hamming"))
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .select("a", "b", F.lit("simhash").alias("strategy"))
     )
     flags = (
@@ -1107,6 +1098,7 @@ def dedup_ensemble_report(
 # word value < 2^62, so 1 << bit never touches the BIGINT sign bit on
 # either engine (DuckDB raises on signed overflow where Spark would wrap)
 BLOOM_WORD_BITS = 62
+BLOOM_M_BITS = 4096
 
 
 def bloom_novelty(
@@ -1114,29 +1106,28 @@ def bloom_novelty(
     incoming: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    m_bits: int = 4096,
-    k_hashes: int = 3,
 ) -> DataFrame:
     """Bloom-filter novelty check of an incoming snapshot against a
     reference corpus — the membership primitive an at-scale ingest pipeline
     runs BEFORE any pairwise dedup (Bloom 1970; the CCNet/Dolma "have we
-    seen this page" gate): k deterministic md5-derived probe positions per
-    order-insensitive document fingerprint; a document whose every probe
-    bit is set is *possibly seen* (exact duplicates are NEVER missed — no
-    false negatives by construction), anything else is certainly novel.
+    seen this page" gate): 3 deterministic md5-derived probe positions into
+    ``BLOOM_M_BITS`` bits per order-insensitive document fingerprint; a
+    document whose every probe bit is set is *possibly seen* (exact
+    duplicates are NEVER missed — no false negatives by construction),
+    anything else is certainly novel.
 
     Relational bitmap, no driver state: the reference's set bits are packed
     into 62-bit words (``pos div 62`` → ``bit_or(1 << pos % 62)``), so the
-    filter is a table of at most ``m_bits/62`` rows — for a 1e9-document
-    reference at 1% FP (m ≈ 1.2e10) that is ~190M words ≈ 3 GB, a plain
-    shuffle equi-join; at fixture m it is AQE-broadcast. Probes join on the
-    word index only (no inequality, no crossJoin) and the verdict is a
-    per-(doc, fp) bool_and. The exact-duplicate flag (for the
+    filter is a table of at most ``BLOOM_M_BITS/62`` rows — for a
+    1e9-document reference at 1% FP (m ≈ 1.2e10) that is ~190M words ≈ 3 GB,
+    a plain shuffle equi-join; at fixture m it is AQE-broadcast. Probes join
+    on the word index only (no inequality, no crossJoin) and the verdict is
+    a per-(doc, fp) bool_and. The exact-duplicate flag (for the
     false-positive readout) is one more fp equi-join against the distinct
-    reference fingerprints. The reference scan is read twice (words +
-    exact side) rather than checkpointed — both reads reduce immediately
-    to distinct fingerprints, and at 100 TB a localCheckpoint of an
-    n-row table would cost more than the second pruned column scan.
+    reference fingerprints. The reference scan is read twice (words + exact
+    side) rather than checkpointed — both reads reduce immediately to
+    distinct fingerprints, and at 100 TB a localCheckpoint of an n-row table
+    would cost more than the second pruned column scan.
 
     Returns (doc_id, bloom_hit, exact_dup, verdict) per incoming document,
     verdict ∈ {true_dup, false_positive, novel}.
@@ -1146,7 +1137,7 @@ def bloom_novelty(
     def _probes(df: DataFrame) -> DataFrame:
         probed = df.select(
             "*",
-            F.explode(F.sequence(F.lit(0), F.lit(int(k_hashes) - 1))).alias("i"),
+            F.explode(F.sequence(F.lit(0), F.lit(2))).alias("i"),
         )
         pos = F.conv(
             F.substring(
@@ -1156,7 +1147,7 @@ def bloom_novelty(
             ),
             16,
             10,
-        ).cast("long") % F.lit(int(m_bits))
+        ).cast("long") % F.lit(BLOOM_M_BITS)
         return (
             probed.withColumn("pos", pos)
             .withColumn("word_idx", F.expr(f"pos div {W}"))

@@ -16,6 +16,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# mutual-best rounds of greedy_one_to_one
+GREEDY_ROUNDS = 3
+
 
 def pairwise_f1(
     gold_pairs: DataFrame, clusters: DataFrame
@@ -243,7 +246,6 @@ def greedy_one_to_one(
     left_col: str,
     right_col: str,
     score_col: str = "sim",
-    rounds: int = 3,
 ) -> DataFrame:
     """Greedy 1:1 assignment — iterated mutual-best with endpoint removal,
     the bounded-round relational form of greedy weighted bipartite matching
@@ -258,8 +260,8 @@ def greedy_one_to_one(
     1:1-tightened variant used when sources are known duplicate-free.
 
     Determinism: the per-round mutual best inherits ``topk_per_group``'s
-    total order (score DESC, other-id ASC); ``rounds`` is a fixed constant
-    so the whole assignment is a pure function of the input.
+    total order (score DESC, other-id ASC); ``GREEDY_ROUNDS`` is a fixed
+    constant so the whole assignment is a pure function of the input.
 
     Scale shape per round: two id-partitioned windows (one shuffle each, no
     SinglePartition) plus two left_anti equi-joins against the matched-id
@@ -271,7 +273,7 @@ def greedy_one_to_one(
     """
     remaining = scored
     out: DataFrame | None = None
-    for k in range(1, rounds + 1):
+    for k in range(1, GREEDY_ROUNDS + 1):
         m = (
             reciprocal_best(remaining, left_col, right_col, score_col)
             .withColumn("match_round", F.lit(k).cast("long"))

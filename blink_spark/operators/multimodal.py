@@ -18,6 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# resize_plan's bound on a visual's longest side, in pixels
+MAX_DIM = 700
+
 MEDIA_META = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
@@ -82,10 +85,10 @@ def decode_media_stub(media_spans: DataFrame) -> DataFrame:
     )
 
 
-def resize_plan(decoded: DataFrame, max_dim: int = 512) -> DataFrame:
+def resize_plan(decoded: DataFrame) -> DataFrame:
     """Resize metadata for visual rows whose longest side exceeds
-    ``max_dim``: integer-exact target dims preserving aspect ratio
-    (new = dim * max_dim // longest). The pixel work would live in a further
+    ``MAX_DIM``: integer-exact target dims preserving aspect ratio
+    (new = dim * MAX_DIM // longest). The pixel work would live in a further
     mapInPandas stage; this is the plan/metadata half, fully relational."""
     longest = F.greatest("width", "height")
     vis = decoded.filter(F.col("media_kind").isin("image", "video"))
@@ -95,18 +98,18 @@ def resize_plan(decoded: DataFrame, max_dim: int = 512) -> DataFrame:
         "media_ref",
         "width",
         "height",
-        F.when(longest <= max_dim, F.col("width"))
-        .otherwise(F.floor(F.col("width") * max_dim / longest).cast("int"))
+        F.when(longest <= MAX_DIM, F.col("width"))
+        .otherwise(F.floor(F.col("width") * MAX_DIM / longest).cast("int"))
         .alias("target_w"),
-        F.when(longest <= max_dim, F.col("height"))
-        .otherwise(F.floor(F.col("height") * max_dim / longest).cast("int"))
+        F.when(longest <= MAX_DIM, F.col("height"))
+        .otherwise(F.floor(F.col("height") * MAX_DIM / longest).cast("int"))
         .alias("target_h"),
-        (longest > max_dim).alias("needs_resize"),
+        (longest > MAX_DIM).alias("needs_resize"),
     )
 
 
-def frame_sample(decoded: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plan for video rows: one row per sampled frame index.
+def frame_sample(decoded: DataFrame) -> DataFrame:
+    """Frame-sampling plan for video rows: one row per 10th frame index.
 
     Pure relational (sequence + explode) — the expensive pixel work would
     live in a further mapInPandas stage.
@@ -116,6 +119,6 @@ def frame_sample(decoded: DataFrame, every_n: int = 10) -> DataFrame:
         "span_idx",
         "media_ref",
         F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
+            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(10))
         ).alias("frame_idx"),
     )

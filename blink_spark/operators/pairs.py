@@ -132,20 +132,10 @@ def pairs_with_attrs(
     records: DataFrame,
     id_col: str,
     attr_cols: list[str],
-    broadcast_records: bool = False,
 ) -> DataFrame:
-    """Join pair ids back to record attributes on both sides.
-
-    Default: two shuffle joins on the uniform record_id key (no skew by
-    construction — ids are unique); at scale these are sort-merge joins.
-
-    ``broadcast_records=True`` broadcasts the record-attribute table instead:
-    the (much larger) pair table is never shuffled at all — the analogue of
-    the reference holding id2title/id2text in every process
-    (/root/reference/blink/main_dense.py:121-143). Use when records fit in
-    executor memory (pairs are O(records × cluster_size), so records is the
-    small side by construction); at 10^12 records use the shuffle form with
-    co-partitioning instead.
+    """Join pair ids back to record attributes on both sides: two joins on
+    the uniform record_id key (no skew by construction — ids are unique);
+    at scale these are sort-merge joins.
     """
     a = records.select(
         F.col(id_col).alias("record_id_a"),
@@ -155,8 +145,6 @@ def pairs_with_attrs(
         F.col(id_col).alias("record_id_b"),
         *[F.col(c).alias(f"{c}_b") for c in attr_cols],
     )
-    if broadcast_records:
-        a, b = F.broadcast(a), F.broadcast(b)
     return pairs.join(a, "record_id_a").join(b, "record_id_b")
 
 

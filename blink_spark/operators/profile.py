@@ -441,7 +441,6 @@ def benford_first_digit(df: DataFrame, value_expr: str) -> DataFrame:
 def decimal_quantile_sketch(
     df: DataFrame,
     value_expr: str,
-    quantile_pcts: tuple[int, ...] = (50, 90, 99),
 ) -> DataFrame:
     """Mergeable bounded-relative-error quantile sketch — the DDSketch
     idea (Masson/Rim/Lee VLDB 2019) on a DETERMINISTIC base-10 grid: a
@@ -466,7 +465,7 @@ def decimal_quantile_sketch(
     broadcast 3-row target join + bucket-keyed min agg. Nothing row-scale
     past the first agg.
 
-    Returns one row per requested quantile: (q_pct, n_rows, n_buckets,
+    Returns one row per quantile (50, 90, 99): (q_pct, n_rows, n_buckets,
     target_rank, est_value).
     """
     from blink_spark.operators.ids import partitioned_running_sum
@@ -502,9 +501,7 @@ def decimal_quantile_sketch(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_rows"),
         F.count(F.lit(1)).cast("long").alias("n_buckets"),
     )
-    targets = spark.createDataFrame(
-        [(int(q),) for q in quantile_pcts], "q_pct long"
-    )
+    targets = spark.createDataFrame([(50,), (90,), (99,)], "q_pct long")
     t = targets.crossJoin(F.broadcast(tot)).withColumn(
         "target_rank", F.expr("(q_pct * n_rows + 99) div 100").cast("long")
     )

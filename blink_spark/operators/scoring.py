@@ -106,7 +106,6 @@ def _base_features(pairs_attrs: DataFrame) -> DataFrame:
 def score_pairs_cascade(
     pairs_attrs: DataFrame,
     with_emb: bool = False,
-    plausible_threshold: float = 0.9,
     with_jw: bool = False,
 ) -> DataFrame:
     """Cascade scoring over **prepped** pair attributes (see
@@ -128,8 +127,8 @@ def score_pairs_cascade(
     translation of the reference's filter-before-crossencoder staging
     (/root/reference/blink/crossencoder/data_process.py:89-112).
 
-    ``plausible_threshold`` is the fraction of the match thresholds a pair
-    must reach to be worth full scoring.
+    A pair must reach 0.9 of the match thresholds to be worth full
+    scoring.
 
     ``with_jw=False`` drops the Jaro-Winkler pandas UDF entirely (the only
     Python in the plan): ``is_match`` never depends on JW, so clustering
@@ -143,7 +142,7 @@ def score_pairs_cascade(
         "plausible",
         F.coalesce(
             F.col("is_match")
-            | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * plausible_threshold)),
+            | (F.col("jaccard") >= F.lit(JACCARD_THRESHOLD * 0.9)),
             F.lit(False),
         ),
     )
@@ -437,10 +436,6 @@ def token_cosine_pairs(
 def em_fs_weights(
     pairs: DataFrame,
     feature_cols: list[str],
-    iters: int = 3,
-    init_lambda_ppm: int = 500_000,
-    init_m_ppm: int = 900_000,
-    init_u_ppm: int = 100_000,
 ) -> DataFrame:
     """UNSUPERVISED Fellegi-Sunter parameter estimation via EM over boolean
     agreement features — the Splink-style calibration that needs no labeled
@@ -454,7 +449,7 @@ def em_fs_weights(
     is a single distributed ``groupBy(features).count()`` — ONE full pass
     with map-side partial aggregation, collected as <= 2^k rows (the
     documented tiny-aggregate collect class, like the two-phase id
-    offsets). All ``iters`` EM iterations then run on the contingency
+    offsets). All 3 EM iterations then run on the contingency
     counts in pure integer arithmetic: parameters live in ppm, per-feature
     log-weights are floored ONCE per iteration to integer micro-nats, the
     per-cell posterior ``floor(1e6 / (1 + exp(-t/1e6)))`` is the only
@@ -478,14 +473,15 @@ def em_fs_weights(
     counts = [
         (tuple(bool(r[c]) for c in feature_cols), int(r["n"])) for r in cells
     ]
-    lam = init_lambda_ppm
-    m = [init_m_ppm] * k
-    u = [init_u_ppm] * k
+    # initial parameters in ppm: lambda 0.5, m 0.9, u 0.1 per feature
+    lam = 500_000
+    m = [900_000] * k
+    u = [100_000] * k
 
     def _w(num: int, den: int) -> int:
         return math.floor(math.log(num / den) * 1000000.0)
 
-    for _ in range(iters):
+    for _ in range(3):
         lw = _w(lam, 1_000_000 - lam)
         wa = [_w(m[i], u[i]) for i in range(k)]
         wd = [_w(1_000_000 - m[i], 1_000_000 - u[i]) for i in range(k)]
@@ -522,12 +518,10 @@ def em_fs_weights(
     )
 
 
-def tfidf_weights(
-    records: DataFrame, id_col: str, text_col: str, idf_scale: int = 1000
-) -> DataFrame:
+def tfidf_weights(records: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact-integer sparse tf-idf vectors shared by ``tfidf_cosine_pairs``
     and ``soft_tfidf_pairs``: per (record, token) weight
-    ``x = tf * ((idf_scale * N) div df)`` — the rational idf surrogate (a
+    ``x = tf * ((1000 * N) div df)`` — the rational idf surrogate (a
     positive integer floor division identical in Spark ``div`` and DuckDB
     ``//``) instead of a libm log whose 1-ulp engine differences could
     flip a floor. N stays lazy (one-row count broadcast onto the
@@ -557,7 +551,7 @@ def tfidf_weights(
     return tf.join(df_tok, "tok").select(
         "record_id",
         "tok",
-        (F.col("tf") * F.expr(f"({idf_scale} * n_rec) div df"))
+        (F.col("tf") * F.expr("(1000 * n_rec) div df"))
         .cast("long")
         .alias("x"),
     )
@@ -568,13 +562,11 @@ def soft_tfidf_pairs(
     records: DataFrame,
     id_col: str,
     text_col: str,
-    theta_ppm: int = 900_000,
-    idf_scale: int = 1000,
 ) -> DataFrame:
     """SoftTFIDF comparator (Cohen, Ravikumar, Fienberg, IIWeb 2003 — the
     best-performing hybrid in their comparator study): TF-IDF cosine
     where tokens need not match EXACTLY — each left token bridges to its
-    most-similar right token with string similarity ≥ θ, so
+    most-similar right token with string similarity ≥ θ = 0.9, so
     "jon smith" ~ "john smiths" scores high where the exact-token cosine
     scores 0. The canonical measure is directional; both directions are
     returned.
@@ -598,7 +590,7 @@ def soft_tfidf_pairs(
     Output: pairs + norm_a/norm_b (exact longs), soft_dot_ab/soft_dot_ba
     (exact longs), soft_tfidf_ab/soft_tfidf_ba (round 6).
     """
-    weighted = tfidf_weights(records, id_col, text_col, idf_scale)
+    weighted = tfidf_weights(records, id_col, text_col)
     norms = weighted.groupBy("record_id").agg(
         F.sum(F.col("x") * F.col("x")).cast("long").alias("norm_sq")
     )
@@ -621,7 +613,7 @@ def soft_tfidf_pairs(
         pairs.join(xa, "record_id_a")
         .join(xb, "record_id_b")
         .withColumn("sim_ppm", sim)
-        .filter(F.col("sim_ppm") >= int(theta_ppm))
+        .filter(F.col("sim_ppm") >= 900_000)
     )
 
     def _soft_dot(left_tok: str, left_x: str, right_x: str, out: str) -> DataFrame:
@@ -688,7 +680,6 @@ def tfidf_cosine_pairs(
     records: DataFrame,
     id_col: str,
     text_col: str,
-    idf_scale: int = 1000,
 ) -> DataFrame:
     """IDF-weighted sparse token cosine for candidate pairs — the WHIRL /
     soft-join comparator (Cohen, SIGMOD 1998) that token_cosine_pairs
@@ -699,7 +690,7 @@ def tfidf_cosine_pairs(
     BM25 boosts); here it is the exact vector-space form.
 
     Exact cross-engine parity: the idf weight is the RATIONAL surrogate
-    ``w(tok) = (idf_scale * N) div df(tok)`` — a positive integer floor
+    ``w(tok) = (1000 * N) div df(tok)`` — a positive integer floor
     division identical in Spark (`div`) and DuckDB (`//`) — instead of a
     libm log whose 1-ulp engine differences could flip a floor. The
     tf-idf component is ``tf * w`` (exact long); dot and squared norms are
@@ -717,7 +708,7 @@ def tfidf_cosine_pairs(
     Output: pairs + ``dot``, ``norm_a``, ``norm_b`` (exact longs) +
     ``tfidf_cosine`` (round 6).
     """
-    weighted = tfidf_weights(records, id_col, text_col, idf_scale)
+    weighted = tfidf_weights(records, id_col, text_col)
     norms = weighted.groupBy("record_id").agg(
         F.sum(F.col("x") * F.col("x")).cast("long").alias("norm_sq")
     )
@@ -899,12 +890,10 @@ def bloom_positions(
     records: DataFrame,
     id_col: str,
     text_col: str,
-    m: int = 64,
-    k: int = 3,
 ) -> DataFrame:
     """PPRL Bloom-filter encoding (Schnell, Bachteler & Reiher, BMC 2009):
     each record's normalized text is decomposed into character bigrams and
-    every bigram sets ``k`` salted-md5 positions in an ``m``-bit filter.
+    every bigram sets 3 salted-md5 positions in a 64-bit filter.
     Returned as the relational SET form — one (record_id, pos) row per set
     bit — which is what the Dice join consumes directly; the bit-packed
     integer form is one ``bit_or(1 << pos)`` aggregation away when an
@@ -913,7 +902,7 @@ def bloom_positions(
     Records shorter than one bigram produce no rows (an empty filter).
 
     Scale notes (100 TB): a pure projection + explode (bigrams x k) into a
-    map-side-combinable distinct — at most ``m`` rows per record survive.
+    map-side-combinable distinct — at most 64 rows per record survive.
     No joins, no windows, no driver collection.
     """
     grams = (
@@ -945,8 +934,8 @@ def bloom_positions(
                         16,
                         10,
                     ).cast("long")
-                    % m
-                    for j in range(k)
+                    % 64
+                    for j in range(3)
                 ]
             )
         ).alias("pos"),
@@ -959,8 +948,6 @@ def pprl_bloom_dice(
     pairs: DataFrame,
     id_col: str,
     text_col: str,
-    m: int = 64,
-    k: int = 3,
 ) -> DataFrame:
     """Privacy-preserving record linkage scoring: Dice similarity between
     the records' Bloom encodings, ``2e6 * |A ∩ B| div (|A| + |B|)`` in
@@ -972,14 +959,14 @@ def pprl_bloom_dice(
     never all-pairs).
 
     Scale notes (100 TB): the intersection is an equi-join of the two
-    sides' (pair, pos) rows — fan-out bounded by m bits per record — then
+    sides' (pair, pos) rows — fan-out bounded by 64 bits per record — then
     a pair-keyed partial count; bit counts join back on the record id.
     No driver collection.
 
     Returns (record_id_a, record_id_b, bits_a, bits_b, inter_bits,
     dice_ppm).
     """
-    pos = bloom_positions(records, id_col, text_col, m=m, k=k)
+    pos = bloom_positions(records, id_col, text_col)
     bits = pos.groupBy("rid").agg(F.count(F.lit(1)).cast("long").alias("bits"))
     pa = pos.select(F.col("rid").alias("record_id_a"), "pos")
     pb = pos.select(F.col("rid").alias("record_id_b"), "pos")

@@ -29,6 +29,13 @@ from pyspark.sql import functions as F
 
 _M = 1 << 32  # hash space: first 8 hex digits of md5
 
+# sketch sizes: KMV keeps the KMV_K smallest hashes; HLL has 2^HLL_P
+# registers; the count-min grid is CM_DEPTH rows x CM_WIDTH buckets
+KMV_K = 8
+HLL_P = 4
+CM_DEPTH = 4
+CM_WIDTH = 64
+
 # milli-alpha bias constants for the HLL raw estimator (Flajolet et al. 2007)
 _HLL_MILLI_ALPHA = {16: 673, 32: 697, 64: 709}
 
@@ -47,9 +54,9 @@ def kmv_distinct(
     df: DataFrame,
     key_col: str,
     group_col: str,
-    k: int = 64,
 ) -> DataFrame:
-    """Per-group KMV distinct-count estimate of ``key_col``.
+    """Per-group KMV distinct-count estimate of ``key_col`` from the
+    ``k = KMV_K`` smallest hashes.
 
     Returns (group, n_exact, kth_hash, est_distinct):
     - ``n_exact``      exact distinct-hash count (the sketch's target; kept
@@ -68,6 +75,7 @@ def kmv_distinct(
         )
         .distinct()
     )
+    k = KMV_K
     w = Window.partitionBy("grp").orderBy(F.col("h").asc())
     ranked = h.select("grp", "h", F.row_number().over(w).alias("rn"))
     agg = ranked.groupBy("grp").agg(
@@ -89,10 +97,9 @@ def hll_distinct(
     df: DataFrame,
     key_col: str,
     group_col: str,
-    p: int = 4,
 ) -> DataFrame:
     """Per-group HyperLogLog distinct-count estimate of ``key_col`` with
-    ``m = 2^p`` registers (p in {4, 5, 6}).
+    ``m = 2^p`` registers, ``p = HLL_P`` (4, 5 or 6).
 
     The registers are exact integers end to end: register index = the hash's
     low ``p`` bits, rank = leading-zero run of the remaining ``32 - p`` bits
@@ -120,6 +127,7 @@ def hll_distinct(
     register table is ``m × n_groups`` rows: tiny and mergeable (max of
     register maxes).
     """
+    p = HLL_P
     _check_hll_p(p)
     m = 1 << p
     per_reg = _hll_rho_rows(df, key_col, group_col, p).groupBy("grp", "j").agg(
@@ -218,15 +226,13 @@ def _cm_hash(col: Column, j: int, w: int) -> Column:
     )
 
 
-def count_min_counters(
-    df: DataFrame, key_col: str, d: int = 4, w: int = 256
-) -> DataFrame:
+def count_min_counters(df: DataFrame, key_col: str) -> DataFrame:
     """The count-min sketch STATE (Cormode & Muthukrishnan 2005): a
-    ``d x w`` counter grid — row ``j`` buckets every occurrence of the key
-    under an independently salted hash. This is the mergeable form: union
-    counter tables from other partitions / days / micro-batches and
-    ``sum(c)`` per (j, bucket); estimates of the merged stream fall out of
-    ``count_min_estimate``'s min-over-rows.
+    ``d x w`` counter grid (``CM_DEPTH x CM_WIDTH``) — row ``j`` buckets
+    every occurrence of the key under an independently salted hash. This is the
+    mergeable form: union counter tables from other partitions / days /
+    micro-batches and ``sum(c)`` per (j, bucket); estimates of the merged
+    stream fall out of ``count_min_estimate``'s min-over-rows.
 
     Shape at 100 TB: the explode inflates the scan d-fold but feeds a
     map-side-combinable (j, bucket) partial aggregation whose output is
@@ -235,6 +241,7 @@ def count_min_counters(
 
     Returns (j, bucket, c).
     """
+    d, w = CM_DEPTH, CM_WIDTH
     jb = df.select(
         F.explode(
             F.array(
@@ -253,9 +260,7 @@ def count_min_counters(
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
 
 
-def count_min_estimate(
-    df: DataFrame, key_col: str, d: int = 4, w: int = 256
-) -> DataFrame:
+def count_min_estimate(df: DataFrame, key_col: str) -> DataFrame:
     """Per-key count-min frequency estimate with the exact count kept
     alongside for in-scan error auditing (the ``kmv_distinct`` convention):
     ``est = min over rows j of counter[j][h_j(key)]`` — never an
@@ -268,7 +273,8 @@ def count_min_estimate(
     Returns (key, n_exact, est_count, overestimate), one row per distinct
     key; ``overestimate = est_count - n_exact >= 0``.
     """
-    counters = count_min_counters(df, key_col, d=d, w=w)
+    d, w = CM_DEPTH, CM_WIDTH
+    counters = count_min_counters(df, key_col)
     keys = df.groupBy(key_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
     )

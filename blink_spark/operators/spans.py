@@ -135,10 +135,10 @@ def filter_repeat_overlaps(
     )
 
 
-def span_scores_prefix_sum(
-    df: DataFrame, id_col: str, text_col: str, max_len: int = 3
-) -> DataFrame:
-    """Score EVERY (start <= end) span with the prefix-sum trick of the
+def span_scores_prefix_sum(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Score EVERY (start <= end) span of at most 3 tokens with the
+    prefix-sum
+    trick of the
     reference's mention score head (/root/reference/elq/biencoder/
     biencoder.py:64-126): span score = start_logit[s] + end_logit[e] +
     sum(inside_logits[s..e]), where the inside sum comes from one running
@@ -189,7 +189,7 @@ def span_scores_prefix_sum(
         .withColumn("cum_in", F.sum("in_l").over(w))
         .withColumn("prev_cum", F.col("cum_in") - F.col("in_l"))
     )
-    spans = enumerate_token_spans(df, id_col, text_col, max_len=max_len)
+    spans = enumerate_token_spans(df, id_col, text_col, max_len=3)
     s_start = scored_toks.select(
         "record_id", F.col("pos").alias("start"), "start_l", "prev_cum"
     )
@@ -215,14 +215,12 @@ def threshold_prune_topk(
     scored_spans: DataFrame,
     group_col: str = "record_id",
     score_col: str = "score",
-    threshold: float = 0.0,
-    k: int = 2,
     tiebreak_cols: tuple[str, ...] = ("start", "end_excl"),
 ) -> DataFrame:
-    """Threshold pruning with top-K fallback — the combined semantics of
+    """Threshold pruning with top-2 fallback — the combined semantics of
     /root/reference/elq/biencoder/biencoder.py:318-363 (prune_ctxt_mentions):
-    keep spans whose score clears the threshold; for groups where NOTHING
-    clears it, fall back to the top-K spans by score. One window pass, no
+    keep spans whose score clears 14.0; for groups where NOTHING clears it,
+    fall back to the top-2 spans by score. One window pass, no
     per-group Python."""
     from pyspark.sql import Window
 
@@ -230,14 +228,14 @@ def threshold_prune_topk(
     wr = w.orderBy(
         F.col(score_col).desc(), *[F.col(c).asc() for c in tiebreak_cols]
     )
-    n_pass = F.sum((F.col(score_col) > threshold).cast("int")).over(w)
+    n_pass = F.sum((F.col(score_col) > 14.0).cast("int")).over(w)
     rank = F.row_number().over(wr)
     return (
         scored_spans.withColumn("_np", n_pass)
         .withColumn("_rk", rank)
         .filter(
-            (F.col(score_col) > threshold)
-            | ((F.col("_np") == 0) & (F.col("_rk") <= k))
+            (F.col(score_col) > 14.0)
+            | ((F.col("_np") == 0) & (F.col("_rk") <= 2))
         )
         .drop("_np", "_rk")
     )

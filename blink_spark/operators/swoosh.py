@@ -41,20 +41,21 @@ from pyspark.sql import functions as F
 from blink_spark.functions.text import tokens
 from blink_spark.operators.cluster import assign_clusters
 
+# match→CC→merge supersteps; round 2 catches the merge-enabled matches
+SWOOSH_ROUNDS = 2
+
 
 def swoosh_merge(
     records: DataFrame,
     id_col: str,
     text_col: str,
-    rounds: int = 2,
-    jaccard_min_ppm: int = 500_000,
-    df_max: int = 20,
 ) -> DataFrame:
-    """Run ``rounds`` match→CC→union-merge supersteps over the records'
-    informative-token profiles; return every record's final profile.
+    """Run ``SWOOSH_ROUNDS`` match→CC→union-merge supersteps over the
+    records' informative-token profiles (tokens in at most 20 records);
+    return every record's final profile.
 
     Match rule: exact-integer Jaccard over kept-token sets,
-    ``(n_shared * 1e6) div (sz_a + sz_b - n_shared) >= jaccard_min_ppm``.
+    ``(n_shared * 1e6) div (sz_a + sz_b - n_shared) >= 500000``.
     Profile ids are component minima (deterministic); records whose tokens
     are all stopword-like keep themselves as singleton profiles with
     ``profile_n_tokens`` counting their kept tokens (0 if none).
@@ -68,7 +69,7 @@ def swoosh_merge(
     kept = (
         tk.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_max)
+        .filter(F.col("df") <= 20)
         .select("tok")
     )
     prof = (
@@ -79,7 +80,7 @@ def swoosh_merge(
     mapping = records.select(
         F.col(id_col).alias("record_id"), F.col(id_col).alias("pid")
     )
-    for _ in range(rounds):
+    for _ in range(SWOOSH_ROUNDS):
         sizes = prof.groupBy("pid").agg(F.count(F.lit(1)).cast("long").alias("sz"))
         shared = (
             prof.select(F.col("pid").alias("pid_a"), "tok")
@@ -99,7 +100,7 @@ def swoosh_merge(
             )
             .filter(
                 F.expr("(n_shared * 1000000) div (sz_a + sz_b - n_shared)")
-                >= F.lit(jaccard_min_ppm)
+                >= F.lit(500_000)
             )
             .select(F.col("pid_a").alias("src"), F.col("pid_b").alias("dst"))
         )

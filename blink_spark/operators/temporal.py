@@ -27,6 +27,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# day 0 of every day-indexed operator (integer days since EPOCH)
+EPOCH = "2024-01-01"
+# the conversion event type of the funnel/attribution operators
+CONVERSION = "purchase"
+# window_range_count's look-back, in seconds (6 h)
+LOOKBACK_S = 21_600
+# gini_concentration's top share: the n div TOP_DIVISOR busiest keys
+TOP_DIVISOR = 10
+
 
 def asof_join(
     left: DataFrame,
@@ -103,10 +112,9 @@ def window_range_count(
     on: str,
     ts_col: str = "ts",
     seq_col: str = "event_id",
-    lookback_s: int = 3600,
 ) -> DataFrame:
     """Range-join semantics without the range join: for each left row, the
-    COUNT of right rows on the same key within ``[t - lookback_s, t]``
+    COUNT of right rows on the same key within ``[t - LOOKBACK_S, t]``
     (closed on both ends — see marker ordering below).
 
     The naive form is a banded theta join (r.ts in a window around l.ts) —
@@ -117,7 +125,7 @@ def window_range_count(
 
     Marker ordering at equal instants: +1 markers (side 0) sort before the
     left probe (side 1), which sorts before -1 expiry markers (side 2) — a
-    right row exactly ``lookback_s`` old is still counted (closed lower
+    right row exactly ``LOOKBACK_S`` old is still counted (closed lower
     bound), one landing at the probe instant is counted (closed upper bound).
 
     NULL semantics match the SQL predicates (``asof_join`` note applies):
@@ -134,7 +142,7 @@ def window_range_count(
     )
     minus = right.select(
         F.col(on).alias("k"),
-        (F.col(ts_col) + F.expr(f"INTERVAL {lookback_s} SECOND")).alias("t"),
+        (F.col(ts_col) + F.expr(f"INTERVAL {LOOKBACK_S} SECOND")).alias("t"),
         F.lit(2).alias("side"),
         F.col(seq_col).alias("seq"),
         F.lit(-1).alias("delta"),
@@ -217,17 +225,15 @@ def retention_cohorts(
     events: DataFrame,
     user_col: str,
     ts_col: str,
-    epoch: str = "2024-01-01",
-    period_days: int = 7,
 ) -> DataFrame:
     """Cohort retention table: users bucketed by the period of their FIRST
     event (the cohort), then counted at each later period offset, with
     retention as an exact integer ppm of the cohort's size — the activity
     analogue of the funnel (who comes back, vs who converts).
 
-    Period index = integer days since ``epoch`` floor-divided by
-    ``period_days`` — pure integer date arithmetic, no engine-specific
-    date_trunc('week') start-of-week conventions in the parity surface.
+    Period index = integer days since ``EPOCH`` floor-divided by 7 — pure
+    integer date arithmetic, no engine-specific date_trunc('week')
+    start-of-week conventions in the parity surface.
 
     Scale notes (100 TB): the raw stream collapses to distinct
     (user, period) in one keyed partial agg before anything else; cohort
@@ -237,9 +243,7 @@ def retention_cohorts(
 
     Returns (cohort_week, week_offset, n_users, cohort_size, retention_ppm).
     """
-    period = F.expr(
-        f"cast(datediff(to_date({ts_col}), date'{epoch}') div {period_days} as bigint)"
-    )
+    period = F.expr(f"cast(datediff(to_date({ts_col}), date'{EPOCH}') div 7 as bigint)")
     w = events.select(F.col(user_col).alias("u"), period.alias("wk")).distinct()
     f = w.groupBy("u").agg(F.min("wk").alias("cohort"))
     act = (
@@ -316,7 +320,6 @@ def session_paths(
     ts_col: str,
     type_col: str,
     id_col: str,
-    gap_us: int = 1800 * 1_000_000,
 ) -> DataFrame:
     """Session path mining: gap-sessionize each user's stream (same
     30-minute-gap rule as the sessionization operator), concatenate each
@@ -353,7 +356,7 @@ def session_paths(
         "ts",
         "eid",
         "etype",
-        F.when(gap <= gap_us, 0).otherwise(1).alias("is_new"),
+        F.when(gap <= 1800 * 1_000_000, 0).otherwise(1).alias("is_new"),
     )
     sess = marked.select(
         "u",
@@ -480,12 +483,10 @@ def anomaly_mad(
     events: DataFrame,
     type_col: str = "event_type",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
-    k_mad: int = 3,
 ) -> DataFrame:
     """Robust daily-volume anomaly flags per event type: a day is anomalous
     when its event count deviates from the type's median daily count by
-    more than ``k_mad`` median-absolute-deviations — the classic
+    more than 3 median-absolute-deviations — the classic
     median/MAD detector (Leys et al. 2013), immune to the very outliers it
     hunts, unlike mean/stddev z-scores. When MAD = 0 (a perfectly steady
     series) ANY deviation from the median is flagged — the strictest
@@ -493,7 +494,7 @@ def anomaly_mad(
 
     Both medians are exact percentile_disc(0.5) picks in pure integer
     arithmetic — no engine-specific percentile interpolation in the parity
-    surface. Day = integer days since ``epoch`` (retention_cohorts'
+    surface. Day = integer days since ``EPOCH`` (retention_cohorts'
     convention; no timezone/week-start conventions).
 
     Scale notes (100 TB): the raw stream collapses to the (types × days)-
@@ -503,7 +504,7 @@ def anomaly_mad(
 
     Returns (event_type, day, n_events, med, mad, is_anomaly).
     """
-    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)")
+    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)")
     daily = (
         events.select(F.col(type_col).alias("event_type"), day.alias("day"))
         .groupBy("event_type", "day")
@@ -529,7 +530,7 @@ def anomaly_mad(
         "n_events",
         "med",
         "mad",
-        (F.col("_dev") > F.lit(int(k_mad)) * F.col("mad")).alias("is_anomaly"),
+        (F.col("_dev") > F.lit(3) * F.col("mad")).alias("is_anomaly"),
     )
 
 
@@ -635,9 +636,6 @@ def cusum_drift(
     events: DataFrame,
     type_col: str = "event_type",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
-    slack_pct: int = 25,
-    h_mult: int = 3,
 ) -> DataFrame:
     """One-sided (upward) CUSUM drift detection on daily event volume per
     type (Page 1954) — the sequential change-point detector next to the
@@ -655,16 +653,16 @@ def cusum_drift(
     it (the per-type day series lives inside its own hash partition).
 
     All arithmetic is exact integer milli-units: mean_milli is a floor
-    division of positive counts, the slack allowance is ``slack_pct``% of
+    division of positive counts, the slack allowance is 25% of
     the mean (k = 0.25·μ is the classic half-shift-of-half-a-sigma-ish
     default when no sigma is trusted), and the decision band is
-    ``h_mult``·mean_milli. Day = integer days since ``epoch``
+    3·mean_milli. Day = integer days since ``EPOCH``
     (retention_cohorts' convention).
 
     Returns (event_type, day, n_events, mean_milli, cusum_milli,
     is_drift), one row per observed type-day.
     """
-    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)")
+    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)")
     daily = (
         events.select(F.col(type_col).alias("event_type"), day.alias("day"))
         .groupBy("event_type", "day")
@@ -678,7 +676,7 @@ def cusum_drift(
     dev = daily.join(stats, "event_type").withColumn(
         "d",
         F.expr(
-            f"1000 * n_events - mean_milli - (mean_milli * {int(slack_pct)})"
+            f"1000 * n_events - mean_milli - (mean_milli * 25)"
             " div 100"
         ).cast("long"),
     )
@@ -697,7 +695,7 @@ def cusum_drift(
         "mean_milli",
         (F.col("r") - F.col("m")).cast("long").alias("cusum_milli"),
         (
-            F.col("r") - F.col("m") > F.lit(int(h_mult)) * F.col("mean_milli")
+            F.col("r") - F.col("m") > F.lit(3) * F.col("mean_milli")
         ).alias("is_drift"),
     )
 
@@ -707,7 +705,6 @@ def rfm_segments(
     user_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """RFM user segmentation (Hughes 1994, the classic marketing-analytics
     cut): per user, Recency = days since last event (relative to the
@@ -734,7 +731,7 @@ def rfm_segments(
     """
     from blink_spark.operators.corpus import exact_quantiles
 
-    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)")
+    day = F.expr(f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)")
     per = (
         events.select(
             F.col(user_col).alias("user_id"),
@@ -821,7 +818,6 @@ def rfm_segments(
 def gini_concentration(
     events: DataFrame,
     key_col: str = "user_id",
-    top_divisor: int = 10,
 ) -> DataFrame:
     """Gini coefficient + top-decile share of activity concentration — the
     Lorenz-curve inequality readout (how concentrated is event volume over
@@ -842,11 +838,11 @@ def gini_concentration(
 
     Returns one row: (n_keys, total, gini_ppm, top_share_ppm, n_top) —
     top_share_ppm = fraction of all events produced by the top
-    n div ``top_divisor`` keys.
+    n div ``TOP_DIVISOR`` keys.
     """
     from blink_spark.operators.ids import dense_ids
 
-    d = int(top_divisor)
+    d = TOP_DIVISOR
     per = events.groupBy(F.col(key_col).alias("k")).agg(
         F.count(F.lit(1)).cast("long").alias("x")
     )
@@ -892,14 +888,12 @@ def ab_test_chi2(
     events: DataFrame,
     user_col: str = "user_id",
     event_col: str = "event_type",
-    success_value: str = "purchase",
-    salt: str = "ab",
 ) -> DataFrame:
     """Two-proportion A/B experiment readout with an exact-integer
     chi-square test (Pearson, df=1): users are split into arms by a
     deterministic md5 hash (the assignment any hash-based experiment
     framework uses — reproducible, no wall clock, no RNG), conversion is
-    "user emitted >= 1 ``success_value`` event", and significance at
+    "user emitted >= 1 ``CONVERSION`` event", and significance at
     alpha = 0.05 is the integer comparison chi2_milli > 3841.
 
     chi2 = n·(ad−bc)² / (r1·r2·c1·c2) is computed in three staged
@@ -919,16 +913,14 @@ def ab_test_chi2(
     rate_b_ppm, chi2_milli, significant).
     """
     per = events.groupBy(F.col(user_col).alias("k")).agg(
-        F.max(
-            F.when(F.col(event_col) == success_value, F.lit(1)).otherwise(0)
-        )
+        F.max(F.when(F.col(event_col) == CONVERSION, F.lit(1)).otherwise(0))
         .cast("long")
         .alias("conv")
     )
     g = (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}:"), F.col("k").cast("string"))),
+                F.md5(F.concat(F.lit("ab:"), F.col("k").cast("string"))),
                 1,
                 8,
             ),
@@ -1011,11 +1003,9 @@ def forecast_backtest_naive(
     events: DataFrame,
     key_col: str = "event_type",
     ts_col: str = "ts",
-    lag_days: int = 7,
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """Seasonal-naive forecast backtest: predict each day's event volume
-    with the volume ``lag_days`` earlier (the y_hat(t) = y(t−7) baseline
+    with the volume 7 days earlier (the y_hat(t) = y(t−7) baseline
     every real forecasting system must beat — Hyndman & Athanasopoulos,
     FPP; a pipeline that cannot beat seasonal-naive has no forecast), and
     report the exact backtest error profile per key.
@@ -1038,7 +1028,7 @@ def forecast_backtest_naive(
         events.select(
             F.col(key_col).alias("k"),
             F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)"
+                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
             ).alias("day"),
         )
         .groupBy("k", "day")
@@ -1046,7 +1036,7 @@ def forecast_backtest_naive(
     )
     pred = daily.select(
         "k",
-        (F.col("day") + int(lag_days)).alias("day"),
+        (F.col("day") + 7).alias("day"),
         F.col("n").alias("n_hat"),
     )
     j = daily.join(pred, ["k", "day"]).select(
@@ -1080,13 +1070,11 @@ def forecast_backtest_naive(
 
 def ks_two_sample(
     events: DataFrame,
-    value_expr: str = "cast(floor(value * 1000) as bigint)",
     group_col: str = "event_type",
-    group_a: str = "purchase",
-    group_b: str = "click",
 ) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov test: the largest ECDF gap
-    between two groups' value distributions — the standard "did this
+    between the milli-quantized ``value`` distributions of the purchase (a)
+    and click (b) groups — the standard "did this
     segment's metric distribution shift?" readout (a mean/chi-square test
     misses pure shape changes; KS is distribution-free).
 
@@ -1113,12 +1101,12 @@ def ks_two_sample(
     """
     from .ids import partitioned_running_sums
 
+    vm = F.expr("cast(floor(value * 1000) as bigint)")
     base = events.filter(
-        F.col(group_col).isin([group_a, group_b])
-        & F.expr(value_expr).isNotNull()
+        F.col(group_col).isin(["purchase", "click"]) & vm.isNotNull()
     ).select(
-        F.expr(value_expr).alias("vm"),
-        F.when(F.col(group_col) == group_a, F.lit(1))
+        vm.alias("vm"),
+        F.when(F.col(group_col) == "purchase", F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("is_a"),
@@ -1163,11 +1151,10 @@ def market_basket_rules(
     items: DataFrame,
     basket_col: str,
     item_col: str,
-    min_pair_support: int = 2,
 ) -> DataFrame:
     """Association-rule mining over baskets (Agrawal & Srikant 1994):
     for every DIRECTED item pair (x → y) co-occurring in at least
-    ``min_pair_support`` baskets, exact-integer support, confidence and
+    2 baskets, exact-integer support, confidence and
     lift — the co-purchase/co-occurrence affinity readout.
 
     conf(x→y) = c_xy/c_x and lift = N·c_xy/(c_x·c_y) in ppm floor
@@ -1201,7 +1188,7 @@ def market_basket_rules(
         .filter("item_x != item_y")
         .groupBy("item_x", "item_y")
         .agg(F.count(F.lit(1)).cast("long").alias("n_xy"))
-        .filter(F.col("n_xy") >= int(min_pair_support))
+        .filter(F.col("n_xy") >= 2)
     )
     out = (
         pc.join(
@@ -1241,7 +1228,6 @@ def attribution_counts(
     type_col: str = "event_type",
     ts_col: str = "ts",
     seq_col: str = "event_id",
-    conversion: str = "purchase",
 ) -> DataFrame:
     """First-touch / last-touch attribution: every conversion event
     credits one prior non-conversion touch per model — last-touch the
@@ -1259,8 +1245,8 @@ def attribution_counts(
 
     Returns (model, touch_type, n_conversions).
     """
-    conv = events.filter(F.col(type_col) == conversion)
-    touch = events.filter(F.col(type_col) != conversion)
+    conv = events.filter(F.col(type_col) == CONVERSION)
+    touch = events.filter(F.col(type_col) != CONVERSION)
     last = asof_join(
         conv,
         touch,
@@ -1312,7 +1298,6 @@ def dispersion_index(
     events: DataFrame,
     key_col: str = "event_type",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """Index of dispersion (variance-to-mean ratio) of daily event
     volume per key — the burstiness classifier beside CUSUM/burst-score:
@@ -1339,7 +1324,7 @@ def dispersion_index(
         events.select(
             F.col(key_col).alias("k"),
             F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)"
+                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
             ).alias("day"),
         )
         .groupBy("k", "day")
@@ -1377,7 +1362,6 @@ def changepoint_days(
     events: DataFrame,
     key_col: str = "event_type",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """Changepoint localization per key: the observed day where the
     cumulative event count deviates most from a uniform rate — the
@@ -1402,7 +1386,7 @@ def changepoint_days(
         events.select(
             F.col(key_col).alias("k"),
             F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{epoch}') as bigint)"
+                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
             ).alias("day"),
         )
         .groupBy("k", "day")
@@ -1464,7 +1448,6 @@ def conversion_lag_histogram(
     type_col: str = "event_type",
     ts_col: str = "ts",
     seq_col: str = "event_id",
-    conversion: str = "purchase",
 ) -> DataFrame:
     """Time-to-convert distribution: for each conversion, the lag in
     seconds since the user's FIRST prior touch (the attribution
@@ -1489,12 +1472,12 @@ def conversion_lag_histogram(
     Returns (bucket_floor_s, n_conversions) — bucket −1 = untouched,
     0 = sub-second.
     """
-    conv = events.filter(F.col(type_col) == conversion).select(
+    conv = events.filter(F.col(type_col) == CONVERSION).select(
         F.col(user_col).alias("u"), F.col(ts_col).alias("cts")
     )
     ft = (
         events.filter(
-            (F.col(type_col) != conversion)
+            (F.col(type_col) != CONVERSION)
             & F.col(user_col).isNotNull()
             & F.col(ts_col).isNotNull()
         )
@@ -1599,13 +1582,12 @@ def stickiness(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    epoch: str = "2024-01-01",
 ) -> DataFrame:
     """Engagement stickiness per 28-day period: mean 7-day active users
     over the period divided by the period's 28-day active users — the
     WAU/MAU product-analytics ratio (1.0 = every period-active user is
     active every week; low = drive-by usage). A fixed 28-day grid of
-    exactly four 7-day weeks (days since ``epoch``, documented
+    exactly four 7-day weeks (days since ``EPOCH``, documented
     pseudo-calendar) rather than calendar weeks: ISO week numbering
     differs across engines and splits months unevenly, while the fixed
     grid is engine-identical and every period has the same four weeks.
@@ -1629,7 +1611,7 @@ def stickiness(
         .select(
             F.col(user_col).alias("u"),
             F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{epoch}')"
+                f"cast(datediff(to_date({ts_col}), date'{EPOCH}')"
                 " as bigint) div 7"
             )
             .cast("long")
@@ -1671,9 +1653,6 @@ def bot_flags(
     type_col: str = "event_type",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    rate_milli_min: int = 5000,
-    top_share_ppm_min: int = 800000,
-    gap_disp_milli_max: int = 100,
 ) -> DataFrame:
     """Rule-based bot/abuse screening per user — the three classic
     behavioural tells, each an exact integer feature: (1) RATE — events
@@ -1753,11 +1732,9 @@ def bot_flags(
             F.expr("(1000000 * top_c) div n_events").cast("long"),
         )
     )
-    fr = F.col("rate_milli") >= int(rate_milli_min)
-    fd = F.col("top_share_ppm") >= int(top_share_ppm_min)
-    fm = F.coalesce(
-        F.col("gap_disp_milli") <= int(gap_disp_milli_max), F.lit(False)
-    )
+    fr = F.col("rate_milli") >= 5000
+    fd = F.col("top_share_ppm") >= 800000
+    fm = F.coalesce(F.col("gap_disp_milli") <= 100, F.lit(False))
     return j.select(
         F.col("u").alias(user_col),
         "n_events",
@@ -1778,7 +1755,6 @@ def aging_report(
     df: DataFrame,
     date_col: str,
     status_col: str,
-    open_values: tuple[str, ...] = ("O", "P"),
 ) -> DataFrame:
     """Open-item aging report at the as-of snapshot max(date): how long
     have still-open items been waiting, bucketed into the operational
@@ -1796,7 +1772,7 @@ def aging_report(
     Returns (status, age_bucket, bucket_label, n_items) with
     age_bucket in {-1, 0, 31, 91, 366}.
     """
-    base = df.filter(F.col(status_col).isin(list(open_values)))
+    base = df.filter(F.col(status_col).isin(["O", "P"]))
     snap = df.agg(F.max(F.col(date_col)).alias("snap"))
     aged = base.crossJoin(F.broadcast(snap)).select(
         F.col(status_col).alias("status"),
@@ -1833,15 +1809,13 @@ def churn_risk(
     user_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    min_events: int = 3,
-    risk_milli_min: int = 3000,
 ) -> DataFrame:
     """Cadence-relative churn risk at the data's own as-of snapshot
     (max ts — no wall clock): a user's current silence divided by their
     OWN median inter-event gap — the scale-free inactivity score (3×
     your usual cadence quiet is alarming whether you visit hourly or
     monthly; an absolute days-since threshold misclassifies both).
-    Users with fewer than ``min_events`` events have no cadence and are
+    Users with fewer than 3 events have no cadence and are
     excluded (documented, not silently scored).
 
     Exact integers: gaps and silence in whole seconds (µs diff floored,
@@ -1877,7 +1851,7 @@ def churn_risk(
     snap = base.agg(F.max(F.col(ts_col)).alias("snap"))
     j = (
         last.join(med, "u")
-        .filter(F.col("n_events") >= int(min_events))
+        .filter(F.col("n_events") >= 3)
         .crossJoin(F.broadcast(snap))
         .withColumn(
             "silence_s",
@@ -1896,7 +1870,5 @@ def churn_risk(
         F.col("median_gap_s").cast("long"),
         "silence_s",
         risk.alias("risk_milli"),
-        F.coalesce(risk >= int(risk_milli_min), F.lit(False)).alias(
-            "at_risk"
-        ),
+        F.coalesce(risk >= 3000, F.lit(False)).alias("at_risk"),
     )

@@ -414,12 +414,11 @@ def dedup_documents_pipeline(
     documents: DataFrame,
     id_col: str,
     text_col: str,
-    cfg: PipelineConfig | None = None,
 ) -> DataFrame:
     """In-memory run over a flat (id, text) table — near-duplicate
-    clustering (the flagship `entry()` query), MinHash blocks only. Default
-    config: wide shingles (see minhash_shingle_n)."""
-    cfg = cfg or PipelineConfig(minhash_shingle_n=7, minhash_rows=4)
+    clustering (the flagship `entry()` query), MinHash blocks only, with
+    wide shingles (see minhash_shingle_n)."""
+    cfg = PipelineConfig(minhash_shingle_n=7, minhash_rows=4)
 
     def records():
         return spread(documents.select(

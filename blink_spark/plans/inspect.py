@@ -19,10 +19,10 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
-        df.explain(mode=mode)
+        df.explain(mode="formatted")
     return buf.getvalue()
 
 

@@ -5,7 +5,7 @@ Spark-first re-expression of the reference's line-by-line JSONL loaders:
   (/root/reference/blink/main_dense.py:99-151)
 - test mentions: lowercase everything, keep only rows whose label resolves
   in the KB (/root/reference/blink/main_dense.py:173-207)
-- generic dataset reader with a debug cap
+- generic dataset reader; its debug cap is the caller's ``.limit(n)``
   (/root/reference/blink/candidate_ranking/utils.py:24-36)
 """
 
@@ -39,7 +39,6 @@ def read_entity_catalogue(spark: SparkSession, path: str) -> DataFrame:
 
 def read_mentions_jsonl(
     spark: SparkSession, path: str, entities: DataFrame | None = None,
-    debug_limit: int | None = None,
 ) -> DataFrame:
     """Mention records, lowercased; optionally left-semi-filtered to rows
     whose label_title resolves in the entity catalogue (the keep side of the
@@ -53,8 +52,6 @@ def read_mentions_jsonl(
         F.lower("context_right").alias("context_right"),
         F.lower("label").alias("label_title"),
     )
-    if debug_limit:
-        m = m.limit(debug_limit)
     if entities is not None:
         kb = entities.select(F.lower("title").alias("label_title"))
         m = m.join(F.broadcast(kb), "label_title", "left_semi")

@@ -2,7 +2,7 @@
 before indexing its entity catalogue
 (/root/reference/blink/candidate_retrieval/data_ingestion.py:81-155):
 
-- drop entities with fewer than ``min_tokens`` intro tokens;
+- drop entities with fewer than ``MIN_TOKENS`` intro tokens;
 - drop disambiguation pages — 'disambiguation'/'Disambiguation' anywhere in
   the title, or 'disambiguation page'/'Disambiguation page' in the wikidata
   description (data_ingestion.py:118-155);
@@ -22,6 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# the reference's document-length gate
+MIN_TOKENS = 5
 
 # pure-emoji alias detector: the common emoji planes. The reference tests
 # dict membership in emoji.UNICODE_EMOJI; a codepoint-class regex is the
@@ -49,19 +52,18 @@ def strip_emoji_aliases(aliases: F.Column) -> F.Column:
     return F.filter(aliases, lambda a: ~a.rlike(EMOJI_ALIAS_RE))
 
 
-def kb_ingestion_filter(
-    kb: DataFrame, min_tokens: int = 5
-) -> tuple[DataFrame, DataFrame]:
+def kb_ingestion_filter(kb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(kept, counters) over a raw KB table with columns
     (title, description, num_tokens, aliases, ...).
 
-    kept = input rows passing both gates, with ``aliases`` emoji-stripped
+    kept = input rows passing both gates (at least MIN_TOKENS tokens, not a
+    disambiguation page), with ``aliases`` emoji-stripped
     and ``n_aliases_dropped`` recording the strip. counters = one row per
     drop class (kept / dropped_short / dropped_disambiguation) with counts.
     """
     counters = kb.withColumn(
         "_class",
-        F.when(F.col("num_tokens") < min_tokens, F.lit("dropped_short"))
+        F.when(F.col("num_tokens") < MIN_TOKENS, F.lit("dropped_short"))
         .when(_is_disambiguation(), F.lit("dropped_disambiguation"))
         .otherwise(F.lit("kept")),
     ).groupBy(F.col("_class").alias("drop_class")).agg(
@@ -84,7 +86,7 @@ def kb_ingestion_filter(
         & ~F.col("description").contains("Disambiguation page")
     )
     kept = (
-        kb.filter(F.col("num_tokens") >= min_tokens)
+        kb.filter(F.col("num_tokens") >= MIN_TOKENS)
         .filter(keep_title & keep_desc)
         .withColumn(
             "n_aliases_dropped",

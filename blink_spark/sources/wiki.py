@@ -19,13 +19,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_wiki_extractor(spark: SparkSession, path: str, full_text: bool = False) -> DataFrame:
+def read_wiki_extractor(spark: SparkSession, path: str) -> DataFrame:
     """Line-oriented wiki-extractor output → one row per <doc> block.
 
     Sessionize lines by the <doc ...> opener (running sum), group, then
-    regex-project id/title; text = lines between the tags (first paragraph
-    only unless full_text — the reference keeps line 3 of each block,
-    process_wiki_extractor_output.py:62-76).
+    regex-project id/title; text = every line between the tags, the title
+    line included (process_wiki_extractor_output_full.py:52-94).
     """
     from blink_spark.operators.ids import partitioned_running_sum
     from blink_spark.sources.lines import numbered_lines
@@ -46,11 +45,7 @@ def read_wiki_extractor(spark: SparkSession, path: str, full_text: bool = False)
         F.slice(all_lines, 2, F.greatest(F.size(all_lines) - 1, F.lit(0))),
         lambda x: (x != "</doc>") & (F.trim(x) != ""),
     )
-    # reference: element 0 of body is the title line, body text starts after
-    if full_text:
-        text = F.array_join(body, "\n")
-    else:
-        text = F.coalesce(F.element_at(body, 2), F.lit(""))
+    text = F.array_join(body, "\n")
     return grouped.select(
         F.regexp_extract(header, r'id="(\d+)"', 1).cast("long").alias("wikipedia_id"),
         F.regexp_extract(header, r'title="([^"]*)"', 1).alias("title"),

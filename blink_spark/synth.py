@@ -130,9 +130,9 @@ def _corrupt(title: str, aliases: list[str], key: int) -> str:
 def make_documents_and_mentions(
     entities: pd.DataFrame,
     n_docs: int = 2000,
-    mentions_per_doc: int = 3,
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Interleaved documents + the exploded gold mention view.
+    """Interleaved documents + the exploded gold mention view, three
+    mentions per document.
 
     Each document alternates text / mention / media spans with strictly
     increasing char offsets (the span-sequence invariant under test).
@@ -149,7 +149,7 @@ def make_documents_and_mentions(
         spans = []
         offset = 0
         span_idx = 0
-        for m in range(mentions_per_doc):
+        for m in range(3):
             left = " ".join(_pick(_WORDS, "L", d, m, j) for j in range(4))
             spans.append({"kind": "text", "text": left, "media_ref": None, "offset": offset})
             offset += len(left) + 1
@@ -223,15 +223,15 @@ def make_gold_pairs(mentions: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["mention_id_a", "mention_id_b", "same_entity", "block_key"])
 
 
-def make_questions(entities: pd.DataFrame, n_questions: int = 300) -> pd.DataFrame:
-    """ELQ-style multi-mention rows with parallel arrays (FIXTURES.md §6;
+def make_questions(entities: pd.DataFrame) -> pd.DataFrame:
+    """300 ELQ-style multi-mention rows with parallel arrays (FIXTURES.md §6;
     schema documented at /root/reference/elq/main_dense.py:150-172):
     mentions are [start, end) char offsets (exclusive end, raw-data
     convention before the inclusive conversion at
     /root/reference/elq/biencoder/data_process.py:410-411)."""
     ents = entities.to_dict("records")
     rows = []
-    for q in range(n_questions):
+    for q in range(300):
         n_m = 1 + _h("nm", q) % 3
         parts: list[str] = []
         bounds: list[list[int]] = []
@@ -294,13 +294,14 @@ def make_embeddings_fx() -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def make_sentences_fx(n_rows: int = 200) -> pd.DataFrame:
-    """Multi-sentence text fixture (the testdata documents carry no sentence
+def make_sentences_fx() -> pd.DataFrame:
+    """200-row multi-sentence text fixture (the testdata documents carry no
+    sentence
     punctuation, so sentence ops need their own fixture). 1-5 sentences per
     row with ., !, ? terminators and irregular spacing."""
     terms = [". ", "! ", "? ", ".  "]
     rows = []
-    for i in range(n_rows):
+    for i in range(200):
         n_sent = 1 + _h("ns", i) % 5
         parts = []
         for s in range(n_sent):
@@ -313,10 +314,10 @@ def make_sentences_fx(n_rows: int = 200) -> pd.DataFrame:
 _KB_EMOJI = ["\U0001F600", "\U0001F680", "☀", "\U0001F40D"]
 
 
-def make_kb_raw(entities: pd.DataFrame, min_tokens: int = 5) -> pd.DataFrame:
+def make_kb_raw(entities: pd.DataFrame) -> pd.DataFrame:
     """Pre-ingestion KB rows with the defects the reference's ingestion
     filter drops (/root/reference/blink/candidate_retrieval/
-    data_ingestion.py:81-155): short stubs (num_tokens < min), disambiguation
+    data_ingestion.py:81-155): short stubs (1-3 tokens), disambiguation
     pages (in the title or in the wikidata description), and pure-emoji
     aliases. Injection is deterministic by entity_id so every drop class is
     non-empty and the kept set is stable."""
@@ -516,8 +517,9 @@ def _write_conll_stream_fixture(out_dir: str, entities: pd.DataFrame) -> str:
     return path
 
 
-def write_fixtures(out_dir: str, n_docs: int = 2000, n_entities: int = 500) -> dict[str, str]:
-    """Write all fixture parquet files; returns {table: path}. Idempotent."""
+def write_fixtures(out_dir: str) -> dict[str, str]:
+    """Write all fixture parquet files (500 entities, 2000 documents);
+    returns {table: path}. Idempotent."""
     os.makedirs(out_dir, exist_ok=True)
     paths = {t: os.path.join(out_dir, f"{t}.parquet") for t in
              ("entities", "documents", "mentions", "gold_pairs", "questions",
@@ -530,8 +532,8 @@ def write_fixtures(out_dir: str, n_docs: int = 2000, n_entities: int = 500) -> d
     paths["conll_stream"] = os.path.join(out_dir, "conll_stream.txt")
     if all(os.path.exists(p) for p in paths.values()):
         return paths
-    ents = make_entities(n_entities)
-    docs, ments = make_documents_and_mentions(ents, n_docs=n_docs)
+    ents = make_entities()
+    docs, ments = make_documents_and_mentions(ents)
     gold = make_gold_pairs(ments)
     questions = make_questions(ents)
     ents.to_parquet(paths["entities"], index=False)

@@ -141,7 +141,7 @@ def test_kb_filter_null_description(spark):
     kb = spark.createDataFrame(
         rows, "title string, description string, num_tokens int, aliases array<string>"
     )
-    kept, counters = kb_ingestion_filter(kb, min_tokens=5)
+    kept, counters = kb_ingestion_filter(kb)
     cnt = {r.drop_class: r.n for r in counters.collect()}
     assert cnt == {"kept": 3, "dropped_short": 1, "dropped_disambiguation": 1}
     assert kept.count() == cnt["kept"]
@@ -261,7 +261,7 @@ def test_label_propagation_splits_bridged_triangles(spark):
     )
     out = {
         r["record_id"]: (r["lp_label"], r["community_size"])
-        for r in label_propagation(edges, rounds=3).collect()
+        for r in label_propagation(edges).collect()
     }
     # hand-traced 3 synchronous sweeps (min-label ties):
     assert out == {

@@ -96,7 +96,7 @@ def test_tfidf_rank_prefers_rare_terms(spark):
         ],
         "doc_id bigint, text string",
     )
-    out = tfidf_top_terms(docs, k=3)
+    out = tfidf_top_terms(docs)
     by_doc = {}
     for r in out.collect():
         by_doc.setdefault(r["doc_id"], []).append((r["rank"], r["term"], r["tf"], r["df"]))
@@ -189,7 +189,7 @@ def test_tfidf_vs_python_reference(spark):
     docs = _random_corpus(seed=11)
     sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
     got: dict[int, list] = {}
-    for r in tfidf_top_terms(sdf, k=3).collect():
+    for r in tfidf_top_terms(sdf).collect():
         got.setdefault(r["doc_id"], []).append((r["rank"], r["term"], r["tf"], r["df"]))
     for v in got.values():
         v.sort()
@@ -239,7 +239,6 @@ def test_decontaminate_vs_python_reference(spark):
         for r in decontaminate(
             spark.createDataFrame(corpus, "doc_id bigint, text string"),
             spark.createDataFrame(ev, "doc_id bigint, text string"),
-            n=4,
         ).collect()
     }
     ev_grams = set()
@@ -288,7 +287,7 @@ def test_decontaminate_probe_is_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_curation_pipeline_planted(spark):
+def test_curation_pipeline_planted(spark, monkeypatch):
     """Each curation stage drops exactly its targets: short docs, repetitive
     docs, non-keeper duplicates; survivors keep their feature values."""
     import hashlib
@@ -305,15 +304,17 @@ def test_curation_pipeline_planted(spark):
     ]
     sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
     # disable sampling first so only the quality/dedup stages act
-    kept = {r["doc_id"] for r in curation_pipeline(sdf, sample_ppm=1_000_000).collect()}
+    monkeypatch.setattr("blink_spark.operators.corpus.CURATION_SAMPLE_PPM", 1_000_000)
+    kept = {r["doc_id"] for r in curation_pipeline(sdf).collect()}
     assert kept == {1, 5}
 
     # sampling stage: keep decisions must follow the md5 rule exactly
     def smp(i: int) -> int:
         return int(hashlib.md5(f"cur:{i}".encode()).hexdigest()[:8], 16) % 1_000_000
 
+    monkeypatch.setattr("blink_spark.operators.corpus.CURATION_SAMPLE_PPM", 500_000)
     kept_sampled = {
-        r["doc_id"] for r in curation_pipeline(sdf, sample_ppm=500_000).collect()
+        r["doc_id"] for r in curation_pipeline(sdf).collect()
     }
     assert kept_sampled == {i for i in (1, 5) if smp(i) < 500_000}
 
@@ -351,7 +352,7 @@ def test_curation_pipeline_vs_python_reference(spark):
     assert got == expect
 
 
-def test_chunk_windows_planted(spark):
+def test_chunk_windows_planted(spark, monkeypatch):
     """Chunk boundaries, ragged last chunk, and empty-doc behavior are exact."""
     from blink_spark.operators.corpus import chunk_windows
 
@@ -359,9 +360,10 @@ def test_chunk_windows_planted(spark):
     docs = spark.createDataFrame(
         [(1, "a b c d e"), (2, "")], "doc_id bigint, text string"
     )
+    monkeypatch.setattr("blink_spark.operators.corpus.CHUNK_SIZE", 2)
     rows = {
         (r.doc_id, r.chunk_idx): (r.start_pos, r.n_chunk_toks, r.chunk_hash)
-        for r in chunk_windows(docs, size=2).collect()
+        for r in chunk_windows(docs).collect()
     }
     assert rows == {
         (1, 0): (0, 2, md5("a b")),
@@ -372,14 +374,15 @@ def test_chunk_windows_planted(spark):
     }
 
 
-def test_chunk_windows_vs_python_reference(spark):
+def test_chunk_windows_vs_python_reference(spark, monkeypatch):
     from blink_spark.operators.corpus import chunk_windows
 
     docs = _random_corpus(seed=43)
     sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
+    monkeypatch.setattr("blink_spark.operators.corpus.CHUNK_SIZE", 7)
     got = {
         (r.doc_id, r.chunk_idx): (r.start_pos, r.n_chunk_toks, r.chunk_hash)
-        for r in chunk_windows(sdf, size=7).collect()
+        for r in chunk_windows(sdf).collect()
     }
     expect = {}
     for i, t in docs:
@@ -405,7 +408,7 @@ def test_chunk_windows_plan_is_narrow(spark):
         assert bad not in plan, bad
 
 
-def test_vocab_coverage_planted(spark):
+def test_vocab_coverage_planted(spark, monkeypatch):
     """Top-V election breaks count ties by token asc; OOV fraction exact."""
     from blink_spark.operators.corpus import vocab_coverage
 
@@ -413,21 +416,19 @@ def test_vocab_coverage_planted(spark):
         [(1, "a a b"), (2, "b c")], "doc_id bigint, text string"
     )
     # counts: a=2, b=2, c=1; V=1 elects 'a' (tie → lexicographically first)
-    got = _collect_map(
-        vocab_coverage(docs, vocab_size=1), "doc_id", "n_toks", "n_oov", "oov_frac"
-    )
+    monkeypatch.setattr("blink_spark.operators.corpus.VOCAB_SIZE", 1)
+    got = _collect_map(vocab_coverage(docs), "doc_id", "n_toks", "n_oov", "oov_frac")
     assert got == {1: (3, 1, 0.333333), 2: (2, 2, 1.0)}
 
 
-def test_vocab_coverage_vs_python_reference(spark):
+def test_vocab_coverage_vs_python_reference(spark, monkeypatch):
     from blink_spark.operators.corpus import vocab_coverage
 
     docs = _random_corpus(seed=47)
     sdf = spark.createDataFrame(docs, "doc_id bigint, text string")
     V = 3
-    got = _collect_map(
-        vocab_coverage(sdf, vocab_size=V), "doc_id", "n_toks", "n_oov", "oov_frac"
-    )
+    monkeypatch.setattr("blink_spark.operators.corpus.VOCAB_SIZE", V)
+    got = _collect_map(vocab_coverage(sdf), "doc_id", "n_toks", "n_oov", "oov_frac")
     counts: dict[str, int] = {}
     for _, t in docs:
         for tok in _py_norm_tokens(t):
@@ -453,7 +454,7 @@ def test_vocab_probe_is_broadcast(spark):
     assert "TakeOrderedAndProject" in plan  # top-V election, not a global sort
 
 
-def test_pack_sequences_planted(spark):
+def test_pack_sequences_planted(spark, monkeypatch):
     """Next-fit packing: budget overflow opens a new sequence; oversize docs
     get a sequence of their own; order is doc_id within the group."""
     from blink_spark.operators.corpus import pack_sequences
@@ -463,8 +464,10 @@ def test_pack_sequences_planted(spark):
         [(i, " ".join(f"t{i}x{j}" for j in range(n)), "s0") for i, n in toks.items()],
         "doc_id bigint, text string, source string",
     )
+    monkeypatch.setattr("blink_spark.operators.corpus.PACK_BUDGET", 10)
+    monkeypatch.setattr("blink_spark.operators.corpus.PACK_SHARDS", 1)
     got = _collect_map(
-        pack_sequences(docs, budget=10, n_shards=1),
+        pack_sequences(docs),
         "doc_id", "stratum", "shard", "seq_id", "n_toks",
     )
     # 4+5=9 fits; +3 would overflow → seq2; +11 overflows → seq3 (oversize
@@ -478,7 +481,7 @@ def test_pack_sequences_planted(spark):
     }
 
 
-def test_pack_sequences_vs_python_reference(spark):
+def test_pack_sequences_vs_python_reference(spark, monkeypatch):
     from blink_spark.operators.corpus import pack_sequences
 
     rng = random.Random(53)
@@ -489,8 +492,10 @@ def test_pack_sequences_vs_python_reference(spark):
     ]
     sdf = spark.createDataFrame(docs, "doc_id bigint, text string, source string")
     budget, n_shards = 64, 4
+    monkeypatch.setattr("blink_spark.operators.corpus.PACK_BUDGET", budget)
+    monkeypatch.setattr("blink_spark.operators.corpus.PACK_SHARDS", n_shards)
     got = _collect_map(
-        pack_sequences(sdf, budget=budget, n_shards=n_shards),
+        pack_sequences(sdf),
         "doc_id", "stratum", "shard", "seq_id", "n_toks",
     )
     groups: dict[tuple[str, int], list[tuple[int, int]]] = {}

@@ -97,7 +97,7 @@ def test_ann_lsh_recall_floor(spark):
     on the testdata embeddings (asserted, not just emitted — round-1 gap).
 
     Measured ~0.51 at 4 planes / 1-bit probe on these 500 64-dim vectors;
-    the operator's recall knobs are n_planes/probe_bits (nprobe analogue)."""
+    the operator's recall knob is n_planes."""
     import __spark_entry__ as entry
 
     row = entry.queries()["ann_lsh_recall"](
@@ -107,52 +107,6 @@ def test_ann_lsh_recall_floor(spark):
     assert row.recall >= 0.4, f"ANN recall {row.recall} below floor"
 
 
-def test_ivf_kmeans_codebook_beats_first_items_on_clustered_data(spark):
-    """Round-2 verdict #10: the trained (seeded KMeans) codebook must beat
-    the deterministic first-items codebook at EQUAL nprobe on a clustered
-    fixture built so the lowest-id items all sit in ONE true cluster — the
-    adversarial case where an untrained codebook collapses every cell onto
-    one region and recall craters."""
-    import numpy as np
-
-    from blink_spark.operators.ann import brute_force_topk, ivf_topk, ann_recall_vs_exact
-
-    rng = np.random.default_rng(7)
-    n_clusters, per, dim = 8, 40, 16
-    rows = []
-    vid = 0
-    # ids assigned cluster-major: ids 0..39 are ALL cluster 0
-    for c in range(n_clusters):
-        center = np.zeros(dim)
-        center[2 * c] = 1.0
-        center[2 * c + 1] = 0.5
-        for _ in range(per):
-            v = center + rng.normal(0, 0.05, dim)
-            v = v / np.linalg.norm(v)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    items = spark.createDataFrame(rows, "vec_id BIGINT, emb ARRAY<DOUBLE>")
-    qs = items.filter(F.col("vec_id") % 10 == 3).select(
-        F.col("vec_id").alias("qid"), F.col("emb").alias("qv")
-    )
-    kw = dict(
-        k=5, n_centroids=n_clusters, nprobe=1,
-        query_id="qid", query_emb="qv", item_id="vec_id", item_emb="emb",
-    )
-    exact = brute_force_topk(
-        qs, items, k=5, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="emb",
-    ).localCheckpoint()
-    r_first = ann_recall_vs_exact(
-        ivf_topk(qs, items, codebook="first_items", **kw), exact
-    ).collect()[0].recall
-    r_kmeans = ann_recall_vs_exact(
-        ivf_topk(qs, items, codebook="kmeans", **kw), exact
-    ).collect()[0].recall
-    assert r_kmeans > r_first, (r_kmeans, r_first)
-    assert r_kmeans >= 0.95, r_kmeans
-
-
 def test_winnow_fingerprints_guarantee_and_density(spark):
     """Winnowing invariants (Schleimer et al. 2003): (1) any substring match
     of length >= w + k - 1 yields >= 1 shared fingerprint hash — tested with
@@ -160,9 +114,9 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
     fingerprint density over a long random-ish text is near the expected
     2/(w+1); (3) every window of w k-grams contains a selected position
     (the local coverage guarantee that makes the scheme excerpt-robust)."""
-    from blink_spark.operators.dedup import winnow_fingerprints
+    from blink_spark.operators.dedup import WINNOW_K, WINNOW_W, winnow_fingerprints
 
-    k, w = 5, 4
+    k, w = WINNOW_K, WINNOW_W
     shared = "the quick brown fox jumps over the lazy dog near the river"
     docs = spark.createDataFrame(
         [
@@ -172,7 +126,7 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
         ],
         "doc_id string, text string",
     )
-    fps = winnow_fingerprints(docs, "doc_id", "text", k=k, w=w).toPandas()
+    fps = winnow_fingerprints(docs, "doc_id", "text").toPandas()
     by_doc = {d: set(g["fp_hash"]) for d, g in fps.groupby("record_id")}
     # (1) the shared excerpt is len(shared) >= w+k-1 chars: must share a hash
     assert len(shared) >= w + k - 1
@@ -191,7 +145,7 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
         hashlib.md5(str(i).encode()).hexdigest()[:6] for i in range(400)
     )
     one = spark.createDataFrame([("x", long_text)], "doc_id string, text string")
-    n_fp = winnow_fingerprints(one, "doc_id", "text", k=k, w=w).count()
+    n_fp = winnow_fingerprints(one, "doc_id", "text").count()
     n_grams = len(long_text) - k + 1
     density = n_fp / n_grams
     assert 1.2 / (w + 1) < density < 3.2 / (w + 1), density
@@ -275,9 +229,7 @@ def test_winnow_excerpt_pairs_finds_low_jaccard_excerpt(spark):
     )
     # containment threshold 0.8: the excerpt's grams are ~fully inside the
     # container, so |A∩B|/min(|A|,|B|) ≈ 1 even though Jaccard ≈ 0.02
-    got = winnow_excerpt_pairs(
-        docs, "doc_id", "text", min_shared=3, containment_threshold=0.8
-    ).collect()
+    got = winnow_excerpt_pairs(docs, "doc_id", "text").collect()
     pairs = {(r.record_id_a, r.record_id_b) for r in got}
     assert ("container", "source") in pairs, pairs
     assert all("other" not in p for p in pairs), pairs
@@ -292,9 +244,9 @@ def test_winnow_fingerprints_match_pure_python_reference(spark):
     import hashlib
     import random
 
-    from blink_spark.operators.dedup import winnow_fingerprints
+    from blink_spark.operators.dedup import WINNOW_K, WINNOW_W, winnow_fingerprints
 
-    k, w = 5, 4
+    k, w = WINNOW_K, WINNOW_W
     rng = random.Random(1234)
     docs = []
     for i in range(40):
@@ -324,7 +276,7 @@ def test_winnow_fingerprints_match_pure_python_reference(spark):
 
     got = winnow_fingerprints(
         spark.createDataFrame(docs, "doc_id string, text string"),
-        "doc_id", "text", k=k, w=w,
+        "doc_id", "text",
     ).collect()
     by_doc = {}
     for r in got:
@@ -358,7 +310,7 @@ def test_ivf_probe_cells_null_query_is_deterministic(spark):
     assert got == [0, 1], got
 
 
-def test_pq_encode_planted(spark):
+def test_pq_encode_planted(spark, monkeypatch):
     """A vector equal to a codebook vector encodes to that centroid with
     zero reconstruction error in every subspace; a perturbed copy still
     snaps to the nearest codebook entry with the exact integer error."""
@@ -369,14 +321,17 @@ def test_pq_encode_planted(spark):
     # vec 0/1 form the codebook (n_centroids=2); vec 2 copies vec 1.
     rows = [(0, base), (1, other), (2, other)]
     sdf = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = pq_encode(sdf, n_sub=2, d_sub=4, n_centroids=2)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_N_SUB", 2)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_D_SUB", 4)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_CENTROIDS", 2)
+    out = pq_encode(sdf)
     got = {(r.vec_id, r.sub): (r.code, r.sq_err) for r in out.collect()}
     assert got[(0, 0)] == (0, 0) and got[(0, 1)] == (0, 0)
     assert got[(1, 0)] == (1, 0) and got[(1, 1)] == (1, 0)
     assert got[(2, 0)] == (1, 0) and got[(2, 1)] == (1, 0)
 
 
-def test_pq_encode_vs_python_reference(spark):
+def test_pq_encode_vs_python_reference(spark, monkeypatch):
     """Exact integer parity against an independent pure-Python replica of
     quantize → first-k codebook → per-subspace L2 argmin."""
     import math
@@ -395,7 +350,10 @@ def test_pq_encode_vs_python_reference(spark):
         for i in range(60)
     ]
     sdf = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    out = pq_encode(sdf, n_sub=n_sub, d_sub=d_sub, n_centroids=k)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_N_SUB", n_sub)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_D_SUB", d_sub)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_ENCODE_CENTROIDS", k)
+    out = pq_encode(sdf)
     got = {(r.vec_id, r.sub): (r.code, r.sq_err) for r in out.collect()}
 
     qv = {i: [math.floor(f32(x) * 1_000_000) for x in v] for i, v in rows}
@@ -446,8 +404,7 @@ def test_pq_topk_recall_floor_and_plan(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 64)
     approx = pq_topk(
-        q, e, k=10, n_sub=16, d_sub=4, n_centroids=64,
-        query_id="vec_id", query_emb="embedding",
+        q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     plan = approx._jdf.queryExecution().executedPlan().toString()
@@ -473,7 +430,7 @@ def test_pq_topk_recall_floor_and_plan(spark):
     assert r.recall >= 0.4, r.recall
 
 
-def test_pq_topk_codebook_member_is_its_own_nearest(spark):
+def test_pq_topk_codebook_member_is_its_own_nearest(spark, monkeypatch):
     """An item that IS a codebook centroid encodes to itself in every
     subspace, so a query equal to it gets adc exactly 0 for it and must
     rank it first — falsifiable: any slice-origin or codebook bug in the
@@ -490,9 +447,13 @@ def test_pq_topk_codebook_member_is_its_own_nearest(spark):
     q = spark.createDataFrame(
         [(99, rows[3][1])], "vec_id bigint, embedding array<float>"
     )
+    # top-3 over 2 subspaces × 4 dims, 4 centroids
+    monkeypatch.setattr("blink_spark.operators.ann.ANN_K", 3)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_N_SUB", 2)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_D_SUB", 4)
+    monkeypatch.setattr("blink_spark.operators.ann.PQ_CENTROIDS", 4)
     out = pq_topk(
-        q, items, k=3, n_sub=2, d_sub=4, n_centroids=4,
-        query_id="vec_id", query_emb="embedding",
+        q, items, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     top = sorted([(r.rank, r.item_id, r.adc) for r in out.collect()])
@@ -516,8 +477,7 @@ def test_ivfpq_topk_recall_floor_and_plan(spark):
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 64)
     approx = ivfpq_topk(
-        q, e, k=10, n_coarse=16, nprobe=4, n_sub=16, d_sub=4,
-        pq_centroids=64, query_id="vec_id", query_emb="embedding",
+        q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     plan = approx._jdf.queryExecution().executedPlan().toString()
@@ -542,7 +502,7 @@ def test_ivfpq_topk_recall_floor_and_plan(spark):
     assert r.recall >= 0.3, r.recall
 
 
-def test_ivfpq_results_subset_of_probed_cells(spark):
+def test_ivfpq_results_subset_of_probed_cells(spark, monkeypatch):
     """Every IVF-PQ hit must live in one of its query's probed cells —
     the probe restriction is real, not decorative: a query's result set
     joined back to the cell assignment lands inside its probe list."""
@@ -557,9 +517,9 @@ def test_ivfpq_results_subset_of_probed_cells(spark):
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = e.filter(F.col("vec_id") < 16)
+    monkeypatch.setattr("blink_spark.operators.ann.IVFPQ_NPROBE", 2)
     out = ivfpq_topk(
-        q, e, k=10, n_coarse=16, nprobe=2, n_sub=16, d_sub=4,
-        pq_centroids=64, query_id="vec_id", query_emb="embedding",
+        q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
     it = _pq_quantized(e, "vec_id", "embedding", 64, "item_id")

@@ -31,5 +31,5 @@ def test_edit_distance_pairs_equals_bruteforce(spark):
     ]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["id", "text"]))
     got = {(r["record_id_a"], r["record_id_b"]): r["lev_dist"]
-           for r in edit_distance_pairs(df, "id", "text", max_dist=2, q=3).collect()}
+           for r in edit_distance_pairs(df, "id", "text").collect()}
     assert got == brute(rows, 2)

@@ -103,7 +103,7 @@ def test_kb_ingestion_filter_counters_and_aliases(spark, fixture_paths):
 
     kb = spark.read.parquet(fixture_paths["kb_raw"])
     n_in = kb.count()
-    kept, counters = kb_ingestion_filter(kb, min_tokens=5)
+    kept, counters = kb_ingestion_filter(kb)
     c = {r.drop_class: r.n for r in counters.collect()}
     # cap-and-report: every input row is accounted for, every class non-empty
     assert sum(c.values()) == n_in

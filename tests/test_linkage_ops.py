@@ -23,7 +23,7 @@ def test_sorted_neighborhood_matches_python_oracle(spark):
     df = spark.createDataFrame(pd.DataFrame(rows))
     got = {
         (r["record_id_a"], r["record_id_b"], r["rank_dist"])
-        for r in sorted_neighborhood_pairs(df, "id", "text", window=3).collect()
+        for r in sorted_neighborhood_pairs(df, "id", "text").collect()
     }
     # Python oracle: sort by (normalized text, id), pair with <=3 successors.
     ordered = sorted(rows, key=lambda r: (" ".join(r["text"].split()), r["id"]))
@@ -34,7 +34,7 @@ def test_sorted_neighborhood_matches_python_oracle(spark):
     }
     assert got == want
     # every pair exactly once (the adjacent-bucket join must not duplicate)
-    n = sorted_neighborhood_pairs(df, "id", "text", window=3).count()
+    n = sorted_neighborhood_pairs(df, "id", "text").count()
     assert n == len(want)
 
 
@@ -255,21 +255,23 @@ def test_phonetic_key_classic_soundex_pairs(spark):
     assert got[4] == "0000"                # empty input -> all padding
 
 
-def test_phonetic_pairs_caps_oversized_blocks(spark):
+def test_phonetic_pairs_caps_oversized_blocks(spark, monkeypatch):
     from blink_spark.operators.blocking import phonetic_pairs
 
     rows = [(f"s{i:02d}", "smith") for i in range(5)] + [
         ("j1", "johnson"), ("j2", "jonson"), ("x1", "quartz")
     ]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["id", "name"]))
-    got = {
-        (r["record_id_a"], r["record_id_b"])
-        for r in phonetic_pairs(df, "id", "name", max_block=4).collect()
-    }
-    # the 5-record smith block exceeds max_block=4 and is dropped whole;
+    with monkeypatch.context() as m:
+        m.setattr("blink_spark.operators.blocking.PHONETIC_MAX_BLOCK", 4)
+        got = {
+            (r["record_id_a"], r["record_id_b"])
+            for r in phonetic_pairs(df, "id", "name").collect()
+        }
+    # the 5-record smith block exceeds a cap of 4 and is dropped whole;
     # johnson/jonson collide; quartz is a singleton
     assert got == {("j1", "j2")}
-    full = phonetic_pairs(df, "id", "name", max_block=100)
+    full = phonetic_pairs(df, "id", "name")
     assert full.count() == 10 + 1  # C(5,2) smith pairs + the johnson pair
 
 
@@ -333,14 +335,15 @@ def test_meta_block_prune_hand_computed(spark):
     assert got == {("r1", "r2"): 2, ("r2", "r3"): 2, ("r4", "r5"): 1}
 
 
-def test_meta_block_prune_purges_oversized_blocks(spark):
+def test_meta_block_prune_purges_oversized_blocks(spark, monkeypatch):
     from blink_spark.operators.blocking import meta_block_prune
 
     rows = [("big", f"r{i}") for i in range(6)] + [("ok", "a"), ("ok", "b")]
     df = spark.createDataFrame(rows, ["block_key", "record_id"])
+    monkeypatch.setattr("blink_spark.operators.blocking.META_MAX_BLOCK", 5)
     got = {
         (r["record_id_a"], r["record_id_b"])
-        for r in meta_block_prune(df, max_block=5).collect()
+        for r in meta_block_prune(df).collect()
     }
     assert got == {("a", "b")}
 
@@ -420,7 +423,7 @@ def test_em_fs_weights_equals_bruteforce(spark):
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["f1", "f2"]))
     got = {
         r.feature: (r.m_ppm, r.u_ppm, r.weight_micro)
-        for r in em_fs_weights(df, ["f1", "f2"], iters=3).collect()
+        for r in em_fs_weights(df, ["f1", "f2"]).collect()
     }
     assert got == want
     # discriminative features recovered without labels
@@ -452,7 +455,7 @@ def test_greedy_one_to_one_frees_runners_up(spark):
 
     got = {
         (x.l, x.r): x.match_round
-        for x in greedy_one_to_one(pairs, "l", "r", "sim", rounds=3).collect()
+        for x in greedy_one_to_one(pairs, "l", "r", "sim").collect()
     }
     assert got == {("l1", "r1"): 1, ("l2", "r2"): 2, ("l3", "r3"): 3}
     # one-to-one: every endpoint used at most once
@@ -473,7 +476,7 @@ def test_greedy_one_to_one_tie_break_deterministic(spark):
     )
     got = {
         (x.l, x.r): x.match_round
-        for x in greedy_one_to_one(pairs, "l", "r", "sim", rounds=2).collect()
+        for x in greedy_one_to_one(pairs, "l", "r", "sim").collect()
     }
     assert got == {("l1", "r1"): 1, ("l2", "r2"): 2}
 
@@ -582,7 +585,7 @@ def test_cluster_purity_hand_computed(spark):
     assert (c2["purity_ppm"], c2["gini_ppm"]) == (1_000_000, 0)
 
 
-def test_suffix_pairs_prefix_corruption_and_caps(spark):
+def test_suffix_pairs_prefix_corruption_and_caps(spark, monkeypatch):
     from blink_spark.operators.blocking import suffix_pairs
 
     rows = [
@@ -597,6 +600,9 @@ def test_suffix_pairs_prefix_corruption_and_caps(spark):
         ("z4", "wzblocked common tail"),
     ]
     min_len, max_sfx, max_block = 5, 12, 3
+    monkeypatch.setattr("blink_spark.operators.blocking.SUFFIX_MIN_LEN", min_len)
+    monkeypatch.setattr("blink_spark.operators.blocking.SUFFIX_MAX_KEYS", max_sfx)
+    monkeypatch.setattr("blink_spark.operators.blocking.SUFFIX_MAX_BLOCK", max_block)
 
     def mirror(data):
         sfx = {}
@@ -622,10 +628,7 @@ def test_suffix_pairs_prefix_corruption_and_caps(spark):
             r["n_shared_suffixes"],
             r["longest_suffix_len"],
         )
-        for r in suffix_pairs(
-            df, "id", "name", min_len=min_len,
-            max_suffixes=max_sfx, max_block=max_block,
-        ).collect()
+        for r in suffix_pairs(df, "id", "name").collect()
     }
     exp = mirror(rows)
     assert got == exp

@@ -51,7 +51,7 @@ def test_media_decode_stub_schema_and_determinism(spark, fixture_paths):
         assert (r.n_frames == 1) == (r.media_kind == "image")
     again = {(r.doc_id, r.span_idx): r.width for r in decoded.collect()}
     assert all(again[(r.doc_id, r.span_idx)] == r.width for r in rows)
-    fs = frame_sample(decoded, every_n=50)
+    fs = frame_sample(decoded)
     assert fs.filter(F.col("frame_idx") >= F.col("n_frames")).count() == 0
 
 

@@ -50,7 +50,7 @@ def test_lsh_topk_is_not_a_cross_join(spark):
     q = e.limit(8).select(F.col("vec_id").alias("qid"), F.col("q").alias("qv"))
     scorer = lambda a, b: F.round(cosine_exact(a, b), 6)  # noqa: E731
     approx = lsh_topk(
-        q, e, k=5, n_planes=4, query_id="qid", query_emb="qv",
+        q, e, n_planes=4, query_id="qid", query_emb="qv",
         item_id="vec_id", item_emb="q", scorer=scorer,
         bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=4, dim=64),
     )

@@ -34,7 +34,7 @@ def test_prefix_jaccard_equals_bruteforce(spark):
 
     got = {
         (r["a"], r["b"]): r["inter"]
-        for r in prefix_jaccard_pairs(docs, threshold_ppm=800_000).collect()
+        for r in prefix_jaccard_pairs(docs).collect()
     }
     want = _brute_force(doc_tokens, 0.8)
     assert got == want
@@ -50,4 +50,4 @@ def test_prefix_jaccard_no_candidates_below_threshold(spark):
         [(1, "a b c d e"), (2, "a b c x y z")],  # jac = 3/8 = 0.375
         "doc_id long, text string",
     )
-    assert prefix_jaccard_pairs(docs, threshold_ppm=800_000).count() == 0
+    assert prefix_jaccard_pairs(docs).count() == 0

@@ -230,8 +230,10 @@ def test_topk_norm_hoist_equals_per_pair_cosine(spark, fixture_paths, op):
     )
     assert emb.filter("text = ''").first().emb_n == 0.0
     topk = getattr(ann, op)
-    hoisted = topk(queries, items, k=10)
-    per_pair = topk(queries, items, k=10, scorer=_per_pair_cosine)
+    # the approximate ops return ann.ANN_K (10) rows per query
+    kw = {"k": 10} if op == "brute_force_topk" else {}
+    hoisted = topk(queries, items, **kw)
+    per_pair = topk(queries, items, scorer=_per_pair_cosine, **kw)
     got = sorted(tuple(r) for r in hoisted.collect())
     want = sorted(tuple(r) for r in per_pair.collect())
     assert got == want and len(got) > 0

@@ -9,6 +9,11 @@ reached code as an identifier, an attribute, an imported name or a string
 constant (so ``getattr``-style dispatch counts). Docstrings are prose, not
 references. A definition that only tests reach fails the first test; delete
 it with its tests, or wire it into a product path.
+
+The option guard reads the same roots: a defaulted parameter of a top-level
+``blink_spark`` function that every product call gives one value is a
+constant, not an option, unless ``OPTION_ALLOWLIST`` keeps it for a stated
+reason.
 """
 
 from __future__ import annotations
@@ -206,3 +211,189 @@ def test_blink_spark_imports_resolve():
                         bad.append(f"{where} {module} defines no {name}")
     assert not bad, "\n".join(bad)
 
+
+
+# ---------------------------------------------------------------------------
+# options: a defaulted parameter that no product path varies is a constant
+# ---------------------------------------------------------------------------
+
+# column-name parameters bind the caller's schema and select no code path
+_COLUMN_PARAM = re.compile(r".*_cols?|query_id|query_emb|item_id|item_emb|text_a|text_b")
+
+DEPLOYMENT = "deployment setting"
+FROZEN = "passed by name from frozen perfbench/ or bench.py"
+STARRED = "set through ** in tools/"
+CALLABLE = "callable"
+
+_PIPELINE_FIELDS = (
+    "max_block_size", "hard_cap", "n_salt", "minhash_bands", "minhash_rows",
+    "minhash_shingle_n", "rich_metrics", "with_jw", "checkpoints",
+)
+
+# options kept although a product path may give them one value
+OPTION_ALLOWLIST: dict[tuple[str, str, str], str] = {
+    **{
+        ("blink_spark.sources.jdbc", "read_mapping_jdbc", p): DEPLOYMENT
+        for p in ("table", "partition_column", "lower_bound", "upper_bound", "num_partitions")
+    },
+    ("blink_spark.sources.jdbc", "write_mapping_jdbc", "table"): DEPLOYMENT,
+    ("blink_spark.sources.jdbc", "write_mapping_jdbc", "mode"): DEPLOYMENT,
+    ("blink_spark.sources.orc", "write_orc", "partition_by"): DEPLOYMENT,
+    ("blink_spark.operators.scoring", "prepare_records", "with_emb"): FROZEN,
+    ("blink_spark.operators.scoring", "prepare_records", "pre_normalized"): FROZEN,
+    ("blink_spark.operators.scoring", "score_pairs_cascade", "with_emb"): FROZEN,
+    ("blink_spark.operators.scoring", "score_pairs_cascade", "with_jw"): FROZEN,
+    ("blink_spark.operators.cluster", "assign_clusters", "assume_unique"): FROZEN,
+    ("blink_spark.operators.cluster", "assign_clusters", "edges_canonical"): FROZEN,
+    ("blink_spark.operators.blocking", "df_aware_blocks", "cache_freq"): FROZEN,
+    ("blink_spark.operators.blocking", "df_aware_blocks", "rare_df"): FROZEN,
+    ("blink_spark.operators.blocking", "df_aware_blocks", "max_df"): FROZEN,
+    **{("blink_spark.pipeline", "PipelineConfig", f): FROZEN for f in _PIPELINE_FIELDS},
+    # also the only way tests reach the distributed superstep CC
+    ("blink_spark.operators.cluster", "connected_components", "local_threshold"): STARRED,
+    ("blink_spark.operators.ann", "brute_force_topk", "scorer"): CALLABLE,
+    ("blink_spark.operators.ann", "lsh_topk", "scorer"): CALLABLE,
+    ("blink_spark.operators.ann", "lsh_topk", "bucket_fn"): CALLABLE,
+    ("blink_spark.operators.ann", "ivf_topk", "scorer"): CALLABLE,
+}
+
+_VARIES = object()
+
+
+def _options(fn: ast.FunctionDef | ast.ClassDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """(positional parameter names, {defaulted parameter: default}) of a
+    function or of a dataclass's constructor."""
+    if isinstance(fn, ast.ClassDef):
+        fields = [
+            s for s in fn.body if isinstance(s, ast.AnnAssign) and isinstance(s.target, ast.Name)
+        ]
+        return [f.target.id for f in fields], {f.target.id: f.value for f in fields if f.value}
+    a = fn.args
+    positional = [p.arg for p in a.posonlyargs + a.args]
+    defaults = dict(zip(positional[len(positional) - len(a.defaults):], a.defaults))
+    defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    return positional, defaults
+
+
+def _literal(node: ast.expr):
+    try:
+        return repr(ast.literal_eval(node))
+    except ValueError:
+        return _VARIES
+
+
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    return any(
+        (d.id if isinstance(d, ast.Name) else getattr(d, "attr", None)) == "dataclass"
+        for d in cls.decorator_list
+    )
+
+
+def _option_defs(pkg: dict[str, ast.Module]) -> dict[str, list[tuple[str, ast.AST]]]:
+    """name -> [(module, top-level function or dataclass)]."""
+    defs: dict[str, list[tuple[str, ast.AST]]] = {}
+    for module, tree in pkg.items():
+        for stmt in tree.body:
+            if isinstance(stmt, ast.FunctionDef) or (
+                isinstance(stmt, ast.ClassDef) and _is_dataclass(stmt)
+            ):
+                defs.setdefault(stmt.name, []).append((module, stmt))
+    return defs
+
+
+def _one_valued_options(
+    pkg: dict[str, ast.Module], roots: list[ast.Module]
+) -> dict[tuple[str, str, str], str]:
+    """{(module, function, parameter): value} for every option of a
+    top-level ``pkg`` function (or dataclass) that all calls in ``roots``
+    and ``pkg`` give one value: the literal a call passes, or the default
+    when it omits the parameter. A non-literal argument, ``*args`` or
+    ``**kw`` varies; column-name parameters are exempt; a function that no
+    call names is skipped. Calls match by name, plain or attribute."""
+    defs = _option_defs(pkg)
+    values: dict[tuple[str, str, str], set] = {}
+    for tree in [*roots, *pkg.values()]:
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            for module, fn in defs.get(name, ()):
+                positional, defaults = _options(fn)
+                given: dict[str, object] = {}
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        given.update((p, _VARIES) for p in positional[i:])
+                        break
+                    if i < len(positional):
+                        given[positional[i]] = _literal(arg)
+                for kw in call.keywords:
+                    if kw.arg is None:
+                        given.update((p, _VARIES) for p in defaults if p not in given)
+                    else:
+                        given[kw.arg] = _literal(kw.value)
+                for p, default in defaults.items():
+                    if p in given:
+                        v = given[p]
+                    else:  # the default, literal or not, is one value
+                        v = _literal(default)
+                        if v is _VARIES:
+                            v = ast.unparse(default)
+                    values.setdefault((module, fn.name, p), set()).add(v)
+    return {
+        key: next(iter(vs))
+        for key, vs in sorted(values.items())
+        if len(vs) == 1 and _VARIES not in vs and not _COLUMN_PARAM.fullmatch(key[2])
+    }
+
+
+def _product_trees() -> tuple[dict[str, ast.Module], list[ast.Module]]:
+    return {_module_name(p): _parse(p) for p in _pkg_files()}, [_parse(p) for p in _root_files()]
+
+
+def test_every_option_is_varied_by_a_product_path():
+    """A defaulted parameter that every product call gives the same value
+    is a constant: inline it, or name it once as a module constant (tests
+    vary such a constant with ``monkeypatch``)."""
+    pkg, roots = _product_trees()
+    defs = _option_defs(pkg)
+    reasons = {DEPLOYMENT, FROZEN, STARRED, CALLABLE}
+    for (module, name, param), reason in OPTION_ALLOWLIST.items():
+        assert reason in reasons, (module, name, param, reason)
+        assert any(
+            m == module and param in _options(fn)[1] for m, fn in defs.get(name, ())
+        ), f"allowlisted but no such option: {module}.{name}({param}=)"
+    single = [
+        f"{module}.{name}({param}={value})"
+        for (module, name, param), value in _one_valued_options(pkg, roots).items()
+        if (module, name, param) not in OPTION_ALLOWLIST
+    ]
+    assert not single, "options every product path gives one value:\n" + "\n".join(single)
+
+
+def test_option_analyzer_on_synthetic_source():
+    lib = ast.parse(
+        "def f(df, text_col='t', k=3, n=4, mode='a', id_col='id'):\n"
+        "    pass\n"
+        "def g(x, depth=2):\n"
+        "    pass\n"
+    )
+    root = ast.parse(
+        "f(df, 'text', k=3, n=5, id_col='rid')\n"
+        "f(df, n=6)\n"
+        "lib.f(df, mode='a')\n"
+    )
+    got = _one_valued_options({"lib": lib}, [root])
+    # one literal everywhere: k passed as 3 once and omitted (default 3) twice
+    assert got[("lib", "f", "k")] == "3"
+    # an omitted argument counts as the default: mode is 'a' on every call
+    assert got[("lib", "f", "mode")] == "'a'"
+    # two different literals vary
+    assert ("lib", "f", "n") not in got
+    # a *_col parameter is exempt even with one value per call
+    assert ("lib", "f", "text_col") not in got and ("lib", "f", "id_col") not in got
+    # a function no call names is skipped
+    assert not any(key[1] == "g" for key in got)
+    # a non-literal argument varies
+    got = _one_valued_options({"lib": lib}, [ast.parse("f(df, k=K)\nf(df)")])
+    assert ("lib", "f", "k") not in got

@@ -1,7 +1,8 @@
 """End-to-end test of the spark-submit --py-files surface (north rule: the
-whole job runs via spark-submit on a cluster manager — here local[8] as the
-sandbox stand-in). Builds blink_spark.zip, submits tools/submit_pipeline.py
-in a FRESH JVM with the library available only through --py-files, then
+whole job runs via spark-submit on a cluster manager — here local[N] on the
+host's cores as the sandbox stand-in). Builds blink_spark.zip, submits
+tools/submit_pipeline.py in a FRESH JVM with the library available only
+through --py-files, then
 checks the produced cluster assignments against the same DuckDB
 recursive-CTE closure oracle the driver uses for er_clusters."""
 
@@ -26,6 +27,7 @@ def test_spark_submit_pipeline_matches_oracle(tmp_path):
     # materialize tests/fixtures/ if a clean checkout hasn't yet (the
     # generator is an exists-guarded no-op when they're already there)
     sys.path.insert(0, REPO)
+    from blink_spark.session import DEFAULT_CPUS
     from blink_spark.synth import write_fixtures
 
     write_fixtures(os.path.join(REPO, "tests", "fixtures"))
@@ -39,7 +41,7 @@ def test_spark_submit_pipeline_matches_oracle(tmp_path):
     r = subprocess.run(
         [
             SPARK_SUBMIT,
-            "--master", "local[8]",
+            "--master", f"local[{DEFAULT_CPUS}]",
             "--conf", "spark.sql.shuffle.partitions=8",
             "--conf", "spark.ui.enabled=false",
             "--py-files", os.path.join(REPO, "blink_spark.zip"),

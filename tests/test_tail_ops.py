@@ -44,18 +44,20 @@ def test_duplicate_ngram_spans_keeps_separate_islands(spark):
     assert rows == [(1, 0, 4), (1, 11, 15), (2, 0, 4), (3, 2, 6)]
 
 
-def test_integer_pagerank_path_graph_exact(spark):
+def test_integer_pagerank_path_graph_exact(spark, monkeypatch):
     from blink_spark.operators.cluster import integer_pagerank
 
     edges = spark.createDataFrame([("a", "b"), ("b", "c")], "u string, v string")
-    got = {
-        r["record_id"]: (r["pr_ppm"], r["deg"])
-        for r in integer_pagerank(edges, iters=1).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr("blink_spark.operators.cluster.PAGERANK_ITERS", 1)
+        got = {
+            r["record_id"]: (r["pr_ppm"], r["deg"])
+            for r in integer_pagerank(edges).collect()
+        }
     # r1(a) = 150000 + 850*(1000000 div 2) div 1000 = 575000 (from b's share)
     # r1(b) = 150000 + 850*(1000000 + 1000000) div 1000 = 1850000
     assert got == {"a": (575000, 1), "b": (1850000, 2), "c": (575000, 1)}
-    assert sorted(r["record_id"] for r in integer_pagerank(edges, iters=3).collect()) == [
+    assert sorted(r["record_id"] for r in integer_pagerank(edges).collect()) == [
         "a",
         "b",
         "c",
@@ -155,7 +157,7 @@ def test_kcore_peel_cascading_evictions(spark):
     )
     got = {
         r["record_id"]: (r["deg0"], r["removed_round"], r["core_deg"])
-        for r in kcore_peel(edges, k=3, rounds=3).collect()
+        for r in kcore_peel(edges).collect()
     }
     assert got == {
         1: (4, 0, 3),
@@ -182,7 +184,7 @@ def test_bfs_seed_distance_bounded_hops(spark):
     )
     got = {
         r["record_id"]: r["bfs_dist"]
-        for r in bfs_seed_distance(edges, rounds=3).collect()
+        for r in bfs_seed_distance(edges).collect()
     }
     assert got == {
         1: 0, 2: 1, 3: 2, 4: 3, 5: -1,
@@ -206,7 +208,7 @@ def test_link_prediction_distance_two_pairs_only(spark):
             r["common_neighbors"],
             r["jaccard_ppm"],
         )
-        for r in link_prediction(edges, min_common=2).collect()
+        for r in link_prediction(edges).collect()
     }
     # (1,3): cn {2,4}, deg 3 and 2 -> 2/(3+2-2) = 666666 ppm
     # (2,4): cn {1,3}, deg 2 and 2 -> 2/(2+2-2) = 1000000 ppm
@@ -297,9 +299,10 @@ def test_canopy_assign_hand_computed(spark):
     assert not any(rec == "r4" for _, rec in got)
 
 
-def test_canopy_assign_df_max_drops_stopword_tokens(spark):
+def test_canopy_assign_df_max_drops_stopword_tokens(spark, monkeypatch):
     from blink_spark.operators.blocking import canopy_assign
 
+    monkeypatch.setattr("blink_spark.operators.blocking.CANOPY_DF_MAX", 3)
     # "the" appears in all 4 records; with df_max=3 it is stopword-like
     # and elects nothing, so only "rare" (df=2) forms a canopy.
     rows = [
@@ -311,7 +314,7 @@ def test_canopy_assign_df_max_drops_stopword_tokens(spark):
     df = spark.createDataFrame(rows, ["mention_id", "mention"])
     got = {
         (r["center_id"], r["record_id"])
-        for r in canopy_assign(df, "mention_id", "mention", df_max=3).collect()
+        for r in canopy_assign(df, "mention_id", "mention").collect()
     }
     assert got == {("a", "a"), ("a", "b")}
 
@@ -374,7 +377,7 @@ def test_cluster_churn_status_classification(spark):
     }
 
 
-def test_domain_keyness_hand_computed(spark):
+def test_domain_keyness_hand_computed(spark, monkeypatch):
     from blink_spark.operators.corpus import domain_keyness
 
     docs = spark.createDataFrame(
@@ -386,11 +389,12 @@ def test_domain_keyness_hand_computed(spark):
         ],
         ["doc_id", "source", "text"],
     )
+    monkeypatch.setattr("blink_spark.operators.corpus.KEYNESS_MIN_DF", 2)
     got = {
         (r["domain"], r["term"]): (
             r["df_domain"], r["df_rest"], r["lift_ppm"], r["excess_milli"], r["rank"]
         )
-        for r in domain_keyness(docs, min_df=2).collect()
+        for r in domain_keyness(docs).collect()
     }
     # n=4, d_tot=2 each; t_tot: apple 2, banana 2, cherry 3 (date df-1 dropped)
     assert got == {
@@ -402,7 +406,7 @@ def test_domain_keyness_hand_computed(spark):
     }
 
 
-def test_swoosh_merge_transitive_enablement(spark):
+def test_swoosh_merge_transitive_enablement(spark, monkeypatch):
     from blink_spark.operators.swoosh import swoosh_merge
 
     # r3 matches NEITHER r1 nor r2 alone (J=1/4), but matches their round-1
@@ -411,17 +415,19 @@ def test_swoosh_merge_transitive_enablement(spark):
     rows = [("r1", "a b c"), ("r2", "b c d"), ("r3", "a d"), ("r4", "q r")]
     df = spark.createDataFrame(rows, ["mention_id", "mention"])
 
-    one = {
-        r["record_id"]: (r["profile_id"], r["profile_n_tokens"])
-        for r in swoosh_merge(df, "mention_id", "mention", rounds=1).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr("blink_spark.operators.swoosh.SWOOSH_ROUNDS", 1)
+        one = {
+            r["record_id"]: (r["profile_id"], r["profile_n_tokens"])
+            for r in swoosh_merge(df, "mention_id", "mention").collect()
+        }
     assert one == {
         "r1": ("r1", 4), "r2": ("r1", 4), "r3": ("r3", 2), "r4": ("r4", 2),
     }
 
     two = {
         r["record_id"]: (r["profile_id"], r["profile_n_tokens"])
-        for r in swoosh_merge(df, "mention_id", "mention", rounds=2).collect()
+        for r in swoosh_merge(df, "mention_id", "mention").collect()
     }
     assert two == {
         "r1": ("r1", 4), "r2": ("r1", 4), "r3": ("r1", 4), "r4": ("r4", 2),
@@ -459,7 +465,7 @@ def test_value_runs_scd2_intervals(spark):
     }
 
 
-def test_block_filter_keeps_r_smallest_blocks(spark):
+def test_block_filter_keeps_r_smallest_blocks(spark, monkeypatch):
     from blink_spark.operators.blocking import block_filter_top_r
 
     rows = [
@@ -471,9 +477,10 @@ def test_block_filter_keeps_r_smallest_blocks(spark):
         ("r3", "solo"),
     ]
     blocks = spark.createDataFrame(rows, "record_id string, block_key string")
+    monkeypatch.setattr("blink_spark.operators.blocking.BLOCK_FILTER_R", 2)
     got = {
         (r["record_id"], r["rank"]): (r["block_key"], r["block_size"])
-        for r in block_filter_top_r(blocks, r=2).collect()
+        for r in block_filter_top_r(blocks).collect()
     }
     # r1 has 4 blocks of sizes (2,2,2,3): keeps aaa, mid (key asc on ties)
     # r3's singleton 'solo' is purged; keeps tiny(2) then big(3)
@@ -495,7 +502,7 @@ def test_resource_allocation_weighs_rare_neighbors(spark):
     e = spark.createDataFrame(edges, "u string, v string")
     got = {
         (x["record_id_a"], x["record_id_b"]): (x["common_neighbors"], x["ra_nano"])
-        for x in resource_allocation(e, min_common=2).collect()
+        for x in resource_allocation(e).collect()
     }
     # (h,r) likewise shares {a,b} (each deg 2 -> 1e9/2 + 1e9/2)
     assert got == {("a", "b"): (2, 750000000), ("h", "r"): (2, 1000000000)}
@@ -504,7 +511,7 @@ def test_resource_allocation_weighs_rare_neighbors(spark):
     e2 = spark.createDataFrame(edges + [("a", "b")], "u string, v string")
     got2 = {
         (x["record_id_a"], x["record_id_b"])
-        for x in resource_allocation(e2, min_common=2).collect()
+        for x in resource_allocation(e2).collect()
     }
     assert ("a", "b") not in got2
 
@@ -516,7 +523,7 @@ def test_count_min_never_underestimates_and_is_exact_when_sparse(spark):
     df = spark.createDataFrame(rows, "k string")
     est = {
         r["k"]: (r["n_exact"], r["est_count"], r["overestimate"])
-        for r in count_min_estimate(df, "k", d=4, w=64).collect()
+        for r in count_min_estimate(df, "k").collect()
     }
     assert set(est) == {"a", "b", "c", "d"}
     for k, (n, e, o) in est.items():
@@ -525,23 +532,25 @@ def test_count_min_never_underestimates_and_is_exact_when_sparse(spark):
     assert [est[k][2] for k in "abcd"] == [0, 0, 0, 0]
 
     # the sketch state is d*w-bounded and mergeable: counters sum to d*n
-    cnt = count_min_counters(df, "k", d=4, w=64)
+    cnt = count_min_counters(df, "k")
     assert cnt.count() <= 4 * 64
     assert cnt.groupBy().sum("c").collect()[0][0] == 4 * len(rows)
 
 
-def test_count_min_overestimates_on_forced_collisions(spark):
+def test_count_min_overestimates_on_forced_collisions(spark, monkeypatch):
     from blink_spark.operators.sketch import count_min_estimate
 
     # w=1: every key lands in the same bucket on every row -> every
     # estimate equals the total stream length
     rows = [(k,) for k in ["x"] * 7 + ["y"] * 2]
     df = spark.createDataFrame(rows, "k string")
-    est = {r["k"]: r["est_count"] for r in count_min_estimate(df, "k", d=2, w=1).collect()}
+    monkeypatch.setattr("blink_spark.operators.sketch.CM_DEPTH", 2)
+    monkeypatch.setattr("blink_spark.operators.sketch.CM_WIDTH", 1)
+    est = {r["k"]: r["est_count"] for r in count_min_estimate(df, "k").collect()}
     assert est == {"x": 9, "y": 9}
 
 
-def test_dynamic_blocking_splits_only_oversized(spark):
+def test_dynamic_blocking_splits_only_oversized(spark, monkeypatch):
     from blink_spark.operators.blocking import dynamic_blocking
 
     # block 'big' holds r1..r4 (cap 3 -> oversized); 'mid' holds r1,r2;
@@ -551,17 +560,19 @@ def test_dynamic_blocking_splits_only_oversized(spark):
     rows = [("r1", "big"), ("r2", "big"), ("r3", "big"), ("r4", "big"),
             ("r1", "mid"), ("r2", "mid"), ("r4", "solo")]
     blocks = spark.createDataFrame(rows, "record_id string, block_key string")
+    monkeypatch.setattr("blink_spark.operators.blocking.DYNAMIC_CAP", 3)
     got = {
         r["block_key"]: (r["depth"], r["block_size"], r["status"])
-        for r in dynamic_blocking(blocks, cap=3).collect()
+        for r in dynamic_blocking(blocks).collect()
     }
     assert got == {"mid": (1, 2, "ok"), "big|mid": (2, 2, "split")}
 
     # cap 1: every multi-record block splits; big|mid still holds 2
     # records -> reported 'over' instead of silently dropped
+    monkeypatch.setattr("blink_spark.operators.blocking.DYNAMIC_CAP", 1)
     got2 = {
         r["block_key"]: r["status"]
-        for r in dynamic_blocking(blocks, cap=1).collect()
+        for r in dynamic_blocking(blocks).collect()
     }
     assert got2 == {"big|mid": "over", "mid|big": "over"}
 
@@ -643,7 +654,7 @@ def test_pprl_bloom_dice_identical_and_disjoint(spark):
     # empty filter pair is kept and scores 0 with bits_b = 0
     assert got[("r1", "r4")][1] == 0 and got[("r1", "r4")][3] == 0
     # a record never sets more than m bits
-    mx = bloom_positions(recs, "mention_id", "mention", m=64, k=3)
+    mx = bloom_positions(recs, "mention_id", "mention")
     assert mx.groupBy("rid").count().agg({"count": "max"}).collect()[0][0] <= 64
 
 
@@ -703,7 +714,7 @@ def test_anomaly_mad_hand_computed(spark):
     assert not any(r["is_anomaly"] for r in b.values())
 
 
-def test_semdedup_keep_rule_and_planted_pairs(spark):
+def test_semdedup_keep_rule_and_planted_pairs(spark, monkeypatch):
     from pyspark.sql import functions as F
 
     from blink_spark.functions.hashing import quantize_emb
@@ -723,7 +734,8 @@ def test_semdedup_keep_rule_and_planted_pairs(spark):
     vecs = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>"
     ).select("vec_id", quantize_emb("embedding").alias("q"))
-    out = {r["vec_id"]: r for r in semdedup(vecs, n_cells=2, tau=0.95).collect()}
+    monkeypatch.setattr("blink_spark.operators.dedup.SEMDEDUP_CELLS", 2)
+    out = {r["vec_id"]: r for r in semdedup(vecs).collect()}
     # cells: 0,2,3 -> cid 0; 1,4 -> cid 1; 5 -> whichever argmax (cos 0 to
     # both -> tie -> lowest cid 0) but stays a singleton group
     assert out[2]["cid"] == 0 and out[4]["cid"] == 1
@@ -859,7 +871,7 @@ def test_char_entropy_hand_computed(spark):
     assert out[2]["entropy_micro"] == ln4 - (2 * 2 * ln2) // 4 == ln4 - ln2
 
 
-def test_zipf_fit_exact_slope_on_constructed_counts(spark):
+def test_zipf_fit_exact_slope_on_constructed_counts(spark, monkeypatch):
     import math
 
     from blink_spark.operators.corpus import zipf_fit
@@ -872,7 +884,8 @@ def test_zipf_fit_exact_slope_on_constructed_counts(spark):
     for tok, n in [("a", 8), ("b", 4), ("c", 2), ("d", 1)]:
         words += [tok] * n
     docs = spark.createDataFrame([(1, " ".join(words))], "doc_id long, text string")
-    row = zipf_fit(docs, top_r=10).collect()[0]
+    monkeypatch.setattr("blink_spark.operators.corpus.ZIPF_TOP_R", 10)
+    row = zipf_fit(docs).collect()[0]
     xs = [math.floor(math.log(r) * 1000) for r in (1, 2, 3, 4)]
     ys = [math.floor(math.log(f) * 1000) for f in (8, 4, 2, 1)]
     r = 4
@@ -1429,7 +1442,7 @@ def test_rfm_segments_hand_computed(spark):
         ) == exp, uid
 
 
-def test_bloom_novelty_hand_computed(spark):
+def test_bloom_novelty_hand_computed(spark, monkeypatch):
     from blink_spark.operators.dedup import bloom_novelty
 
     ref = spark.createDataFrame(
@@ -1468,10 +1481,8 @@ def test_bloom_novelty_hand_computed(spark):
     # m_bits=1 saturates the filter: every probe lands on bit 0, so the
     # novel doc becomes a deterministic false positive (and the dup stays
     # a true dup — exact flag wins the verdict cascade)
-    got1 = {
-        r["doc_id"]: r
-        for r in bloom_novelty(ref, inc, m_bits=1).collect()
-    }
+    monkeypatch.setattr("blink_spark.operators.dedup.BLOOM_M_BITS", 1)
+    got1 = {r["doc_id"]: r for r in bloom_novelty(ref, inc).collect()}
     assert got1[3]["bloom_hit"] and not got1[3]["exact_dup"]
     assert got1[3]["verdict"] == "false_positive"
     assert got1[1]["verdict"] == "true_dup"
@@ -1495,7 +1506,7 @@ def test_partitioned_running_sums_matches_single(spark):
         assert (ra, rb) == (ea[k], eb[k]), k
 
 
-def test_heaps_fit_hand_computed(spark):
+def test_heaps_fit_hand_computed(spark, monkeypatch):
     import math
 
     from blink_spark.operators.corpus import heaps_fit
@@ -1524,7 +1535,8 @@ def test_heaps_fit_hand_computed(spark):
     assert (row["slope_ppm"], row["intercept_milli"]) == (slope, intercept)
     assert 0 < slope < 1_000_000  # sublinear growth: a real Heaps exponent
     # max_points=2 -> checkpoint every 2nd doc: points (5,3) and (10,4)
-    row2 = heaps_fit(docs, max_points=2).collect()[0]
+    monkeypatch.setattr("blink_spark.operators.corpus.HEAPS_MAX_POINTS", 2)
+    row2 = heaps_fit(docs).collect()[0]
     assert row2["n_points"] == 2
     # two points -> the fit line passes through both exactly
     x1, y1 = math.floor(math.log(5) * 1000), math.floor(math.log(3) * 1000)
@@ -1566,7 +1578,7 @@ def test_column_profile_hand_computed(spark):
     assert z["entropy_micro"] is None
 
 
-def test_gini_concentration_hand_computed(spark):
+def test_gini_concentration_hand_computed(spark, monkeypatch):
     from blink_spark.operators.temporal import gini_concentration
 
     # per-user counts 1, 1, 2, 6 -> n=4, S1=10, ranks (asc by count, key)
@@ -1579,7 +1591,8 @@ def test_gini_concentration_hand_computed(spark):
     assert (r["n_keys"], r["total"]) == (4, 10)
     assert r["gini_ppm"] == 400000
     assert (r["n_top"], r["top_share_ppm"]) == (0, 0)  # 4 div 10 = 0 keys
-    r2 = gini_concentration(events, top_divisor=2).collect()[0]
+    monkeypatch.setattr("blink_spark.operators.temporal.TOP_DIVISOR", 2)
+    r2 = gini_concentration(events).collect()[0]
     # top half = ranks 3,4 (counts 2 and 6) -> 8/10 of all events
     assert (r2["n_top"], r2["top_share_ppm"]) == (2, 800000)
     # perfectly uniform activity -> G = 0
@@ -2103,7 +2116,7 @@ def test_collocations_hand_computed(spark):
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     got = {
         (r["tok_a"], r["tok_b"]): r
-        for r in collocations(df, min_count=5).collect()
+        for r in collocations(df).collect()
     }
     # tokens: new x6, york x6, the x5, cat x5, dog x1 -> T = 23
     ny = got[("new", "york")]
@@ -2466,7 +2479,7 @@ def test_conversion_lag_histogram_hand_computed(spark):
     assert sum(got.values()) == 4  # reconciles to conversion total
 
 
-def test_elbow_inertia_hand_computed(spark):
+def test_elbow_inertia_hand_computed(spark, monkeypatch):
     from blink_spark.operators.ann import elbow_inertia
 
     # 4 points on a line; k=2 centroids = first two points (ids 0, 1)
@@ -2474,7 +2487,8 @@ def test_elbow_inertia_hand_computed(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in pts.items()], "item_id long, iv array<long>"
     )
-    out = {r["k"]: r for r in elbow_inertia(df, ks=(1, 2)).collect()}
+    monkeypatch.setattr("blink_spark.operators.ann.ELBOW_KS", (1, 2))
+    out = {r["k"]: r for r in elbow_inertia(df).collect()}
     # k=1: centroid (0,0): dists 0, 100, 121, 1 -> 222
     assert out[1]["inertia_total"] == 222
     assert out[1]["inertia_mean"] == 222 // 4
@@ -2838,9 +2852,10 @@ def test_table_digest_detects_drift(spark):
     assert dd["sum_digest"] != de["sum_digest"]
 
 
-def test_blocking_budget_frontier_hand_computed(spark):
+def test_blocking_budget_frontier_hand_computed(spark, monkeypatch):
     from blink_spark.operators.blocking import blocking_budget_frontier
 
+    monkeypatch.setattr("blink_spark.operators.blocking.PAIR_BUDGET", 1)
     # token dfs: 'a' in 3 recs (C(3,2)=3 pairs), 'b' in 2 (1 pair),
     # 'c' in 1 (0 pairs)
     recs = spark.createDataFrame(
@@ -2848,9 +2863,7 @@ def test_blocking_budget_frontier_hand_computed(spark):
     )
     got = {
         r["df_cap"]: r
-        for r in blocking_budget_frontier(
-            recs, "rid", "txt", pair_budget=1
-        ).collect()
+        for r in blocking_budget_frontier(recs, "rid", "txt").collect()
     }
     assert got[1]["n_token_types"] == 1  # 'c'
     assert (got[1]["cum_token_types"], got[1]["cum_pairs"]) == (1, 0)

@@ -65,7 +65,7 @@ def test_asof_join_is_single_shuffle(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_window_range_count_boundaries(spark):
+def test_window_range_count_boundaries(spark, monkeypatch):
     from blink_spark.operators.temporal import window_range_count
 
     lb = 600  # 10 minutes
@@ -81,7 +81,8 @@ def test_window_range_count_boundaries(spark):
             (6, 2, _ts(19)),            # other user: out
         ],
     )
-    [row] = window_range_count(clicks, views, on="user_id", lookback_s=lb).collect()
+    monkeypatch.setattr("blink_spark.operators.temporal.LOOKBACK_S", lb)
+    [row] = window_range_count(clicks, views, on="user_id").collect()
     assert (row["event_id"], row["n_in_window"]) == (100, 3)
 
 
@@ -112,21 +113,22 @@ def test_kmv_matches_pure_python(spark):
     df = spark.createDataFrame(small + big + big, "grp string, uid long")
     got = {
         r["grp"]: (r["n_exact"], r["kth_hash"], r["est_distinct"])
-        for r in kmv_distinct(df, key_col="uid", group_col="grp", k=8).collect()
+        for r in kmv_distinct(df, key_col="uid", group_col="grp").collect()
     }
     assert got["a"] == _kmv_py(range(3), 8)
     assert got["b"] == _kmv_py([i * 13 + 7 for i in range(200)], 8)
 
 
-def test_kmv_estimate_in_error_band(spark):
+def test_kmv_estimate_in_error_band(spark, monkeypatch):
     """k=64 on 5000 distinct keys: the KMV relative error is ~1/sqrt(k-2);
     assert a generous 4-sigma band so the test is deterministic-but-honest."""
     from blink_spark.operators.sketch import kmv_distinct
 
+    monkeypatch.setattr("blink_spark.operators.sketch.KMV_K", 64)
     df = spark.range(5000).select(
         F.lit("g").alias("grp"), F.col("id").alias("uid")
     )
-    [row] = kmv_distinct(df, key_col="uid", group_col="grp", k=64).collect()
+    [row] = kmv_distinct(df, key_col="uid", group_col="grp").collect()
     assert row["n_exact"] == 5000
     assert abs(row["est_distinct"] - 5000) / 5000 < 4 / (62**0.5)
 
@@ -147,7 +149,7 @@ def test_chunk_dedup_stats_planted(spark):
     )
     got = {
         r["doc_id"]: (r["n_chunks"], r["n_dup_chunks"], r["dup_chunk_frac"])
-        for r in chunk_dedup_stats(docs, size=16).collect()
+        for r in chunk_dedup_stats(docs).collect()
     }
     assert got == {
         1: (2, 0, 0.0),
@@ -157,15 +159,16 @@ def test_chunk_dedup_stats_planted(spark):
     }
 
 
-def test_mix_plan_planted(spark):
+def test_mix_plan_planted(spark, monkeypatch):
     from blink_spark.operators.corpus import mix_plan
 
     # stratum "big": 4 docs x 5 tokens = 20 tokens; "tiny": 1 doc x 2 tokens.
     rows = [(i, "w x y z q", "big") for i in range(4)] + [(9, "a b", "tiny")]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    monkeypatch.setattr("blink_spark.operators.corpus.MIX_BUDGET_TOKENS", 20)
     got = {
         r["stratum"]: (r["n_docs"], r["n_toks"], r["rate_ppm"], r["exp_toks"])
-        for r in mix_plan(docs, budget_tokens=20).collect()
+        for r in mix_plan(docs).collect()
     }
     # budget 20 over 2 strata = 10 tokens each:
     # big: 10*1e6 div 20 = 500_000 ppm -> 20*0.5 = 10 tokens expected
@@ -203,7 +206,7 @@ def test_hll_matches_pure_python(spark):
     df = spark.createDataFrame(small + big + small, "grp string, tok string")
     got = {
         r["grp"]: (r["n_exact"], r["v_empty"], r["s_scaled"], r["est_distinct"])
-        for r in hll_distinct(df, key_col="tok", group_col="grp", p=4).collect()
+        for r in hll_distinct(df, key_col="tok", group_col="grp").collect()
     }
     assert got["a"] == _hll_py([f"s{i}" for i in range(5)])
     assert got["b"] == _hll_py([f"t{i}" for i in range(3000)])
@@ -211,30 +214,32 @@ def test_hll_matches_pure_python(spark):
     assert got["a"][1] > 0 and got["b"][0] == 3000
 
 
-def test_hll_estimate_in_error_band(spark):
+def test_hll_estimate_in_error_band(spark, monkeypatch):
     """m=64 on 20000 distinct keys: HLL relative error ~1.04/sqrt(m);
     assert a generous 5-sigma band."""
     from blink_spark.operators.sketch import hll_distinct
 
+    monkeypatch.setattr("blink_spark.operators.sketch.HLL_P", 6)
     df = spark.range(20000).select(
         F.lit("g").alias("grp"), F.col("id").cast("string").alias("tok")
     )
-    [row] = hll_distinct(df, key_col="tok", group_col="grp", p=6).collect()
+    [row] = hll_distinct(df, key_col="tok", group_col="grp").collect()
     assert row["n_exact"] == 20000
     assert abs(row["est_distinct"] - 20000) / 20000 < 5 * 1.04 / 8.0
 
 
-def test_hll_rejects_unsupported_p(spark):
+def test_hll_rejects_unsupported_p(spark, monkeypatch):
     import pytest as _pytest
 
     from blink_spark.operators.sketch import hll_distinct
 
+    monkeypatch.setattr("blink_spark.operators.sketch.HLL_P", 10)
     df = spark.range(1).select(F.lit("g").alias("grp"), F.col("id").alias("tok"))
     with _pytest.raises(ValueError):
-        hll_distinct(df, key_col="tok", group_col="grp", p=10)
+        hll_distinct(df, key_col="tok", group_col="grp")
 
 
-def test_temporal_null_semantics_match_sql_equijoin(spark):
+def test_temporal_null_semantics_match_sql_equijoin(spark, monkeypatch):
     """NULL keys / NULL timestamps never match (= / <= semantics): NULL-key
     or NULL-ts left rows come out unmatched / zero, NULL right rows are
     ignored — window partitioning must not group NULLs the way SQL never
@@ -255,11 +260,10 @@ def test_temporal_null_semantics_match_sql_equijoin(spark):
     }
     assert got == {301: None, 302: None, 303: 403}
 
+    monkeypatch.setattr("blink_spark.operators.temporal.LOOKBACK_S", 3600)
     counts = {
         r["event_id"]: r["n_in_window"]
-        for r in window_range_count(
-            clicks, purchases, on="user_id", lookback_s=3600
-        ).collect()
+        for r in window_range_count(clicks, purchases, on="user_id").collect()
     }
     assert counts == {301: 0, 302: 0, 303: 1}
 
