@@ -44,6 +44,48 @@ def _fx(spark: SparkSession, name: str) -> DataFrame:
     return spark.read.parquet(_fixtures()[name])
 
 
+def _gold_ids(spark: SparkSession, *extra: str) -> DataFrame:
+    """The labeled gold pairs as (record_id_a, record_id_b, *extra), where
+    ``extra`` names gold_pairs columns (``same_entity``) to carry along."""
+    return _fx(spark, "gold_pairs").select(
+        F.col("mention_id_a").alias("record_id_a"),
+        F.col("mention_id_b").alias("record_id_b"),
+        *extra,
+    )
+
+
+def _gold_pairs(spark: SparkSession, *extra: str, doc: bool = False) -> DataFrame:
+    """``_gold_ids`` with each side's mention text joined on as
+    ``mention_a``/``mention_b``, and with ``doc`` its ``doc_id`` as
+    ``doc_a``/``doc_b``. The join keys lead: (record_id_b, record_id_a,
+    *extra, mention_a, [doc_a], mention_b, [doc_b])."""
+    m = _fx(spark, "mentions")
+
+    def side(s: str) -> DataFrame:
+        cols = [
+            F.col("mention_id").alias(f"record_id_{s}"),
+            F.col("mention").alias(f"mention_{s}"),
+        ]
+        if doc:
+            cols.append(F.col("doc_id").alias(f"doc_{s}"))
+        return m.select(*cols)
+
+    return (
+        _gold_ids(spark, *extra)
+        .join(side("a"), "record_id_a")
+        .join(side("b"), "record_id_b")
+    )
+
+
+def _scored_gold_pairs(spark: SparkSession, *extra: str, doc: bool = False) -> DataFrame:
+    """``_gold_pairs`` through the S4 pair features (``score_pairs``)."""
+    from blink_spark.operators.scoring import score_pairs
+
+    return score_pairs(
+        _gold_pairs(spark, *extra, doc=doc), text_a="mention_a", text_b="mention_b"
+    )
+
+
 # --------------------------------------------------------------------------
 # flagship
 # --------------------------------------------------------------------------
@@ -762,9 +804,9 @@ def _doc_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
     return pack_sequences(_t(spark, sf, "documents"))
 
 
-@_q(
-    "doc_lm_perplexity",
-    f"""
+# the add-one-smoothed corpus bigram LM, shared by doc_lm_perplexity and
+# doc_ccnet_buckets: `s` is (doc_id, n_bigrams, sum_logp_micro)
+_BIGRAM_LM_SQL = f"""
     WITH n AS (SELECT doc_id, string_split({_norm('text')}, ' ') AS tk FROM documents),
     t AS (SELECT doc_id, generate_subscripts(tk, 1) AS pos, unnest(tk) AS tok FROM n),
     bg AS (
@@ -787,7 +829,13 @@ def _doc_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
              sum(m.logp_micro)::BIGINT AS sum_logp_micro
       FROM b JOIN model m ON b.tok = m.tok AND b.nxt = m.nxt
       GROUP BY 1
-    )
+    )"""
+
+
+@_q(
+    "doc_lm_perplexity",
+    f"""
+    {_BIGRAM_LM_SQL}
     SELECT doc_id, n_bigrams, sum_logp_micro,
            round(exp(-(sum_logp_micro::DOUBLE) / (n_bigrams * 1000000.0)), 6) AS ppl
     FROM s
@@ -806,29 +854,7 @@ def _doc_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
 @_q(
     "doc_ccnet_buckets",
     f"""
-    WITH n AS (SELECT doc_id, string_split({_norm('text')}, ' ') AS tk FROM documents),
-    t AS (SELECT doc_id, generate_subscripts(tk, 1) AS pos, unnest(tk) AS tok FROM n),
-    bg AS (
-      SELECT doc_id, tok,
-             lead(tok) OVER (PARTITION BY doc_id ORDER BY pos) AS nxt
-      FROM t
-    ),
-    b AS (SELECT * FROM bg WHERE nxt IS NOT NULL),
-    bgc AS (SELECT tok, nxt, count(*) AS cb FROM b GROUP BY 1, 2),
-    ctx AS (SELECT tok, count(*) AS cu FROM b GROUP BY 1),
-    v AS (SELECT count(DISTINCT tok) AS v FROM t),
-    model AS (
-      SELECT bgc.tok, bgc.nxt,
-             floor(ln((bgc.cb + 1)::DOUBLE / (ctx.cu + v.v)::DOUBLE) * 1000000)::BIGINT
-               AS logp_micro
-      FROM bgc JOIN ctx USING (tok) CROSS JOIN v
-    ),
-    s AS (
-      SELECT b.doc_id, count(*)::BIGINT AS n_bigrams,
-             sum(m.logp_micro)::BIGINT AS sum_logp_micro
-      FROM b JOIN model m ON b.tok = m.tok AND b.nxt = m.nxt
-      GROUP BY 1
-    ),
+    {_BIGRAM_LM_SQL},
     r AS (
       SELECT s.doc_id, d.source AS stratum, s.n_bigrams, s.sum_logp_micro,
              ntile(3) OVER (
@@ -3516,9 +3542,72 @@ def _corpus_mix_plan(spark: SparkSession, sf: str) -> DataFrame:
     return mix_plan(_t(spark, sf, "documents"))
 
 
+def _quantized(spark: SparkSession, sf: str, col: str) -> DataFrame:
+    """The embeddings as (vec_id, col), quantized to exact integers."""
+    from blink_spark.functions.hashing import quantize_emb
+
+    return _t(spark, sf, "embeddings").select(
+        "vec_id", quantize_emb("embedding").alias(col)
+    )
+
+
+def _ann_queries(items: DataFrame, emb: str, query_emb: str) -> DataFrame:
+    """The ANN recall queries: the first 64 vec_ids of ``items`` as
+    (qid, query_emb)."""
+    return items.filter(F.col("vec_id") < 64).select(
+        F.col("vec_id").alias("qid"), F.col(emb).alias(query_emb)
+    )
+
+
+def _top10(items: DataFrame, emb: str, query_emb: str, scorer) -> DataFrame:
+    """Brute-force top-10 of the ``_ann_queries`` over ``items``
+    (vec_id, emb) under ``scorer``: the exact baseline of the ANN recall
+    queries, and the approximate side of those that search transformed
+    vectors (int8 codes, truncated dimensions)."""
+    from blink_spark.operators.ann import brute_force_topk
+
+    return brute_force_topk(
+        _ann_queries(items, emb, query_emb), items, k=10, query_id="qid",
+        query_emb=query_emb, item_id="vec_id", item_emb=emb, scorer=scorer,
+    )
+
+
+# exact integer-L2 top-10 of the first 64 vec_ids over the exploded
+# quantized vectors `e` (vec_id, dimpos, v): the recall baseline `ex_top`
+# (query_id, item_id) of the quantized ANN oracles
+_EXACT_L2_TOP10_SQL = """
+    ex AS (
+      SELECT a.vec_id AS query_id, b.vec_id AS item_id,
+             sum((a.v - b.v) * (a.v - b.v))::BIGINT AS d2
+      FROM (SELECT * FROM e WHERE vec_id < 64) a
+      JOIN e b ON a.dimpos = b.dimpos AND b.vec_id <> a.vec_id
+      GROUP BY 1, 2
+    ),
+    ex_top AS (
+      SELECT query_id, item_id FROM (
+        SELECT query_id, item_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY d2 ASC, item_id ASC) AS rank
+        FROM ex
+      ) WHERE rank <= 10
+    )"""
+
+
+# ann_recall_vs_exact over `ex_top` (exact) and `ap_top` (approximate)
+_RECALL_SQL = """
+    SELECT count(*) AS n_exact,
+           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_found,
+           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
+             AS recall
+    FROM ex_top x LEFT JOIN ap_top a
+      ON a.query_id = x.query_id AND a.item_id = x.item_id
+"""
+
+
 @_q(
     "ann_pq_recall",
-    """
+    f"""
     WITH q0 AS (
       SELECT vec_id,
              list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
@@ -3558,40 +3647,16 @@ def _corpus_mix_plan(spark: SparkSession, sf: str) -> DataFrame:
         FROM adc
       ) WHERE rank <= 10
     ),
-    ex AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS item_id,
-             sum((a.v - b.v) * (a.v - b.v))::BIGINT AS d2
-      FROM (SELECT * FROM e WHERE vec_id < 64) a
-      JOIN e b ON a.dimpos = b.dimpos AND b.vec_id <> a.vec_id
-      GROUP BY 1, 2
-    ),
-    ex_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d2 ASC, item_id ASC) AS rank
-        FROM ex
-      ) WHERE rank <= 10
-    )
-    SELECT count(*) AS n_exact,
-           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_found,
-           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
-             AS recall
-    FROM ex_top x LEFT JOIN ap_top a
-      ON a.query_id = x.query_id AND a.item_id = x.item_id
+    {_EXACT_L2_TOP10_SQL}
+    {_RECALL_SQL}
     """,
 )
 def _ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     """PQ asymmetric-distance search (FAISS IndexPQ analogue: 16 subspaces ×
     4 dims, 64 first-items centroids) vs exact integer-L2 top-10 recall.
     All distances exact integers → fully oracled."""
-    from blink_spark.functions.hashing import int_l2, quantize_emb
-    from blink_spark.operators.ann import (
-        ann_recall_vs_exact,
-        brute_force_topk,
-        pq_topk,
-    )
+    from blink_spark.functions.hashing import int_l2
+    from blink_spark.operators.ann import ann_recall_vs_exact, pq_topk
 
     e = _t(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 64)
@@ -3602,23 +3667,14 @@ def _ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
     # the exact baseline mirrors the oracle's WHERE len(embedding) = 64
     # guard (and pq_topk's own malformed-length drop) so a stray
     # off-length vector can't leave the two engines' exact sides apart
-    eq = e.select("vec_id", quantize_emb("embedding").alias("q")).filter(
-        F.size("q") == 64
-    )
-    qq = eq.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("q").alias("qv")
-    )
-    exact = brute_force_topk(
-        qq, eq, k=10, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q",
-        scorer=lambda a, b: -int_l2(a, b),
-    )
+    eq = _quantized(spark, sf, "q").filter(F.size("q") == 64)
+    exact = _top10(eq, "q", "qv", lambda a, b: -int_l2(a, b))
     return ann_recall_vs_exact(approx, exact)
 
 
 @_q(
     "ann_int8_recall",
-    """
+    f"""
     WITH q0 AS (
       SELECT vec_id,
              list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
@@ -3650,28 +3706,8 @@ def _ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
         FROM ap
       ) WHERE rank <= 10
     ),
-    ex AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS item_id,
-             sum((a.v - b.v) * (a.v - b.v))::BIGINT AS d2
-      FROM (SELECT * FROM e WHERE vec_id < 64) a
-      JOIN e b ON a.dimpos = b.dimpos AND b.vec_id <> a.vec_id
-      GROUP BY 1, 2
-    ),
-    ex_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d2 ASC, item_id ASC) AS rank
-        FROM ex
-      ) WHERE rank <= 10
-    )
-    SELECT count(*) AS n_exact,
-           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_found,
-           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
-             AS recall
-    FROM ex_top x LEFT JOIN ap_top a
-      ON a.query_id = x.query_id AND a.item_id = x.item_id
+    {_EXACT_L2_TOP10_SQL}
+    {_RECALL_SQL}
     """,
 )
 def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
@@ -3680,36 +3716,20 @@ def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
     recall — the 4x-memory-compression point of the ANN family next to PQ
     (64x) and IVF/LSH (pruning). Codes are exact integers (clamp + affine
     + positive floor div), so the recall eval is fully oracled."""
-    from blink_spark.functions.hashing import int_l2, quantize_emb, sq8_codes
-    from blink_spark.operators.ann import ann_recall_vs_exact, brute_force_topk
+    from blink_spark.functions.hashing import int_l2, sq8_codes
+    from blink_spark.operators.ann import ann_recall_vs_exact
 
-    e = _t(spark, sf, "embeddings")
-    eq = e.select("vec_id", quantize_emb("embedding").alias("qv")).filter(
-        F.size("qv") == 64
-    )
+    scorer = lambda a, b: -int_l2(a, b)  # noqa: E731
+    eq = _quantized(spark, sf, "qv").filter(F.size("qv") == 64)
     codes = eq.select("vec_id", sq8_codes("qv").alias("cv"))
-    qc = codes.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("cv").alias("qcv")
-    )
-    approx = brute_force_topk(
-        qc, codes, k=10, query_id="qid", query_emb="qcv",
-        item_id="vec_id", item_emb="cv",
-        scorer=lambda a, b: -int_l2(a, b),
-    )
-    qq = eq.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
-    )
-    exact = brute_force_topk(
-        qq, eq, k=10, query_id="qid", query_emb="qqv",
-        item_id="vec_id", item_emb="qv",
-        scorer=lambda a, b: -int_l2(a, b),
-    )
+    approx = _top10(codes, "cv", "qcv", scorer)
+    exact = _top10(eq, "qv", "qqv", scorer)
     return ann_recall_vs_exact(approx, exact)
 
 
 @_q(
     "ann_ivfpq_recall",
-    """
+    f"""
     WITH q0 AS (
       SELECT vec_id,
              list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
@@ -3779,40 +3799,16 @@ def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
         FROM adc
       ) WHERE rank <= 10
     ),
-    ex AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS item_id,
-             sum((a.v - b.v) * (a.v - b.v))::BIGINT AS d2
-      FROM (SELECT * FROM e WHERE vec_id < 64) a
-      JOIN e b ON a.dimpos = b.dimpos AND b.vec_id <> a.vec_id
-      GROUP BY 1, 2
-    ),
-    ex_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d2 ASC, item_id ASC) AS rank
-        FROM ex
-      ) WHERE rank <= 10
-    )
-    SELECT count(*) AS n_exact,
-           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_found,
-           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
-             AS recall
-    FROM ex_top x LEFT JOIN ap_top a
-      ON a.query_id = x.query_id AND a.item_id = x.item_id
+    {_EXACT_L2_TOP10_SQL}
+    {_RECALL_SQL}
     """,
 )
 def _ann_ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-PQ search (FAISS IndexIVFPQ analogue, by_residual=false: 16
     L2-coarse cells probed 4-wide, 16×4-dim PQ subspaces, 64 centroids) vs
     exact integer-L2 top-10 recall. All distances exact integers."""
-    from blink_spark.functions.hashing import int_l2, quantize_emb
-    from blink_spark.operators.ann import (
-        ann_recall_vs_exact,
-        brute_force_topk,
-        ivfpq_topk,
-    )
+    from blink_spark.functions.hashing import int_l2
+    from blink_spark.operators.ann import ann_recall_vs_exact, ivfpq_topk
 
     e = _t(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 64)
@@ -3820,17 +3816,8 @@ def _ann_ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
         q, e, query_id="vec_id", query_emb="embedding",
         item_id="vec_id", item_emb="embedding",
     )
-    eq = e.select("vec_id", quantize_emb("embedding").alias("q")).filter(
-        F.size("q") == 64
-    )
-    qq = eq.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("q").alias("qv")
-    )
-    exact = brute_force_topk(
-        qq, eq, k=10, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q",
-        scorer=lambda a, b: -int_l2(a, b),
-    )
+    eq = _quantized(spark, sf, "q").filter(F.size("q") == 64)
+    exact = _top10(eq, "q", "qv", lambda a, b: -int_l2(a, b))
     return ann_recall_vs_exact(approx, exact)
 
 
@@ -4215,31 +4202,7 @@ def _er_cand_pairs(spark: SparkSession, sf: str) -> DataFrame:
 @_q("er_scored_gold_pairs", None)
 def _er_scored(spark: SparkSession, sf: str) -> DataFrame:
     """S4 vectorized pair features on the labeled gold pairs."""
-    from blink_spark.operators.scoring import score_pairs
-
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark)
     return scored.select(
         "record_id_a", "record_id_b", "norm_eq", "jaccard", "lev_ratio", "is_match"
     )
@@ -4250,25 +4213,10 @@ def _er_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """S5 large-star/small-star connected components over match edges
     (oracle: recursive-CTE transitive closure in DuckDB)."""
     from blink_spark.operators.cluster import assign_clusters
-    from blink_spark.operators.scoring import match_edges, score_pairs
+    from blink_spark.operators.scoring import match_edges
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(F.col("mention_id").alias("record_id_a"), F.col("mention").alias("mention_a")),
-            "record_id_a",
-        )
-        .join(
-            m.select(F.col("mention_id").alias("record_id_b"), F.col("mention").alias("mention_b")),
-            "record_id_b",
-        )
-    )
-    edges = match_edges(score_pairs(attrs, text_a="mention_a", text_b="mention_b"))
+    edges = match_edges(_scored_gold_pairs(spark))
     return assign_clusters(m, "mention_id", edges)
 
 
@@ -5075,20 +5023,13 @@ def _ann_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     """IVF coarse-quantizer ANN (nlist cells + nprobe probes,
     /root/reference/elq/index/faiss_indexer.py:71-91) vs exact top-k recall.
     Exact-integer quantized scoring → fully oracled."""
-    from blink_spark.functions.hashing import cosine_exact, quantize_emb
-    from blink_spark.operators.ann import ann_recall_vs_exact, brute_force_topk, ivf_topk
+    from blink_spark.functions.hashing import cosine_exact
+    from blink_spark.operators.ann import ann_recall_vs_exact, ivf_topk
 
-    e = _t(spark, sf, "embeddings").select(
-        "vec_id", quantize_emb("embedding").alias("q")
-    )
-    q = e.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("q").alias("qv")
-    )
+    e = _quantized(spark, sf, "q")
+    q = _ann_queries(e, "q", "qv")
     scorer = lambda a, b: F.round(cosine_exact(a, b), 6)  # noqa: E731
-    exact = brute_force_topk(
-        q, e, k=10, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q", scorer=scorer,
-    )
+    exact = _top10(e, "q", "qv", scorer)
     approx = ivf_topk(
         q, e, nprobe=4, query_id="qid", query_emb="qv",
         item_id="vec_id", item_emb="q", scorer=scorer,
@@ -5103,20 +5044,13 @@ def _ann_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
     (/root/reference/elq/index/faiss_indexer.py:71-91): recall must be
     non-decreasing in nprobe; the knee picks the budget. The exact top-k
     side is computed ONCE (localCheckpoint) and reused by all three cuts."""
-    from blink_spark.functions.hashing import cosine_exact, quantize_emb
-    from blink_spark.operators.ann import ann_recall_vs_exact, brute_force_topk, ivf_topk
+    from blink_spark.functions.hashing import cosine_exact
+    from blink_spark.operators.ann import ann_recall_vs_exact, ivf_topk
 
-    e = _t(spark, sf, "embeddings").select(
-        "vec_id", quantize_emb("embedding").alias("q")
-    )
-    q = e.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("q").alias("qv")
-    )
+    e = _quantized(spark, sf, "q")
+    q = _ann_queries(e, "q", "qv")
     scorer = lambda a, b: F.round(cosine_exact(a, b), 6)  # noqa: E731
-    exact = brute_force_topk(
-        q, e, k=10, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q", scorer=scorer,
-    ).localCheckpoint()
+    exact = _top10(e, "q", "qv", scorer).localCheckpoint()
     out = None
     for np in (1, 2, 4):
         approx = ivf_topk(
@@ -5132,7 +5066,7 @@ def _ann_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "embedding_matryoshka_recall",
-    """
+    f"""
     WITH q0 AS (
       SELECT vec_id,
              list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
@@ -5158,21 +5092,7 @@ def _ann_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
         FROM ap
       ) WHERE rank <= 10
     ),
-    ex AS (
-      SELECT a.vec_id AS query_id, b.vec_id AS item_id,
-             sum((a.v - b.v) * (a.v - b.v))::BIGINT AS d2
-      FROM (SELECT * FROM e WHERE vec_id < 64) a
-      JOIN e b ON a.dimpos = b.dimpos AND b.vec_id <> a.vec_id
-      GROUP BY 1, 2
-    ),
-    ex_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d2 ASC, item_id ASC) AS rank
-        FROM ex
-      ) WHERE rank <= 10
-    )
+    {_EXACT_L2_TOP10_SQL}
     SELECT d.dim::BIGINT AS dim, count(*)::BIGINT AS n_exact,
            sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
              AS n_found,
@@ -5193,32 +5113,16 @@ def _embedding_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     pruning (LSH/IVF) axes of the ANN family. Recall must rise with d;
     the exact side is computed once (localCheckpoint) and reused by all
     three cuts."""
-    from blink_spark.functions.hashing import int_l2, quantize_emb
-    from blink_spark.operators.ann import ann_recall_vs_exact, brute_force_topk
+    from blink_spark.functions.hashing import int_l2
+    from blink_spark.operators.ann import ann_recall_vs_exact
 
     scorer = lambda a, b: -int_l2(a, b)  # noqa: E731
-    eq = (
-        _t(spark, sf, "embeddings")
-        .select("vec_id", quantize_emb("embedding").alias("qv"))
-        .filter(F.size("qv") == 64)
-    )
-    qq = eq.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("qv").alias("qqv")
-    )
-    exact = brute_force_topk(
-        qq, eq, k=10, query_id="qid", query_emb="qqv",
-        item_id="vec_id", item_emb="qv", scorer=scorer,
-    ).localCheckpoint()
+    eq = _quantized(spark, sf, "qv").filter(F.size("qv") == 64)
+    exact = _top10(eq, "qv", "qqv", scorer).localCheckpoint()
     out = None
     for d in (8, 16, 32):
         ed = eq.select("vec_id", F.slice("qv", 1, d).alias("cv"))
-        qd = ed.filter(F.col("vec_id") < 64).select(
-            F.col("vec_id").alias("qid"), F.col("cv").alias("qcv")
-        )
-        approx = brute_force_topk(
-            qd, ed, k=10, query_id="qid", query_emb="qcv",
-            item_id="vec_id", item_emb="cv", scorer=scorer,
-        )
+        approx = _top10(ed, "cv", "qcv", scorer)
         r = ann_recall_vs_exact(approx, exact).select(
             F.lit(d).cast("long").alias("dim"), "*"
         )
@@ -5918,10 +5822,10 @@ def _er_pem_lookup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q(
-    "doc_minhash_dedup",
-    """
-    WITH RECURSIVE n AS (
+# the documents' 7-char-shingle MinHash signatures (32 minima, 4 bands of 8),
+# shared by doc_minhash_dedup and doc_minhash_calibration: `sig` is
+# (record_id, sh, sig)
+_MINHASH_SIG_SQL = """n AS (
       SELECT doc_id::varchar AS record_id,
              trim(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS t
       FROM documents
@@ -5941,7 +5845,13 @@ def _er_pem_lookup(spark: SparkSession, sf: str) -> DataFrame:
       SELECT record_id, sh,
              [list_min([substr(h, i*4 + 1, 4) for h in hh]) for i in range(0, 32)] AS sig
       FROM hs
-    ),
+    )"""
+
+
+@_q(
+    "doc_minhash_dedup",
+    f"""
+    WITH RECURSIVE {_MINHASH_SIG_SQL},
     assign AS (
       SELECT record_id, sh,
              unnest(['b' || b || ':' || md5(array_to_string(sig[b*8+1:b*8+8], ','))
@@ -5993,28 +5903,8 @@ def _doc_minhash_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "doc_minhash_calibration",
-    """
-    WITH n AS (
-      SELECT doc_id::varchar AS record_id,
-             trim(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS t
-      FROM documents
-    ),
-    sh AS (
-      SELECT record_id,
-             list_distinct([substr(t, i, 7) for i in range(1, greatest(length(t)-6, 1)+1)]) AS sh
-      FROM n
-    ),
-    hs AS (
-      SELECT record_id, sh,
-             [md5('h0:' || g) || md5('h1:' || g) || md5('h2:' || g) || md5('h3:' || g)
-              for g in sh] AS hh
-      FROM sh
-    ),
-    sig AS (
-      SELECT record_id, sh,
-             [list_min([substr(h, i*4 + 1, 4) for h in hh]) for i in range(0, 32)] AS sig
-      FROM hs
-    ),
+    f"""
+    WITH {_MINHASH_SIG_SQL},
     assign AS (
       SELECT record_id, sh, sig,
              unnest(['b' || b || ':' || md5(array_to_string(sig[b*8+1:b*8+8], ','))
@@ -6095,15 +5985,13 @@ _COS_EXACT_SQL = (
 )
 
 
-_ANN_PLANES = 4  # 16 buckets over ~500 vectors: measured recall ~0.5 with
-# 1-bit multi-probe; more planes over-partition this corpus (recall 0.13 at 8)
-
-
 def _ann_lsh_oracle_sql() -> str:
-    bucket_i = _bucket_sql("iv", _ANN_PLANES, 64)
-    bucket_q = _bucket_sql("qv", _ANN_PLANES, 64)
+    from blink_spark.operators.ann import LSH_PLANES
+
+    bucket_i = _bucket_sql("iv", LSH_PLANES, 64)
+    bucket_q = _bucket_sql("qv", LSH_PLANES, 64)
     probes = ", ".join(
-        ["bucket0"] + [f"xor(bucket0, {1 << b})" for b in range(_ANN_PLANES)]
+        ["bucket0"] + [f"xor(bucket0, {1 << b})" for b in range(LSH_PLANES)]
     )
     cos_ex = _COS_EXACT_SQL.format(a="qv", b="iv")
     return f"""
@@ -6144,13 +6032,7 @@ def _ann_lsh_oracle_sql() -> str:
         FROM ap_scored
       ) WHERE rank <= 10
     )
-    SELECT count(*) AS n_exact,
-           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_found,
-           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
-             AS recall
-    FROM ex_top x LEFT JOIN ap_top a
-      ON a.query_id = x.query_id AND a.item_id = x.item_id
+    {_RECALL_SQL}
     """
 
 
@@ -6262,28 +6144,17 @@ def _ann_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     quantized to integers and hyperplanes are integer-valued, so bucket
     signs and dot products are exact in BOTH engines; the only float ops are
     one sqrt + one division on identical doubles (IEEE-deterministic)."""
-    from blink_spark.functions.hashing import (
-        cosine_exact,
-        quantize_emb,
-        sign_lsh_bucket_exact,
-    )
-    from blink_spark.operators.ann import ann_recall_vs_exact, brute_force_topk, lsh_topk
+    from blink_spark.functions.hashing import cosine_exact, sign_lsh_bucket_exact
+    from blink_spark.operators.ann import LSH_PLANES, ann_recall_vs_exact, lsh_topk
 
-    e = _t(spark, sf, "embeddings").select(
-        "vec_id", quantize_emb("embedding").alias("q")
-    )
-    q = e.filter(F.col("vec_id") < 64).select(
-        F.col("vec_id").alias("qid"), F.col("q").alias("qv")
-    )
+    e = _quantized(spark, sf, "q")
+    q = _ann_queries(e, "q", "qv")
     scorer = lambda a, b: F.round(cosine_exact(a, b), 6)  # noqa: E731
-    exact = brute_force_topk(
-        q, e, k=10, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q", scorer=scorer,
-    )
+    exact = _top10(e, "q", "qv", scorer)
     approx = lsh_topk(
-        q, e, n_planes=_ANN_PLANES, query_id="qid",
-        query_emb="qv", item_id="vec_id", item_emb="q", scorer=scorer,
-        bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=_ANN_PLANES, dim=64),
+        q, e, query_id="qid", query_emb="qv", item_id="vec_id", item_emb="q",
+        scorer=scorer,
+        bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=LSH_PLANES, dim=64),
     )
     return ann_recall_vs_exact(approx, exact)
 
@@ -6553,32 +6424,9 @@ def _er_fs_weights(spark: SparkSession, sf: str) -> DataFrame:
     agreement probabilities among matches vs non-matches and the integer
     ppm likelihood ratio (monotone log-weight equivalent), over the same
     boundary-exact features score_pairs decides on."""
-    from blink_spark.operators.scoring import fs_weights, score_pairs
+    from blink_spark.operators.scoring import fs_weights
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     labeled = (
         scored.withColumn("jacc_hi", F.col("jaccard") >= F.lit(0.65))
         .withColumn("lev_hi", F.col("lev_ratio") >= F.lit(0.93))
@@ -6597,29 +6445,7 @@ def _er_threshold_dendrogram(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.cluster import threshold_dendrogram
     from blink_spark.operators.scoring import score_pairs
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    attrs = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .filter(F.col("record_id_a") != F.col("record_id_b"))
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
+    attrs = _gold_pairs(spark).filter(F.col("record_id_a") != F.col("record_id_b"))
     scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
     return threshold_dendrogram(scored)
 
@@ -6637,11 +6463,7 @@ def _er_acronym_matches(spark: SparkSession, sf: str) -> DataFrame:
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
     g = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
+        _gold_ids(spark)
         .filter(F.col("record_id_a") != F.col("record_id_b"))
         .distinct()
     )
@@ -6656,32 +6478,7 @@ def _er_reliability_bins(spark: SparkSession, sf: str) -> DataFrame:
     comparator's match rate rises monotonically through the bins; plateaus
     flag score regions the threshold can't separate). Bin = floor(j·20) on
     the identically-rounded doubles both engines computed."""
-    from blink_spark.operators.scoring import score_pairs
-
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    attrs = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     binned = scored.select(
         F.floor(F.col("jaccard") * F.lit(20.0)).cast("long").alias("bin"),
         F.col("same_entity"),
@@ -6715,31 +6512,9 @@ def _er_labelfn_votes(spark: SparkSession, sf: str) -> DataFrame:
     table a pair scorer trains on when no gold labels exist. All LF
     boundaries ride the boundary-exact rounded features both engines
     share."""
-    from blink_spark.operators.scoring import label_function_votes, score_pairs
+    from blink_spark.operators.scoring import label_function_votes
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    attrs = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark)
     return label_function_votes(scored)
 
 
@@ -6753,31 +6528,8 @@ def _er_otsu_threshold(spark: SparkSession, sf: str) -> DataFrame:
     doubles; all variance arithmetic is exact BIGINT on the ≤1001-row
     histogram."""
     from blink_spark.operators.eval import otsu_threshold
-    from blink_spark.operators.scoring import score_pairs
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    attrs = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark)
     return otsu_threshold(
         scored.select(
             F.floor(F.col("jaccard") * F.lit(1000.0))
@@ -6803,14 +6555,7 @@ def _er_tf_adjustment(spark: SparkSession, sf: str) -> DataFrame:
             "val"
         ),
     )
-    g = (
-        _fx(spark, "gold_pairs")
-        .select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .filter(F.col("record_id_a") != F.col("record_id_b"))
-    )
+    g = _gold_ids(spark).filter(F.col("record_id_a") != F.col("record_id_b"))
     return tf_adjusted_agreements(g, m)
 
 
@@ -6820,31 +6565,9 @@ def _er_em_weights(spark: SparkSession, sf: str) -> DataFrame:
     boolean agreement features of the gold pairs WITHOUT their labels
     (Splink-style). One distributed contingency pass; all iterations run
     on the 2^k cell counts in exact integer ppm arithmetic."""
-    from blink_spark.operators.scoring import em_fs_weights, score_pairs
+    from blink_spark.operators.scoring import em_fs_weights
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark)
     feats = scored.select(
         "norm_eq",
         (F.col("jaccard") >= F.lit(0.65)).alias("jacc_hi"),
@@ -6865,32 +6588,10 @@ def _er_review_queue(spark: SparkSession, sf: str) -> DataFrame:
     TakeOrdered (sort+limit), not a full exchange."""
     import math
 
-    from blink_spark.operators.scoring import em_fs_weights, score_pairs
+    from blink_spark.operators.scoring import em_fs_weights
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
     fcols = ["norm_eq", "jacc_hi", "lev_hi"]
-    feats = score_pairs(attrs, text_a="mention_a", text_b="mention_b").select(
+    feats = _scored_gold_pairs(spark).select(
         "record_id_a",
         "record_id_b",
         "norm_eq",
@@ -6941,32 +6642,7 @@ def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
     the cumulative window runs over <= 21 aggregated rows (the
     rank-histogram tiny-table window class); recall/effort are exact
     BIGINT ppm."""
-    from blink_spark.operators.scoring import score_pairs
-
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     per = (
         scored.select(
             F.floor(F.col("jaccard") * 20).cast("long").alias("score_bucket"),
@@ -7015,32 +6691,7 @@ def _er_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     then the tiny-table cumulative window (rank-histogram class); P/R/F1
     are exact integer ppm, F1 computed from the already-floored P and R
     so both engines floor identically."""
-    from blink_spark.operators.scoring import score_pairs
-
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     per = (
         scored.select(
             F.floor(F.col("jaccard") * 20).cast("long").alias("score_bucket"),
@@ -7095,33 +6746,7 @@ def _er_collective_boost(spark: SparkSession, sf: str) -> DataFrame:
     canonicalized (least, greatest) so sibling pairs that link the same
     two documents in opposite a/b order share one evidence window
     (round-4 advice)."""
-    from blink_spark.operators.scoring import score_pairs
-
-    m = _fx(spark, "mentions").select("mention_id", "mention", "doc_id")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-                F.col("doc_id").alias("doc_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    base = score_pairs(attrs, text_a="mention_a", text_b="mention_b").select(
+    base = _scored_gold_pairs(spark, doc=True).select(
         "record_id_a",
         "record_id_b",
         "doc_a",
@@ -7481,32 +7106,9 @@ def _er_match_rule_report(spark: SparkSession, sf: str) -> DataFrame:
         JACCARD_THRESHOLD,
         lev_within,
     )
-    from blink_spark.operators.scoring import match_rule_report, score_pairs
+    from blink_spark.operators.scoring import match_rule_report
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     labeled = (
         scored.withColumn("rule_eq", F.col("norm_eq"))
         .withColumn("rule_jacc", F.col("jaccard") >= F.lit(JACCARD_THRESHOLD))
@@ -7571,13 +7173,9 @@ def _er_sorted_lev(spark: SparkSession, sf: str) -> DataFrame:
     the sorted form admits at the 7% banded threshold (the incremental-
     recall justification). Native JVM levenshtein on both raw and
     sorted forms; integer ppm ratios."""
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
     from blink_spark.functions.text import normalize_text
 
+    m = _fx(spark, "mentions").select("mention_id", "mention")
     forms = m.select(
         F.col("mention_id").alias("rid"),
         normalize_text(F.col("mention")).alias("nrm"),
@@ -7587,7 +7185,8 @@ def _er_sorted_lev(spark: SparkSession, sf: str) -> DataFrame:
         ).alias("srt"),
     )
     j = (
-        pairs.join(
+        _gold_ids(spark)
+        .join(
             forms.select(
                 F.col("rid").alias("record_id_a"),
                 F.col("nrm").alias("na"),
@@ -7660,32 +7259,8 @@ def _er_scorer_auc(spark: SparkSession, sf: str) -> DataFrame:
     thresholded PR curve. Pure reuse of the rank-sum machinery — one
     frequency-table pass, no float sums."""
     from blink_spark.operators.profile import mann_whitney_u
-    from blink_spark.operators.scoring import score_pairs
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-            "same_entity",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark, "same_entity")
     return mann_whitney_u(
         scored,
         "cast(floor(jaccard * 1000000) as bigint)",
@@ -7706,31 +7281,8 @@ def _er_rule_kappa(spark: SparkSession, sf: str) -> DataFrame:
         lev_within,
     )
     from blink_spark.operators.eval import rater_kappa
-    from blink_spark.operators.scoring import score_pairs
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = score_pairs(attrs, text_a="mention_a", text_b="mention_b")
+    scored = _scored_gold_pairs(spark)
     labeled = scored.withColumn(
         "rule_jacc", F.col("jaccard") >= F.lit(JACCARD_THRESHOLD)
     ).withColumn("rule_lev", lev_within("mention_a", "mention_b"))
@@ -7745,11 +7297,7 @@ def _er_token_cosine(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import token_cosine_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return token_cosine_pairs(pairs, m, "mention_id", "mention")
+    return token_cosine_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_nickname_matches", None)  # oracle injected below (fixture path)
@@ -7762,11 +7310,7 @@ def _er_nickname_matches(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import nickname_matches
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return nickname_matches(pairs, m, "mention_id", "mention")
+    return nickname_matches(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_weighted_jaccard", None)  # oracle injected below (fixture path)
@@ -7779,11 +7323,7 @@ def _er_weighted_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import weighted_jaccard_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return weighted_jaccard_pairs(pairs, m, "mention_id", "mention")
+    return weighted_jaccard_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_tfidf_cosine", None)  # oracle injected below (fixture path)
@@ -7795,11 +7335,7 @@ def _er_tfidf_cosine(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import tfidf_cosine_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return tfidf_cosine_pairs(pairs, m, "mention_id", "mention")
+    return tfidf_cosine_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_soft_tfidf", None)  # oracle injected below (fixture path)
@@ -7812,11 +7348,7 @@ def _er_soft_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import soft_tfidf_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return soft_tfidf_pairs(pairs, m, "mention_id", "mention")
+    return soft_tfidf_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_blocking_ensemble", None)  # oracle injected below (fixture path)
@@ -7931,11 +7463,7 @@ def _er_monge_elkan(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import monge_elkan_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    pairs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return monge_elkan_pairs(pairs, m, "mention_id", "mention")
+    return monge_elkan_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
 @_q("er_phonetic_blocks", None)  # oracle injected below (fixture path)
@@ -7984,31 +7512,10 @@ def _er_cluster_repair(spark: SparkSession, sf: str) -> DataFrame:
     sub-clusters the repair yields — the mega-cluster triage sheet for
     transitive-closure over-merging."""
     from blink_spark.operators.cluster import repair_report
-    from blink_spark.operators.scoring import match_edges, score_pairs
+    from blink_spark.operators.scoring import match_edges
 
     m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    edges = match_edges(score_pairs(attrs, text_a="mention_a", text_b="mention_b"))
+    edges = match_edges(_scored_gold_pairs(spark))
     return repair_report(m, "mention_id", edges)
 
 
@@ -8019,31 +7526,9 @@ def _er_open_triangles(spark: SparkSession, sf: str) -> DataFrame:
     are near-cliques, chain merges are open wedges. One row, exact
     integer ppm."""
     from blink_spark.operators.cluster import triangle_census
-    from blink_spark.operators.scoring import match_edges, score_pairs
+    from blink_spark.operators.scoring import match_edges
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    edges = match_edges(score_pairs(attrs, text_a="mention_a", text_b="mention_b"))
+    edges = match_edges(_scored_gold_pairs(spark))
     return triangle_census(edges)
 
 
@@ -8385,31 +7870,9 @@ def _er_missing_links(spark: SparkSession, sf: str) -> DataFrame:
     matches the pairwise scorer rejected but the accepted match structure
     implies, i.e. the recall-repair queue."""
     from blink_spark.operators.cluster import link_prediction
-    from blink_spark.operators.scoring import match_edges, score_pairs
+    from blink_spark.operators.scoring import match_edges
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = match_edges(score_pairs(attrs, text_a="mention_a", text_b="mention_b"))
+    scored = match_edges(_scored_gold_pairs(spark))
     edges = (
         scored.filter(F.col("src") != F.col("dst"))
         .select(
@@ -8995,11 +8458,7 @@ def _er_pprl_bloom_dice(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.scoring import pprl_bloom_dice
 
     recs = _fx(spark, "mentions").select("mention_id", "mention")
-    prs = _fx(spark, "gold_pairs").select(
-        F.col("mention_id_a").alias("record_id_a"),
-        F.col("mention_id_b").alias("record_id_b"),
-    )
-    return pprl_bloom_dice(recs, prs, "mention_id", "mention")
+    return pprl_bloom_dice(recs, _gold_ids(spark), "mention_id", "mention")
 
 
 @_q("er_group_linkage", None)  # oracle injected below (fixture path)
@@ -9010,33 +8469,9 @@ def _er_group_linkage(spark: SparkSession, sf: str) -> DataFrame:
     Jaccard ``1e6*matched div (nA+nB-matched)``. The group-level view of
     the same evidence er_collective_boost propagates pair-locally."""
     from blink_spark.operators.pairs import group_linkage
-    from blink_spark.operators.scoring import score_pairs
 
     m = _fx(spark, "mentions").select("mention_id", "mention", "doc_id")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-                F.col("doc_id").alias("doc_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-                F.col("doc_id").alias("doc_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    pairs = score_pairs(attrs, text_a="mention_a", text_b="mention_b").select(
+    pairs = _scored_gold_pairs(spark, doc=True).select(
         F.col("doc_a").alias("group_a"),
         F.col("doc_b").alias("group_b"),
         F.col("record_id_a").alias("id_a"),
@@ -9075,31 +8510,9 @@ def _er_resource_allocation(spark: SparkSession, sf: str) -> DataFrame:
     the distinction common-neighbor counting cannot make. Terms are
     exact ``1e9 div deg`` integers (no libm log), same wedge-join shape."""
     from blink_spark.operators.cluster import resource_allocation
-    from blink_spark.operators.scoring import match_edges, score_pairs
+    from blink_spark.operators.scoring import match_edges
 
-    m = _fx(spark, "mentions").select("mention_id", "mention")
-    g = _fx(spark, "gold_pairs")
-    attrs = (
-        g.select(
-            F.col("mention_id_a").alias("record_id_a"),
-            F.col("mention_id_b").alias("record_id_b"),
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_a"),
-                F.col("mention").alias("mention_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            m.select(
-                F.col("mention_id").alias("record_id_b"),
-                F.col("mention").alias("mention_b"),
-            ),
-            "record_id_b",
-        )
-    )
-    scored = match_edges(score_pairs(attrs, text_a="mention_a", text_b="mention_b"))
+    scored = match_edges(_scored_gold_pairs(spark))
     edges = (
         scored.filter(F.col("src") != F.col("dst"))
         .select(
@@ -9390,7 +8803,34 @@ def _er_oracles() -> dict[str, str]:
         JOIN m mb ON mb.mention_id = g.mention_id_b
       )
     """
-    clusters_sql = f"""
+
+    def lev_pairs_cte(name: str) -> str:
+        """mention x entity candidates: first-4-char blocks ``mb``/``eb``
+        and ``name`` (mention_id, entity_id, sim), the normalized
+        lev-ratio mirror of similarity.lev_ratio."""
+        return f"""mb AS (
+        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
+        FROM read_parquet('{men}')
+      ),
+      eb AS (
+        SELECT entity_id, lower(title) AS title_l,
+               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
+        FROM read_parquet('{ent}')
+      ),
+      {name} AS (
+        SELECT mention_id, entity_id,
+               round(CASE WHEN greatest(length(mn), length(tn)) > 0
+                          THEN 1.0 - levenshtein(mn, tn)::double
+                               / greatest(length(mn), length(tn))
+                          ELSE 1.0 END, 6) AS sim
+        FROM (SELECT *,
+                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
+                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
+              FROM mb JOIN eb USING (bk))
+      )"""
+    # transitive closure of the scored match graph, the recursive-CTE twin of
+    # assign_clusters: `reach` (id, r) over every mention
+    reach_cte = f"""
       {scored_cte},
       edges AS (
         SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
@@ -9402,7 +8842,9 @@ def _er_oracles() -> dict[str, str]:
         SELECT id, id AS r FROM nodes
         UNION
         SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-      )
+      )"""
+    clusters_sql = f"""
+      {reach_cte}
       SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id
     """
     snm_sql = f"""
@@ -9464,26 +8906,7 @@ def _er_oracles() -> dict[str, str]:
     # here: ids are non-null fixture keys).
     _o2o_parts = [
         f"""
-      WITH mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      p0 AS (
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      )"""
+      WITH {lev_pairs_cte("p0")}"""
     ]
     for _k in range(3):
         _o2o_parts.append(
@@ -9768,18 +9191,7 @@ def _er_oracles() -> dict[str, str]:
     # er_ari: same recursive-CTE clusters as er_bcubed; exact BIGINT pair
     # counts, one double ratio at the end on identical integers.
     ari_sql = f"""
-      {scored_cte},
-      edges AS (
-        SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-        UNION
-        SELECT record_id_b, record_id_a FROM j WHERE is_match
-      ),
-      nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-      reach AS (
-        SELECT id, id AS r FROM nodes
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-      ),
+      {reach_cte},
       cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
       g AS (
@@ -10224,11 +9636,11 @@ def _er_oracles() -> dict[str, str]:
       JOIN bags ba ON ba.record_id = p.record_id_a
       JOIN bags bb ON bb.record_id = p.record_id_b
     """
-    # er_tfidf_cosine: same sparse-algebra shape, components weighted by the
-    # rational idf surrogate (1000*N)//df — integer floor div on positives is
-    # identical across engines; norms kept as separate sqrt factors so the
-    # product can't overflow BIGINT.
-    tfidf_cosine_sql = f"""
+    # tf-idf weights `w` (record_id, tok, x), their squared norms and the gold
+    # pairs `p`, shared by er_tfidf_cosine and er_soft_tfidf: components
+    # weighted by the rational idf surrogate (1000*N)//df — integer floor div
+    # on positives is identical across engines.
+    tfidf_w_cte = f"""
       WITH m AS (
         SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
       ),
@@ -10250,7 +9662,11 @@ def _er_oracles() -> dict[str, str]:
       p AS (
         SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
         FROM read_parquet('{gold}')
-      ),
+      )"""
+    # er_tfidf_cosine: same sparse-algebra shape as er_token_cosine; norms
+    # kept as separate sqrt factors so the product can't overflow BIGINT.
+    tfidf_cosine_sql = f"""
+      {tfidf_w_cte},
       dots AS (
         SELECT p.record_id_a, p.record_id_b,
                sum(a.x * b.x)::BIGINT AS dot
@@ -10278,28 +9694,7 @@ def _er_oracles() -> dict[str, str]:
     # scaled BEFORE the product ((x*s)//1e6) to stay in the x_a*x_b
     # overflow regime. Both directions mirrored.
     soft_tfidf_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      tf AS (
-        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
-        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
-        GROUP BY 1, 2
-      ),
-      nrec AS (SELECT count(DISTINCT mention_id)::BIGINT AS n FROM m),
-      dfk AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-      w AS (
-        SELECT tf.record_id, tf.tok,
-               (tf.tf * ((1000 * nrec.n) // dfk.df))::BIGINT AS x
-        FROM tf JOIN dfk ON dfk.tok = tf.tok CROSS JOIN nrec
-      ),
-      norms AS (
-        SELECT record_id, sum(x * x)::BIGINT AS norm_sq FROM w GROUP BY 1
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      ),
+      {tfidf_w_cte},
       bridge AS (
         SELECT p.record_id_a, p.record_id_b,
                a.tok AS tok_a, a.x AS x_a, b.tok AS tok_b, b.x AS x_b,
@@ -10527,18 +9922,7 @@ def _er_oracles() -> dict[str, str]:
       FROM up, uc, tg
     """
     golden_sql = f"""
-      {scored_cte},
-      edges AS (
-        SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-        UNION
-        SELECT record_id_b, record_id_a FROM j WHERE is_match
-      ),
-      nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-      reach AS (
-        SELECT id, id AS r FROM nodes
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-      ),
+      {reach_cte},
       cl AS (SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id),
       a AS (
         SELECT cl.record_id, cl.cluster_id, m.norm
@@ -10565,18 +9949,7 @@ def _er_oracles() -> dict[str, str]:
       WHERE c.rn = 1
     """
     f1_sql = f"""
-      {scored_cte},
-      edges AS (
-        SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-        UNION
-        SELECT record_id_b, record_id_a FROM j WHERE is_match
-      ),
-      nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-      reach AS (
-        SELECT id, id AS r FROM nodes
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-      ),
+      {reach_cte},
       cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       verdict AS (
         SELECT g.same_entity, (ca.cluster_id = cb.cluster_id) AS pred
@@ -10596,7 +9969,9 @@ def _er_oracles() -> dict[str, str]:
              round(2.0 * tp / greatest(2 * tp + fp + fn, 1), 6) AS f1
       FROM counts
     """
-    topk_sql = f"""
+    # er_topk_candidates: the top-3 lev-ratio candidates per mention;
+    # softmax_confidence nests the same select as its `topk` CTE
+    topk_ctes = f"""
       WITH mb AS (
         SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
         FROM read_parquet('{men}')
@@ -10618,44 +9993,19 @@ def _er_oracles() -> dict[str, str]:
                 trim(regexp_replace(lower(mention), '[\t\n\x0B\f\r ]+', ' ', 'g')) AS mn,
                 trim(regexp_replace(title_l, '[\t\n\x0B\f\r ]+', ' ', 'g')) AS tn
               FROM mb JOIN eb USING (bk))
-      )
-      SELECT mention_id, entity_id, sim, rank FROM (
+      )"""
+    topk_select = """SELECT mention_id, entity_id, sim, rank FROM (
         SELECT mention_id, entity_id, sim,
                row_number() OVER (PARTITION BY mention_id
                                   ORDER BY sim DESC, entity_id ASC) AS rank
         FROM pairs
-      ) WHERE rank <= 3
+      ) WHERE rank <= 3"""
+    topk_sql = f"""{topk_ctes}
+      {topk_select}
     """
-    softmax_sql = f"""
-      WITH mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      pairs AS (
-        -- mirror similarity.lev_ratio exactly: levenshtein over NORMALIZED
-        -- forms (lower + collapse whitespace + trim), 1.0 on empty-empty
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\t\n\x0B\f\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\t\n\x0B\f\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      ),
+    softmax_sql = f"""{topk_ctes},
       topk AS (
-        SELECT mention_id, entity_id, sim, rank FROM (
-          SELECT mention_id, entity_id, sim,
-                 row_number() OVER (PARTITION BY mention_id
-                                    ORDER BY sim DESC, entity_id ASC) AS rank
-          FROM pairs
-        ) WHERE rank <= 3
+        {topk_select}
       )
       , withmax AS (
         SELECT mention_id, entity_id, rank, sim,
@@ -11062,26 +10412,7 @@ def _er_oracles() -> dict[str, str]:
       ) WHERE rank <= 5
     """
     _softmax_ctes = f"""
-      mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      lpairs AS (
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      ),
+      {lev_pairs_cte("lpairs")},
       ltopk AS (
         SELECT mention_id, entity_id, sim, rank FROM (
           SELECT mention_id, entity_id, sim,
@@ -11252,13 +10583,7 @@ def _er_oracles() -> dict[str, str]:
         FROM ex_scored
       ) WHERE rank <= 10
     )
-    SELECT count(*) AS n_exact,
-           cast(sum(CASE WHEN a.item_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_found,
-           round(avg(CASE WHEN a.item_id IS NOT NULL THEN 1.0 ELSE 0.0 END), 6)
-             AS recall
-    FROM ex_top x LEFT JOIN ap_top a
-      ON a.query_id = x.query_id AND a.item_id = x.item_id
+    {_RECALL_SQL}
     """
 
     ivf_sweep_sql = " UNION ALL ".join(
@@ -11432,26 +10757,7 @@ def _er_oracles() -> dict[str, str]:
       FROM r3 WHERE tag <> 'O' GROUP BY doc_id, run_id
     """
     cand_fetch_sql = f"""
-      WITH mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      fpairs AS (
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      ),
+      WITH {lev_pairs_cte("fpairs")},
       ftop AS (
         SELECT mention_id, entity_id, rank FROM (
           SELECT mention_id, entity_id,
@@ -11677,26 +10983,7 @@ def _er_oracles() -> dict[str, str]:
                  AS cand_ids
         FROM cbody
       ),
-      mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      simp AS (
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      ),
+      {lev_pairs_cte("simp")},
       tk3 AS (
         SELECT mention_id, entity_id, rank FROM (
           SELECT mention_id, entity_id,
@@ -12462,18 +11749,7 @@ def _er_oracles() -> dict[str, str]:
         # snapshot diff of the gold entity partition vs the linkage
         # clusters: contingency cells + per-cell split/merge triage
         "er_cluster_churn": f"""
-          {scored_cte},
-          edges AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-          ),
+          {reach_cte},
           cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
           old AS (
             SELECT mention_id AS record_id, label_id AS old_id
@@ -12588,18 +11864,7 @@ def _er_oracles() -> dict[str, str]:
           FROM mm CROSS JOIN sdc CROSS JOIN ein
         """,
         "er_nmi": f"""
-          {scored_cte},
-          edges AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-          ),
+          {reach_cte},
           cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
           lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
           g AS (
@@ -12959,18 +12224,7 @@ def _er_oracles() -> dict[str, str]:
           GROUP BY 1, 2
         """,
         "er_cluster_stats": f"""
-          {scored_cte},
-          edges AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-          ),
+          {reach_cte},
           cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
           sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cl GROUP BY 1),
           hist AS (
@@ -13096,18 +12350,7 @@ def _er_oracles() -> dict[str, str]:
              OR e.cbs_weight * sb.deg >= sb.wsum
         """,
         "er_bcubed": f"""
-          {scored_cte},
-          edges AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-          ),
+          {reach_cte},
           cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
           lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
           g AS (
@@ -13171,18 +12414,7 @@ def _er_oracles() -> dict[str, str]:
           FROM wed, t3, ec
         """,
         "er_cluster_purity": f"""
-          {scored_cte},
-          edges AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-          ),
+          {reach_cte},
           cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
           lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
           g AS (
@@ -13275,26 +12507,7 @@ def _er_oracles() -> dict[str, str]:
           WHERE levenshtein(a.norm, b.norm) <= 2
         """,
         "er_mutual_best": f"""
-          WITH mb AS (
-            SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{men}')
-          ),
-          eb AS (
-            SELECT entity_id, lower(title) AS title_l,
-                   substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{ent}')
-          ),
-          pairs AS (
-            SELECT mention_id, entity_id,
-                   round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                              THEN 1.0 - levenshtein(mn, tn)::double
-                                   / greatest(length(mn), length(tn))
-                              ELSE 1.0 END, 6) AS sim
-            FROM (SELECT *,
-                    trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                    trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-                  FROM mb JOIN eb USING (bk))
-          ),
+          WITH {lev_pairs_cte("pairs")},
           bl AS (
             SELECT mention_id, entity_id, sim
             FROM (SELECT *, row_number() OVER (PARTITION BY mention_id
@@ -13313,26 +12526,7 @@ def _er_oracles() -> dict[str, str]:
           FROM bl JOIN br USING (mention_id, entity_id)
         """,
         "er_recall_at_k": f"""
-          WITH mb AS (
-            SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{men}')
-          ),
-          eb AS (
-            SELECT entity_id, lower(title) AS title_l,
-                   substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{ent}')
-          ),
-          pairs AS (
-            SELECT mention_id, entity_id,
-                   round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                              THEN 1.0 - levenshtein(mn, tn)::double
-                                   / greatest(length(mn), length(tn))
-                              ELSE 1.0 END, 6) AS sim
-            FROM (SELECT *,
-                    trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                    trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-                  FROM mb JOIN eb USING (bk))
-          ),
+          WITH {lev_pairs_cte("pairs")},
           ranked AS (
             SELECT mention_id, entity_id,
                    row_number() OVER (PARTITION BY mention_id

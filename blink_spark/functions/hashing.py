@@ -145,39 +145,6 @@ def embed_text_udf(texts: pd.Series) -> pd.Series:
     return _embed_batch(texts, EMB_DIM)
 
 
-def sign_lsh_bucket(emb: Column | str, n_planes: int = 8) -> Column:
-    """Random-hyperplane LSH bucket id for an embedding column.
-
-    Hyperplanes are seeded constants (blake2b of (LSH_SEED, plane, coord)) so the
-    bucket id is a pure function of the embedding — the IVF-coarse-quantizer
-    analogue (/root/reference/elq/index/faiss_indexer.py:71-91).
-    """
-    c = F.col(emb) if isinstance(emb, str) else emb
-    acc = F.lit(0)
-    for p in range(n_planes):
-        plane = _plane(LSH_SEED, p, EMB_DIM)
-        proj = F.aggregate(
-            F.zip_with(
-                c,
-                F.array(*[F.lit(float(x)) for x in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return acc
-
-
-def _plane(seed: int, p: int, dim: int) -> list[float]:
-    vals = []
-    for i in range(dim):
-        d = hashlib.blake2b(f"plane:{seed}:{p}:{i}".encode(), digest_size=8).digest()
-        u = int.from_bytes(d, "big") / 2**64
-        vals.append(2.0 * u - 1.0)
-    return vals
-
-
 # --- exact-arithmetic (oracle-portable) sign-LSH + cosine -------------------
 #
 # Float dot products are order-sensitive at the last ulp, so a bucket sign or

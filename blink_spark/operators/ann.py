@@ -15,10 +15,11 @@
   nlist=100 cells). At 100 TB the bucket id is the partition key: the join
   is co-located, never all-pairs.
 
-Each side projects its L2 norms once per record (``_embedded``), and the
-default pair score is ``similarity.cosine`` over them (or its numpy batch
-form, bit for bit), rounded to 6 places by Spark's ``F.round``. A custom
-``scorer(qv, iv)`` ignores the norms and Catalyst prunes them.
+Each side projects its L2 norms once per record (``_embedded``), and
+``brute_force_topk``'s default pair score is ``similarity.cosine`` over
+them (or its numpy batch form, bit for bit), rounded to 6 places by Spark's
+``F.round``. A ``scorer(qv, iv)`` (which ``lsh_topk`` and ``ivf_topk``
+require) ignores the norms and Catalyst prunes them.
 
 Tie rule fixed to (score DESC, id ASC) for reproducibility (SURVEY.md §7).
 """
@@ -32,7 +33,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from blink_spark.functions.hashing import sign_lsh_bucket
 from blink_spark.functions.similarity import (
     cosine,
     cosine_block,
@@ -43,6 +43,10 @@ from blink_spark.plans.inspect import spread
 
 # result size of the approximate top-k family (lsh, ivf, pq, ivf-pq)
 ANN_K = 10
+# hyperplanes of lsh_topk's buckets: each query probes its own and the
+# LSH_PLANES buckets at Hamming distance 1. 16 buckets over ~500 vectors
+# measured recall ~0.5; more planes over-partition it (recall 0.13 at 8).
+LSH_PLANES = 4
 # coarse cells of ivf_topk and ivfpq_topk; ivfpq_topk probes IVFPQ_NPROBE
 IVF_CELLS = 16
 IVFPQ_NPROBE = 4
@@ -64,12 +68,6 @@ _BLOCK_DOUBLES = 1 << 18
 # scores that round equal differ by less than 1e-6: every item of the
 # rounded top-k lies within this margin of its batch's k-th raw score.
 _ROUND_MARGIN = 2e-6
-
-
-def _default_scorer(qv, iv):
-    """Rounded cosine with per-pair norms: scores a vector against the
-    literal IVF codebook, whose centroids carry no norm column."""
-    return F.round(cosine(qv, iv), 6)
 
 
 def _embedded(df: DataFrame, id_col: str, emb_col: str, names) -> DataFrame:
@@ -260,23 +258,23 @@ def brute_force_topk(
 def lsh_topk(
     queries: DataFrame,
     items: DataFrame,
-    n_planes: int = 8,
     query_id: str = "query_id",
     query_emb: str = "query_emb",
     item_id: str = "item_id",
     item_emb: str = "item_emb",
-    scorer=None,
-    bucket_fn=None,
+    *,
+    scorer,
+    bucket_fn,
 ) -> DataFrame:
-    """Approximate cosine top-k via random-hyperplane buckets.
+    """Approximate top-k via random-hyperplane buckets.
 
     Items land in their own bucket; queries probe their bucket plus every
     bucket at Hamming distance 1 (the nprobe analogue). The
     scoring join is an equi-join on bucket id — co-partitioned, no cross
-    join anywhere. ``bucket_fn(emb) -> Column`` overrides the float sign-LSH
-    bucket (e.g. ``sign_lsh_bucket_exact`` over quantized embeddings).
+    join anywhere. ``bucket_fn(emb) -> Column`` is an embedding's bucket
+    id over ``LSH_PLANES`` hyperplanes (e.g. ``sign_lsh_bucket_exact`` over
+    quantized embeddings); ``scorer(qv, iv) -> Column`` scores a candidate.
     """
-    bucket_fn = bucket_fn or (lambda c: sign_lsh_bucket(c, n_planes=n_planes))
     it = _embedded(items, item_id, item_emb, _ITEM).withColumn(
         "bucket", bucket_fn(F.col("iv"))
     )
@@ -285,7 +283,7 @@ def lsh_topk(
         "bucket0", bucket_fn(F.col("qv"))
     )
     probes = [F.col("bucket0")]
-    probes += [F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(n_planes)]
+    probes += [F.col("bucket0").bitwiseXOR(F.lit(1 << b)) for b in range(LSH_PLANES)]
     qp = q.select(
         "query_id", "qv", "qn", F.explode(F.array(*probes)).alias("bucket")
     )
@@ -405,7 +403,8 @@ def ivf_topk(
     query_emb: str = "query_emb",
     item_id: str = "item_id",
     item_emb: str = "item_emb",
-    scorer=None,
+    *,
+    scorer,
 ) -> DataFrame:
     """IVF-style approximate top-k — the coarse-quantizer analogue of
     /root/reference/elq/index/faiss_indexer.py:71-91 (nlist cells, nprobe
@@ -418,8 +417,9 @@ def ivf_topk(
     probe selection are shuffle-free literal-codebook expressions (argmax
     fold / comparator-sort + slice) — one projection per row on each side,
     no join, no window, no Exchange before the cell equi-join.
+    ``scorer(v, cv) -> Column`` scores an item or query against a centroid
+    (cell assignment and probes) and a candidate against its query.
     """
-    cell_scorer = scorer or _default_scorer
     it = _embedded(items, item_id, item_emb, _ITEM)
     cents = (
         it.orderBy(F.col("item_id").asc())
@@ -435,8 +435,8 @@ def ivf_topk(
             F.lit(0.0).alias("score"),
         )
         return _rank_topk(empty, ANN_K)
-    assigned = _assign_cells_lit(it, carr, cid_t, cell_scorer)
-    probes = _probe_cells_lit(q, carr, cid_t, cell_scorer, nprobe)
+    assigned = _assign_cells_lit(it, carr, cid_t, scorer)
+    probes = _probe_cells_lit(q, carr, cid_t, scorer, nprobe)
     pairs = (
         probes.join(assigned, "cid")
         .filter(F.col("item_id") != F.col("query_id"))

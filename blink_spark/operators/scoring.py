@@ -355,6 +355,40 @@ def match_rule_report(
     )
 
 
+def _pair_dot_norms(pairs: DataFrame, weights: DataFrame, w: str) -> DataFrame:
+    """``pairs`` + the exact sparse ``dot`` (0 when no token is shared),
+    ``norm_a`` and ``norm_b`` of per-record token weights ``weights``
+    (record_id, tok, w): the (pair, token) equi-join and the norm joins
+    that token_cosine_pairs and tfidf_cosine_pairs score."""
+    norms = weights.groupBy("record_id").agg(
+        F.sum(F.col(w) * F.col(w)).cast("long").alias("norm_sq")
+    )
+
+    def side(s: str) -> DataFrame:
+        return weights.select(
+            F.col("record_id").alias(f"record_id_{s}"), "tok", F.col(w).alias(f"{w}_{s}")
+        )
+
+    def norm(s: str) -> DataFrame:
+        return norms.select(
+            F.col("record_id").alias(f"record_id_{s}"),
+            F.col("norm_sq").alias(f"norm_{s}"),
+        )
+
+    dots = (
+        pairs.join(side("a"), "record_id_a")
+        .join(side("b"), ["record_id_b", "tok"])
+        .groupBy("record_id_a", "record_id_b")
+        .agg(F.sum(F.col(f"{w}_a") * F.col(f"{w}_b")).cast("long").alias("dot"))
+    )
+    return (
+        pairs.join(dots, ["record_id_a", "record_id_b"], "left")
+        .join(norm("a"), "record_id_a")
+        .join(norm("b"), "record_id_b")
+        .withColumn("dot", F.coalesce(F.col("dot"), F.lit(0).cast("long")))
+    )
+
+
 def token_cosine_pairs(
     pairs: DataFrame,
     records: DataFrame,
@@ -390,39 +424,7 @@ def token_cosine_pairs(
         .groupBy("record_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
-    norms = tf.groupBy("record_id").agg(
-        F.sum(F.col("tf") * F.col("tf")).cast("long").alias("norm_sq")
-    )
-    ta = tf.select(
-        F.col("record_id").alias("record_id_a"), "tok", F.col("tf").alias("tf_a")
-    )
-    tb = tf.select(
-        F.col("record_id").alias("record_id_b"), "tok", F.col("tf").alias("tf_b")
-    )
-    dots = (
-        pairs.join(ta, "record_id_a")
-        .join(tb, ["record_id_b", "tok"])
-        .groupBy("record_id_a", "record_id_b")
-        .agg(F.sum(F.col("tf_a") * F.col("tf_b")).cast("long").alias("dot"))
-    )
-    out = (
-        pairs.join(dots, ["record_id_a", "record_id_b"], "left")
-        .join(
-            norms.select(
-                F.col("record_id").alias("record_id_a"),
-                F.col("norm_sq").alias("norm_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            norms.select(
-                F.col("record_id").alias("record_id_b"),
-                F.col("norm_sq").alias("norm_b"),
-            ),
-            "record_id_b",
-        )
-        .withColumn("dot", F.coalesce(F.col("dot"), F.lit(0).cast("long")))
-    )
+    out = _pair_dot_norms(pairs, tf, "tf")
     return out.withColumn(
         "cosine",
         F.round(
@@ -709,39 +711,7 @@ def tfidf_cosine_pairs(
     ``tfidf_cosine`` (round 6).
     """
     weighted = tfidf_weights(records, id_col, text_col)
-    norms = weighted.groupBy("record_id").agg(
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("norm_sq")
-    )
-    xa = weighted.select(
-        F.col("record_id").alias("record_id_a"), "tok", F.col("x").alias("x_a")
-    )
-    xb = weighted.select(
-        F.col("record_id").alias("record_id_b"), "tok", F.col("x").alias("x_b")
-    )
-    dots = (
-        pairs.join(xa, "record_id_a")
-        .join(xb, ["record_id_b", "tok"])
-        .groupBy("record_id_a", "record_id_b")
-        .agg(F.sum(F.col("x_a") * F.col("x_b")).cast("long").alias("dot"))
-    )
-    out = (
-        pairs.join(dots, ["record_id_a", "record_id_b"], "left")
-        .join(
-            norms.select(
-                F.col("record_id").alias("record_id_a"),
-                F.col("norm_sq").alias("norm_a"),
-            ),
-            "record_id_a",
-        )
-        .join(
-            norms.select(
-                F.col("record_id").alias("record_id_b"),
-                F.col("norm_sq").alias("norm_b"),
-            ),
-            "record_id_b",
-        )
-        .withColumn("dot", F.coalesce(F.col("dot"), F.lit(0).cast("long")))
-    )
+    out = _pair_dot_norms(pairs, weighted, "x")
     return out.withColumn(
         "tfidf_cosine",
         F.round(

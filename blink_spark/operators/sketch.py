@@ -128,7 +128,6 @@ def hll_distinct(
     register maxes).
     """
     p = HLL_P
-    _check_hll_p(p)
     m = 1 << p
     per_reg = _hll_rho_rows(df, key_col, group_col, p).groupBy("grp", "j").agg(
         F.max("rho").alias("mj"),
@@ -146,11 +145,6 @@ def hll_distinct(
         "s_scaled",
         _hll_est_col(m).alias("est_distinct"),
     )
-
-
-def _check_hll_p(p: int) -> None:
-    if p not in (4, 5, 6):
-        raise ValueError(f"hll: p must be 4, 5 or 6, got {p}")
 
 
 def _hll_rho_rows(

@@ -97,7 +97,7 @@ def test_ann_lsh_recall_floor(spark):
     on the testdata embeddings (asserted, not just emitted — round-1 gap).
 
     Measured ~0.51 at 4 planes / 1-bit probe on these 500 64-dim vectors;
-    the operator's recall knob is n_planes."""
+    the operator's recall knob is ann.LSH_PLANES."""
     import __spark_entry__ as entry
 
     row = entry.queries()["ann_lsh_recall"](
@@ -185,7 +185,8 @@ def test_ivf_assign_cells_null_embedding_tie_rule(spark):
     """A null-embedding item must land on the LOWEST cid (the replaced
     crossJoin+window form's ORDER BY score DESC NULLS LAST, cid ASC), not
     on whichever codebook entry the collect order put last."""
-    from blink_spark.operators.ann import _default_scorer, assign_cells
+    from blink_spark.functions.similarity import cosine
+    from blink_spark.operators.ann import assign_cells
 
     cents = spark.createDataFrame(
         [(2, [1.0, 0.0]), (0, [0.0, 1.0]), (1, [0.5, 0.5])],
@@ -197,7 +198,9 @@ def test_ivf_assign_cells_null_embedding_tie_rule(spark):
     )
     got = {
         r.item_id: r.cid
-        for r in assign_cells(items, cents, _default_scorer).collect()
+        for r in assign_cells(
+            items, cents, lambda a, b: F.round(cosine(a, b), 6)
+        ).collect()
     }
     assert got["ok"] == 2
     assert got["nullemb"] == 0, got
@@ -289,11 +292,8 @@ def test_ivf_probe_cells_null_query_is_deterministic(spark):
     """Symmetric to the assignment-side null fix: a null-embedding QUERY's
     probed cells must be the lowest cids (comparator falls through to cid
     ASC on null scores), independent of codebook collect order."""
-    from blink_spark.operators.ann import (
-        _centroid_literal_array,
-        _default_scorer,
-        _probe_cells_lit,
-    )
+    from blink_spark.functions.similarity import cosine
+    from blink_spark.operators.ann import _centroid_literal_array, _probe_cells_lit
 
     cents = spark.createDataFrame(
         [(2, [1.0, 0.0]), (0, [0.0, 1.0]), (1, [0.5, 0.5])],
@@ -305,7 +305,9 @@ def test_ivf_probe_cells_null_query_is_deterministic(spark):
     carr, cid_t = _centroid_literal_array(cents)
     got = sorted(
         r.cid
-        for r in _probe_cells_lit(qs, carr, cid_t, _default_scorer, 2).collect()
+        for r in _probe_cells_lit(
+            qs, carr, cid_t, lambda a, b: F.round(cosine(a, b), 6), 2
+        ).collect()
     )
     assert got == [0, 1], got
 

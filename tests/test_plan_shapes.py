@@ -42,7 +42,7 @@ def test_lsh_topk_is_not_a_cross_join(spark):
     from pyspark.sql import functions as F
 
     from blink_spark.functions.hashing import cosine_exact, quantize_emb, sign_lsh_bucket_exact
-    from blink_spark.operators.ann import brute_force_topk, lsh_topk
+    from blink_spark.operators.ann import LSH_PLANES, brute_force_topk, lsh_topk
 
     e = spark.read.parquet(f"{TESTDATA}/embeddings.parquet").select(
         "vec_id", quantize_emb("embedding").alias("q")
@@ -50,9 +50,9 @@ def test_lsh_topk_is_not_a_cross_join(spark):
     q = e.limit(8).select(F.col("vec_id").alias("qid"), F.col("q").alias("qv"))
     scorer = lambda a, b: F.round(cosine_exact(a, b), 6)  # noqa: E731
     approx = lsh_topk(
-        q, e, n_planes=4, query_id="qid", query_emb="qv",
-        item_id="vec_id", item_emb="q", scorer=scorer,
-        bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=4, dim=64),
+        q, e, query_id="qid", query_emb="qv", item_id="vec_id", item_emb="q",
+        scorer=scorer,
+        bucket_fn=lambda c: sign_lsh_bucket_exact(c, n_planes=LSH_PLANES, dim=64),
     )
     plan_a = explain_str(approx)
     assert "CartesianProduct" not in plan_a and "BroadcastNestedLoopJoin" not in plan_a

@@ -200,7 +200,7 @@ def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
     assert u == sorted(tuple(r) for r in new.select(keep).collect())
 
 
-@pytest.mark.parametrize("op", ["brute_force_topk", "lsh_topk", "ivf_topk"])
+@pytest.mark.parametrize("op", ["brute_force_topk"])
 def test_topk_norm_hoist_equals_per_pair_cosine(spark, fixture_paths, op):
     """The default top-k score reads per-record L2 norms; it must equal the
     per-pair cosine exactly, the empty text's zero embedding included. The
@@ -230,10 +230,8 @@ def test_topk_norm_hoist_equals_per_pair_cosine(spark, fixture_paths, op):
     )
     assert emb.filter("text = ''").first().emb_n == 0.0
     topk = getattr(ann, op)
-    # the approximate ops return ann.ANN_K (10) rows per query
-    kw = {"k": 10} if op == "brute_force_topk" else {}
-    hoisted = topk(queries, items, **kw)
-    per_pair = topk(queries, items, scorer=_per_pair_cosine, **kw)
+    hoisted = topk(queries, items, k=10)
+    per_pair = topk(queries, items, k=10, scorer=_per_pair_cosine)
     got = sorted(tuple(r) for r in hoisted.collect())
     want = sorted(tuple(r) for r in per_pair.collect())
     assert got == want and len(got) > 0

@@ -14,6 +14,9 @@ The option guard reads the same roots: a defaulted parameter of a top-level
 ``blink_spark`` function that every product call gives one value is a
 constant, not an option, unless ``OPTION_ALLOWLIST`` keeps it for a stated
 reason.
+
+The clone guard reads ``__spark_entry__.py`` and ``blink_spark/`` as text:
+no 20 consecutive normalised lines may occur twice.
 """
 
 from __future__ import annotations
@@ -252,9 +255,6 @@ OPTION_ALLOWLIST: dict[tuple[str, str, str], str] = {
     # also the only way tests reach the distributed superstep CC
     ("blink_spark.operators.cluster", "connected_components", "local_threshold"): STARRED,
     ("blink_spark.operators.ann", "brute_force_topk", "scorer"): CALLABLE,
-    ("blink_spark.operators.ann", "lsh_topk", "scorer"): CALLABLE,
-    ("blink_spark.operators.ann", "lsh_topk", "bucket_fn"): CALLABLE,
-    ("blink_spark.operators.ann", "ivf_topk", "scorer"): CALLABLE,
 }
 
 _VARIES = object()
@@ -397,3 +397,72 @@ def test_option_analyzer_on_synthetic_source():
     # a non-literal argument varies
     got = _one_valued_options({"lib": lib}, [ast.parse("f(df, k=K)\nf(df)")])
     assert ("lib", "f", "k") not in got
+
+
+# ---- clone guard -----------------------------------------------------------
+
+CLONE_WINDOW = 20
+
+
+def _clone_files() -> list[Path]:
+    return [REPO / "__spark_entry__.py", *_pkg_files()]
+
+
+def _normalised(path: Path) -> list[tuple[int, str]]:
+    """(line number, text) of every line that is neither blank nor a
+    ``#`` comment, stripped and with inner whitespace collapsed."""
+    out = []
+    for i, line in enumerate(path.read_text().splitlines(), 1):
+        text = " ".join(line.split())
+        if text and not text.startswith("#"):
+            out.append((i, text))
+    return out
+
+
+def _clones(files: dict[str, list[tuple[int, str]]], window: int) -> list[tuple[str, str]]:
+    """(first, repeat) ``file:line`` starts of every run of ``window``
+    consecutive normalised lines that occurred before, in the same file or
+    an earlier one. A run of overlapping repeated windows is reported once,
+    at its first window."""
+    seen: dict[tuple[str, ...], str] = {}
+    found = []
+    for name, lines in files.items():
+        in_run = False
+        for k in range(len(lines) - window + 1):
+            key = tuple(text for _, text in lines[k:k + window])
+            here = f"{name}:{lines[k][0]}"
+            if key in seen:
+                if not in_run:
+                    found.append((seen[key], here))
+                in_run = True
+            else:
+                seen[key] = here
+                in_run = False
+    return found
+
+
+def test_no_repeated_code_blocks():
+    """No 20 consecutive lines (stripped, whitespace collapsed, blank and
+    ``#`` lines dropped) occur twice in ``__spark_entry__.py`` and
+    ``blink_spark/``: a query chain or oracle CTE written twice is written
+    once, as a helper or a shared SQL fragment, and reused."""
+    files = {str(p.relative_to(REPO)): _normalised(p) for p in _clone_files()}
+    found = _clones(files, CLONE_WINDOW)
+    assert not found, f"{len(found)} repeated {CLONE_WINDOW}-line blocks:\n" + "\n".join(
+        f"{a} repeated at {b}" for a, b in found
+    )
+
+
+def test_clone_finder_on_synthetic_source():
+    block = [(i, f"x{i} = {i}") for i in range(1, 4)]
+    shifted = [(i + 10, text) for i, text in block]
+    # a 3-line block repeated in another file, and within one file
+    got = _clones({"a.py": block, "b.py": [(1, "y = 0"), *shifted]}, 3)
+    assert got == [("a.py:1", "b.py:11")]
+    assert _clones({"a.py": block + shifted}, 3) == [("a.py:1", "a.py:11")]
+    # overlapping repeated windows of one longer copy report once
+    long_block = [(i, f"z{i}") for i in range(6)]
+    assert _clones({"a.py": long_block, "b.py": long_block}, 3) == [("a.py:0", "b.py:0")]
+    # one differing line breaks every window through it
+    changed = [*block[:1], (2, "x2 = 9"), *block[2:]]
+    assert _clones({"a.py": block, "b.py": changed}, 3) == []
