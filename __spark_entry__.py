@@ -9972,28 +9972,7 @@ def _er_oracles() -> dict[str, str]:
     # er_topk_candidates: the top-3 lev-ratio candidates per mention;
     # softmax_confidence nests the same select as its `topk` CTE
     topk_ctes = f"""
-      WITH mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      pairs AS (
-        -- mirror similarity.lev_ratio exactly: levenshtein over NORMALIZED
-        -- forms (lower + collapse whitespace + trim), 1.0 on empty-empty
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\t\n\x0B\f\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\t\n\x0B\f\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      )"""
+      WITH {lev_pairs_cte("pairs")}"""
     topk_select = """SELECT mention_id, entity_id, sim, rank FROM (
         SELECT mention_id, entity_id, sim,
                row_number() OVER (PARTITION BY mention_id
@@ -12482,8 +12461,8 @@ def _er_oracles() -> dict[str, str]:
                                    / greatest(length(mn), length(tn))
                               ELSE 1.0 END, 6) AS sim
             FROM (SELECT *,
-                    trim(regexp_replace(lower(mention), '[\t\n\x0B\f\r ]+', ' ', 'g')) AS mn,
-                    trim(regexp_replace(title_l, '[\t\n\x0B\f\r ]+', ' ', 'g')) AS tn
+                    trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
+                    trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
                   FROM mb JOIN eb USING (bk)
                   WHERE entity_id != label_id)
           )
