@@ -3994,12 +3994,10 @@ def _doc_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
 def _doc_minhash_bands(spark: SparkSession, sf: str) -> DataFrame:
     """MinHash-LSH band keys (FAISS-ANN analogue,
     /root/reference/blink/indexer/faiss_indexer.py:71-141)."""
-    from blink_spark.functions.hashing import minhash_band_keys
+    from blink_spark.operators.blocking import minhash_blocks
 
-    d = _t(spark, sf, "documents")
-    return d.select(
-        "doc_id",
-        F.explode(minhash_band_keys("text")).alias("band_key"),
+    return minhash_blocks(_t(spark, sf, "documents"), "doc_id", "text").select(
+        F.col("record_id").alias("doc_id"), F.col("block_key").alias("band_key")
     )
 
 

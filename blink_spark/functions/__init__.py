@@ -20,7 +20,4 @@ from blink_spark.functions.similarity import (  # noqa: F401
     pair_score,
     token_jaccard,
 )
-from blink_spark.functions.hashing import (  # noqa: F401
-    embed_text_udf,
-    minhash_signature,
-)
+from blink_spark.functions.hashing import embed_text_udf  # noqa: F401

@@ -1,8 +1,9 @@
-"""Hash-based blocking primitives: MinHash, SimHash, hashing-trick embeddings.
+"""Hash-based primitives: SimHash token hashes, hashing-trick embeddings,
+exact-integer sign-LSH. (MinHash lives in ``operators/blocking.py``.)
 
-MinHash/SimHash are built on ``md5`` so the exact same signature is
-computable in ANSI SQL (DuckDB oracle parity) — no dependence on Spark's
-non-portable ``hash()``/``xxhash64``. The embedding UDF replaces the
+Token hashes are built on ``md5`` so the exact same SimHash is computable
+in ANSI SQL (DuckDB oracle parity) — no dependence on Spark's non-portable
+``hash()``/``xxhash64``. The embedding UDF replaces the
 reference's biencoder (/root/reference/blink/common/ranker_base.py:28-44)
 with a seeded, model-free hashing-trick featurizer: a pure function of the
 text, stable across machines and partitionings (SURVEY.md §7 determinism).
@@ -19,67 +20,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from blink_spark.functions.text import shingles
-
 
 def _hash16(c: Column, salt: int) -> Column:
     """First 15 hex chars of md5(salt || value) as a bigint (portable)."""
     return F.conv(F.substring(F.md5(F.concat(F.lit(f"s{salt}:"), c)), 1, 15), 16, 10).cast(
         "long"
-    )
-
-
-def minhash_signature(col: Column | str, k: int = 16, shingle_n: int = 3) -> Column:
-    """array<string> of k min-hashes over character shingles.
-
-    Cost-conscious construction: each shingle is md5-hashed ``ceil(k/8)``
-    times (not k times); component i is the min over shingles of the i-th
-    4-hex-char window of the concatenated digests. md5 hex strings have fixed
-    width, so the lexicographic min IS the numeric min, and the identical
-    signature is computable in ANSI SQL (oracle parity). 16-bit components
-    are plenty for banding (collision noise ~n_shingles/65536 per row).
-
-    The ANN/blocking analogue of the reference's FAISS index
-    (/root/reference/blink/indexer/faiss_indexer.py:71-141): documents whose
-    signatures collide in a band are near-duplicate candidates.
-    """
-    sh = shingles(col, n=shingle_n)
-    n_md5 = (k * 4 + 31) // 32
-
-    def _digests(s: Column) -> Column:
-        # NB: 1-arg lambdas only — a 2-arg lambda in F.transform receives the
-        # array index as its second argument (pyspark binary-lambda protocol).
-        return F.concat(*[F.md5(F.concat(F.lit(f"h{j}:"), s)) for j in range(n_md5)])
-
-    hashed = F.transform(sh, _digests)
-
-    # single pass over the shingles: fold with element-wise min of the k
-    # 4-hex windows — md5 computed exactly once per (shingle, j).
-    init = F.array(*[F.lit("gggg") for _ in range(k)])  # 'g' > any hex char
-
-    def _fold(acc: Column, h: Column) -> Column:
-        wins = F.array(*[F.substring(h, i * 4 + 1, 4) for i in range(k)])
-        return F.zip_with(acc, wins, lambda a, w: F.least(a, w))
-
-    return F.aggregate(hashed, init, _fold)
-
-
-def minhash_band_keys(col: Column | str) -> Column:
-    """array<string> of LSH band keys: md5 of each band of a 4-band × 4-row
-    signature over 3-char shingles.
-
-    Two texts share a band key iff their signature agrees on all 4 hashes
-    of that band — the classic banding construction.
-    """
-    sig = minhash_signature(col, k=16, shingle_n=3)
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"b{b}:"),
-                F.md5(F.array_join(F.slice(sig, b * 4 + 1, 4), ",")),
-            )
-            for b in range(4)
-        ]
     )
 
 

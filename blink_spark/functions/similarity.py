@@ -50,40 +50,25 @@ def lev_ratio(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def lev_within_norm(na: Column | str, nb: Column | str,
-                    min_ratio: float = LEV_RATIO_THRESHOLD) -> Column:
-    """Banded-levenshtein threshold test over already-normalized strings."""
+def lev_within_norm(na: Column | str, nb: Column | str) -> Column:
+    """Banded-levenshtein threshold test (``LEV_RATIO_THRESHOLD``) over
+    already-normalized strings."""
     na = F.col(na) if isinstance(na, str) else na
     nb = F.col(nb) if isinstance(nb, str) else nb
     m = F.greatest(F.length(na), F.length(nb))
-    eps_num = round((1.0 - min_ratio) * 100)
+    eps_num = round((1.0 - LEV_RATIO_THRESHOLD) * 100)
     k = F.floor(m * eps_num / 100).cast("int")
     # F.levenshtein() only takes a python-int threshold; call_function routes
     # to the SQL builtin, which accepts a per-row threshold expression.
     return F.call_function("levenshtein", na, nb, k) >= 0
 
 
-def lev_within(a: Column | str, b: Column | str,
-               min_ratio: float = LEV_RATIO_THRESHOLD) -> Column:
-    """``lev_ratio(a,b) >= min_ratio`` via the threshold-banded builtin
-    ``levenshtein(l, r, k)`` — O(n·k) instead of O(n²). Integer-exact
+def lev_within(a: Column | str, b: Column | str) -> Column:
+    """``lev_ratio(a,b) >= LEV_RATIO_THRESHOLD`` via the threshold-banded
+    builtin ``levenshtein(l, r, k)`` — O(n·k) instead of O(n²). Integer-exact
     equivalent of the float rule: ratio >= 1-eps ⇔ dist <= floor(eps·maxlen).
     """
-    return lev_within_norm(normalize_text(a), normalize_text(b), min_ratio)
-
-
-def is_match(a: Column | str, b: Column | str) -> Column:
-    """The match decision rule (replaces the reference's crossencoder argmax
-    at /root/reference/blink/main_dense.py:541-560 with a thresholded
-    deterministic rule): exact normalized equality OR token-Jaccard OR
-    Levenshtein-ratio above calibrated thresholds. Lazily evaluated left to
-    right in codegen — the banded levenshtein only runs when Jaccard was
-    inconclusive."""
-    return (
-        (normalize_text(a) == normalize_text(b))
-        | (token_jaccard(a, b) >= F.lit(JACCARD_THRESHOLD))
-        | lev_within(a, b, LEV_RATIO_THRESHOLD)
-    )
+    return lev_within_norm(normalize_text(a), normalize_text(b))
 
 
 def _col(c: Column | str) -> Column:

@@ -4,9 +4,13 @@ are ever paired. Two strategies, unionable:
 1. token-pair blocking — every unordered pair of distinct tokens is a key.
    Guarantees candidate coverage whenever two surfaces share >= 2 tokens
    (our synthetic corruption model, and classic schema-agnostic blocking).
-2. MinHash-LSH band blocking — char-shingle minhash signatures banded into
-   bucket keys; the scalable analogue of the reference's FAISS ANN index
-   (/root/reference/blink/indexer/faiss_indexer.py:71-141).
+2. MinHash-LSH band blocking — char-shingle MinHash signatures
+   (``minhash_sig``) banded into bucket keys (``band_blocks``); the
+   scalable analogue of the reference's FAISS ANN index
+   (/root/reference/blink/indexer/faiss_indexer.py:71-141). This is the
+   library's only MinHash: the pipeline, the document dedup operators and
+   the ``doc_minhash_bands`` query all take their signatures and band keys
+   from here.
 
 Both emit (block_key string, record_id string) rows; select those two
 columns before a union.
@@ -64,36 +68,35 @@ def token_pair_blocks(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def minhash_blocks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bands: int = 4,
-    rows: int = 4,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash-LSH band keys as blocks (near-dup blocking).
+def minhash_sig(df: DataFrame, id_col: str, text_col: str,
+                k: int, shingle_n: int) -> DataFrame:
+    """(record_id, s0..s{k-1}): the MinHash signature of each record's
+    normalized text over ``shingle_n``-char shingles, one int per slot.
 
-    Relational formulation — identical values to
-    ``functions.hashing.minhash_band_keys`` but ~10x faster: Spark's
-    higher-order array functions (transform/aggregate/zip_with) are
-    CodegenFallback, i.e. interpreted per element, so the array fold is
-    rewritten as explode → codegen md5/substring columns → groupBy with
-    per-component ``min`` (map-side partial agg collapses each partition to
-    one row per record before the shuffle). Shingle multiplicity doesn't
-    matter (min over multiset == min over set), so no dedup is needed.
+    Each shingle is md5-hashed ``ceil(k/8)`` times (not k times); slot i is
+    the min over shingles of the i-th 4-hex-char window of the concatenated
+    digests, so the identical signature is computable in ANSI SQL (oracle
+    parity). 16-bit slots are plenty for banding (collision noise
+    ~n_shingles/65536 per row).
+
+    Relational formulation: explode → codegen md5/substring columns →
+    groupBy with per-slot ``min`` (map-side partial agg collapses each
+    partition to one row per record before the shuffle), never an array
+    fold: Spark's higher-order array functions (transform/aggregate/
+    zip_with) are CodegenFallback, i.e. interpreted per element, ~10x
+    slower here. Shingle multiplicity doesn't matter (min over multiset ==
+    min over set), so no dedup is needed.
 
     The per-shingle 4-hex windows are parsed to ints before the min agg:
     numeric min over the parsed value equals lexicographic min over
     fixed-width lowercase hex, the agg state and partial-agg shuffle rows
     shrink ~3x, and the hash-agg update loop compares ints instead of
-    strings (~18% on the whole stage, interleaved same-JVM A/B,
-    bit-identical band keys — the hex is rebuilt with lower(lpad(hex())) on
-    the one-row-per-record output only).
+    strings (~18% on the whole blocking stage, interleaved same-JVM A/B).
+
+    A NULL text has one NULL shingle, so every slot is NULL.
     """
     from blink_spark.functions.text import normalize_text
 
-    k = bands * rows
     n_md5 = (k * 4 + 31) // 32
     wins_per_md5 = 32 // 4
     norm = normalize_text(df[text_col])
@@ -120,10 +123,18 @@ def minhash_blocks(
             for i in range(k)
         ],
     )
-    sig = windows.groupBy("record_id").agg(
+    return windows.groupBy("record_id").agg(
         *[F.min(f"w{i}").alias(f"s{i}") for i in range(k)]
     )
-    hexs = [F.lower(F.lpad(F.hex(F.col(f"s{i}")), 4, "0")) for i in range(k)]
+
+
+def band_blocks(sig: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(record_id, block_key): one LSH band key per band of a
+    ``minhash_sig`` frame, ``b<band>:`` + md5 of the band's slots as
+    comma-joined 4-hex strings. Two records share a band key iff their
+    signatures agree on every slot of that band. NULL slots drop out of the
+    join, so a NULL text's keys are md5('')."""
+    hexs = [F.lower(F.lpad(F.hex(F.col(f"s{i}")), 4, "0")) for i in range(bands * rows)]
     band_keys = F.array(
         *[
             F.concat(
@@ -135,6 +146,22 @@ def minhash_blocks(
     )
     return sig.select(
         "record_id", F.explode(band_keys).alias("block_key")
+    )
+
+
+def minhash_blocks(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    bands: int = 4,
+    rows: int = 4,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """MinHash-LSH band keys as blocks (near-dup blocking): the
+    ``bands`` x ``rows`` signature of ``minhash_sig``, banded by
+    ``band_blocks``. Returns (record_id, block_key)."""
+    return band_blocks(
+        minhash_sig(df, id_col, text_col, bands * rows, shingle_n), bands, rows
     )
 
 

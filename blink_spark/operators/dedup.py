@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from blink_spark.functions.text import fingerprint, normalize_text, shingles
+from blink_spark.operators.blocking import band_blocks, minhash_blocks, minhash_sig
 from blink_spark.operators.cluster import assign_clusters
 from blink_spark.operators.pairs import candidate_pairs, pairs_with_attrs
 from blink_spark.operators.scoring import match_edges
@@ -221,8 +222,6 @@ def minhash_dedup(
     shingle-Jaccard verification (>= 0.8), CC. The verification step makes LSH a
     candidate generator, not the decision — false band collisions are
     filtered by the true Jaccard."""
-    from blink_spark.operators.blocking import minhash_blocks
-
     recs = df.select(
         F.col(id_col).cast("string").alias("record_id"),
         df[text_col].alias("text"),
@@ -601,95 +600,49 @@ def minhash_calibration(
     choice (Broder's estimator is unbiased with sd ~ sqrt(j(1-j)/k); this
     measures the realized error on the corpus, including banding bias).
 
-    Same block construction as ``minhash_dedup`` (bands x rows signature,
-    blocks of at most 4096), so the measured pairs are exactly the pairs the
-    dedup path would verify. All quantities exact integer ppm with floor
-    means — no float enters the parity surface.
+    Same blocks and pairs as ``minhash_dedup`` (``band_blocks`` over the
+    bands x rows ``minhash_sig``, ``candidate_pairs``), so the measured
+    pairs are exactly the pairs the dedup path would verify. All
+    quantities exact integer ppm with floor means — no float enters the
+    parity surface.
 
-    Shape: signature + shingle set computed once per doc; one band-keyed
-    window (the LSH shuffle), one pair self-join, one 33-row aggregation.
-    The per-pair slot comparison folds two k-wide arrays — interpreted
-    HOF, but over BLOCKED pairs only (the verify-stage cost class, not
-    corpus x corpus).
+    Shape: signature + shingle set computed once per doc; the LSH pair
+    generation of ``candidate_pairs``, one attribute join per side, one
+    33-row aggregation. Slot agreement is a sum of k codegen comparisons;
+    null-safe, so two NULL texts (all-NULL signatures) agree on every slot.
 
     Output: n_equal_slots, n_pairs, mean_true_ppm, mean_abs_err_ppm,
     max_abs_err_ppm.
     """
-    from blink_spark.functions.hashing import minhash_signature
-    from blink_spark.functions.text import shingles
-
-    bands, rows = DOC_BANDS, DOC_ROWS
-    k = bands * rows
-    sig = minhash_signature(df[text_col], k=k, shingle_n=DOC_SHINGLE_N)
-    # localCheckpoint (eager, GC-owned — cache-hygiene rule): the signature
-    # is an interpreted per-shingle HOF fold, and `kept` feeds BOTH sides
-    # of the block self-join — without this the most expensive projection
-    # of the query evaluates twice.
-    base = df.select(
+    k = DOC_BANDS * DOC_ROWS
+    recs = df.select(
         F.col(id_col).cast("string").alias("record_id"),
+        F.col(text_col).alias("text"),
         shingles(df[text_col], n=DOC_SHINGLE_N).alias("sh"),
-        sig.alias("sig"),
-    ).localCheckpoint()
-    assign = base.select(
-        "record_id",
-        "sh",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(
-                        F.lit(f"b{b}:"),
-                        F.md5(F.array_join(F.slice("sig", b * rows + 1, rows), ",")),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("block_key"),
     )
-    sized = assign.withColumn(
-        "bs", F.count(F.lit(1)).over(Window.partitionBy("block_key"))
+    slots = [f"s{i}" for i in range(k)]
+    # localCheckpoint (eager, GC-owned — cache-hygiene rule): the signature
+    # feeds the band keys and both sides of the pair attribute join; without
+    # it the per-shingle explode and min aggregate run once per consumer.
+    base = recs.join(
+        minhash_sig(recs, "record_id", "text", k, DOC_SHINGLE_N), "record_id"
+    ).select("record_id", "sh", *slots).localCheckpoint()
+    blocks = band_blocks(base, DOC_BANDS, DOC_ROWS)
+    pairs, _ = candidate_pairs(blocks)
+    attrs = pairs_with_attrs(pairs, base, "record_id", ["sh", *slots])
+    n_eq = sum(
+        F.col(f"{c}_a").eqNullSafe(F.col(f"{c}_b")).cast("long") for c in slots
     )
-    kept = sized.filter(F.col("bs") <= 4096)
-    a = kept.select(
-        F.col("record_id").alias("ra"),
-        F.col("sh").alias("sha"),
-        F.col("sig").alias("siga"),
-        "block_key",
-    )
-    b = kept.select(
-        F.col("record_id").alias("rb"),
-        F.col("sh").alias("shb"),
-        F.col("sig").alias("sigb"),
-        "block_key",
-    )
-    pairs = (
-        a.join(b, "block_key")
-        .filter(F.col("ra") < F.col("rb"))
-        .groupBy("ra", "rb")
-        .agg(
-            F.any_value("sha").alias("sha"),
-            F.any_value("shb").alias("shb"),
-            F.any_value("siga").alias("siga"),
-            F.any_value("sigb").alias("sigb"),
-        )
-    )
-    n_eq = F.aggregate(
-        F.zip_with(
-            "siga", "sigb", lambda x, y: F.when(x == y, 1).otherwise(0)
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    per = pairs.select(
+    per = attrs.select(
         n_eq.alias("n_equal_slots"),
         F.expr(
-            "(1000000 * size(array_intersect(sha, shb)))"
-            " div greatest(size(array_distinct(concat(sha, shb))), 1)"
+            "(1000000 * size(array_intersect(sh_a, sh_b)))"
+            " div greatest(size(array_distinct(concat(sh_a, sh_b))), 1)"
         ).cast("long").alias("true_ppm"),
     ).withColumn(
         "est_ppm", F.expr(f"(1000000 * n_equal_slots) div {k}").cast("long")
     ).withColumn("abs_err", F.abs(F.col("est_ppm") - F.col("true_ppm")))
-    return (
+    out = (
         per.groupBy("n_equal_slots")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs"),
@@ -702,6 +655,8 @@ def minhash_calibration(
             F.max("abs_err").cast("long").alias("max_abs_err_ppm"),
         )
     )
+    blocks.unpersist()  # candidate_pairs persisted it; base stays checkpointed
+    return out
 
 
 def duplicate_ngram_spans(
@@ -963,8 +918,7 @@ def dedup_ensemble_report(
     strategies plus a 'union' row (n_exclusive there counts single-strategy
     pairs; n_in_all the three-way core).
     """
-    from blink_spark.functions.hashing import hamming64, minhash_band_keys
-    from blink_spark.functions.text import fingerprint, shingles
+    from blink_spark.functions.hashing import hamming64
 
     d = docs.select(
         F.col(id_col).cast("long").alias("id"), F.col(text_col).alias("text")
@@ -981,9 +935,9 @@ def dedup_ensemble_report(
             F.lit("exact").alias("strategy"),
         )
     )
-    # minhash: band candidates + exact integer shingle-jaccard >= 1/2
-    bands = d.select(
-        "id", F.explode(minhash_band_keys("text")).alias("bk")
+    # minhash: 4x4 band candidates + exact integer shingle-jaccard >= 1/2
+    bands = minhash_blocks(d, "id", "text").select(
+        F.col("record_id").alias("id"), F.col("block_key").alias("bk")
     )
     cand = (
         bands.select(F.col("id").alias("a"), "bk")

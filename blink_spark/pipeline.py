@@ -167,12 +167,13 @@ def _read_documents(spark: SparkSession, documents_path: str) -> DataFrame:
     partitions than cores (tiny or single-row-group files) — repartitioning
     an already-parallel scan would just add a full shuffle of the corpus.
 
-    The repartition is KEYED on doc_id (not round-robin): every consumer
-    (context windows in S1, per-doc span work) requires hashpartitioning on
-    doc_id, so a keyed shuffle of the compact pre-explode table satisfies
-    EnsureRequirements and the ~10x-larger exploded span table is never
-    re-shuffled. doc_id is unique per row, so the keyed shuffle is as
-    uniform as round-robin."""
+    The repartition is KEYED on doc_id (not round-robin): per-doc consumers
+    (the context windows of the full ``extract_mentions`` schema, per-doc
+    span work) require hashpartitioning on doc_id, so a keyed shuffle of the
+    compact pre-explode table satisfies EnsureRequirements and the
+    ~10x-larger exploded span table is never re-shuffled. doc_id is unique
+    per row, so the keyed shuffle is as uniform as round-robin.
+    ``perfbench``'s traced chain reads its documents through it."""
     return spread(spark.read.parquet(documents_path), "doc_id")
 
 
@@ -374,30 +375,21 @@ def run_pipeline(
 ) -> DataFrame:
     """Run (or resume) the full pipeline; returns the clusters DataFrame.
 
-    ``config.checkpoints`` picks the materializer; the two modes differ in
-    their S1 frame on purpose. Checkpointed runs keep the full mention
-    schema (the stage table is the resumable contract) and repartition the
-    documents by doc_id before the explode, which the per-doc context
-    windows need. Fused runs consume only ``(mention_id, mention)``:
-    selecting them before the persist lets Catalyst drop the per-doc Sort
-    and two Window passes, and the under-parallel repartition moves after
-    the explode onto the skinny mention rows, so the span/text payload never
-    crosses an exchange. Both write the clusters with a lineage line; fused
-    runs always rewrite them."""
+    ``config.checkpoints`` picks the materializer; both modes build the same
+    S1 frame. The chain reads only ``(mention_id, mention)``: selecting them
+    right after the extract lets Catalyst drop the per-doc Sort and the two
+    Window passes of the context columns, and the under-parallel
+    repartition sits after the explode on the skinny mention rows, so the
+    span/text payload never crosses an exchange. Both write the clusters
+    with a lineage line; fused runs always rewrite them."""
     cfg = config or PipelineConfig()
     out = _Checkpoint(spark, out_dir, force=force or not cfg.checkpoints)
-    if cfg.checkpoints:
-        mat = out
+    mat = out if cfg.checkpoints else _InMemory()
 
-        def mentions():
-            return extract_mentions(_read_documents(spark, documents_path))
-    else:
-        mat = _InMemory()
-
-        def mentions():
-            documents = spark.read.parquet(documents_path)
-            return spread(extract_mentions(documents).select("mention_id", "mention"),
-                          "mention_id", source=documents)
+    def mentions():
+        documents = spark.read.parquet(documents_path)
+        return spread(extract_mentions(documents).select("mention_id", "mention"),
+                      "mention_id", source=documents)
 
     return _run_chain(mat, mentions, "mention_id", "mention", cfg, finish=lambda build: out.stage(
         "clusters", build, observe={

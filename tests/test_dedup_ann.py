@@ -622,6 +622,20 @@ def test_minhash_calibration_planted(spark):
     assert full["max_abs_err_ppm"] == 0
 
 
+def test_minhash_calibration_null_texts_agree_on_every_slot(spark):
+    """Two NULL texts share every band block (md5('') keys), and their
+    all-NULL signatures agree on all 32 slots under the null-safe slot
+    comparison."""
+    from blink_spark.operators.dedup import minhash_calibration
+
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, "completely different content about spark engines")],
+        "doc_id bigint, text string",
+    )
+    rows = minhash_calibration(docs, "doc_id", "text").collect()
+    assert [(r.n_equal_slots, r.n_pairs) for r in rows] == [(32, 1)]
+
+
 def test_cross_source_dup_matrix(spark):
     import pandas as pd
 

@@ -31,7 +31,7 @@ def test_token_jaccard(spark):
 
 
 def test_lev_ratio_and_banded_equivalence(spark):
-    from blink_spark.functions.similarity import lev_ratio, lev_within
+    from blink_spark.functions.similarity import LEV_RATIO_THRESHOLD, lev_ratio, lev_within
 
     cases = [
         ("alpha bravo cedar eaaab", "alpha bravo cedar eaaab"),
@@ -42,10 +42,10 @@ def test_lev_ratio_and_banded_equivalence(spark):
     ]
     df = spark.createDataFrame(cases, "a string, b string")
     rows = df.select(
-        lev_ratio("a", "b").alias("r"), lev_within("a", "b", 0.93).alias("w")
+        lev_ratio("a", "b").alias("r"), lev_within("a", "b").alias("w")
     ).collect()
     for (a, b), row in zip(cases, rows):
-        assert row.w == (row.r >= 0.93), f"banded != exact for {a!r}/{b!r}"
+        assert row.w == (row.r >= LEV_RATIO_THRESHOLD), f"banded != exact for {a!r}/{b!r}"
 
 
 def test_dot_and_cosine(spark):
@@ -91,20 +91,30 @@ def test_embedding_deterministic_unit_norm():
 
 
 def test_minhash_similar_texts_share_bands(spark):
-    from blink_spark.functions.hashing import minhash_band_keys
+    """Near-identical texts share a band. A NULL text has all-NULL slots, so
+    its band keys are md5 of the empty slot list: all NULL texts share one
+    block per band."""
+    import hashlib
+
+    from blink_spark.operators.blocking import minhash_blocks
 
     df = spark.createDataFrame(
         [
             ("a", "the quick brown fox jumps over the lazy dog"),
             ("b", "the quick brown fox jumps over the lazy dot"),
             ("c", "completely unrelated text about spark engines"),
+            ("n1", None),
+            ("n2", None),
         ],
         "id string, t string",
     )
-    rows = df.select("id", minhash_band_keys("t").alias("k")).collect()
-    keys = {r.id: set(r.k) for r in rows}
+    keys = {}
+    for r in minhash_blocks(df, "id", "t").collect():
+        keys.setdefault(r.record_id, set()).add(r.block_key)
     assert keys["a"] & keys["b"], "near-identical texts must share a band"
     assert not (keys["a"] & keys["c"])
+    empty = hashlib.md5(b"").hexdigest()
+    assert keys["n1"] == keys["n2"] == {f"b{b}:{empty}" for b in range(4)}
 
 
 def test_simhash_hamming(spark):

@@ -41,6 +41,13 @@ def test_extracted_mentions_match_fixture(spark, fixture_paths):
     assert want.exceptAll(got).count() == 0
 
 
+def test_checkpointed_mentions_stage_holds_only_the_chain_columns(spark, pipe_out):
+    """Both modes build one S1 frame: the mentions stage table carries the
+    (mention_id, mention) the chain reads, not the context windows."""
+    mentions = spark.read.parquet(os.path.join(pipe_out, "mentions"))
+    assert mentions.columns == ["mention_id", "mention"]
+
+
 def test_span_sequence_invariant(spark, fixture_paths, pipe_out):
     """Surviving rows joined back to the input reproduce spans exactly —
     the pipeline never rewrites the spans array (SURVEY.md §1.4)."""

@@ -271,3 +271,19 @@ def test_orc_scan_prunes_partitions_and_pushes_filters(spark):
     assert "world" in pf, f"no partition pruning on ORC scan: {pf!r}"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "OrcScan" in plan or "orc" in plan.lower(), plan[:500]
+
+
+def test_minhash_signature_has_no_interpreted_lambda(spark):
+    """The library's one MinHash stays in whole-stage codegen: neither the
+    signature step nor the band keys may carry a higher-order-function
+    lambda (``aggregate``/``zip_with``/``transform``), which Spark
+    interprets one element at a time."""
+    from blink_spark.operators.blocking import minhash_blocks, minhash_sig
+
+    docs = spark.read.parquet(f"{TESTDATA}/documents.parquet")
+    for df in (minhash_sig(docs, "doc_id", "text", 32, 7),
+               minhash_blocks(docs, "doc_id", "text")):
+        plan = explain_str(df)
+        assert "lambdafunction" not in plan, plan
+        for hof in ("aggregate(", "zip_with(", "transform("):
+            assert hof not in plan, plan

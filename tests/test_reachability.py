@@ -5,9 +5,9 @@ A pure-AST guard (no Spark). The roots are ``__spark_entry__.py``, the
 bench scripts, ``tools/`` and ``perfbench/``, plus every module-level
 statement of ``blink_spark`` other than imports and definitions (those run
 at import). The closure is name-level: a definition is reached once its name appears in
-reached code as an identifier, an attribute, an imported name or a string
-constant (so ``getattr``-style dispatch counts). Docstrings are prose, not
-references. A definition that only tests reach fails the first test; delete
+reached code as an identifier, an attribute or an imported name. String
+constants are data, not references: a column named like a function does not
+reach it. A definition that only tests reach fails the first test; delete
 it with its tests, or wire it into a product path.
 
 The option guard reads the same roots: a defaulted parameter of a top-level
@@ -43,7 +43,6 @@ TEST_HELPERS = {
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _ASSIGNS = (ast.Assign, ast.AnnAssign, ast.AugAssign)
 _IMPORTS = (ast.Import, ast.ImportFrom)
-_DOTTED = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
 
 
 def _root_files() -> list[Path]:
@@ -70,34 +69,16 @@ def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), filename=str(path))
 
 
-def _is_docstring(stmt: ast.stmt) -> bool:
-    return (
-        isinstance(stmt, ast.Expr)
-        and isinstance(stmt.value, ast.Constant)
-        and isinstance(stmt.value.value, str)
-    )
-
-
 def _names(node: ast.AST) -> set[str]:
-    """Every name ``node`` refers to, docstrings excluded."""
-    docs = set()  # ast.walk is breadth-first: an owner precedes its docstring
+    """Every name ``node`` refers to; string constants are not names."""
     out: set[str] = set()
     for n in ast.walk(node):
-        if isinstance(n, (ast.Module, *_DEFS)) and n.body and _is_docstring(n.body[0]):
-            docs.add(id(n.body[0].value))
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
         elif isinstance(n, ast.alias):
             out.update(n.name.split("."))
-        elif (
-            isinstance(n, ast.Constant)
-            and isinstance(n.value, str)
-            and id(n) not in docs
-            and _DOTTED.fullmatch(n.value)
-        ):
-            out.update(n.value.split("."))
     return out
 
 
@@ -113,13 +94,13 @@ def _unreached() -> list[str]:
         reached |= _names(_parse(path))
     for path in _pkg_files():
         tree = _parse(path)
-        for i, stmt in enumerate(tree.body):
+        for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 names = [stmt.name]
             elif isinstance(stmt, (ast.Assign, ast.AnnAssign)) and stmt.value is not None:
                 names = _assigned(stmt)
             else:
-                if not isinstance(stmt, _IMPORTS) and not (i == 0 and _is_docstring(stmt)):
+                if not isinstance(stmt, _IMPORTS):
                     reached |= _names(stmt)
                 continue
             for name in names:
@@ -150,6 +131,18 @@ def test_every_library_definition_is_reached():
     assert not unreached, "reached by no query, pipeline mode, tool or benchmark:\n" + "\n".join(
         unreached
     )
+
+
+def test_reach_names_on_synthetic_source():
+    tree = ast.parse(
+        '"""Prose naming helper."""\n'
+        "import pkg.mod\n"
+        "from lib import fn as other\n"
+        "df.select('is_match', 'pkg.helper')\n"
+    )
+    # identifiers, attributes and imported names reach; a string constant,
+    # dotted or not, and a docstring do not
+    assert _names(tree) == {"pkg", "mod", "fn", "df", "select"}
 
 
 def _module_path(module: str) -> Path | None:
