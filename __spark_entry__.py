@@ -2030,20 +2030,15 @@ def _lineitem_numeric_profile(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q(
-    "lineitem_mannwhitney",
-    """
-    WITH base AS (
-      SELECT floor(l_extendedprice * 1000)::BIGINT AS vm,
-             (CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS is_a
-      FROM lineitem
-      WHERE floor(l_extendedprice * 1000) IS NOT NULL
-    ),
-    r AS (
+def _mann_whitney_sql(lab: str) -> str:
+    """Exact Mann-Whitney U over the CTE ``lab`` (vm, is_a): x2-trick
+    average ranks `r`, the counts and rank sum `agg`, the distinct values
+    `nv`, then U2 and the AUC / rank-biserial effect sizes in ppm."""
+    return f"""r AS (
       SELECT is_a,
              (2 * rank() OVER (ORDER BY vm)
               + count(*) OVER (PARTITION BY vm) - 1)::BIGINT AS rank2
-      FROM base
+      FROM {lab}
     ),
     agg AS (
       SELECT coalesce(sum(is_a), 0)::BIGINT AS na,
@@ -2052,7 +2047,7 @@ def _lineitem_numeric_profile(spark: SparkSession, sf: str) -> DataFrame:
                AS r2a
       FROM r
     ),
-    nv AS (SELECT count(DISTINCT vm)::BIGINT AS n_values FROM base)
+    nv AS (SELECT count(DISTINCT vm)::BIGINT AS n_values FROM {lab})
     SELECT na AS n_a, nb AS n_b, n_values,
            (r2a - na * (na + 1))::BIGINT AS u2_a,
            (CASE WHEN na > 0 AND nb > 0 THEN
@@ -2062,7 +2057,19 @@ def _lineitem_numeric_profile(spark: SparkSession, sf: str) -> DataFrame:
               2 * ((1000000 * (r2a - na * (na + 1))) // (2 * na * nb))
               - 1000000
             END)::BIGINT AS rank_biserial_ppm
-    FROM agg, nv
+    FROM agg, nv"""
+
+
+@_q(
+    "lineitem_mannwhitney",
+    f"""
+    WITH base AS (
+      SELECT floor(l_extendedprice * 1000)::BIGINT AS vm,
+             (CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)::BIGINT AS is_a
+      FROM lineitem
+      WHERE floor(l_extendedprice * 1000) IS NOT NULL
+    ),
+    {_mann_whitney_sql('base')}
     """,
 )
 def _lineitem_mannwhitney(spark: SparkSession, sf: str) -> DataFrame:
@@ -3605,10 +3612,11 @@ _RECALL_SQL = """
 """
 
 
-@_q(
-    "ann_pq_recall",
-    f"""
-    WITH q0 AS (
+# PQ over the micro-quantized vectors `q0`: 16 subspaces of 4 dims (`e`:
+# vec_id, sub, dimpos, v), the first 64 vectors as every subspace's
+# codebook (`ce`), and `d`, the exact integer L2 of each subvector to each
+# centroid of its subspace
+_PQ_DISTANCES_SQL = """q0 AS (
       SELECT vec_id,
              list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
       FROM embeddings
@@ -3622,8 +3630,12 @@ _RECALL_SQL = """
     d AS (SELECT e.vec_id, e.sub, ce.cid,
                  sum((e.v - ce.cv) * (e.v - ce.cv))::BIGINT AS d2
           FROM e JOIN ce ON e.sub = ce.sub AND e.dimpos = ce.dimpos
-          GROUP BY 1, 2, 3),
-    codes AS (
+          GROUP BY 1, 2, 3)"""
+
+
+# each item's PQ code per subspace (`codes`: nearest centroid, ties to the
+# lower cid) and the 64 queries' distance tables (`dtable`) over `d`
+_PQ_CODES_SQL = """codes AS (
       SELECT vec_id AS item_id, sub, cid AS code FROM (
         SELECT vec_id, sub, cid,
                row_number() OVER (PARTITION BY vec_id, sub
@@ -3632,14 +3644,12 @@ _RECALL_SQL = """
       ) WHERE rn = 1
     ),
     dtable AS (SELECT vec_id AS query_id, sub, cid, d2 AS qd2
-               FROM d WHERE vec_id < 64),
-    adc AS (
-      SELECT t.query_id, c.item_id, sum(t.qd2)::BIGINT AS adc
-      FROM codes c JOIN dtable t ON c.sub = t.sub AND c.code = t.cid
-      WHERE c.item_id <> t.query_id
-      GROUP BY 1, 2
-    ),
-    ap_top AS (
+               FROM d WHERE vec_id < 64)"""
+
+
+# the approximate top-10 `ap_top` by asymmetric distance `adc`
+# (query_id, item_id, adc), then the exact baseline and the recall readout
+_ADC_RECALL_SQL = f"""ap_top AS (
       SELECT query_id, item_id FROM (
         SELECT query_id, item_id,
                row_number() OVER (PARTITION BY query_id
@@ -3648,7 +3658,21 @@ _RECALL_SQL = """
       ) WHERE rank <= 10
     ),
     {_EXACT_L2_TOP10_SQL}
-    {_RECALL_SQL}
+    {_RECALL_SQL}"""
+
+
+@_q(
+    "ann_pq_recall",
+    f"""
+    WITH {_PQ_DISTANCES_SQL},
+    {_PQ_CODES_SQL},
+    adc AS (
+      SELECT t.query_id, c.item_id, sum(t.qd2)::BIGINT AS adc
+      FROM codes c JOIN dtable t ON c.sub = t.sub AND c.code = t.cid
+      WHERE c.item_id <> t.query_id
+      GROUP BY 1, 2
+    ),
+    {_ADC_RECALL_SQL}
     """,
 )
 def _ann_pq_recall(spark: SparkSession, sf: str) -> DataFrame:
@@ -3730,21 +3754,7 @@ def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
 @_q(
     "ann_ivfpq_recall",
     f"""
-    WITH q0 AS (
-      SELECT vec_id,
-             list_transform(embedding, x -> floor(x::DOUBLE * 1000000)::BIGINT) AS qv
-      FROM embeddings
-      WHERE len(embedding) = 64
-    ),
-    cb AS (SELECT vec_id AS cid, qv FROM q0 ORDER BY vec_id LIMIT 64),
-    e AS (SELECT vec_id, (generate_subscripts(qv, 1) - 1) // 4 AS sub,
-                 generate_subscripts(qv, 1) AS dimpos, unnest(qv) AS v FROM q0),
-    ce AS (SELECT cid, (generate_subscripts(qv, 1) - 1) // 4 AS sub,
-                  generate_subscripts(qv, 1) AS dimpos, unnest(qv) AS cv FROM cb),
-    d AS (SELECT e.vec_id, e.sub, ce.cid,
-                 sum((e.v - ce.cv) * (e.v - ce.cv))::BIGINT AS d2
-          FROM e JOIN ce ON e.sub = ce.sub AND e.dimpos = ce.dimpos
-          GROUP BY 1, 2, 3),
+    WITH {_PQ_DISTANCES_SQL},
     cc AS (SELECT vec_id AS cid, qv FROM q0 ORDER BY vec_id LIMIT 16),
     cce AS (SELECT cid, generate_subscripts(qv, 1) AS dimpos, unnest(qv) AS cv
             FROM cc),
@@ -3768,16 +3778,7 @@ def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
         FROM dc WHERE vec_id < 64
       ) WHERE rn <= 4
     ),
-    codes AS (
-      SELECT vec_id AS item_id, sub, cid AS code FROM (
-        SELECT vec_id, sub, cid,
-               row_number() OVER (PARTITION BY vec_id, sub
-                                  ORDER BY d2 ASC, cid ASC) AS rn
-        FROM d
-      ) WHERE rn = 1
-    ),
-    dtable AS (SELECT vec_id AS query_id, sub, cid, d2 AS qd2
-               FROM d WHERE vec_id < 64),
+    {_PQ_CODES_SQL},
     cand AS (
       SELECT p.query_id, a.item_id
       FROM probes p JOIN assigned a USING (cid)
@@ -3791,16 +3792,7 @@ def _ann_int8_recall(spark: SparkSession, sf: str) -> DataFrame:
                    AND t.sub = k.sub AND t.cid = k.code
       GROUP BY 1, 2
     ),
-    ap_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY adc ASC, item_id ASC) AS rank
-        FROM adc
-      ) WHERE rank <= 10
-    ),
-    {_EXACT_L2_TOP10_SQL}
-    {_RECALL_SQL}
+    {_ADC_RECALL_SQL}
     """,
 )
 def _ann_ivfpq_recall(spark: SparkSession, sf: str) -> DataFrame:
@@ -4753,11 +4745,20 @@ def _er_threshold_prune(spark: SparkSession, sf: str) -> DataFrame:
     """Threshold pruning with top-K fallback (prune_ctxt_mentions,
     /root/reference/elq/biencoder/biencoder.py:318-363): keep spans whose
     score clears the threshold; groups with none keep their top-K."""
-    from blink_spark.operators.spans import enumerate_token_spans, threshold_prune_topk
+    from blink_spark.operators.spans import threshold_prune_topk
+
+    return threshold_prune_topk(_scored_question_spans(spark), "record_id", "score")
+
+
+def _scored_question_spans(spark: SparkSession) -> DataFrame:
+    """The questions fixture's token spans of up to 2 tokens, each scored
+    by its length plus an md5-derived fraction (portable to DuckDB, unlike
+    crc32): the input of the span-pruning queries."""
+    from blink_spark.operators.spans import enumerate_token_spans
 
     q = _fx(spark, "questions")
     spans = enumerate_token_spans(q, "id", "text", max_len=2)
-    scored = spans.withColumn(
+    return spans.withColumn(
         "score",
         F.length("span_text").cast("double")
         + (
@@ -4765,7 +4766,6 @@ def _er_threshold_prune(spark: SparkSession, sf: str) -> DataFrame:
         ).cast("double")
         / 100.0,
     )
-    return threshold_prune_topk(scored, "record_id", "score")
 
 
 @_q("er_bm25_topk", None)  # oracle injected below (fixture path)
@@ -4904,18 +4904,7 @@ def _er_mrr(spark: SparkSession, sf: str) -> DataFrame:
     per-mention reciprocal rank is ``1e6 div gold_rank`` micro-units
     (misses contribute 0), the mean a single integer division — no float
     accumulation order in the parity surface."""
-    ranked = _er_topk(spark, sf)
-    gold = _fx(spark, "mentions").select("mention_id", "label_id")
-    gr = (
-        ranked.join(gold, "mention_id")
-        .groupBy("mention_id")
-        .agg(
-            F.coalesce(
-                F.min(F.when(F.col("entity_id") == F.col("label_id"), F.col("rank"))),
-                F.lit(-1),
-            ).alias("gold_rank")
-        )
-    )
+    gr = _gold_ranks(spark, sf)
     rr = gr.select(
         "gold_rank",
         F.when(F.col("gold_rank") > 0, F.expr("1000000 div gold_rank"))
@@ -4946,18 +4935,7 @@ def _er_rank_histogram(spark: SparkSession, sf: str) -> DataFrame:
     (/root/reference/blink/biencoder/zeshel_utils.py:70-99 and
     candidate_retrieval/evaluator.py:92-124): counts per gold rank (-1 =
     gold missing from candidates), running total, cumulative share."""
-    ranked = _er_topk(spark, sf)
-    gold = _fx(spark, "mentions").select("mention_id", "label_id")
-    gr = (
-        ranked.join(gold, "mention_id")
-        .groupBy("mention_id")
-        .agg(
-            F.coalesce(
-                F.min(F.when(F.col("entity_id") == F.col("label_id"), F.col("rank"))),
-                F.lit(-1),
-            ).alias("gold_rank")
-        )
-    )
+    gr = _gold_ranks(spark, sf)
     hist = gr.groupBy("gold_rank").agg(F.count("*").alias("n"))
     w = Window.orderBy(F.col("gold_rank").asc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -4971,6 +4949,23 @@ def _er_rank_histogram(spark: SparkSession, sf: str) -> DataFrame:
             "n",
             "cum_n",
             F.round(F.col("cum_n") / F.col("total"), 6).alias("cum_share"),
+        )
+    )
+
+
+def _gold_ranks(spark: SparkSession, sf: str) -> DataFrame:
+    """(mention_id, gold_rank): the rank of each mention's gold entity
+    among its ``_er_topk`` candidates, -1 when it is not among them."""
+    ranked = _er_topk(spark, sf)
+    gold = _fx(spark, "mentions").select("mention_id", "label_id")
+    return (
+        ranked.join(gold, "mention_id")
+        .groupBy("mention_id")
+        .agg(
+            F.coalesce(
+                F.min(F.when(F.col("entity_id") == F.col("label_id"), F.col("rank"))),
+                F.lit(-1),
+            ).alias("gold_rank")
         )
     )
 
@@ -5447,9 +5442,10 @@ def _emb_centroids(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _simhash_oracle_sql(max_hamming: int = 3) -> str:
-    """DuckDB mirror of simhash_relational + pigeonhole banding: identical
-    md5-derived 60-bit signatures, identical band keys, exact hamming."""
+def _simhash_sql_terms(max_hamming: int) -> tuple[str, str, str]:
+    """The SQL select lists of the simhash oracles over token hashes ``h``:
+    the 60 per-bit set counts ``c0..c59``, the majority-vote 60-bit
+    signature ``sh`` summed from them, and the pigeonhole band keys."""
     from blink_spark.operators.dedup import simhash_band_splits
 
     bit_sums = ", ".join(f"sum((h >> {b}) & 1) AS c{b}" for b in range(60))
@@ -5460,6 +5456,13 @@ def _simhash_oracle_sql(max_hamming: int = 3) -> str:
         f"'{b}:' || ((sh >> {off}) & {(1 << width) - 1})::varchar"
         for b, (off, width) in enumerate(simhash_band_splits(max_hamming))
     )
+    return bit_sums, sh_terms, band_exprs
+
+
+def _simhash_oracle_sql(max_hamming: int = 3) -> str:
+    """DuckDB mirror of simhash_relational + pigeonhole banding: identical
+    md5-derived 60-bit signatures, identical band keys, exact hamming."""
+    bit_sums, sh_terms, band_exprs = _simhash_sql_terms(max_hamming)
     return f"""
     WITH n0 AS (
       SELECT doc_id::varchar AS record_id,
@@ -5489,16 +5492,7 @@ def _dedup_ensemble_oracle_sql(max_hamming: int = 3) -> str:
     """Mirror of dedup.dedup_ensemble_report: fingerprint star pairs +
     minhash-banded shingle-Jaccard>=1/2 pairs + simhash pigeonhole pairs,
     per-strategy exclusive/overlap readout."""
-    from blink_spark.operators.dedup import simhash_band_splits
-
-    bit_sums = ", ".join(f"sum((h >> {b}) & 1) AS c{b}" for b in range(60))
-    sh_terms = " + ".join(
-        f"(CASE WHEN 2*c{b} > n THEN {1 << b} ELSE 0 END)::BIGINT" for b in range(60)
-    )
-    band_exprs = ", ".join(
-        f"'{b}:' || ((sh >> {off}) & {(1 << width) - 1})::varchar"
-        for b, (off, width) in enumerate(simhash_band_splits(max_hamming))
-    )
+    bit_sums, sh_terms, band_exprs = _simhash_sql_terms(max_hamming)
     return f"""
     WITH n0 AS (SELECT doc_id AS id, {_norm('text')} AS t FROM documents),
     fpt AS (
@@ -5625,19 +5619,9 @@ def _er_overlap_prune(spark: SparkSession, sf: str) -> DataFrame:
     /root/reference/elq/main_dense.py:451-466). Full SQL oracle: the greedy
     scan is a recursive CTE walking spans per group in priority order; the
     span score is md5-derived (portable) rather than crc32 (Spark-only)."""
-    from blink_spark.operators.spans import enumerate_token_spans, greedy_overlap_prune
+    from blink_spark.operators.spans import greedy_overlap_prune
 
-    q = _fx(spark, "questions")
-    spans = enumerate_token_spans(q, "id", "text", max_len=2)
-    scored = spans.withColumn(
-        "score",
-        F.length("span_text").cast("double")
-        + (
-            F.conv(F.substring(F.md5("span_text"), 1, 4), 16, 10).cast("int") % 97
-        ).cast("double")
-        / 100.0,
-    )
-    return greedy_overlap_prune(scored, "record_id", "score")
+    return greedy_overlap_prune(_scored_question_spans(spark), "record_id", "score")
 
 
 @_q("jsonl_entity_scan", None)
@@ -6630,18 +6614,11 @@ def _er_review_queue(spark: SparkSession, sf: str) -> DataFrame:
     ).limit(100)
 
 
-@_q("er_progressive_recall", None)  # oracle injected below (fixture path)
-def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
-    """Progressive (pay-as-you-go) ER: schedule comparisons by cheap
-    token-Jaccard score descending and report the cumulative gold-match
-    recall per comparison budget — the curve that tells an operator how
-    much resolution quality a bounded matching budget buys (Whang et al.,
-     'Pay-As-You-Go Entity Resolution'). Buckets are floor(jaccard*20), so
-    the cumulative window runs over <= 21 aggregated rows (the
-    rank-histogram tiny-table window class); recall/effort are exact
-    BIGINT ppm."""
+def _jaccard_buckets(spark: SparkSession) -> DataFrame:
+    """(score_bucket, comparisons, matches) over the scored gold pairs:
+    pairs and gold matches per floor(jaccard * 20) bucket, <= 21 rows."""
     scored = _scored_gold_pairs(spark, "same_entity")
-    per = (
+    return (
         scored.select(
             F.floor(F.col("jaccard") * 20).cast("long").alias("score_bucket"),
             F.col("same_entity").cast("long").alias("is_gold"),
@@ -6652,6 +6629,19 @@ def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
             F.sum("is_gold").cast("long").alias("matches"),
         )
     )
+
+
+@_q("er_progressive_recall", None)  # oracle injected below (fixture path)
+def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
+    """Progressive (pay-as-you-go) ER: schedule comparisons by cheap
+    token-Jaccard score descending and report the cumulative gold-match
+    recall per comparison budget — the curve that tells an operator how
+    much resolution quality a bounded matching budget buys (Whang et al.,
+     'Pay-As-You-Go Entity Resolution'). Buckets are floor(jaccard*20), so
+    the cumulative window runs over <= 21 aggregated rows (the
+    rank-histogram tiny-table window class); recall/effort are exact
+    BIGINT ppm."""
+    per = _jaccard_buckets(spark)
     tot = per.agg(
         F.sum("matches").cast("long").alias("total_matches"),
         F.sum("comparisons").cast("long").alias("total_comparisons"),
@@ -6689,18 +6679,7 @@ def _er_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     then the tiny-table cumulative window (rank-histogram class); P/R/F1
     are exact integer ppm, F1 computed from the already-floored P and R
     so both engines floor identically."""
-    scored = _scored_gold_pairs(spark, "same_entity")
-    per = (
-        scored.select(
-            F.floor(F.col("jaccard") * 20).cast("long").alias("score_bucket"),
-            F.col("same_entity").cast("long").alias("is_gold"),
-        )
-        .groupBy("score_bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("comparisons"),
-            F.sum("is_gold").cast("long").alias("matches"),
-        )
-    )
+    per = _jaccard_buckets(spark)
     tot = per.agg(F.sum("matches").cast("long").alias("total_gold"))
     w = Window.orderBy(F.col("score_bucket").desc()).rowsBetween(
         Window.unboundedPreceding, 0
@@ -6931,16 +6910,11 @@ _C4_SQL = (
 )
 
 
-@_q("doc_c4_filters", _C4_SQL)
-def _doc_c4_filters(spark: SparkSession, sf: str) -> DataFrame:
-    """C4-style structural cleaning over the documents table (deterministic
-    injected line structure): terminal-punctuation + min-word line rules,
-    lorem-ipsum / brace page flags, ≥3-sentence keep decision — the
-    standard web-corpus first pass next to the Gopher repetition filters."""
-    from blink_spark.operators.corpus import c4_filters
-
+def _c4_injected(spark: SparkSession, sf: str) -> DataFrame:
+    """(doc_id, text): the documents with the ``_C4_INJECTIONS`` lines
+    appended to every m-th doc, the twin of the oracles' injected text."""
     d = _t(spark, sf, "documents")
-    injected = d.select(
+    return d.select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -6950,6 +6924,17 @@ def _doc_c4_filters(spark: SparkSession, sf: str) -> DataFrame:
             ],
         ).alias("text"),
     )
+
+
+@_q("doc_c4_filters", _C4_SQL)
+def _doc_c4_filters(spark: SparkSession, sf: str) -> DataFrame:
+    """C4-style structural cleaning over the documents table (deterministic
+    injected line structure): terminal-punctuation + min-word line rules,
+    lorem-ipsum / brace page flags, ≥3-sentence keep decision — the
+    standard web-corpus first pass next to the Gopher repetition filters."""
+    from blink_spark.operators.corpus import c4_filters
+
+    injected = _c4_injected(spark, sf)
     return c4_filters(injected, "doc_id", "text")
 
 
@@ -7010,17 +6995,7 @@ def _doc_line_dedup(spark: SparkSession, sf: str) -> DataFrame:
     min window. Complements chunk_dedup_stats (fixed token windows)."""
     from blink_spark.operators.dedup import line_dedup_stats
 
-    d = _t(spark, sf, "documents")
-    injected = d.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            *[
-                F.when(F.col("doc_id") % m == 0, F.lit(s)).otherwise(F.lit(""))
-                for m, s in _C4_INJECTIONS
-            ],
-        ).alias("text"),
-    )
+    injected = _c4_injected(spark, sf)
     return line_dedup_stats(injected, "doc_id", "text")
 
 
@@ -7923,10 +7898,10 @@ def _er_cluster_churn(spark: SparkSession, sf: str) -> DataFrame:
     return cluster_churn(old, new)
 
 
-@_q(
-    "events_value_runs",
-    """
-    WITH m AS (
+# each user's events `m` (k, ts, eid, state, is_new) in (ts, event_id)
+# order, is_new = 1 where the event type differs from the previous one:
+# the run starts of temporal.value_runs
+_RUN_STARTS_SQL = """m AS (
       SELECT user_id AS k, ts, event_id AS eid, event_type AS state,
              CASE WHEN lag(event_type) OVER w IS NULL
                     OR lag(event_type) OVER w <> event_type
@@ -7934,7 +7909,13 @@ def _er_cluster_churn(spark: SparkSession, sf: str) -> DataFrame:
       FROM events
       WINDOW w AS (PARTITION BY user_id
                    ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-    ),
+    )"""
+
+
+@_q(
+    "events_value_runs",
+    f"""
+    WITH {_RUN_STARTS_SQL},
     r AS (
       SELECT k, ts, state,
              cast(sum(is_new) OVER (PARTITION BY k
@@ -7967,16 +7948,8 @@ def _events_value_runs(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "events_interval_copresence",
-    """
-    WITH m AS (
-      SELECT user_id AS k, ts, event_id AS eid, event_type AS state,
-             CASE WHEN lag(event_type) OVER w IS NULL
-                    OR lag(event_type) OVER w <> event_type
-                  THEN 1 ELSE 0 END AS is_new
-      FROM events
-      WINDOW w AS (PARTITION BY user_id
-                   ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-    ),
+    f"""
+    WITH {_RUN_STARTS_SQL},
     rr AS (
       SELECT k, ts, state,
              cast(sum(is_new) OVER (PARTITION BY k
@@ -8631,10 +8604,10 @@ def _doc_domain_keyness(spark: SparkSession, sf: str) -> DataFrame:
     return domain_keyness(_t(spark, sf, "documents"))
 
 
-@_q(
-    "events_markov_transitions",
-    """
-    WITH s AS (
+# per-user (ts, event_id)-ordered event-type adjacencies `s` and their
+# counts `t` (src_type, dst_type, n_transitions): the lead window of
+# temporal.markov_transitions
+_TRANSITIONS_SQL = """s AS (
       SELECT event_type AS src_type,
              lead(event_type) OVER (PARTITION BY user_id
                                     ORDER BY ts, event_id) AS dst_type
@@ -8643,7 +8616,13 @@ def _doc_domain_keyness(spark: SparkSession, sf: str) -> DataFrame:
     t AS (
       SELECT src_type, dst_type, count(*)::BIGINT AS n_transitions
       FROM s WHERE dst_type IS NOT NULL GROUP BY 1, 2
-    ),
+    )"""
+
+
+@_q(
+    "events_markov_transitions",
+    f"""
+    WITH {_TRANSITIONS_SQL},
     tot AS (
       SELECT src_type, sum(n_transitions)::BIGINT AS total
       FROM t GROUP BY src_type
@@ -8678,23 +8657,15 @@ _ALLOWED_TRANSITIONS = sorted(
         ("error", "view"), ("error", "click"),
     }
 )
+_ALLOWED_VALUES_SQL = ", ".join(f"('{a}', '{b}')" for a, b in _ALLOWED_TRANSITIONS)
 
 
 @_q(
     "events_conformance",
-    """
-    WITH s AS (
-      SELECT event_type AS src_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS dst_type
-      FROM events
-    ),
-    t AS (
-      SELECT src_type, dst_type, count(*)::BIGINT AS n_transitions
-      FROM s WHERE dst_type IS NOT NULL GROUP BY 1, 2
-    ),
+    f"""
+    WITH {_TRANSITIONS_SQL},
     model AS (
-      SELECT *, true AS ok FROM (VALUES {allowed_vals})
+      SELECT *, true AS ok FROM (VALUES {_ALLOWED_VALUES_SQL})
         AS m(src_type, dst_type)
     ),
     tot AS (SELECT coalesce(sum(n_transitions), 0)::BIGINT AS tt FROM t)
@@ -8707,10 +8678,7 @@ _ALLOWED_TRANSITIONS = sorted(
     LEFT JOIN model m
       ON m.src_type = t.src_type AND m.dst_type = t.dst_type
     CROSS JOIN tot
-    """.replace(
-        "{allowed_vals}",
-        ", ".join(f"('{a}', '{b}')" for a, b in _ALLOWED_TRANSITIONS),
-    ),
+    """,
 )
 def _events_conformance(spark: SparkSession, sf: str) -> DataFrame:
     """Process-mining conformance: every observed per-user transition
@@ -8801,6 +8769,18 @@ def _er_oracles() -> dict[str, str]:
         JOIN m mb ON mb.mention_id = g.mention_id_b
       )
     """
+
+    # the scored match graph: canonical match edges `me` (u < v), both
+    # directions `e` (u, v) and each record's degree `deg` (u, deg)
+    match_graph_ctes = f"""{scored_cte},
+      me AS (
+        SELECT least(record_id_a, record_id_b) AS u,
+               greatest(record_id_a, record_id_b) AS v
+        FROM j WHERE is_match AND record_id_a != record_id_b
+        GROUP BY 1, 2
+      ),
+      e AS (SELECT u, v FROM me UNION ALL SELECT v, u FROM me),
+      deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u)"""
 
     def lev_pairs_cte(name: str) -> str:
         """mention x entity candidates: first-4-char blocks ``mb``/``eb``
@@ -9066,10 +9046,9 @@ def _er_oracles() -> dict[str, str]:
       LIMIT 100
     """
     )
-    # er_progressive_recall: bucketed score schedule + cumulative window
-    # over the tiny per-bucket table (ROWS == RANGE here: buckets distinct).
-    progressive_sql = f"""
-      WITH m AS (
+    # the gold pairs per floor(jaccard * 20) bucket: `per` (score_bucket,
+    # comparisons, matches), the twin of _jaccard_buckets
+    bucket_ctes = f"""m AS (
         SELECT mention_id, {_norm_m} AS norm,
                list_distinct(string_split({_norm_m}, ' ')) AS t
         FROM read_parquet('{men}')
@@ -9087,7 +9066,11 @@ def _er_oracles() -> dict[str, str]:
         SELECT score_bucket, count(*)::BIGINT AS comparisons,
                sum(is_gold)::BIGINT AS matches
         FROM p GROUP BY 1
-      ),
+      )"""
+    # er_progressive_recall: bucketed score schedule + cumulative window
+    # over the tiny per-bucket table (ROWS == RANGE here: buckets distinct).
+    progressive_sql = f"""
+      WITH {bucket_ctes},
       tot AS (
         SELECT sum(matches)::BIGINT AS tm, sum(comparisons)::BIGINT AS tc
         FROM per
@@ -9108,25 +9091,7 @@ def _er_oracles() -> dict[str, str]:
     # er_pr_curve: same bucketed-cumulative shape; F1 floored from the
     # already-floored ppm P/R so both engines agree exactly.
     pr_curve_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm,
-               list_distinct(string_split({_norm_m}, ' ')) AS t
-        FROM read_parquet('{men}')
-      ),
-      p AS (
-        SELECT g.same_entity::BIGINT AS is_gold,
-               floor(round(len(list_intersect(ma.t, mb.t))::double
-                     / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
-                     * 20)::BIGINT AS score_bucket
-        FROM read_parquet('{gold}') g
-        JOIN m ma ON ma.mention_id = g.mention_id_a
-        JOIN m mb ON mb.mention_id = g.mention_id_b
-      ),
-      per AS (
-        SELECT score_bucket, count(*)::BIGINT AS comparisons,
-               sum(is_gold)::BIGINT AS matches
-        FROM p GROUP BY 1
-      ),
+      WITH {bucket_ctes},
       tot AS (SELECT sum(matches)::BIGINT AS total_gold FROM per),
       c AS (
         SELECT score_bucket,
@@ -9259,11 +9224,10 @@ def _er_oracles() -> dict[str, str]:
              (n_true * 1000000 // greatest(n_fire, 1))::BIGINT AS precision_ppm
       FROM f
     """
-    # er_source_reliability: majority-vote canonical per entity via
-    # row_number (count DESC, value DESC — the struct-max twin), then
-    # per-world agreement; n_multi restricts to contested entities.
-    source_reliability_sql = f"""
-      WITH base AS (
+    # each mention's normalized value per world and entity (`base`: src,
+    # ent, val) and every entity's majority value (`canon`: ent, canon,
+    # n_vals), ties to the larger value
+    canon_ctes = f"""base AS (
         SELECT world AS src, label_id AS ent, {_norm_m} AS val
         FROM read_parquet('{men}')
         WHERE label_id IS NOT NULL AND {_norm_m} IS NOT NULL
@@ -9277,7 +9241,12 @@ def _er_oracles() -> dict[str, str]:
                  count(*) OVER (PARTITION BY ent)::BIGINT AS n_vals
           FROM vc
         ) WHERE rn = 1
-      ),
+      )"""
+    # er_source_reliability: majority-vote canonical per entity via
+    # row_number (count DESC, value DESC — the struct-max twin), then
+    # per-world agreement; n_multi restricts to contested entities.
+    source_reliability_sql = f"""
+      WITH {canon_ctes},
       j AS (
         SELECT b.src, (b.val = c.canon) AS agree,
                (c.n_vals > 1) AS multi
@@ -9306,21 +9275,7 @@ def _er_oracles() -> dict[str, str]:
     # er_weighted_vote_fusion: round-2 weighted re-election on top of the
     # reliability CTEs; weight = contested reliability (500000 prior).
     weighted_fusion_sql = f"""
-      WITH base AS (
-        SELECT world AS src, label_id AS ent, {_norm_m} AS val
-        FROM read_parquet('{men}')
-        WHERE label_id IS NOT NULL AND {_norm_m} IS NOT NULL
-      ),
-      vc AS (SELECT ent, val, count(*)::BIGINT AS c FROM base GROUP BY 1, 2),
-      canon AS (
-        SELECT ent, val AS canon, n_vals FROM (
-          SELECT ent, val, c,
-                 row_number() OVER (PARTITION BY ent
-                                    ORDER BY c DESC, val DESC) AS rn,
-                 count(*) OVER (PARTITION BY ent)::BIGINT AS n_vals
-          FROM vc
-        ) WHERE rn = 1
-      ),
+      WITH {canon_ctes},
       jr AS (
         SELECT b.src, (b.val = c.canon) AS agree, (c.n_vals > 1) AS multi
         FROM base b JOIN canon c ON c.ent = b.ent
@@ -9452,30 +9407,7 @@ def _er_oracles() -> dict[str, str]:
          AND g.mention_id_b = j.record_id_b
         WHERE floor(j.jaccard * 1000000) IS NOT NULL
       ),
-      r AS (
-        SELECT is_a,
-               (2 * rank() OVER (ORDER BY vm)
-                + count(*) OVER (PARTITION BY vm) - 1)::BIGINT AS rank2
-        FROM lab
-      ),
-      agg AS (
-        SELECT coalesce(sum(is_a), 0)::BIGINT AS na,
-               coalesce(sum(1 - is_a), 0)::BIGINT AS nb,
-               coalesce(sum(CASE WHEN is_a = 1 THEN rank2 ELSE 0 END),
-                        0)::BIGINT AS r2a
-        FROM r
-      ),
-      nv AS (SELECT count(DISTINCT vm)::BIGINT AS n_values FROM lab)
-      SELECT na AS n_a, nb AS n_b, n_values,
-             (r2a - na * (na + 1))::BIGINT AS u2_a,
-             (CASE WHEN na > 0 AND nb > 0 THEN
-                (1000000 * (r2a - na * (na + 1))) // (2 * na * nb)
-              END)::BIGINT AS auc_ppm,
-             (CASE WHEN na > 0 AND nb > 0 THEN
-                2 * ((1000000 * (r2a - na * (na + 1))) // (2 * na * nb))
-                - 1000000
-              END)::BIGINT AS rank_biserial_ppm
-      FROM agg, nv
+      {_mann_whitney_sql('lab')}
     """
     # er_rule_kappa: chance-corrected agreement of the two fuzzy rules in
     # ONE exact fraction kappa = (n·g − P)/(n² − P), spearman-staged
@@ -10655,8 +10587,10 @@ def _er_oracles() -> dict[str, str]:
       FROM read_json('{mjsonl}')
       WHERE lower(label) IN (SELECT lower(title) FROM read_json('{jsonl}'))
     """
-    blocking_recall_sql = f"""
-      WITH m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
+    # the token-pair block assignment `assign` (record_id, block_key):
+    # every sorted token pair of a mention, its one token when it has one;
+    # `sized` adds each block's size bs
+    block_assign_ctes = f"""m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
       assign AS (
         SELECT mention_id AS record_id, unnest(
           CASE WHEN len(toks) >= 2 THEN
@@ -10665,12 +10599,15 @@ def _er_oracles() -> dict[str, str]:
                      for i in range(1, len(toks)+1)])
           ELSE ['t1:' || toks[1]] END) AS block_key
         FROM m
-      ),
+      )"""
+    block_sized_ctes = f"""{block_assign_ctes},
       sized AS (
         SELECT block_key, record_id,
                count(*) OVER (PARTITION BY block_key) AS bs
         FROM assign
-      ),
+      )"""
+    blocking_recall_sql = f"""
+      WITH {block_sized_ctes},
       kept AS (SELECT * FROM sized WHERE bs <= 4096),
       cand AS (
         SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
@@ -11219,15 +11156,7 @@ def _er_oracles() -> dict[str, str]:
         # canonical edge set, exact-ppm neighborhood Jaccard in BIGINT
         # floor division
         "er_missing_links": f"""
-          {scored_cte},
-          me AS (
-            SELECT least(record_id_a, record_id_b) AS u,
-                   greatest(record_id_a, record_id_b) AS v
-            FROM j WHERE is_match AND record_id_a != record_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM me UNION ALL SELECT v, u FROM me),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          {match_graph_ctes},
           w AS (
             SELECT e1.v AS a, e2.v AS b, count(*)::BIGINT AS cn
             FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
@@ -11385,15 +11314,7 @@ def _er_oracles() -> dict[str, str]:
         # on the wedge apex and each common neighbor contributes the exact
         # integer term 1e9 div deg (no libm log anywhere)
         "er_resource_allocation": f"""
-          {scored_cte},
-          me AS (
-            SELECT least(record_id_a, record_id_b) AS u,
-                   greatest(record_id_a, record_id_b) AS v
-            FROM j WHERE is_match AND record_id_a != record_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM me UNION ALL SELECT v, u FROM me),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          {match_graph_ctes},
           w AS (
             SELECT e1.v AS a, e2.v AS b, e1.u AS n
             FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
@@ -11665,16 +11586,7 @@ def _er_oracles() -> dict[str, str]:
           SELECT mention_id AS record_id, unnest(keys) AS block_key FROM pairs
         """,
         "er_blocking_quality": f"""
-          WITH m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
-          assign AS (
-            SELECT mention_id AS record_id, unnest(
-              CASE WHEN len(toks) >= 2 THEN
-                flatten([[('tp:' || toks[i] || '|' || toks[j])
-                          for j in range(i+1, len(toks)+1)]
-                         for i in range(1, len(toks)+1)])
-              ELSE ['t1:' || toks[1]] END) AS block_key
-            FROM m
-          ),
+          WITH {block_assign_ctes},
           sizes AS (SELECT block_key, count(*) AS bs FROM assign GROUP BY 1),
           hist AS (
             SELECT floor(log2(bs + 0.5))::BIGINT AS size_bucket,
@@ -11697,21 +11609,7 @@ def _er_oracles() -> dict[str, str]:
           FROM u CROSS JOIN n
         """,
         "er_candidate_pairs": f"""
-          WITH m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
-          assign AS (
-            SELECT mention_id AS record_id, unnest(
-              CASE WHEN len(toks) >= 2 THEN
-                flatten([[('tp:' || toks[i] || '|' || toks[j])
-                          for j in range(i+1, len(toks)+1)]
-                         for i in range(1, len(toks)+1)])
-              ELSE ['t1:' || toks[1]] END) AS block_key
-            FROM m
-          ),
-          sized AS (
-            SELECT block_key, record_id,
-                   count(*) OVER (PARTITION BY block_key) AS bs
-            FROM assign
-          ),
+          WITH {block_sized_ctes},
           kept AS (SELECT * FROM sized WHERE bs <= 4096)
           SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
           FROM kept a JOIN kept b
@@ -12287,21 +12185,7 @@ def _er_oracles() -> dict[str, str]:
           LEFT JOIN bs USING (cluster_id)
         """,
         "er_meta_blocking": f"""
-          WITH m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
-          assign AS (
-            SELECT mention_id AS record_id, unnest(
-              CASE WHEN len(toks) >= 2 THEN
-                flatten([[('tp:' || toks[i] || '|' || toks[j])
-                          for j in range(i+1, len(toks)+1)]
-                         for i in range(1, len(toks)+1)])
-              ELSE ['t1:' || toks[1]] END) AS block_key
-            FROM m
-          ),
-          sized AS (
-            SELECT block_key, record_id,
-                   count(*) OVER (PARTITION BY block_key) AS bs
-            FROM assign
-          ),
+          WITH {block_sized_ctes},
           kept AS (SELECT * FROM sized WHERE bs BETWEEN 2 AND 1024),
           edges AS (
             SELECT a.record_id AS record_id_a, b.record_id AS record_id_b,

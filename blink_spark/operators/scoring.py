@@ -115,16 +115,14 @@ def score_pairs_cascade(
     Cheap JVM features (norm equality, token Jaccard, banded Levenshtein)
     decide the match on every row; the expensive crossencoder-style features
     (exact Levenshtein ratio, Jaro-Winkler pandas UDF, embedding cosine) are
-    computed only on the plausible branch. Pandas UDFs run as
-    ArrowEvalPython plan nodes — a ``F.when`` guard does NOT stop them from
-    evaluating on every row, so WITH the Jaro-Winkler UDF the cascade is
-    structural: filter → score → union. Without it (``with_jw=False``, the
-    default) every remaining expression is a JVM codegen one, where CASE
-    WHEN genuinely short-circuits — the cascade collapses to a single pass
-    (``_score_cascade_single_pass``) that avoids evaluating the upstream
-    pair DAG once per branch. The decision rule is identical in both
-    branches, so the cascade changes cost, never semantics — the Spark
-    translation of the reference's filter-before-crossencoder staging
+    computed only on the plausible rows, NULL on the others, in one pass
+    over the pair DAG. Codegen CASE WHEN short-circuits the JVM features. A
+    pandas UDF runs as an ArrowEvalPython node on every row whatever guards
+    it, so the Jaro-Winkler UDF reads its inputs through ``F.when`` too: a
+    cold row hands it two NULLs, one empty-string compare. The decision
+    rule never reads the expensive features, so the cascade changes cost,
+    never semantics — the Spark translation of the reference's
+    filter-before-crossencoder staging
     (/root/reference/blink/crossencoder/data_process.py:89-112).
 
     A pair must reach 0.9 of the match thresholds to be worth full
@@ -135,9 +133,8 @@ def score_pairs_cascade(
     results are identical — it only feeds the diagnostic ``score`` — and
     the whole stage stays in codegen. Default for the clustering pipeline.
     """
-    # coalesced: a NULL norm/toks value makes the guard NULL, and both forms
-    # must then send the row down the cold branch (a filter on NULL would
-    # drop it from both union branches, while CASE WHEN keeps it)
+    # coalesced: a NULL norm/toks value makes the guard NULL, and the row
+    # then takes the cold values
     base = _base_features(pairs_attrs).withColumn(
         "plausible",
         F.coalesce(
@@ -146,60 +143,22 @@ def score_pairs_cascade(
             F.lit(False),
         ),
     )
+    p = F.col("plausible")
     m = F.greatest(F.length("norm_a"), F.length("norm_b"))
     exact_lev = F.when(
         m > 0, 1.0 - F.levenshtein("norm_a", "norm_b").cast("double") / m
     ).otherwise(F.lit(1.0))
-    emb_cos = cosine("emb_a", "emb_b", "emb_n_a", "emb_n_b") if with_emb else None
-    if not with_jw:
-        # No Python node in the plan ⇒ the structural filter→union cascade
-        # is unnecessary: codegen CASE WHEN evaluates the expensive branch
-        # (exact Levenshtein, cosine fold) lazily, only on plausible rows.
-        # The union form evaluates the whole upstream pair DAG TWICE (once
-        # per branch — only the exchanges are reused); this single-pass form
-        # runs it once. Per-row values are identical: same expressions,
-        # same guard, NULLs on the cold rows.
-        return _score_cascade_single_pass(base, exact_lev, emb_cos)
-    jw_col = F.round(jaro_winkler_udf("norm_a", "norm_b"), 6)
-    hot = (
-        base.filter(F.col("plausible"))
-        .withColumn("lev_ratio", F.round(exact_lev, 6))
-        .withColumn("jw", jw_col)
-    )
-    cold = (
-        base.filter(~F.col("plausible"))
-        .withColumn("lev_ratio", F.lit(None).cast("double"))
-        .withColumn("jw", F.lit(None).cast("double"))
-    )
-    lexical = (
-        0.5 * F.col("jw") + 0.5 * F.col("lev_ratio")
-        if with_jw
-        else F.col("lev_ratio")
+    jw, lexical = F.lit(None).cast("double"), F.col("lev_ratio")
+    if with_jw:
+        # the UDF node sees every row: mask its inputs, not only its output
+        na, nb = F.when(p, F.col("norm_a")), F.when(p, F.col("norm_b"))
+        jw = F.when(p, F.round(jaro_winkler_udf(na, nb), 6))
+        lexical = 0.5 * F.col("jw") + 0.5 * F.col("lev_ratio")
+    out = base.withColumn("lev_ratio", F.when(p, F.round(exact_lev, 6))).withColumn(
+        "jw", jw
     )
     if with_emb:
-        hot = hot.withColumn("emb_cos", F.round(emb_cos, 6))
-        cold = cold.withColumn("emb_cos", F.lit(None).cast("double"))
-        hot = hot.withColumn(
-            "score",
-            F.round(0.4 * (F.col("emb_cos") + 1.0) / 2.0 + 0.6 * lexical, 6),
-        )
-    else:
-        hot = hot.withColumn("score", F.round(lexical, 6))
-    cold = cold.withColumn("score", F.col("jaccard") * 0.5)
-    return hot.unionByName(cold).drop("plausible")
-
-
-def _score_cascade_single_pass(base: DataFrame, exact_lev, emb_cos) -> DataFrame:
-    """One-pass cascade (no Python in the plan): CASE WHEN computes the
-    expensive features only on plausible rows, NULL otherwise — the same
-    per-row values and column order the filter→union form produces, without
-    evaluating the upstream pair DAG twice."""
-    p = F.col("plausible")
-    out = base.withColumn("lev_ratio", F.when(p, F.round(exact_lev, 6))).withColumn(
-        "jw", F.lit(None).cast("double")
-    )
-    lexical = F.col("lev_ratio")
-    if emb_cos is not None:
+        emb_cos = cosine("emb_a", "emb_b", "emb_n_a", "emb_n_b")
         out = out.withColumn("emb_cos", F.when(p, F.round(emb_cos, 6)))
         hot_score = F.round(0.4 * (F.col("emb_cos") + 1.0) / 2.0 + 0.6 * lexical, 6)
     else:

@@ -220,6 +220,22 @@ def _cm_hash(col: Column, j: int, w: int) -> Column:
     )
 
 
+def _cm_cells(key_col: str) -> Column:
+    """One ``jb`` struct (j, bucket) per sketch row ``j``, exploded: the
+    counter cell each row of the grid maps the key to."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(j).cast("int").alias("j"),
+                    _cm_hash(F.col(key_col), j, CM_WIDTH).alias("bucket"),
+                )
+                for j in range(CM_DEPTH)
+            ]
+        )
+    ).alias("jb")
+
+
 def count_min_counters(df: DataFrame, key_col: str) -> DataFrame:
     """The count-min sketch STATE (Cormode & Muthukrishnan 2005): a
     ``d x w`` counter grid (``CM_DEPTH x CM_WIDTH``) — row ``j`` buckets
@@ -235,20 +251,7 @@ def count_min_counters(df: DataFrame, key_col: str) -> DataFrame:
 
     Returns (j, bucket, c).
     """
-    d, w = CM_DEPTH, CM_WIDTH
-    jb = df.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("j"),
-                        _cm_hash(F.col(key_col), j, w).alias("bucket"),
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("jb")
-    )
+    jb = df.select(_cm_cells(key_col))
     return jb.groupBy(
         F.col("jb.j").alias("j"), F.col("jb.bucket").alias("bucket")
     ).agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -267,7 +270,6 @@ def count_min_estimate(df: DataFrame, key_col: str) -> DataFrame:
     Returns (key, n_exact, est_count, overestimate), one row per distinct
     key; ``overestimate = est_count - n_exact >= 0``.
     """
-    d, w = CM_DEPTH, CM_WIDTH
     counters = count_min_counters(df, key_col)
     keys = df.groupBy(key_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_exact")
@@ -275,17 +277,7 @@ def count_min_estimate(df: DataFrame, key_col: str) -> DataFrame:
     kh = keys.select(
         key_col,
         "n_exact",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).cast("int").alias("j"),
-                        _cm_hash(F.col(key_col), j, w).alias("bucket"),
-                    )
-                    for j in range(d)
-                ]
-            )
-        ).alias("jb"),
+        _cm_cells(key_col),
     ).select(key_col, "n_exact", "jb.j", "jb.bucket")
     return (
         kh.join(F.broadcast(counters), ["j", "bucket"])

@@ -266,6 +266,23 @@ def retention_cohorts(
     )
 
 
+def _transition_counts(
+    events: DataFrame, user_col: str, ts_col: str, type_col: str, id_col: str
+) -> DataFrame:
+    """(src_type, dst_type, n_transitions): every adjacent pair of event
+    types in each user's (ts, id)-ordered timeline, counted."""
+    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    s = events.select(
+        F.col(type_col).alias("src_type"),
+        F.lead(type_col).over(w).alias("dst_type"),
+    )
+    return (
+        s.filter(F.col("dst_type").isNotNull())
+        .groupBy("src_type", "dst_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
+    )
+
+
 def markov_transitions(
     events: DataFrame,
     user_col: str,
@@ -293,16 +310,7 @@ def markov_transitions(
 
     Returns (src_type, dst_type, n_transitions, p_ppm).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    s = events.select(
-        F.col(type_col).alias("src_type"),
-        F.lead(type_col).over(w).alias("dst_type"),
-    )
-    t = (
-        s.filter(F.col("dst_type").isNotNull())
-        .groupBy("src_type", "dst_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
-    )
+    t = _transition_counts(events, user_col, ts_col, type_col, id_col)
     tot = t.groupBy("src_type").agg(
         F.sum("n_transitions").cast("long").alias("total")
     )
@@ -1294,6 +1302,21 @@ def attribution_counts(
     return lt.unionByName(fj)
 
 
+def _daily_counts(events: DataFrame, key_col: str, ts_col: str) -> DataFrame:
+    """(k, day, x): events per key and observed day, the day counted from
+    ``EPOCH``; days without events are absent."""
+    return (
+        events.select(
+            F.col(key_col).alias("k"),
+            F.expr(
+                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
+            ).alias("day"),
+        )
+        .groupBy("k", "day")
+        .agg(F.count(F.lit(1)).cast("long").alias("x"))
+    )
+
+
 def dispersion_index(
     events: DataFrame,
     key_col: str = "event_type",
@@ -1320,16 +1343,7 @@ def dispersion_index(
     Returns (key, n_days, n_events, mean_milli, dispersion_milli,
     overdispersed).
     """
-    daily = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
-            ).alias("day"),
-        )
-        .groupBy("k", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
+    daily = _daily_counts(events, key_col, ts_col)
     agg = daily.groupBy("k").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -1382,16 +1396,7 @@ def changepoint_days(
     Returns (key, n_days, n_events, cp_day, cp_dev, cp_dev_ppm,
     cp_share_ppm).
     """
-    daily = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(
-                f"cast(datediff(to_date({ts_col}), date'{EPOCH}') as bigint)"
-            ).alias("day"),
-        )
-        .groupBy("k", "day")
-        .agg(F.count(F.lit(1)).cast("long").alias("x"))
-    )
+    daily = _daily_counts(events, key_col, ts_col)
     w = (
         Window.partitionBy("k")
         .orderBy("day")
@@ -1544,16 +1549,7 @@ def transition_conformance(
     share_ppm).
     """
     spark = events.sparkSession
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
-    s = events.select(
-        F.col(type_col).alias("src_type"),
-        F.lead(type_col).over(w).alias("dst_type"),
-    )
-    t = (
-        s.filter(F.col("dst_type").isNotNull())
-        .groupBy("src_type", "dst_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_transitions"))
-    )
+    t = _transition_counts(events, user_col, ts_col, type_col, id_col)
     model = spark.createDataFrame(
         sorted(set(allowed)), "src_type string, dst_type string"
     ).withColumn("ok", F.lit(True))
@@ -1647,6 +1643,26 @@ def stickiness(
     )
 
 
+def _second_gaps(
+    events: DataFrame, user_col: str, ts_col: str, id_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """(base, gaps): the events with a user and a timestamp, and (u, gap),
+    the whole seconds between each of a user's events and the one before
+    it in (ts, id) order (the µs difference floored)."""
+    base = events.filter(
+        F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
+    )
+    g = base.select(
+        F.col(user_col).alias("u"),
+        F.expr(
+            f"timestampdiff(MICROSECOND, lag({ts_col}) OVER (PARTITION BY"
+            f" {user_col} ORDER BY {ts_col}, {id_col}), {ts_col})"
+            " div 1000000"
+        ).alias("gap"),
+    ).filter("gap IS NOT NULL")
+    return base, g
+
+
 def bot_flags(
     events: DataFrame,
     user_col: str = "user_id",
@@ -1674,17 +1690,7 @@ def bot_flags(
     gap_disp_milli, flag_rate, flag_diversity, flag_metronomic,
     bot_score).
     """
-    base = events.filter(
-        F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
-    )
-    g = base.select(
-        F.col(user_col).alias("u"),
-        F.expr(
-            f"timestampdiff(MICROSECOND, lag({ts_col}) OVER (PARTITION BY"
-            f" {user_col} ORDER BY {ts_col}, {id_col}), {ts_col})"
-            " div 1000000"
-        ).alias("gap"),
-    ).filter("gap IS NOT NULL")
+    base, g = _second_gaps(events, user_col, ts_col, id_col)
     gd = g.groupBy("u").agg(
         F.count(F.lit(1)).cast("long").alias("ng"),
         F.sum("gap").cast("long").alias("s"),
@@ -1828,17 +1834,7 @@ def churn_risk(
     """
     from blink_spark.operators.corpus import grouped_quartiles
 
-    base = events.filter(
-        F.col(user_col).isNotNull() & F.col(ts_col).isNotNull()
-    )
-    g = base.select(
-        F.col(user_col).alias("u"),
-        F.expr(
-            f"timestampdiff(MICROSECOND, lag({ts_col}) OVER (PARTITION BY"
-            f" {user_col} ORDER BY {ts_col}, {id_col}), {ts_col})"
-            " div 1000000"
-        ).alias("gap"),
-    ).filter("gap IS NOT NULL")
+    base, g = _second_gaps(events, user_col, ts_col, id_col)
     med = grouped_quartiles(g, "u", "gap", "gap").select(
         F.col("key").alias("u"),
         F.col("n").alias("n_gaps"),

@@ -45,7 +45,13 @@ from blink_spark.operators.blocking import (
 )
 from blink_spark.operators.cluster import assign_clusters
 from blink_spark.operators.extract import extract_mentions
-from blink_spark.operators.pairs import candidate_pairs, pairs_with_attrs
+from blink_spark.operators.pairs import (
+    DEFAULT_HARD_CAP,
+    DEFAULT_MAX_BLOCK,
+    DEFAULT_N_SALT,
+    candidate_pairs,
+    pairs_with_attrs,
+)
 from blink_spark.operators.scoring import (
     match_edges,
     prepare_records,
@@ -132,9 +138,9 @@ def expand_contracted_clusters(
 
 @dataclass
 class PipelineConfig:
-    max_block_size: int = 64
-    hard_cap: int = 4096
-    n_salt: int = 8
+    max_block_size: int = DEFAULT_MAX_BLOCK
+    hard_cap: int = DEFAULT_HARD_CAP
+    n_salt: int = DEFAULT_N_SALT
     minhash_bands: int = 4
     # 8 rows/band: short similar-vocab strings collide far less (p ≈ j^8)
     # while true near-dups (j ≳ 0.9) still land together w.p. ~1-(1-0.43)^4

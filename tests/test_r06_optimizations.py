@@ -121,11 +121,13 @@ def _per_pair_cosine(a, b):
     return F.round(F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0)), 6)
 
 
-def _union_form_cascade(pa, with_emb):
+def _union_form_cascade(pa, with_emb, with_jw):
     """The pre-round-6 structural filter→union cascade, verbatim except for
     the guard, which is coalesced to false as score_pairs_cascade now builds
-    it (a NULL guard would drop the row from both branches)."""
-    from blink_spark.functions.similarity import JACCARD_THRESHOLD
+    it (a NULL guard would drop the row from both branches). ``with_jw``
+    puts the Jaro-Winkler UDF on the filtered hot branch, so it only ever
+    sees plausible rows."""
+    from blink_spark.functions.similarity import JACCARD_THRESHOLD, jaro_winkler_udf
     from blink_spark.operators.scoring import _base_features
 
     base = _base_features(pa).withColumn(
@@ -139,31 +141,47 @@ def _union_form_cascade(pa, with_emb):
     exact_lev = F.when(
         m > 0, 1.0 - F.levenshtein("norm_a", "norm_b").cast("double") / m
     ).otherwise(F.lit(1.0))
+    hot_jw = (
+        F.round(jaro_winkler_udf("norm_a", "norm_b"), 6)
+        if with_jw
+        else F.lit(None).cast("double")
+    )
     hot = (
         base.filter(F.col("plausible"))
         .withColumn("lev_ratio", F.round(exact_lev, 6))
-        .withColumn("jw", F.lit(None).cast("double"))
+        .withColumn("jw", hot_jw)
     )
     cold = (
         base.filter(~F.col("plausible"))
         .withColumn("lev_ratio", F.lit(None).cast("double"))
         .withColumn("jw", F.lit(None).cast("double"))
     )
+    lexical = (
+        0.5 * F.col("jw") + 0.5 * F.col("lev_ratio") if with_jw else F.col("lev_ratio")
+    )
     if with_emb:
         hot = hot.withColumn("emb_cos", _per_pair_cosine("emb_a", "emb_b"))
         cold = cold.withColumn("emb_cos", F.lit(None).cast("double"))
         hot = hot.withColumn(
             "score",
-            F.round(0.4 * (F.col("emb_cos") + 1.0) / 2.0 + 0.6 * F.col("lev_ratio"), 6),
+            F.round(0.4 * (F.col("emb_cos") + 1.0) / 2.0 + 0.6 * lexical, 6),
         )
     else:
-        hot = hot.withColumn("score", F.round(F.col("lev_ratio"), 6))
+        hot = hot.withColumn("score", F.round(lexical, 6))
     cold = cold.withColumn("score", F.col("jaccard") * 0.5)
     return hot.unionByName(cold).drop("plausible")
 
 
-@pytest.mark.parametrize("with_emb", [True, False])
-def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
+@pytest.mark.parametrize(
+    "with_emb, with_jw",
+    [
+        pytest.param(True, False, id="True"),
+        pytest.param(False, False, id="False"),
+        pytest.param(True, True, id="True-jw"),
+        pytest.param(False, True, id="False-jw"),
+    ],
+)
+def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb, with_jw):
     from blink_spark.functions.similarity import l2_norm
     from blink_spark.operators.scoring import score_pairs_cascade
 
@@ -185,19 +203,17 @@ def test_single_pass_cascade_equals_union_form(prepped_pairs, with_emb):
         "record_id_a", "record_id_b", "norm_eq", "jaccard", "is_match",
         "lev_ratio", "jw", "score",
     ] + (["emb_cos"] if with_emb else [])
-    old = _union_form_cascade(pa, with_emb)
-    new = score_pairs_cascade(pa, with_emb=with_emb, with_jw=False)
+    old = _union_form_cascade(pa, with_emb, with_jw)
+    new = score_pairs_cascade(pa, with_emb=with_emb, with_jw=with_jw)
     assert old.columns == new.columns
     a = sorted(tuple(r) for r in old.select(cols).collect())
     b = sorted(tuple(r) for r in new.select(cols).collect())
     assert a == b and len(a) > 0
     assert "~null_norm" in {r[0] for r in b}
-    # the library's own union form (with_jw=True) keeps the same rows; only
-    # its jw and score columns differ
-    keep = [c for c in cols if c not in ("jw", "score")]
-    union = score_pairs_cascade(pa, with_emb=with_emb, with_jw=True)
-    u = sorted(tuple(r) for r in union.select(keep).collect())
-    assert u == sorted(tuple(r) for r in new.select(keep).collect())
+    # JW is filled on the rows lev_ratio is filled on (the plausible ones)
+    jw, lev = cols.index("jw"), cols.index("lev_ratio")
+    assert all((r[jw] is not None) == (with_jw and r[lev] is not None) for r in b)
+    assert any(r[lev] is not None for r in b)
 
 
 @pytest.mark.parametrize("op", ["brute_force_topk"])

@@ -16,7 +16,7 @@ constant, not an option, unless ``OPTION_ALLOWLIST`` keeps it for a stated
 reason.
 
 The clone guard reads ``__spark_entry__.py`` and ``blink_spark/`` as text:
-no 20 consecutive normalised lines may occur twice.
+no 10 consecutive normalised lines may occur twice.
 """
 
 from __future__ import annotations
@@ -394,7 +394,7 @@ def test_option_analyzer_on_synthetic_source():
 
 # ---- clone guard -----------------------------------------------------------
 
-CLONE_WINDOW = 20
+CLONE_WINDOW = 10
 
 
 def _clone_files() -> list[Path]:
@@ -435,7 +435,7 @@ def _clones(files: dict[str, list[tuple[int, str]]], window: int) -> list[tuple[
 
 
 def test_no_repeated_code_blocks():
-    """No 20 consecutive lines (stripped, whitespace collapsed, blank and
+    """No 10 consecutive lines (stripped, whitespace collapsed, blank and
     ``#`` lines dropped) occur twice in ``__spark_entry__.py`` and
     ``blink_spark/``: a query chain or oracle CTE written twice is written
     once, as a helper or a shared SQL fragment, and reused."""

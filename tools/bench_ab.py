@@ -13,8 +13,6 @@ reps (plans are rebuilt per run, so a swap takes effect immediately):
              size-gated single-task union-find
 - ``freq`` — localCheckpoint the token-frequency table in fused mode
              (the pre-round-3 behavior)
-- ``norm`` — full-normalized-text contraction shuffle keys instead of
-             (xxhash64, length)
 - ``aa``   — no change at all: an A/A run whose arm-minimum gap measures
              the same-JVM noise floor any A/B verdict must clear
 
@@ -39,11 +37,8 @@ def main() -> None:
     rounds = int(sys.argv[2]) if len(sys.argv) > 2 else 6
     n_docs = int(sys.argv[3]) if len(sys.argv) > 3 else 600_000
 
-    from pyspark.sql import functions as F
-
     import blink_spark.operators.cluster as C
     import blink_spark.pipeline as P
-    from blink_spark.functions.text import normalize_text
     from blink_spark.operators.blocking import df_aware_blocks as _orig_blocks
     from blink_spark.pipeline import PipelineConfig, run_pipeline
     from blink_spark.session import get_spark
@@ -52,39 +47,9 @@ def main() -> None:
     from bench_scaling import _fixture
 
     base = {
-        "exact_contract": P.exact_contract,
-        "expand": P.expand_contracted_clusters,
         "blocks": _orig_blocks,
         "cc": C.connected_components,
     }
-
-    def plain_contract(mentions, id_col, text_col):
-        return (
-            mentions.select(
-                mentions[id_col].alias("mention_id"),
-                normalize_text(mentions[text_col]).alias("norm"),
-            )
-            .groupBy("norm")
-            .agg(F.min("mention_id").alias("record_id"))
-            .select("record_id", "norm")
-        )
-
-    def plain_expand(mentions, id_col, text_col, rep_clusters):
-        with_norm = mentions.select(
-            mentions[id_col].alias("record_id"),
-            normalize_text(mentions[text_col]).alias("norm"),
-        )
-        n2c = (
-            with_norm.groupBy("norm")
-            .agg(F.min("record_id").alias("rep_id"))
-            .join(
-                rep_clusters.withColumnRenamed("record_id", "rep_id"),
-                "rep_id",
-                "left",
-            )
-            .select("norm", F.coalesce("cluster_id", "rep_id").alias("cluster_id"))
-        )
-        return with_norm.join(n2c, "norm").select("record_id", "cluster_id")
 
     def blocks_cached(*a, **k):
         k["cache_freq"] = True
@@ -95,8 +60,6 @@ def main() -> None:
         return base["cc"](edges, **k)
 
     def set_mode(mode: str) -> None:
-        P.exact_contract = base["exact_contract"]
-        P.expand_contracted_clusters = base["expand"]
         P.df_aware_blocks = base["blocks"]
         C.connected_components = base["cc"]
         if mode == "base":
@@ -105,13 +68,10 @@ def main() -> None:
             C.connected_components = cc_superstep
         elif mode == "freq":
             P.df_aware_blocks = blocks_cached
-        elif mode == "norm":
-            P.exact_contract = plain_contract
-            P.expand_contracted_clusters = plain_expand
         elif mode == "aa":
             pass  # A/A: identical code both arms — measures the noise floor
         else:
-            raise SystemExit(f"unknown variant {mode!r} (ss|freq|norm|aa)")
+            raise SystemExit(f"unknown variant {mode!r} (ss|freq|aa)")
 
     docs = _fixture(n_docs)
     warm = _fixture(40_000)

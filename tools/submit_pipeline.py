@@ -4,8 +4,7 @@ runs via ``spark-submit --py-files`` on a multi-executor cluster).
 Usage:
     python tools/make_pyfiles.py                       # build blink_spark.zip
     spark-submit --py-files blink_spark.zip \
-        tools/submit_pipeline.py <documents_parquet> <out_dir> \
-        [--no-checkpoints] [--max-block-size N] [--hard-cap N]
+        tools/submit_pipeline.py <documents_parquet> <out_dir>
 
 In spark-submit mode the session comes from the cluster manager; this script
 only declares app-level SQL conf (AQE, Arrow) and never hardcodes a master.
@@ -21,10 +20,6 @@ def main() -> int:
     parser = argparse.ArgumentParser(description="blink_spark ER pipeline")
     parser.add_argument("documents", help="input documents parquet path")
     parser.add_argument("out_dir", help="output/checkpoint directory")
-    parser.add_argument("--no-checkpoints", action="store_true")
-    parser.add_argument("--max-block-size", type=int, default=64)
-    parser.add_argument("--hard-cap", type=int, default=4096)
-    parser.add_argument("--n-salt", type=int, default=8)
     args = parser.parse_args()
 
     from pyspark.sql import SparkSession
@@ -38,15 +33,9 @@ def main() -> int:
         .getOrCreate()
     )
 
-    from blink_spark.pipeline import PipelineConfig, run_pipeline
+    from blink_spark.pipeline import run_pipeline
 
-    cfg = PipelineConfig(
-        max_block_size=args.max_block_size,
-        hard_cap=args.hard_cap,
-        n_salt=args.n_salt,
-        checkpoints=not args.no_checkpoints,
-    )
-    clusters = run_pipeline(spark, args.documents, args.out_dir, config=cfg)
+    clusters = run_pipeline(spark, args.documents, args.out_dir)
     n = clusters.count()
     print(f"clusters written: {n} rows -> {args.out_dir}/clusters")
     return 0
