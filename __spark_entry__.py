@@ -7,8 +7,12 @@
 ``oracle_sql()``      — DuckDB-equivalent ANSI SQL per query. Tables
                         region nation customer supplier part orders lineitem
                         events documents embeddings are pre-registered views;
-                        ER-fixture tables are read via read_parquet() from
-                        this repo's deterministic fixture dir.
+                        ER oracles read the fixture files via read_parquet()
+                        and read_text() through the module-level paths of
+                        this repo's deterministic fixture dir (``_DOC``,
+                        ``_MEN``, …), and ``oracle_sql()`` writes the fixtures.
+
+Each query registers its oracle beside its body, ``@_q(name, oracle)``.
 
 Column names are aliased identically on both sides (the driver sorts columns
 by name before value-hashing). Float results are rounded on both sides.
@@ -16,8 +20,12 @@ by name before value-hashing). Float results are rounded on both sides.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import sys
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,12 +36,24 @@ if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
 FIXTURE_DIR = os.path.join(_REPO, "tests", "fixtures")
+_ENTITIES_JSONL = os.path.join(FIXTURE_DIR, "entities.jsonl")
 
 
 def _fixtures() -> dict[str, str]:
     from blink_spark.synth import write_fixtures
 
     return write_fixtures(FIXTURE_DIR)
+
+
+@functools.cache
+def _scratch_dir() -> str:
+    """This process's scratch directory, made on first use and removed at
+    interpreter exit. Queries that round-trip through a store write a fixed
+    subdirectory of it in overwrite mode. Per process, not a fixed path: an
+    embedded Derby database can be booted by one JVM only."""
+    d = tempfile.mkdtemp(prefix="blink_scratch_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -107,11 +127,10 @@ _QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _ORACLES: dict[str, str] = {}
 
 
-def _q(name: str, oracle: str | None):
+def _q(name: str, oracle: str):
     def deco(fn):
         _QUERIES[name] = fn
-        if oracle is not None:
-            _ORACLES[name] = oracle
+        _ORACLES[name] = oracle
         return fn
 
     return deco
@@ -130,9 +149,40 @@ def _toks(c: str) -> str:
     return f"list_distinct(string_split({_norm(c)}, ' '))"
 
 
-def _fxp(name: str) -> str:
-    _fixtures()
-    return os.path.join(FIXTURE_DIR, f"{name}.parquet").replace("'", "''")
+def _q_emb(col: str = "embedding") -> str:
+    """DuckDB mirror of hashing.quantize_emb: floor(v * 10^6) per component."""
+    return f"[floor(x::double * 1000000)::BIGINT for x in {col}]"
+
+
+_COS_EXACT_SQL = (
+    "round(CASE WHEN sqrt(list_dot_product({a}, {a}))"
+    " * sqrt(list_dot_product({b}, {b})) > 0"
+    " THEN list_dot_product({a}, {b})"
+    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
+    " ELSE 0.0 END, 6)"
+)
+
+
+def _fxp(file: str) -> str:
+    """The DuckDB-quoted path of fixture ``file`` in write_fixtures' fixed
+    layout. No I/O: oracle_sql() writes the fixtures."""
+    return os.path.join(FIXTURE_DIR, file).replace("'", "''")
+
+
+_DOC = _fxp("documents.parquet")
+_MEN = _fxp("mentions.parquet")
+_ENT = _fxp("entities.parquet")
+_GOLD = _fxp("gold_pairs.parquet")
+_QST = _fxp("questions.parquet")
+_KB = _fxp("kb_raw.parquet")
+_SFX = _fxp("sentences_fx.parquet")
+_EMBFX = _fxp("embeddings_fx.parquet")
+_WIK = _fxp("wikidata_plain.jsonl")
+_WEXT = _fxp("wiki_extractor.txt")
+_MJSONL = _fxp("mentions.jsonl")
+_CSTREAM = _fxp("conll_stream.txt")
+_CONLL = _fxp("conll.tsv")
+_JSONL = _ENTITIES_JSONL.replace("'", "''")
 
 
 # ---- generic relational operators (TPC-H-ish tables) ----------------------
@@ -1201,7 +1251,7 @@ def _norm_ladder_oracle() -> str:
     return "\nUNION ALL\n".join(parts)
 
 
-@_q("doc_norm_ladder_dedup", None)  # oracle injected below (shared ladder)
+@_q("doc_norm_ladder_dedup", _norm_ladder_oracle())
 def _doc_norm_ladder_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """Normalization-ladder duplicate yield: exact-dup counts at four
     successively coarser canonical forms (raw -> casefold -> whitespace
@@ -1212,9 +1262,6 @@ def _doc_norm_ladder_dedup(spark: SparkSession, sf: str) -> DataFrame:
     from blink_spark.operators.dedup import norm_ladder_dedup
 
     return norm_ladder_dedup(_t(spark, sf, "documents"))
-
-
-_ORACLES["doc_norm_ladder_dedup"] = _norm_ladder_oracle()
 
 
 def _rake_stoplist() -> str:
@@ -4082,13 +4129,11 @@ def _ann_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---- ER pipeline operators (deterministic fixtures) ------------------------
 
-def _er_oracle_mentions_sql() -> str:
-    doc = _fxp("documents")
-    return f"""
+@_q("er_extract_mentions", f"""
     WITH e AS (
       SELECT doc_id, generate_subscripts(spans, 1) - 1 AS span_idx,
              unnest(spans) AS sp
-      FROM read_parquet('{doc}')
+      FROM read_parquet('{_DOC}')
     ), flat AS (
       SELECT doc_id, span_idx, sp.kind AS kind, sp.text AS text, sp.offset AS off
       FROM e
@@ -4108,10 +4153,7 @@ def _er_oracle_mentions_sql() -> str:
            lower(text) AS mention,
            lower(context_right) AS context_right
     FROM ctx WHERE kind = 'mention'
-    """
-
-
-@_q("er_extract_mentions", None)  # oracle injected in oracle_sql() below
+    """)
 def _er_extract(spark: SparkSession, sf: str) -> DataFrame:
     """S1 mention extraction: posexplode + neighbor-context windows
     (context rebuild analogue, bert_reranking.py:337-353)."""
@@ -4120,7 +4162,15 @@ def _er_extract(spark: SparkSession, sf: str) -> DataFrame:
     return extract_mentions(_fx(spark, "documents"))
 
 
-@_q("er_media_spans", None)
+@_q("er_media_spans", f"""
+          WITH e AS (
+            SELECT doc_id, generate_subscripts(spans, 1) - 1 AS span_idx,
+                   unnest(spans) AS sp
+            FROM read_parquet('{_DOC}')
+          )
+          SELECT doc_id, span_idx, sp.media_ref AS media_ref, sp.offset AS offset
+          FROM e WHERE sp.kind = 'media'
+        """)
 def _er_media(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal plumbing: typed media-span metadata extraction."""
     from blink_spark.operators.extract import media_spans
@@ -4128,7 +4178,16 @@ def _er_media(spark: SparkSession, sf: str) -> DataFrame:
     return media_spans(_fx(spark, "documents"))
 
 
-@_q("er_span_invariant", None)
+@_q("er_span_invariant", f"""
+          SELECT doc_id,
+                 md5(array_to_string(
+                   -- concat_ws, not ||: Spark's concat_ws SKIPS null fields
+                   -- (dropping their separator) while || would poison the
+                   -- element to NULL and array_to_string would drop it whole
+                   [concat_ws(chr(1), sp.kind, sp.text, coalesce(sp.media_ref, ''),
+                              sp.offset::varchar) for sp in spans], chr(2))) AS span_digest
+          FROM read_parquet('{_DOC}')
+        """)
 def _er_span_invariant(spark: SparkSession, sf: str) -> DataFrame:
     """Span-sequence equality invariant surface: per-doc digest of
     (kind, text, media_ref, order) — any pipeline rewrite of spans changes
@@ -4149,7 +4208,22 @@ def _er_span_invariant(spark: SparkSession, sf: str) -> DataFrame:
     return d.select("doc_id", digest.alias("span_digest"))
 
 
-@_q("er_token_pair_blocks", None)
+_TOKS_M = "list_distinct(string_split(mention, ' '))"
+
+
+@_q("er_token_pair_blocks", f"""
+          WITH m AS (SELECT mention_id, list_sort({_TOKS_M}) AS toks FROM read_parquet('{_MEN}')),
+          pairs AS (
+            SELECT mention_id,
+                   CASE WHEN len(toks) >= 2 THEN
+                     flatten([[('tp:' || toks[i] || '|' || toks[j])
+                               for j in range(i+1, len(toks)+1)]
+                              for i in range(1, len(toks)+1)])
+                   ELSE ['t1:' || toks[1]] END AS keys
+            FROM m
+          )
+          SELECT mention_id AS record_id, unnest(keys) AS block_key FROM pairs
+        """)
 def _er_blocks(spark: SparkSession, sf: str) -> DataFrame:
     """S2 token-pair blocking keys."""
     from blink_spark.operators.blocking import token_pair_blocks
@@ -4160,7 +4234,44 @@ def _er_blocks(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_blocking_quality", None)  # oracle injected below (fixture path)
+# the token-pair block assignment `assign` (record_id, block_key):
+# every sorted token pair of a mention, its one token when it has one;
+# `sized` adds each block's size bs
+_BLOCK_ASSIGN_CTES = f"""m AS (SELECT mention_id, list_sort({_TOKS_M}) AS toks FROM read_parquet('{_MEN}')),
+      assign AS (
+        SELECT mention_id AS record_id, unnest(
+          CASE WHEN len(toks) >= 2 THEN
+            flatten([[('tp:' || toks[i] || '|' || toks[j])
+                      for j in range(i+1, len(toks)+1)]
+                     for i in range(1, len(toks)+1)])
+          ELSE ['t1:' || toks[1]] END) AS block_key
+        FROM m
+      )"""
+
+
+@_q("er_blocking_quality", f"""
+          WITH {_BLOCK_ASSIGN_CTES},
+          sizes AS (SELECT block_key, count(*) AS bs FROM assign GROUP BY 1),
+          hist AS (
+            SELECT floor(log2(bs + 0.5))::BIGINT AS size_bucket,
+                   count(*)::BIGINT AS n_blocks,
+                   sum(bs)::BIGINT AS n_records,
+                   sum(bs * (bs - 1) // 2)::BIGINT AS n_pairs
+            FROM sizes GROUP BY 1
+          ),
+          u AS (
+            SELECT * FROM hist
+            UNION ALL
+            SELECT -1::BIGINT, sum(n_blocks)::BIGINT, sum(n_records)::BIGINT,
+                   sum(n_pairs)::BIGINT
+            FROM hist
+          ),
+          n AS (SELECT count(*)::BIGINT AS nm FROM read_parquet('{_MEN}'))
+          SELECT size_bucket, n_blocks, n_records, n_pairs,
+                 round(n_pairs::DOUBLE / (nm::DOUBLE * (nm - 1)::DOUBLE / 2.0), 6)
+                   AS pairs_frac
+          FROM u CROSS JOIN n
+        """)
 def _er_blocking_quality(spark: SparkSession, sf: str) -> DataFrame:
     """Blocking-quality diagnostics: log2-bucketed block-size histogram with
     exact within-block pair counts and a total row whose pairs_frac is the
@@ -4175,7 +4286,21 @@ def _er_blocking_quality(spark: SparkSession, sf: str) -> DataFrame:
     return blocking_quality(blocks, m)
 
 
-@_q("er_candidate_pairs", None)
+_BLOCK_SIZED_CTES = f"""{_BLOCK_ASSIGN_CTES},
+      sized AS (
+        SELECT block_key, record_id,
+               count(*) OVER (PARTITION BY block_key) AS bs
+        FROM assign
+      )"""
+
+
+@_q("er_candidate_pairs", f"""
+          WITH {_BLOCK_SIZED_CTES},
+          kept AS (SELECT * FROM sized WHERE bs <= 4096)
+          SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
+          FROM kept a JOIN kept b
+            ON a.block_key = b.block_key AND a.record_id < b.record_id
+        """)
 def _er_cand_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """S3 skew-aware candidate pair generation (token-pair blocks)."""
     from blink_spark.operators.blocking import token_pair_blocks
@@ -4189,7 +4314,52 @@ def _er_cand_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return pairs
 
 
-@_q("er_scored_gold_pairs", None)
+# Boundary-exact mirror of blink_spark.operators.scoring.score_pairs:
+# Spark decides on (a) normalized-text equality, (b) jaccard ROUNDED to
+# 6dp >= 0.65, (c) banded integer levenshtein dist <= floor(7*maxlen/100).
+# The oracle encodes the IDENTICAL integer/rounded comparisons so both
+# engines agree at threshold boundaries (e.g. d/m exactly 0.07).
+_NORM_M = _norm("mention")
+
+_MATCH_EXPR = (
+    "(ma.norm = mb.norm) OR "
+    "(round(len(list_intersect(ta, tb))::double"
+    " / greatest(len(list_distinct(list_concat(ta, tb))), 1), 6) >= 0.65) OR "
+    "(levenshtein(ma.norm, mb.norm)"
+    " <= floor(greatest(length(ma.norm), length(mb.norm)) * 7 / 100))"
+)
+
+_SCORED_CTE = f"""
+      WITH RECURSIVE m AS (
+        SELECT mention_id, {_NORM_M} AS norm,
+               list_distinct(string_split({_NORM_M}, ' ')) AS t
+        FROM read_parquet('{_MEN}')
+      ),
+      j AS (
+        SELECT g.mention_id_a AS record_id_a, g.mention_id_b AS record_id_b,
+               ma.norm AS mention_a, mb.norm AS mention_b,
+               ma.t AS ta, mb.t AS tb,
+               ({_MATCH_EXPR}) AS is_match,
+               (ma.norm = mb.norm) AS norm_eq,
+               round(len(list_intersect(ta, tb))::double
+                     / greatest(len(list_distinct(list_concat(ta, tb))), 1), 6) AS jaccard,
+               round(1.0 - levenshtein(ma.norm, mb.norm)::double
+                     / greatest(length(ma.norm), length(mb.norm), 1), 6) AS lev_ratio
+        FROM read_parquet('{_GOLD}') g
+        JOIN m ma ON ma.mention_id = g.mention_id_a
+        JOIN m mb ON mb.mention_id = g.mention_id_b
+      )
+    """
+
+
+@_q(
+    "er_scored_gold_pairs",
+    _SCORED_CTE
+    + """
+          SELECT record_id_a, record_id_b, norm_eq, jaccard, lev_ratio, is_match
+          FROM j
+        """,
+)
 def _er_scored(spark: SparkSession, sf: str) -> DataFrame:
     """S4 vectorized pair features on the labeled gold pairs."""
     scored = _scored_gold_pairs(spark)
@@ -4198,7 +4368,27 @@ def _er_scored(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_clusters", None)
+# transitive closure of the scored match graph, the recursive-CTE twin of
+# assign_clusters: `reach` (id, r) over every mention
+_REACH_CTE = f"""
+      {_SCORED_CTE},
+      edges AS (
+        SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
+        UNION
+        SELECT record_id_b, record_id_a FROM j WHERE is_match
+      ),
+      nodes AS (SELECT mention_id AS id FROM read_parquet('{_MEN}')),
+      reach AS (
+        SELECT id, id AS r FROM nodes
+        UNION
+        SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
+      )"""
+
+
+@_q("er_clusters", f"""
+      {_REACH_CTE}
+      SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id
+    """)
 def _er_clusters(spark: SparkSession, sf: str) -> DataFrame:
     """S5 large-star/small-star connected components over match edges
     (oracle: recursive-CTE transitive closure in DuckDB)."""
@@ -4210,7 +4400,21 @@ def _er_clusters(spark: SparkSession, sf: str) -> DataFrame:
     return assign_clusters(m, "mention_id", edges)
 
 
-@_q("er_cluster_stats", None)  # oracle injected below (fixture path)
+@_q("er_cluster_stats", f"""
+          {_REACH_CTE},
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cl GROUP BY 1),
+          hist AS (
+            SELECT cluster_size, count(*)::BIGINT AS n_clusters,
+                   sum(cluster_size)::BIGINT AS n_records
+            FROM sizes GROUP BY 1
+          )
+          SELECT cluster_size::BIGINT AS cluster_size, n_clusters, n_records
+          FROM hist
+          UNION ALL
+          SELECT -1::BIGINT, sum(n_clusters)::BIGINT, sum(n_records)::BIGINT
+          FROM hist
+        """)
 def _er_cluster_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Cluster-size distribution of the linkage output — the standard ER
     quality report (singleton rate, mega-cluster detection): one row per
@@ -4221,7 +4425,42 @@ def _er_cluster_stats(spark: SparkSession, sf: str) -> DataFrame:
     return cluster_size_stats(_er_clusters(spark, sf))
 
 
-@_q("er_bcubed", None)  # oracle injected below (fixture path)
+@_q("er_bcubed", f"""
+          {_REACH_CTE},
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{_MEN}')),
+          g AS (
+            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
+            FROM cl JOIN lab USING (id) GROUP BY 1, 2
+          ),
+          cs AS (SELECT cluster_id, sum(n_cl)::BIGINT AS n_c FROM g GROUP BY 1),
+          ls AS (SELECT label_id, sum(n_cl)::BIGINT AS n_l FROM g GROUP BY 1),
+          t AS (
+            SELECT n_cl,
+                   ((n_cl * n_cl * 1000000000) // n_c)::BIGINT AS pt,
+                   ((n_cl * n_cl * 1000000000) // n_l)::BIGINT AS rt
+            FROM g JOIN cs USING (cluster_id) JOIN ls USING (label_id)
+          ),
+          a AS (
+            SELECT sum(n_cl)::BIGINT AS n_records, sum(pt)::BIGINT AS p_sum,
+                   sum(rt)::BIGINT AS r_sum
+            FROM t
+          ),
+          m0 AS (
+            SELECT n_records, p_sum, r_sum,
+                   round(p_sum::DOUBLE / (n_records::DOUBLE * 1000000000), 6)
+                     AS bcubed_precision,
+                   round(r_sum::DOUBLE / (n_records::DOUBLE * 1000000000), 6)
+                     AS bcubed_recall
+            FROM a
+          )
+          SELECT n_records, p_sum, r_sum, bcubed_precision, bcubed_recall,
+                 CASE WHEN bcubed_precision + bcubed_recall > 0
+                      THEN round(2.0 * bcubed_precision * bcubed_recall
+                                 / (bcubed_precision + bcubed_recall), 6)
+                      ELSE 0.0 END AS bcubed_f1
+          FROM m0
+        """)
 def _er_bcubed(spark: SparkSession, sf: str) -> DataFrame:
     """B-cubed precision/recall/F1 of the S5 linkage clusters against the
     gold entity labels — the per-record cluster metric (Bagga & Baldwin
@@ -4240,7 +4479,28 @@ def _er_bcubed(spark: SparkSession, sf: str) -> DataFrame:
     return bcubed(clusters, labels)
 
 
-@_q("er_cluster_purity", None)  # oracle injected below (fixture path)
+@_q("er_cluster_purity", f"""
+          {_REACH_CTE},
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{_MEN}')),
+          g AS (
+            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
+            FROM cl JOIN lab USING (id) GROUP BY 1, 2
+          ),
+          a AS (
+            SELECT cluster_id,
+                   sum(n_cl)::BIGINT AS n_records,
+                   count(*)::BIGINT AS n_labels,
+                   max(n_cl)::BIGINT AS n_dominant,
+                   sum(n_cl * n_cl)::BIGINT AS sum_sq
+            FROM g GROUP BY 1
+          )
+          SELECT cluster_id, n_records, n_labels, n_dominant,
+                 ((1000000 * n_dominant) // n_records)::BIGINT AS purity_ppm,
+                 (1000000 - (1000000 * sum_sq) // (n_records * n_records))::BIGINT
+                   AS gini_ppm
+          FROM a
+        """)
 def _er_cluster_purity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-cluster purity + Gini impurity of the S5 linkage clusters vs
     the gold entity labels — the cluster-LOCAL quality report next to the
@@ -4256,7 +4516,55 @@ def _er_cluster_purity(spark: SparkSession, sf: str) -> DataFrame:
     return cluster_purity(clusters, labels)
 
 
-@_q("er_modularity", None)  # oracle injected below (fixture path)
+@_q("er_modularity", f"""
+          {_SCORED_CTE},
+          edges0 AS (
+            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
+            UNION
+            SELECT record_id_b, record_id_a FROM j WHERE is_match
+          ),
+          nodes AS (SELECT mention_id AS id FROM read_parquet('{_MEN}')),
+          reach AS (
+            SELECT id, id AS r FROM nodes
+            UNION
+            SELECT reach.id, e.dst FROM reach JOIN edges0 e ON reach.r = e.src
+          ),
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          mm AS (SELECT count(*)::BIGINT AS m_edges FROM raw),
+          bi AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg AS (SELECT u, count(*)::BIGINT AS deg FROM bi GROUP BY 1),
+          dc AS (
+            SELECT cl.cluster_id, sum(deg.deg)::BIGINT AS d_c
+            FROM deg JOIN cl ON cl.id = deg.u GROUP BY 1
+          ),
+          sdc AS (
+            SELECT sum(d_c * d_c)::BIGINT AS sum_dc2,
+                   count(*)::BIGINT AS n_clusters
+            FROM dc
+          ),
+          ein AS (
+            SELECT count(*)::BIGINT AS n_internal
+            FROM raw r JOIN cl a ON a.id = r.u JOIN cl b ON b.id = r.v
+            WHERE a.cluster_id = b.cluster_id
+          )
+          SELECT mm.m_edges, sdc.n_clusters, ein.n_internal,
+                 (CASE WHEN 1000 * (4 * mm.m_edges * ein.n_internal
+                                    - sdc.sum_dc2) >= 0
+                   THEN (1000 * (4 * mm.m_edges * ein.n_internal - sdc.sum_dc2))
+                        // (4 * mm.m_edges * mm.m_edges)
+                   ELSE -((-(1000 * (4 * mm.m_edges * ein.n_internal
+                                     - sdc.sum_dc2)))
+                          // (4 * mm.m_edges * mm.m_edges)) END)::BIGINT
+                   AS modularity_milli
+          FROM mm CROSS JOIN sdc CROSS JOIN ein
+        """)
 def _er_modularity(spark: SparkSession, sf: str) -> DataFrame:
     """Newman modularity of the S5 linkage clusters against the GOLD match
     graph — the degree-corrected structural quality number next to
@@ -4268,7 +4576,42 @@ def _er_modularity(spark: SparkSession, sf: str) -> DataFrame:
     return modularity(_gold_match_edges(spark), _er_clusters(spark, sf))
 
 
-@_q("er_ari", None)  # oracle injected below (fixture path)
+# er_ari: same recursive-CTE clusters as er_bcubed; exact BIGINT pair
+# counts, one double ratio at the end on identical integers.
+@_q("er_ari", f"""
+      {_REACH_CTE},
+      cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{_MEN}')),
+      g AS (
+        SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
+        FROM cl JOIN lab USING (id) GROUP BY 1, 2
+      ),
+      agg AS (
+        SELECT sum(n_cl)::BIGINT AS n_records,
+               sum(n_cl * (n_cl - 1) // 2)::BIGINT AS index_pairs
+        FROM g
+      ),
+      ca AS (
+        SELECT sum(n_c * (n_c - 1) // 2)::BIGINT AS a_pairs
+        FROM (SELECT sum(n_cl)::BIGINT AS n_c FROM g GROUP BY cluster_id)
+      ),
+      cb AS (
+        SELECT sum(n_l * (n_l - 1) // 2)::BIGINT AS b_pairs
+        FROM (SELECT sum(n_cl)::BIGINT AS n_l FROM g GROUP BY label_id)
+      ),
+      x AS (
+        SELECT n_records, index_pairs, a_pairs, b_pairs,
+               (n_records * (n_records - 1) // 2)::BIGINT AS n2
+        FROM agg CROSS JOIN ca CROSS JOIN cb
+      )
+      SELECT n_records, index_pairs, a_pairs, b_pairs,
+             CASE WHEN n2 * (a_pairs + b_pairs) - 2 * a_pairs * b_pairs != 0
+                  THEN round((2 * (n2 * index_pairs - a_pairs * b_pairs))::DOUBLE
+                             / (n2 * (a_pairs + b_pairs)
+                                - 2 * a_pairs * b_pairs)::DOUBLE, 6)
+                  ELSE 0.0 END AS ari
+      FROM x
+    """)
 def _er_ari(spark: SparkSession, sf: str) -> DataFrame:
     """Adjusted Rand Index of the S5 linkage clusters vs the gold entity
     labels (Hubert & Arabie 1985) — the chance-corrected pair-counting
@@ -4346,7 +4689,57 @@ def _er_ari(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_nmi", None)  # oracle injected below (fixture path)
+@_q("er_nmi", f"""
+          {_REACH_CTE},
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{_MEN}')),
+          g AS (
+            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
+            FROM cl JOIN lab USING (id) GROUP BY 1, 2
+          ),
+          tot AS (
+            SELECT sum(n_cl)::BIGINT AS n_records,
+                   sum(n_cl * floor(ln(n_cl::DOUBLE) * 1000000)::BIGINT)::BIGINT
+                     AS s_ij
+            FROM g
+          ),
+          ca AS (
+            SELECT count(*)::BIGINT AS n_clusters,
+                   sum(n_c * floor(ln(n_c::DOUBLE) * 1000000)::BIGINT)::BIGINT
+                     AS s_c
+            FROM (SELECT sum(n_cl)::BIGINT AS n_c FROM g GROUP BY cluster_id)
+          ),
+          cb AS (
+            SELECT count(*)::BIGINT AS n_labels,
+                   sum(n_l * floor(ln(n_l::DOUBLE) * 1000000)::BIGINT)::BIGINT
+                     AS s_l
+            FROM (SELECT sum(n_cl)::BIGINT AS n_l FROM g GROUP BY label_id)
+          ),
+          x AS (
+            SELECT n_records, n_clusters, n_labels, s_ij, s_c, s_l,
+                   (n_records
+                    * floor(ln(n_records::DOUBLE) * 1000000)::BIGINT)::BIGINT AS b0
+            FROM tot CROSS JOIN ca CROSS JOIN cb
+          ),
+          y AS (
+            SELECT n_records, n_clusters, n_labels,
+                   (b0 + s_ij - s_c - s_l)::BIGINT AS mi_n,
+                   (b0 - s_c)::BIGINT AS hc_n,
+                   (b0 - s_l)::BIGINT AS hk_n
+            FROM x
+          )
+          SELECT n_records, n_clusters, n_labels,
+                 (CASE WHEN mi_n >= 0 THEN mi_n // n_records
+                       ELSE -((-mi_n) // n_records) END)::BIGINT AS mi_micro,
+                 (hc_n // n_records)::BIGINT AS h_clusters_micro,
+                 (hk_n // n_records)::BIGINT AS h_labels_micro,
+                 (CASE WHEN hc_n + hk_n = 0 THEN 0
+                       WHEN 2000000 * mi_n >= 0
+                       THEN (2000000 * mi_n) // (hc_n + hk_n)
+                       ELSE -((-(2000000 * mi_n)) // (hc_n + hk_n))
+                  END)::BIGINT AS nmi_ppm
+          FROM y
+        """)
 def _er_nmi(spark: SparkSession, sf: str) -> DataFrame:
     """Normalized mutual information (symmetric V-measure, arithmetic-mean
     normalization) of the S5 linkage clusters vs the gold entity labels —
@@ -4365,7 +4758,36 @@ def _er_nmi(spark: SparkSession, sf: str) -> DataFrame:
     return nmi(clusters, labels)
 
 
-@_q("er_hard_negatives", None)  # oracle injected below (fixture path)
+@_q("er_hard_negatives", f"""
+          WITH mb AS (
+            SELECT mention_id, mention, label_id,
+                   substr(string_split(mention, ' ')[1], 1, 4) AS bk
+            FROM read_parquet('{_MEN}')
+          ),
+          eb AS (
+            SELECT entity_id, lower(title) AS title_l,
+                   substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
+            FROM read_parquet('{_ENT}')
+          ),
+          pairs AS (
+            SELECT mention_id, entity_id,
+                   round(CASE WHEN greatest(length(mn), length(tn)) > 0
+                              THEN 1.0 - levenshtein(mn, tn)::double
+                                   / greatest(length(mn), length(tn))
+                              ELSE 1.0 END, 6) AS sim
+            FROM (SELECT *,
+                    trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
+                    trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
+                  FROM mb JOIN eb USING (bk)
+                  WHERE entity_id != label_id)
+          )
+          SELECT mention_id, entity_id, sim, neg_rank FROM (
+            SELECT mention_id, entity_id, sim,
+                   row_number() OVER (PARTITION BY mention_id
+                                      ORDER BY sim DESC, entity_id ASC) AS neg_rank
+            FROM pairs
+          ) WHERE neg_rank <= 3
+        """)
 def _er_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     """Hard-negative mining for pair-scorer training — the reference's
     crossencoder training set is the biencoder's top-k retrieved candidates
@@ -4401,7 +4823,53 @@ def _er_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_topk_candidates", None)
+def _lev_pairs_cte(name: str) -> str:
+    """mention x entity candidates: first-4-char blocks ``mb``/``eb``
+        and ``name`` (mention_id, entity_id, sim), the normalized
+        lev-ratio mirror of similarity.lev_ratio."""
+    return f"""mb AS (
+        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
+        FROM read_parquet('{_MEN}')
+      ),
+      eb AS (
+        SELECT entity_id, lower(title) AS title_l,
+               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
+        FROM read_parquet('{_ENT}')
+      ),
+      {name} AS (
+        SELECT mention_id, entity_id,
+               round(CASE WHEN greatest(length(mn), length(tn)) > 0
+                          THEN 1.0 - levenshtein(mn, tn)::double
+                               / greatest(length(mn), length(tn))
+                          ELSE 1.0 END, 6) AS sim
+        FROM (SELECT *,
+                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
+                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
+              FROM mb JOIN eb USING (bk))
+      )"""
+
+
+# er_topk_candidates: the top-3 lev-ratio candidates per mention;
+# softmax_confidence nests the same select as its `topk` CTE
+_TOPK_CTES = f"""
+      WITH {_lev_pairs_cte("pairs")}"""
+
+_TOPK_SELECT = """SELECT mention_id, entity_id, sim, rank FROM (
+        SELECT mention_id, entity_id, sim,
+               row_number() OVER (PARTITION BY mention_id
+                                  ORDER BY sim DESC, entity_id ASC) AS rank
+        FROM pairs
+      ) WHERE rank <= 3"""
+
+_TOPK_SQL = f"""{_TOPK_CTES}
+      {_TOPK_SELECT}
+    """
+
+
+@_q(
+    "er_topk_candidates",
+    _TOPK_SQL,
+)
 def _er_topk(spark: SparkSession, sf: str) -> DataFrame:
     """Top-k entity candidates per mention within first-token blocks — the
     reference's --fast biencoder mode (main_dense.py:479-498), tie rule
@@ -4431,7 +4899,32 @@ def _er_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_recall_at_k", None)
+@_q("er_recall_at_k", f"""
+          WITH {_lev_pairs_cte("pairs")},
+          ranked AS (
+            SELECT mention_id, entity_id,
+                   row_number() OVER (PARTITION BY mention_id
+                                      ORDER BY sim DESC, entity_id ASC) AS rank
+            FROM pairs
+          ),
+          topk AS (SELECT * FROM ranked WHERE rank <= 3),
+          gold_rank AS (
+            SELECT t.mention_id, min(t.rank) AS gold_rank
+            FROM topk t JOIN read_parquet('{_MEN}') g USING (mention_id)
+            WHERE t.entity_id = g.label_id
+            GROUP BY t.mention_id
+          ),
+          per_group AS (
+            SELECT m.mention_id, gr.gold_rank
+            FROM (SELECT DISTINCT mention_id FROM topk) m
+            LEFT JOIN gold_rank gr USING (mention_id)
+          )
+          SELECT
+            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 1 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_1,
+            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 2 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_2,
+            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 3 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_3
+          FROM per_group
+        """)
 def _er_recall(spark: SparkSession, sf: str) -> DataFrame:
     """recall@k curve of the top-k candidates vs gold labels
     (/root/reference/blink/main_dense.py:459-477)."""
@@ -4443,7 +4936,27 @@ def _er_recall(spark: SparkSession, sf: str) -> DataFrame:
     return recall_at_k(joined, "label_id", "entity_id", "mention_id", "rank", [1, 2, 3])
 
 
-@_q("er_pairwise_f1", None)
+@_q("er_pairwise_f1", f"""
+      {_REACH_CTE},
+      cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+      verdict AS (
+        SELECT g.same_entity, (ca.cluster_id = cb.cluster_id) AS pred
+        FROM read_parquet('{_GOLD}') g
+        JOIN cl ca ON ca.id = g.mention_id_a
+        JOIN cl cb ON cb.id = g.mention_id_b
+      ),
+      counts AS (
+        SELECT cast(sum(CASE WHEN pred AND same_entity THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+               cast(sum(CASE WHEN pred AND NOT same_entity THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+               cast(sum(CASE WHEN NOT pred AND same_entity THEN 1 ELSE 0 END) AS BIGINT) AS fn
+        FROM verdict
+      )
+      SELECT tp, fp, fn,
+             round(tp / greatest(tp + fp, 1), 6) AS precision,
+             round(tp / greatest(tp + fn, 1), 6) AS recall,
+             round(2.0 * tp / greatest(2 * tp + fp + fn, 1), 6) AS f1
+      FROM counts
+    """)
 def _er_f1(spark: SparkSession, sf: str) -> DataFrame:
     """Headline metric: pairwise P/R/F1 at shared blocking key."""
     from blink_spark.operators.eval import pairwise_f1
@@ -4464,7 +4977,20 @@ def _er_f1(spark: SparkSession, sf: str) -> DataFrame:
 
 @_q(
     "softmax_confidence",
-    None,  # oracle injected below (needs fixture paths)
+    f"""{_TOPK_CTES},
+      topk AS (
+        {_TOPK_SELECT}
+      )
+      , withmax AS (
+        SELECT mention_id, entity_id, rank, sim,
+               max(sim) OVER (PARTITION BY mention_id) AS mx
+        FROM topk
+      )
+      SELECT mention_id, entity_id, rank,
+             round(exp(sim - mx)
+                   / sum(exp(sim - mx)) OVER (PARTITION BY mention_id), 6) AS prob
+      FROM withmax
+    """,
 )
 def _softmax_confidence(spark: SparkSession, sf: str) -> DataFrame:
     """Softmax confidence over each mention's candidate scores
@@ -4481,7 +5007,31 @@ def _softmax_confidence(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_span_enumeration", None)
+def _span_enum_ctes(max_len: int) -> str:
+    return f"""
+      t AS (
+        SELECT id, regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+') AS toks
+        FROM read_parquet('{_QST}')
+      ),
+      s AS (
+        SELECT id, unnest(flatten([
+          [{{'start': s, 'end_excl': s + l,
+             'span_text': array_to_string(toks[s+1:s+l], ' ')}}
+           for l in range(1, least({max_len}, len(toks) - s) + 1)]
+          for s in range(0, len(toks))])) AS sp
+        FROM t
+      ),
+      spans AS (
+        SELECT id AS record_id, sp.start AS start, sp.end_excl AS end_excl,
+               sp.span_text AS span_text
+        FROM s
+      )"""
+
+
+@_q(
+    "er_span_enumeration",
+    f"WITH {_span_enum_ctes(3)} SELECT * FROM spans",
+)
 def _er_span_enum(spark: SparkSession, sf: str) -> DataFrame:
     """Enumerate all token spans (len<=3) of ELQ-style question text
     (/root/reference/elq/biencoder/biencoder.py:103-119)."""
@@ -4491,7 +5041,17 @@ def _er_span_enum(spark: SparkSession, sf: str) -> DataFrame:
     return enumerate_token_spans(q, "id", "text", max_len=3)
 
 
-@_q("er_question_mentions", None)
+@_q("er_question_mentions", f"""
+      SELECT id,
+             generate_subscripts(mentions, 1) - 1 AS mention_idx,
+             unnest(mentions)[1] AS start,
+             unnest(mentions)[2] - 1 AS end_incl,
+             unnest(label_id) AS label_id,
+             substring(text, unnest(mentions)[1] + 1,
+                       unnest(mentions)[2] - unnest(mentions)[1]) AS surface,
+             unnest(entity) AS entity
+      FROM read_parquet('{_QST}')
+    """)
 def _er_question_mentions(spark: SparkSession, sf: str) -> DataFrame:
     """Explode ELQ parallel arrays; convert exclusive char bounds to
     inclusive; project the surface by substring
@@ -4516,7 +5076,93 @@ def _er_question_mentions(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_span_f1_weak_strong", None)  # oracle injected below (fixture path)
+@_q("er_span_f1_weak_strong", f"""
+      WITH RECURSIVE qm AS (
+        SELECT id,
+               generate_subscripts(mentions, 1) - 1 AS mention_idx,
+               unnest(entity) AS entity,
+               unnest(mentions)[1] AS start,
+               unnest(mentions)[2] AS e
+        FROM read_parquet('{_QST}')
+      ),
+      gold AS (SELECT id, entity, start, e FROM qm),
+      pm AS (
+        SELECT *, ('0x' || substr(md5(id || ':' || mention_idx::varchar), 1, 4))::INT
+                    % 4 AS mode
+        FROM qm
+      ),
+      pred AS (
+        SELECT id,
+               CASE WHEN mode = 2 THEN entity || '_wrong' ELSE entity END AS entity,
+               start,
+               CASE WHEN mode = 1 THEN e - 1 ELSE e END AS e
+        FROM pm WHERE mode <> 0
+      ),
+      gs AS (
+        SELECT id, entity, start, e,
+               row_number() OVER (PARTITION BY id ORDER BY e, start, entity) AS i
+        FROM gold
+      ),
+      ps AS (
+        SELECT id, entity, start, e,
+               row_number() OVER (PARTITION BY id ORDER BY e, start, entity) AS j
+        FROM pred
+      ),
+      cells AS (
+        SELECT g.id, g.i, p.j,
+               (lower(g.entity) = lower(p.entity))
+                 AND NOT (g.start >= p.e OR p.start >= g.e) AS w,
+               (lower(g.entity) = lower(p.entity))
+                 AND g.start = p.start AND g.e = p.e AS s
+        FROM gs g JOIN ps p USING (id)
+      ),
+      dims AS (SELECT id, max(i) AS n, max(j) AS m FROM cells GROUP BY id),
+      -- LCS DP unrolled cell by cell (row-major): state carries the flat dp
+      -- matrices; per-question span counts are tiny so depth n*m is small
+      walk AS (
+        SELECT id, 0::BIGINT AS k, CAST([] AS BIGINT[]) AS dpw,
+               CAST([] AS BIGINT[]) AS dps, n, m
+        FROM dims
+        UNION ALL
+        SELECT w.id, w.k + 1,
+               list_append(w.dpw, CASE WHEN c.w
+                 THEN (CASE WHEN c.i > 1 AND c.j > 1
+                            THEN w.dpw[(c.i-2)*w.m + c.j - 1] ELSE 0 END) + 1
+                 ELSE greatest(
+                        CASE WHEN c.i > 1 THEN w.dpw[(c.i-2)*w.m + c.j] ELSE 0 END,
+                        CASE WHEN c.j > 1 THEN w.dpw[(c.i-1)*w.m + c.j - 1] ELSE 0 END)
+                 END),
+               list_append(w.dps, CASE WHEN c.s
+                 THEN (CASE WHEN c.i > 1 AND c.j > 1
+                            THEN w.dps[(c.i-2)*w.m + c.j - 1] ELSE 0 END) + 1
+                 ELSE greatest(
+                        CASE WHEN c.i > 1 THEN w.dps[(c.i-2)*w.m + c.j] ELSE 0 END,
+                        CASE WHEN c.j > 1 THEN w.dps[(c.i-1)*w.m + c.j - 1] ELSE 0 END)
+                 END),
+               w.n, w.m
+        FROM walk w
+        JOIN cells c ON c.id = w.id
+          AND c.i = (w.k // w.m + 1) AND c.j = (w.k % w.m + 1)
+        WHERE w.k < w.n * w.m
+      ),
+      finals AS (
+        SELECT id, dpw[n*m] AS wtp, dps[n*m] AS stp FROM walk WHERE k = n*m
+      ),
+      tot AS (
+        SELECT (SELECT cast(coalesce(sum(wtp), 0) AS BIGINT) FROM finals) AS weak_tp,
+               (SELECT cast(coalesce(sum(stp), 0) AS BIGINT) FROM finals) AS strong_tp,
+               (SELECT count(*) FROM gold) AS n_gold,
+               (SELECT count(*) FROM pred) AS n_pred
+      )
+      SELECT weak_tp, strong_tp, n_gold, n_pred,
+        round(2 * (weak_tp / greatest(n_pred, 1)) * (weak_tp / greatest(n_gold, 1))
+              / greatest(weak_tp / greatest(n_pred, 1)
+                         + weak_tp / greatest(n_gold, 1), 1e-12), 6) AS weak_f1,
+        round(2 * (strong_tp / greatest(n_pred, 1)) * (strong_tp / greatest(n_gold, 1))
+              / greatest(strong_tp / greatest(n_pred, 1)
+                         + strong_tp / greatest(n_gold, 1), 1e-12), 6) AS strong_f1
+      FROM tot
+    """)
 def _er_span_f1(spark: SparkSession, sf: str) -> DataFrame:
     """Weak/strong span F1 via per-doc LCS DP — the reference's headline ELQ
     metric (/root/reference/elq/vcg_utils/measures.py:9-88, driver sum at
@@ -4561,7 +5207,27 @@ def _er_span_f1(spark: SparkSession, sf: str) -> DataFrame:
     return span_f1_weak_strong(gold, pred, group_col="id")
 
 
-@_q("er_two_key_fallback_join", None)
+@_q("er_two_key_fallback_join", f"""
+      WITH m AS (SELECT mention_id, mention FROM read_parquet('{_MEN}')),
+      bt AS (SELECT lower(title) AS mention, min(entity_id) AS eid_title
+             FROM read_parquet('{_ENT}') GROUP BY 1),
+      bi AS (SELECT string_split(lower(title), ' ')[-1] AS idtok,
+                    min(entity_id) AS eid_idtok
+             FROM read_parquet('{_ENT}') GROUP BY 1),
+      j AS (
+        SELECT m.mention_id,
+               bt.eid_title, bi.eid_idtok,
+               coalesce(bt.eid_title, bi.eid_idtok) AS resolved,
+               CASE WHEN bt.eid_title IS NOT NULL THEN 'title'
+                    WHEN bi.eid_idtok IS NOT NULL THEN 'idtok'
+                    ELSE 'none' END AS match_source
+        FROM m
+        LEFT JOIN bt USING (mention)
+        LEFT JOIN bi ON bi.idtok = string_split(m.mention, ' ')[-1]
+      )
+      SELECT match_source, count(*) AS n, count(DISTINCT resolved) AS n_entities
+      FROM j GROUP BY 1
+    """)
 def _er_two_key_join(spark: SparkSession, sf: str) -> DataFrame:
     """Two-key left join with coalesce + match-source counters — the
     wikipedia↔wikidata linkage shape
@@ -4598,7 +5264,31 @@ def _er_two_key_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_inverted_index_topk", None)
+@_q("er_inverted_index_topk", f"""
+      WITH inv AS (
+        SELECT entity_id, num_incoming_links,
+               unnest(list_distinct(string_split(trim(regexp_replace(lower(title), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok
+        FROM read_parquet('{_ENT}')
+      ),
+      mt AS (
+        SELECT mention_id,
+               unnest(list_distinct(string_split(trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok
+        FROM read_parquet('{_MEN}')
+      ),
+      hits AS (
+        SELECT mention_id, entity_id,
+               count(*)::double
+                 + round(ln(1 + max(num_incoming_links)) * 0.1, 6) AS ir_score
+        FROM mt JOIN inv USING (tok)
+        GROUP BY mention_id, entity_id
+      )
+      SELECT mention_id, entity_id, round(ir_score, 6) AS ir_score, rank FROM (
+        SELECT mention_id, entity_id, ir_score,
+               row_number() OVER (PARTITION BY mention_id
+                                  ORDER BY ir_score DESC, entity_id ASC) AS rank
+        FROM hits
+      ) WHERE rank <= 5
+    """)
 def _er_inverted_index(spark: SparkSession, sf: str) -> DataFrame:
     """IR-style candidate generation: token inverted index over entity
     titles + log1p(num_incoming_links) boost, window top-5 — the Solr BM25
@@ -4708,7 +5398,16 @@ def _set_ops(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---- wikidata / sentences / IR / coref / eval coverage batch ---------------
 
-@_q("wikidata_scan", None)  # oracle injected below (fixture path)
+@_q("wikidata_scan", f"""
+      SELECT id AS wikidata_id,
+             sitelinks.enwiki.title AS title,
+             labels.en.value AS wikidata_label,
+             descriptions.en.value AS description,
+             coalesce(len(aliases.en), 0) AS n_aliases,
+             sitelinks.enwikiquote.title IS NOT NULL AS has_quote
+      FROM read_json('{_WIK}')
+      WHERE sitelinks.enwiki.title IS NOT NULL
+    """)
 def _wikidata_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Wikidata dump scan: bz2 lines with array brackets + trailing commas,
     enwiki-sitelink filter, nested en label/alias/description projection
@@ -4726,7 +5425,18 @@ def _wikidata_scan(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("doc_sentences", None)  # oracle injected below (fixture path)
+@_q("doc_sentences", f"""
+      WITH s AS (
+        SELECT sent_id,
+               list_filter([trim(x) for x in string_split(
+                 regexp_replace(text, '([.!?])[\\t\\n\\x0B\\f\\r ]+', '\\1' || chr(1), 'g'), chr(1))],
+                 t -> t <> '') AS sents
+        FROM read_parquet('{_SFX}')
+      )
+      SELECT sent_id, len(sents) AS n_sentences,
+             array_to_string(list_slice(sents, 1, 2), ' ') AS first_two
+      FROM s
+    """)
 def _doc_sentences(spark: SparkSession, sf: str) -> DataFrame:
     """Sentence split + first-N-sentences projection
     (/root/reference/blink/utils.py:15-30, process_intro_sents.py:61-64)."""
@@ -4740,7 +5450,31 @@ def _doc_sentences(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_threshold_prune", None)  # oracle injected below (fixture path)
+_SPAN_SCORE = (
+    "length(span_text)::double"
+    " + (('0x' || substr(md5(span_text), 1, 4))::INT % 97)::double / 100.0"
+)
+
+
+@_q("er_threshold_prune", f"""
+      WITH {{span_ctes}},
+      scored AS (
+        SELECT record_id, start, end_excl, span_text, {_SPAN_SCORE} AS score
+        FROM spans
+      ),
+      st AS (
+        SELECT *,
+               sum(CASE WHEN score > 14.0 THEN 1 ELSE 0 END)
+                 OVER (PARTITION BY record_id) AS np,
+               row_number() OVER (PARTITION BY record_id
+                                  ORDER BY score DESC, start, end_excl) AS rk
+        FROM scored
+      )
+      SELECT record_id, start, end_excl, span_text, score FROM st
+      WHERE score > 14.0 OR (np = 0 AND rk <= 2)
+    """.format(
+        span_ctes=_span_enum_ctes(2)
+    ))
 def _er_threshold_prune(spark: SparkSession, sf: str) -> DataFrame:
     """Threshold pruning with top-K fallback (prune_ctxt_mentions,
     /root/reference/elq/biencoder/biencoder.py:318-363): keep spans whose
@@ -4768,7 +5502,56 @@ def _scored_question_spans(spark: SparkSession) -> DataFrame:
     )
 
 
-@_q("er_bm25_topk", None)  # oracle injected below (fixture path)
+_BM25_SQL = f"""
+      WITH ents AS (SELECT * FROM read_parquet('{_ENT}')),
+      f AS (
+        SELECT entity_id, unnest(list_distinct(string_split(trim(regexp_replace(lower(title), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok,
+               1.0 AS w
+        FROM ents
+        UNION ALL
+        SELECT entity_id,
+               unnest(list_distinct(flatten([string_split(lower(a), ' ') for a in aliases]))),
+               0.7
+        FROM ents
+        UNION ALL
+        SELECT entity_id, unnest(list_distinct(string_split(trim(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))), 0.5
+        FROM ents
+      ),
+      best AS (SELECT entity_id, tok, max(w) AS w FROM f GROUP BY 1, 2),
+      dfk AS (SELECT tok, count(*) AS df FROM best GROUP BY 1),
+      tot AS (SELECT count(*) AS n_ents FROM ents),
+      inv AS (
+        SELECT b.entity_id, b.tok,
+               round(ln(n_ents / df) * w * 1000)::BIGINT AS milli
+        FROM best b JOIN dfk USING (tok) CROSS JOIN tot
+      ),
+      boost AS (
+        SELECT entity_id, round(ln(1 + num_incoming_links) * 100)::BIGINT AS bm
+        FROM ents
+      ),
+      mt AS (SELECT mention_id, unnest({_toks('mention')}) AS tok
+             FROM read_parquet('{_MEN}')),
+      hits AS (
+        SELECT mention_id, entity_id, cast(sum(milli) AS BIGINT) AS tok_milli
+        FROM mt JOIN inv USING (tok) GROUP BY 1, 2
+      ),
+      sc AS (
+        SELECT mention_id, h.entity_id, tok_milli + bm AS score_milli
+        FROM hits h JOIN boost USING (entity_id)
+      )
+      SELECT mention_id, entity_id, score_milli, rank FROM (
+        SELECT mention_id, entity_id, score_milli,
+               row_number() OVER (PARTITION BY mention_id
+                                  ORDER BY score_milli DESC, entity_id ASC) AS rank
+        FROM sc
+      ) WHERE rank <= 5
+    """
+
+
+@_q(
+    "er_bm25_topk",
+    _BM25_SQL,
+)
 def _er_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """True BM25/edismax-style candidate generation: idf-weighted multi-field
     token match (title^1.0, aliases^0.7, description^0.5 — the edismax field
@@ -4833,7 +5616,33 @@ def _er_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_rrf_fusion", None)  # oracle injected below (fixture path)
+@_q("er_rrf_fusion", f"""
+          WITH lex AS ({_TOPK_SQL}),
+          bm AS ({_BM25_SQL}),
+          j AS (
+            SELECT coalesce(l.mention_id, b.mention_id) AS mention_id,
+                   coalesce(l.entity_id, b.entity_id) AS entity_id,
+                   l.rank::BIGINT AS lex_rank, b.rank::BIGINT AS bm25_rank
+            FROM lex l FULL JOIN bm b
+              ON l.mention_id = b.mention_id AND l.entity_id = b.entity_id
+          ),
+          s AS (
+            SELECT mention_id, entity_id, lex_rank, bm25_rank,
+                   (coalesce(1000000 // (60 + lex_rank), 0)
+                    + coalesce(1000000 // (60 + bm25_rank), 0))::BIGINT
+                     AS rrf_micro
+            FROM j
+          )
+          SELECT mention_id, entity_id, lex_rank, bm25_rank, rrf_micro,
+                 fused_rank
+          FROM (
+            SELECT *, row_number() OVER (PARTITION BY mention_id
+                                         ORDER BY rrf_micro DESC,
+                                                  entity_id ASC)::BIGINT
+                        AS fused_rank
+            FROM s
+          ) WHERE fused_rank <= 3
+        """)
 def _er_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009, k=60) of the two
     candidate rankers — lexical lev-similarity top-k and BM25 top-k: the
@@ -4869,7 +5678,72 @@ def _er_rrf_fusion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_coref_merge", None)  # oracle injected below (fixture path)
+_SOFTMAX_CTES = f"""
+      {_lev_pairs_cte("lpairs")},
+      ltopk AS (
+        SELECT mention_id, entity_id, sim, rank FROM (
+          SELECT mention_id, entity_id, sim,
+                 row_number() OVER (PARTITION BY mention_id
+                                    ORDER BY sim DESC, entity_id ASC) AS rank
+          FROM lpairs
+        ) WHERE rank <= 3
+      ),
+      cands AS (
+        SELECT mention_id, entity_id, rank,
+               round(exp(sim - mx) / sum(exp(sim - mx))
+                       OVER (PARTITION BY mention_id), 6) AS prob
+        FROM (
+          SELECT mention_id, entity_id, rank, sim,
+                 max(sim) OVER (PARTITION BY mention_id) AS mx
+          FROM ltopk
+        )
+      )"""
+
+
+@_q("er_coref_merge", f"""
+      WITH {_SOFTMAX_CTES},
+      mm AS (SELECT mention_id, doc_id, mention FROM read_parquet('{_MEN}')),
+      allm AS (
+        SELECT mention_id, doc_id, lower(mention) AS mention FROM mm
+        UNION ALL
+        SELECT mention_id || ':t0', doc_id, string_split(lower(mention), ' ')[1] FROM mm
+      ),
+      partnerids AS (
+        SELECT c.mention_id FROM cands c
+        WHERE c.rank = 1 AND c.entity_id % 3 = 0
+      ),
+      cur AS (SELECT mention_id AS cur_id, doc_id AS doc, mention AS cur_text FROM allm),
+      oth AS (
+        SELECT mention_id AS partner_id, doc_id AS doc, mention AS partner_text
+        FROM allm WHERE mention_id IN (SELECT mention_id FROM partnerids)
+      ),
+      prs AS (
+        SELECT DISTINCT cur_id, partner_id
+        FROM cur JOIN oth USING (doc)
+        WHERE strpos(partner_text, cur_text) > 0
+          AND partner_text <> cur_text
+          AND (strpos(partner_text, cur_text) = 1
+               OR substr(partner_text, strpos(partner_text, cur_text) - 1, 1) = ' ')
+          AND (strpos(partner_text, cur_text) + length(cur_text)
+                 = length(partner_text) + 1
+               OR substr(partner_text,
+                         strpos(partner_text, cur_text) + length(cur_text), 1) = ' ')
+      ),
+      np AS (SELECT cur_id, count(*) AS n_partners FROM prs GROUP BY 1),
+      cm AS (
+        SELECT mention_id AS partner_id, entity_id,
+               round(prob * 1000000)::BIGINT AS p_micro
+        FROM cands
+      ),
+      merged AS (
+        SELECT prs.cur_id, cm.entity_id, cast(sum(p_micro) AS BIGINT) AS sum_micro
+        FROM prs JOIN cm USING (partner_id) GROUP BY 1, 2
+      )
+      SELECT m.cur_id AS mention_id, m.entity_id,
+             round(m.sum_micro / (np.n_partners * 1000000.0), 6) AS merged_p,
+             np.n_partners
+      FROM merged m JOIN np ON np.cur_id = m.cur_id
+    """)
 def _er_coref_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Coreference theta self-join + candidate-distribution merge
     (/root/reference/blink/candidate_retrieval/dataset.py:153-187): short
@@ -4895,7 +5769,27 @@ def _er_coref_merge(spark: SparkSession, sf: str) -> DataFrame:
     return coref_candidate_merge(all_m, cands, persons)
 
 
-@_q("er_mrr", None)  # oracle injected below (fixture path)
+@_q("er_mrr", f"""
+          WITH {_SOFTMAX_CTES},
+          gr AS (
+            SELECT t.mention_id,
+                   coalesce(min(CASE WHEN t.entity_id = g.label_id
+                                     THEN t.rank END), -1) AS gold_rank
+            FROM ltopk t JOIN read_parquet('{_MEN}') g USING (mention_id)
+            GROUP BY 1
+          ),
+          rr AS (
+            SELECT gold_rank,
+                   CASE WHEN gold_rank > 0 THEN 1000000 // gold_rank
+                        ELSE 0 END AS rr_micro
+            FROM gr
+          )
+          SELECT count(*)::BIGINT AS n_mentions,
+                 sum(CASE WHEN gold_rank > 0 THEN 1 ELSE 0 END)::BIGINT AS n_hits,
+                 sum(rr_micro)::BIGINT AS sum_rr_micro,
+                 (sum(rr_micro)::BIGINT // count(*))::BIGINT AS mrr_micro
+          FROM rr
+        """)
 def _er_mrr(spark: SparkSession, sf: str) -> DataFrame:
     """Mean reciprocal rank of the gold entity over the top-k candidates —
     the single-number retrieval summary next to recall@k and the rank
@@ -4929,7 +5823,26 @@ def _er_mrr(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_rank_histogram", None)  # oracle injected below (fixture path)
+@_q("er_rank_histogram", f"""
+      WITH {_SOFTMAX_CTES},
+      gr AS (
+        SELECT t.mention_id,
+               coalesce(min(CASE WHEN t.entity_id = g.label_id THEN t.rank END), -1)
+                 AS gold_rank
+        FROM ltopk t JOIN read_parquet('{_MEN}') g USING (mention_id)
+        GROUP BY 1
+      ),
+      hist AS (SELECT gold_rank, count(*) AS n FROM gr GROUP BY 1),
+      tot AS (SELECT count(*) AS total FROM gr)
+      SELECT gold_rank, n,
+             cast(sum(CASE WHEN gold_rank > 0 THEN n ELSE 0 END)
+                    OVER (ORDER BY gold_rank ASC ROWS UNBOUNDED PRECEDING) AS BIGINT)
+               AS cum_n,
+             round(cast(sum(CASE WHEN gold_rank > 0 THEN n ELSE 0 END)
+                    OVER (ORDER BY gold_rank ASC ROWS UNBOUNDED PRECEDING) AS BIGINT)
+                   / total, 6) AS cum_share
+      FROM hist CROSS JOIN tot
+    """)
 def _er_rank_histogram(spark: SparkSession, sf: str) -> DataFrame:
     """hit@rank histogram + cumulative recall-vs-rank curve
     (/root/reference/blink/biencoder/zeshel_utils.py:70-99 and
@@ -4970,7 +5883,24 @@ def _gold_ranks(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_world_macro_micro", None)  # oracle injected below (fixture path)
+@_q("er_world_macro_micro", f"""
+      WITH {_SOFTMAX_CTES},
+      r1 AS (SELECT mention_id, entity_id FROM ltopk WHERE rank = 1),
+      p AS (
+        SELECT r1.entity_id, g.label_id, g.world
+        FROM r1 JOIN read_parquet('{_MEN}') g USING (mention_id)
+      ),
+      pw AS (
+        SELECT world,
+               avg(CASE WHEN entity_id = label_id THEN 1.0 ELSE 0.0 END) AS acc
+        FROM p GROUP BY 1
+      )
+      SELECT 'macro' AS kind, round(avg(acc), 6) AS acc FROM pw
+      UNION ALL
+      SELECT 'micro',
+             round(avg(CASE WHEN entity_id = label_id THEN 1.0 ELSE 0.0 END), 6)
+      FROM p
+    """)
 def _er_world_macro_micro(spark: SparkSession, sf: str) -> DataFrame:
     """Per-world (zeshel) macro vs global micro accuracy of the rank-1
     candidate (/root/reference/blink/crossencoder/train_cross.py:104-127,
@@ -4983,7 +5913,22 @@ def _er_world_macro_micro(spark: SparkSession, sf: str) -> DataFrame:
     return macro_micro_accuracy(preds, "label_id", "entity_id", "world")
 
 
-@_q("er_span_embedding_agg", None)  # oracle injected below (fixture path)
+def _emb_dim_sql(d: int) -> str:
+    return (
+        f"round(cast(list_sum([(('0x' || substr(md5('emb{d}:' || t), 1, 4))::INT"
+        f" - 32768)::BIGINT for t in tks]) AS BIGINT)::double / len(tks), 6)"
+        f" AS e{d}"
+    )
+
+
+@_q("er_span_embedding_agg", f"""
+      WITH {{span_ctes}},
+      ex AS (SELECT record_id, start, end_excl, string_split(span_text, ' ') AS tks
+             FROM spans)
+      SELECT record_id, start, end_excl,
+             {', '.join(_emb_dim_sql(d) for d in range(4))}
+      FROM ex
+    """.format(span_ctes=_span_enum_ctes(2)))
 def _er_span_embedding_agg(spark: SparkSession, sf: str) -> DataFrame:
     """Span embedding aggregation — average the per-token embeddings across
     each span (the 'all_avg' mode of /root/reference/elq/biencoder/
@@ -5011,7 +5956,67 @@ def _er_span_embedding_agg(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("ann_ivf_recall", None)  # oracle injected below (relational codebook)
+_COS_QI = _COS_EXACT_SQL.format(a="qv", b="iv")
+
+_COS_IC = _COS_EXACT_SQL.format(a="iv", b="cv")
+
+_COS_QC = _COS_EXACT_SQL.format(a="qv", b="cv")
+
+_IVF_SQL = f"""
+    WITH e AS (SELECT vec_id, {_q_emb('embedding')} AS q FROM embeddings),
+    qs AS (SELECT vec_id AS query_id, q AS qv FROM e WHERE vec_id < 64),
+    it AS (SELECT vec_id AS item_id, q AS iv FROM e),
+    cent AS (SELECT vec_id AS cid, q AS cv FROM e ORDER BY vec_id ASC LIMIT 16),
+    assigned AS (
+      SELECT item_id, iv, cid FROM (
+        SELECT i.item_id, i.iv, c.cid,
+               row_number() OVER (PARTITION BY i.item_id
+                                  ORDER BY {_COS_IC} DESC, c.cid ASC) AS crank
+        FROM it i CROSS JOIN cent c
+      ) WHERE crank = 1
+    ),
+    probes AS (
+      SELECT query_id, qv, cid FROM (
+        SELECT s.query_id, s.qv, c.cid,
+               row_number() OVER (PARTITION BY s.query_id
+                                  ORDER BY {_COS_QC} DESC, c.cid ASC) AS crank
+        FROM qs s CROSS JOIN cent c
+      ) WHERE crank <= 4
+    ),
+    ap_scored AS (
+      SELECT DISTINCT p.query_id, a.item_id,
+             {_COS_EXACT_SQL.format(a="p.qv", b="a.iv")} AS score
+      FROM probes p JOIN assigned a USING (cid)
+      WHERE a.item_id <> p.query_id
+    ),
+    ap_top AS (
+      SELECT query_id, item_id FROM (
+        SELECT query_id, item_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY score DESC, item_id ASC) AS rank
+        FROM ap_scored
+      ) WHERE rank <= 10
+    ),
+    ex_scored AS (
+      SELECT query_id, item_id, {_COS_QI} AS score
+      FROM qs CROSS JOIN it WHERE item_id <> query_id
+    ),
+    ex_top AS (
+      SELECT query_id, item_id FROM (
+        SELECT query_id, item_id,
+               row_number() OVER (PARTITION BY query_id
+                                  ORDER BY score DESC, item_id ASC) AS rank
+        FROM ex_scored
+      ) WHERE rank <= 10
+    )
+    {_RECALL_SQL}
+    """
+
+
+@_q(
+    "ann_ivf_recall",
+    _IVF_SQL,
+)
 def _ann_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     """IVF coarse-quantizer ANN (nlist cells + nprobe probes,
     /root/reference/elq/index/faiss_indexer.py:71-91) vs exact top-k recall.
@@ -5030,7 +6035,17 @@ def _ann_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     return ann_recall_vs_exact(approx, exact)
 
 
-@_q("ann_nprobe_sweep", None)  # oracle injected below (relational codebook)
+def _ivf_sql_at(nprobe: int) -> str:
+    return _IVF_SQL.replace("crank <= 4", f"crank <= {nprobe}")
+
+
+@_q(
+    "ann_nprobe_sweep",
+    " UNION ALL ".join(
+        f"SELECT {np}::BIGINT AS nprobe, * FROM ({_ivf_sql_at(np)})"
+        for np in (1, 2, 4)
+    ),
+)
 def _ann_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
     """IVF recall-vs-nprobe tuning curve (nprobe ∈ {1,2,4} at 16 cells) —
     the probe-budget sweep a FAISS operator runs before fixing nprobe
@@ -5123,7 +6138,39 @@ def _embedding_matryoshka_recall(spark: SparkSession, sf: str) -> DataFrame:
     return out
 
 
-@_q("er_span_scores", None)  # oracle injected below (fixture path)
+def _logit_sql(kind: str) -> str:
+    return (
+        f"(('0x' || substr(md5('{kind}:' || tok || ':' || pos::varchar), 1, 4))"
+        f"::BIGINT % 2001 - 1000)"
+    )
+
+
+@_q("er_span_scores", f"""
+      WITH {{span_ctes}},
+      tk AS (
+        SELECT id AS record_id,
+               generate_subscripts(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+'), 1) - 1
+                 AS pos,
+               unnest(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+')) AS tok
+        FROM read_parquet('{_QST}')
+      ),
+      lg AS (
+        SELECT record_id, pos, {_logit_sql('st')} AS start_l,
+               {_logit_sql('en')} AS end_l, {_logit_sql('in')} AS in_l
+        FROM tk
+      ),
+      cm AS (
+        SELECT *, cast(sum(in_l) OVER (PARTITION BY record_id ORDER BY pos
+                                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_in
+        FROM lg
+      ),
+      cm2 AS (SELECT *, cum_in - in_l AS prev_cum FROM cm)
+      SELECT s.record_id, s.start, s.end_excl, s.span_text,
+             a.start_l + b.end_l + b.cum_in - a.prev_cum AS score_milli
+      FROM spans s
+      JOIN cm2 a ON a.record_id = s.record_id AND a.pos = s.start
+      JOIN cm2 b ON b.record_id = s.record_id AND b.pos = s.end_excl - 1
+    """.format(span_ctes=_span_enum_ctes(3)))
 def _er_span_scores(spark: SparkSession, sf: str) -> DataFrame:
     """Span score head with the prefix-sum trick
     (/root/reference/elq/biencoder/biencoder.py:64-126): every span scored
@@ -5134,7 +6181,41 @@ def _er_span_scores(spark: SparkSession, sf: str) -> DataFrame:
     return span_scores_prefix_sum(q, "id", "text")
 
 
-@_q("wiki_extractor_scan", None)  # oracle injected below (fixture path)
+# wiki-extractor blocks parsed order-free from the whole file (DuckDB
+# 1.0 has no file_row_number; read_text + block split mirrors the scan)
+_WIKI_CTES = f"""
+      wt AS (SELECT content FROM read_text('{_WEXT}')),
+      wb AS (SELECT unnest(string_split(content, '<doc ')) AS blk FROM wt),
+      wdoc AS (
+        SELECT regexp_extract(blk, 'id="(\\d+)"', 1)::BIGINT AS wikipedia_id,
+               regexp_extract(blk, 'title="([^"]*)"', 1) AS title,
+               array_to_string(
+                 [y for y in [rtrim(x, chr(13)) for x in string_split(
+                    regexp_extract(blk, '>\\r?\n([\\s\\S]*?)</doc>', 1), chr(10))]
+                  if trim(y) <> ''], chr(10)) AS text
+        FROM wb WHERE blk LIKE 'id=%'
+      ),
+      wlinks AS (
+        SELECT wikipedia_id AS src_id,
+               replace(regexp_extract(a, '<a href="([^"]+)">', 1), '%20', ' ')
+                 AS href_title,
+               regexp_extract(a, '>([^<]*)</a>', 1) AS anchor_text
+        FROM (
+          SELECT wikipedia_id,
+                 unnest(regexp_extract_all(text,
+                   '<a href="([^"]+)">([^<]*)</a>', 0)) AS a
+          FROM wdoc
+        )
+      )"""
+
+
+@_q("wiki_extractor_scan", f"""
+      WITH {_WIKI_CTES}
+      SELECT wikipedia_id, title,
+             len(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+')) AS num_tokens,
+             md5(text) AS text_md5
+      FROM wdoc
+    """)
 def _wiki_extractor_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Wiki-extractor block scan, full-text variant + token count
     (/root/reference/blink/candidate_retrieval/
@@ -5147,7 +6228,10 @@ def _wiki_extractor_scan(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("wiki_links", None)  # oracle injected below (fixture path)
+@_q(
+    "wiki_links",
+    f"WITH {_WIKI_CTES} SELECT src_id, href_title, anchor_text FROM wlinks",
+)
 def _wiki_links(spark: SparkSession, sf: str) -> DataFrame:
     """Anchor-link extraction with url-unquote
     (/root/reference/blink/candidate_retrieval/
@@ -5158,7 +6242,18 @@ def _wiki_links(spark: SparkSession, sf: str) -> DataFrame:
     return extract_anchor_links(d)
 
 
-@_q("wiki_incoming_links", None)  # oracle injected below (fixture path)
+@_q("wiki_incoming_links", f"""
+      WITH {_WIKI_CTES},
+      resolved AS (
+        SELECT coalesce(e1.wikipedia_id, e2.wikipedia_id) AS target
+        FROM wlinks l
+        LEFT JOIN wdoc e1 ON e1.title = l.href_title
+        LEFT JOIN wdoc e2
+          ON lower(e2.title) = lower(replace(l.href_title, '_', ' '))
+      )
+      SELECT target AS entity_id, count(*) AS num_incoming_links
+      FROM resolved WHERE target IS NOT NULL GROUP BY 1
+    """)
 def _wiki_incoming_links(spark: SparkSession, sf: str) -> DataFrame:
     """Incoming-link enrichment: resolve anchors (exact title, normalized
     fallback) then count per target — groupBy-count + join replacing the
@@ -5175,7 +6270,12 @@ def _wiki_incoming_links(spark: SparkSession, sf: str) -> DataFrame:
     return incoming_link_counts(extract_anchor_links(d), ents)
 
 
-@_q("jsonl_mention_scan", None)  # oracle injected below (fixture path)
+@_q("jsonl_mention_scan", f"""
+      SELECT id AS mention_id, lower(mention) AS mention,
+             lower(label) AS label_title
+      FROM read_json('{_MJSONL}')
+      WHERE lower(label) IN (SELECT lower(title) FROM read_json('{_JSONL}'))
+    """)
 def _jsonl_mention_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Test-mention scan: lowercase everything, keep only rows whose label
     resolves in the entity catalogue (left-semi join — the keep side of
@@ -5187,7 +6287,26 @@ def _jsonl_mention_scan(spark: SparkSession, sf: str) -> DataFrame:
     return m.select("mention_id", "mention", "label_title")
 
 
-@_q("er_blocking_recall", None)  # oracle injected below (fixture path)
+@_q("er_blocking_recall", f"""
+      WITH {_BLOCK_SIZED_CTES},
+      kept AS (SELECT * FROM sized WHERE bs <= 4096),
+      cand AS (
+        SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
+        FROM kept a JOIN kept b
+          ON a.block_key = b.block_key AND a.record_id < b.record_id
+      ),
+      g AS (SELECT mention_id_a, mention_id_b FROM read_parquet('{_GOLD}')
+            WHERE same_entity),
+      j AS (
+        SELECT (c.record_id_a IS NOT NULL) AS covered
+        FROM g LEFT JOIN cand c
+          ON c.record_id_a = g.mention_id_a AND c.record_id_b = g.mention_id_b
+      )
+      SELECT count(*) AS n_gold_pos,
+             cast(sum(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
+             round(avg(CASE WHEN covered THEN 1.0 ELSE 0.0 END), 6) AS recall
+      FROM j
+    """)
 def _er_blocking_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Candidate-generation (blocking) recall: share of gold positive pairs
     the candidate pair set covers (/root/reference/blink/candidate_retrieval/
@@ -5202,7 +6321,50 @@ def _er_blocking_recall(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("conll_stream_spans", None)  # oracle injected below (fixture path)
+@_q("conll_stream_spans", f"""
+      WITH ct AS (SELECT content FROM read_text('{_CSTREAM}')),
+      cl AS (
+        -- rtrim chr(13): the Spark text source strips CRLF terminators;
+        -- a raw chr(10) split must not leave a CR on CRLF-encoded files
+        SELECT rtrim(line0, chr(13)) AS line, line_no FROM (
+          SELECT unnest(string_split(content, chr(10))) AS line0,
+                 generate_subscripts(string_split(content, chr(10)), 1) - 1 AS line_no
+          FROM ct
+        )
+      ),
+      cd AS (
+        SELECT line, line_no,
+               cast(sum(CASE WHEN starts_with(line, '-DOCSTART-') THEN 1 ELSE 0 END)
+                 OVER (ORDER BY line_no ROWS UNBOUNDED PRECEDING) AS BIGINT) AS doc_id
+        FROM cl
+      ),
+      ctoks AS (
+        SELECT doc_id, line_no,
+               regexp_split_to_array(line, '[\\t\\n\\x0B\\f\\r ]+')[1] AS token,
+               coalesce(regexp_split_to_array(line, '[\\t\\n\\x0B\\f\\r ]+')[2], 'O') AS tag
+        FROM cd WHERE NOT starts_with(line, '-DOCSTART-') AND trim(line) <> ''
+      ),
+      r1 AS (
+        SELECT *, lag(tag) OVER (PARTITION BY doc_id ORDER BY line_no) AS prev_tag
+        FROM ctoks
+      ),
+      r2 AS (
+        SELECT *, CASE WHEN starts_with(tag, 'B')
+                         OR (starts_with(tag, 'I') AND NOT coalesce(
+                              starts_with(prev_tag, 'B') OR starts_with(prev_tag, 'I'),
+                              false))
+                       THEN 1 ELSE 0 END AS run_start
+        FROM r1
+      ),
+      r3 AS (
+        SELECT *, sum(run_start) OVER (PARTITION BY doc_id ORDER BY line_no
+                                       ROWS UNBOUNDED PRECEDING) AS run_id
+        FROM r2
+      )
+      SELECT doc_id, min(line_no) AS start_line,
+             string_agg(token, ' ' ORDER BY line_no) AS mention
+      FROM r3 WHERE tag <> 'O' GROUP BY doc_id, run_id
+    """)
 def _conll_stream_spans(spark: SparkSession, sf: str) -> DataFrame:
     """CoNLL token-stream scan + B/I run assembly into mention spans
     (/root/reference/blink/candidate_retrieval/dataset.py:73-138), including
@@ -5213,7 +6375,43 @@ def _conll_stream_spans(spark: SparkSession, sf: str) -> DataFrame:
     return conll_mention_spans(toks)
 
 
-@_q("conll_csv_scan", None)  # oracle injected below (fixture path)
+@_q("conll_csv_scan", f"""
+      WITH raw AS (
+        SELECT value FROM read_csv('{_CONLL}', delim=chr(2), header=false, quote='',
+                                   columns={{'value': 'VARCHAR'}})
+        WHERE trim(value) <> ''
+      ),
+      parsed AS (
+        SELECT string_split(value, chr(9)) AS comps,
+               string_split(string_split(value, chr(9))[-1], ',') AS gp
+        FROM raw
+      ),
+      rows0 AS (
+        SELECT comps[1] || ' ' || comps[2] AS doc_name,
+               comps[3] AS mention,
+               replace(replace(array_to_string(
+                 list_slice(gp, (CASE WHEN gp[1] = '-1' THEN 2 ELSE 3 END) + 1,
+                            len(gp)), ','), '"', '%22'), ' ', '_') AS gold_entity,
+               CASE WHEN comps[7] = 'EMPTYCAND'
+                    THEN CAST([] AS STRUCT(entity VARCHAR, prior DOUBLE)[])
+                    ELSE [{{'entity': replace(replace(array_to_string(
+                             list_slice(string_split(c, ','), 3,
+                                        len(string_split(c, ','))), ','),
+                             '"', '%22'), ' ', '_'),
+                           'prior': string_split(c, ',')[2]::DOUBLE}}
+                          for c in list_slice(comps, 7, len(comps) - 2)]
+               END AS cands
+        FROM parsed
+      )
+      SELECT doc_name, mention, gold_entity, len(cands) AS n_cands,
+             generate_subscripts(cands, 1) - 1 AS cand_idx,
+             unnest(cands).entity AS cand_entity,
+             unnest(cands).prior AS cand_prior
+      FROM rows0 WHERE len(cands) > 0
+      UNION ALL
+      SELECT doc_name, mention, gold_entity, 0, -1, NULL, NULL
+      FROM rows0 WHERE len(cands) = 0
+    """)
 def _conll_csv_scan(spark: SparkSession, sf: str) -> DataFrame:
     """CoNLL/AIDA CSV scan with candidate-list parse (variable arity,
     comma-bearing names, EMPTYCAND, both gold variants —
@@ -5239,7 +6437,25 @@ def _conll_csv_scan(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("scalar_wiki_forms", None)  # oracle injected below (fixture path)
+def _ic(col: str) -> str:
+    """Spark initcap replica for space-separated text (DuckDB has no
+        initcap builtin)."""
+    return (
+        "array_to_string([CASE WHEN w = '' THEN ''"
+        " ELSE upper(substr(w, 1, 1)) || lower(substr(w, 2)) END"
+        f" for w in string_split({col}, ' ')], ' ')"
+    )
+
+
+_INITCAP_SQL = _ic("mention")
+
+
+@_q("scalar_wiki_forms", f"""
+      SELECT mention_id,
+             {_INITCAP_SQL} AS title_case,
+             translate(mention, ' .', '_-') AS underscored
+      FROM read_parquet('{_MEN}')
+    """)
 def _scalar_wiki_forms(spark: SparkSession, sf: str) -> DataFrame:
     """Scalar stragglers: .title() casing (initcap,
     /root/reference/blink/candidate_retrieval/dataset.py:322-330) and the
@@ -5263,7 +6479,58 @@ def _ids_csv(ids) -> "F.Column":
     return F.array_join(F.transform(ids, lambda x: x.cast("string")), ",")
 
 
-@_q("er_pair_tokens", None)  # oracle injected below (fixture path)
+def _tok_ids_sql(expr: str) -> str:
+    norm = f"trim(regexp_replace(lower({expr}), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))"
+    return (
+        "[(('0x' || substr(md5('tok:' || t), 1, 8))::BIGINT + 1000) "
+        f"for t in list_filter(string_split({norm}, ' '), t -> t <> '')]"
+    )
+
+
+_CTX_IDS_CTES = f"""
+      tk AS (
+        SELECT mention_id, label_id,
+               {_tok_ids_sql('context_left')} AS lt,
+               {_tok_ids_sql('mention')} AS mt0,
+               {_tok_ids_sql('context_right')} AS rt
+        FROM read_parquet('{_MEN}')
+      ),
+      tm AS (
+        SELECT mention_id, label_id, lt, rt,
+               CASE WHEN len(mt0) > 0 THEN [1::BIGINT] || mt0 || [2::BIGINT]
+                    ELSE []::BIGINT[] END AS mt
+        FROM tk
+      ),
+      tq AS (SELECT *, (floor(({_CTX_LEN} - len(mt)) / 2) - 1)::INT AS lq FROM tm),
+      tq2 AS (SELECT *, ({_CTX_LEN} - len(mt) - lq - 2)::INT AS rq FROM tq),
+      tq3 AS (
+        SELECT *,
+          greatest(CASE WHEN len(lt) > lq AND len(rt) <= rq
+                        THEN lq + (rq - len(rt)) ELSE lq END, 0) AS lq2,
+          greatest(CASE WHEN len(lt) <= lq AND len(rt) > rq
+                        THEN rq + (lq - len(lt)) ELSE rq END, 0) AS rq2
+        FROM tq2
+      ),
+      tctx AS (
+        SELECT mention_id, label_id,
+               list_resize(list_slice(
+                 [101::BIGINT]
+                 || (CASE WHEN len(lt) <= lq2 THEN lt
+                          WHEN lq2 > 0 THEN list_slice(lt, len(lt)-lq2+1, len(lt))
+                          ELSE []::BIGINT[] END)
+                 || mt
+                 || (CASE WHEN len(rt) <= rq2 THEN rt
+                          WHEN rq2 > 0 THEN list_slice(rt, 1, rq2)
+                          ELSE []::BIGINT[] END)
+                 || [102::BIGINT], 1, {_CTX_LEN}), {_CTX_LEN}, 0) AS ctx_ids
+        FROM tq3
+      )"""
+
+
+@_q("er_pair_tokens", f"""
+      WITH {_CTX_IDS_CTES}
+      SELECT mention_id, array_to_string(ctx_ids, ',') AS ids_csv FROM tctx
+    """)
 def _er_pair_tokens(spark: SparkSession, sf: str) -> DataFrame:
     """Mention context token ids with left/right quota rebalancing
     (/root/reference/blink/biencoder/data_process.py:26-69): [CLS] left
@@ -5276,7 +6543,48 @@ def _er_pair_tokens(spark: SparkSession, sf: str) -> DataFrame:
     return m.select("mention_id", _ids_csv(ids).alias("ids_csv"))
 
 
-@_q("er_pair_concat", None)  # oracle injected below (fixture path)
+_PAIR_CONCAT_SQL = f"""
+      WITH {_CTX_IDS_CTES},
+      cbody AS (
+        SELECT entity_id,
+               list_slice({_tok_ids_sql('title')} || [3::BIGINT]
+                          || {_tok_ids_sql('text')}, 1, {_CAND_LEN} - 2) AS body
+        FROM read_parquet('{_ENT}')
+      ),
+      ccand AS (
+        SELECT entity_id,
+               list_resize([101::BIGINT] || body || [102::BIGINT], {_CAND_LEN}, 0)
+                 AS cand_ids
+        FROM cbody
+      ),
+      {_lev_pairs_cte("simp")},
+      tk3 AS (
+        SELECT mention_id, entity_id, rank FROM (
+          SELECT mention_id, entity_id,
+                 row_number() OVER (PARTITION BY mention_id
+                                    ORDER BY sim DESC, entity_id ASC) AS rank
+          FROM simp
+        ) WHERE rank <= 3
+      ),
+      j AS (
+        SELECT t.mention_id, t.entity_id, t.rank, x.label_id, x.ctx_ids, c.cand_ids
+        FROM tk3 t
+        JOIN tctx x ON x.mention_id = t.mention_id
+        JOIN ccand c ON c.entity_id = t.entity_id
+      )
+      SELECT mention_id, entity_id, rank,
+             coalesce(min(CASE WHEN entity_id = label_id THEN rank END)
+                        OVER (PARTITION BY mention_id), -1) AS gold_rank,
+             array_to_string(list_slice(ctx_ids || list_slice(cand_ids, 2, {_CAND_LEN}),
+                                        1, {_PAIR_LEN}), ',') AS pair_csv
+      FROM j
+    """
+
+
+@_q(
+    "er_pair_concat",
+    _PAIR_CONCAT_SQL,
+)
 def _er_pair_concat(spark: SparkSession, sf: str) -> DataFrame:
     """Crossencoder pair tensor rows: context ids + candidate ids (title +
     [unused2] + description, /root/reference/blink/biencoder/
@@ -5321,7 +6629,20 @@ def _er_pair_concat(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_candidate_fetch", None)  # oracle injected below (fixture path)
+@_q("er_candidate_fetch", f"""
+      WITH {_lev_pairs_cte("fpairs")},
+      ftop AS (
+        SELECT mention_id, entity_id, rank FROM (
+          SELECT mention_id, entity_id,
+                 row_number() OVER (PARTITION BY mention_id
+                                    ORDER BY sim DESC, entity_id ASC) AS rank
+          FROM fpairs
+        ) WHERE rank <= 3
+      )
+      SELECT t.mention_id, t.entity_id, t.rank, e.title, e.wikipedia_id,
+             e.num_incoming_links
+      FROM ftop t JOIN read_parquet('{_ENT}') e USING (entity_id)
+    """)
 def _er_candidate_fetch(spark: SparkSession, sf: str) -> DataFrame:
     """Pregenerated-candidate data fetch: the reference's per-id Solr point
     lookups (rows=1 RPC per wikidata_id,
@@ -5338,7 +6659,13 @@ def _er_candidate_fetch(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_zeshel_doc_join", None)  # oracle injected below (fixture path)
+@_q("er_zeshel_doc_join", f"""
+      SELECT m.mention_id, m.world, len(d.spans) AS n_doc_spans,
+             e.title AS label_title
+      FROM read_parquet('{_MEN}') m
+      JOIN read_parquet('{_DOC}') d USING (doc_id)
+      JOIN read_parquet('{_ENT}') e ON e.entity_id = m.label_id
+    """)
 def _er_zeshel_doc_join(spark: SparkSession, sf: str) -> DataFrame:
     """Zeshel doc-id join shape (/root/reference/examples/zeshel/
     create_BLINK_zeshel_data.py:74-88,113-125): resolve each mention's
@@ -5358,7 +6685,25 @@ def _er_zeshel_doc_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_pair_rerank", None)  # oracle injected below (fixture path)
+@_q("er_pair_rerank", f"""
+      WITH base AS ({_PAIR_CONCAT_SQL}),
+      seg AS (
+        SELECT mention_id, entity_id, gold_rank,
+               len(list_intersect(
+                 list_distinct(list_filter(
+                   list_slice(string_split(pair_csv, ',')::BIGINT[], 1, {_CTX_LEN}),
+                   x -> x > 102)),
+                 list_distinct(list_filter(
+                   list_slice(string_split(pair_csv, ',')::BIGINT[],
+                              {_CTX_LEN} + 1, {_PAIR_LEN}),
+                   x -> x > 102)))) AS pair_score
+        FROM base
+      )
+      SELECT mention_id, entity_id, gold_rank, pair_score,
+             row_number() OVER (PARTITION BY mention_id
+                                ORDER BY pair_score DESC, entity_id ASC) AS new_rank
+      FROM seg
+    """)
 def _er_pair_rerank(spark: SparkSession, sf: str) -> DataFrame:
     """Rerank candidates by a score computed ON the tokenized pair row —
     the crossencoder scoring shape (/root/reference/blink/crossencoder/
@@ -5381,7 +6726,34 @@ def _er_pair_rerank(spark: SparkSession, sf: str) -> DataFrame:
     return scored.withColumn("new_rank", F.row_number().over(w))
 
 
-@_q("er_media_decode", None)
+_MEDIA_CTES = f"""
+      e AS (
+        SELECT doc_id, generate_subscripts(spans, 1) - 1 AS span_idx,
+               unnest(spans) AS sp
+        FROM read_parquet('{_DOC}')
+      ),
+      media AS (
+        SELECT doc_id, span_idx, sp.media_ref AS media_ref,
+               md5(sp.media_ref) AS h
+        FROM e WHERE sp.kind = 'media'
+      ),
+      decoded AS (
+        SELECT doc_id, span_idx, media_ref,
+               CASE ascii(substr(h, 1, 1)) % 3 WHEN 0 THEN 'image'
+                    WHEN 1 THEN 'audio' ELSE 'video' END AS media_kind,
+               640 + ascii(substr(h, 2, 1)) AS width,
+               360 + ascii(substr(h, 3, 1)) AS height,
+               CASE WHEN ascii(substr(h, 1, 1)) % 3 = 0 THEN 1
+                    ELSE 1 + ascii(substr(h, 4, 1)) END AS n_frames
+        FROM media
+      )"""
+
+
+@_q("er_media_decode", f"""
+      WITH {_MEDIA_CTES}
+      SELECT doc_id, span_idx, media_ref, media_kind, width, height, n_frames
+      FROM decoded
+    """)
 def _er_media_decode(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal decode plumbing: mapInPandas stub over media spans
     (deterministic md5-derived fake codec; real Arrow batch path)."""
@@ -5394,7 +6766,12 @@ def _er_media_decode(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_media_frames", None)  # oracle injected below (fixture path)
+@_q("er_media_frames", f"""
+      WITH {_MEDIA_CTES}
+      SELECT doc_id, span_idx, media_ref,
+             unnest(range(0, n_frames, 10)) AS frame_idx
+      FROM decoded WHERE media_kind = 'video'
+    """)
 def _er_media_frames(spark: SparkSession, sf: str) -> DataFrame:
     """Frame-sampling plan over decoded video rows (every-Nth frame index,
     relational sequence+explode — the cheap half of video ingestion)."""
@@ -5405,7 +6782,18 @@ def _er_media_frames(spark: SparkSession, sf: str) -> DataFrame:
     return frame_sample(decode_media_stub(media_spans(d)))
 
 
-@_q("er_media_resize", None)  # oracle injected below (fixture path)
+@_q("er_media_resize", f"""
+      WITH {_MEDIA_CTES}
+      SELECT doc_id, span_idx, media_ref, width, height,
+             CASE WHEN greatest(width, height) <= 700 THEN width
+                  ELSE floor(width * 700 / greatest(width, height))::INT END
+               AS target_w,
+             CASE WHEN greatest(width, height) <= 700 THEN height
+                  ELSE floor(height * 700 / greatest(width, height))::INT END
+               AS target_h,
+             greatest(width, height) > 700 AS needs_resize
+      FROM decoded WHERE media_kind IN ('image', 'video')
+    """)
 def _er_media_resize(spark: SparkSession, sf: str) -> DataFrame:
     """Resize metadata for visual media: integer-exact aspect-preserving
     target dims for rows whose longest side exceeds the cap."""
@@ -5613,7 +7001,49 @@ def _simhash_dups(spark: SparkSession, sf: str) -> DataFrame:
     return pairs
 
 
-@_q("er_overlap_prune", None)  # oracle injected below (needs fixture path)
+@_q("er_overlap_prune", f"""
+      WITH RECURSIVE {_span_enum_ctes(2)},
+      scored AS (
+        SELECT record_id, start, end_excl, span_text,
+               length(span_text)::double
+                 + (('0x' || substr(md5(span_text), 1, 4))::INT % 97)::double / 100.0
+                 AS score
+        FROM spans
+      ),
+      ranked AS (
+        SELECT *, row_number() OVER (PARTITION BY record_id
+                                     ORDER BY score DESC, start, end_excl) AS rk,
+               count(*) OVER (PARTITION BY record_id) AS n
+        FROM scored
+      ),
+      -- greedy best-first scan as a lockstep walk: one state row per group,
+      -- advance one priority rank per iteration, accept iff no overlap with
+      -- the accepted-intervals list (the applyInPandas greedy of
+      -- /root/reference/elq/main_dense.py:451-466, relationalized)
+      walk AS (
+        SELECT record_id, 0::BIGINT AS rk,
+               CAST([] AS STRUCT(s BIGINT, e BIGINT)[]) AS covered,
+               CAST([] AS BIGINT[]) AS kept, n
+        FROM (SELECT DISTINCT record_id, n FROM ranked)
+        UNION ALL
+        SELECT w.record_id, w.rk + 1,
+               CASE WHEN len(list_filter(w.covered,
+                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
+                    THEN list_append(w.covered,
+                           {{'s': r.start::BIGINT, 'e': r.end_excl::BIGINT}})
+                    ELSE w.covered END,
+               CASE WHEN len(list_filter(w.covered,
+                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
+                    THEN list_append(w.kept, r.rk) ELSE w.kept END,
+               w.n
+        FROM walk w JOIN ranked r ON r.record_id = w.record_id AND r.rk = w.rk + 1
+        WHERE w.rk < w.n
+      )
+      SELECT r.record_id, r.start, r.end_excl, r.span_text, r.score
+      FROM walk w JOIN ranked r
+        ON r.record_id = w.record_id AND list_contains(w.kept, r.rk)
+      WHERE w.rk = w.n
+    """)
 def _er_overlap_prune(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy non-overlap span selection per question (applyInPandas,
     /root/reference/elq/main_dense.py:451-466). Full SQL oracle: the greedy
@@ -5624,7 +7054,16 @@ def _er_overlap_prune(spark: SparkSession, sf: str) -> DataFrame:
     return greedy_overlap_prune(_scored_question_spans(spark), "record_id", "score")
 
 
-@_q("jsonl_entity_scan", None)
+@_q("jsonl_entity_scan", f"""
+      SELECT row_number() OVER (ORDER BY wikipedia_id ASC NULLS LAST, title ASC NULLS FIRST) - 1
+               AS entity_id,
+             title, text, wikipedia_id
+      FROM (
+        SELECT title, text,
+               regexp_extract(idx, 'curid=(\\d+)', 1)::bigint AS wikipedia_id
+        FROM read_json('{_JSONL}')
+      )
+    """)
 def _jsonl_entity_scan(spark: SparkSession, sf: str) -> DataFrame:
     """Entity-catalogue JSONL scan: curid parsing + deterministic dense ids
     (/root/reference/blink/main_dense.py:99-151)."""
@@ -5656,7 +7095,25 @@ def _span_score_col() -> F.Column:
     )
 
 
-@_q("er_span_repeat_prune", None)  # oracle injected below (fixture path)
+_PRED_ENTITY = "'e' || substr(md5(string_split(span_text, ' ')[1]), 1, 2)"
+
+
+@_q("er_span_repeat_prune", f"""
+      WITH {_span_enum_ctes(2)},
+      scored AS (
+        SELECT record_id, start, end_excl, span_text,
+               {_SPAN_SCORE} AS score,
+               {_PRED_ENTITY} AS entity
+        FROM spans
+      ),
+      r AS (
+        SELECT *, row_number() OVER (PARTITION BY record_id, entity
+                                     ORDER BY score DESC, start, end_excl) AS rk
+        FROM scored
+      )
+      SELECT record_id, start, end_excl, span_text, score, entity
+      FROM r WHERE rk = 1
+    """)
 def _er_span_repeat_prune(spark: SparkSession, sf: str) -> DataFrame:
     """filter_repeats (/root/reference/scripts/tune_hyperparams_new.py:43-59):
     sort spans by score desc, keep the FIRST occurrence of each predicted
@@ -5671,7 +7128,48 @@ def _er_span_repeat_prune(spark: SparkSession, sf: str) -> DataFrame:
     return filter_repeats(scored, "record_id", "entity", "score")
 
 
-@_q("er_repeat_overlap_prune", None)  # oracle injected below (fixture path)
+@_q("er_repeat_overlap_prune", f"""
+      WITH RECURSIVE {_span_enum_ctes(2)},
+      scored AS (
+        SELECT record_id, start, end_excl, span_text,
+               {_SPAN_SCORE} AS score,
+               {_PRED_ENTITY} AS entity
+        FROM spans
+      ),
+      ranked AS (
+        SELECT *, record_id || chr(31) || entity AS grp,
+               row_number() OVER (PARTITION BY record_id, entity
+                                  ORDER BY score DESC, start, end_excl) AS rk,
+               count(*) OVER (PARTITION BY record_id, entity) AS n
+        FROM scored
+      ),
+      -- the greedy walk of er_overlap_prune, but the coverage state lives
+      -- PER (question, predicted-entity) group — filter_repeat_overlaps'
+      -- per-entity token mask (tune_hyperparams_new.py:75-87)
+      walk AS (
+        SELECT grp, 0::BIGINT AS rk,
+               CAST([] AS STRUCT(s BIGINT, e BIGINT)[]) AS covered,
+               CAST([] AS BIGINT[]) AS kept, n
+        FROM (SELECT DISTINCT grp, n FROM ranked)
+        UNION ALL
+        SELECT w.grp, w.rk + 1,
+               CASE WHEN len(list_filter(w.covered,
+                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
+                    THEN list_append(w.covered,
+                           {{'s': r.start::BIGINT, 'e': r.end_excl::BIGINT}})
+                    ELSE w.covered END,
+               CASE WHEN len(list_filter(w.covered,
+                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
+                    THEN list_append(w.kept, r.rk) ELSE w.kept END,
+               w.n
+        FROM walk w JOIN ranked r ON r.grp = w.grp AND r.rk = w.rk + 1
+        WHERE w.rk < w.n
+      )
+      SELECT r.record_id, r.start, r.end_excl, r.span_text, r.score, r.entity
+      FROM walk w JOIN ranked r
+        ON r.grp = w.grp AND list_contains(w.kept, r.rk)
+      WHERE w.rk = w.n
+    """)
 def _er_repeat_overlap_prune(spark: SparkSession, sf: str) -> DataFrame:
     """filter_repeat_overlaps (/root/reference/scripts/
     tune_hyperparams_new.py:75-87): greedy overlap pruning with a coverage
@@ -5691,7 +7189,25 @@ def _er_repeat_overlap_prune(spark: SparkSession, sf: str) -> DataFrame:
     return filter_repeat_overlaps(scored, "record_id", "entity", "score")
 
 
-@_q("er_kb_ingest_filter", None)  # oracle injected below (fixture path)
+@_q("er_kb_ingest_filter", f"""
+      WITH f AS (
+        SELECT entity_id, title, num_tokens,
+               list_filter(aliases, a -> NOT regexp_full_match(a,
+                 '[\\x{{1F000}}-\\x{{1FAFF}}\\x{{2600}}-\\x{{27BF}}\\x{{2B00}}-\\x{{2BFF}}]+')) AS ka,
+               len(aliases)::BIGINT AS na
+        FROM read_parquet('{_KB}')
+        WHERE num_tokens >= 5
+          AND (title IS NULL OR NOT (contains(title, 'disambiguation')
+                                     OR contains(title, 'Disambiguation')))
+          AND (description IS NULL
+               OR NOT (contains(description, 'disambiguation page')
+                       OR contains(description, 'Disambiguation page')))
+      )
+      SELECT entity_id, title, num_tokens,
+             array_to_string(ka, '|') AS aliases_kept,
+             (na - len(ka))::BIGINT AS n_aliases_dropped
+      FROM f
+    """)
 def _er_kb_ingest_filter(spark: SparkSession, sf: str) -> DataFrame:
     """KB-ingestion quality gate (/root/reference/blink/candidate_retrieval/
     data_ingestion.py:81-155): drop short stubs (num_tokens < 5) and
@@ -5710,7 +7226,71 @@ def _er_kb_ingest_filter(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_pem_lookup", None)  # oracle injected below (fixture path)
+@_q("er_pem_lookup", f"""
+      WITH e AS (
+        SELECT entity_id, title, num_incoming_links + 1 AS freq
+        FROM read_parquet('{_ENT}')
+      ),
+      pem AS (
+        SELECT CASE WHEN entity_id % 3 = 0 THEN {{ic_title}}
+                    WHEN entity_id % 3 = 1 THEN title
+                    ELSE upper(title) END AS k,
+               entity_id, freq
+        FROM e
+      ),
+      best AS (
+        SELECT k, entity_id, freq FROM (
+          SELECT *, row_number() OVER (PARTITION BY k
+                                       ORDER BY freq DESC, entity_id) AS r
+          FROM pem) WHERE r = 1
+      ),
+      pl AS (
+        SELECT lk, entity_id AS le FROM (
+          SELECT lower(k) AS lk, entity_id,
+                 row_number() OVER (PARTITION BY lower(k)
+                                    ORDER BY freq DESC, entity_id) AS r
+          FROM best) WHERE r = 1
+      ),
+      m0 AS (
+        SELECT mention_id,
+               CASE ('0x' || substr(md5(mention_id), 1, 2))::INT % 3
+                 WHEN 0 THEN upper(mention)
+                 WHEN 1 THEN {{ic_mention}}
+                 ELSE mention END AS mention
+        FROM read_parquet('{_MEN}')
+      ),
+      m AS (
+        SELECT mention_id, mention, {{ic_mention2}} AS title_v,
+               lower(mention) AS low
+        FROM m0
+      ),
+      j AS (
+        SELECT m.mention_id,
+               s.entity_id AS se, coalesce(s.freq, 0) AS sf_,
+               t.entity_id AS te, coalesce(t.freq, 0) AS tf,
+               c.entity_id AS ce, pl.le AS le
+        FROM m
+        LEFT JOIN best s ON s.k = m.mention
+        LEFT JOIN best t ON t.k = m.title_v
+        LEFT JOIN best c ON c.k = m.low
+        LEFT JOIN pl ON pl.lk = m.low
+      )
+      SELECT mention_id,
+             CASE WHEN sf_ > 0 OR tf > 0 THEN
+                    CASE WHEN sf_ > tf THEN 'pem_span' ELSE 'pem_title' END
+                  WHEN ce IS NOT NULL THEN 'pem_lower_org'
+                  WHEN le IS NOT NULL THEN 'pem_lower_lower'
+                  ELSE 'none' END AS source,
+             CASE WHEN sf_ > 0 OR tf > 0 THEN
+                    CASE WHEN sf_ > tf THEN se ELSE te END
+                  WHEN ce IS NOT NULL THEN ce
+                  ELSE le END AS entity_id
+      FROM j
+    """.format(
+        ic_title=_ic("title"),
+        ic_mention=_ic("mention"),
+        ic_mention2=_ic("mention"),
+    ))
 def _er_pem_lookup(spark: SparkSession, sf: str) -> DataFrame:
     """p_e_m 3-casing-variant prior lookup with fallback priority
     (/root/reference/blink/candidate_retrieval/dataset.py:300-347):
@@ -5940,11 +7520,6 @@ def _doc_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     return minhash_calibration(d, "doc_id", "text")
 
 
-def _q_emb(col: str = "embedding") -> str:
-    """DuckDB mirror of hashing.quantize_emb: floor(v * 10^6) per component."""
-    return f"[floor(x::double * 1000000)::BIGINT for x in {col}]"
-
-
 def _bucket_sql(qcol: str, n_planes: int, dim: int, seed: int = 7) -> str:
     """DuckDB mirror of hashing.sign_lsh_bucket_exact: integer-plane sign
     bits (list_dot_product of BIGINT lists stays < 2^53 — exact in double)."""
@@ -5956,15 +7531,6 @@ def _bucket_sql(qcol: str, n_planes: int, dim: int, seed: int = 7) -> str:
         for p in range(n_planes)
     )
     return f"({terms})"
-
-
-_COS_EXACT_SQL = (
-    "round(CASE WHEN sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})) > 0"
-    " THEN list_dot_product({a}, {b})"
-    " / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-    " ELSE 0.0 END, 6)"
-)
 
 
 def _ann_lsh_oracle_sql() -> str:
@@ -6141,16 +7707,12 @@ def _ann_lsh_recall(spark: SparkSession, sf: str) -> DataFrame:
     return ann_recall_vs_exact(approx, exact)
 
 
-def _emb_cos_dups_oracle_sql() -> str:
-    embfx = _fxp("embeddings_fx")
-    bucket = _bucket_sql("q", 6, 16)
-    cos_ex = _COS_EXACT_SQL.format(a="qa", b="qb")
-    return f"""
+@_q("embedding_cosine_dups", f"""
     WITH e AS (
       SELECT vec_id::varchar AS record_id, {_q_emb('embedding')} AS q
-      FROM read_parquet('{embfx}')
+      FROM read_parquet('{_EMBFX}')
     ),
-    b AS (SELECT record_id, q, 'e:' || {bucket}::varchar AS block_key FROM e),
+    b AS (SELECT record_id, q, 'e:' || {_bucket_sql("q", 6, 16)}::varchar AS block_key FROM e),
     sized AS (SELECT *, count(*) OVER (PARTITION BY block_key) AS bs FROM b),
     kept AS (SELECT * FROM sized WHERE bs <= 4096),
     pairs AS (
@@ -6161,12 +7723,9 @@ def _emb_cos_dups_oracle_sql() -> str:
       GROUP BY 1, 2
     )
     SELECT record_id_a, record_id_b, cos FROM (
-      SELECT record_id_a, record_id_b, {cos_ex} AS cos FROM pairs
+      SELECT record_id_a, record_id_b, {_COS_EXACT_SQL.format(a="qa", b="qb")} AS cos FROM pairs
     ) WHERE cos >= 0.9
-    """
-
-
-@_q("embedding_cosine_dups", None)  # oracle injected below (fixture path)
+    """)
 def _emb_cos_dups(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-dup pairs over the PLANTED-near-dup embedding
     fixture (synth.make_embeddings_fx — 50 known cos>0.98 pairs, so the
@@ -6199,27 +7758,23 @@ def _emb_cos_dups(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _emb_semdedup_oracle_sql() -> str:
-    embfx = _fxp("embeddings_fx")
-    cos_ab = _COS_EXACT_SQL.format(a="a.v", b="b.v")
-    cos_ec = _COS_EXACT_SQL.format(a="e.v", b="c.cv")
-    return f"""
+@_q("embedding_semdedup", f"""
     WITH RECURSIVE e AS (
-      SELECT vec_id AS id, {_q_emb('embedding')} AS v FROM read_parquet('{embfx}')
+      SELECT vec_id AS id, {_q_emb('embedding')} AS v FROM read_parquet('{_EMBFX}')
     ),
     cent AS (SELECT id AS cid, v AS cv FROM e ORDER BY id ASC LIMIT 8),
     asg AS (
       SELECT id, v, cid, cosc FROM (
-        SELECT e.id, e.v, c.cid, {cos_ec} AS cosc,
+        SELECT e.id, e.v, c.cid, {_COS_EXACT_SQL.format(a="e.v", b="c.cv")} AS cosc,
                row_number() OVER (PARTITION BY e.id
-                                  ORDER BY {cos_ec} DESC, c.cid ASC) AS rk
+                                  ORDER BY {_COS_EXACT_SQL.format(a="e.v", b="c.cv")} DESC, c.cid ASC) AS rk
         FROM e CROSS JOIN cent c
       ) WHERE rk = 1
     ),
     p AS (
       SELECT a.id AS src, b.id AS dst
       FROM asg a JOIN asg b ON a.cid = b.cid AND a.id < b.id
-      WHERE {cos_ab} >= 0.95
+      WHERE {_COS_EXACT_SQL.format(a="a.v", b="b.v")} >= 0.95
     ),
     edges AS (SELECT src, dst FROM p UNION SELECT dst, src FROM p),
     reach AS (
@@ -6232,10 +7787,7 @@ def _emb_semdedup_oracle_sql() -> str:
            row_number() OVER (PARTITION BY cl.group_id
                               ORDER BY asg.cosc ASC, asg.id ASC) = 1 AS keep
     FROM asg JOIN cl ON asg.id = cl.id
-    """
-
-
-@_q("embedding_semdedup", None)  # oracle injected below (fixture path)
+    """)
 def _emb_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) over the planted-near-dup embedding
     fixture: cluster into 8 deterministic first-items cells, find
@@ -6315,7 +7867,21 @@ def _embedding_silhouette(spark: SparkSession, sf: str) -> DataFrame:
     return simplified_silhouette(pts)
 
 
-@_q("er_jdbc_mapping_scan", None)  # oracle injected below (fixture path)
+@_q("er_jdbc_mapping_scan", f"""
+          WITH mapping AS (
+            SELECT wikipedia_id, title AS wikipedia_title,
+                   'Q' || CAST(wikipedia_id * 7 + 11 AS VARCHAR) AS wikidata_id
+            FROM read_parquet('{_ENT}')
+          ),
+          by_title AS (
+            SELECT lower(wikipedia_title) AS mention,
+                   min(wikidata_id) AS wikidata_id
+            FROM mapping GROUP BY 1
+          )
+          SELECT m.mention_id,
+                 coalesce(b.wikidata_id, 'NIL') AS wikidata_id
+          FROM read_parquet('{_MEN}') m LEFT JOIN by_title b USING (mention)
+        """)
 def _er_jdbc_mapping(spark: SparkSession, sf: str) -> DataFrame:
     """JDBC mapping-store scan — the reference's sqlite mapping database
     (/root/reference/blink/candidate_retrieval/generate_wiki2wikidata_mappings.py:35-58
@@ -6327,8 +7893,6 @@ def _er_jdbc_mapping(spark: SparkSession, sf: str) -> DataFrame:
     JDBC engine in this sandbox; the source is driver-agnostic). The JDBC
     write→read roundtrip is value-exact, so the oracle derives the same
     mapping relationally from the entity fixture."""
-    import tempfile
-
     from blink_spark.sources.jdbc import read_mapping_jdbc, write_mapping_jdbc
 
     mapping_src = _fx(spark, "entities").select(
@@ -6338,7 +7902,7 @@ def _er_jdbc_mapping(spark: SparkSession, sf: str) -> DataFrame:
             F.lit("Q"), (F.col("wikipedia_id") * 7 + 11).cast("string")
         ).alias("wikidata_id"),
     )
-    db = os.path.join(tempfile.mkdtemp(prefix="blink_derby_"), "mapping_db")
+    db = os.path.join(_scratch_dir(), "mapping_db")
     write_mapping_jdbc(mapping_src, db)
     mapping = read_mapping_jdbc(spark, db, num_partitions=4, upper_bound=100_000)
     by_title = mapping.groupBy(F.lower("wikipedia_title").alias("mention")).agg(
@@ -6351,7 +7915,20 @@ def _er_jdbc_mapping(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_blocking_stoplist", None)  # oracle injected below (fixture path)
+@_q("er_blocking_stoplist", f"""
+          WITH tk AS (
+            SELECT mention_id, label_id,
+                   unnest(list_distinct(string_split(mention, ' '))) AS tok
+            FROM read_parquet('{_MEN}')
+          ),
+          a AS (
+            SELECT tok, count(*)::BIGINT AS df,
+                   count(DISTINCT label_id)::BIGINT AS n_entities
+            FROM tk GROUP BY 1
+          )
+          SELECT tok, df, n_entities, n_entities > 3 AS flagged
+          FROM a WHERE df >= 2
+        """)
 def _er_blocking_stoplist(spark: SparkSession, sf: str) -> DataFrame:
     """Blocking stop-token list by ENTITY fan-out: a token shared by many
     different gold entities generates cross-entity candidate pairs — pure
@@ -6375,7 +7952,45 @@ def _er_blocking_stoplist(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_ppjoin_pairs", None)  # oracle injected below (fixture path)
+@_q("er_ppjoin_pairs", f"""
+          WITH m AS (
+            SELECT mention_id AS record_id,
+                   list_distinct(string_split({_NORM_M}, ' ')) AS tk
+            FROM read_parquet('{_MEN}')
+          ),
+          tkx AS (SELECT record_id, unnest(tk) AS tok FROM m),
+          dft AS (SELECT tok, count(*)::BIGINT AS df FROM tkx GROUP BY 1),
+          rk AS (
+            SELECT tok, row_number() OVER (ORDER BY df ASC, tok ASC) AS trank
+            FROM dft
+          ),
+          tkr AS (SELECT t.record_id, t.tok, r.trank FROM tkx t JOIN rk r USING (tok)),
+          pref AS (
+            SELECT record_id, tok FROM (
+              SELECT record_id, tok,
+                     row_number() OVER (PARTITION BY record_id
+                                        ORDER BY trank ASC) AS rn,
+                     count(*) OVER (PARTITION BY record_id) AS na
+              FROM tkr
+            ) WHERE rn <= na - (na + 1) // 2 + 1
+          ),
+          cand AS (
+            SELECT DISTINCT x.record_id AS a, y.record_id AS b
+            FROM pref x JOIN pref y
+              ON x.tok = y.tok AND x.record_id < y.record_id
+          ),
+          v AS (
+            SELECT c.a, c.b,
+                   len(list_intersect(ma.tk, mb.tk))::BIGINT AS n_inter,
+                   (len(ma.tk) + len(mb.tk)
+                    - len(list_intersect(ma.tk, mb.tk)))::BIGINT AS n_union
+            FROM cand c JOIN m ma ON ma.record_id = c.a
+                        JOIN m mb ON mb.record_id = c.b
+          )
+          SELECT a AS record_id_a, b AS record_id_b, n_inter, n_union,
+                 ((1000000 * n_inter) // n_union)::BIGINT AS jaccard_ppm
+          FROM v WHERE 3 * n_inter >= n_inter + n_union
+        """)
 def _er_ppjoin_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """PPJoin prefix-filtered set-similarity join at Jaccard >= 1/2 over
     mention token sets — the EXACT (zero-false-negative) complement to
@@ -6388,7 +8003,19 @@ def _er_ppjoin_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return ppjoin_pairs(m, "mention_id", "mention")
 
 
-@_q("er_sorted_neighborhood", None)  # oracle injected below (fixture path)
+@_q("er_sorted_neighborhood", f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS k FROM read_parquet('{_MEN}')
+      ),
+      r AS (
+        SELECT mention_id,
+               row_number() OVER (ORDER BY k, mention_id) - 1 AS rnk
+        FROM m
+      )
+      SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
+             (b.rnk - a.rnk)::BIGINT AS rank_dist
+      FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 3
+    """)
 def _er_sorted_neighborhood(spark: SparkSession, sf: str) -> DataFrame:
     """Sorted-neighborhood blocking over mention surfaces: two-phase global
     rank (no SinglePartition window) + adjacent-bucket band equi-join —
@@ -6400,7 +8027,46 @@ def _er_sorted_neighborhood(spark: SparkSession, sf: str) -> DataFrame:
     return sorted_neighborhood_pairs(m, "mention_id", "mention")
 
 
-@_q("er_fs_weights", None)  # oracle injected below (fixture path)
+@_q("er_fs_weights", f"""
+      {_SCORED_CTE},
+      lab AS (
+        SELECT j.norm_eq,
+               (j.jaccard >= 0.65) AS jacc_hi,
+               (j.lev_ratio >= 0.93) AS lev_hi,
+               g.same_entity
+        FROM j JOIN read_parquet('{_GOLD}') g
+          ON g.mention_id_a = j.record_id_a
+         AND g.mention_id_b = j.record_id_b
+      ),
+      agg AS (
+        SELECT
+          sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT AS n_m,
+          sum(CASE WHEN NOT same_entity THEN 1 ELSE 0 END)::BIGINT AS n_u,
+          sum(CASE WHEN same_entity AND norm_eq THEN 1 ELSE 0 END)::BIGINT AS am_norm_eq,
+          sum(CASE WHEN NOT same_entity AND norm_eq THEN 1 ELSE 0 END)::BIGINT AS au_norm_eq,
+          sum(CASE WHEN same_entity AND jacc_hi THEN 1 ELSE 0 END)::BIGINT AS am_jacc_hi,
+          sum(CASE WHEN NOT same_entity AND jacc_hi THEN 1 ELSE 0 END)::BIGINT AS au_jacc_hi,
+          sum(CASE WHEN same_entity AND lev_hi THEN 1 ELSE 0 END)::BIGINT AS am_lev_hi,
+          sum(CASE WHEN NOT same_entity AND lev_hi THEN 1 ELSE 0 END)::BIGINT AS au_lev_hi
+        FROM lab
+      ),
+      f AS (
+        SELECT 'norm_eq' AS feature, am_norm_eq AS agree_match,
+               au_norm_eq AS agree_nonmatch, n_m, n_u FROM agg
+        UNION ALL
+        SELECT 'jacc_hi', am_jacc_hi, au_jacc_hi, n_m, n_u FROM agg
+        UNION ALL
+        SELECT 'lev_hi', am_lev_hi, au_lev_hi, n_m, n_u FROM agg
+      )
+      SELECT feature, n_m AS n_match, n_u AS n_nonmatch,
+             agree_match, agree_nonmatch,
+             (agree_match * 1000000 // greatest(n_m, 1))::BIGINT AS m_ppm,
+             (agree_nonmatch * 1000000 // greatest(n_u, 1))::BIGINT AS u_ppm,
+             ((agree_match * 1000000 // greatest(n_m, 1)) * 1000000
+              // greatest(agree_nonmatch * 1000000 // greatest(n_u, 1), 1)
+             )::BIGINT AS lr_ppm
+      FROM f
+    """)
 def _er_fs_weights(spark: SparkSession, sf: str) -> DataFrame:
     """Fellegi-Sunter m/u estimation on the labeled gold pairs: per-feature
     agreement probabilities among matches vs non-matches and the integer
@@ -6418,7 +8084,70 @@ def _er_fs_weights(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_threshold_dendrogram", None)  # oracle injected below (fixture path)
+@_q("er_threshold_dendrogram", f"""
+          {_SCORED_CTE},
+          e1 AS (
+            SELECT record_id_a AS src, record_id_b AS dst FROM j
+            WHERE jaccard >= 0.5 AND record_id_a != record_id_b
+          ),
+          ed1 AS (SELECT src, dst FROM e1 UNION SELECT dst, src FROM e1),
+          n1 AS (SELECT DISTINCT src AS id FROM ed1),
+          r1 AS (
+            SELECT id, id AS r FROM n1
+            UNION
+            SELECT r1.id, ed.dst FROM r1 JOIN ed1 ed ON r1.r = ed.src
+          ),
+          c1 AS (SELECT id, min(r) AS cl FROM r1 GROUP BY id),
+          s1 AS (SELECT cl, count(*)::BIGINT AS sz FROM c1 GROUP BY 1),
+          a1 AS (
+            SELECT 500000::BIGINT AS threshold_ppm,
+                   count(*)::BIGINT AS n_clusters,
+                   coalesce(sum(sz), 0)::BIGINT AS n_records,
+                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
+            FROM s1
+          ),
+          e2 AS (
+            SELECT record_id_a AS src, record_id_b AS dst FROM j
+            WHERE jaccard >= 0.65 AND record_id_a != record_id_b
+          ),
+          ed2 AS (SELECT src, dst FROM e2 UNION SELECT dst, src FROM e2),
+          n2 AS (SELECT DISTINCT src AS id FROM ed2),
+          r2 AS (
+            SELECT id, id AS r FROM n2
+            UNION
+            SELECT r2.id, ed.dst FROM r2 JOIN ed2 ed ON r2.r = ed.src
+          ),
+          c2 AS (SELECT id, min(r) AS cl FROM r2 GROUP BY id),
+          s2 AS (SELECT cl, count(*)::BIGINT AS sz FROM c2 GROUP BY 1),
+          a2 AS (
+            SELECT 650000::BIGINT AS threshold_ppm,
+                   count(*)::BIGINT AS n_clusters,
+                   coalesce(sum(sz), 0)::BIGINT AS n_records,
+                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
+            FROM s2
+          ),
+          e3 AS (
+            SELECT record_id_a AS src, record_id_b AS dst FROM j
+            WHERE jaccard >= 0.8 AND record_id_a != record_id_b
+          ),
+          ed3 AS (SELECT src, dst FROM e3 UNION SELECT dst, src FROM e3),
+          n3 AS (SELECT DISTINCT src AS id FROM ed3),
+          r3 AS (
+            SELECT id, id AS r FROM n3
+            UNION
+            SELECT r3.id, ed.dst FROM r3 JOIN ed3 ed ON r3.r = ed.src
+          ),
+          c3 AS (SELECT id, min(r) AS cl FROM r3 GROUP BY id),
+          s3 AS (SELECT cl, count(*)::BIGINT AS sz FROM c3 GROUP BY 1),
+          a3 AS (
+            SELECT 800000::BIGINT AS threshold_ppm,
+                   count(*)::BIGINT AS n_clusters,
+                   coalesce(sum(sz), 0)::BIGINT AS n_records,
+                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
+            FROM s3
+          )
+          SELECT * FROM a1 UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3
+        """)
 def _er_threshold_dendrogram(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-threshold cluster hierarchy over the scored gold pairs: CC at
     jaccard >= 0.5 / 0.65 / 0.8 with per-cut cluster count, clustered-record
@@ -6432,7 +8161,41 @@ def _er_threshold_dendrogram(spark: SparkSession, sf: str) -> DataFrame:
     return threshold_dendrogram(scored)
 
 
-@_q("er_acronym_matches", None)  # oracle injected below (fixture path)
+@_q("er_acronym_matches", f"""
+          WITH f AS (
+            SELECT mention_id AS rid, {_NORM_M} AS norm,
+                   string_split({_NORM_M}, ' ') AS tk
+            FROM read_parquet('{_MEN}')
+          ),
+          feats AS (
+            SELECT rid, norm, len(tk) AS n_tok,
+                   array_to_string([substr(t, 1, 1) for t in tk], '') AS initials
+            FROM f
+          ),
+          g AS (
+            SELECT DISTINCT mention_id_a AS record_id_a,
+                            mention_id_b AS record_id_b
+            FROM read_parquet('{_GOLD}')
+            WHERE mention_id_a != mention_id_b
+          ),
+          j AS (
+            SELECT g.record_id_a, g.record_id_b,
+                   a.norm AS norm_a, a.n_tok AS n_a, a.initials AS ini_a,
+                   b.norm AS norm_b, b.n_tok AS n_b, b.initials AS ini_b
+            FROM g JOIN feats a ON a.rid = g.record_id_a
+                   JOIN feats b ON b.rid = g.record_id_b
+          )
+          SELECT record_id_a, record_id_b,
+                 CASE WHEN n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2
+                           AND norm_a = ini_b
+                      THEN norm_a ELSE norm_b END AS acronym,
+                 CASE WHEN n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2
+                           AND norm_a = ini_b
+                      THEN norm_b ELSE norm_a END AS expansion
+          FROM j
+          WHERE (n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2 AND norm_a = ini_b)
+             OR (n_b = 1 AND n_a >= 2 AND length(norm_b) >= 2 AND norm_b = ini_a)
+        """)
 def _er_acronym_matches(spark: SparkSession, sf: str) -> DataFrame:
     """Acronym⇄expansion comparator over the gold pairs: flags pairs where
     one side's single token equals the other side's token INITIALS
@@ -6452,7 +8215,31 @@ def _er_acronym_matches(spark: SparkSession, sf: str) -> DataFrame:
     return acronym_matches(g, m, "mention_id", "mention")
 
 
-@_q("er_reliability_bins", None)  # oracle injected below (fixture path)
+@_q("er_reliability_bins", f"""
+          WITH m AS (
+            SELECT mention_id,
+                   list_distinct(string_split({_NORM_M}, ' ')) AS t
+            FROM read_parquet('{_MEN}')
+          ),
+          jj AS (
+            -- one row per gold-pair ROW (duplicates preserved, mirroring
+            -- the Spark join); jaccard is the score_pairs parity rounding
+            SELECT g.same_entity,
+                   round(len(list_intersect(ma.t, mb.t))::double
+                         / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1),
+                         6) AS jaccard
+            FROM read_parquet('{_GOLD}') g
+            JOIN m ma ON ma.mention_id = g.mention_id_a
+            JOIN m mb ON mb.mention_id = g.mention_id_b
+          ),
+          b AS (SELECT floor(jaccard * 20)::BIGINT AS bin, same_entity FROM jj)
+          SELECT bin, (bin * 50000)::BIGINT AS bin_lo_ppm,
+                 count(*)::BIGINT AS n_pairs,
+                 sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT AS n_match,
+                 ((1000000 * sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT)
+                  // count(*))::BIGINT AS match_rate_ppm
+          FROM b GROUP BY 1
+        """)
 def _er_reliability_bins(spark: SparkSession, sf: str) -> DataFrame:
     """Scorer reliability diagram: labeled gold pairs bucketed by jaccard
     into 20 bins, per-bin empirical match rate in exact ppm — the
@@ -6485,7 +8272,44 @@ def _er_reliability_bins(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_labelfn_votes", None)  # oracle injected below (fixture path)
+@_q("er_labelfn_votes", f"""
+          {_SCORED_CTE},
+          v AS (
+            SELECT record_id_a, record_id_b,
+                   (CASE WHEN norm_eq THEN 1 ELSE 0 END)::BIGINT AS lf_exact,
+                   (CASE WHEN jaccard >= 0.65 THEN 1
+                         WHEN jaccard <= 0.20 THEN -1
+                         ELSE 0 END)::BIGINT AS lf_jaccard,
+                   (CASE WHEN lev_ratio >= 0.93 THEN 1
+                         WHEN lev_ratio <= 0.50 THEN -1
+                         ELSE 0 END)::BIGINT AS lf_lev,
+                   (CASE WHEN abs(length(mention_a) - length(mention_b)) > 10
+                         THEN -1 ELSE 0 END)::BIGINT AS lf_len
+            FROM j
+          ),
+          w AS (
+            SELECT *,
+                   ((CASE WHEN lf_exact = 1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_jaccard = 1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_lev = 1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_len = 1 THEN 1 ELSE 0 END))::BIGINT AS n_pos,
+                   ((CASE WHEN lf_exact = -1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_jaccard = -1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_lev = -1 THEN 1 ELSE 0 END)
+                    + (CASE WHEN lf_len = -1 THEN 1 ELSE 0 END))::BIGINT AS n_neg,
+                   (lf_exact + lf_jaccard + lf_lev + lf_len)::BIGINT AS vote_sum
+            FROM v
+          )
+          SELECT record_id_a, record_id_b, lf_exact, lf_jaccard, lf_lev,
+                 lf_len, n_pos, n_neg, vote_sum,
+                 CASE WHEN vote_sum > 0 THEN 'match'
+                      WHEN vote_sum < 0 THEN 'non_match'
+                      ELSE 'abstain' END AS majority_label,
+                 (CASE WHEN n_pos + n_neg = 0 THEN 0
+                       ELSE (1000000 * greatest(n_pos, n_neg))
+                            // (n_pos + n_neg) END)::BIGINT AS agreement_ppm
+          FROM w
+        """)
 def _er_labelfn_votes(spark: SparkSession, sf: str) -> DataFrame:
     """Snorkel-style weak-supervision labeling: four independent label
     functions (exact-form, jaccard band, levenshtein band, length blocker)
@@ -6500,7 +8324,48 @@ def _er_labelfn_votes(spark: SparkSession, sf: str) -> DataFrame:
     return label_function_votes(scored)
 
 
-@_q("er_otsu_threshold", None)  # oracle injected below (fixture path)
+@_q("er_otsu_threshold", f"""
+          {_SCORED_CTE},
+          s AS (SELECT floor(jaccard * 1000)::BIGINT AS v FROM j),
+          hist AS (
+            SELECT v, count(*)::BIGINT AS cnt, sum(v)::BIGINT AS sm
+            FROM s GROUP BY 1
+          ),
+          tot AS (
+            SELECT sum(cnt)::BIGINT AS n_total, sum(sm)::BIGINT AS s_total
+            FROM hist
+          ),
+          cum AS (
+            SELECT v,
+                   coalesce(sum(cnt) OVER (ORDER BY v
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                     0)::BIGINT AS w0,
+                   coalesce(sum(sm) OVER (ORDER BY v
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                     0)::BIGINT AS s0
+            FROM hist
+          ),
+          x AS (
+            SELECT v, w0, s0,
+                   (n_total - w0)::BIGINT AS w1, (s_total - s0)::BIGINT AS s1
+            FROM cum CROSS JOIN tot WHERE w0 > 0
+          ),
+          y AS (
+            SELECT v, w0, w1,
+                   (s0 // w0)::BIGINT AS mu0, (s1 // w1)::BIGINT AS mu1
+            FROM x
+          ),
+          z AS (
+            SELECT v, w0, w1, mu0, mu1,
+                   (w0 * w1 * (mu0 - mu1) * (mu0 - mu1))::BIGINT AS between_var
+            FROM y
+          )
+          SELECT v AS threshold_milli, w0, w1,
+                 mu0 AS mu0_milli, mu1 AS mu1_milli, between_var,
+                 (row_number() OVER (ORDER BY between_var DESC, v ASC) = 1)
+                   AS is_best
+          FROM z
+        """)
 def _er_otsu_threshold(spark: SparkSession, sf: str) -> DataFrame:
     """Unsupervised match-threshold pick by Otsu's between-class-variance
     maximization over the pair-score histogram — the label-free companion
@@ -6521,7 +8386,42 @@ def _er_otsu_threshold(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_tf_adjustment", None)  # oracle injected below (fixture path)
+@_q("er_tf_adjustment", f"""
+          WITH v AS (
+            SELECT mention_id AS rid, string_split({_NORM_M}, ' ')[1] AS val
+            FROM read_parquet('{_MEN}')
+          ),
+          tf AS (SELECT val, count(*)::BIGINT AS df FROM v GROUP BY 1),
+          u AS (
+            SELECT (SELECT count(*)::BIGINT FROM v) AS n,
+                   (SELECT sum((df * (df - 1)) // 2)::BIGINT FROM tf)
+                     AS agree_pairs
+          ),
+          u2 AS (
+            SELECT n,
+                   ((1000000 * agree_pairs)
+                    // greatest((n * (n - 1)) // 2, 1))::BIGINT AS u_global_ppm
+            FROM u
+          ),
+          g AS (
+            SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+            FROM read_parquet('{_GOLD}')
+            WHERE mention_id_a != mention_id_b
+          ),
+          j AS (
+            SELECT g.record_id_a, g.record_id_b, a.val
+            FROM g JOIN v a ON a.rid = g.record_id_a
+                   JOIN v b ON b.rid = g.record_id_b
+            WHERE a.val = b.val
+          )
+          SELECT j.record_id_a, j.record_id_b, j.val, tf.df,
+                 ((1000000 * tf.df) // u2.n)::BIGINT AS tf_ppm,
+                 u2.u_global_ppm,
+                 ((1000000 * u2.u_global_ppm)
+                  // greatest((1000000 * tf.df) // u2.n, 1))::BIGINT
+                   AS tf_adj_ratio_ppm
+          FROM j JOIN tf USING (val) CROSS JOIN u2
+        """)
 def _er_tf_adjustment(spark: SparkSession, sf: str) -> DataFrame:
     """Splink-style term-frequency adjustment on the gold pairs: pairs
     agreeing on the normalized first mention token get the value's exact
@@ -6541,7 +8441,96 @@ def _er_tf_adjustment(spark: SparkSession, sf: str) -> DataFrame:
     return tf_adjusted_agreements(g, m)
 
 
-@_q("er_em_weights", None)  # oracle injected below (fixture path)
+# er_em_weights oracle: the EM iterations unroll mechanically over the
+# 2^k-row contingency table, so the CTE chain is GENERATED per
+# iteration — byte-level twin of em_fs_weights' integer arithmetic.
+_EM_F = ["norm_eq", "jacc_hi", "lev_hi"]
+_EM_WCOLS = ", ".join(
+    f"floor(ln(m_{f}::DOUBLE / u_{f}::DOUBLE) * 1000000.0)::BIGINT AS wa_{f}, "
+    f"floor(ln((1000000 - m_{f})::DOUBLE / (1000000 - u_{f})::DOUBLE)"
+    f" * 1000000.0)::BIGINT AS wd_{f}"
+    for f in _EM_F
+)
+_EM_ACOLS = ", ".join(
+    f"sum(CASE WHEN {f} THEN n * pw ELSE 0 END)::BIGINT AS swx_{f}, "
+    f"sum(CASE WHEN {f} THEN n * (1000000 - pw) ELSE 0 END)::BIGINT AS snx_{f}"
+    for f in _EM_F
+)
+_EM_PCOLS = ", ".join(
+    f"greatest(least((1000000 * swx_{f}) // greatest(sw, 1), 999999), 1)::BIGINT AS m_{f}, "
+    f"greatest(least((1000000 * snx_{f}) // greatest(1000000 * nn - sw, 1), 999999), 1)::BIGINT AS u_{f}"
+    for f in _EM_F
+)
+
+
+def _em_terms(t: str) -> str:
+    return " + ".join(f"CASE WHEN {t}.{f} THEN w.wa_{f} ELSE w.wd_{f} END" for f in _EM_F)
+
+
+_EM_PARTS = [
+    f"""
+      {_SCORED_CTE},
+      feats AS (
+        SELECT j.norm_eq AS norm_eq,
+               (j.jaccard >= 0.65) AS jacc_hi,
+               (j.lev_ratio >= 0.93) AS lev_hi
+        FROM j
+      ),
+      cells AS (
+        SELECT norm_eq, jacc_hi, lev_hi, count(*)::BIGINT AS n
+        FROM feats GROUP BY 1, 2, 3
+      ),
+      p0 AS (SELECT 500000::BIGINT AS lam, """
+    + ", ".join(
+        f"900000::BIGINT AS m_{f}, 100000::BIGINT AS u_{f}" for f in _EM_F
+    )
+    + ")",
+    *(
+        f"""
+      w{_k} AS (
+        SELECT floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT AS lw,
+               {_EM_WCOLS}
+        FROM p{_k}
+      ),
+      e{_k} AS (
+        SELECT c.norm_eq, c.jacc_hi, c.lev_hi, c.n,
+               floor(1000000.0 / (1.0 + exp(-((w.lw + {_em_terms("c")})::DOUBLE) / 1000000.0)))::BIGINT AS pw
+        FROM cells c CROSS JOIN w{_k} w
+      ),
+      a{_k} AS (
+        SELECT sum(n)::BIGINT AS nn, sum(n * pw)::BIGINT AS sw,
+               {_EM_ACOLS}
+        FROM e{_k}
+      ),
+      p{_k + 1} AS (
+        SELECT greatest(least(sw // greatest(nn, 1), 999999), 1)::BIGINT AS lam,
+               {_EM_PCOLS}
+        FROM a{_k}
+      )"""
+        for _k in range(3)
+    ),
+]
+
+
+@_q(
+    "er_em_weights",
+    ",".join(_EM_PARTS)
+    + """
+      SELECT 'lambda' AS feature, lam AS m_ppm, (1000000 - lam)::BIGINT AS u_ppm,
+             floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT
+               AS weight_micro
+      FROM p3
+      """
+    + "".join(
+        f"""
+      UNION ALL
+      SELECT '{f}', m_{f}, u_{f},
+             floor(ln(m_{f}::DOUBLE / u_{f}::DOUBLE) * 1000000.0)::BIGINT
+      FROM p3
+      """
+        for f in _EM_F
+    ),
+)
 def _er_em_weights(spark: SparkSession, sf: str) -> DataFrame:
     """UNSUPERVISED Fellegi-Sunter calibration: 3-iteration EM over the
     boolean agreement features of the gold pairs WITHOUT their labels
@@ -6558,7 +8547,38 @@ def _er_em_weights(spark: SparkSession, sf: str) -> DataFrame:
     return em_fs_weights(feats, ["norm_eq", "jacc_hi", "lev_hi"])
 
 
-@_q("er_review_queue", None)  # oracle injected below (fixture path)
+# er_review_queue oracle: same generated EM chain to p3, then score
+# every pair with the final weights and uncertainty-sample the band.
+@_q(
+    "er_review_queue",
+    ",".join(_EM_PARTS)
+    + f""",
+      fq AS (
+        SELECT record_id_a, record_id_b,
+               j.norm_eq AS norm_eq,
+               (j.jaccard >= 0.65) AS jacc_hi,
+               (j.lev_ratio >= 0.93) AS lev_hi
+        FROM j
+      ),
+      wf AS (
+        SELECT floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT AS lw,
+               {_EM_WCOLS}
+        FROM p3
+      ),
+      sc AS (
+        SELECT f.record_id_a, f.record_id_b,
+               (w.lw + {_em_terms("f")})::BIGINT AS t_micro,
+               floor(1000000.0 / (1.0 + exp(-((w.lw + {_em_terms("f")})::DOUBLE) / 1000000.0)))::BIGINT
+                 AS posterior_ppm
+        FROM fq f CROSS JOIN wf w
+      )
+      SELECT record_id_a, record_id_b, t_micro, posterior_ppm,
+             abs(posterior_ppm - 500000)::BIGINT AS uncert_ppm
+      FROM sc
+      ORDER BY uncert_ppm ASC, record_id_a ASC, record_id_b ASC
+      LIMIT 100
+    """,
+)
 def _er_review_queue(spark: SparkSession, sf: str) -> DataFrame:
     """Active-learning clerical-review queue: score every pair with the
     EM-calibrated Fellegi-Sunter weights (same unsupervised fit as
@@ -6631,7 +8651,50 @@ def _jaccard_buckets(spark: SparkSession) -> DataFrame:
     )
 
 
-@_q("er_progressive_recall", None)  # oracle injected below (fixture path)
+# the gold pairs per floor(jaccard * 20) bucket: `per` (score_bucket,
+# comparisons, matches), the twin of _jaccard_buckets
+_BUCKET_CTES = f"""m AS (
+        SELECT mention_id, {_NORM_M} AS norm,
+               list_distinct(string_split({_NORM_M}, ' ')) AS t
+        FROM read_parquet('{_MEN}')
+      ),
+      p AS (
+        SELECT g.same_entity::BIGINT AS is_gold,
+               floor(round(len(list_intersect(ma.t, mb.t))::double
+                     / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
+                     * 20)::BIGINT AS score_bucket
+        FROM read_parquet('{_GOLD}') g
+        JOIN m ma ON ma.mention_id = g.mention_id_a
+        JOIN m mb ON mb.mention_id = g.mention_id_b
+      ),
+      per AS (
+        SELECT score_bucket, count(*)::BIGINT AS comparisons,
+               sum(is_gold)::BIGINT AS matches
+        FROM p GROUP BY 1
+      )"""
+
+
+# er_progressive_recall: bucketed score schedule + cumulative window
+# over the tiny per-bucket table (ROWS == RANGE here: buckets distinct).
+@_q("er_progressive_recall", f"""
+      WITH {_BUCKET_CTES},
+      tot AS (
+        SELECT sum(matches)::BIGINT AS tm, sum(comparisons)::BIGINT AS tc
+        FROM per
+      ),
+      c AS (
+        SELECT score_bucket, comparisons, matches,
+               (sum(comparisons) OVER (ORDER BY score_bucket DESC))::BIGINT
+                 AS cum_comparisons,
+               (sum(matches) OVER (ORDER BY score_bucket DESC))::BIGINT
+                 AS cum_matches
+        FROM per
+      )
+      SELECT score_bucket, comparisons, matches, cum_comparisons, cum_matches,
+             ((1000000 * cum_matches) // greatest(tm, 1))::BIGINT AS recall_ppm,
+             ((1000000 * cum_comparisons) // greatest(tc, 1))::BIGINT AS effort_ppm
+      FROM c CROSS JOIN tot
+    """)
 def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
     """Progressive (pay-as-you-go) ER: schedule comparisons by cheap
     token-Jaccard score descending and report the cumulative gold-match
@@ -6669,7 +8732,33 @@ def _er_progressive_recall(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_pr_curve", None)  # oracle injected below (fixture path)
+# er_pr_curve: same bucketed-cumulative shape; F1 floored from the
+# already-floored ppm P/R so both engines agree exactly.
+@_q("er_pr_curve", f"""
+      WITH {_BUCKET_CTES},
+      tot AS (SELECT sum(matches)::BIGINT AS total_gold FROM per),
+      c AS (
+        SELECT score_bucket,
+               (sum(comparisons) OVER (ORDER BY score_bucket DESC))::BIGINT
+                 AS n_predicted,
+               (sum(matches) OVER (ORDER BY score_bucket DESC))::BIGINT
+                 AS n_tp
+        FROM per
+      ),
+      pr AS (
+        SELECT score_bucket, n_predicted, n_tp,
+               ((1000000 * n_tp) // greatest(n_predicted, 1))::BIGINT
+                 AS precision_ppm,
+               ((1000000 * n_tp) // greatest(total_gold, 1))::BIGINT
+                 AS recall_ppm
+        FROM c CROSS JOIN tot
+      )
+      SELECT (score_bucket * 50000)::BIGINT AS threshold_ppm,
+             n_predicted, n_tp, precision_ppm, recall_ppm,
+             ((2 * precision_ppm * recall_ppm)
+              // greatest(precision_ppm + recall_ppm, 1))::BIGINT AS f1_ppm
+      FROM pr
+    """)
 def _er_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     """Threshold-sweep operating curve over the labeled gold pairs:
     precision, recall and F1 of the "match if jaccard >= t" rule at every
@@ -6710,7 +8799,42 @@ def _er_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_collective_boost", None)  # oracle injected below (fixture path)
+# er_collective_boost: leave-one-out doc-pair evidence window; window
+# sums cast ::BIGINT (DuckDB window sums widen to HUGEINT otherwise).
+@_q("er_collective_boost", f"""
+      WITH m AS (
+        SELECT mention_id, doc_id, {_NORM_M} AS norm,
+               list_distinct(string_split({_NORM_M}, ' ')) AS t
+        FROM read_parquet('{_MEN}')
+      ),
+      j AS (
+        SELECT g.mention_id_a AS record_id_a, g.mention_id_b AS record_id_b,
+               ma.doc_id AS doc_a, mb.doc_id AS doc_b,
+               floor(round(len(list_intersect(ma.t, mb.t))::double
+                     / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
+                     * 1000000)::BIGINT AS base_ppm
+        FROM read_parquet('{_GOLD}') g
+        JOIN m ma ON ma.mention_id = g.mention_id_a
+        JOIN m mb ON mb.mention_id = g.mention_id_b
+      ),
+      w AS (
+        SELECT record_id_a, record_id_b, base_ppm,
+               (sum(base_ppm) OVER (PARTITION BY least(doc_a, doc_b),
+                                    greatest(doc_a, doc_b)))::BIGINT AS s,
+               (count(*) OVER (PARTITION BY least(doc_a, doc_b),
+                               greatest(doc_a, doc_b)))::BIGINT AS c
+        FROM j
+      ),
+      n AS (
+        SELECT record_id_a, record_id_b, base_ppm,
+               (CASE WHEN c > 1 THEN (s - base_ppm) // (c - 1)
+                     ELSE 0 END)::BIGINT AS neighbor_ppm
+        FROM w
+      )
+      SELECT record_id_a, record_id_b, base_ppm, neighbor_ppm,
+             (base_ppm + neighbor_ppm // 2)::BIGINT AS boosted_ppm
+      FROM n
+    """)
 def _er_collective_boost(spark: SparkSession, sf: str) -> DataFrame:
     """Collective ER (one round of relational evidence propagation,
     Bhattacharya & Getoor): a mention pair's score is boosted by the mean
@@ -6753,7 +8877,33 @@ def _er_collective_boost(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_golden_record", None)  # oracle injected below (fixture path)
+@_q("er_golden_record", f"""
+      {_REACH_CTE},
+      cl AS (SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id),
+      a AS (
+        SELECT cl.record_id, cl.cluster_id, m.norm
+        FROM cl JOIN m ON m.mention_id = cl.record_id
+      ),
+      pf AS (
+        SELECT cluster_id, norm, count(*)::BIGINT AS n_form
+        FROM a GROUP BY 1, 2
+      ),
+      canon AS (
+        SELECT cluster_id, norm AS canonical_text, n_form AS canonical_count,
+               row_number() OVER (PARTITION BY cluster_id
+                                  ORDER BY n_form DESC, norm ASC) AS rn
+        FROM pf
+      ),
+      st AS (
+        SELECT cluster_id, count(*)::BIGINT AS n_members,
+               min(record_id) AS rep_record_id
+        FROM a GROUP BY 1
+      )
+      SELECT c.cluster_id, c.canonical_text, c.canonical_count,
+             s.n_members, s.rep_record_id
+      FROM canon c JOIN st s USING (cluster_id)
+      WHERE c.rn = 1
+    """)
 def _er_golden_record(spark: SparkSession, sf: str) -> DataFrame:
     """Survivorship over the S5 clusters: canonical surface per cluster
     (modal normalized form, lexicographic tie-break) + member count + stable
@@ -7069,7 +9219,43 @@ def _doc_gopher_quality(spark: SparkSession, sf: str) -> DataFrame:
     return gopher_quality(injected, "doc_id", "text")
 
 
-@_q("er_match_rule_report", None)  # oracle injected below (fixture path)
+@_q("er_match_rule_report", f"""
+      {_SCORED_CTE},
+      lab AS (
+        SELECT j.norm_eq AS rule_eq,
+               (j.jaccard >= 0.65) AS rule_jacc,
+               (levenshtein(j.mention_a, j.mention_b)
+                  <= floor(greatest(length(j.mention_a), length(j.mention_b)) * 7 / 100)) AS rule_lev,
+               g.same_entity
+        FROM j JOIN read_parquet('{_GOLD}') g
+          ON g.mention_id_a = j.record_id_a
+         AND g.mention_id_b = j.record_id_b
+      ),
+      agg AS (
+        SELECT
+          sum(CASE WHEN rule_eq THEN 1 ELSE 0 END)::BIGINT AS f_eq,
+          sum(CASE WHEN rule_eq AND NOT (rule_jacc OR rule_lev) THEN 1 ELSE 0 END)::BIGINT AS x_eq,
+          sum(CASE WHEN rule_eq AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_eq,
+          sum(CASE WHEN rule_jacc THEN 1 ELSE 0 END)::BIGINT AS f_jacc,
+          sum(CASE WHEN rule_jacc AND NOT (rule_eq OR rule_lev) THEN 1 ELSE 0 END)::BIGINT AS x_jacc,
+          sum(CASE WHEN rule_jacc AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_jacc,
+          sum(CASE WHEN rule_lev THEN 1 ELSE 0 END)::BIGINT AS f_lev,
+          sum(CASE WHEN rule_lev AND NOT (rule_eq OR rule_jacc) THEN 1 ELSE 0 END)::BIGINT AS x_lev,
+          sum(CASE WHEN rule_lev AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_lev
+        FROM lab
+      ),
+      f AS (
+        SELECT 'rule_eq' AS rule, f_eq AS n_fire, x_eq AS n_exclusive,
+               t_eq AS n_true FROM agg
+        UNION ALL
+        SELECT 'rule_jacc', f_jacc, x_jacc, t_jacc FROM agg
+        UNION ALL
+        SELECT 'rule_lev', f_lev, x_lev, t_lev FROM agg
+      )
+      SELECT rule, n_fire, n_exclusive, n_true,
+             (n_true * 1000000 // greatest(n_fire, 1))::BIGINT AS precision_ppm
+      FROM f
+    """)
 def _er_match_rule_report(spark: SparkSession, sf: str) -> DataFrame:
     """Per-rule ablation of the match decision over labeled gold pairs:
     fire rate, exclusive contribution, and precision of each of the three
@@ -7090,7 +9276,56 @@ def _er_match_rule_report(spark: SparkSession, sf: str) -> DataFrame:
     return match_rule_report(labeled, label_col="same_entity")
 
 
-@_q("er_source_reliability", None)  # oracle injected below (fixture path)
+# each mention's normalized value per world and entity (`base`: src,
+# ent, val) and every entity's majority value (`canon`: ent, canon,
+# n_vals), ties to the larger value
+_CANON_CTES = f"""base AS (
+        SELECT world AS src, label_id AS ent, {_NORM_M} AS val
+        FROM read_parquet('{_MEN}')
+        WHERE label_id IS NOT NULL AND {_NORM_M} IS NOT NULL
+      ),
+      vc AS (SELECT ent, val, count(*)::BIGINT AS c FROM base GROUP BY 1, 2),
+      canon AS (
+        SELECT ent, val AS canon, n_vals FROM (
+          SELECT ent, val, c,
+                 row_number() OVER (PARTITION BY ent
+                                    ORDER BY c DESC, val DESC) AS rn,
+                 count(*) OVER (PARTITION BY ent)::BIGINT AS n_vals
+          FROM vc
+        ) WHERE rn = 1
+      )"""
+
+
+# er_source_reliability: majority-vote canonical per entity via
+# row_number (count DESC, value DESC — the struct-max twin), then
+# per-world agreement; n_multi restricts to contested entities.
+@_q("er_source_reliability", f"""
+      WITH {_CANON_CTES},
+      j AS (
+        SELECT b.src, (b.val = c.canon) AS agree,
+               (c.n_vals > 1) AS multi
+        FROM base b JOIN canon c ON c.ent = b.ent
+      ),
+      agg AS (
+        SELECT src, count(*)::BIGINT AS n_records,
+               coalesce(sum(CASE WHEN agree THEN 1 END), 0)::BIGINT
+                 AS n_agree,
+               coalesce(sum(CASE WHEN multi THEN 1 END), 0)::BIGINT
+                 AS n_multi,
+               coalesce(sum(CASE WHEN multi AND agree THEN 1 END),
+                        0)::BIGINT AS n_multi_agree
+        FROM j GROUP BY 1
+      )
+      SELECT src AS world, n_records, n_agree,
+             (CASE WHEN n_records > 0
+               THEN (1000000 * n_agree) // n_records
+               ELSE 0 END)::BIGINT AS reliability_ppm,
+             n_multi, n_multi_agree,
+             (CASE WHEN n_multi > 0
+               THEN (1000000 * n_multi_agree) // n_multi END)::BIGINT
+               AS multi_reliability_ppm
+      FROM agg
+    """)
 def _er_source_reliability(spark: SparkSession, sf: str) -> DataFrame:
     """Truth-discovery-lite source trust over the labeled mentions:
     majority-vote canonical surface per entity (struct-max tie to the
@@ -7107,7 +9342,52 @@ def _er_source_reliability(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_weighted_vote_fusion", None)  # oracle injected below (fixture path)
+# er_weighted_vote_fusion: round-2 weighted re-election on top of the
+# reliability CTEs; weight = contested reliability (500000 prior).
+@_q("er_weighted_vote_fusion", f"""
+      WITH {_CANON_CTES},
+      jr AS (
+        SELECT b.src, (b.val = c.canon) AS agree, (c.n_vals > 1) AS multi
+        FROM base b JOIN canon c ON c.ent = b.ent
+      ),
+      rel AS (
+        SELECT src,
+               coalesce(
+                 CASE WHEN coalesce(sum(CASE WHEN multi THEN 1 END), 0) > 0
+                   THEN (1000000 *
+                         coalesce(sum(CASE WHEN multi AND agree THEN 1 END),
+                                  0))
+                        // coalesce(sum(CASE WHEN multi THEN 1 END), 0)
+                 END, 500000)::BIGINT AS w
+        FROM jr GROUP BY 1
+      ),
+      maj AS (
+        SELECT ent, val AS canon_majority, n_records, n_values FROM (
+          SELECT ent, val, c,
+                 row_number() OVER (PARTITION BY ent
+                                    ORDER BY c DESC, val DESC) AS rn,
+                 sum(c) OVER (PARTITION BY ent)::BIGINT AS n_records,
+                 count(*) OVER (PARTITION BY ent)::BIGINT AS n_values
+          FROM vc
+        ) WHERE rn = 1
+      ),
+      wv AS (
+        SELECT ent, val AS canon_weighted FROM (
+          SELECT s.ent, s.val,
+                 row_number() OVER (PARTITION BY s.ent
+                                    ORDER BY s.score DESC, s.val DESC) AS rn
+          FROM (
+            SELECT b.ent, b.val, sum(r.w)::BIGINT AS score
+            FROM base b JOIN rel r ON r.src = b.src
+            GROUP BY 1, 2
+          ) s
+        ) WHERE rn = 1
+      )
+      SELECT maj.ent AS label_id, maj.canon_majority, wv.canon_weighted,
+             (maj.canon_majority != wv.canon_weighted) AS changed,
+             maj.n_records, maj.n_values
+      FROM maj JOIN wv ON wv.ent = maj.ent
+    """)
 def _er_weighted_vote_fusion(spark: SparkSession, sf: str) -> DataFrame:
     """Reliability-weighted canonical re-election (truth-discovery round
     2): each entity's surface re-voted with per-world trust weights from
@@ -7124,7 +9404,34 @@ def _er_weighted_vote_fusion(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_blocking_budget", None)  # oracle injected below (fixture path)
+# er_blocking_budget: df-frequency cumulative frontier; window cumsum
+# is the oracle twin of the two-phase running sums.
+@_q("er_blocking_budget", f"""
+      WITH tok AS (
+        SELECT DISTINCT mention_id AS rid, tok
+        FROM (
+          SELECT mention_id,
+                 unnest(list_distinct(string_split({_NORM_M}, ' '))) AS tok
+          FROM read_parquet('{_MEN}')
+        ) WHERE tok != ''
+      ),
+      dfreq AS (SELECT tok, count(*)::BIGINT AS df FROM tok GROUP BY 1),
+      per_df AS (
+        SELECT df, count(*)::BIGINT AS n_token_types,
+               ((df * (df - 1) // 2) * count(*))::BIGINT AS pairs_here
+        FROM dfreq GROUP BY 1
+      )
+      SELECT df AS df_cap, n_token_types,
+             sum(n_token_types) OVER (ORDER BY df
+                                      ROWS UNBOUNDED PRECEDING)::BIGINT
+               AS cum_token_types,
+             sum(pairs_here) OVER (ORDER BY df
+                                   ROWS UNBOUNDED PRECEDING)::BIGINT
+               AS cum_pairs,
+             (sum(pairs_here) OVER (ORDER BY df ROWS UNBOUNDED PRECEDING)
+              <= 100000) AS within_budget
+      FROM per_df
+    """)
 def _er_blocking_budget(spark: SparkSession, sf: str) -> DataFrame:
     """Pair-budget frontier for df-capped token blocking over the
     mention catalogue: per candidate df cap, cumulative kept token
@@ -7137,7 +9444,42 @@ def _er_blocking_budget(spark: SparkSession, sf: str) -> DataFrame:
     return blocking_budget_frontier(m, "mention_id", "mention")
 
 
-@_q("er_sorted_lev", None)  # oracle injected below (fixture path)
+# er_sorted_lev: both engines sort the SAME normalized token lists
+# (list_sort default ASC NULLS-irrelevant here) and rejoin with ' '.
+@_q("er_sorted_lev", f"""
+      WITH m AS (
+        SELECT mention_id AS rid, {_NORM_M} AS nrm,
+               array_to_string(
+                 list_sort(string_split({_NORM_M}, ' ')), ' ') AS srt
+        FROM read_parquet('{_MEN}')
+      ),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      ),
+      j AS (
+        SELECT p.record_id_a, p.record_id_b,
+               a.nrm AS na, a.srt AS sa, b.nrm AS nb, b.srt AS sb
+        FROM p
+        JOIN m a ON a.rid = p.record_id_a
+        JOIN m b ON b.rid = p.record_id_b
+      )
+      SELECT record_id_a, record_id_b,
+             levenshtein(na, nb)::BIGINT AS lev_raw,
+             levenshtein(sa, sb)::BIGINT AS lev_sorted,
+             (levenshtein(na, nb)
+              <= floor(greatest(length(na), length(nb)) * 7 / 100))
+               AS raw_within,
+             (levenshtein(sa, sb)
+              <= floor(greatest(length(sa), length(sb)) * 7 / 100))
+               AS sorted_within,
+             ((levenshtein(sa, sb)
+               <= floor(greatest(length(sa), length(sb)) * 7 / 100))
+              AND NOT (levenshtein(na, nb)
+               <= floor(greatest(length(na), length(nb)) * 7 / 100)))
+               AS bridged
+      FROM j
+    """)
 def _er_sorted_lev(spark: SparkSession, sf: str) -> DataFrame:
     """Token-order-insensitive Levenshtein for the labeled gold pairs:
     edit distance recomputed on the SORTED-token canonical surface, so
@@ -7194,7 +9536,19 @@ def _er_sorted_lev(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_alias_pairs", None)  # oracle injected below (fixture path)
+# er_alias_pairs: distinct (entity, surface) self-join, a < b —
+# the mined alias table with entity-support counts.
+@_q("er_alias_pairs", f"""
+      WITH es AS (
+        SELECT DISTINCT label_id AS ent, {_NORM_M} AS s
+        FROM read_parquet('{_MEN}')
+        WHERE label_id IS NOT NULL AND mention IS NOT NULL
+      )
+      SELECT a.s AS surface_a, b.s AS surface_b,
+             count(*)::BIGINT AS n_entities
+      FROM es a JOIN es b ON a.ent = b.ent AND a.s < b.s
+      GROUP BY 1, 2
+    """)
 def _er_alias_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Alias-pair mining from the labeled mentions: unordered pairs of
     DISTINCT normalized surfaces that co-occur under the same entity —
@@ -7223,7 +9577,20 @@ def _er_alias_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_scorer_auc", None)  # oracle injected below (fixture path)
+# er_scorer_auc: Mann-Whitney AUC of the jaccard scorer vs gold —
+# window-rank twin of the lineitem_mannwhitney oracle over scored j.
+@_q("er_scorer_auc", f"""
+      {_SCORED_CTE},
+      lab AS (
+        SELECT floor(j.jaccard * 1000000)::BIGINT AS vm,
+               (CASE WHEN g.same_entity THEN 1 ELSE 0 END)::BIGINT AS is_a
+        FROM j JOIN read_parquet('{_GOLD}') g
+          ON g.mention_id_a = j.record_id_a
+         AND g.mention_id_b = j.record_id_b
+        WHERE floor(j.jaccard * 1000000) IS NOT NULL
+      ),
+      {_mann_whitney_sql('lab')}
+    """)
 def _er_scorer_auc(spark: SparkSession, sf: str) -> DataFrame:
     """Ranking AUC of the Jaccard scorer against the gold labels — the
     probability a random TRUE pair outscores a random false one (ties
@@ -7241,7 +9608,49 @@ def _er_scorer_auc(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_rule_kappa", None)  # oracle injected below (fixture path)
+# er_rule_kappa: chance-corrected agreement of the two fuzzy rules in
+# ONE exact fraction kappa = (n·g − P)/(n² − P), spearman-staged
+# sign-safe ppm; same scored pair CTE as the rule report.
+@_q("er_rule_kappa", f"""
+      {_SCORED_CTE},
+      lab AS (
+        SELECT (j.jaccard >= 0.65) AS ra,
+               (levenshtein(j.mention_a, j.mention_b)
+                  <= floor(greatest(length(j.mention_a),
+                                    length(j.mention_b)) * 7 / 100)) AS rb
+        FROM j
+      ),
+      agg AS (
+        SELECT count(*)::BIGINT AS n,
+               sum(CASE WHEN ra THEN 1 ELSE 0 END)::BIGINT AS a1,
+               sum(CASE WHEN rb THEN 1 ELSE 0 END)::BIGINT AS b1,
+               sum(CASE WHEN ra = rb THEN 1 ELSE 0 END)::BIGINT AS g
+        FROM lab
+      ),
+      t AS (
+        SELECT n, a1, b1, g,
+               (a1 * b1 + (n - a1) * (n - b1))::BIGINT AS p
+        FROM agg
+      )
+      SELECT n AS n_pairs, a1 AS n_a_pos, b1 AS n_b_pos, g AS n_agree,
+             (CASE WHEN n > 0 THEN (1000000 * g) // n END)::BIGINT AS po_ppm,
+             (CASE WHEN n = 0 THEN NULL
+                   WHEN n * n >= 1000000 THEN p // ((n * n) // 1000000)
+                   ELSE (1000000 * p) // (n * n) END)::BIGINT AS pe_ppm,
+             (CASE WHEN (n * n - p) = 0 THEN NULL
+                   WHEN (n * n - p) >= 1000000 THEN
+                     CASE WHEN (n * g - p) >= 0
+                       THEN (n * g - p) // ((n * n - p) // 1000000)
+                       ELSE -((-(n * g - p)) // ((n * n - p) // 1000000))
+                     END
+                   ELSE
+                     CASE WHEN (n * g - p) >= 0
+                       THEN (1000000 * (n * g - p)) // (n * n - p)
+                       ELSE -((-(1000000 * (n * g - p))) // (n * n - p))
+                     END
+              END)::BIGINT AS kappa_ppm
+      FROM t
+    """)
 def _er_rule_kappa(spark: SparkSession, sf: str) -> DataFrame:
     """Cohen's kappa between the two fuzzy match rules (token-Jaccard vs
     banded Levenshtein) over the labeled gold pairs — chance-corrected
@@ -7262,7 +9671,42 @@ def _er_rule_kappa(spark: SparkSession, sf: str) -> DataFrame:
     return rater_kappa(labeled, "rule_jacc", "rule_lev")
 
 
-@_q("er_token_cosine", None)  # oracle injected below (fixture path)
+@_q("er_token_cosine", f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+      ),
+      tf AS (
+        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
+        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
+        GROUP BY 1, 2
+      ),
+      norms AS (
+        SELECT record_id, sum(tf * tf)::BIGINT AS norm_sq FROM tf GROUP BY 1
+      ),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      ),
+      dots AS (
+        SELECT p.record_id_a, p.record_id_b,
+               sum(a.tf * b.tf)::BIGINT AS dot
+        FROM p
+        JOIN tf a ON a.record_id = p.record_id_a
+        JOIN tf b ON b.record_id = p.record_id_b AND b.tok = a.tok
+        GROUP BY 1, 2
+      )
+      SELECT p.record_id_a, p.record_id_b,
+             coalesce(d.dot, 0)::BIGINT AS dot,
+             na.norm_sq::BIGINT AS norm_a,
+             nb.norm_sq::BIGINT AS norm_b,
+             round(coalesce(d.dot, 0)::double
+                   / sqrt((na.norm_sq * nb.norm_sq)::double), 6) AS cosine
+      FROM p
+      LEFT JOIN dots d
+        ON d.record_id_a = p.record_id_a AND d.record_id_b = p.record_id_b
+      JOIN norms na ON na.record_id = p.record_id_a
+      JOIN norms nb ON nb.record_id = p.record_id_b
+    """)
 def _er_token_cosine(spark: SparkSession, sf: str) -> DataFrame:
     """Exact sparse token-count cosine for the labeled gold pairs —
     relational sparse algebra (tf rows + (pair, token) equi-join), exact
@@ -7273,7 +9717,46 @@ def _er_token_cosine(spark: SparkSession, sf: str) -> DataFrame:
     return token_cosine_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_nickname_matches", None)  # oracle injected below (fixture path)
+# er_nickname_matches: both engines canonicalize through the SAME
+# dictionary constant (VALUES generated from scoring.NICKNAMES);
+# order-preserving reassembly via list(... ORDER BY pos).
+def _nickname_values() -> str:
+    from blink_spark.operators.scoring import NICKNAMES
+
+    return ", ".join(f"('{k}', '{v}')" for k, v in sorted(NICKNAMES.items()))
+
+
+@_q("er_nickname_matches", f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+      ),
+      toks AS (
+        SELECT mention_id AS record_id,
+               generate_subscripts(string_split(norm, ' '), 1) AS pos,
+               unnest(string_split(norm, ' ')) AS tok
+        FROM m
+      ),
+      dict AS (SELECT * FROM (VALUES {_nickname_values()}) AS d(nick, canon)),
+      can AS (
+        SELECT record_id,
+               array_to_string(list(coalesce(d.canon, t.tok)
+                                    ORDER BY t.pos), ' ') AS can,
+               array_to_string(list(t.tok ORDER BY t.pos), ' ') AS nrm
+        FROM toks t LEFT JOIN dict d ON d.nick = t.tok
+        GROUP BY 1
+      ),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      )
+      SELECT p.record_id_a, p.record_id_b,
+             (a.nrm = b.nrm) AS norm_eq,
+             (a.can = b.can) AS nickname_eq,
+             (a.can = b.can AND a.nrm != b.nrm) AS bridged
+      FROM p
+      JOIN can a ON a.record_id = p.record_id_a
+      JOIN can b ON b.record_id = p.record_id_b
+    """)
 def _er_nickname_matches(spark: SparkSession, sf: str) -> DataFrame:
     """Nickname-aware equality over the labeled gold pairs: each token
     canonicalized through the built-in hypocorism dictionary ('bill' ->
@@ -7286,7 +9769,45 @@ def _er_nickname_matches(spark: SparkSession, sf: str) -> DataFrame:
     return nickname_matches(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_weighted_jaccard", None)  # oracle injected below (fixture path)
+# er_weighted_jaccard: multiset Jaccard via the same (pair, token)
+# inner equi-join — sum-max reconstructed as bag_a + bag_b - sum-min,
+# so no full-outer join enters either plan.
+@_q("er_weighted_jaccard", f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+      ),
+      tf AS (
+        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
+        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
+        GROUP BY 1, 2
+      ),
+      bags AS (SELECT record_id, sum(tf)::BIGINT AS bag FROM tf GROUP BY 1),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      ),
+      inter AS (
+        SELECT p.record_id_a, p.record_id_b,
+               sum(least(a.tf, b.tf))::BIGINT AS inter_min
+        FROM p
+        JOIN tf a ON a.record_id = p.record_id_a
+        JOIN tf b ON b.record_id = p.record_id_b AND b.tok = a.tok
+        GROUP BY 1, 2
+      )
+      SELECT p.record_id_a, p.record_id_b,
+             coalesce(i.inter_min, 0)::BIGINT AS inter_min,
+             ba.bag::BIGINT AS bag_a,
+             bb.bag::BIGINT AS bag_b,
+             (CASE WHEN ba.bag + bb.bag - coalesce(i.inter_min, 0) > 0 THEN
+                (1000000 * coalesce(i.inter_min, 0))
+                // (ba.bag + bb.bag - coalesce(i.inter_min, 0))
+              ELSE 0 END)::BIGINT AS weighted_jaccard_ppm
+      FROM p
+      LEFT JOIN inter i
+        ON i.record_id_a = p.record_id_a AND i.record_id_b = p.record_id_b
+      JOIN bags ba ON ba.record_id = p.record_id_a
+      JOIN bags bb ON bb.record_id = p.record_id_b
+    """)
 def _er_weighted_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     """Weighted (multiset/Ruzicka) Jaccard for the labeled gold pairs:
     sum-min over sum-max of token bags, exact integer ppm — the
@@ -7299,7 +9820,60 @@ def _er_weighted_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return weighted_jaccard_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_tfidf_cosine", None)  # oracle injected below (fixture path)
+# tf-idf weights `w` (record_id, tok, x), their squared norms and the gold
+# pairs `p`, shared by er_tfidf_cosine and er_soft_tfidf: components
+# weighted by the rational idf surrogate (1000*N)//df — integer floor div
+# on positives is identical across engines.
+_TFIDF_W_CTE = f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+      ),
+      tf AS (
+        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
+        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
+        GROUP BY 1, 2
+      ),
+      nrec AS (SELECT count(DISTINCT mention_id)::BIGINT AS n FROM m),
+      dfk AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY 1),
+      w AS (
+        SELECT tf.record_id, tf.tok,
+               (tf.tf * ((1000 * nrec.n) // dfk.df))::BIGINT AS x
+        FROM tf JOIN dfk ON dfk.tok = tf.tok CROSS JOIN nrec
+      ),
+      norms AS (
+        SELECT record_id, sum(x * x)::BIGINT AS norm_sq FROM w GROUP BY 1
+      ),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      )"""
+
+
+# er_tfidf_cosine: same sparse-algebra shape as er_token_cosine; norms
+# kept as separate sqrt factors so the product can't overflow BIGINT.
+@_q("er_tfidf_cosine", f"""
+      {_TFIDF_W_CTE},
+      dots AS (
+        SELECT p.record_id_a, p.record_id_b,
+               sum(a.x * b.x)::BIGINT AS dot
+        FROM p
+        JOIN w a ON a.record_id = p.record_id_a
+        JOIN w b ON b.record_id = p.record_id_b AND b.tok = a.tok
+        GROUP BY 1, 2
+      )
+      SELECT p.record_id_a, p.record_id_b,
+             coalesce(d.dot, 0)::BIGINT AS dot,
+             na.norm_sq::BIGINT AS norm_a,
+             nb.norm_sq::BIGINT AS norm_b,
+             round(coalesce(d.dot, 0)::double
+                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
+               AS tfidf_cosine
+      FROM p
+      LEFT JOIN dots d
+        ON d.record_id_a = p.record_id_a AND d.record_id_b = p.record_id_b
+      JOIN norms na ON na.record_id = p.record_id_a
+      JOIN norms nb ON nb.record_id = p.record_id_b
+    """)
 def _er_tfidf_cosine(spark: SparkSession, sf: str) -> DataFrame:
     """IDF-weighted sparse token cosine (WHIRL soft-join comparator,
     Cohen SIGMOD 1998) for the labeled gold pairs — rare tokens dominate,
@@ -7311,7 +9885,62 @@ def _er_tfidf_cosine(spark: SparkSession, sf: str) -> DataFrame:
     return tfidf_cosine_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_soft_tfidf", None)  # oracle injected below (fixture path)
+# er_soft_tfidf: shares the tfidf weight CTEs; the token bridge is the
+# per-pair token cross with integer-ppm lev similarity, best match per
+# left token is a lexicographic struct max, and the partner weight is
+# scaled BEFORE the product ((x*s)//1e6) to stay in the x_a*x_b
+# overflow regime. Both directions mirrored.
+@_q("er_soft_tfidf", f"""
+      {_TFIDF_W_CTE},
+      bridge AS (
+        SELECT p.record_id_a, p.record_id_b,
+               a.tok AS tok_a, a.x AS x_a, b.tok AS tok_b, b.x AS x_b,
+               ((greatest(length(a.tok), length(b.tok), 1)
+                 - levenshtein(a.tok, b.tok)) * 1000000)
+                 // greatest(length(a.tok), length(b.tok), 1) AS sim_ppm
+        FROM p
+        JOIN w a ON a.record_id = p.record_id_a
+        JOIN w b ON b.record_id = p.record_id_b
+      ),
+      fb AS (SELECT * FROM bridge WHERE sim_ppm >= 900000),
+      best_ab AS (
+        SELECT record_id_a, record_id_b, tok_a, x_a,
+               max({{s: sim_ppm, x: x_b}}) AS mm
+        FROM fb GROUP BY 1, 2, 3, 4
+      ),
+      dot_ab AS (
+        SELECT record_id_a, record_id_b,
+               sum(x_a * ((mm.x * mm.s) // 1000000))::BIGINT AS soft_dot_ab
+        FROM best_ab GROUP BY 1, 2
+      ),
+      best_ba AS (
+        SELECT record_id_a, record_id_b, tok_b, x_b,
+               max({{s: sim_ppm, x: x_a}}) AS mm
+        FROM fb GROUP BY 1, 2, 3, 4
+      ),
+      dot_ba AS (
+        SELECT record_id_a, record_id_b,
+               sum(x_b * ((mm.x * mm.s) // 1000000))::BIGINT AS soft_dot_ba
+        FROM best_ba GROUP BY 1, 2
+      )
+      SELECT p.record_id_a, p.record_id_b,
+             coalesce(dab.soft_dot_ab, 0)::BIGINT AS soft_dot_ab,
+             coalesce(dba.soft_dot_ba, 0)::BIGINT AS soft_dot_ba,
+             na.norm_sq::BIGINT AS norm_a, nb.norm_sq::BIGINT AS norm_b,
+             round(coalesce(dab.soft_dot_ab, 0)::double
+                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
+               AS soft_tfidf_ab,
+             round(coalesce(dba.soft_dot_ba, 0)::double
+                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
+               AS soft_tfidf_ba
+      FROM p
+      LEFT JOIN dot_ab dab
+        ON dab.record_id_a = p.record_id_a AND dab.record_id_b = p.record_id_b
+      LEFT JOIN dot_ba dba
+        ON dba.record_id_a = p.record_id_a AND dba.record_id_b = p.record_id_b
+      JOIN norms na ON na.record_id = p.record_id_a
+      JOIN norms nb ON nb.record_id = p.record_id_b
+    """)
 def _er_soft_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     """SoftTFIDF hybrid comparator (Cohen/Ravikumar/Fienberg 2003) for
     the labeled gold pairs: tf-idf cosine with fuzzy token bridging —
@@ -7324,7 +9953,114 @@ def _er_soft_tfidf(spark: SparkSession, sf: str) -> DataFrame:
     return soft_tfidf_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_blocking_ensemble", None)  # oracle injected below (fixture path)
+_LETTERS_M = f"regexp_replace({_NORM_M}, '[^a-z]', '', 'g')"
+
+
+def _collapse_digit_runs(code: str) -> str:
+    for d in "123456":
+        code = "regexp_replace(" + code + ", '" + d + "{2,}', '" + d + "', 'g')"
+    return code
+
+
+_PCODE = _collapse_digit_runs(
+    "translate(substring(" + _LETTERS_M + ", 2), "
+    "'bfpvcgjkqsxzdtlmnraeiouyhw', '111122222222334556')"
+)
+
+
+# er_blocking_ensemble: the three strategy pair sets (token-pair cap
+# 4096 / SNM window 3 / phonetic block<=100) canonicalized and unioned;
+# per-strategy coverage, exclusive contribution and recall ppm.
+@_q("er_blocking_ensemble", f"""
+      WITH mm AS (
+        SELECT mention_id, list_sort({_TOKS_M}) AS toks FROM read_parquet('{_MEN}')
+      ),
+      assign AS (
+        SELECT mention_id AS record_id, unnest(
+          CASE WHEN len(toks) >= 2 THEN
+            flatten([[('tp:' || toks[i] || '|' || toks[j])
+                      for j in range(i+1, len(toks)+1)]
+                     for i in range(1, len(toks)+1)])
+          ELSE ['t1:' || toks[1]] END) AS block_key
+        FROM mm
+      ),
+      sized AS (
+        SELECT block_key, record_id,
+               count(*) OVER (PARTITION BY block_key) AS bs
+        FROM assign
+      ),
+      kept AS (SELECT * FROM sized WHERE bs <= 4096),
+      tokp AS (
+        SELECT DISTINCT a.record_id AS u, b.record_id AS v
+        FROM kept a JOIN kept b
+          ON a.block_key = b.block_key AND a.record_id < b.record_id
+      ),
+      snr AS (
+        SELECT mention_id,
+               row_number() OVER (ORDER BY k, mention_id) - 1 AS rnk
+        FROM (SELECT mention_id, {_NORM_M} AS k FROM read_parquet('{_MEN}'))
+      ),
+      snmp AS (
+        SELECT DISTINCT least(a.mention_id, b.mention_id) AS u,
+               greatest(a.mention_id, b.mention_id) AS v
+        FROM snr a JOIN snr b ON b.rnk - a.rnk BETWEEN 1 AND 3
+      ),
+      pk AS (
+        SELECT mention_id,
+               rpad(upper(substring({_LETTERS_M}, 1, 1))
+                    || substring({_PCODE}, 1, 3), 4, '0') AS pkey
+        FROM read_parquet('{_MEN}')
+      ),
+      ps AS (SELECT pkey FROM pk GROUP BY 1 HAVING count(*) <= 100),
+      phop AS (
+        SELECT DISTINCT a.mention_id AS u, b.mention_id AS v
+        FROM ps JOIN pk a ON a.pkey = ps.pkey JOIN pk b ON b.pkey = ps.pkey
+        WHERE a.mention_id < b.mention_id
+      ),
+      strat AS (
+        SELECT 'token_pair' AS strategy, u, v FROM tokp
+        UNION ALL SELECT 'snm', u, v FROM snmp
+        UNION ALL SELECT 'phonetic', u, v FROM phop
+      ),
+      gold_c AS (
+        SELECT DISTINCT least(mention_id_a, mention_id_b) AS u,
+               greatest(mention_id_a, mention_id_b) AS v
+        FROM read_parquet('{_GOLD}') WHERE same_entity
+      ),
+      cov AS (
+        SELECT s.strategy, s.u, s.v
+        FROM strat s JOIN gold_c g ON g.u = s.u AND g.v = s.v
+      ),
+      ns AS (SELECT u, v, count(DISTINCT strategy) AS ns FROM cov GROUP BY 1, 2),
+      tg AS (SELECT count(*)::BIGINT AS total_gold FROM gold_c),
+      base AS (SELECT strategy, count(*)::BIGINT AS n_pairs FROM strat GROUP BY 1),
+      cs AS (
+        SELECT c.strategy, count(*)::BIGINT AS n_gold_covered,
+               sum(CASE WHEN ns.ns = 1 THEN 1 ELSE 0 END)::BIGINT
+                 AS n_gold_unique
+        FROM cov c JOIN ns ON ns.u = c.u AND ns.v = c.v GROUP BY 1
+      ),
+      up AS (
+        SELECT count(*)::BIGINT AS n_pairs
+        FROM (SELECT DISTINCT u, v FROM strat)
+      ),
+      uc AS (
+        SELECT count(*)::BIGINT AS n_gold_covered,
+               sum(CASE WHEN ns = 1 THEN 1 ELSE 0 END)::BIGINT AS n_gold_unique
+        FROM ns
+      )
+      SELECT b.strategy, b.n_pairs,
+             coalesce(cs.n_gold_covered, 0)::BIGINT AS n_gold_covered,
+             coalesce(cs.n_gold_unique, 0)::BIGINT AS n_gold_unique,
+             ((1000000 * coalesce(cs.n_gold_covered, 0))
+              // greatest(tg.total_gold, 1))::BIGINT AS recall_ppm
+      FROM base b LEFT JOIN cs ON cs.strategy = b.strategy CROSS JOIN tg
+      UNION ALL
+      SELECT 'union', up.n_pairs, uc.n_gold_covered, uc.n_gold_unique,
+             ((1000000 * uc.n_gold_covered)
+              // greatest(tg.total_gold, 1))::BIGINT
+      FROM up, uc, tg
+    """)
 def _er_blocking_ensemble(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-pass blocking ensemble report (the standard production RL
     practice, e.g. Papadakis et al. survey): run token-pair, sorted-
@@ -7426,7 +10162,63 @@ def _er_blocking_ensemble(spark: SparkSession, sf: str) -> DataFrame:
     return per.unionByName(union_row)
 
 
-@_q("er_monge_elkan", None)  # oracle injected below (fixture path)
+# er_monge_elkan: bigram sets over the distinct token vocabulary, Dice
+# in integer ppm, max-per-token then floor-mean-per-pair; sums cast
+# ::BIGINT before the floor div (DuckDB widens sums to HUGEINT).
+@_q("er_monge_elkan", f"""
+      WITH m AS (
+        SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+      ),
+      t AS (
+        SELECT DISTINCT mention_id AS rid, unnest(string_split(norm, ' ')) AS tok
+        FROM m
+      ),
+      v AS (SELECT DISTINCT tok FROM t),
+      bg AS (
+        SELECT tok,
+               list_distinct([substr(tok, i, 2)
+                              for i in range(1, greatest(length(tok)-1, 1)+1)])
+                 AS bset
+        FROM v
+      ),
+      p AS (
+        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
+        FROM read_parquet('{_GOLD}')
+      ),
+      s AS (
+        SELECT p.record_id_a, p.record_id_b, a.tok AS tok_a, b.tok AS tok_b,
+               (2000000 * len(list_intersect(x.bset, y.bset)))
+                 // greatest(len(x.bset) + len(y.bset), 1) AS sim_ppm
+        FROM p
+        JOIN t a ON a.rid = p.record_id_a
+        JOIN t b ON b.rid = p.record_id_b
+        JOIN bg x ON x.tok = a.tok
+        JOIN bg y ON y.tok = b.tok
+      ),
+      ma AS (
+        SELECT record_id_a, record_id_b, tok_a, max(sim_ppm) AS ms
+        FROM s GROUP BY 1, 2, 3
+      ),
+      mb AS (
+        SELECT record_id_a, record_id_b, tok_b, max(sim_ppm) AS ms
+        FROM s GROUP BY 1, 2, 3
+      ),
+      ga AS (
+        SELECT record_id_a, record_id_b,
+               (sum(ms)::BIGINT // count(*))::BIGINT AS me_ab_ppm
+        FROM ma GROUP BY 1, 2
+      ),
+      gb AS (
+        SELECT record_id_a, record_id_b,
+               (sum(ms)::BIGINT // count(*))::BIGINT AS me_ba_ppm
+        FROM mb GROUP BY 1, 2
+      )
+      SELECT ga.record_id_a, ga.record_id_b, me_ab_ppm, me_ba_ppm,
+             ((me_ab_ppm + me_ba_ppm) // 2)::BIGINT AS me_sym_ppm
+      FROM ga
+      JOIN gb ON gb.record_id_a = ga.record_id_a
+             AND gb.record_id_b = ga.record_id_b
+    """)
 def _er_monge_elkan(spark: SparkSession, sf: str) -> DataFrame:
     """Monge-Elkan hybrid token comparator over the labeled gold pairs
     (best inner bigram-Dice match per token, averaged; both asymmetric
@@ -7439,7 +10231,24 @@ def _er_monge_elkan(spark: SparkSession, sf: str) -> DataFrame:
     return monge_elkan_pairs(_gold_ids(spark), m, "mention_id", "mention")
 
 
-@_q("er_phonetic_blocks", None)  # oracle injected below (fixture path)
+@_q("er_phonetic_blocks", f"""
+      WITH k AS (
+        SELECT mention_id,
+               rpad(upper(substring({_LETTERS_M}, 1, 1))
+                    || substring({_PCODE}, 1, 3), 4, '0') AS pkey
+        FROM read_parquet('{_MEN}')
+      ),
+      s AS (
+        SELECT pkey, count(*)::BIGINT AS block_size
+        FROM k GROUP BY 1 HAVING count(*) <= 100
+      )
+      SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
+             s.pkey AS phonetic_key, s.block_size
+      FROM s
+      JOIN k a ON a.pkey = s.pkey
+      JOIN k b ON b.pkey = s.pkey
+      WHERE a.mention_id < b.mention_id
+    """)
 def _er_phonetic_blocks(spark: SparkSession, sf: str) -> DataFrame:
     """Phonetic blocking over mention surfaces: simplified-Soundex key
     collision pairs with the cap-and-report block-size discipline — the
@@ -7450,7 +10259,33 @@ def _er_phonetic_blocks(spark: SparkSession, sf: str) -> DataFrame:
     return phonetic_pairs(m, "mention_id", "mention")
 
 
-@_q("er_suffix_blocks", None)  # oracle injected below (fixture path)
+# suffix blocking: suffixes at starts 1..min(len-8+1, 12) of the
+# space-stripped normalized surface (whole string if shorter),
+# blocks of 2..50 records, pair rows collapse nested collisions —
+# identical key set, cap and tie behavior to blocking.suffix_pairs
+@_q("er_suffix_blocks", f"""
+          WITH n0 AS (
+            SELECT mention_id AS record_id,
+                   replace({_norm('mention')}, ' ', '') AS s
+            FROM read_parquet('{_MEN}')
+          ),
+          sx AS (
+            SELECT record_id,
+                   unnest([substr(s, i) for i in
+                           range(1, greatest(least(length(s) - 8 + 1, 12), 1)
+                                    + 1)]) AS sfx
+            FROM n0
+          ),
+          sz AS (SELECT sfx, count(*)::BIGINT AS bs FROM sx GROUP BY 1),
+          ok AS (SELECT f.record_id, f.sfx
+                 FROM sx f JOIN sz ON sz.sfx = f.sfx
+                 WHERE sz.bs BETWEEN 2 AND 50)
+          SELECT a.record_id AS record_id_a, b.record_id AS record_id_b,
+                 count(*)::BIGINT AS n_shared_suffixes,
+                 max(length(a.sfx))::BIGINT AS longest_suffix_len
+          FROM ok a JOIN ok b ON a.sfx = b.sfx AND a.record_id < b.record_id
+          GROUP BY 1, 2
+        """)
 def _er_suffix_blocks(spark: SparkSession, sf: str) -> DataFrame:
     """Suffix-array blocking over mention surfaces (Aizawa & Oyama 2005):
     candidate pairs whose space-stripped normalized surfaces share a
@@ -7465,7 +10300,18 @@ def _er_suffix_blocks(spark: SparkSession, sf: str) -> DataFrame:
     return suffix_pairs(m, "mention_id", "mention")
 
 
-@_q("er_edit_distance_pairs", None)  # oracle injected below (fixture path)
+@_q("er_edit_distance_pairs", f"""
+          WITH m AS (
+            SELECT mention_id, {_NORM_M} AS norm FROM read_parquet('{_MEN}')
+          ),
+          n AS (SELECT mention_id, norm, length(norm) AS len FROM m)
+          SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
+                 levenshtein(a.norm, b.norm)::BIGINT AS lev_dist
+          FROM n a JOIN n b
+            ON b.len BETWEEN a.len - 2 AND a.len + 2
+           AND a.mention_id < b.mention_id
+          WHERE levenshtein(a.norm, b.norm) <= 2
+        """)
 def _er_edit_distance_pairs(spark: SparkSession, sf: str) -> DataFrame:
     """Exact Levenshtein-threshold self-join over mention surfaces (d=2)
     via q-gram prefix filtering + both-short length bands — the typo-class
@@ -7477,7 +10323,77 @@ def _er_edit_distance_pairs(spark: SparkSession, sf: str) -> DataFrame:
     return edit_distance_pairs(m, "mention_id", "mention")
 
 
-@_q("er_cluster_repair", None)  # oracle injected below (fixture path)
+@_q("er_cluster_repair", f"""
+          {_SCORED_CTE},
+          me AS (
+            -- record_id_a != record_id_b mirrors Spark's _canonical u != v
+            -- filter: a self-loop gold pair would otherwise survive here and
+            -- inflate degrees/support (round-4 advice)
+            SELECT greatest(record_id_a, record_id_b) AS u,
+                   least(record_id_a, record_id_b) AS v
+            FROM j WHERE is_match AND record_id_a != record_id_b
+            GROUP BY 1, 2
+          ),
+          adj AS (SELECT u AS n, v AS w FROM me UNION ALL SELECT v, u FROM me),
+          deg AS (SELECT n, count(*) AS deg FROM adj GROUP BY n),
+          supp AS (
+            SELECT DISTINCT e.u, e.v
+            FROM me e
+            JOIN adj x ON x.n = e.u
+            JOIN adj y ON y.n = e.v AND y.w = x.w
+          ),
+          bridges AS (
+            SELECT e.u, e.v FROM me e
+            JOIN deg du ON du.n = e.u
+            JOIN deg dv ON dv.n = e.v
+            WHERE least(du.deg, dv.deg) >= 2
+              AND NOT EXISTS (SELECT 1 FROM supp s WHERE s.u = e.u AND s.v = e.v)
+          ),
+          kept AS (
+            SELECT e.u, e.v FROM me e
+            WHERE NOT EXISTS (SELECT 1 FROM bridges b WHERE b.u = e.u AND b.v = e.v)
+          ),
+          nodes AS (SELECT mention_id AS id FROM read_parquet('{_MEN}')),
+          eb AS (SELECT u AS src, v AS dst FROM me UNION SELECT v, u FROM me),
+          reach_b AS (
+            SELECT id, id AS r FROM nodes
+            UNION
+            SELECT reach_b.id, e.dst FROM reach_b JOIN eb e ON reach_b.r = e.src
+          ),
+          cl_b AS (SELECT id, min(r) AS cluster_id FROM reach_b GROUP BY id),
+          ea AS (SELECT u AS src, v AS dst FROM kept UNION SELECT v, u FROM kept),
+          reach_a AS (
+            SELECT id, id AS r FROM nodes
+            UNION
+            SELECT reach_a.id, e.dst FROM reach_a JOIN ea e ON reach_a.r = e.src
+          ),
+          cl_a AS (SELECT id, min(r) AS sub_id FROM reach_a GROUP BY id),
+          sub AS (
+            SELECT b.cluster_id, a.sub_id, count(*) AS sub_size
+            FROM cl_b b JOIN cl_a a ON a.id = b.id GROUP BY 1, 2
+          ),
+          es AS (
+            SELECT b.cluster_id, count(*)::BIGINT AS n_edges
+            FROM me e JOIN cl_b b ON b.id = e.u GROUP BY 1
+          ),
+          bs AS (
+            SELECT b.cluster_id, count(*)::BIGINT AS n_bridges
+            FROM bridges e JOIN cl_b b ON b.id = e.u GROUP BY 1
+          ),
+          agg AS (
+            SELECT cluster_id, sum(sub_size)::BIGINT AS n_records,
+                   count(*)::BIGINT AS n_clusters_after,
+                   max(sub_size)::BIGINT AS max_size_after
+            FROM sub GROUP BY 1
+          )
+          SELECT a.cluster_id, a.n_records,
+                 coalesce(es.n_edges, 0)::BIGINT AS n_edges,
+                 coalesce(bs.n_bridges, 0)::BIGINT AS n_bridges,
+                 a.n_clusters_after, a.max_size_after
+          FROM agg a
+          LEFT JOIN es USING (cluster_id)
+          LEFT JOIN bs USING (cluster_id)
+        """)
 def _er_cluster_repair(spark: SparkSession, sf: str) -> DataFrame:
     """Chain-merge repair report over the S5 match graph: cut zero-
     triangle-support bridge edges whose endpoints both have other partners
@@ -7492,7 +10408,34 @@ def _er_cluster_repair(spark: SparkSession, sf: str) -> DataFrame:
     return repair_report(m, "mention_id", edges)
 
 
-@_q("er_open_triangles", None)  # oracle injected below (fixture path)
+@_q("er_open_triangles", f"""
+          {_SCORED_CTE},
+          me AS (
+            SELECT greatest(record_id_a, record_id_b) AS u,
+                   least(record_id_a, record_id_b) AS v
+            FROM j WHERE is_match AND record_id_a != record_id_b
+            GROUP BY 1, 2
+          ),
+          adj AS (SELECT u AS n, v AS w FROM me UNION ALL SELECT v, u FROM me),
+          deg AS (SELECT n, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
+          wed AS (
+            SELECT count(*)::BIGINT AS n_nodes,
+                   sum(deg * (deg - 1) // 2)::BIGINT AS n_wedges
+            FROM deg
+          ),
+          t3 AS (
+            SELECT count(*)::BIGINT AS tri3
+            FROM me e
+            JOIN adj x ON x.n = e.u
+            JOIN adj y ON y.n = e.v AND y.w = x.w
+          ),
+          ec AS (SELECT count(*)::BIGINT AS n_edges FROM me)
+          SELECT n_nodes, n_edges, n_wedges,
+                 (tri3 // 3)::BIGINT AS n_triangles,
+                 ((1000000 * tri3) // greatest(n_wedges, 1))::BIGINT
+                   AS closure_ppm
+          FROM wed, t3, ec
+        """)
 def _er_open_triangles(spark: SparkSession, sf: str) -> DataFrame:
     """Wedge/triangle census + global clustering coefficient of the S4
     match graph — the pre-closure structural diagnostic: duplicate groups
@@ -7505,7 +10448,25 @@ def _er_open_triangles(spark: SparkSession, sf: str) -> DataFrame:
     return triangle_census(edges)
 
 
-@_q("er_mutual_best", None)  # oracle injected below (fixture path)
+@_q("er_mutual_best", f"""
+          WITH {_lev_pairs_cte("pairs")},
+          bl AS (
+            SELECT mention_id, entity_id, sim
+            FROM (SELECT *, row_number() OVER (PARTITION BY mention_id
+                                 ORDER BY sim DESC, entity_id ASC) AS rk
+                  FROM pairs)
+            WHERE rk = 1
+          ),
+          br AS (
+            SELECT mention_id, entity_id
+            FROM (SELECT *, row_number() OVER (PARTITION BY entity_id
+                                 ORDER BY sim DESC, mention_id ASC) AS rk
+                  FROM pairs)
+            WHERE rk = 1
+          )
+          SELECT bl.mention_id, bl.entity_id, bl.sim
+          FROM bl JOIN br USING (mention_id, entity_id)
+        """)
 def _er_mutual_best(spark: SparkSession, sf: str) -> DataFrame:
     """Reciprocal top-1 mention↔entity assignment over the blocked
     candidate pairs — keep (mention, entity) only when each is the other's
@@ -7526,7 +10487,53 @@ def _er_mutual_best(spark: SparkSession, sf: str) -> DataFrame:
     return reciprocal_best(pairs, "mention_id", "entity_id", "sim")
 
 
-@_q("er_one_to_one", None)  # oracle injected below (fixture path)
+# er_one_to_one oracle: the greedy rounds unroll mechanically — per
+# round, both row_number mutual-best sides, the matched set with its
+# round stamp, and the endpoint-removed remainder (NOT IN is null-safe
+# here: ids are non-null fixture keys).
+_O2O_PARTS = [
+    f"""
+      WITH {_lev_pairs_cte("p0")}""",
+    *(
+        f"""
+      bl{_k} AS (
+        SELECT mention_id, entity_id, sim
+        FROM (SELECT *, row_number() OVER (PARTITION BY mention_id
+                             ORDER BY sim DESC, entity_id ASC) AS rk
+              FROM p{_k})
+        WHERE rk = 1
+      ),
+      br{_k} AS (
+        SELECT mention_id, entity_id
+        FROM (SELECT *, row_number() OVER (PARTITION BY entity_id
+                             ORDER BY sim DESC, mention_id ASC) AS rk
+              FROM p{_k})
+        WHERE rk = 1
+      ),
+      m{_k} AS (
+        SELECT bl{_k}.mention_id, bl{_k}.entity_id, bl{_k}.sim,
+               {_k + 1}::BIGINT AS match_round
+        FROM bl{_k} JOIN br{_k} USING (mention_id, entity_id)
+      ),
+      p{_k + 1} AS (
+        SELECT * FROM p{_k}
+        WHERE mention_id NOT IN (SELECT mention_id FROM m{_k})
+          AND entity_id NOT IN (SELECT entity_id FROM m{_k})
+      )"""
+        for _k in range(3)
+    ),
+]
+
+
+@_q(
+    "er_one_to_one",
+    ",".join(_O2O_PARTS)
+    + """
+      SELECT * FROM m0
+      UNION ALL SELECT * FROM m1
+      UNION ALL SELECT * FROM m2
+    """,
+)
 def _er_one_to_one(spark: SparkSession, sf: str) -> DataFrame:
     """Greedy 1:1 mention↔entity assignment: three rounds of mutual-best
     with endpoint removal over the same blocked candidate pairs
@@ -7548,7 +10555,32 @@ def _er_one_to_one(spark: SparkSession, sf: str) -> DataFrame:
     return greedy_one_to_one(pairs, "mention_id", "entity_id", "sim")
 
 
-@_q("er_meta_blocking", None)  # oracle injected below (fixture path)
+@_q("er_meta_blocking", f"""
+          WITH {_BLOCK_SIZED_CTES},
+          kept AS (SELECT * FROM sized WHERE bs BETWEEN 2 AND 1024),
+          edges AS (
+            SELECT a.record_id AS record_id_a, b.record_id AS record_id_b,
+                   count(*)::BIGINT AS cbs_weight
+            FROM kept a JOIN kept b
+              ON a.block_key = b.block_key AND a.record_id < b.record_id
+            GROUP BY 1, 2
+          ),
+          ends AS (
+            SELECT record_id_a AS node, cbs_weight FROM edges
+            UNION ALL
+            SELECT record_id_b, cbs_weight FROM edges
+          ),
+          stats AS (
+            SELECT node, count(*)::BIGINT AS deg, sum(cbs_weight)::BIGINT AS wsum
+            FROM ends GROUP BY 1
+          )
+          SELECT e.record_id_a, e.record_id_b, e.cbs_weight
+          FROM edges e
+          JOIN stats sa ON sa.node = e.record_id_a
+          JOIN stats sb ON sb.node = e.record_id_b
+          WHERE e.cbs_weight * sa.deg >= sa.wsum
+             OR e.cbs_weight * sb.deg >= sb.wsum
+        """)
 def _er_meta_blocking(spark: SparkSession, sf: str) -> DataFrame:
     """Meta-blocking over the token-pair block collection: CBS edge
     weights (number of common blocks per co-occurring pair) + weighted
@@ -7757,7 +10789,22 @@ def _gold_match_edges(spark: SparkSession) -> DataFrame:
     )
 
 
-@_q("er_degree_distribution", None)  # oracle injected below (fixture path)
+@_q("er_degree_distribution", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          hist AS (SELECT deg, count(*)::BIGINT AS n_records FROM deg GROUP BY 1),
+          tot AS (SELECT sum(n_records)::BIGINT AS n_total FROM hist)
+          SELECT deg, n_records, n_total,
+                 ((1000000 * n_records) // n_total)::BIGINT AS share_ppm
+          FROM hist CROSS JOIN tot
+        """)
 def _er_degree_distribution(spark: SparkSession, sf: str) -> DataFrame:
     """Degree histogram of the gold match graph — the one-glance structural
     health readout before the per-record triage family: a heavy high-degree
@@ -7777,7 +10824,48 @@ def _er_degree_distribution(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_assortativity", None)  # oracle injected below (fixture path)
+# integer-exact PageRank over the gold match graph: every step is
+# BIGINT floor division ('//' here, 'div' in Spark — identical on the
+# non-negative values involved); sums cast ::BIGINT before arithmetic
+# so DuckDB never surfaces HUGEINT to the comparator
+# er_assortativity: spearman window-rank twin over the endpoint
+# degree pairs of the SAME raw/e/deg CTEs.
+@_q("er_assortativity", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          ed AS (
+            SELECT da.deg AS dq, db.deg AS dp
+            FROM e JOIN deg da ON da.u = e.u JOIN deg db ON db.u = e.v
+          ),
+          r AS (
+            SELECT (2 * rank() OVER (ORDER BY dq)
+                    + count(*) OVER (PARTITION BY dq) - 1)::BIGINT AS rq,
+                   (2 * rank() OVER (ORDER BY dp)
+                    + count(*) OVER (PARTITION BY dp) - 1)::BIGINT AS rp
+            FROM ed
+          ),
+          nd AS (
+            SELECT count(*)::BIGINT AS n,
+                   count(DISTINCT dq)::BIGINT AS nda,
+                   count(DISTINCT dp)::BIGINT AS ndb
+            FROM ed
+          ),
+          s AS (SELECT sum((rq - rp) * (rq - rp))::BIGINT AS d2 FROM r),
+          t AS (
+            SELECT n, nda, ndb, d2 AS sum_d2_4x FROM nd, s
+          )
+          SELECT 'deg_u' AS col_a, 'deg_v' AS col_b, n,
+                 nda AS n_distinct_a, ndb AS n_distinct_b, sum_d2_4x,
+                 {_SPEARMAN_RHO_SQL} AS rho_ppm
+          FROM t
+        """)
 def _er_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     """Degree assortativity of the gold match graph (Newman 2002, rank
     form): Spearman rho over the bidirectional edges' endpoint-degree
@@ -7803,7 +10891,35 @@ def _er_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     return spearman_matrix(ed, ["deg_u", "deg_v"])
 
 
-@_q("er_match_pagerank", None)  # oracle injected below (fixture path)
+@_q("er_match_pagerank", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          r0 AS (SELECT u AS n, 1000000::BIGINT AS r FROM deg),
+          r1 AS (
+            SELECT e.v AS n,
+                   (150000 + (850 * (sum(r0.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
+            FROM e JOIN r0 ON r0.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
+          ),
+          r2 AS (
+            SELECT e.v AS n,
+                   (150000 + (850 * (sum(r1.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
+            FROM e JOIN r1 ON r1.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
+          ),
+          r3 AS (
+            SELECT e.v AS n,
+                   (150000 + (850 * (sum(r2.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
+            FROM e JOIN r2 ON r2.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
+          )
+          SELECT r3.n AS record_id, r3.r AS pr_ppm, d.deg AS deg
+          FROM r3 JOIN deg d ON d.u = r3.n
+        """)
 def _er_match_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """Integer-exact 3-iteration PageRank over the gold match graph — hub
     records (rank growing across supersteps) are the over-merge suspects
@@ -7813,7 +10929,51 @@ def _er_match_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     return integer_pagerank(_gold_match_edges(spark))
 
 
-@_q("er_match_kcore", None)  # oracle injected below (fixture path)
+# bounded k-core peel (k=3, 3 rounds), unrolled like the pagerank
+# chain: each round drops sub-k nodes from the previous round's
+# degree table, refilters the edge list to surviving endpoints, and
+# recounts; survivors isolated by a peel stay at degree 0 via the
+# LEFT JOIN so the next round evicts them — identical to the Spark
+# operator's coalesce(d, 0)
+@_q("er_match_kcore", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg0 AS (SELECT u, count(*)::BIGINT AS deg0 FROM e GROUP BY u),
+          d0 AS (SELECT u, deg0 AS deg FROM deg0),
+          dead1 AS (SELECT u, 1::BIGINT AS rr FROM d0 WHERE deg < 3),
+          a1 AS (SELECT u FROM d0 WHERE deg >= 3),
+          e1 AS (SELECT e.u, e.v FROM e
+                 WHERE e.u IN (SELECT u FROM a1) AND e.v IN (SELECT u FROM a1)),
+          d1 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a1 a
+                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e1 GROUP BY u) c
+                 USING (u)),
+          dead2 AS (SELECT u, 2::BIGINT AS rr FROM d1 WHERE deg < 3),
+          a2 AS (SELECT u FROM d1 WHERE deg >= 3),
+          e2 AS (SELECT e1.u, e1.v FROM e1
+                 WHERE e1.u IN (SELECT u FROM a2) AND e1.v IN (SELECT u FROM a2)),
+          d2 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a2 a
+                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e2 GROUP BY u) c
+                 USING (u)),
+          dead3 AS (SELECT u, 3::BIGINT AS rr FROM d2 WHERE deg < 3),
+          a3 AS (SELECT u FROM d2 WHERE deg >= 3),
+          e3 AS (SELECT e2.u, e2.v FROM e2
+                 WHERE e2.u IN (SELECT u FROM a3) AND e2.v IN (SELECT u FROM a3)),
+          d3 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a3 a
+                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e3 GROUP BY u) c
+                 USING (u)),
+          removed AS (SELECT * FROM dead1 UNION ALL SELECT * FROM dead2
+                      UNION ALL SELECT * FROM dead3)
+          SELECT g.u AS record_id, g.deg0 AS deg0,
+                 coalesce(r.rr, 0)::BIGINT AS removed_round,
+                 coalesce(d3.deg, 0)::BIGINT AS core_deg
+          FROM deg0 g LEFT JOIN removed r USING (u) LEFT JOIN d3 USING (u)
+        """)
 def _er_match_kcore(spark: SparkSession, sf: str) -> DataFrame:
     """Bounded k-core peel (k=3, 3 rounds) of the gold match graph — the
     attachment-strength triage: core survivors are safe to auto-merge,
@@ -7823,7 +10983,39 @@ def _er_match_kcore(spark: SparkSession, sf: str) -> DataFrame:
     return kcore_peel(_gold_match_edges(spark))
 
 
-@_q("er_match_bfs_depth", None)  # oracle injected below (fixture path)
+# multi-source BFS from local-minimum seeds, unrolled: each frontier
+# is neighbors-of-previous-frontier minus everything already seen;
+# ids are non-null so the NOT IN anti-joins are safe
+@_q("er_match_bfs_depth", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          nm AS (SELECT u, min(v) AS mn FROM e GROUP BY u),
+          s0 AS (SELECT u FROM nm WHERE u < mn),
+          f1 AS (SELECT DISTINCT e.v AS u FROM e
+                 WHERE e.u IN (SELECT u FROM s0)
+                   AND e.v NOT IN (SELECT u FROM s0)),
+          f2 AS (SELECT DISTINCT e.v AS u FROM e
+                 WHERE e.u IN (SELECT u FROM f1)
+                   AND e.v NOT IN (SELECT u FROM s0)
+                   AND e.v NOT IN (SELECT u FROM f1)),
+          f3 AS (SELECT DISTINCT e.v AS u FROM e
+                 WHERE e.u IN (SELECT u FROM f2)
+                   AND e.v NOT IN (SELECT u FROM s0)
+                   AND e.v NOT IN (SELECT u FROM f1)
+                   AND e.v NOT IN (SELECT u FROM f2)),
+          vis AS (SELECT u, 0::BIGINT AS d FROM s0
+                  UNION ALL SELECT u, 1::BIGINT FROM f1
+                  UNION ALL SELECT u, 2::BIGINT FROM f2
+                  UNION ALL SELECT u, 3::BIGINT FROM f3)
+          SELECT nm.u AS record_id, coalesce(v.d, -1)::BIGINT AS bfs_dist
+          FROM nm LEFT JOIN vis v USING (u)
+        """)
 def _er_match_bfs_depth(spark: SparkSession, sf: str) -> DataFrame:
     """Multi-source BFS hop depth from local-minimum seeds over the gold
     match graph — chain-length triage: records many hops from every seed
@@ -7834,7 +11026,44 @@ def _er_match_bfs_depth(spark: SparkSession, sf: str) -> DataFrame:
     return bfs_seed_distance(_gold_match_edges(spark))
 
 
-@_q("er_missing_links", None)  # oracle injected below (fixture path)
+# the scored match graph: canonical match edges `me` (u < v), both
+# directions `e` (u, v) and each record's degree `deg` (u, deg)
+_MATCH_GRAPH_CTES = f"""{_SCORED_CTE},
+      me AS (
+        SELECT least(record_id_a, record_id_b) AS u,
+               greatest(record_id_a, record_id_b) AS v
+        FROM j WHERE is_match AND record_id_a != record_id_b
+        GROUP BY 1, 2
+      ),
+      e AS (SELECT u, v FROM me UNION ALL SELECT v, u FROM me),
+      deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u)"""
+
+
+# common-neighbor link prediction over the SCORED match graph:
+# same scored/is_match CTE as er_cluster_repair, wedge self-join
+# keyed on the shared neighbor, NOT EXISTS anti-join against the
+# canonical edge set, exact-ppm neighborhood Jaccard in BIGINT
+# floor division
+@_q("er_missing_links", f"""
+          {_MATCH_GRAPH_CTES},
+          w AS (
+            SELECT e1.v AS a, e2.v AS b, count(*)::BIGINT AS cn
+            FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
+            GROUP BY 1, 2
+          ),
+          cand AS (
+            SELECT a, b, cn FROM w
+            WHERE cn >= 2
+              AND NOT EXISTS (SELECT 1 FROM me r WHERE r.u = w.a AND r.v = w.b)
+          )
+          SELECT c.a AS record_id_a, c.b AS record_id_b,
+                 c.cn AS common_neighbors,
+                 ((1000000 * c.cn) // (da.deg + db.deg - c.cn))::BIGINT
+                   AS jaccard_ppm
+          FROM cand c
+          JOIN deg da ON da.u = c.a
+          JOIN deg db ON db.u = c.b
+        """)
 def _er_missing_links(spark: SparkSession, sf: str) -> DataFrame:
     """Common-neighbor link prediction over the SCORED match graph (the
     gold graph is transitively closed, so its missing-link set is empty
@@ -7856,7 +11085,32 @@ def _er_missing_links(spark: SparkSession, sf: str) -> DataFrame:
     return link_prediction(edges)
 
 
-@_q("er_clustering_coefficient", None)  # oracle injected below (fixture path)
+# per-node local clustering coefficient: triangle incidences are
+# charged to the common neighbor w (one charge per vertex per
+# triangle), lcc = 2*tri/(deg*(deg-1)) in exact-ppm floor division
+@_q("er_clustering_coefficient", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
+          tri AS (
+            SELECT a2.v AS w, count(*)::BIGINT AS n_triangles
+            FROM raw r
+            JOIN e a1 ON a1.u = r.u
+            JOIN e a2 ON a2.u = r.v AND a2.v = a1.v
+            GROUP BY 1
+          )
+          SELECT d.u AS record_id, d.deg,
+                 coalesce(t.n_triangles, 0)::BIGINT AS n_triangles,
+                 ((1000000 * 2 * coalesce(t.n_triangles, 0))
+                  // greatest(d.deg * (d.deg - 1), 1))::BIGINT AS lcc_ppm
+          FROM deg d LEFT JOIN tri t ON t.w = d.u
+        """)
 def _er_clustering_coefficient(spark: SparkSession, sf: str) -> DataFrame:
     """Per-record local clustering coefficient (exact ppm) over the gold
     match graph — separates records inside near-cliques (high lcc, safe
@@ -7867,7 +11121,42 @@ def _er_clustering_coefficient(spark: SparkSession, sf: str) -> DataFrame:
     return local_clustering(_gold_match_edges(spark))
 
 
-@_q("er_label_propagation", None)  # oracle injected below (fixture path)
+# synchronous LPA, 3 unrolled sweeps: per-round argmax is
+# row_number ORDER BY c DESC, lbl — identical to Spark's
+# min_by(lbl, struct(-c, lbl)) lexicographic struct order
+@_q("er_label_propagation", f"""
+          WITH raw AS (
+            SELECT least(mention_id_a, mention_id_b) AS u,
+                   greatest(mention_id_a, mention_id_b) AS v
+            FROM read_parquet('{_GOLD}')
+            WHERE same_entity AND mention_id_a != mention_id_b
+            GROUP BY 1, 2
+          ),
+          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
+          l0 AS (SELECT DISTINCT u AS n, u AS lbl FROM e),
+          c1 AS (SELECT e.u, l0.lbl, count(*)::BIGINT AS c
+                 FROM e JOIN l0 ON l0.n = e.v GROUP BY 1, 2),
+          l1 AS (SELECT u AS n, lbl FROM (
+                   SELECT u, lbl, row_number() OVER (
+                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c1)
+                 WHERE rn = 1),
+          c2 AS (SELECT e.u, l1.lbl, count(*)::BIGINT AS c
+                 FROM e JOIN l1 ON l1.n = e.v GROUP BY 1, 2),
+          l2 AS (SELECT u AS n, lbl FROM (
+                   SELECT u, lbl, row_number() OVER (
+                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c2)
+                 WHERE rn = 1),
+          c3 AS (SELECT e.u, l2.lbl, count(*)::BIGINT AS c
+                 FROM e JOIN l2 ON l2.n = e.v GROUP BY 1, 2),
+          l3 AS (SELECT u AS n, lbl FROM (
+                   SELECT u, lbl, row_number() OVER (
+                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c3)
+                 WHERE rn = 1),
+          sz AS (SELECT lbl, count(*)::BIGINT AS community_size
+                 FROM l3 GROUP BY 1)
+          SELECT l3.n AS record_id, l3.lbl AS lp_label, sz.community_size
+          FROM l3 JOIN sz ON sz.lbl = l3.lbl
+        """)
 def _er_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic synchronous label propagation (3 sweeps, most-frequent
     neighbor label, min-label ties) over the gold match graph — community
@@ -7879,7 +11168,37 @@ def _er_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     return label_propagation(_gold_match_edges(spark))
 
 
-@_q("er_cluster_churn", None)  # oracle injected below (fixture path)
+# snapshot diff of the gold entity partition vs the linkage
+# clusters: contingency cells + per-cell split/merge triage
+@_q("er_cluster_churn", f"""
+          {_REACH_CTE},
+          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+          old AS (
+            SELECT mention_id AS record_id, label_id AS old_id
+            FROM read_parquet('{_MEN}')
+          ),
+          cells AS (
+            SELECT o.old_id, c.cluster_id AS new_id, count(*)::BIGINT AS n_records
+            FROM old o JOIN cl c ON c.id = o.record_id GROUP BY 1, 2
+          ),
+          op AS (
+            SELECT old_id, sum(n_records)::BIGINT AS old_total,
+                   count(*)::BIGINT AS old_n_parts
+            FROM cells GROUP BY 1
+          ),
+          np AS (
+            SELECT new_id, sum(n_records)::BIGINT AS new_total,
+                   count(*)::BIGINT AS new_n_parts
+            FROM cells GROUP BY 1
+          )
+          SELECT cells.old_id, cells.new_id, cells.n_records,
+                 op.old_total, np.new_total, op.old_n_parts, np.new_n_parts,
+                 CASE WHEN op.old_n_parts = 1 AND np.new_n_parts = 1 THEN 'stable'
+                      WHEN op.old_n_parts > 1 AND np.new_n_parts > 1 THEN 'reshuffled'
+                      WHEN op.old_n_parts > 1 THEN 'split'
+                      ELSE 'merged' END AS status
+          FROM cells JOIN op USING (old_id) JOIN np USING (new_id)
+        """)
 def _er_cluster_churn(spark: SparkSession, sf: str) -> DataFrame:
     """Clustering snapshot diff: (gold entity partition x S5 linkage
     clusters) contingency cells with per-cell split/merge/stable triage —
@@ -8345,22 +11664,29 @@ def _doc_bloom_novelty(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_orc_mention_scan", None)  # oracle injected below (fixture path)
+# ORC roundtrip scan: oracle runs the identical projection on the
+# parquet fixture (DuckDB reads no ORC; the hash match proves the
+# write->read roundtrip value-exact)
+@_q("er_orc_mention_scan", f"""
+          SELECT mention_id, mention, world, label_id,
+                 len(regexp_split_to_array(trim(mention),
+                     '[\\t\\n\\x0B\\f\\r ]+'))::BIGINT AS n_tokens
+          FROM read_parquet('{_MEN}')
+          WHERE world IN ('world_03', 'world_07') AND label_id % 2 = 0
+        """)
 def _er_orc_mention_scan(spark: SparkSession, sf: str) -> DataFrame:
     """ORC source roundtrip — the mention table written as a
     world-partitioned ORC sink, read back through ``spark.read.orc`` with
     a two-world partition-pruned + stripe-pushdown scan. DuckDB reads no
     ORC, so the oracle runs the identical projection on the parquet
     fixture; the hash match proves the roundtrip is value-exact."""
-    import tempfile
-
     from blink_spark.functions.text import token_count
     from blink_spark.sources.orc import read_orc, write_orc
 
     src = _fx(spark, "mentions").select(
         "mention_id", "mention", "world", "label_id"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="blink_orc_"), "mentions_orc")
+    path = os.path.join(_scratch_dir(), "mentions_orc")
     write_orc(src, path, partition_by="world")
     return (
         read_orc(spark, path)
@@ -8376,7 +11702,30 @@ def _er_orc_mention_scan(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@_q("er_block_filter", None)  # oracle injected below (fixture path)
+# Papadakis block filtering: token blocking, singleton blocks
+# purged, each record keeps its r=3 smallest blocks under the
+# deterministic (block_size asc, block_key asc) rank
+@_q("er_block_filter", f"""
+          WITH b AS (
+            SELECT mention_id AS record_id, unnest({_toks('mention')}) AS block_key
+            FROM read_parquet('{_MEN}')
+          ),
+          sz AS (
+            SELECT block_key, count(*)::BIGINT AS block_size
+            FROM b GROUP BY 1
+          ),
+          r AS (
+            SELECT b.record_id, b.block_key, sz.block_size,
+                   row_number() OVER (
+                     PARTITION BY b.record_id
+                     ORDER BY sz.block_size ASC, b.block_key ASC
+                   )::BIGINT AS rank
+            FROM b JOIN sz USING (block_key)
+            WHERE sz.block_size >= 2
+          )
+          SELECT record_id, block_key, block_size, rank
+          FROM r WHERE rank <= 3
+        """)
 def _er_block_filter(spark: SparkSession, sf: str) -> DataFrame:
     """Papadakis block filtering over token blocking of the mention table:
     each record keeps its 3 smallest (most discriminative) blocks;
@@ -8420,7 +11769,57 @@ def _doc_stratified_split(spark: SparkSession, sf: str) -> DataFrame:
     return stratified_split(_t(spark, sf, "documents"))
 
 
-@_q("er_pprl_bloom_dice", None)  # oracle injected below (fixture path)
+# PPRL Bloom-Dice: bigram decomposition of the normalized mention,
+# 3 salted md5 positions per bigram into a 64-bit filter (set form),
+# pair intersection joined on (pair, pos), exact-ppm Dice with
+# empty-filter pairs kept at 0
+@_q("er_pprl_bloom_dice", f"""
+          WITH mm AS (
+            SELECT mention_id AS rid, {_NORM_M} AS norm
+            FROM read_parquet('{_MEN}')
+          ),
+          g AS (
+            SELECT rid, substr(norm, i, 2) AS gram
+            FROM mm, unnest(range(1, length(norm))) AS t(i)
+          ),
+          pos AS (
+            SELECT DISTINCT rid, pos FROM (
+              SELECT rid,
+                     ('0x' || substr(md5('bf0:' || gram), 1, 8))::BIGINT % 64 AS pos
+              FROM g
+              UNION ALL
+              SELECT rid, ('0x' || substr(md5('bf1:' || gram), 1, 8))::BIGINT % 64
+              FROM g
+              UNION ALL
+              SELECT rid, ('0x' || substr(md5('bf2:' || gram), 1, 8))::BIGINT % 64
+              FROM g
+            )
+          ),
+          bits AS (SELECT rid, count(*)::BIGINT AS bits FROM pos GROUP BY 1),
+          pr AS (
+            SELECT mention_id_a AS a, mention_id_b AS b
+            FROM read_parquet('{_GOLD}')
+          ),
+          inter AS (
+            SELECT pr.a, pr.b, count(*)::BIGINT AS inter_bits
+            FROM pr
+            JOIN pos pa ON pa.rid = pr.a
+            JOIN pos pb ON pb.rid = pr.b AND pb.pos = pa.pos
+            GROUP BY 1, 2
+          )
+          SELECT pr.a AS record_id_a, pr.b AS record_id_b,
+                 coalesce(ba.bits, 0)::BIGINT AS bits_a,
+                 coalesce(bb.bits, 0)::BIGINT AS bits_b,
+                 coalesce(i.inter_bits, 0)::BIGINT AS inter_bits,
+                 (CASE WHEN coalesce(ba.bits, 0) + coalesce(bb.bits, 0) > 0
+                       THEN (2000000 * coalesce(i.inter_bits, 0))
+                            // (coalesce(ba.bits, 0) + coalesce(bb.bits, 0))
+                       ELSE 0 END)::BIGINT AS dice_ppm
+          FROM pr
+          LEFT JOIN inter i ON i.a = pr.a AND i.b = pr.b
+          LEFT JOIN bits ba ON ba.rid = pr.a
+          LEFT JOIN bits bb ON bb.rid = pr.b
+        """)
 def _er_pprl_bloom_dice(spark: SparkSession, sf: str) -> DataFrame:
     """Privacy-preserving linkage scoring: character-bigram Bloom-filter
     encodings (64 bits, 3 salted md5 hashes) Dice-compared in exact ppm
@@ -8432,7 +11831,59 @@ def _er_pprl_bloom_dice(spark: SparkSession, sf: str) -> DataFrame:
     return pprl_bloom_dice(recs, _gold_ids(spark), "mention_id", "mention")
 
 
-@_q("er_group_linkage", None)  # oracle injected below (fixture path)
+# group linkage: same scored doc-pair build as er_collective_boost,
+# orientation canonicalized by swapping (doc, id) tuples together,
+# reciprocal-best row_number pair inside each doc pair, then the
+# exact-integer member Jaccard against TOTAL doc member counts
+@_q("er_group_linkage", f"""
+          WITH m AS (
+            SELECT mention_id, doc_id, {_NORM_M} AS norm,
+                   list_distinct(string_split({_NORM_M}, ' ')) AS t
+            FROM read_parquet('{_MEN}')
+          ),
+          p0 AS (
+            SELECT g.mention_id_a AS ia, g.mention_id_b AS ib,
+                   ma.doc_id AS da, mb.doc_id AS db,
+                   floor(round(len(list_intersect(ma.t, mb.t))::double
+                         / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
+                         * 1000000)::BIGINT AS s
+            FROM read_parquet('{_GOLD}') g
+            JOIN m ma ON ma.mention_id = g.mention_id_a
+            JOIN m mb ON mb.mention_id = g.mention_id_b
+            WHERE ma.doc_id <> mb.doc_id
+          ),
+          p AS (
+            SELECT CASE WHEN da <= db THEN da ELSE db END AS ga,
+                   CASE WHEN da <= db THEN db ELSE da END AS gb,
+                   CASE WHEN da <= db THEN ia ELSE ib END AS la,
+                   CASE WHEN da <= db THEN ib ELSE ia END AS lb,
+                   s
+            FROM p0
+          ),
+          r AS (
+            SELECT ga, gb, s,
+                   row_number() OVER (PARTITION BY ga, gb, la
+                                      ORDER BY s DESC, lb ASC) AS rl,
+                   row_number() OVER (PARTITION BY ga, gb, lb
+                                      ORDER BY s DESC, la ASC) AS rr
+            FROM p
+          ),
+          mm AS (
+            SELECT ga, gb, count(*)::BIGINT AS n_matched
+            FROM r WHERE rl = 1 AND rr = 1 GROUP BY 1, 2
+          ),
+          gs AS (
+            SELECT doc_id, count(*)::BIGINT AS n
+            FROM read_parquet('{_MEN}') GROUP BY 1
+          )
+          SELECT mm.ga AS group_a, mm.gb AS group_b, a.n AS n_a, b.n AS n_b,
+                 mm.n_matched,
+                 ((1000000 * mm.n_matched) // (a.n + b.n - mm.n_matched))::BIGINT
+                   AS group_sim_ppm
+          FROM mm
+          JOIN gs a ON a.doc_id = mm.ga
+          JOIN gs b ON b.doc_id = mm.gb
+        """)
 def _er_group_linkage(spark: SparkSession, sf: str) -> DataFrame:
     """Group linkage: document-pair similarity lifted from mention-level
     match scores — reciprocal-best one-to-one matching within each doc
@@ -8455,7 +11906,36 @@ def _er_group_linkage(spark: SparkSession, sf: str) -> DataFrame:
     return group_linkage(pairs, sizes)
 
 
-@_q("er_dynamic_blocking", None)  # oracle injected below (fixture path)
+# size-capped dynamic blocking: token blocking, in-cap blocks kept
+# at depth 1, oversized blocks split by record-id self-join key
+# extension, sub-blocks re-measured (still-over -> reported),
+# singletons purged at both depths
+@_q("er_dynamic_blocking", f"""
+          WITH b1 AS (
+            SELECT mention_id AS rid, unnest({_toks('mention')}) AS k
+            FROM read_parquet('{_MEN}')
+          ),
+          s1 AS (SELECT k, count(*)::BIGINT AS sz FROM b1 GROUP BY 1),
+          ok1 AS (
+            SELECT k AS block_key, 1::BIGINT AS depth, sz AS block_size,
+                   'ok' AS status
+            FROM s1 WHERE sz BETWEEN 2 AND 32
+          ),
+          ov AS (SELECT k FROM s1 WHERE sz > 32),
+          b2 AS (
+            SELECT b.rid, b.k || '|' || c.k AS k
+            FROM b1 b
+            JOIN ov o ON o.k = b.k
+            JOIN b1 c ON c.rid = b.rid AND c.k <> b.k
+          ),
+          s2 AS (SELECT k, count(*)::BIGINT AS sz FROM b2 GROUP BY 1),
+          ok2 AS (
+            SELECT k AS block_key, 2::BIGINT AS depth, sz AS block_size,
+                   CASE WHEN sz > 32 THEN 'over' ELSE 'split' END AS status
+            FROM s2 WHERE sz >= 2
+          )
+          SELECT * FROM ok1 UNION ALL SELECT * FROM ok2
+        """)
 def _er_dynamic_blocking(spark: SparkSession, sf: str) -> DataFrame:
     """Size-capped dynamic blocking over token blocks of the mention
     table (cap 32): in-cap blocks accepted as-is, oversized blocks split
@@ -8473,7 +11953,28 @@ def _er_dynamic_blocking(spark: SparkSession, sf: str) -> DataFrame:
     return dynamic_blocking(blocks)
 
 
-@_q("er_resource_allocation", None)  # oracle injected below (fixture path)
+# resource-allocation link prediction: same scored match graph and
+# wedge join as er_missing_links, but the neighbor's degree joins
+# on the wedge apex and each common neighbor contributes the exact
+# integer term 1e9 div deg (no libm log anywhere)
+@_q("er_resource_allocation", f"""
+          {_MATCH_GRAPH_CTES},
+          w AS (
+            SELECT e1.v AS a, e2.v AS b, e1.u AS n
+            FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
+          ),
+          t AS (
+            SELECT w.a, w.b, count(*)::BIGINT AS cn,
+                   sum(1000000000 // d.deg)::BIGINT AS ra_nano
+            FROM w JOIN deg d ON d.u = w.n
+            GROUP BY 1, 2
+          )
+          SELECT a AS record_id_a, b AS record_id_b,
+                 cn AS common_neighbors, ra_nano
+          FROM t
+          WHERE cn >= 2
+            AND NOT EXISTS (SELECT 1 FROM me r WHERE r.u = t.a AND r.v = t.b)
+        """)
 def _er_resource_allocation(spark: SparkSession, sf: str) -> DataFrame:
     """Resource-allocation link prediction over the SCORED match graph:
     er_missing_links' recall-repair queue re-ranked so a shared RARE
@@ -8494,7 +11995,80 @@ def _er_resource_allocation(spark: SparkSession, sf: str) -> DataFrame:
     return resource_allocation(edges)
 
 
-@_q("er_swoosh_merge", None)  # oracle injected below (fixture path)
+# bounded R-Swoosh: two unrolled match->CC->union-merge rounds;
+# match = exact-integer Jaccard on df-capped token profiles,
+# CC = recursive-CTE closure, merge = distinct token union
+@_q("er_swoosh_merge", f"""
+          WITH RECURSIVE m AS (
+            SELECT mention_id AS rid, unnest({_toks('mention')}) AS tok
+            FROM read_parquet('{_MEN}')
+          ),
+          kept AS (
+            SELECT tok FROM (SELECT tok, count(*) AS df FROM m GROUP BY 1)
+            WHERE df <= 20
+          ),
+          p0 AS (SELECT rid AS pid, m.tok FROM m JOIN kept USING (tok)),
+          s0 AS (SELECT pid, count(*)::BIGINT AS sz FROM p0 GROUP BY 1),
+          pr0 AS (
+            SELECT a.pid AS pa, b.pid AS pb, count(*)::BIGINT AS ns
+            FROM p0 a JOIN p0 b ON a.tok = b.tok AND a.pid < b.pid
+            GROUP BY 1, 2
+          ),
+          e0 AS (
+            SELECT pa, pb FROM pr0
+            JOIN s0 sa ON sa.pid = pr0.pa
+            JOIN s0 sb ON sb.pid = pr0.pb
+            WHERE (ns * 1000000) // (sa.sz + sb.sz - ns) >= 500000
+          ),
+          ed0 AS (SELECT pa AS src, pb AS dst FROM e0
+                  UNION SELECT pb, pa FROM e0),
+          n0 AS (SELECT DISTINCT pid AS id FROM p0),
+          r0 AS (
+            SELECT id, id AS r FROM n0
+            UNION
+            SELECT r0.id, e.dst FROM r0 JOIN ed0 e ON r0.r = e.src
+          ),
+          c0 AS (SELECT id, min(r) AS np FROM r0 GROUP BY id),
+          p1 AS (SELECT DISTINCT c0.np AS pid, p0.tok
+                 FROM p0 JOIN c0 ON c0.id = p0.pid),
+          s1 AS (SELECT pid, count(*)::BIGINT AS sz FROM p1 GROUP BY 1),
+          pr1 AS (
+            SELECT a.pid AS pa, b.pid AS pb, count(*)::BIGINT AS ns
+            FROM p1 a JOIN p1 b ON a.tok = b.tok AND a.pid < b.pid
+            GROUP BY 1, 2
+          ),
+          e1 AS (
+            SELECT pa, pb FROM pr1
+            JOIN s1 sa ON sa.pid = pr1.pa
+            JOIN s1 sb ON sb.pid = pr1.pb
+            WHERE (ns * 1000000) // (sa.sz + sb.sz - ns) >= 500000
+          ),
+          ed1 AS (SELECT pa AS src, pb AS dst FROM e1
+                  UNION SELECT pb, pa FROM e1),
+          n1 AS (SELECT DISTINCT pid AS id FROM p1),
+          r1 AS (
+            SELECT id, id AS r FROM n1
+            UNION
+            SELECT r1.id, e.dst FROM r1 JOIN ed1 e ON r1.r = e.src
+          ),
+          c1 AS (SELECT id, min(r) AS np FROM r1 GROUP BY id),
+          p2 AS (SELECT DISTINCT c1.np AS pid, p1.tok
+                 FROM p1 JOIN c1 ON c1.id = p1.pid),
+          s2 AS (SELECT pid, count(*)::BIGINT AS psz FROM p2 GROUP BY 1),
+          map0 AS (SELECT mention_id AS record_id, mention_id AS pid
+                   FROM read_parquet('{_MEN}')),
+          map1 AS (
+            SELECT record_id, coalesce(c0.np, map0.pid) AS pid
+            FROM map0 LEFT JOIN c0 ON c0.id = map0.pid
+          ),
+          map2 AS (
+            SELECT record_id, coalesce(c1.np, map1.pid) AS pid
+            FROM map1 LEFT JOIN c1 ON c1.id = map1.pid
+          )
+          SELECT record_id, map2.pid AS profile_id,
+                 coalesce(s2.psz, 0)::BIGINT AS profile_n_tokens
+          FROM map2 LEFT JOIN s2 ON s2.pid = map2.pid
+        """)
 def _er_swoosh_merge(spark: SparkSession, sf: str) -> DataFrame:
     """Bounded R-Swoosh over the mention table: two match→CC→union-merge
     supersteps with exact-integer Jaccard matching on df-capped token
@@ -8507,7 +12081,25 @@ def _er_swoosh_merge(spark: SparkSession, sf: str) -> DataFrame:
     return swoosh_merge(m, "mention_id", "mention")
 
 
-@_q("er_canopy_assign", None)  # oracle injected below (fixture path)
+# deterministic canopy blocking: token df filter, min-id center
+# election per informative token, (center, record) shared-token
+# counts with the two-radius tight/loose contract
+@_q("er_canopy_assign", f"""
+          WITH m AS (
+            SELECT mention_id AS record_id, {_toks('mention')} AS t
+            FROM read_parquet('{_MEN}')
+          ),
+          tk AS (SELECT record_id, unnest(t) AS tok FROM m),
+          dfq AS (SELECT tok, count(*)::BIGINT AS df FROM tk GROUP BY tok),
+          kept AS (SELECT tok FROM dfq WHERE df >= 2 AND df <= 20),
+          ktk AS (SELECT tk.record_id, tk.tok FROM tk JOIN kept USING (tok)),
+          ctr AS (SELECT tok, min(record_id) AS center_id FROM ktk GROUP BY tok)
+          SELECT c.center_id, k.record_id,
+                 count(*)::BIGINT AS n_shared,
+                 (count(*) >= 2) AS is_tight
+          FROM ktk k JOIN ctr c USING (tok)
+          GROUP BY 1, 2
+        """)
 def _er_canopy_assign(spark: SparkSession, sf: str) -> DataFrame:
     """Deterministic canopy blocking over the mention table: each
     informative token (df in [2, 20]) elects its minimum record id as a
@@ -8704,10 +12296,9 @@ def _jsonl_fixture() -> str:
 
     import pandas as pd
 
-    path = os.path.join(FIXTURE_DIR, "entities.jsonl")
-    if not os.path.exists(path):
+    if not os.path.exists(_ENTITIES_JSONL):
         ents = pd.read_parquet(_fixtures()["entities"])
-        with open(path, "w") as f:
+        with open(_ENTITIES_JSONL, "w") as f:
             for r in ents.itertuples(index=False):
                 f.write(
                     _json.dumps(
@@ -8719,3715 +12310,9 @@ def _jsonl_fixture() -> str:
                     )
                     + "\n"
                 )
-    return path
+    return _ENTITIES_JSONL
 
 
-def _er_oracles() -> dict[str, str]:
-    doc = _fxp("documents")
-    men = _fxp("mentions")
-    ent = _fxp("entities")
-    gold = _fxp("gold_pairs")
-    qst = _fxp("questions")
-    kb = _fxp("kb_raw")
-    wik = _fixtures()["wikidata_plain"].replace("'", "''")
-    sfx = _fxp("sentences_fx")
-    jsonl = _jsonl_fixture().replace("'", "''")
-    mentions_cte = _er_oracle_mentions_sql()
-
-    toks_m = "list_distinct(string_split(mention, ' '))"
-    # Boundary-exact mirror of blink_spark.operators.scoring.score_pairs:
-    # Spark decides on (a) normalized-text equality, (b) jaccard ROUNDED to
-    # 6dp >= 0.65, (c) banded integer levenshtein dist <= floor(7*maxlen/100).
-    # The oracle encodes the IDENTICAL integer/rounded comparisons so both
-    # engines agree at threshold boundaries (e.g. d/m exactly 0.07).
-    _norm_m = "trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))"
-    match_expr = (
-        "(ma.norm = mb.norm) OR "
-        "(round(len(list_intersect(ta, tb))::double"
-        " / greatest(len(list_distinct(list_concat(ta, tb))), 1), 6) >= 0.65) OR "
-        "(levenshtein(ma.norm, mb.norm)"
-        " <= floor(greatest(length(ma.norm), length(mb.norm)) * 7 / 100))"
-    )
-    scored_cte = f"""
-      WITH RECURSIVE m AS (
-        SELECT mention_id, {_norm_m} AS norm,
-               list_distinct(string_split({_norm_m}, ' ')) AS t
-        FROM read_parquet('{men}')
-      ),
-      j AS (
-        SELECT g.mention_id_a AS record_id_a, g.mention_id_b AS record_id_b,
-               ma.norm AS mention_a, mb.norm AS mention_b,
-               ma.t AS ta, mb.t AS tb,
-               ({match_expr}) AS is_match,
-               (ma.norm = mb.norm) AS norm_eq,
-               round(len(list_intersect(ta, tb))::double
-                     / greatest(len(list_distinct(list_concat(ta, tb))), 1), 6) AS jaccard,
-               round(1.0 - levenshtein(ma.norm, mb.norm)::double
-                     / greatest(length(ma.norm), length(mb.norm), 1), 6) AS lev_ratio
-        FROM read_parquet('{gold}') g
-        JOIN m ma ON ma.mention_id = g.mention_id_a
-        JOIN m mb ON mb.mention_id = g.mention_id_b
-      )
-    """
-
-    # the scored match graph: canonical match edges `me` (u < v), both
-    # directions `e` (u, v) and each record's degree `deg` (u, deg)
-    match_graph_ctes = f"""{scored_cte},
-      me AS (
-        SELECT least(record_id_a, record_id_b) AS u,
-               greatest(record_id_a, record_id_b) AS v
-        FROM j WHERE is_match AND record_id_a != record_id_b
-        GROUP BY 1, 2
-      ),
-      e AS (SELECT u, v FROM me UNION ALL SELECT v, u FROM me),
-      deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u)"""
-
-    def lev_pairs_cte(name: str) -> str:
-        """mention x entity candidates: first-4-char blocks ``mb``/``eb``
-        and ``name`` (mention_id, entity_id, sim), the normalized
-        lev-ratio mirror of similarity.lev_ratio."""
-        return f"""mb AS (
-        SELECT mention_id, mention, substr(string_split(mention, ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{men}')
-      ),
-      eb AS (
-        SELECT entity_id, lower(title) AS title_l,
-               substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-        FROM read_parquet('{ent}')
-      ),
-      {name} AS (
-        SELECT mention_id, entity_id,
-               round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                          THEN 1.0 - levenshtein(mn, tn)::double
-                               / greatest(length(mn), length(tn))
-                          ELSE 1.0 END, 6) AS sim
-        FROM (SELECT *,
-                trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-              FROM mb JOIN eb USING (bk))
-      )"""
-    # transitive closure of the scored match graph, the recursive-CTE twin of
-    # assign_clusters: `reach` (id, r) over every mention
-    reach_cte = f"""
-      {scored_cte},
-      edges AS (
-        SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-        UNION
-        SELECT record_id_b, record_id_a FROM j WHERE is_match
-      ),
-      nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-      reach AS (
-        SELECT id, id AS r FROM nodes
-        UNION
-        SELECT reach.id, e.dst FROM reach JOIN edges e ON reach.r = e.src
-      )"""
-    clusters_sql = f"""
-      {reach_cte}
-      SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id
-    """
-    snm_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS k FROM read_parquet('{men}')
-      ),
-      r AS (
-        SELECT mention_id,
-               row_number() OVER (ORDER BY k, mention_id) - 1 AS rnk
-        FROM m
-      )
-      SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
-             (b.rnk - a.rnk)::BIGINT AS rank_dist
-      FROM r a JOIN r b ON b.rnk - a.rnk BETWEEN 1 AND 3
-    """
-    fs_sql = f"""
-      {scored_cte},
-      lab AS (
-        SELECT j.norm_eq,
-               (j.jaccard >= 0.65) AS jacc_hi,
-               (j.lev_ratio >= 0.93) AS lev_hi,
-               g.same_entity
-        FROM j JOIN read_parquet('{gold}') g
-          ON g.mention_id_a = j.record_id_a
-         AND g.mention_id_b = j.record_id_b
-      ),
-      agg AS (
-        SELECT
-          sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT AS n_m,
-          sum(CASE WHEN NOT same_entity THEN 1 ELSE 0 END)::BIGINT AS n_u,
-          sum(CASE WHEN same_entity AND norm_eq THEN 1 ELSE 0 END)::BIGINT AS am_norm_eq,
-          sum(CASE WHEN NOT same_entity AND norm_eq THEN 1 ELSE 0 END)::BIGINT AS au_norm_eq,
-          sum(CASE WHEN same_entity AND jacc_hi THEN 1 ELSE 0 END)::BIGINT AS am_jacc_hi,
-          sum(CASE WHEN NOT same_entity AND jacc_hi THEN 1 ELSE 0 END)::BIGINT AS au_jacc_hi,
-          sum(CASE WHEN same_entity AND lev_hi THEN 1 ELSE 0 END)::BIGINT AS am_lev_hi,
-          sum(CASE WHEN NOT same_entity AND lev_hi THEN 1 ELSE 0 END)::BIGINT AS au_lev_hi
-        FROM lab
-      ),
-      f AS (
-        SELECT 'norm_eq' AS feature, am_norm_eq AS agree_match,
-               au_norm_eq AS agree_nonmatch, n_m, n_u FROM agg
-        UNION ALL
-        SELECT 'jacc_hi', am_jacc_hi, au_jacc_hi, n_m, n_u FROM agg
-        UNION ALL
-        SELECT 'lev_hi', am_lev_hi, au_lev_hi, n_m, n_u FROM agg
-      )
-      SELECT feature, n_m AS n_match, n_u AS n_nonmatch,
-             agree_match, agree_nonmatch,
-             (agree_match * 1000000 // greatest(n_m, 1))::BIGINT AS m_ppm,
-             (agree_nonmatch * 1000000 // greatest(n_u, 1))::BIGINT AS u_ppm,
-             ((agree_match * 1000000 // greatest(n_m, 1)) * 1000000
-              // greatest(agree_nonmatch * 1000000 // greatest(n_u, 1), 1)
-             )::BIGINT AS lr_ppm
-      FROM f
-    """
-    # er_one_to_one oracle: the greedy rounds unroll mechanically — per
-    # round, both row_number mutual-best sides, the matched set with its
-    # round stamp, and the endpoint-removed remainder (NOT IN is null-safe
-    # here: ids are non-null fixture keys).
-    _o2o_parts = [
-        f"""
-      WITH {lev_pairs_cte("p0")}"""
-    ]
-    for _k in range(3):
-        _o2o_parts.append(
-            f"""
-      bl{_k} AS (
-        SELECT mention_id, entity_id, sim
-        FROM (SELECT *, row_number() OVER (PARTITION BY mention_id
-                             ORDER BY sim DESC, entity_id ASC) AS rk
-              FROM p{_k})
-        WHERE rk = 1
-      ),
-      br{_k} AS (
-        SELECT mention_id, entity_id
-        FROM (SELECT *, row_number() OVER (PARTITION BY entity_id
-                             ORDER BY sim DESC, mention_id ASC) AS rk
-              FROM p{_k})
-        WHERE rk = 1
-      ),
-      m{_k} AS (
-        SELECT bl{_k}.mention_id, bl{_k}.entity_id, bl{_k}.sim,
-               {_k + 1}::BIGINT AS match_round
-        FROM bl{_k} JOIN br{_k} USING (mention_id, entity_id)
-      ),
-      p{_k + 1} AS (
-        SELECT * FROM p{_k}
-        WHERE mention_id NOT IN (SELECT mention_id FROM m{_k})
-          AND entity_id NOT IN (SELECT entity_id FROM m{_k})
-      )"""
-        )
-    one2one_sql = (
-        ",".join(_o2o_parts)
-        + """
-      SELECT * FROM m0
-      UNION ALL SELECT * FROM m1
-      UNION ALL SELECT * FROM m2
-    """
-    )
-    # er_em_weights oracle: the EM iterations unroll mechanically over the
-    # 2^k-row contingency table, so the CTE chain is GENERATED per
-    # iteration — byte-level twin of em_fs_weights' integer arithmetic.
-    _em_f = ["norm_eq", "jacc_hi", "lev_hi"]
-    _em_parts = [
-        f"""
-      {scored_cte},
-      feats AS (
-        SELECT j.norm_eq AS norm_eq,
-               (j.jaccard >= 0.65) AS jacc_hi,
-               (j.lev_ratio >= 0.93) AS lev_hi
-        FROM j
-      ),
-      cells AS (
-        SELECT norm_eq, jacc_hi, lev_hi, count(*)::BIGINT AS n
-        FROM feats GROUP BY 1, 2, 3
-      ),
-      p0 AS (SELECT 500000::BIGINT AS lam, """
-        + ", ".join(
-            f"900000::BIGINT AS m_{f}, 100000::BIGINT AS u_{f}" for f in _em_f
-        )
-        + ")"
-    ]
-    for _k in range(3):
-        _wcols = ", ".join(
-            f"floor(ln(m_{f}::DOUBLE / u_{f}::DOUBLE) * 1000000.0)::BIGINT AS wa_{f}, "
-            f"floor(ln((1000000 - m_{f})::DOUBLE / (1000000 - u_{f})::DOUBLE)"
-            f" * 1000000.0)::BIGINT AS wd_{f}"
-            for f in _em_f
-        )
-        _terms = " + ".join(
-            f"CASE WHEN c.{f} THEN w.wa_{f} ELSE w.wd_{f} END" for f in _em_f
-        )
-        _acols = ", ".join(
-            f"sum(CASE WHEN {f} THEN n * pw ELSE 0 END)::BIGINT AS swx_{f}, "
-            f"sum(CASE WHEN {f} THEN n * (1000000 - pw) ELSE 0 END)::BIGINT AS snx_{f}"
-            for f in _em_f
-        )
-        _pcols = ", ".join(
-            f"greatest(least((1000000 * swx_{f}) // greatest(sw, 1), 999999), 1)::BIGINT AS m_{f}, "
-            f"greatest(least((1000000 * snx_{f}) // greatest(1000000 * nn - sw, 1), 999999), 1)::BIGINT AS u_{f}"
-            for f in _em_f
-        )
-        _em_parts.append(
-            f"""
-      w{_k} AS (
-        SELECT floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT AS lw,
-               {_wcols}
-        FROM p{_k}
-      ),
-      e{_k} AS (
-        SELECT c.norm_eq, c.jacc_hi, c.lev_hi, c.n,
-               floor(1000000.0 / (1.0 + exp(-((w.lw + {_terms})::DOUBLE) / 1000000.0)))::BIGINT AS pw
-        FROM cells c CROSS JOIN w{_k} w
-      ),
-      a{_k} AS (
-        SELECT sum(n)::BIGINT AS nn, sum(n * pw)::BIGINT AS sw,
-               {_acols}
-        FROM e{_k}
-      ),
-      p{_k + 1} AS (
-        SELECT greatest(least(sw // greatest(nn, 1), 999999), 1)::BIGINT AS lam,
-               {_pcols}
-        FROM a{_k}
-      )"""
-        )
-    em_sql = (
-        ",".join(_em_parts)
-        + """
-      SELECT 'lambda' AS feature, lam AS m_ppm, (1000000 - lam)::BIGINT AS u_ppm,
-             floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT
-               AS weight_micro
-      FROM p3
-      """
-        + "".join(
-            f"""
-      UNION ALL
-      SELECT '{f}', m_{f}, u_{f},
-             floor(ln(m_{f}::DOUBLE / u_{f}::DOUBLE) * 1000000.0)::BIGINT
-      FROM p3
-      """
-            for f in _em_f
-        )
-    )
-    # er_review_queue oracle: same generated EM chain to p3, then score
-    # every pair with the final weights and uncertainty-sample the band.
-    _q_wcols = ", ".join(
-        f"floor(ln(m_{f}::DOUBLE / u_{f}::DOUBLE) * 1000000.0)::BIGINT AS wa_{f}, "
-        f"floor(ln((1000000 - m_{f})::DOUBLE / (1000000 - u_{f})::DOUBLE)"
-        f" * 1000000.0)::BIGINT AS wd_{f}"
-        for f in _em_f
-    )
-    _q_terms = " + ".join(
-        f"CASE WHEN f.{f} THEN w.wa_{f} ELSE w.wd_{f} END" for f in _em_f
-    )
-    review_queue_sql = (
-        ",".join(_em_parts)
-        + f""",
-      fq AS (
-        SELECT record_id_a, record_id_b,
-               j.norm_eq AS norm_eq,
-               (j.jaccard >= 0.65) AS jacc_hi,
-               (j.lev_ratio >= 0.93) AS lev_hi
-        FROM j
-      ),
-      wf AS (
-        SELECT floor(ln(lam::DOUBLE / (1000000 - lam)::DOUBLE) * 1000000.0)::BIGINT AS lw,
-               {_q_wcols}
-        FROM p3
-      ),
-      sc AS (
-        SELECT f.record_id_a, f.record_id_b,
-               (w.lw + {_q_terms})::BIGINT AS t_micro,
-               floor(1000000.0 / (1.0 + exp(-((w.lw + {_q_terms})::DOUBLE) / 1000000.0)))::BIGINT
-                 AS posterior_ppm
-        FROM fq f CROSS JOIN wf w
-      )
-      SELECT record_id_a, record_id_b, t_micro, posterior_ppm,
-             abs(posterior_ppm - 500000)::BIGINT AS uncert_ppm
-      FROM sc
-      ORDER BY uncert_ppm ASC, record_id_a ASC, record_id_b ASC
-      LIMIT 100
-    """
-    )
-    # the gold pairs per floor(jaccard * 20) bucket: `per` (score_bucket,
-    # comparisons, matches), the twin of _jaccard_buckets
-    bucket_ctes = f"""m AS (
-        SELECT mention_id, {_norm_m} AS norm,
-               list_distinct(string_split({_norm_m}, ' ')) AS t
-        FROM read_parquet('{men}')
-      ),
-      p AS (
-        SELECT g.same_entity::BIGINT AS is_gold,
-               floor(round(len(list_intersect(ma.t, mb.t))::double
-                     / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
-                     * 20)::BIGINT AS score_bucket
-        FROM read_parquet('{gold}') g
-        JOIN m ma ON ma.mention_id = g.mention_id_a
-        JOIN m mb ON mb.mention_id = g.mention_id_b
-      ),
-      per AS (
-        SELECT score_bucket, count(*)::BIGINT AS comparisons,
-               sum(is_gold)::BIGINT AS matches
-        FROM p GROUP BY 1
-      )"""
-    # er_progressive_recall: bucketed score schedule + cumulative window
-    # over the tiny per-bucket table (ROWS == RANGE here: buckets distinct).
-    progressive_sql = f"""
-      WITH {bucket_ctes},
-      tot AS (
-        SELECT sum(matches)::BIGINT AS tm, sum(comparisons)::BIGINT AS tc
-        FROM per
-      ),
-      c AS (
-        SELECT score_bucket, comparisons, matches,
-               (sum(comparisons) OVER (ORDER BY score_bucket DESC))::BIGINT
-                 AS cum_comparisons,
-               (sum(matches) OVER (ORDER BY score_bucket DESC))::BIGINT
-                 AS cum_matches
-        FROM per
-      )
-      SELECT score_bucket, comparisons, matches, cum_comparisons, cum_matches,
-             ((1000000 * cum_matches) // greatest(tm, 1))::BIGINT AS recall_ppm,
-             ((1000000 * cum_comparisons) // greatest(tc, 1))::BIGINT AS effort_ppm
-      FROM c CROSS JOIN tot
-    """
-    # er_pr_curve: same bucketed-cumulative shape; F1 floored from the
-    # already-floored ppm P/R so both engines agree exactly.
-    pr_curve_sql = f"""
-      WITH {bucket_ctes},
-      tot AS (SELECT sum(matches)::BIGINT AS total_gold FROM per),
-      c AS (
-        SELECT score_bucket,
-               (sum(comparisons) OVER (ORDER BY score_bucket DESC))::BIGINT
-                 AS n_predicted,
-               (sum(matches) OVER (ORDER BY score_bucket DESC))::BIGINT
-                 AS n_tp
-        FROM per
-      ),
-      pr AS (
-        SELECT score_bucket, n_predicted, n_tp,
-               ((1000000 * n_tp) // greatest(n_predicted, 1))::BIGINT
-                 AS precision_ppm,
-               ((1000000 * n_tp) // greatest(total_gold, 1))::BIGINT
-                 AS recall_ppm
-        FROM c CROSS JOIN tot
-      )
-      SELECT (score_bucket * 50000)::BIGINT AS threshold_ppm,
-             n_predicted, n_tp, precision_ppm, recall_ppm,
-             ((2 * precision_ppm * recall_ppm)
-              // greatest(precision_ppm + recall_ppm, 1))::BIGINT AS f1_ppm
-      FROM pr
-    """
-    # er_collective_boost: leave-one-out doc-pair evidence window; window
-    # sums cast ::BIGINT (DuckDB window sums widen to HUGEINT otherwise).
-    collective_sql = f"""
-      WITH m AS (
-        SELECT mention_id, doc_id, {_norm_m} AS norm,
-               list_distinct(string_split({_norm_m}, ' ')) AS t
-        FROM read_parquet('{men}')
-      ),
-      j AS (
-        SELECT g.mention_id_a AS record_id_a, g.mention_id_b AS record_id_b,
-               ma.doc_id AS doc_a, mb.doc_id AS doc_b,
-               floor(round(len(list_intersect(ma.t, mb.t))::double
-                     / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
-                     * 1000000)::BIGINT AS base_ppm
-        FROM read_parquet('{gold}') g
-        JOIN m ma ON ma.mention_id = g.mention_id_a
-        JOIN m mb ON mb.mention_id = g.mention_id_b
-      ),
-      w AS (
-        SELECT record_id_a, record_id_b, base_ppm,
-               (sum(base_ppm) OVER (PARTITION BY least(doc_a, doc_b),
-                                    greatest(doc_a, doc_b)))::BIGINT AS s,
-               (count(*) OVER (PARTITION BY least(doc_a, doc_b),
-                               greatest(doc_a, doc_b)))::BIGINT AS c
-        FROM j
-      ),
-      n AS (
-        SELECT record_id_a, record_id_b, base_ppm,
-               (CASE WHEN c > 1 THEN (s - base_ppm) // (c - 1)
-                     ELSE 0 END)::BIGINT AS neighbor_ppm
-        FROM w
-      )
-      SELECT record_id_a, record_id_b, base_ppm, neighbor_ppm,
-             (base_ppm + neighbor_ppm // 2)::BIGINT AS boosted_ppm
-      FROM n
-    """
-    # er_ari: same recursive-CTE clusters as er_bcubed; exact BIGINT pair
-    # counts, one double ratio at the end on identical integers.
-    ari_sql = f"""
-      {reach_cte},
-      cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-      lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
-      g AS (
-        SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
-        FROM cl JOIN lab USING (id) GROUP BY 1, 2
-      ),
-      agg AS (
-        SELECT sum(n_cl)::BIGINT AS n_records,
-               sum(n_cl * (n_cl - 1) // 2)::BIGINT AS index_pairs
-        FROM g
-      ),
-      ca AS (
-        SELECT sum(n_c * (n_c - 1) // 2)::BIGINT AS a_pairs
-        FROM (SELECT sum(n_cl)::BIGINT AS n_c FROM g GROUP BY cluster_id)
-      ),
-      cb AS (
-        SELECT sum(n_l * (n_l - 1) // 2)::BIGINT AS b_pairs
-        FROM (SELECT sum(n_cl)::BIGINT AS n_l FROM g GROUP BY label_id)
-      ),
-      x AS (
-        SELECT n_records, index_pairs, a_pairs, b_pairs,
-               (n_records * (n_records - 1) // 2)::BIGINT AS n2
-        FROM agg CROSS JOIN ca CROSS JOIN cb
-      )
-      SELECT n_records, index_pairs, a_pairs, b_pairs,
-             CASE WHEN n2 * (a_pairs + b_pairs) - 2 * a_pairs * b_pairs != 0
-                  THEN round((2 * (n2 * index_pairs - a_pairs * b_pairs))::DOUBLE
-                             / (n2 * (a_pairs + b_pairs)
-                                - 2 * a_pairs * b_pairs)::DOUBLE, 6)
-                  ELSE 0.0 END AS ari
-      FROM x
-    """
-    rule_report_sql = f"""
-      {scored_cte},
-      lab AS (
-        SELECT j.norm_eq AS rule_eq,
-               (j.jaccard >= 0.65) AS rule_jacc,
-               (levenshtein(j.mention_a, j.mention_b)
-                  <= floor(greatest(length(j.mention_a), length(j.mention_b)) * 7 / 100)) AS rule_lev,
-               g.same_entity
-        FROM j JOIN read_parquet('{gold}') g
-          ON g.mention_id_a = j.record_id_a
-         AND g.mention_id_b = j.record_id_b
-      ),
-      agg AS (
-        SELECT
-          sum(CASE WHEN rule_eq THEN 1 ELSE 0 END)::BIGINT AS f_eq,
-          sum(CASE WHEN rule_eq AND NOT (rule_jacc OR rule_lev) THEN 1 ELSE 0 END)::BIGINT AS x_eq,
-          sum(CASE WHEN rule_eq AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_eq,
-          sum(CASE WHEN rule_jacc THEN 1 ELSE 0 END)::BIGINT AS f_jacc,
-          sum(CASE WHEN rule_jacc AND NOT (rule_eq OR rule_lev) THEN 1 ELSE 0 END)::BIGINT AS x_jacc,
-          sum(CASE WHEN rule_jacc AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_jacc,
-          sum(CASE WHEN rule_lev THEN 1 ELSE 0 END)::BIGINT AS f_lev,
-          sum(CASE WHEN rule_lev AND NOT (rule_eq OR rule_jacc) THEN 1 ELSE 0 END)::BIGINT AS x_lev,
-          sum(CASE WHEN rule_lev AND same_entity THEN 1 ELSE 0 END)::BIGINT AS t_lev
-        FROM lab
-      ),
-      f AS (
-        SELECT 'rule_eq' AS rule, f_eq AS n_fire, x_eq AS n_exclusive,
-               t_eq AS n_true FROM agg
-        UNION ALL
-        SELECT 'rule_jacc', f_jacc, x_jacc, t_jacc FROM agg
-        UNION ALL
-        SELECT 'rule_lev', f_lev, x_lev, t_lev FROM agg
-      )
-      SELECT rule, n_fire, n_exclusive, n_true,
-             (n_true * 1000000 // greatest(n_fire, 1))::BIGINT AS precision_ppm
-      FROM f
-    """
-    # each mention's normalized value per world and entity (`base`: src,
-    # ent, val) and every entity's majority value (`canon`: ent, canon,
-    # n_vals), ties to the larger value
-    canon_ctes = f"""base AS (
-        SELECT world AS src, label_id AS ent, {_norm_m} AS val
-        FROM read_parquet('{men}')
-        WHERE label_id IS NOT NULL AND {_norm_m} IS NOT NULL
-      ),
-      vc AS (SELECT ent, val, count(*)::BIGINT AS c FROM base GROUP BY 1, 2),
-      canon AS (
-        SELECT ent, val AS canon, n_vals FROM (
-          SELECT ent, val, c,
-                 row_number() OVER (PARTITION BY ent
-                                    ORDER BY c DESC, val DESC) AS rn,
-                 count(*) OVER (PARTITION BY ent)::BIGINT AS n_vals
-          FROM vc
-        ) WHERE rn = 1
-      )"""
-    # er_source_reliability: majority-vote canonical per entity via
-    # row_number (count DESC, value DESC — the struct-max twin), then
-    # per-world agreement; n_multi restricts to contested entities.
-    source_reliability_sql = f"""
-      WITH {canon_ctes},
-      j AS (
-        SELECT b.src, (b.val = c.canon) AS agree,
-               (c.n_vals > 1) AS multi
-        FROM base b JOIN canon c ON c.ent = b.ent
-      ),
-      agg AS (
-        SELECT src, count(*)::BIGINT AS n_records,
-               coalesce(sum(CASE WHEN agree THEN 1 END), 0)::BIGINT
-                 AS n_agree,
-               coalesce(sum(CASE WHEN multi THEN 1 END), 0)::BIGINT
-                 AS n_multi,
-               coalesce(sum(CASE WHEN multi AND agree THEN 1 END),
-                        0)::BIGINT AS n_multi_agree
-        FROM j GROUP BY 1
-      )
-      SELECT src AS world, n_records, n_agree,
-             (CASE WHEN n_records > 0
-               THEN (1000000 * n_agree) // n_records
-               ELSE 0 END)::BIGINT AS reliability_ppm,
-             n_multi, n_multi_agree,
-             (CASE WHEN n_multi > 0
-               THEN (1000000 * n_multi_agree) // n_multi END)::BIGINT
-               AS multi_reliability_ppm
-      FROM agg
-    """
-    # er_weighted_vote_fusion: round-2 weighted re-election on top of the
-    # reliability CTEs; weight = contested reliability (500000 prior).
-    weighted_fusion_sql = f"""
-      WITH {canon_ctes},
-      jr AS (
-        SELECT b.src, (b.val = c.canon) AS agree, (c.n_vals > 1) AS multi
-        FROM base b JOIN canon c ON c.ent = b.ent
-      ),
-      rel AS (
-        SELECT src,
-               coalesce(
-                 CASE WHEN coalesce(sum(CASE WHEN multi THEN 1 END), 0) > 0
-                   THEN (1000000 *
-                         coalesce(sum(CASE WHEN multi AND agree THEN 1 END),
-                                  0))
-                        // coalesce(sum(CASE WHEN multi THEN 1 END), 0)
-                 END, 500000)::BIGINT AS w
-        FROM jr GROUP BY 1
-      ),
-      maj AS (
-        SELECT ent, val AS canon_majority, n_records, n_values FROM (
-          SELECT ent, val, c,
-                 row_number() OVER (PARTITION BY ent
-                                    ORDER BY c DESC, val DESC) AS rn,
-                 sum(c) OVER (PARTITION BY ent)::BIGINT AS n_records,
-                 count(*) OVER (PARTITION BY ent)::BIGINT AS n_values
-          FROM vc
-        ) WHERE rn = 1
-      ),
-      wv AS (
-        SELECT ent, val AS canon_weighted FROM (
-          SELECT s.ent, s.val,
-                 row_number() OVER (PARTITION BY s.ent
-                                    ORDER BY s.score DESC, s.val DESC) AS rn
-          FROM (
-            SELECT b.ent, b.val, sum(r.w)::BIGINT AS score
-            FROM base b JOIN rel r ON r.src = b.src
-            GROUP BY 1, 2
-          ) s
-        ) WHERE rn = 1
-      )
-      SELECT maj.ent AS label_id, maj.canon_majority, wv.canon_weighted,
-             (maj.canon_majority != wv.canon_weighted) AS changed,
-             maj.n_records, maj.n_values
-      FROM maj JOIN wv ON wv.ent = maj.ent
-    """
-    # er_blocking_budget: df-frequency cumulative frontier; window cumsum
-    # is the oracle twin of the two-phase running sums.
-    blocking_budget_sql = f"""
-      WITH tok AS (
-        SELECT DISTINCT mention_id AS rid, tok
-        FROM (
-          SELECT mention_id,
-                 unnest(list_distinct(string_split({_norm_m}, ' '))) AS tok
-          FROM read_parquet('{men}')
-        ) WHERE tok != ''
-      ),
-      dfreq AS (SELECT tok, count(*)::BIGINT AS df FROM tok GROUP BY 1),
-      per_df AS (
-        SELECT df, count(*)::BIGINT AS n_token_types,
-               ((df * (df - 1) // 2) * count(*))::BIGINT AS pairs_here
-        FROM dfreq GROUP BY 1
-      )
-      SELECT df AS df_cap, n_token_types,
-             sum(n_token_types) OVER (ORDER BY df
-                                      ROWS UNBOUNDED PRECEDING)::BIGINT
-               AS cum_token_types,
-             sum(pairs_here) OVER (ORDER BY df
-                                   ROWS UNBOUNDED PRECEDING)::BIGINT
-               AS cum_pairs,
-             (sum(pairs_here) OVER (ORDER BY df ROWS UNBOUNDED PRECEDING)
-              <= 100000) AS within_budget
-      FROM per_df
-    """
-    # er_sorted_lev: both engines sort the SAME normalized token lists
-    # (list_sort default ASC NULLS-irrelevant here) and rejoin with ' '.
-    sorted_lev_sql = f"""
-      WITH m AS (
-        SELECT mention_id AS rid, {_norm_m} AS nrm,
-               array_to_string(
-                 list_sort(string_split({_norm_m}, ' ')), ' ') AS srt
-        FROM read_parquet('{men}')
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      ),
-      j AS (
-        SELECT p.record_id_a, p.record_id_b,
-               a.nrm AS na, a.srt AS sa, b.nrm AS nb, b.srt AS sb
-        FROM p
-        JOIN m a ON a.rid = p.record_id_a
-        JOIN m b ON b.rid = p.record_id_b
-      )
-      SELECT record_id_a, record_id_b,
-             levenshtein(na, nb)::BIGINT AS lev_raw,
-             levenshtein(sa, sb)::BIGINT AS lev_sorted,
-             (levenshtein(na, nb)
-              <= floor(greatest(length(na), length(nb)) * 7 / 100))
-               AS raw_within,
-             (levenshtein(sa, sb)
-              <= floor(greatest(length(sa), length(sb)) * 7 / 100))
-               AS sorted_within,
-             ((levenshtein(sa, sb)
-               <= floor(greatest(length(sa), length(sb)) * 7 / 100))
-              AND NOT (levenshtein(na, nb)
-               <= floor(greatest(length(na), length(nb)) * 7 / 100)))
-               AS bridged
-      FROM j
-    """
-    # er_alias_pairs: distinct (entity, surface) self-join, a < b —
-    # the mined alias table with entity-support counts.
-    alias_pairs_sql = f"""
-      WITH es AS (
-        SELECT DISTINCT label_id AS ent, {_norm_m} AS s
-        FROM read_parquet('{men}')
-        WHERE label_id IS NOT NULL AND mention IS NOT NULL
-      )
-      SELECT a.s AS surface_a, b.s AS surface_b,
-             count(*)::BIGINT AS n_entities
-      FROM es a JOIN es b ON a.ent = b.ent AND a.s < b.s
-      GROUP BY 1, 2
-    """
-    # er_scorer_auc: Mann-Whitney AUC of the jaccard scorer vs gold —
-    # window-rank twin of the lineitem_mannwhitney oracle over scored j.
-    scorer_auc_sql = f"""
-      {scored_cte},
-      lab AS (
-        SELECT floor(j.jaccard * 1000000)::BIGINT AS vm,
-               (CASE WHEN g.same_entity THEN 1 ELSE 0 END)::BIGINT AS is_a
-        FROM j JOIN read_parquet('{gold}') g
-          ON g.mention_id_a = j.record_id_a
-         AND g.mention_id_b = j.record_id_b
-        WHERE floor(j.jaccard * 1000000) IS NOT NULL
-      ),
-      {_mann_whitney_sql('lab')}
-    """
-    # er_rule_kappa: chance-corrected agreement of the two fuzzy rules in
-    # ONE exact fraction kappa = (n·g − P)/(n² − P), spearman-staged
-    # sign-safe ppm; same scored pair CTE as the rule report.
-    rule_kappa_sql = f"""
-      {scored_cte},
-      lab AS (
-        SELECT (j.jaccard >= 0.65) AS ra,
-               (levenshtein(j.mention_a, j.mention_b)
-                  <= floor(greatest(length(j.mention_a),
-                                    length(j.mention_b)) * 7 / 100)) AS rb
-        FROM j
-      ),
-      agg AS (
-        SELECT count(*)::BIGINT AS n,
-               sum(CASE WHEN ra THEN 1 ELSE 0 END)::BIGINT AS a1,
-               sum(CASE WHEN rb THEN 1 ELSE 0 END)::BIGINT AS b1,
-               sum(CASE WHEN ra = rb THEN 1 ELSE 0 END)::BIGINT AS g
-        FROM lab
-      ),
-      t AS (
-        SELECT n, a1, b1, g,
-               (a1 * b1 + (n - a1) * (n - b1))::BIGINT AS p
-        FROM agg
-      )
-      SELECT n AS n_pairs, a1 AS n_a_pos, b1 AS n_b_pos, g AS n_agree,
-             (CASE WHEN n > 0 THEN (1000000 * g) // n END)::BIGINT AS po_ppm,
-             (CASE WHEN n = 0 THEN NULL
-                   WHEN n * n >= 1000000 THEN p // ((n * n) // 1000000)
-                   ELSE (1000000 * p) // (n * n) END)::BIGINT AS pe_ppm,
-             (CASE WHEN (n * n - p) = 0 THEN NULL
-                   WHEN (n * n - p) >= 1000000 THEN
-                     CASE WHEN (n * g - p) >= 0
-                       THEN (n * g - p) // ((n * n - p) // 1000000)
-                       ELSE -((-(n * g - p)) // ((n * n - p) // 1000000))
-                     END
-                   ELSE
-                     CASE WHEN (n * g - p) >= 0
-                       THEN (1000000 * (n * g - p)) // (n * n - p)
-                       ELSE -((-(1000000 * (n * g - p))) // (n * n - p))
-                     END
-              END)::BIGINT AS kappa_ppm
-      FROM t
-    """
-    token_cosine_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      tf AS (
-        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
-        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
-        GROUP BY 1, 2
-      ),
-      norms AS (
-        SELECT record_id, sum(tf * tf)::BIGINT AS norm_sq FROM tf GROUP BY 1
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      ),
-      dots AS (
-        SELECT p.record_id_a, p.record_id_b,
-               sum(a.tf * b.tf)::BIGINT AS dot
-        FROM p
-        JOIN tf a ON a.record_id = p.record_id_a
-        JOIN tf b ON b.record_id = p.record_id_b AND b.tok = a.tok
-        GROUP BY 1, 2
-      )
-      SELECT p.record_id_a, p.record_id_b,
-             coalesce(d.dot, 0)::BIGINT AS dot,
-             na.norm_sq::BIGINT AS norm_a,
-             nb.norm_sq::BIGINT AS norm_b,
-             round(coalesce(d.dot, 0)::double
-                   / sqrt((na.norm_sq * nb.norm_sq)::double), 6) AS cosine
-      FROM p
-      LEFT JOIN dots d
-        ON d.record_id_a = p.record_id_a AND d.record_id_b = p.record_id_b
-      JOIN norms na ON na.record_id = p.record_id_a
-      JOIN norms nb ON nb.record_id = p.record_id_b
-    """
-    # er_nickname_matches: both engines canonicalize through the SAME
-    # dictionary constant (VALUES generated from scoring.NICKNAMES);
-    # order-preserving reassembly via list(... ORDER BY pos).
-    from blink_spark.operators.scoring import NICKNAMES as _nn
-
-    _nn_vals = ", ".join(
-        f"('{k}', '{v}')" for k, v in sorted(_nn.items())
-    )
-    nickname_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      toks AS (
-        SELECT mention_id AS record_id,
-               generate_subscripts(string_split(norm, ' '), 1) AS pos,
-               unnest(string_split(norm, ' ')) AS tok
-        FROM m
-      ),
-      dict AS (SELECT * FROM (VALUES {_nn_vals}) AS d(nick, canon)),
-      can AS (
-        SELECT record_id,
-               array_to_string(list(coalesce(d.canon, t.tok)
-                                    ORDER BY t.pos), ' ') AS can,
-               array_to_string(list(t.tok ORDER BY t.pos), ' ') AS nrm
-        FROM toks t LEFT JOIN dict d ON d.nick = t.tok
-        GROUP BY 1
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      )
-      SELECT p.record_id_a, p.record_id_b,
-             (a.nrm = b.nrm) AS norm_eq,
-             (a.can = b.can) AS nickname_eq,
-             (a.can = b.can AND a.nrm != b.nrm) AS bridged
-      FROM p
-      JOIN can a ON a.record_id = p.record_id_a
-      JOIN can b ON b.record_id = p.record_id_b
-    """
-    # er_weighted_jaccard: multiset Jaccard via the same (pair, token)
-    # inner equi-join — sum-max reconstructed as bag_a + bag_b - sum-min,
-    # so no full-outer join enters either plan.
-    weighted_jaccard_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      tf AS (
-        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
-        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
-        GROUP BY 1, 2
-      ),
-      bags AS (SELECT record_id, sum(tf)::BIGINT AS bag FROM tf GROUP BY 1),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      ),
-      inter AS (
-        SELECT p.record_id_a, p.record_id_b,
-               sum(least(a.tf, b.tf))::BIGINT AS inter_min
-        FROM p
-        JOIN tf a ON a.record_id = p.record_id_a
-        JOIN tf b ON b.record_id = p.record_id_b AND b.tok = a.tok
-        GROUP BY 1, 2
-      )
-      SELECT p.record_id_a, p.record_id_b,
-             coalesce(i.inter_min, 0)::BIGINT AS inter_min,
-             ba.bag::BIGINT AS bag_a,
-             bb.bag::BIGINT AS bag_b,
-             (CASE WHEN ba.bag + bb.bag - coalesce(i.inter_min, 0) > 0 THEN
-                (1000000 * coalesce(i.inter_min, 0))
-                // (ba.bag + bb.bag - coalesce(i.inter_min, 0))
-              ELSE 0 END)::BIGINT AS weighted_jaccard_ppm
-      FROM p
-      LEFT JOIN inter i
-        ON i.record_id_a = p.record_id_a AND i.record_id_b = p.record_id_b
-      JOIN bags ba ON ba.record_id = p.record_id_a
-      JOIN bags bb ON bb.record_id = p.record_id_b
-    """
-    # tf-idf weights `w` (record_id, tok, x), their squared norms and the gold
-    # pairs `p`, shared by er_tfidf_cosine and er_soft_tfidf: components
-    # weighted by the rational idf surrogate (1000*N)//df — integer floor div
-    # on positives is identical across engines.
-    tfidf_w_cte = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      tf AS (
-        SELECT mention_id AS record_id, tok, count(*)::BIGINT AS tf
-        FROM (SELECT mention_id, unnest(string_split(norm, ' ')) AS tok FROM m)
-        GROUP BY 1, 2
-      ),
-      nrec AS (SELECT count(DISTINCT mention_id)::BIGINT AS n FROM m),
-      dfk AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-      w AS (
-        SELECT tf.record_id, tf.tok,
-               (tf.tf * ((1000 * nrec.n) // dfk.df))::BIGINT AS x
-        FROM tf JOIN dfk ON dfk.tok = tf.tok CROSS JOIN nrec
-      ),
-      norms AS (
-        SELECT record_id, sum(x * x)::BIGINT AS norm_sq FROM w GROUP BY 1
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      )"""
-    # er_tfidf_cosine: same sparse-algebra shape as er_token_cosine; norms
-    # kept as separate sqrt factors so the product can't overflow BIGINT.
-    tfidf_cosine_sql = f"""
-      {tfidf_w_cte},
-      dots AS (
-        SELECT p.record_id_a, p.record_id_b,
-               sum(a.x * b.x)::BIGINT AS dot
-        FROM p
-        JOIN w a ON a.record_id = p.record_id_a
-        JOIN w b ON b.record_id = p.record_id_b AND b.tok = a.tok
-        GROUP BY 1, 2
-      )
-      SELECT p.record_id_a, p.record_id_b,
-             coalesce(d.dot, 0)::BIGINT AS dot,
-             na.norm_sq::BIGINT AS norm_a,
-             nb.norm_sq::BIGINT AS norm_b,
-             round(coalesce(d.dot, 0)::double
-                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
-               AS tfidf_cosine
-      FROM p
-      LEFT JOIN dots d
-        ON d.record_id_a = p.record_id_a AND d.record_id_b = p.record_id_b
-      JOIN norms na ON na.record_id = p.record_id_a
-      JOIN norms nb ON nb.record_id = p.record_id_b
-    """
-    # er_soft_tfidf: shares the tfidf weight CTEs; the token bridge is the
-    # per-pair token cross with integer-ppm lev similarity, best match per
-    # left token is a lexicographic struct max, and the partner weight is
-    # scaled BEFORE the product ((x*s)//1e6) to stay in the x_a*x_b
-    # overflow regime. Both directions mirrored.
-    soft_tfidf_sql = f"""
-      {tfidf_w_cte},
-      bridge AS (
-        SELECT p.record_id_a, p.record_id_b,
-               a.tok AS tok_a, a.x AS x_a, b.tok AS tok_b, b.x AS x_b,
-               ((greatest(length(a.tok), length(b.tok), 1)
-                 - levenshtein(a.tok, b.tok)) * 1000000)
-                 // greatest(length(a.tok), length(b.tok), 1) AS sim_ppm
-        FROM p
-        JOIN w a ON a.record_id = p.record_id_a
-        JOIN w b ON b.record_id = p.record_id_b
-      ),
-      fb AS (SELECT * FROM bridge WHERE sim_ppm >= 900000),
-      best_ab AS (
-        SELECT record_id_a, record_id_b, tok_a, x_a,
-               max({{s: sim_ppm, x: x_b}}) AS mm
-        FROM fb GROUP BY 1, 2, 3, 4
-      ),
-      dot_ab AS (
-        SELECT record_id_a, record_id_b,
-               sum(x_a * ((mm.x * mm.s) // 1000000))::BIGINT AS soft_dot_ab
-        FROM best_ab GROUP BY 1, 2
-      ),
-      best_ba AS (
-        SELECT record_id_a, record_id_b, tok_b, x_b,
-               max({{s: sim_ppm, x: x_a}}) AS mm
-        FROM fb GROUP BY 1, 2, 3, 4
-      ),
-      dot_ba AS (
-        SELECT record_id_a, record_id_b,
-               sum(x_b * ((mm.x * mm.s) // 1000000))::BIGINT AS soft_dot_ba
-        FROM best_ba GROUP BY 1, 2
-      )
-      SELECT p.record_id_a, p.record_id_b,
-             coalesce(dab.soft_dot_ab, 0)::BIGINT AS soft_dot_ab,
-             coalesce(dba.soft_dot_ba, 0)::BIGINT AS soft_dot_ba,
-             na.norm_sq::BIGINT AS norm_a, nb.norm_sq::BIGINT AS norm_b,
-             round(coalesce(dab.soft_dot_ab, 0)::double
-                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
-               AS soft_tfidf_ab,
-             round(coalesce(dba.soft_dot_ba, 0)::double
-                   / (sqrt(na.norm_sq::double) * sqrt(nb.norm_sq::double)), 6)
-               AS soft_tfidf_ba
-      FROM p
-      LEFT JOIN dot_ab dab
-        ON dab.record_id_a = p.record_id_a AND dab.record_id_b = p.record_id_b
-      LEFT JOIN dot_ba dba
-        ON dba.record_id_a = p.record_id_a AND dba.record_id_b = p.record_id_b
-      JOIN norms na ON na.record_id = p.record_id_a
-      JOIN norms nb ON nb.record_id = p.record_id_b
-    """
-    # er_monge_elkan: bigram sets over the distinct token vocabulary, Dice
-    # in integer ppm, max-per-token then floor-mean-per-pair; sums cast
-    # ::BIGINT before the floor div (DuckDB widens sums to HUGEINT).
-    monge_elkan_sql = f"""
-      WITH m AS (
-        SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-      ),
-      t AS (
-        SELECT DISTINCT mention_id AS rid, unnest(string_split(norm, ' ')) AS tok
-        FROM m
-      ),
-      v AS (SELECT DISTINCT tok FROM t),
-      bg AS (
-        SELECT tok,
-               list_distinct([substr(tok, i, 2)
-                              for i in range(1, greatest(length(tok)-1, 1)+1)])
-                 AS bset
-        FROM v
-      ),
-      p AS (
-        SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-        FROM read_parquet('{gold}')
-      ),
-      s AS (
-        SELECT p.record_id_a, p.record_id_b, a.tok AS tok_a, b.tok AS tok_b,
-               (2000000 * len(list_intersect(x.bset, y.bset)))
-                 // greatest(len(x.bset) + len(y.bset), 1) AS sim_ppm
-        FROM p
-        JOIN t a ON a.rid = p.record_id_a
-        JOIN t b ON b.rid = p.record_id_b
-        JOIN bg x ON x.tok = a.tok
-        JOIN bg y ON y.tok = b.tok
-      ),
-      ma AS (
-        SELECT record_id_a, record_id_b, tok_a, max(sim_ppm) AS ms
-        FROM s GROUP BY 1, 2, 3
-      ),
-      mb AS (
-        SELECT record_id_a, record_id_b, tok_b, max(sim_ppm) AS ms
-        FROM s GROUP BY 1, 2, 3
-      ),
-      ga AS (
-        SELECT record_id_a, record_id_b,
-               (sum(ms)::BIGINT // count(*))::BIGINT AS me_ab_ppm
-        FROM ma GROUP BY 1, 2
-      ),
-      gb AS (
-        SELECT record_id_a, record_id_b,
-               (sum(ms)::BIGINT // count(*))::BIGINT AS me_ba_ppm
-        FROM mb GROUP BY 1, 2
-      )
-      SELECT ga.record_id_a, ga.record_id_b, me_ab_ppm, me_ba_ppm,
-             ((me_ab_ppm + me_ba_ppm) // 2)::BIGINT AS me_sym_ppm
-      FROM ga
-      JOIN gb ON gb.record_id_a = ga.record_id_a
-             AND gb.record_id_b = ga.record_id_b
-    """
-    _letters_m = f"regexp_replace({_norm_m}, '[^a-z]', '', 'g')"
-    _pcode = (
-        "translate(substring(" + _letters_m + ", 2), "
-        "'bfpvcgjkqsxzdtlmnraeiouyhw', '111122222222334556')"
-    )
-    for _d in "123456":
-        _pcode = (
-            "regexp_replace(" + _pcode + ", '" + _d + "{2,}', '" + _d + "', 'g')"
-        )
-    phonetic_sql = f"""
-      WITH k AS (
-        SELECT mention_id,
-               rpad(upper(substring({_letters_m}, 1, 1))
-                    || substring({_pcode}, 1, 3), 4, '0') AS pkey
-        FROM read_parquet('{men}')
-      ),
-      s AS (
-        SELECT pkey, count(*)::BIGINT AS block_size
-        FROM k GROUP BY 1 HAVING count(*) <= 100
-      )
-      SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
-             s.pkey AS phonetic_key, s.block_size
-      FROM s
-      JOIN k a ON a.pkey = s.pkey
-      JOIN k b ON b.pkey = s.pkey
-      WHERE a.mention_id < b.mention_id
-    """
-    # er_blocking_ensemble: the three strategy pair sets (token-pair cap
-    # 4096 / SNM window 3 / phonetic block<=100) canonicalized and unioned;
-    # per-strategy coverage, exclusive contribution and recall ppm.
-    ensemble_sql = f"""
-      WITH mm AS (
-        SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')
-      ),
-      assign AS (
-        SELECT mention_id AS record_id, unnest(
-          CASE WHEN len(toks) >= 2 THEN
-            flatten([[('tp:' || toks[i] || '|' || toks[j])
-                      for j in range(i+1, len(toks)+1)]
-                     for i in range(1, len(toks)+1)])
-          ELSE ['t1:' || toks[1]] END) AS block_key
-        FROM mm
-      ),
-      sized AS (
-        SELECT block_key, record_id,
-               count(*) OVER (PARTITION BY block_key) AS bs
-        FROM assign
-      ),
-      kept AS (SELECT * FROM sized WHERE bs <= 4096),
-      tokp AS (
-        SELECT DISTINCT a.record_id AS u, b.record_id AS v
-        FROM kept a JOIN kept b
-          ON a.block_key = b.block_key AND a.record_id < b.record_id
-      ),
-      snr AS (
-        SELECT mention_id,
-               row_number() OVER (ORDER BY k, mention_id) - 1 AS rnk
-        FROM (SELECT mention_id, {_norm_m} AS k FROM read_parquet('{men}'))
-      ),
-      snmp AS (
-        SELECT DISTINCT least(a.mention_id, b.mention_id) AS u,
-               greatest(a.mention_id, b.mention_id) AS v
-        FROM snr a JOIN snr b ON b.rnk - a.rnk BETWEEN 1 AND 3
-      ),
-      pk AS (
-        SELECT mention_id,
-               rpad(upper(substring({_letters_m}, 1, 1))
-                    || substring({_pcode}, 1, 3), 4, '0') AS pkey
-        FROM read_parquet('{men}')
-      ),
-      ps AS (SELECT pkey FROM pk GROUP BY 1 HAVING count(*) <= 100),
-      phop AS (
-        SELECT DISTINCT a.mention_id AS u, b.mention_id AS v
-        FROM ps JOIN pk a ON a.pkey = ps.pkey JOIN pk b ON b.pkey = ps.pkey
-        WHERE a.mention_id < b.mention_id
-      ),
-      strat AS (
-        SELECT 'token_pair' AS strategy, u, v FROM tokp
-        UNION ALL SELECT 'snm', u, v FROM snmp
-        UNION ALL SELECT 'phonetic', u, v FROM phop
-      ),
-      gold_c AS (
-        SELECT DISTINCT least(mention_id_a, mention_id_b) AS u,
-               greatest(mention_id_a, mention_id_b) AS v
-        FROM read_parquet('{gold}') WHERE same_entity
-      ),
-      cov AS (
-        SELECT s.strategy, s.u, s.v
-        FROM strat s JOIN gold_c g ON g.u = s.u AND g.v = s.v
-      ),
-      ns AS (SELECT u, v, count(DISTINCT strategy) AS ns FROM cov GROUP BY 1, 2),
-      tg AS (SELECT count(*)::BIGINT AS total_gold FROM gold_c),
-      base AS (SELECT strategy, count(*)::BIGINT AS n_pairs FROM strat GROUP BY 1),
-      cs AS (
-        SELECT c.strategy, count(*)::BIGINT AS n_gold_covered,
-               sum(CASE WHEN ns.ns = 1 THEN 1 ELSE 0 END)::BIGINT
-                 AS n_gold_unique
-        FROM cov c JOIN ns ON ns.u = c.u AND ns.v = c.v GROUP BY 1
-      ),
-      up AS (
-        SELECT count(*)::BIGINT AS n_pairs
-        FROM (SELECT DISTINCT u, v FROM strat)
-      ),
-      uc AS (
-        SELECT count(*)::BIGINT AS n_gold_covered,
-               sum(CASE WHEN ns = 1 THEN 1 ELSE 0 END)::BIGINT AS n_gold_unique
-        FROM ns
-      )
-      SELECT b.strategy, b.n_pairs,
-             coalesce(cs.n_gold_covered, 0)::BIGINT AS n_gold_covered,
-             coalesce(cs.n_gold_unique, 0)::BIGINT AS n_gold_unique,
-             ((1000000 * coalesce(cs.n_gold_covered, 0))
-              // greatest(tg.total_gold, 1))::BIGINT AS recall_ppm
-      FROM base b LEFT JOIN cs ON cs.strategy = b.strategy CROSS JOIN tg
-      UNION ALL
-      SELECT 'union', up.n_pairs, uc.n_gold_covered, uc.n_gold_unique,
-             ((1000000 * uc.n_gold_covered)
-              // greatest(tg.total_gold, 1))::BIGINT
-      FROM up, uc, tg
-    """
-    golden_sql = f"""
-      {reach_cte},
-      cl AS (SELECT id AS record_id, min(r) AS cluster_id FROM reach GROUP BY id),
-      a AS (
-        SELECT cl.record_id, cl.cluster_id, m.norm
-        FROM cl JOIN m ON m.mention_id = cl.record_id
-      ),
-      pf AS (
-        SELECT cluster_id, norm, count(*)::BIGINT AS n_form
-        FROM a GROUP BY 1, 2
-      ),
-      canon AS (
-        SELECT cluster_id, norm AS canonical_text, n_form AS canonical_count,
-               row_number() OVER (PARTITION BY cluster_id
-                                  ORDER BY n_form DESC, norm ASC) AS rn
-        FROM pf
-      ),
-      st AS (
-        SELECT cluster_id, count(*)::BIGINT AS n_members,
-               min(record_id) AS rep_record_id
-        FROM a GROUP BY 1
-      )
-      SELECT c.cluster_id, c.canonical_text, c.canonical_count,
-             s.n_members, s.rep_record_id
-      FROM canon c JOIN st s USING (cluster_id)
-      WHERE c.rn = 1
-    """
-    f1_sql = f"""
-      {reach_cte},
-      cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-      verdict AS (
-        SELECT g.same_entity, (ca.cluster_id = cb.cluster_id) AS pred
-        FROM read_parquet('{gold}') g
-        JOIN cl ca ON ca.id = g.mention_id_a
-        JOIN cl cb ON cb.id = g.mention_id_b
-      ),
-      counts AS (
-        SELECT cast(sum(CASE WHEN pred AND same_entity THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-               cast(sum(CASE WHEN pred AND NOT same_entity THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-               cast(sum(CASE WHEN NOT pred AND same_entity THEN 1 ELSE 0 END) AS BIGINT) AS fn
-        FROM verdict
-      )
-      SELECT tp, fp, fn,
-             round(tp / greatest(tp + fp, 1), 6) AS precision,
-             round(tp / greatest(tp + fn, 1), 6) AS recall,
-             round(2.0 * tp / greatest(2 * tp + fp + fn, 1), 6) AS f1
-      FROM counts
-    """
-    # er_topk_candidates: the top-3 lev-ratio candidates per mention;
-    # softmax_confidence nests the same select as its `topk` CTE
-    topk_ctes = f"""
-      WITH {lev_pairs_cte("pairs")}"""
-    topk_select = """SELECT mention_id, entity_id, sim, rank FROM (
-        SELECT mention_id, entity_id, sim,
-               row_number() OVER (PARTITION BY mention_id
-                                  ORDER BY sim DESC, entity_id ASC) AS rank
-        FROM pairs
-      ) WHERE rank <= 3"""
-    topk_sql = f"""{topk_ctes}
-      {topk_select}
-    """
-    softmax_sql = f"""{topk_ctes},
-      topk AS (
-        {topk_select}
-      )
-      , withmax AS (
-        SELECT mention_id, entity_id, rank, sim,
-               max(sim) OVER (PARTITION BY mention_id) AS mx
-        FROM topk
-      )
-      SELECT mention_id, entity_id, rank,
-             round(exp(sim - mx)
-                   / sum(exp(sim - mx)) OVER (PARTITION BY mention_id), 6) AS prob
-      FROM withmax
-    """
-    def _span_enum_ctes(max_len: int) -> str:
-        return f"""
-      t AS (
-        SELECT id, regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+') AS toks
-        FROM read_parquet('{qst}')
-      ),
-      s AS (
-        SELECT id, unnest(flatten([
-          [{{'start': s, 'end_excl': s + l,
-             'span_text': array_to_string(toks[s+1:s+l], ' ')}}
-           for l in range(1, least({max_len}, len(toks) - s) + 1)]
-          for s in range(0, len(toks))])) AS sp
-        FROM t
-      ),
-      spans AS (
-        SELECT id AS record_id, sp.start AS start, sp.end_excl AS end_excl,
-               sp.span_text AS span_text
-        FROM s
-      )"""
-
-    span_enum_sql = f"WITH {_span_enum_ctes(3)} SELECT * FROM spans"
-    overlap_prune_sql = f"""
-      WITH RECURSIVE {_span_enum_ctes(2)},
-      scored AS (
-        SELECT record_id, start, end_excl, span_text,
-               length(span_text)::double
-                 + (('0x' || substr(md5(span_text), 1, 4))::INT % 97)::double / 100.0
-                 AS score
-        FROM spans
-      ),
-      ranked AS (
-        SELECT *, row_number() OVER (PARTITION BY record_id
-                                     ORDER BY score DESC, start, end_excl) AS rk,
-               count(*) OVER (PARTITION BY record_id) AS n
-        FROM scored
-      ),
-      -- greedy best-first scan as a lockstep walk: one state row per group,
-      -- advance one priority rank per iteration, accept iff no overlap with
-      -- the accepted-intervals list (the applyInPandas greedy of
-      -- /root/reference/elq/main_dense.py:451-466, relationalized)
-      walk AS (
-        SELECT record_id, 0::BIGINT AS rk,
-               CAST([] AS STRUCT(s BIGINT, e BIGINT)[]) AS covered,
-               CAST([] AS BIGINT[]) AS kept, n
-        FROM (SELECT DISTINCT record_id, n FROM ranked)
-        UNION ALL
-        SELECT w.record_id, w.rk + 1,
-               CASE WHEN len(list_filter(w.covered,
-                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
-                    THEN list_append(w.covered,
-                           {{'s': r.start::BIGINT, 'e': r.end_excl::BIGINT}})
-                    ELSE w.covered END,
-               CASE WHEN len(list_filter(w.covered,
-                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
-                    THEN list_append(w.kept, r.rk) ELSE w.kept END,
-               w.n
-        FROM walk w JOIN ranked r ON r.record_id = w.record_id AND r.rk = w.rk + 1
-        WHERE w.rk < w.n
-      )
-      SELECT r.record_id, r.start, r.end_excl, r.span_text, r.score
-      FROM walk w JOIN ranked r
-        ON r.record_id = w.record_id AND list_contains(w.kept, r.rk)
-      WHERE w.rk = w.n
-    """
-    _SPAN_SCORE_PORTABLE = (
-        "length(span_text)::double"
-        " + (('0x' || substr(md5(span_text), 1, 4))::INT % 97)::double / 100.0"
-    )
-    _PRED_ENTITY = "'e' || substr(md5(string_split(span_text, ' ')[1]), 1, 2)"
-    repeat_prune_sql = f"""
-      WITH {_span_enum_ctes(2)},
-      scored AS (
-        SELECT record_id, start, end_excl, span_text,
-               {_SPAN_SCORE_PORTABLE} AS score,
-               {_PRED_ENTITY} AS entity
-        FROM spans
-      ),
-      r AS (
-        SELECT *, row_number() OVER (PARTITION BY record_id, entity
-                                     ORDER BY score DESC, start, end_excl) AS rk
-        FROM scored
-      )
-      SELECT record_id, start, end_excl, span_text, score, entity
-      FROM r WHERE rk = 1
-    """
-    repeat_overlap_sql = f"""
-      WITH RECURSIVE {_span_enum_ctes(2)},
-      scored AS (
-        SELECT record_id, start, end_excl, span_text,
-               {_SPAN_SCORE_PORTABLE} AS score,
-               {_PRED_ENTITY} AS entity
-        FROM spans
-      ),
-      ranked AS (
-        SELECT *, record_id || chr(31) || entity AS grp,
-               row_number() OVER (PARTITION BY record_id, entity
-                                  ORDER BY score DESC, start, end_excl) AS rk,
-               count(*) OVER (PARTITION BY record_id, entity) AS n
-        FROM scored
-      ),
-      -- the greedy walk of er_overlap_prune, but the coverage state lives
-      -- PER (question, predicted-entity) group — filter_repeat_overlaps'
-      -- per-entity token mask (tune_hyperparams_new.py:75-87)
-      walk AS (
-        SELECT grp, 0::BIGINT AS rk,
-               CAST([] AS STRUCT(s BIGINT, e BIGINT)[]) AS covered,
-               CAST([] AS BIGINT[]) AS kept, n
-        FROM (SELECT DISTINCT grp, n FROM ranked)
-        UNION ALL
-        SELECT w.grp, w.rk + 1,
-               CASE WHEN len(list_filter(w.covered,
-                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
-                    THEN list_append(w.covered,
-                           {{'s': r.start::BIGINT, 'e': r.end_excl::BIGINT}})
-                    ELSE w.covered END,
-               CASE WHEN len(list_filter(w.covered,
-                           c -> c.s < r.end_excl AND r.start < c.e)) = 0
-                    THEN list_append(w.kept, r.rk) ELSE w.kept END,
-               w.n
-        FROM walk w JOIN ranked r ON r.grp = w.grp AND r.rk = w.rk + 1
-        WHERE w.rk < w.n
-      )
-      SELECT r.record_id, r.start, r.end_excl, r.span_text, r.score, r.entity
-      FROM walk w JOIN ranked r
-        ON r.grp = w.grp AND list_contains(w.kept, r.rk)
-      WHERE w.rk = w.n
-    """
-    kb_filter_sql = f"""
-      WITH f AS (
-        SELECT entity_id, title, num_tokens,
-               list_filter(aliases, a -> NOT regexp_full_match(a,
-                 '[\\x{{1F000}}-\\x{{1FAFF}}\\x{{2600}}-\\x{{27BF}}\\x{{2B00}}-\\x{{2BFF}}]+')) AS ka,
-               len(aliases)::BIGINT AS na
-        FROM read_parquet('{kb}')
-        WHERE num_tokens >= 5
-          AND (title IS NULL OR NOT (contains(title, 'disambiguation')
-                                     OR contains(title, 'Disambiguation')))
-          AND (description IS NULL
-               OR NOT (contains(description, 'disambiguation page')
-                       OR contains(description, 'Disambiguation page')))
-      )
-      SELECT entity_id, title, num_tokens,
-             array_to_string(ka, '|') AS aliases_kept,
-             (na - len(ka))::BIGINT AS n_aliases_dropped
-      FROM f
-    """
-    pem_sql = f"""
-      WITH e AS (
-        SELECT entity_id, title, num_incoming_links + 1 AS freq
-        FROM read_parquet('{ent}')
-      ),
-      pem AS (
-        SELECT CASE WHEN entity_id % 3 = 0 THEN {{ic_title}}
-                    WHEN entity_id % 3 = 1 THEN title
-                    ELSE upper(title) END AS k,
-               entity_id, freq
-        FROM e
-      ),
-      best AS (
-        SELECT k, entity_id, freq FROM (
-          SELECT *, row_number() OVER (PARTITION BY k
-                                       ORDER BY freq DESC, entity_id) AS r
-          FROM pem) WHERE r = 1
-      ),
-      pl AS (
-        SELECT lk, entity_id AS le FROM (
-          SELECT lower(k) AS lk, entity_id,
-                 row_number() OVER (PARTITION BY lower(k)
-                                    ORDER BY freq DESC, entity_id) AS r
-          FROM best) WHERE r = 1
-      ),
-      m0 AS (
-        SELECT mention_id,
-               CASE ('0x' || substr(md5(mention_id), 1, 2))::INT % 3
-                 WHEN 0 THEN upper(mention)
-                 WHEN 1 THEN {{ic_mention}}
-                 ELSE mention END AS mention
-        FROM read_parquet('{men}')
-      ),
-      m AS (
-        SELECT mention_id, mention, {{ic_mention2}} AS title_v,
-               lower(mention) AS low
-        FROM m0
-      ),
-      j AS (
-        SELECT m.mention_id,
-               s.entity_id AS se, coalesce(s.freq, 0) AS sf_,
-               t.entity_id AS te, coalesce(t.freq, 0) AS tf,
-               c.entity_id AS ce, pl.le AS le
-        FROM m
-        LEFT JOIN best s ON s.k = m.mention
-        LEFT JOIN best t ON t.k = m.title_v
-        LEFT JOIN best c ON c.k = m.low
-        LEFT JOIN pl ON pl.lk = m.low
-      )
-      SELECT mention_id,
-             CASE WHEN sf_ > 0 OR tf > 0 THEN
-                    CASE WHEN sf_ > tf THEN 'pem_span' ELSE 'pem_title' END
-                  WHEN ce IS NOT NULL THEN 'pem_lower_org'
-                  WHEN le IS NOT NULL THEN 'pem_lower_lower'
-                  ELSE 'none' END AS source,
-             CASE WHEN sf_ > 0 OR tf > 0 THEN
-                    CASE WHEN sf_ > tf THEN se ELSE te END
-                  WHEN ce IS NOT NULL THEN ce
-                  ELSE le END AS entity_id
-      FROM j
-    """
-    question_mentions_sql = f"""
-      SELECT id,
-             generate_subscripts(mentions, 1) - 1 AS mention_idx,
-             unnest(mentions)[1] AS start,
-             unnest(mentions)[2] - 1 AS end_incl,
-             unnest(label_id) AS label_id,
-             substring(text, unnest(mentions)[1] + 1,
-                       unnest(mentions)[2] - unnest(mentions)[1]) AS surface,
-             unnest(entity) AS entity
-      FROM read_parquet('{qst}')
-    """
-    two_key_sql = f"""
-      WITH m AS (SELECT mention_id, mention FROM read_parquet('{men}')),
-      bt AS (SELECT lower(title) AS mention, min(entity_id) AS eid_title
-             FROM read_parquet('{ent}') GROUP BY 1),
-      bi AS (SELECT string_split(lower(title), ' ')[-1] AS idtok,
-                    min(entity_id) AS eid_idtok
-             FROM read_parquet('{ent}') GROUP BY 1),
-      j AS (
-        SELECT m.mention_id,
-               bt.eid_title, bi.eid_idtok,
-               coalesce(bt.eid_title, bi.eid_idtok) AS resolved,
-               CASE WHEN bt.eid_title IS NOT NULL THEN 'title'
-                    WHEN bi.eid_idtok IS NOT NULL THEN 'idtok'
-                    ELSE 'none' END AS match_source
-        FROM m
-        LEFT JOIN bt USING (mention)
-        LEFT JOIN bi ON bi.idtok = string_split(m.mention, ' ')[-1]
-      )
-      SELECT match_source, count(*) AS n, count(DISTINCT resolved) AS n_entities
-      FROM j GROUP BY 1
-    """
-    inv_index_sql = f"""
-      WITH inv AS (
-        SELECT entity_id, num_incoming_links,
-               unnest(list_distinct(string_split(trim(regexp_replace(lower(title), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok
-        FROM read_parquet('{ent}')
-      ),
-      mt AS (
-        SELECT mention_id,
-               unnest(list_distinct(string_split(trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok
-        FROM read_parquet('{men}')
-      ),
-      hits AS (
-        SELECT mention_id, entity_id,
-               count(*)::double
-                 + round(ln(1 + max(num_incoming_links)) * 0.1, 6) AS ir_score
-        FROM mt JOIN inv USING (tok)
-        GROUP BY mention_id, entity_id
-      )
-      SELECT mention_id, entity_id, round(ir_score, 6) AS ir_score, rank FROM (
-        SELECT mention_id, entity_id, ir_score,
-               row_number() OVER (PARTITION BY mention_id
-                                  ORDER BY ir_score DESC, entity_id ASC) AS rank
-        FROM hits
-      ) WHERE rank <= 5
-    """
-    _media_ctes = f"""
-      e AS (
-        SELECT doc_id, generate_subscripts(spans, 1) - 1 AS span_idx,
-               unnest(spans) AS sp
-        FROM read_parquet('{doc}')
-      ),
-      media AS (
-        SELECT doc_id, span_idx, sp.media_ref AS media_ref,
-               md5(sp.media_ref) AS h
-        FROM e WHERE sp.kind = 'media'
-      ),
-      decoded AS (
-        SELECT doc_id, span_idx, media_ref,
-               CASE ascii(substr(h, 1, 1)) % 3 WHEN 0 THEN 'image'
-                    WHEN 1 THEN 'audio' ELSE 'video' END AS media_kind,
-               640 + ascii(substr(h, 2, 1)) AS width,
-               360 + ascii(substr(h, 3, 1)) AS height,
-               CASE WHEN ascii(substr(h, 1, 1)) % 3 = 0 THEN 1
-                    ELSE 1 + ascii(substr(h, 4, 1)) END AS n_frames
-        FROM media
-      )"""
-    media_decode_sql = f"""
-      WITH {_media_ctes}
-      SELECT doc_id, span_idx, media_ref, media_kind, width, height, n_frames
-      FROM decoded
-    """
-    media_frames_sql = f"""
-      WITH {_media_ctes}
-      SELECT doc_id, span_idx, media_ref,
-             unnest(range(0, n_frames, 10)) AS frame_idx
-      FROM decoded WHERE media_kind = 'video'
-    """
-    media_resize_sql = f"""
-      WITH {_media_ctes}
-      SELECT doc_id, span_idx, media_ref, width, height,
-             CASE WHEN greatest(width, height) <= 700 THEN width
-                  ELSE floor(width * 700 / greatest(width, height))::INT END
-               AS target_w,
-             CASE WHEN greatest(width, height) <= 700 THEN height
-                  ELSE floor(height * 700 / greatest(width, height))::INT END
-               AS target_h,
-             greatest(width, height) > 700 AS needs_resize
-      FROM decoded WHERE media_kind IN ('image', 'video')
-    """
-    wikidata_sql = f"""
-      SELECT id AS wikidata_id,
-             sitelinks.enwiki.title AS title,
-             labels.en.value AS wikidata_label,
-             descriptions.en.value AS description,
-             coalesce(len(aliases.en), 0) AS n_aliases,
-             sitelinks.enwikiquote.title IS NOT NULL AS has_quote
-      FROM read_json('{wik}')
-      WHERE sitelinks.enwiki.title IS NOT NULL
-    """
-    sentences_sql = f"""
-      WITH s AS (
-        SELECT sent_id,
-               list_filter([trim(x) for x in string_split(
-                 regexp_replace(text, '([.!?])[\\t\\n\\x0B\\f\\r ]+', '\\1' || chr(1), 'g'), chr(1))],
-                 t -> t <> '') AS sents
-        FROM read_parquet('{sfx}')
-      )
-      SELECT sent_id, len(sents) AS n_sentences,
-             array_to_string(list_slice(sents, 1, 2), ' ') AS first_two
-      FROM s
-    """
-    _SPAN_SCORE = ("length(span_text)::double"
-                   " + (('0x' || substr(md5(span_text), 1, 4))::INT % 97)::double"
-                   " / 100.0")
-    threshold_prune_sql = f"""
-      WITH {{span_ctes}},
-      scored AS (
-        SELECT record_id, start, end_excl, span_text, {_SPAN_SCORE} AS score
-        FROM spans
-      ),
-      st AS (
-        SELECT *,
-               sum(CASE WHEN score > 14.0 THEN 1 ELSE 0 END)
-                 OVER (PARTITION BY record_id) AS np,
-               row_number() OVER (PARTITION BY record_id
-                                  ORDER BY score DESC, start, end_excl) AS rk
-        FROM scored
-      )
-      SELECT record_id, start, end_excl, span_text, score FROM st
-      WHERE score > 14.0 OR (np = 0 AND rk <= 2)
-    """
-    bm25_sql = f"""
-      WITH ents AS (SELECT * FROM read_parquet('{ent}')),
-      f AS (
-        SELECT entity_id, unnest(list_distinct(string_split(trim(regexp_replace(lower(title), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))) AS tok,
-               1.0 AS w
-        FROM ents
-        UNION ALL
-        SELECT entity_id,
-               unnest(list_distinct(flatten([string_split(lower(a), ' ') for a in aliases]))),
-               0.7
-        FROM ents
-        UNION ALL
-        SELECT entity_id, unnest(list_distinct(string_split(trim(regexp_replace(lower(text), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')), ' '))), 0.5
-        FROM ents
-      ),
-      best AS (SELECT entity_id, tok, max(w) AS w FROM f GROUP BY 1, 2),
-      dfk AS (SELECT tok, count(*) AS df FROM best GROUP BY 1),
-      tot AS (SELECT count(*) AS n_ents FROM ents),
-      inv AS (
-        SELECT b.entity_id, b.tok,
-               round(ln(n_ents / df) * w * 1000)::BIGINT AS milli
-        FROM best b JOIN dfk USING (tok) CROSS JOIN tot
-      ),
-      boost AS (
-        SELECT entity_id, round(ln(1 + num_incoming_links) * 100)::BIGINT AS bm
-        FROM ents
-      ),
-      mt AS (SELECT mention_id, unnest({_toks('mention')}) AS tok
-             FROM read_parquet('{men}')),
-      hits AS (
-        SELECT mention_id, entity_id, cast(sum(milli) AS BIGINT) AS tok_milli
-        FROM mt JOIN inv USING (tok) GROUP BY 1, 2
-      ),
-      sc AS (
-        SELECT mention_id, h.entity_id, tok_milli + bm AS score_milli
-        FROM hits h JOIN boost USING (entity_id)
-      )
-      SELECT mention_id, entity_id, score_milli, rank FROM (
-        SELECT mention_id, entity_id, score_milli,
-               row_number() OVER (PARTITION BY mention_id
-                                  ORDER BY score_milli DESC, entity_id ASC) AS rank
-        FROM sc
-      ) WHERE rank <= 5
-    """
-    _softmax_ctes = f"""
-      {lev_pairs_cte("lpairs")},
-      ltopk AS (
-        SELECT mention_id, entity_id, sim, rank FROM (
-          SELECT mention_id, entity_id, sim,
-                 row_number() OVER (PARTITION BY mention_id
-                                    ORDER BY sim DESC, entity_id ASC) AS rank
-          FROM lpairs
-        ) WHERE rank <= 3
-      ),
-      cands AS (
-        SELECT mention_id, entity_id, rank,
-               round(exp(sim - mx) / sum(exp(sim - mx))
-                       OVER (PARTITION BY mention_id), 6) AS prob
-        FROM (
-          SELECT mention_id, entity_id, rank, sim,
-                 max(sim) OVER (PARTITION BY mention_id) AS mx
-          FROM ltopk
-        )
-      )"""
-    coref_sql = f"""
-      WITH {_softmax_ctes},
-      mm AS (SELECT mention_id, doc_id, mention FROM read_parquet('{men}')),
-      allm AS (
-        SELECT mention_id, doc_id, lower(mention) AS mention FROM mm
-        UNION ALL
-        SELECT mention_id || ':t0', doc_id, string_split(lower(mention), ' ')[1] FROM mm
-      ),
-      partnerids AS (
-        SELECT c.mention_id FROM cands c
-        WHERE c.rank = 1 AND c.entity_id % 3 = 0
-      ),
-      cur AS (SELECT mention_id AS cur_id, doc_id AS doc, mention AS cur_text FROM allm),
-      oth AS (
-        SELECT mention_id AS partner_id, doc_id AS doc, mention AS partner_text
-        FROM allm WHERE mention_id IN (SELECT mention_id FROM partnerids)
-      ),
-      prs AS (
-        SELECT DISTINCT cur_id, partner_id
-        FROM cur JOIN oth USING (doc)
-        WHERE strpos(partner_text, cur_text) > 0
-          AND partner_text <> cur_text
-          AND (strpos(partner_text, cur_text) = 1
-               OR substr(partner_text, strpos(partner_text, cur_text) - 1, 1) = ' ')
-          AND (strpos(partner_text, cur_text) + length(cur_text)
-                 = length(partner_text) + 1
-               OR substr(partner_text,
-                         strpos(partner_text, cur_text) + length(cur_text), 1) = ' ')
-      ),
-      np AS (SELECT cur_id, count(*) AS n_partners FROM prs GROUP BY 1),
-      cm AS (
-        SELECT mention_id AS partner_id, entity_id,
-               round(prob * 1000000)::BIGINT AS p_micro
-        FROM cands
-      ),
-      merged AS (
-        SELECT prs.cur_id, cm.entity_id, cast(sum(p_micro) AS BIGINT) AS sum_micro
-        FROM prs JOIN cm USING (partner_id) GROUP BY 1, 2
-      )
-      SELECT m.cur_id AS mention_id, m.entity_id,
-             round(m.sum_micro / (np.n_partners * 1000000.0), 6) AS merged_p,
-             np.n_partners
-      FROM merged m JOIN np ON np.cur_id = m.cur_id
-    """
-    rank_hist_sql = f"""
-      WITH {_softmax_ctes},
-      gr AS (
-        SELECT t.mention_id,
-               coalesce(min(CASE WHEN t.entity_id = g.label_id THEN t.rank END), -1)
-                 AS gold_rank
-        FROM ltopk t JOIN read_parquet('{men}') g USING (mention_id)
-        GROUP BY 1
-      ),
-      hist AS (SELECT gold_rank, count(*) AS n FROM gr GROUP BY 1),
-      tot AS (SELECT count(*) AS total FROM gr)
-      SELECT gold_rank, n,
-             cast(sum(CASE WHEN gold_rank > 0 THEN n ELSE 0 END)
-                    OVER (ORDER BY gold_rank ASC ROWS UNBOUNDED PRECEDING) AS BIGINT)
-               AS cum_n,
-             round(cast(sum(CASE WHEN gold_rank > 0 THEN n ELSE 0 END)
-                    OVER (ORDER BY gold_rank ASC ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                   / total, 6) AS cum_share
-      FROM hist CROSS JOIN tot
-    """
-    world_mm_sql = f"""
-      WITH {_softmax_ctes},
-      r1 AS (SELECT mention_id, entity_id FROM ltopk WHERE rank = 1),
-      p AS (
-        SELECT r1.entity_id, g.label_id, g.world
-        FROM r1 JOIN read_parquet('{men}') g USING (mention_id)
-      ),
-      pw AS (
-        SELECT world,
-               avg(CASE WHEN entity_id = label_id THEN 1.0 ELSE 0.0 END) AS acc
-        FROM p GROUP BY 1
-      )
-      SELECT 'macro' AS kind, round(avg(acc), 6) AS acc FROM pw
-      UNION ALL
-      SELECT 'micro',
-             round(avg(CASE WHEN entity_id = label_id THEN 1.0 ELSE 0.0 END), 6)
-      FROM p
-    """
-
-    def _emb_dim_sql(d: int) -> str:
-        return (
-            f"round(cast(list_sum([(('0x' || substr(md5('emb{d}:' || t), 1, 4))::INT"
-            f" - 32768)::BIGINT for t in tks]) AS BIGINT)::double / len(tks), 6)"
-            f" AS e{d}"
-        )
-
-    span_emb_sql = f"""
-      WITH {{span_ctes}},
-      ex AS (SELECT record_id, start, end_excl, string_split(span_text, ' ') AS tks
-             FROM spans)
-      SELECT record_id, start, end_excl,
-             {', '.join(_emb_dim_sql(d) for d in range(4))}
-      FROM ex
-    """
-    cos_qi = _COS_EXACT_SQL.format(a="qv", b="iv")
-    cos_ic = _COS_EXACT_SQL.format(a="iv", b="cv")
-    cos_qc = _COS_EXACT_SQL.format(a="qv", b="cv")
-
-    def _ivf_sql_at(nprobe: int) -> str:
-        return ivf_sql.replace("crank <= 4", f"crank <= {nprobe}")
-
-    ivf_sql = f"""
-    WITH e AS (SELECT vec_id, {_q_emb('embedding')} AS q FROM embeddings),
-    qs AS (SELECT vec_id AS query_id, q AS qv FROM e WHERE vec_id < 64),
-    it AS (SELECT vec_id AS item_id, q AS iv FROM e),
-    cent AS (SELECT vec_id AS cid, q AS cv FROM e ORDER BY vec_id ASC LIMIT 16),
-    assigned AS (
-      SELECT item_id, iv, cid FROM (
-        SELECT i.item_id, i.iv, c.cid,
-               row_number() OVER (PARTITION BY i.item_id
-                                  ORDER BY {cos_ic} DESC, c.cid ASC) AS crank
-        FROM it i CROSS JOIN cent c
-      ) WHERE crank = 1
-    ),
-    probes AS (
-      SELECT query_id, qv, cid FROM (
-        SELECT s.query_id, s.qv, c.cid,
-               row_number() OVER (PARTITION BY s.query_id
-                                  ORDER BY {cos_qc} DESC, c.cid ASC) AS crank
-        FROM qs s CROSS JOIN cent c
-      ) WHERE crank <= 4
-    ),
-    ap_scored AS (
-      SELECT DISTINCT p.query_id, a.item_id,
-             {_COS_EXACT_SQL.format(a="p.qv", b="a.iv")} AS score
-      FROM probes p JOIN assigned a USING (cid)
-      WHERE a.item_id <> p.query_id
-    ),
-    ap_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, item_id ASC) AS rank
-        FROM ap_scored
-      ) WHERE rank <= 10
-    ),
-    ex_scored AS (
-      SELECT query_id, item_id, {cos_qi} AS score
-      FROM qs CROSS JOIN it WHERE item_id <> query_id
-    ),
-    ex_top AS (
-      SELECT query_id, item_id FROM (
-        SELECT query_id, item_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, item_id ASC) AS rank
-        FROM ex_scored
-      ) WHERE rank <= 10
-    )
-    {_RECALL_SQL}
-    """
-
-    ivf_sweep_sql = " UNION ALL ".join(
-        f"SELECT {np}::BIGINT AS nprobe, * FROM ({_ivf_sql_at(np)})"
-        for np in (1, 2, 4)
-    )
-
-    def _logit_sql(kind: str) -> str:
-        return (
-            f"(('0x' || substr(md5('{kind}:' || tok || ':' || pos::varchar), 1, 4))"
-            f"::BIGINT % 2001 - 1000)"
-        )
-
-    span_scores_sql = f"""
-      WITH {{span_ctes}},
-      tk AS (
-        SELECT id AS record_id,
-               generate_subscripts(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+'), 1) - 1
-                 AS pos,
-               unnest(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+')) AS tok
-        FROM read_parquet('{qst}')
-      ),
-      lg AS (
-        SELECT record_id, pos, {_logit_sql('st')} AS start_l,
-               {_logit_sql('en')} AS end_l, {_logit_sql('in')} AS in_l
-        FROM tk
-      ),
-      cm AS (
-        SELECT *, cast(sum(in_l) OVER (PARTITION BY record_id ORDER BY pos
-                                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_in
-        FROM lg
-      ),
-      cm2 AS (SELECT *, cum_in - in_l AS prev_cum FROM cm)
-      SELECT s.record_id, s.start, s.end_excl, s.span_text,
-             a.start_l + b.end_l + b.cum_in - a.prev_cum AS score_milli
-      FROM spans s
-      JOIN cm2 a ON a.record_id = s.record_id AND a.pos = s.start
-      JOIN cm2 b ON b.record_id = s.record_id AND b.pos = s.end_excl - 1
-    """
-    wext = _fixtures()["wiki_extractor"].replace("'", "''")
-    mjsonl = _fixtures()["mentions_jsonl"].replace("'", "''")
-    cstream = _fixtures()["conll_stream"].replace("'", "''")
-    # wiki-extractor blocks parsed order-free from the whole file (DuckDB
-    # 1.0 has no file_row_number; read_text + block split mirrors the scan)
-    _wiki_ctes = f"""
-      wt AS (SELECT content FROM read_text('{wext}')),
-      wb AS (SELECT unnest(string_split(content, '<doc ')) AS blk FROM wt),
-      wdoc AS (
-        SELECT regexp_extract(blk, 'id="(\\d+)"', 1)::BIGINT AS wikipedia_id,
-               regexp_extract(blk, 'title="([^"]*)"', 1) AS title,
-               array_to_string(
-                 [y for y in [rtrim(x, chr(13)) for x in string_split(
-                    regexp_extract(blk, '>\\r?\n([\\s\\S]*?)</doc>', 1), chr(10))]
-                  if trim(y) <> ''], chr(10)) AS text
-        FROM wb WHERE blk LIKE 'id=%'
-      ),
-      wlinks AS (
-        SELECT wikipedia_id AS src_id,
-               replace(regexp_extract(a, '<a href="([^"]+)">', 1), '%20', ' ')
-                 AS href_title,
-               regexp_extract(a, '>([^<]*)</a>', 1) AS anchor_text
-        FROM (
-          SELECT wikipedia_id,
-                 unnest(regexp_extract_all(text,
-                   '<a href="([^"]+)">([^<]*)</a>', 0)) AS a
-          FROM wdoc
-        )
-      )"""
-    wiki_scan_sql = f"""
-      WITH {_wiki_ctes}
-      SELECT wikipedia_id, title,
-             len(regexp_split_to_array(trim(text), '[\\t\\n\\x0B\\f\\r ]+')) AS num_tokens,
-             md5(text) AS text_md5
-      FROM wdoc
-    """
-    wiki_links_sql = f"WITH {_wiki_ctes} SELECT src_id, href_title, anchor_text FROM wlinks"
-    wiki_incoming_sql = f"""
-      WITH {_wiki_ctes},
-      resolved AS (
-        SELECT coalesce(e1.wikipedia_id, e2.wikipedia_id) AS target
-        FROM wlinks l
-        LEFT JOIN wdoc e1 ON e1.title = l.href_title
-        LEFT JOIN wdoc e2
-          ON lower(e2.title) = lower(replace(l.href_title, '_', ' '))
-      )
-      SELECT target AS entity_id, count(*) AS num_incoming_links
-      FROM resolved WHERE target IS NOT NULL GROUP BY 1
-    """
-    mention_scan_sql = f"""
-      SELECT id AS mention_id, lower(mention) AS mention,
-             lower(label) AS label_title
-      FROM read_json('{mjsonl}')
-      WHERE lower(label) IN (SELECT lower(title) FROM read_json('{jsonl}'))
-    """
-    # the token-pair block assignment `assign` (record_id, block_key):
-    # every sorted token pair of a mention, its one token when it has one;
-    # `sized` adds each block's size bs
-    block_assign_ctes = f"""m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
-      assign AS (
-        SELECT mention_id AS record_id, unnest(
-          CASE WHEN len(toks) >= 2 THEN
-            flatten([[('tp:' || toks[i] || '|' || toks[j])
-                      for j in range(i+1, len(toks)+1)]
-                     for i in range(1, len(toks)+1)])
-          ELSE ['t1:' || toks[1]] END) AS block_key
-        FROM m
-      )"""
-    block_sized_ctes = f"""{block_assign_ctes},
-      sized AS (
-        SELECT block_key, record_id,
-               count(*) OVER (PARTITION BY block_key) AS bs
-        FROM assign
-      )"""
-    blocking_recall_sql = f"""
-      WITH {block_sized_ctes},
-      kept AS (SELECT * FROM sized WHERE bs <= 4096),
-      cand AS (
-        SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
-        FROM kept a JOIN kept b
-          ON a.block_key = b.block_key AND a.record_id < b.record_id
-      ),
-      g AS (SELECT mention_id_a, mention_id_b FROM read_parquet('{gold}')
-            WHERE same_entity),
-      j AS (
-        SELECT (c.record_id_a IS NOT NULL) AS covered
-        FROM g LEFT JOIN cand c
-          ON c.record_id_a = g.mention_id_a AND c.record_id_b = g.mention_id_b
-      )
-      SELECT count(*) AS n_gold_pos,
-             cast(sum(CASE WHEN covered THEN 1 ELSE 0 END) AS BIGINT) AS n_covered,
-             round(avg(CASE WHEN covered THEN 1.0 ELSE 0.0 END), 6) AS recall
-      FROM j
-    """
-    conll_stream_sql = f"""
-      WITH ct AS (SELECT content FROM read_text('{cstream}')),
-      cl AS (
-        -- rtrim chr(13): the Spark text source strips CRLF terminators;
-        -- a raw chr(10) split must not leave a CR on CRLF-encoded files
-        SELECT rtrim(line0, chr(13)) AS line, line_no FROM (
-          SELECT unnest(string_split(content, chr(10))) AS line0,
-                 generate_subscripts(string_split(content, chr(10)), 1) - 1 AS line_no
-          FROM ct
-        )
-      ),
-      cd AS (
-        SELECT line, line_no,
-               cast(sum(CASE WHEN starts_with(line, '-DOCSTART-') THEN 1 ELSE 0 END)
-                 OVER (ORDER BY line_no ROWS UNBOUNDED PRECEDING) AS BIGINT) AS doc_id
-        FROM cl
-      ),
-      ctoks AS (
-        SELECT doc_id, line_no,
-               regexp_split_to_array(line, '[\\t\\n\\x0B\\f\\r ]+')[1] AS token,
-               coalesce(regexp_split_to_array(line, '[\\t\\n\\x0B\\f\\r ]+')[2], 'O') AS tag
-        FROM cd WHERE NOT starts_with(line, '-DOCSTART-') AND trim(line) <> ''
-      ),
-      r1 AS (
-        SELECT *, lag(tag) OVER (PARTITION BY doc_id ORDER BY line_no) AS prev_tag
-        FROM ctoks
-      ),
-      r2 AS (
-        SELECT *, CASE WHEN starts_with(tag, 'B')
-                         OR (starts_with(tag, 'I') AND NOT coalesce(
-                              starts_with(prev_tag, 'B') OR starts_with(prev_tag, 'I'),
-                              false))
-                       THEN 1 ELSE 0 END AS run_start
-        FROM r1
-      ),
-      r3 AS (
-        SELECT *, sum(run_start) OVER (PARTITION BY doc_id ORDER BY line_no
-                                       ROWS UNBOUNDED PRECEDING) AS run_id
-        FROM r2
-      )
-      SELECT doc_id, min(line_no) AS start_line,
-             string_agg(token, ' ' ORDER BY line_no) AS mention
-      FROM r3 WHERE tag <> 'O' GROUP BY doc_id, run_id
-    """
-    cand_fetch_sql = f"""
-      WITH {lev_pairs_cte("fpairs")},
-      ftop AS (
-        SELECT mention_id, entity_id, rank FROM (
-          SELECT mention_id, entity_id,
-                 row_number() OVER (PARTITION BY mention_id
-                                    ORDER BY sim DESC, entity_id ASC) AS rank
-          FROM fpairs
-        ) WHERE rank <= 3
-      )
-      SELECT t.mention_id, t.entity_id, t.rank, e.title, e.wikipedia_id,
-             e.num_incoming_links
-      FROM ftop t JOIN read_parquet('{ent}') e USING (entity_id)
-    """
-    zeshel_join_sql = f"""
-      SELECT m.mention_id, m.world, len(d.spans) AS n_doc_spans,
-             e.title AS label_title
-      FROM read_parquet('{men}') m
-      JOIN read_parquet('{doc}') d USING (doc_id)
-      JOIN read_parquet('{ent}') e ON e.entity_id = m.label_id
-    """
-    conll = _fixtures()["conll_tsv"].replace("'", "''")
-    conll_sql = f"""
-      WITH raw AS (
-        SELECT value FROM read_csv('{conll}', delim=chr(2), header=false, quote='',
-                                   columns={{'value': 'VARCHAR'}})
-        WHERE trim(value) <> ''
-      ),
-      parsed AS (
-        SELECT string_split(value, chr(9)) AS comps,
-               string_split(string_split(value, chr(9))[-1], ',') AS gp
-        FROM raw
-      ),
-      rows0 AS (
-        SELECT comps[1] || ' ' || comps[2] AS doc_name,
-               comps[3] AS mention,
-               replace(replace(array_to_string(
-                 list_slice(gp, (CASE WHEN gp[1] = '-1' THEN 2 ELSE 3 END) + 1,
-                            len(gp)), ','), '"', '%22'), ' ', '_') AS gold_entity,
-               CASE WHEN comps[7] = 'EMPTYCAND'
-                    THEN CAST([] AS STRUCT(entity VARCHAR, prior DOUBLE)[])
-                    ELSE [{{'entity': replace(replace(array_to_string(
-                             list_slice(string_split(c, ','), 3,
-                                        len(string_split(c, ','))), ','),
-                             '"', '%22'), ' ', '_'),
-                           'prior': string_split(c, ',')[2]::DOUBLE}}
-                          for c in list_slice(comps, 7, len(comps) - 2)]
-               END AS cands
-        FROM parsed
-      )
-      SELECT doc_name, mention, gold_entity, len(cands) AS n_cands,
-             generate_subscripts(cands, 1) - 1 AS cand_idx,
-             unnest(cands).entity AS cand_entity,
-             unnest(cands).prior AS cand_prior
-      FROM rows0 WHERE len(cands) > 0
-      UNION ALL
-      SELECT doc_name, mention, gold_entity, 0, -1, NULL, NULL
-      FROM rows0 WHERE len(cands) = 0
-    """
-    def _ic(col: str) -> str:
-        """Spark initcap replica for space-separated text (DuckDB has no
-        initcap builtin)."""
-        return (
-            "array_to_string([CASE WHEN w = '' THEN ''"
-            " ELSE upper(substr(w, 1, 1)) || lower(substr(w, 2)) END"
-            f" for w in string_split({col}, ' ')], ' ')"
-        )
-
-    initcap_sql = _ic("mention")
-    scalar_forms_sql = f"""
-      SELECT mention_id,
-             {initcap_sql} AS title_case,
-             translate(mention, ' .', '_-') AS underscored
-      FROM read_parquet('{men}')
-    """
-    span_f1_sql = f"""
-      WITH RECURSIVE qm AS (
-        SELECT id,
-               generate_subscripts(mentions, 1) - 1 AS mention_idx,
-               unnest(entity) AS entity,
-               unnest(mentions)[1] AS start,
-               unnest(mentions)[2] AS e
-        FROM read_parquet('{qst}')
-      ),
-      gold AS (SELECT id, entity, start, e FROM qm),
-      pm AS (
-        SELECT *, ('0x' || substr(md5(id || ':' || mention_idx::varchar), 1, 4))::INT
-                    % 4 AS mode
-        FROM qm
-      ),
-      pred AS (
-        SELECT id,
-               CASE WHEN mode = 2 THEN entity || '_wrong' ELSE entity END AS entity,
-               start,
-               CASE WHEN mode = 1 THEN e - 1 ELSE e END AS e
-        FROM pm WHERE mode <> 0
-      ),
-      gs AS (
-        SELECT id, entity, start, e,
-               row_number() OVER (PARTITION BY id ORDER BY e, start, entity) AS i
-        FROM gold
-      ),
-      ps AS (
-        SELECT id, entity, start, e,
-               row_number() OVER (PARTITION BY id ORDER BY e, start, entity) AS j
-        FROM pred
-      ),
-      cells AS (
-        SELECT g.id, g.i, p.j,
-               (lower(g.entity) = lower(p.entity))
-                 AND NOT (g.start >= p.e OR p.start >= g.e) AS w,
-               (lower(g.entity) = lower(p.entity))
-                 AND g.start = p.start AND g.e = p.e AS s
-        FROM gs g JOIN ps p USING (id)
-      ),
-      dims AS (SELECT id, max(i) AS n, max(j) AS m FROM cells GROUP BY id),
-      -- LCS DP unrolled cell by cell (row-major): state carries the flat dp
-      -- matrices; per-question span counts are tiny so depth n*m is small
-      walk AS (
-        SELECT id, 0::BIGINT AS k, CAST([] AS BIGINT[]) AS dpw,
-               CAST([] AS BIGINT[]) AS dps, n, m
-        FROM dims
-        UNION ALL
-        SELECT w.id, w.k + 1,
-               list_append(w.dpw, CASE WHEN c.w
-                 THEN (CASE WHEN c.i > 1 AND c.j > 1
-                            THEN w.dpw[(c.i-2)*w.m + c.j - 1] ELSE 0 END) + 1
-                 ELSE greatest(
-                        CASE WHEN c.i > 1 THEN w.dpw[(c.i-2)*w.m + c.j] ELSE 0 END,
-                        CASE WHEN c.j > 1 THEN w.dpw[(c.i-1)*w.m + c.j - 1] ELSE 0 END)
-                 END),
-               list_append(w.dps, CASE WHEN c.s
-                 THEN (CASE WHEN c.i > 1 AND c.j > 1
-                            THEN w.dps[(c.i-2)*w.m + c.j - 1] ELSE 0 END) + 1
-                 ELSE greatest(
-                        CASE WHEN c.i > 1 THEN w.dps[(c.i-2)*w.m + c.j] ELSE 0 END,
-                        CASE WHEN c.j > 1 THEN w.dps[(c.i-1)*w.m + c.j - 1] ELSE 0 END)
-                 END),
-               w.n, w.m
-        FROM walk w
-        JOIN cells c ON c.id = w.id
-          AND c.i = (w.k // w.m + 1) AND c.j = (w.k % w.m + 1)
-        WHERE w.k < w.n * w.m
-      ),
-      finals AS (
-        SELECT id, dpw[n*m] AS wtp, dps[n*m] AS stp FROM walk WHERE k = n*m
-      ),
-      tot AS (
-        SELECT (SELECT cast(coalesce(sum(wtp), 0) AS BIGINT) FROM finals) AS weak_tp,
-               (SELECT cast(coalesce(sum(stp), 0) AS BIGINT) FROM finals) AS strong_tp,
-               (SELECT count(*) FROM gold) AS n_gold,
-               (SELECT count(*) FROM pred) AS n_pred
-      )
-      SELECT weak_tp, strong_tp, n_gold, n_pred,
-        round(2 * (weak_tp / greatest(n_pred, 1)) * (weak_tp / greatest(n_gold, 1))
-              / greatest(weak_tp / greatest(n_pred, 1)
-                         + weak_tp / greatest(n_gold, 1), 1e-12), 6) AS weak_f1,
-        round(2 * (strong_tp / greatest(n_pred, 1)) * (strong_tp / greatest(n_gold, 1))
-              / greatest(strong_tp / greatest(n_pred, 1)
-                         + strong_tp / greatest(n_gold, 1), 1e-12), 6) AS strong_f1
-      FROM tot
-    """
-
-    def _tok_ids_sql(expr: str) -> str:
-        norm = f"trim(regexp_replace(lower({expr}), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g'))"
-        return (
-            "[(('0x' || substr(md5('tok:' || t), 1, 8))::BIGINT + 1000) "
-            f"for t in list_filter(string_split({norm}, ' '), t -> t <> '')]"
-        )
-
-    _L, _CL, _PL = 12, 16, 24  # must match _CTX_LEN/_CAND_LEN/_PAIR_LEN
-    ctx_ids_ctes = f"""
-      tk AS (
-        SELECT mention_id, label_id,
-               {_tok_ids_sql('context_left')} AS lt,
-               {_tok_ids_sql('mention')} AS mt0,
-               {_tok_ids_sql('context_right')} AS rt
-        FROM read_parquet('{men}')
-      ),
-      tm AS (
-        SELECT mention_id, label_id, lt, rt,
-               CASE WHEN len(mt0) > 0 THEN [1::BIGINT] || mt0 || [2::BIGINT]
-                    ELSE []::BIGINT[] END AS mt
-        FROM tk
-      ),
-      tq AS (SELECT *, (floor(({_L} - len(mt)) / 2) - 1)::INT AS lq FROM tm),
-      tq2 AS (SELECT *, ({_L} - len(mt) - lq - 2)::INT AS rq FROM tq),
-      tq3 AS (
-        SELECT *,
-          greatest(CASE WHEN len(lt) > lq AND len(rt) <= rq
-                        THEN lq + (rq - len(rt)) ELSE lq END, 0) AS lq2,
-          greatest(CASE WHEN len(lt) <= lq AND len(rt) > rq
-                        THEN rq + (lq - len(lt)) ELSE rq END, 0) AS rq2
-        FROM tq2
-      ),
-      tctx AS (
-        SELECT mention_id, label_id,
-               list_resize(list_slice(
-                 [101::BIGINT]
-                 || (CASE WHEN len(lt) <= lq2 THEN lt
-                          WHEN lq2 > 0 THEN list_slice(lt, len(lt)-lq2+1, len(lt))
-                          ELSE []::BIGINT[] END)
-                 || mt
-                 || (CASE WHEN len(rt) <= rq2 THEN rt
-                          WHEN rq2 > 0 THEN list_slice(rt, 1, rq2)
-                          ELSE []::BIGINT[] END)
-                 || [102::BIGINT], 1, {_L}), {_L}, 0) AS ctx_ids
-        FROM tq3
-      )"""
-    pair_tokens_sql = f"""
-      WITH {ctx_ids_ctes}
-      SELECT mention_id, array_to_string(ctx_ids, ',') AS ids_csv FROM tctx
-    """
-    pair_concat_sql = f"""
-      WITH {ctx_ids_ctes},
-      cbody AS (
-        SELECT entity_id,
-               list_slice({_tok_ids_sql('title')} || [3::BIGINT]
-                          || {_tok_ids_sql('text')}, 1, {_CL} - 2) AS body
-        FROM read_parquet('{ent}')
-      ),
-      ccand AS (
-        SELECT entity_id,
-               list_resize([101::BIGINT] || body || [102::BIGINT], {_CL}, 0)
-                 AS cand_ids
-        FROM cbody
-      ),
-      {lev_pairs_cte("simp")},
-      tk3 AS (
-        SELECT mention_id, entity_id, rank FROM (
-          SELECT mention_id, entity_id,
-                 row_number() OVER (PARTITION BY mention_id
-                                    ORDER BY sim DESC, entity_id ASC) AS rank
-          FROM simp
-        ) WHERE rank <= 3
-      ),
-      j AS (
-        SELECT t.mention_id, t.entity_id, t.rank, x.label_id, x.ctx_ids, c.cand_ids
-        FROM tk3 t
-        JOIN tctx x ON x.mention_id = t.mention_id
-        JOIN ccand c ON c.entity_id = t.entity_id
-      )
-      SELECT mention_id, entity_id, rank,
-             coalesce(min(CASE WHEN entity_id = label_id THEN rank END)
-                        OVER (PARTITION BY mention_id), -1) AS gold_rank,
-             array_to_string(list_slice(ctx_ids || list_slice(cand_ids, 2, {_CL}),
-                                        1, {_PL}), ',') AS pair_csv
-      FROM j
-    """
-    pair_rerank_sql = f"""
-      WITH base AS ({pair_concat_sql}),
-      seg AS (
-        SELECT mention_id, entity_id, gold_rank,
-               len(list_intersect(
-                 list_distinct(list_filter(
-                   list_slice(string_split(pair_csv, ',')::BIGINT[], 1, {_L}),
-                   x -> x > 102)),
-                 list_distinct(list_filter(
-                   list_slice(string_split(pair_csv, ',')::BIGINT[],
-                              {_L} + 1, {_PL}),
-                   x -> x > 102)))) AS pair_score
-        FROM base
-      )
-      SELECT mention_id, entity_id, gold_rank, pair_score,
-             row_number() OVER (PARTITION BY mention_id
-                                ORDER BY pair_score DESC, entity_id ASC) AS new_rank
-      FROM seg
-    """
-    jsonl_scan_sql = f"""
-      SELECT row_number() OVER (ORDER BY wikipedia_id ASC NULLS LAST, title ASC NULLS FIRST) - 1
-               AS entity_id,
-             title, text, wikipedia_id
-      FROM (
-        SELECT title, text,
-               regexp_extract(idx, 'curid=(\\d+)', 1)::bigint AS wikipedia_id
-        FROM read_json('{jsonl}')
-      )
-    """
-    return {
-        # integer-exact PageRank over the gold match graph: every step is
-        # BIGINT floor division ('//' here, 'div' in Spark — identical on the
-        # non-negative values involved); sums cast ::BIGINT before arithmetic
-        # so DuckDB never surfaces HUGEINT to the comparator
-        # er_assortativity: spearman window-rank twin over the endpoint
-        # degree pairs of the SAME raw/e/deg CTEs.
-        "er_assortativity": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
-          ed AS (
-            SELECT da.deg AS dq, db.deg AS dp
-            FROM e JOIN deg da ON da.u = e.u JOIN deg db ON db.u = e.v
-          ),
-          r AS (
-            SELECT (2 * rank() OVER (ORDER BY dq)
-                    + count(*) OVER (PARTITION BY dq) - 1)::BIGINT AS rq,
-                   (2 * rank() OVER (ORDER BY dp)
-                    + count(*) OVER (PARTITION BY dp) - 1)::BIGINT AS rp
-            FROM ed
-          ),
-          nd AS (
-            SELECT count(*)::BIGINT AS n,
-                   count(DISTINCT dq)::BIGINT AS nda,
-                   count(DISTINCT dp)::BIGINT AS ndb
-            FROM ed
-          ),
-          s AS (SELECT sum((rq - rp) * (rq - rp))::BIGINT AS d2 FROM r),
-          t AS (
-            SELECT n, nda, ndb, d2 AS sum_d2_4x FROM nd, s
-          )
-          SELECT 'deg_u' AS col_a, 'deg_v' AS col_b, n,
-                 nda AS n_distinct_a, ndb AS n_distinct_b, sum_d2_4x,
-                 {_SPEARMAN_RHO_SQL} AS rho_ppm
-          FROM t
-        """,
-        "er_degree_distribution": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
-          hist AS (SELECT deg, count(*)::BIGINT AS n_records FROM deg GROUP BY 1),
-          tot AS (SELECT sum(n_records)::BIGINT AS n_total FROM hist)
-          SELECT deg, n_records, n_total,
-                 ((1000000 * n_records) // n_total)::BIGINT AS share_ppm
-          FROM hist CROSS JOIN tot
-        """,
-        # synchronous LPA, 3 unrolled sweeps: per-round argmax is
-        # row_number ORDER BY c DESC, lbl — identical to Spark's
-        # min_by(lbl, struct(-c, lbl)) lexicographic struct order
-        "er_label_propagation": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          l0 AS (SELECT DISTINCT u AS n, u AS lbl FROM e),
-          c1 AS (SELECT e.u, l0.lbl, count(*)::BIGINT AS c
-                 FROM e JOIN l0 ON l0.n = e.v GROUP BY 1, 2),
-          l1 AS (SELECT u AS n, lbl FROM (
-                   SELECT u, lbl, row_number() OVER (
-                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c1)
-                 WHERE rn = 1),
-          c2 AS (SELECT e.u, l1.lbl, count(*)::BIGINT AS c
-                 FROM e JOIN l1 ON l1.n = e.v GROUP BY 1, 2),
-          l2 AS (SELECT u AS n, lbl FROM (
-                   SELECT u, lbl, row_number() OVER (
-                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c2)
-                 WHERE rn = 1),
-          c3 AS (SELECT e.u, l2.lbl, count(*)::BIGINT AS c
-                 FROM e JOIN l2 ON l2.n = e.v GROUP BY 1, 2),
-          l3 AS (SELECT u AS n, lbl FROM (
-                   SELECT u, lbl, row_number() OVER (
-                     PARTITION BY u ORDER BY c DESC, lbl) AS rn FROM c3)
-                 WHERE rn = 1),
-          sz AS (SELECT lbl, count(*)::BIGINT AS community_size
-                 FROM l3 GROUP BY 1)
-          SELECT l3.n AS record_id, l3.lbl AS lp_label, sz.community_size
-          FROM l3 JOIN sz ON sz.lbl = l3.lbl
-        """,
-        "er_match_pagerank": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
-          r0 AS (SELECT u AS n, 1000000::BIGINT AS r FROM deg),
-          r1 AS (
-            SELECT e.v AS n,
-                   (150000 + (850 * (sum(r0.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
-            FROM e JOIN r0 ON r0.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
-          ),
-          r2 AS (
-            SELECT e.v AS n,
-                   (150000 + (850 * (sum(r1.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
-            FROM e JOIN r1 ON r1.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
-          ),
-          r3 AS (
-            SELECT e.v AS n,
-                   (150000 + (850 * (sum(r2.r // d.deg))::BIGINT) // 1000)::BIGINT AS r
-            FROM e JOIN r2 ON r2.n = e.u JOIN deg d ON d.u = e.u GROUP BY e.v
-          )
-          SELECT r3.n AS record_id, r3.r AS pr_ppm, d.deg AS deg
-          FROM r3 JOIN deg d ON d.u = r3.n
-        """,
-        # bounded k-core peel (k=3, 3 rounds), unrolled like the pagerank
-        # chain: each round drops sub-k nodes from the previous round's
-        # degree table, refilters the edge list to surviving endpoints, and
-        # recounts; survivors isolated by a peel stay at degree 0 via the
-        # LEFT JOIN so the next round evicts them — identical to the Spark
-        # operator's coalesce(d, 0)
-        "er_match_kcore": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg0 AS (SELECT u, count(*)::BIGINT AS deg0 FROM e GROUP BY u),
-          d0 AS (SELECT u, deg0 AS deg FROM deg0),
-          dead1 AS (SELECT u, 1::BIGINT AS rr FROM d0 WHERE deg < 3),
-          a1 AS (SELECT u FROM d0 WHERE deg >= 3),
-          e1 AS (SELECT e.u, e.v FROM e
-                 WHERE e.u IN (SELECT u FROM a1) AND e.v IN (SELECT u FROM a1)),
-          d1 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a1 a
-                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e1 GROUP BY u) c
-                 USING (u)),
-          dead2 AS (SELECT u, 2::BIGINT AS rr FROM d1 WHERE deg < 3),
-          a2 AS (SELECT u FROM d1 WHERE deg >= 3),
-          e2 AS (SELECT e1.u, e1.v FROM e1
-                 WHERE e1.u IN (SELECT u FROM a2) AND e1.v IN (SELECT u FROM a2)),
-          d2 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a2 a
-                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e2 GROUP BY u) c
-                 USING (u)),
-          dead3 AS (SELECT u, 3::BIGINT AS rr FROM d2 WHERE deg < 3),
-          a3 AS (SELECT u FROM d2 WHERE deg >= 3),
-          e3 AS (SELECT e2.u, e2.v FROM e2
-                 WHERE e2.u IN (SELECT u FROM a3) AND e2.v IN (SELECT u FROM a3)),
-          d3 AS (SELECT a.u, coalesce(c.d, 0)::BIGINT AS deg FROM a3 a
-                 LEFT JOIN (SELECT u, count(*)::BIGINT AS d FROM e3 GROUP BY u) c
-                 USING (u)),
-          removed AS (SELECT * FROM dead1 UNION ALL SELECT * FROM dead2
-                      UNION ALL SELECT * FROM dead3)
-          SELECT g.u AS record_id, g.deg0 AS deg0,
-                 coalesce(r.rr, 0)::BIGINT AS removed_round,
-                 coalesce(d3.deg, 0)::BIGINT AS core_deg
-          FROM deg0 g LEFT JOIN removed r USING (u) LEFT JOIN d3 USING (u)
-        """,
-        # multi-source BFS from local-minimum seeds, unrolled: each frontier
-        # is neighbors-of-previous-frontier minus everything already seen;
-        # ids are non-null so the NOT IN anti-joins are safe
-        "er_match_bfs_depth": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          nm AS (SELECT u, min(v) AS mn FROM e GROUP BY u),
-          s0 AS (SELECT u FROM nm WHERE u < mn),
-          f1 AS (SELECT DISTINCT e.v AS u FROM e
-                 WHERE e.u IN (SELECT u FROM s0)
-                   AND e.v NOT IN (SELECT u FROM s0)),
-          f2 AS (SELECT DISTINCT e.v AS u FROM e
-                 WHERE e.u IN (SELECT u FROM f1)
-                   AND e.v NOT IN (SELECT u FROM s0)
-                   AND e.v NOT IN (SELECT u FROM f1)),
-          f3 AS (SELECT DISTINCT e.v AS u FROM e
-                 WHERE e.u IN (SELECT u FROM f2)
-                   AND e.v NOT IN (SELECT u FROM s0)
-                   AND e.v NOT IN (SELECT u FROM f1)
-                   AND e.v NOT IN (SELECT u FROM f2)),
-          vis AS (SELECT u, 0::BIGINT AS d FROM s0
-                  UNION ALL SELECT u, 1::BIGINT FROM f1
-                  UNION ALL SELECT u, 2::BIGINT FROM f2
-                  UNION ALL SELECT u, 3::BIGINT FROM f3)
-          SELECT nm.u AS record_id, coalesce(v.d, -1)::BIGINT AS bfs_dist
-          FROM nm LEFT JOIN vis v USING (u)
-        """,
-        # common-neighbor link prediction over the SCORED match graph:
-        # same scored/is_match CTE as er_cluster_repair, wedge self-join
-        # keyed on the shared neighbor, NOT EXISTS anti-join against the
-        # canonical edge set, exact-ppm neighborhood Jaccard in BIGINT
-        # floor division
-        "er_missing_links": f"""
-          {match_graph_ctes},
-          w AS (
-            SELECT e1.v AS a, e2.v AS b, count(*)::BIGINT AS cn
-            FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-            GROUP BY 1, 2
-          ),
-          cand AS (
-            SELECT a, b, cn FROM w
-            WHERE cn >= 2
-              AND NOT EXISTS (SELECT 1 FROM me r WHERE r.u = w.a AND r.v = w.b)
-          )
-          SELECT c.a AS record_id_a, c.b AS record_id_b,
-                 c.cn AS common_neighbors,
-                 ((1000000 * c.cn) // (da.deg + db.deg - c.cn))::BIGINT
-                   AS jaccard_ppm
-          FROM cand c
-          JOIN deg da ON da.u = c.a
-          JOIN deg db ON db.u = c.b
-        """,
-        # PPRL Bloom-Dice: bigram decomposition of the normalized mention,
-        # 3 salted md5 positions per bigram into a 64-bit filter (set form),
-        # pair intersection joined on (pair, pos), exact-ppm Dice with
-        # empty-filter pairs kept at 0
-        "er_pprl_bloom_dice": f"""
-          WITH mm AS (
-            SELECT mention_id AS rid, {_norm_m} AS norm
-            FROM read_parquet('{men}')
-          ),
-          g AS (
-            SELECT rid, substr(norm, i, 2) AS gram
-            FROM mm, unnest(range(1, length(norm))) AS t(i)
-          ),
-          pos AS (
-            SELECT DISTINCT rid, pos FROM (
-              SELECT rid,
-                     ('0x' || substr(md5('bf0:' || gram), 1, 8))::BIGINT % 64 AS pos
-              FROM g
-              UNION ALL
-              SELECT rid, ('0x' || substr(md5('bf1:' || gram), 1, 8))::BIGINT % 64
-              FROM g
-              UNION ALL
-              SELECT rid, ('0x' || substr(md5('bf2:' || gram), 1, 8))::BIGINT % 64
-              FROM g
-            )
-          ),
-          bits AS (SELECT rid, count(*)::BIGINT AS bits FROM pos GROUP BY 1),
-          pr AS (
-            SELECT mention_id_a AS a, mention_id_b AS b
-            FROM read_parquet('{gold}')
-          ),
-          inter AS (
-            SELECT pr.a, pr.b, count(*)::BIGINT AS inter_bits
-            FROM pr
-            JOIN pos pa ON pa.rid = pr.a
-            JOIN pos pb ON pb.rid = pr.b AND pb.pos = pa.pos
-            GROUP BY 1, 2
-          )
-          SELECT pr.a AS record_id_a, pr.b AS record_id_b,
-                 coalesce(ba.bits, 0)::BIGINT AS bits_a,
-                 coalesce(bb.bits, 0)::BIGINT AS bits_b,
-                 coalesce(i.inter_bits, 0)::BIGINT AS inter_bits,
-                 (CASE WHEN coalesce(ba.bits, 0) + coalesce(bb.bits, 0) > 0
-                       THEN (2000000 * coalesce(i.inter_bits, 0))
-                            // (coalesce(ba.bits, 0) + coalesce(bb.bits, 0))
-                       ELSE 0 END)::BIGINT AS dice_ppm
-          FROM pr
-          LEFT JOIN inter i ON i.a = pr.a AND i.b = pr.b
-          LEFT JOIN bits ba ON ba.rid = pr.a
-          LEFT JOIN bits bb ON bb.rid = pr.b
-        """,
-        # group linkage: same scored doc-pair build as er_collective_boost,
-        # orientation canonicalized by swapping (doc, id) tuples together,
-        # reciprocal-best row_number pair inside each doc pair, then the
-        # exact-integer member Jaccard against TOTAL doc member counts
-        "er_group_linkage": f"""
-          WITH m AS (
-            SELECT mention_id, doc_id, {_norm_m} AS norm,
-                   list_distinct(string_split({_norm_m}, ' ')) AS t
-            FROM read_parquet('{men}')
-          ),
-          p0 AS (
-            SELECT g.mention_id_a AS ia, g.mention_id_b AS ib,
-                   ma.doc_id AS da, mb.doc_id AS db,
-                   floor(round(len(list_intersect(ma.t, mb.t))::double
-                         / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1), 6)
-                         * 1000000)::BIGINT AS s
-            FROM read_parquet('{gold}') g
-            JOIN m ma ON ma.mention_id = g.mention_id_a
-            JOIN m mb ON mb.mention_id = g.mention_id_b
-            WHERE ma.doc_id <> mb.doc_id
-          ),
-          p AS (
-            SELECT CASE WHEN da <= db THEN da ELSE db END AS ga,
-                   CASE WHEN da <= db THEN db ELSE da END AS gb,
-                   CASE WHEN da <= db THEN ia ELSE ib END AS la,
-                   CASE WHEN da <= db THEN ib ELSE ia END AS lb,
-                   s
-            FROM p0
-          ),
-          r AS (
-            SELECT ga, gb, s,
-                   row_number() OVER (PARTITION BY ga, gb, la
-                                      ORDER BY s DESC, lb ASC) AS rl,
-                   row_number() OVER (PARTITION BY ga, gb, lb
-                                      ORDER BY s DESC, la ASC) AS rr
-            FROM p
-          ),
-          mm AS (
-            SELECT ga, gb, count(*)::BIGINT AS n_matched
-            FROM r WHERE rl = 1 AND rr = 1 GROUP BY 1, 2
-          ),
-          gs AS (
-            SELECT doc_id, count(*)::BIGINT AS n
-            FROM read_parquet('{men}') GROUP BY 1
-          )
-          SELECT mm.ga AS group_a, mm.gb AS group_b, a.n AS n_a, b.n AS n_b,
-                 mm.n_matched,
-                 ((1000000 * mm.n_matched) // (a.n + b.n - mm.n_matched))::BIGINT
-                   AS group_sim_ppm
-          FROM mm
-          JOIN gs a ON a.doc_id = mm.ga
-          JOIN gs b ON b.doc_id = mm.gb
-        """,
-        # size-capped dynamic blocking: token blocking, in-cap blocks kept
-        # at depth 1, oversized blocks split by record-id self-join key
-        # extension, sub-blocks re-measured (still-over -> reported),
-        # singletons purged at both depths
-        "er_dynamic_blocking": f"""
-          WITH b1 AS (
-            SELECT mention_id AS rid, unnest({_toks('mention')}) AS k
-            FROM read_parquet('{men}')
-          ),
-          s1 AS (SELECT k, count(*)::BIGINT AS sz FROM b1 GROUP BY 1),
-          ok1 AS (
-            SELECT k AS block_key, 1::BIGINT AS depth, sz AS block_size,
-                   'ok' AS status
-            FROM s1 WHERE sz BETWEEN 2 AND 32
-          ),
-          ov AS (SELECT k FROM s1 WHERE sz > 32),
-          b2 AS (
-            SELECT b.rid, b.k || '|' || c.k AS k
-            FROM b1 b
-            JOIN ov o ON o.k = b.k
-            JOIN b1 c ON c.rid = b.rid AND c.k <> b.k
-          ),
-          s2 AS (SELECT k, count(*)::BIGINT AS sz FROM b2 GROUP BY 1),
-          ok2 AS (
-            SELECT k AS block_key, 2::BIGINT AS depth, sz AS block_size,
-                   CASE WHEN sz > 32 THEN 'over' ELSE 'split' END AS status
-            FROM s2 WHERE sz >= 2
-          )
-          SELECT * FROM ok1 UNION ALL SELECT * FROM ok2
-        """,
-        # resource-allocation link prediction: same scored match graph and
-        # wedge join as er_missing_links, but the neighbor's degree joins
-        # on the wedge apex and each common neighbor contributes the exact
-        # integer term 1e9 div deg (no libm log anywhere)
-        "er_resource_allocation": f"""
-          {match_graph_ctes},
-          w AS (
-            SELECT e1.v AS a, e2.v AS b, e1.u AS n
-            FROM e e1 JOIN e e2 ON e1.u = e2.u AND e1.v < e2.v
-          ),
-          t AS (
-            SELECT w.a, w.b, count(*)::BIGINT AS cn,
-                   sum(1000000000 // d.deg)::BIGINT AS ra_nano
-            FROM w JOIN deg d ON d.u = w.n
-            GROUP BY 1, 2
-          )
-          SELECT a AS record_id_a, b AS record_id_b,
-                 cn AS common_neighbors, ra_nano
-          FROM t
-          WHERE cn >= 2
-            AND NOT EXISTS (SELECT 1 FROM me r WHERE r.u = t.a AND r.v = t.b)
-        """,
-        # ORC roundtrip scan: oracle runs the identical projection on the
-        # parquet fixture (DuckDB reads no ORC; the hash match proves the
-        # write->read roundtrip value-exact)
-        "er_orc_mention_scan": f"""
-          SELECT mention_id, mention, world, label_id,
-                 len(regexp_split_to_array(trim(mention),
-                     '[\\t\\n\\x0B\\f\\r ]+'))::BIGINT AS n_tokens
-          FROM read_parquet('{men}')
-          WHERE world IN ('world_03', 'world_07') AND label_id % 2 = 0
-        """,
-        # Papadakis block filtering: token blocking, singleton blocks
-        # purged, each record keeps its r=3 smallest blocks under the
-        # deterministic (block_size asc, block_key asc) rank
-        "er_block_filter": f"""
-          WITH b AS (
-            SELECT mention_id AS record_id, unnest({_toks('mention')}) AS block_key
-            FROM read_parquet('{men}')
-          ),
-          sz AS (
-            SELECT block_key, count(*)::BIGINT AS block_size
-            FROM b GROUP BY 1
-          ),
-          r AS (
-            SELECT b.record_id, b.block_key, sz.block_size,
-                   row_number() OVER (
-                     PARTITION BY b.record_id
-                     ORDER BY sz.block_size ASC, b.block_key ASC
-                   )::BIGINT AS rank
-            FROM b JOIN sz USING (block_key)
-            WHERE sz.block_size >= 2
-          )
-          SELECT record_id, block_key, block_size, rank
-          FROM r WHERE rank <= 3
-        """,
-        # bounded R-Swoosh: two unrolled match->CC->union-merge rounds;
-        # match = exact-integer Jaccard on df-capped token profiles,
-        # CC = recursive-CTE closure, merge = distinct token union
-        "er_swoosh_merge": f"""
-          WITH RECURSIVE m AS (
-            SELECT mention_id AS rid, unnest({_toks('mention')}) AS tok
-            FROM read_parquet('{men}')
-          ),
-          kept AS (
-            SELECT tok FROM (SELECT tok, count(*) AS df FROM m GROUP BY 1)
-            WHERE df <= 20
-          ),
-          p0 AS (SELECT rid AS pid, m.tok FROM m JOIN kept USING (tok)),
-          s0 AS (SELECT pid, count(*)::BIGINT AS sz FROM p0 GROUP BY 1),
-          pr0 AS (
-            SELECT a.pid AS pa, b.pid AS pb, count(*)::BIGINT AS ns
-            FROM p0 a JOIN p0 b ON a.tok = b.tok AND a.pid < b.pid
-            GROUP BY 1, 2
-          ),
-          e0 AS (
-            SELECT pa, pb FROM pr0
-            JOIN s0 sa ON sa.pid = pr0.pa
-            JOIN s0 sb ON sb.pid = pr0.pb
-            WHERE (ns * 1000000) // (sa.sz + sb.sz - ns) >= 500000
-          ),
-          ed0 AS (SELECT pa AS src, pb AS dst FROM e0
-                  UNION SELECT pb, pa FROM e0),
-          n0 AS (SELECT DISTINCT pid AS id FROM p0),
-          r0 AS (
-            SELECT id, id AS r FROM n0
-            UNION
-            SELECT r0.id, e.dst FROM r0 JOIN ed0 e ON r0.r = e.src
-          ),
-          c0 AS (SELECT id, min(r) AS np FROM r0 GROUP BY id),
-          p1 AS (SELECT DISTINCT c0.np AS pid, p0.tok
-                 FROM p0 JOIN c0 ON c0.id = p0.pid),
-          s1 AS (SELECT pid, count(*)::BIGINT AS sz FROM p1 GROUP BY 1),
-          pr1 AS (
-            SELECT a.pid AS pa, b.pid AS pb, count(*)::BIGINT AS ns
-            FROM p1 a JOIN p1 b ON a.tok = b.tok AND a.pid < b.pid
-            GROUP BY 1, 2
-          ),
-          e1 AS (
-            SELECT pa, pb FROM pr1
-            JOIN s1 sa ON sa.pid = pr1.pa
-            JOIN s1 sb ON sb.pid = pr1.pb
-            WHERE (ns * 1000000) // (sa.sz + sb.sz - ns) >= 500000
-          ),
-          ed1 AS (SELECT pa AS src, pb AS dst FROM e1
-                  UNION SELECT pb, pa FROM e1),
-          n1 AS (SELECT DISTINCT pid AS id FROM p1),
-          r1 AS (
-            SELECT id, id AS r FROM n1
-            UNION
-            SELECT r1.id, e.dst FROM r1 JOIN ed1 e ON r1.r = e.src
-          ),
-          c1 AS (SELECT id, min(r) AS np FROM r1 GROUP BY id),
-          p2 AS (SELECT DISTINCT c1.np AS pid, p1.tok
-                 FROM p1 JOIN c1 ON c1.id = p1.pid),
-          s2 AS (SELECT pid, count(*)::BIGINT AS psz FROM p2 GROUP BY 1),
-          map0 AS (SELECT mention_id AS record_id, mention_id AS pid
-                   FROM read_parquet('{men}')),
-          map1 AS (
-            SELECT record_id, coalesce(c0.np, map0.pid) AS pid
-            FROM map0 LEFT JOIN c0 ON c0.id = map0.pid
-          ),
-          map2 AS (
-            SELECT record_id, coalesce(c1.np, map1.pid) AS pid
-            FROM map1 LEFT JOIN c1 ON c1.id = map1.pid
-          )
-          SELECT record_id, map2.pid AS profile_id,
-                 coalesce(s2.psz, 0)::BIGINT AS profile_n_tokens
-          FROM map2 LEFT JOIN s2 ON s2.pid = map2.pid
-        """,
-        # deterministic canopy blocking: token df filter, min-id center
-        # election per informative token, (center, record) shared-token
-        # counts with the two-radius tight/loose contract
-        "er_canopy_assign": f"""
-          WITH m AS (
-            SELECT mention_id AS record_id, {_toks('mention')} AS t
-            FROM read_parquet('{men}')
-          ),
-          tk AS (SELECT record_id, unnest(t) AS tok FROM m),
-          dfq AS (SELECT tok, count(*)::BIGINT AS df FROM tk GROUP BY tok),
-          kept AS (SELECT tok FROM dfq WHERE df >= 2 AND df <= 20),
-          ktk AS (SELECT tk.record_id, tk.tok FROM tk JOIN kept USING (tok)),
-          ctr AS (SELECT tok, min(record_id) AS center_id FROM ktk GROUP BY tok)
-          SELECT c.center_id, k.record_id,
-                 count(*)::BIGINT AS n_shared,
-                 (count(*) >= 2) AS is_tight
-          FROM ktk k JOIN ctr c USING (tok)
-          GROUP BY 1, 2
-        """,
-        # per-node local clustering coefficient: triangle incidences are
-        # charged to the common neighbor w (one charge per vertex per
-        # triangle), lcc = 2*tri/(deg*(deg-1)) in exact-ppm floor division
-        "er_clustering_coefficient": f"""
-          WITH raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          e AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM e GROUP BY u),
-          tri AS (
-            SELECT a2.v AS w, count(*)::BIGINT AS n_triangles
-            FROM raw r
-            JOIN e a1 ON a1.u = r.u
-            JOIN e a2 ON a2.u = r.v AND a2.v = a1.v
-            GROUP BY 1
-          )
-          SELECT d.u AS record_id, d.deg,
-                 coalesce(t.n_triangles, 0)::BIGINT AS n_triangles,
-                 ((1000000 * 2 * coalesce(t.n_triangles, 0))
-                  // greatest(d.deg * (d.deg - 1), 1))::BIGINT AS lcc_ppm
-          FROM deg d LEFT JOIN tri t ON t.w = d.u
-        """,
-        "softmax_confidence": softmax_sql,
-        "er_span_enumeration": span_enum_sql,
-        "er_overlap_prune": overlap_prune_sql,
-        "er_span_repeat_prune": repeat_prune_sql,
-        "er_repeat_overlap_prune": repeat_overlap_sql,
-        "er_kb_ingest_filter": kb_filter_sql,
-        "er_pem_lookup": pem_sql.format(
-            ic_title=_ic("title"),
-            ic_mention=_ic("mention"),
-            ic_mention2=_ic("mention"),
-        ),
-        "embedding_cosine_dups": _emb_cos_dups_oracle_sql(),
-        "embedding_semdedup": _emb_semdedup_oracle_sql(),
-        "er_pair_tokens": pair_tokens_sql,
-        "er_pair_concat": pair_concat_sql,
-        "er_pair_rerank": pair_rerank_sql,
-        "er_span_f1_weak_strong": span_f1_sql,
-        "wikidata_scan": wikidata_sql,
-        "doc_sentences": sentences_sql,
-        "er_threshold_prune": threshold_prune_sql.format(
-            span_ctes=_span_enum_ctes(2)
-        ),
-        "er_bm25_topk": bm25_sql,
-        "er_coref_merge": coref_sql,
-        "er_rank_histogram": rank_hist_sql,
-        "er_mrr": f"""
-          WITH {_softmax_ctes},
-          gr AS (
-            SELECT t.mention_id,
-                   coalesce(min(CASE WHEN t.entity_id = g.label_id
-                                     THEN t.rank END), -1) AS gold_rank
-            FROM ltopk t JOIN read_parquet('{men}') g USING (mention_id)
-            GROUP BY 1
-          ),
-          rr AS (
-            SELECT gold_rank,
-                   CASE WHEN gold_rank > 0 THEN 1000000 // gold_rank
-                        ELSE 0 END AS rr_micro
-            FROM gr
-          )
-          SELECT count(*)::BIGINT AS n_mentions,
-                 sum(CASE WHEN gold_rank > 0 THEN 1 ELSE 0 END)::BIGINT AS n_hits,
-                 sum(rr_micro)::BIGINT AS sum_rr_micro,
-                 (sum(rr_micro)::BIGINT // count(*))::BIGINT AS mrr_micro
-          FROM rr
-        """,
-        "er_world_macro_micro": world_mm_sql,
-        "er_span_embedding_agg": span_emb_sql.format(span_ctes=_span_enum_ctes(2)),
-        "conll_csv_scan": conll_sql,
-        "scalar_wiki_forms": scalar_forms_sql,
-        "wiki_extractor_scan": wiki_scan_sql,
-        "wiki_links": wiki_links_sql,
-        "wiki_incoming_links": wiki_incoming_sql,
-        "jsonl_mention_scan": mention_scan_sql,
-        "er_blocking_recall": blocking_recall_sql,
-        "conll_stream_spans": conll_stream_sql,
-        "ann_ivf_recall": ivf_sql,
-        "ann_nprobe_sweep": ivf_sweep_sql,
-        "er_span_scores": span_scores_sql.format(span_ctes=_span_enum_ctes(3)),
-        "er_media_frames": media_frames_sql,
-        "er_media_resize": media_resize_sql,
-        "er_candidate_fetch": cand_fetch_sql,
-        "er_zeshel_doc_join": zeshel_join_sql,
-        "er_question_mentions": question_mentions_sql,
-        "er_two_key_fallback_join": two_key_sql,
-        "er_inverted_index_topk": inv_index_sql,
-        "er_media_decode": media_decode_sql,
-        "jsonl_entity_scan": jsonl_scan_sql,
-        "er_extract_mentions": mentions_cte,
-        "er_media_spans": f"""
-          WITH e AS (
-            SELECT doc_id, generate_subscripts(spans, 1) - 1 AS span_idx,
-                   unnest(spans) AS sp
-            FROM read_parquet('{doc}')
-          )
-          SELECT doc_id, span_idx, sp.media_ref AS media_ref, sp.offset AS offset
-          FROM e WHERE sp.kind = 'media'
-        """,
-        "er_span_invariant": f"""
-          SELECT doc_id,
-                 md5(array_to_string(
-                   -- concat_ws, not ||: Spark's concat_ws SKIPS null fields
-                   -- (dropping their separator) while || would poison the
-                   -- element to NULL and array_to_string would drop it whole
-                   [concat_ws(chr(1), sp.kind, sp.text, coalesce(sp.media_ref, ''),
-                              sp.offset::varchar) for sp in spans], chr(2))) AS span_digest
-          FROM read_parquet('{doc}')
-        """,
-        "er_token_pair_blocks": f"""
-          WITH m AS (SELECT mention_id, list_sort({toks_m}) AS toks FROM read_parquet('{men}')),
-          pairs AS (
-            SELECT mention_id,
-                   CASE WHEN len(toks) >= 2 THEN
-                     flatten([[('tp:' || toks[i] || '|' || toks[j])
-                               for j in range(i+1, len(toks)+1)]
-                              for i in range(1, len(toks)+1)])
-                   ELSE ['t1:' || toks[1]] END AS keys
-            FROM m
-          )
-          SELECT mention_id AS record_id, unnest(keys) AS block_key FROM pairs
-        """,
-        "er_blocking_quality": f"""
-          WITH {block_assign_ctes},
-          sizes AS (SELECT block_key, count(*) AS bs FROM assign GROUP BY 1),
-          hist AS (
-            SELECT floor(log2(bs + 0.5))::BIGINT AS size_bucket,
-                   count(*)::BIGINT AS n_blocks,
-                   sum(bs)::BIGINT AS n_records,
-                   sum(bs * (bs - 1) // 2)::BIGINT AS n_pairs
-            FROM sizes GROUP BY 1
-          ),
-          u AS (
-            SELECT * FROM hist
-            UNION ALL
-            SELECT -1::BIGINT, sum(n_blocks)::BIGINT, sum(n_records)::BIGINT,
-                   sum(n_pairs)::BIGINT
-            FROM hist
-          ),
-          n AS (SELECT count(*)::BIGINT AS nm FROM read_parquet('{men}'))
-          SELECT size_bucket, n_blocks, n_records, n_pairs,
-                 round(n_pairs::DOUBLE / (nm::DOUBLE * (nm - 1)::DOUBLE / 2.0), 6)
-                   AS pairs_frac
-          FROM u CROSS JOIN n
-        """,
-        "er_candidate_pairs": f"""
-          WITH {block_sized_ctes},
-          kept AS (SELECT * FROM sized WHERE bs <= 4096)
-          SELECT DISTINCT a.record_id AS record_id_a, b.record_id AS record_id_b
-          FROM kept a JOIN kept b
-            ON a.block_key = b.block_key AND a.record_id < b.record_id
-        """,
-        "er_scored_gold_pairs": scored_cte
-        + """
-          SELECT record_id_a, record_id_b, norm_eq, jaccard, lev_ratio, is_match
-          FROM j
-        """,
-        "er_clusters": clusters_sql,
-        # snapshot diff of the gold entity partition vs the linkage
-        # clusters: contingency cells + per-cell split/merge triage
-        "er_cluster_churn": f"""
-          {reach_cte},
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          old AS (
-            SELECT mention_id AS record_id, label_id AS old_id
-            FROM read_parquet('{men}')
-          ),
-          cells AS (
-            SELECT o.old_id, c.cluster_id AS new_id, count(*)::BIGINT AS n_records
-            FROM old o JOIN cl c ON c.id = o.record_id GROUP BY 1, 2
-          ),
-          op AS (
-            SELECT old_id, sum(n_records)::BIGINT AS old_total,
-                   count(*)::BIGINT AS old_n_parts
-            FROM cells GROUP BY 1
-          ),
-          np AS (
-            SELECT new_id, sum(n_records)::BIGINT AS new_total,
-                   count(*)::BIGINT AS new_n_parts
-            FROM cells GROUP BY 1
-          )
-          SELECT cells.old_id, cells.new_id, cells.n_records,
-                 op.old_total, np.new_total, op.old_n_parts, np.new_n_parts,
-                 CASE WHEN op.old_n_parts = 1 AND np.new_n_parts = 1 THEN 'stable'
-                      WHEN op.old_n_parts > 1 AND np.new_n_parts > 1 THEN 'reshuffled'
-                      WHEN op.old_n_parts > 1 THEN 'split'
-                      ELSE 'merged' END AS status
-          FROM cells JOIN op USING (old_id) JOIN np USING (new_id)
-        """,
-        "er_sorted_neighborhood": snm_sql,
-        "er_fs_weights": fs_sql,
-        "er_acronym_matches": f"""
-          WITH f AS (
-            SELECT mention_id AS rid, {_norm_m} AS norm,
-                   string_split({_norm_m}, ' ') AS tk
-            FROM read_parquet('{men}')
-          ),
-          feats AS (
-            SELECT rid, norm, len(tk) AS n_tok,
-                   array_to_string([substr(t, 1, 1) for t in tk], '') AS initials
-            FROM f
-          ),
-          g AS (
-            SELECT DISTINCT mention_id_a AS record_id_a,
-                            mention_id_b AS record_id_b
-            FROM read_parquet('{gold}')
-            WHERE mention_id_a != mention_id_b
-          ),
-          j AS (
-            SELECT g.record_id_a, g.record_id_b,
-                   a.norm AS norm_a, a.n_tok AS n_a, a.initials AS ini_a,
-                   b.norm AS norm_b, b.n_tok AS n_b, b.initials AS ini_b
-            FROM g JOIN feats a ON a.rid = g.record_id_a
-                   JOIN feats b ON b.rid = g.record_id_b
-          )
-          SELECT record_id_a, record_id_b,
-                 CASE WHEN n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2
-                           AND norm_a = ini_b
-                      THEN norm_a ELSE norm_b END AS acronym,
-                 CASE WHEN n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2
-                           AND norm_a = ini_b
-                      THEN norm_b ELSE norm_a END AS expansion
-          FROM j
-          WHERE (n_a = 1 AND n_b >= 2 AND length(norm_a) >= 2 AND norm_a = ini_b)
-             OR (n_b = 1 AND n_a >= 2 AND length(norm_b) >= 2 AND norm_b = ini_a)
-        """,
-        "er_modularity": f"""
-          {scored_cte},
-          edges0 AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j WHERE is_match
-            UNION
-            SELECT record_id_b, record_id_a FROM j WHERE is_match
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          reach AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach.id, e.dst FROM reach JOIN edges0 e ON reach.r = e.src
-          ),
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          raw AS (
-            SELECT least(mention_id_a, mention_id_b) AS u,
-                   greatest(mention_id_a, mention_id_b) AS v
-            FROM read_parquet('{gold}')
-            WHERE same_entity AND mention_id_a != mention_id_b
-            GROUP BY 1, 2
-          ),
-          mm AS (SELECT count(*)::BIGINT AS m_edges FROM raw),
-          bi AS (SELECT u, v FROM raw UNION ALL SELECT v, u FROM raw),
-          deg AS (SELECT u, count(*)::BIGINT AS deg FROM bi GROUP BY 1),
-          dc AS (
-            SELECT cl.cluster_id, sum(deg.deg)::BIGINT AS d_c
-            FROM deg JOIN cl ON cl.id = deg.u GROUP BY 1
-          ),
-          sdc AS (
-            SELECT sum(d_c * d_c)::BIGINT AS sum_dc2,
-                   count(*)::BIGINT AS n_clusters
-            FROM dc
-          ),
-          ein AS (
-            SELECT count(*)::BIGINT AS n_internal
-            FROM raw r JOIN cl a ON a.id = r.u JOIN cl b ON b.id = r.v
-            WHERE a.cluster_id = b.cluster_id
-          )
-          SELECT mm.m_edges, sdc.n_clusters, ein.n_internal,
-                 (CASE WHEN 1000 * (4 * mm.m_edges * ein.n_internal
-                                    - sdc.sum_dc2) >= 0
-                   THEN (1000 * (4 * mm.m_edges * ein.n_internal - sdc.sum_dc2))
-                        // (4 * mm.m_edges * mm.m_edges)
-                   ELSE -((-(1000 * (4 * mm.m_edges * ein.n_internal
-                                     - sdc.sum_dc2)))
-                          // (4 * mm.m_edges * mm.m_edges)) END)::BIGINT
-                   AS modularity_milli
-          FROM mm CROSS JOIN sdc CROSS JOIN ein
-        """,
-        "er_nmi": f"""
-          {reach_cte},
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
-          g AS (
-            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
-            FROM cl JOIN lab USING (id) GROUP BY 1, 2
-          ),
-          tot AS (
-            SELECT sum(n_cl)::BIGINT AS n_records,
-                   sum(n_cl * floor(ln(n_cl::DOUBLE) * 1000000)::BIGINT)::BIGINT
-                     AS s_ij
-            FROM g
-          ),
-          ca AS (
-            SELECT count(*)::BIGINT AS n_clusters,
-                   sum(n_c * floor(ln(n_c::DOUBLE) * 1000000)::BIGINT)::BIGINT
-                     AS s_c
-            FROM (SELECT sum(n_cl)::BIGINT AS n_c FROM g GROUP BY cluster_id)
-          ),
-          cb AS (
-            SELECT count(*)::BIGINT AS n_labels,
-                   sum(n_l * floor(ln(n_l::DOUBLE) * 1000000)::BIGINT)::BIGINT
-                     AS s_l
-            FROM (SELECT sum(n_cl)::BIGINT AS n_l FROM g GROUP BY label_id)
-          ),
-          x AS (
-            SELECT n_records, n_clusters, n_labels, s_ij, s_c, s_l,
-                   (n_records
-                    * floor(ln(n_records::DOUBLE) * 1000000)::BIGINT)::BIGINT AS b0
-            FROM tot CROSS JOIN ca CROSS JOIN cb
-          ),
-          y AS (
-            SELECT n_records, n_clusters, n_labels,
-                   (b0 + s_ij - s_c - s_l)::BIGINT AS mi_n,
-                   (b0 - s_c)::BIGINT AS hc_n,
-                   (b0 - s_l)::BIGINT AS hk_n
-            FROM x
-          )
-          SELECT n_records, n_clusters, n_labels,
-                 (CASE WHEN mi_n >= 0 THEN mi_n // n_records
-                       ELSE -((-mi_n) // n_records) END)::BIGINT AS mi_micro,
-                 (hc_n // n_records)::BIGINT AS h_clusters_micro,
-                 (hk_n // n_records)::BIGINT AS h_labels_micro,
-                 (CASE WHEN hc_n + hk_n = 0 THEN 0
-                       WHEN 2000000 * mi_n >= 0
-                       THEN (2000000 * mi_n) // (hc_n + hk_n)
-                       ELSE -((-(2000000 * mi_n)) // (hc_n + hk_n))
-                  END)::BIGINT AS nmi_ppm
-          FROM y
-        """,
-        "er_labelfn_votes": f"""
-          {scored_cte},
-          v AS (
-            SELECT record_id_a, record_id_b,
-                   (CASE WHEN norm_eq THEN 1 ELSE 0 END)::BIGINT AS lf_exact,
-                   (CASE WHEN jaccard >= 0.65 THEN 1
-                         WHEN jaccard <= 0.20 THEN -1
-                         ELSE 0 END)::BIGINT AS lf_jaccard,
-                   (CASE WHEN lev_ratio >= 0.93 THEN 1
-                         WHEN lev_ratio <= 0.50 THEN -1
-                         ELSE 0 END)::BIGINT AS lf_lev,
-                   (CASE WHEN abs(length(mention_a) - length(mention_b)) > 10
-                         THEN -1 ELSE 0 END)::BIGINT AS lf_len
-            FROM j
-          ),
-          w AS (
-            SELECT *,
-                   ((CASE WHEN lf_exact = 1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_jaccard = 1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_lev = 1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_len = 1 THEN 1 ELSE 0 END))::BIGINT AS n_pos,
-                   ((CASE WHEN lf_exact = -1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_jaccard = -1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_lev = -1 THEN 1 ELSE 0 END)
-                    + (CASE WHEN lf_len = -1 THEN 1 ELSE 0 END))::BIGINT AS n_neg,
-                   (lf_exact + lf_jaccard + lf_lev + lf_len)::BIGINT AS vote_sum
-            FROM v
-          )
-          SELECT record_id_a, record_id_b, lf_exact, lf_jaccard, lf_lev,
-                 lf_len, n_pos, n_neg, vote_sum,
-                 CASE WHEN vote_sum > 0 THEN 'match'
-                      WHEN vote_sum < 0 THEN 'non_match'
-                      ELSE 'abstain' END AS majority_label,
-                 (CASE WHEN n_pos + n_neg = 0 THEN 0
-                       ELSE (1000000 * greatest(n_pos, n_neg))
-                            // (n_pos + n_neg) END)::BIGINT AS agreement_ppm
-          FROM w
-        """,
-        "er_otsu_threshold": f"""
-          {scored_cte},
-          s AS (SELECT floor(jaccard * 1000)::BIGINT AS v FROM j),
-          hist AS (
-            SELECT v, count(*)::BIGINT AS cnt, sum(v)::BIGINT AS sm
-            FROM s GROUP BY 1
-          ),
-          tot AS (
-            SELECT sum(cnt)::BIGINT AS n_total, sum(sm)::BIGINT AS s_total
-            FROM hist
-          ),
-          cum AS (
-            SELECT v,
-                   coalesce(sum(cnt) OVER (ORDER BY v
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)::BIGINT AS w0,
-                   coalesce(sum(sm) OVER (ORDER BY v
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                     0)::BIGINT AS s0
-            FROM hist
-          ),
-          x AS (
-            SELECT v, w0, s0,
-                   (n_total - w0)::BIGINT AS w1, (s_total - s0)::BIGINT AS s1
-            FROM cum CROSS JOIN tot WHERE w0 > 0
-          ),
-          y AS (
-            SELECT v, w0, w1,
-                   (s0 // w0)::BIGINT AS mu0, (s1 // w1)::BIGINT AS mu1
-            FROM x
-          ),
-          z AS (
-            SELECT v, w0, w1, mu0, mu1,
-                   (w0 * w1 * (mu0 - mu1) * (mu0 - mu1))::BIGINT AS between_var
-            FROM y
-          )
-          SELECT v AS threshold_milli, w0, w1,
-                 mu0 AS mu0_milli, mu1 AS mu1_milli, between_var,
-                 (row_number() OVER (ORDER BY between_var DESC, v ASC) = 1)
-                   AS is_best
-          FROM z
-        """,
-        "er_reliability_bins": f"""
-          WITH m AS (
-            SELECT mention_id,
-                   list_distinct(string_split({_norm_m}, ' ')) AS t
-            FROM read_parquet('{men}')
-          ),
-          jj AS (
-            -- one row per gold-pair ROW (duplicates preserved, mirroring
-            -- the Spark join); jaccard is the score_pairs parity rounding
-            SELECT g.same_entity,
-                   round(len(list_intersect(ma.t, mb.t))::double
-                         / greatest(len(list_distinct(list_concat(ma.t, mb.t))), 1),
-                         6) AS jaccard
-            FROM read_parquet('{gold}') g
-            JOIN m ma ON ma.mention_id = g.mention_id_a
-            JOIN m mb ON mb.mention_id = g.mention_id_b
-          ),
-          b AS (SELECT floor(jaccard * 20)::BIGINT AS bin, same_entity FROM jj)
-          SELECT bin, (bin * 50000)::BIGINT AS bin_lo_ppm,
-                 count(*)::BIGINT AS n_pairs,
-                 sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT AS n_match,
-                 ((1000000 * sum(CASE WHEN same_entity THEN 1 ELSE 0 END)::BIGINT)
-                  // count(*))::BIGINT AS match_rate_ppm
-          FROM b GROUP BY 1
-        """,
-        "er_blocking_stoplist": f"""
-          WITH tk AS (
-            SELECT mention_id, label_id,
-                   unnest(list_distinct(string_split(mention, ' '))) AS tok
-            FROM read_parquet('{men}')
-          ),
-          a AS (
-            SELECT tok, count(*)::BIGINT AS df,
-                   count(DISTINCT label_id)::BIGINT AS n_entities
-            FROM tk GROUP BY 1
-          )
-          SELECT tok, df, n_entities, n_entities > 3 AS flagged
-          FROM a WHERE df >= 2
-        """,
-        "er_ppjoin_pairs": f"""
-          WITH m AS (
-            SELECT mention_id AS record_id,
-                   list_distinct(string_split({_norm_m}, ' ')) AS tk
-            FROM read_parquet('{men}')
-          ),
-          tkx AS (SELECT record_id, unnest(tk) AS tok FROM m),
-          dft AS (SELECT tok, count(*)::BIGINT AS df FROM tkx GROUP BY 1),
-          rk AS (
-            SELECT tok, row_number() OVER (ORDER BY df ASC, tok ASC) AS trank
-            FROM dft
-          ),
-          tkr AS (SELECT t.record_id, t.tok, r.trank FROM tkx t JOIN rk r USING (tok)),
-          pref AS (
-            SELECT record_id, tok FROM (
-              SELECT record_id, tok,
-                     row_number() OVER (PARTITION BY record_id
-                                        ORDER BY trank ASC) AS rn,
-                     count(*) OVER (PARTITION BY record_id) AS na
-              FROM tkr
-            ) WHERE rn <= na - (na + 1) // 2 + 1
-          ),
-          cand AS (
-            SELECT DISTINCT x.record_id AS a, y.record_id AS b
-            FROM pref x JOIN pref y
-              ON x.tok = y.tok AND x.record_id < y.record_id
-          ),
-          v AS (
-            SELECT c.a, c.b,
-                   len(list_intersect(ma.tk, mb.tk))::BIGINT AS n_inter,
-                   (len(ma.tk) + len(mb.tk)
-                    - len(list_intersect(ma.tk, mb.tk)))::BIGINT AS n_union
-            FROM cand c JOIN m ma ON ma.record_id = c.a
-                        JOIN m mb ON mb.record_id = c.b
-          )
-          SELECT a AS record_id_a, b AS record_id_b, n_inter, n_union,
-                 ((1000000 * n_inter) // n_union)::BIGINT AS jaccard_ppm
-          FROM v WHERE 3 * n_inter >= n_inter + n_union
-        """,
-        "er_threshold_dendrogram": f"""
-          {scored_cte},
-          e1 AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j
-            WHERE jaccard >= 0.5 AND record_id_a != record_id_b
-          ),
-          ed1 AS (SELECT src, dst FROM e1 UNION SELECT dst, src FROM e1),
-          n1 AS (SELECT DISTINCT src AS id FROM ed1),
-          r1 AS (
-            SELECT id, id AS r FROM n1
-            UNION
-            SELECT r1.id, ed.dst FROM r1 JOIN ed1 ed ON r1.r = ed.src
-          ),
-          c1 AS (SELECT id, min(r) AS cl FROM r1 GROUP BY id),
-          s1 AS (SELECT cl, count(*)::BIGINT AS sz FROM c1 GROUP BY 1),
-          a1 AS (
-            SELECT 500000::BIGINT AS threshold_ppm,
-                   count(*)::BIGINT AS n_clusters,
-                   coalesce(sum(sz), 0)::BIGINT AS n_records,
-                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
-            FROM s1
-          ),
-          e2 AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j
-            WHERE jaccard >= 0.65 AND record_id_a != record_id_b
-          ),
-          ed2 AS (SELECT src, dst FROM e2 UNION SELECT dst, src FROM e2),
-          n2 AS (SELECT DISTINCT src AS id FROM ed2),
-          r2 AS (
-            SELECT id, id AS r FROM n2
-            UNION
-            SELECT r2.id, ed.dst FROM r2 JOIN ed2 ed ON r2.r = ed.src
-          ),
-          c2 AS (SELECT id, min(r) AS cl FROM r2 GROUP BY id),
-          s2 AS (SELECT cl, count(*)::BIGINT AS sz FROM c2 GROUP BY 1),
-          a2 AS (
-            SELECT 650000::BIGINT AS threshold_ppm,
-                   count(*)::BIGINT AS n_clusters,
-                   coalesce(sum(sz), 0)::BIGINT AS n_records,
-                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
-            FROM s2
-          ),
-          e3 AS (
-            SELECT record_id_a AS src, record_id_b AS dst FROM j
-            WHERE jaccard >= 0.8 AND record_id_a != record_id_b
-          ),
-          ed3 AS (SELECT src, dst FROM e3 UNION SELECT dst, src FROM e3),
-          n3 AS (SELECT DISTINCT src AS id FROM ed3),
-          r3 AS (
-            SELECT id, id AS r FROM n3
-            UNION
-            SELECT r3.id, ed.dst FROM r3 JOIN ed3 ed ON r3.r = ed.src
-          ),
-          c3 AS (SELECT id, min(r) AS cl FROM r3 GROUP BY id),
-          s3 AS (SELECT cl, count(*)::BIGINT AS sz FROM c3 GROUP BY 1),
-          a3 AS (
-            SELECT 800000::BIGINT AS threshold_ppm,
-                   count(*)::BIGINT AS n_clusters,
-                   coalesce(sum(sz), 0)::BIGINT AS n_records,
-                   coalesce(max(sz), 0)::BIGINT AS max_cluster_size
-            FROM s3
-          )
-          SELECT * FROM a1 UNION ALL SELECT * FROM a2 UNION ALL SELECT * FROM a3
-        """,
-        "er_tf_adjustment": f"""
-          WITH v AS (
-            SELECT mention_id AS rid, string_split({_norm_m}, ' ')[1] AS val
-            FROM read_parquet('{men}')
-          ),
-          tf AS (SELECT val, count(*)::BIGINT AS df FROM v GROUP BY 1),
-          u AS (
-            SELECT (SELECT count(*)::BIGINT FROM v) AS n,
-                   (SELECT sum((df * (df - 1)) // 2)::BIGINT FROM tf)
-                     AS agree_pairs
-          ),
-          u2 AS (
-            SELECT n,
-                   ((1000000 * agree_pairs)
-                    // greatest((n * (n - 1)) // 2, 1))::BIGINT AS u_global_ppm
-            FROM u
-          ),
-          g AS (
-            SELECT mention_id_a AS record_id_a, mention_id_b AS record_id_b
-            FROM read_parquet('{gold}')
-            WHERE mention_id_a != mention_id_b
-          ),
-          j AS (
-            SELECT g.record_id_a, g.record_id_b, a.val
-            FROM g JOIN v a ON a.rid = g.record_id_a
-                   JOIN v b ON b.rid = g.record_id_b
-            WHERE a.val = b.val
-          )
-          SELECT j.record_id_a, j.record_id_b, j.val, tf.df,
-                 ((1000000 * tf.df) // u2.n)::BIGINT AS tf_ppm,
-                 u2.u_global_ppm,
-                 ((1000000 * u2.u_global_ppm)
-                  // greatest((1000000 * tf.df) // u2.n, 1))::BIGINT
-                   AS tf_adj_ratio_ppm
-          FROM j JOIN tf USING (val) CROSS JOIN u2
-        """,
-        "er_em_weights": em_sql,
-        "er_one_to_one": one2one_sql,
-        "er_review_queue": review_queue_sql,
-        "er_progressive_recall": progressive_sql,
-        "er_pr_curve": pr_curve_sql,
-        "er_collective_boost": collective_sql,
-        "er_ari": ari_sql,
-        "er_golden_record": golden_sql,
-        "er_match_rule_report": rule_report_sql,
-        "er_rule_kappa": rule_kappa_sql,
-        "er_scorer_auc": scorer_auc_sql,
-        "er_alias_pairs": alias_pairs_sql,
-        "er_sorted_lev": sorted_lev_sql,
-        "er_blocking_budget": blocking_budget_sql,
-        "er_source_reliability": source_reliability_sql,
-        "er_weighted_vote_fusion": weighted_fusion_sql,
-        "er_token_cosine": token_cosine_sql,
-        "er_weighted_jaccard": weighted_jaccard_sql,
-        "er_nickname_matches": nickname_sql,
-        "er_tfidf_cosine": tfidf_cosine_sql,
-        "er_soft_tfidf": soft_tfidf_sql,
-        "er_monge_elkan": monge_elkan_sql,
-        "er_blocking_ensemble": ensemble_sql,
-        "er_phonetic_blocks": phonetic_sql,
-        # suffix blocking: suffixes at starts 1..min(len-8+1, 12) of the
-        # space-stripped normalized surface (whole string if shorter),
-        # blocks of 2..50 records, pair rows collapse nested collisions —
-        # identical key set, cap and tie behavior to blocking.suffix_pairs
-        "er_suffix_blocks": f"""
-          WITH n0 AS (
-            SELECT mention_id AS record_id,
-                   replace({_norm('mention')}, ' ', '') AS s
-            FROM read_parquet('{men}')
-          ),
-          sx AS (
-            SELECT record_id,
-                   unnest([substr(s, i) for i in
-                           range(1, greatest(least(length(s) - 8 + 1, 12), 1)
-                                    + 1)]) AS sfx
-            FROM n0
-          ),
-          sz AS (SELECT sfx, count(*)::BIGINT AS bs FROM sx GROUP BY 1),
-          ok AS (SELECT f.record_id, f.sfx
-                 FROM sx f JOIN sz ON sz.sfx = f.sfx
-                 WHERE sz.bs BETWEEN 2 AND 50)
-          SELECT a.record_id AS record_id_a, b.record_id AS record_id_b,
-                 count(*)::BIGINT AS n_shared_suffixes,
-                 max(length(a.sfx))::BIGINT AS longest_suffix_len
-          FROM ok a JOIN ok b ON a.sfx = b.sfx AND a.record_id < b.record_id
-          GROUP BY 1, 2
-        """,
-        "er_cluster_stats": f"""
-          {reach_cte},
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          sizes AS (SELECT cluster_id, count(*) AS cluster_size FROM cl GROUP BY 1),
-          hist AS (
-            SELECT cluster_size, count(*)::BIGINT AS n_clusters,
-                   sum(cluster_size)::BIGINT AS n_records
-            FROM sizes GROUP BY 1
-          )
-          SELECT cluster_size::BIGINT AS cluster_size, n_clusters, n_records
-          FROM hist
-          UNION ALL
-          SELECT -1::BIGINT, sum(n_clusters)::BIGINT, sum(n_records)::BIGINT
-          FROM hist
-        """,
-        "er_cluster_repair": f"""
-          {scored_cte},
-          me AS (
-            -- record_id_a != record_id_b mirrors Spark's _canonical u != v
-            -- filter: a self-loop gold pair would otherwise survive here and
-            -- inflate degrees/support (round-4 advice)
-            SELECT greatest(record_id_a, record_id_b) AS u,
-                   least(record_id_a, record_id_b) AS v
-            FROM j WHERE is_match AND record_id_a != record_id_b
-            GROUP BY 1, 2
-          ),
-          adj AS (SELECT u AS n, v AS w FROM me UNION ALL SELECT v, u FROM me),
-          deg AS (SELECT n, count(*) AS deg FROM adj GROUP BY n),
-          supp AS (
-            SELECT DISTINCT e.u, e.v
-            FROM me e
-            JOIN adj x ON x.n = e.u
-            JOIN adj y ON y.n = e.v AND y.w = x.w
-          ),
-          bridges AS (
-            SELECT e.u, e.v FROM me e
-            JOIN deg du ON du.n = e.u
-            JOIN deg dv ON dv.n = e.v
-            WHERE least(du.deg, dv.deg) >= 2
-              AND NOT EXISTS (SELECT 1 FROM supp s WHERE s.u = e.u AND s.v = e.v)
-          ),
-          kept AS (
-            SELECT e.u, e.v FROM me e
-            WHERE NOT EXISTS (SELECT 1 FROM bridges b WHERE b.u = e.u AND b.v = e.v)
-          ),
-          nodes AS (SELECT mention_id AS id FROM read_parquet('{men}')),
-          eb AS (SELECT u AS src, v AS dst FROM me UNION SELECT v, u FROM me),
-          reach_b AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach_b.id, e.dst FROM reach_b JOIN eb e ON reach_b.r = e.src
-          ),
-          cl_b AS (SELECT id, min(r) AS cluster_id FROM reach_b GROUP BY id),
-          ea AS (SELECT u AS src, v AS dst FROM kept UNION SELECT v, u FROM kept),
-          reach_a AS (
-            SELECT id, id AS r FROM nodes
-            UNION
-            SELECT reach_a.id, e.dst FROM reach_a JOIN ea e ON reach_a.r = e.src
-          ),
-          cl_a AS (SELECT id, min(r) AS sub_id FROM reach_a GROUP BY id),
-          sub AS (
-            SELECT b.cluster_id, a.sub_id, count(*) AS sub_size
-            FROM cl_b b JOIN cl_a a ON a.id = b.id GROUP BY 1, 2
-          ),
-          es AS (
-            SELECT b.cluster_id, count(*)::BIGINT AS n_edges
-            FROM me e JOIN cl_b b ON b.id = e.u GROUP BY 1
-          ),
-          bs AS (
-            SELECT b.cluster_id, count(*)::BIGINT AS n_bridges
-            FROM bridges e JOIN cl_b b ON b.id = e.u GROUP BY 1
-          ),
-          agg AS (
-            SELECT cluster_id, sum(sub_size)::BIGINT AS n_records,
-                   count(*)::BIGINT AS n_clusters_after,
-                   max(sub_size)::BIGINT AS max_size_after
-            FROM sub GROUP BY 1
-          )
-          SELECT a.cluster_id, a.n_records,
-                 coalesce(es.n_edges, 0)::BIGINT AS n_edges,
-                 coalesce(bs.n_bridges, 0)::BIGINT AS n_bridges,
-                 a.n_clusters_after, a.max_size_after
-          FROM agg a
-          LEFT JOIN es USING (cluster_id)
-          LEFT JOIN bs USING (cluster_id)
-        """,
-        "er_meta_blocking": f"""
-          WITH {block_sized_ctes},
-          kept AS (SELECT * FROM sized WHERE bs BETWEEN 2 AND 1024),
-          edges AS (
-            SELECT a.record_id AS record_id_a, b.record_id AS record_id_b,
-                   count(*)::BIGINT AS cbs_weight
-            FROM kept a JOIN kept b
-              ON a.block_key = b.block_key AND a.record_id < b.record_id
-            GROUP BY 1, 2
-          ),
-          ends AS (
-            SELECT record_id_a AS node, cbs_weight FROM edges
-            UNION ALL
-            SELECT record_id_b, cbs_weight FROM edges
-          ),
-          stats AS (
-            SELECT node, count(*)::BIGINT AS deg, sum(cbs_weight)::BIGINT AS wsum
-            FROM ends GROUP BY 1
-          )
-          SELECT e.record_id_a, e.record_id_b, e.cbs_weight
-          FROM edges e
-          JOIN stats sa ON sa.node = e.record_id_a
-          JOIN stats sb ON sb.node = e.record_id_b
-          WHERE e.cbs_weight * sa.deg >= sa.wsum
-             OR e.cbs_weight * sb.deg >= sb.wsum
-        """,
-        "er_bcubed": f"""
-          {reach_cte},
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
-          g AS (
-            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
-            FROM cl JOIN lab USING (id) GROUP BY 1, 2
-          ),
-          cs AS (SELECT cluster_id, sum(n_cl)::BIGINT AS n_c FROM g GROUP BY 1),
-          ls AS (SELECT label_id, sum(n_cl)::BIGINT AS n_l FROM g GROUP BY 1),
-          t AS (
-            SELECT n_cl,
-                   ((n_cl * n_cl * 1000000000) // n_c)::BIGINT AS pt,
-                   ((n_cl * n_cl * 1000000000) // n_l)::BIGINT AS rt
-            FROM g JOIN cs USING (cluster_id) JOIN ls USING (label_id)
-          ),
-          a AS (
-            SELECT sum(n_cl)::BIGINT AS n_records, sum(pt)::BIGINT AS p_sum,
-                   sum(rt)::BIGINT AS r_sum
-            FROM t
-          ),
-          m0 AS (
-            SELECT n_records, p_sum, r_sum,
-                   round(p_sum::DOUBLE / (n_records::DOUBLE * 1000000000), 6)
-                     AS bcubed_precision,
-                   round(r_sum::DOUBLE / (n_records::DOUBLE * 1000000000), 6)
-                     AS bcubed_recall
-            FROM a
-          )
-          SELECT n_records, p_sum, r_sum, bcubed_precision, bcubed_recall,
-                 CASE WHEN bcubed_precision + bcubed_recall > 0
-                      THEN round(2.0 * bcubed_precision * bcubed_recall
-                                 / (bcubed_precision + bcubed_recall), 6)
-                      ELSE 0.0 END AS bcubed_f1
-          FROM m0
-        """,
-        "er_open_triangles": f"""
-          {scored_cte},
-          me AS (
-            SELECT greatest(record_id_a, record_id_b) AS u,
-                   least(record_id_a, record_id_b) AS v
-            FROM j WHERE is_match AND record_id_a != record_id_b
-            GROUP BY 1, 2
-          ),
-          adj AS (SELECT u AS n, v AS w FROM me UNION ALL SELECT v, u FROM me),
-          deg AS (SELECT n, count(*)::BIGINT AS deg FROM adj GROUP BY 1),
-          wed AS (
-            SELECT count(*)::BIGINT AS n_nodes,
-                   sum(deg * (deg - 1) // 2)::BIGINT AS n_wedges
-            FROM deg
-          ),
-          t3 AS (
-            SELECT count(*)::BIGINT AS tri3
-            FROM me e
-            JOIN adj x ON x.n = e.u
-            JOIN adj y ON y.n = e.v AND y.w = x.w
-          ),
-          ec AS (SELECT count(*)::BIGINT AS n_edges FROM me)
-          SELECT n_nodes, n_edges, n_wedges,
-                 (tri3 // 3)::BIGINT AS n_triangles,
-                 ((1000000 * tri3) // greatest(n_wedges, 1))::BIGINT
-                   AS closure_ppm
-          FROM wed, t3, ec
-        """,
-        "er_cluster_purity": f"""
-          {reach_cte},
-          cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
-          lab AS (SELECT mention_id AS id, label_id FROM read_parquet('{men}')),
-          g AS (
-            SELECT cl.cluster_id, lab.label_id, count(*)::BIGINT AS n_cl
-            FROM cl JOIN lab USING (id) GROUP BY 1, 2
-          ),
-          a AS (
-            SELECT cluster_id,
-                   sum(n_cl)::BIGINT AS n_records,
-                   count(*)::BIGINT AS n_labels,
-                   max(n_cl)::BIGINT AS n_dominant,
-                   sum(n_cl * n_cl)::BIGINT AS sum_sq
-            FROM g GROUP BY 1
-          )
-          SELECT cluster_id, n_records, n_labels, n_dominant,
-                 ((1000000 * n_dominant) // n_records)::BIGINT AS purity_ppm,
-                 (1000000 - (1000000 * sum_sq) // (n_records * n_records))::BIGINT
-                   AS gini_ppm
-          FROM a
-        """,
-        "er_pairwise_f1": f1_sql,
-        "er_topk_candidates": topk_sql,
-        "er_rrf_fusion": f"""
-          WITH lex AS ({topk_sql}),
-          bm AS ({bm25_sql}),
-          j AS (
-            SELECT coalesce(l.mention_id, b.mention_id) AS mention_id,
-                   coalesce(l.entity_id, b.entity_id) AS entity_id,
-                   l.rank::BIGINT AS lex_rank, b.rank::BIGINT AS bm25_rank
-            FROM lex l FULL JOIN bm b
-              ON l.mention_id = b.mention_id AND l.entity_id = b.entity_id
-          ),
-          s AS (
-            SELECT mention_id, entity_id, lex_rank, bm25_rank,
-                   (coalesce(1000000 // (60 + lex_rank), 0)
-                    + coalesce(1000000 // (60 + bm25_rank), 0))::BIGINT
-                     AS rrf_micro
-            FROM j
-          )
-          SELECT mention_id, entity_id, lex_rank, bm25_rank, rrf_micro,
-                 fused_rank
-          FROM (
-            SELECT *, row_number() OVER (PARTITION BY mention_id
-                                         ORDER BY rrf_micro DESC,
-                                                  entity_id ASC)::BIGINT
-                        AS fused_rank
-            FROM s
-          ) WHERE fused_rank <= 3
-        """,
-        "er_hard_negatives": f"""
-          WITH mb AS (
-            SELECT mention_id, mention, label_id,
-                   substr(string_split(mention, ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{men}')
-          ),
-          eb AS (
-            SELECT entity_id, lower(title) AS title_l,
-                   substr(string_split(lower(title), ' ')[1], 1, 4) AS bk
-            FROM read_parquet('{ent}')
-          ),
-          pairs AS (
-            SELECT mention_id, entity_id,
-                   round(CASE WHEN greatest(length(mn), length(tn)) > 0
-                              THEN 1.0 - levenshtein(mn, tn)::double
-                                   / greatest(length(mn), length(tn))
-                              ELSE 1.0 END, 6) AS sim
-            FROM (SELECT *,
-                    trim(regexp_replace(lower(mention), '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS mn,
-                    trim(regexp_replace(title_l, '[\\t\\n\\x0B\\f\\r ]+', ' ', 'g')) AS tn
-                  FROM mb JOIN eb USING (bk)
-                  WHERE entity_id != label_id)
-          )
-          SELECT mention_id, entity_id, sim, neg_rank FROM (
-            SELECT mention_id, entity_id, sim,
-                   row_number() OVER (PARTITION BY mention_id
-                                      ORDER BY sim DESC, entity_id ASC) AS neg_rank
-            FROM pairs
-          ) WHERE neg_rank <= 3
-        """,
-        "er_edit_distance_pairs": f"""
-          WITH m AS (
-            SELECT mention_id, {_norm_m} AS norm FROM read_parquet('{men}')
-          ),
-          n AS (SELECT mention_id, norm, length(norm) AS len FROM m)
-          SELECT a.mention_id AS record_id_a, b.mention_id AS record_id_b,
-                 levenshtein(a.norm, b.norm)::BIGINT AS lev_dist
-          FROM n a JOIN n b
-            ON b.len BETWEEN a.len - 2 AND a.len + 2
-           AND a.mention_id < b.mention_id
-          WHERE levenshtein(a.norm, b.norm) <= 2
-        """,
-        "er_mutual_best": f"""
-          WITH {lev_pairs_cte("pairs")},
-          bl AS (
-            SELECT mention_id, entity_id, sim
-            FROM (SELECT *, row_number() OVER (PARTITION BY mention_id
-                                 ORDER BY sim DESC, entity_id ASC) AS rk
-                  FROM pairs)
-            WHERE rk = 1
-          ),
-          br AS (
-            SELECT mention_id, entity_id
-            FROM (SELECT *, row_number() OVER (PARTITION BY entity_id
-                                 ORDER BY sim DESC, mention_id ASC) AS rk
-                  FROM pairs)
-            WHERE rk = 1
-          )
-          SELECT bl.mention_id, bl.entity_id, bl.sim
-          FROM bl JOIN br USING (mention_id, entity_id)
-        """,
-        "er_recall_at_k": f"""
-          WITH {lev_pairs_cte("pairs")},
-          ranked AS (
-            SELECT mention_id, entity_id,
-                   row_number() OVER (PARTITION BY mention_id
-                                      ORDER BY sim DESC, entity_id ASC) AS rank
-            FROM pairs
-          ),
-          topk AS (SELECT * FROM ranked WHERE rank <= 3),
-          gold_rank AS (
-            SELECT t.mention_id, min(t.rank) AS gold_rank
-            FROM topk t JOIN read_parquet('{men}') g USING (mention_id)
-            WHERE t.entity_id = g.label_id
-            GROUP BY t.mention_id
-          ),
-          per_group AS (
-            SELECT m.mention_id, gr.gold_rank
-            FROM (SELECT DISTINCT mention_id FROM topk) m
-            LEFT JOIN gold_rank gr USING (mention_id)
-          )
-          SELECT
-            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 1 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_1,
-            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 2 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_2,
-            round(avg(CASE WHEN gold_rank IS NOT NULL AND gold_rank <= 3 THEN 1.0 ELSE 0.0 END), 6) AS recall_at_3
-          FROM per_group
-        """,
-        "er_jdbc_mapping_scan": f"""
-          WITH mapping AS (
-            SELECT wikipedia_id, title AS wikipedia_title,
-                   'Q' || CAST(wikipedia_id * 7 + 11 AS VARCHAR) AS wikidata_id
-            FROM read_parquet('{ent}')
-          ),
-          by_title AS (
-            SELECT lower(wikipedia_title) AS mention,
-                   min(wikidata_id) AS wikidata_id
-            FROM mapping GROUP BY 1
-          )
-          SELECT m.mention_id,
-                 coalesce(b.wikidata_id, 'NIL') AS wikidata_id
-          FROM read_parquet('{men}') m LEFT JOIN by_title b USING (mention)
-        """,
-    }
 
 
 # Explicit driver-facing query order (round 4). The external driver verifies
@@ -12543,10 +12428,8 @@ _DRIVER_ORDER = [
 
 
 def _driver_sorted(d: dict) -> dict:
-    assert set(_DRIVER_ORDER) == set(_QUERIES), (
-        sorted(set(_DRIVER_ORDER) ^ set(_QUERIES))
-    )
-    return {k: d[k] for k in _DRIVER_ORDER if k in d}
+    assert set(_DRIVER_ORDER) == set(d), sorted(set(_DRIVER_ORDER) ^ set(d))
+    return {k: d[k] for k in _DRIVER_ORDER}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -12555,7 +12438,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL for each query (driver correctness gate)."""
-    out = dict(_ORACLES)
-    out.update(_er_oracles())
-    return _driver_sorted(out)
+    """DuckDB-equivalent SQL for each query (driver correctness gate).
+    Writes the ER fixtures the oracles read."""
+    _fixtures()
+    _jsonl_fixture()
+    return _driver_sorted(_ORACLES)

@@ -144,7 +144,7 @@ def cosine_block(
 
 
 def _jaro_winkler(s1: str, s2: str) -> float:
-    """Pure-python Jaro-Winkler (rapidfuzz isn't in the sandbox image)."""
+    """Pure-python Jaro-Winkler."""
     if s1 == s2:
         return 1.0
     l1, l2 = len(s1), len(s2)
@@ -185,21 +185,11 @@ def _jaro_winkler(s1: str, s2: str) -> float:
     return jaro + 0.1 * prefix * (1 - jaro)
 
 
-try:
-    from rapidfuzz.distance.JaroWinkler import similarity as _rf_jw  # type: ignore
-
-    def _jw(a: str, b: str) -> float:
-        return float(_rf_jw(a, b))
-
-except ImportError:  # pragma: no cover - sandbox path
-    _jw = _jaro_winkler
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched Jaro-Winkler similarity."""
     return pd.Series(
-        [_jw(x or "", y or "") for x, y in zip(a, b)], dtype="float64"
+        [_jaro_winkler(x or "", y or "") for x, y in zip(a, b)], dtype="float64"
     )
 
 

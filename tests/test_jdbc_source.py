@@ -57,3 +57,27 @@ def test_jdbc_filter_pushdown(spark, mapping_db):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "wikipedia_id" in plan
     assert df.count() == 50
+
+
+def test_roundtrip_queries_reuse_one_scratch_dir(spark, monkeypatch):
+    """er_jdbc_mapping_scan and er_orc_mention_scan write their stores into
+    one per-process scratch directory: calling each query twice makes no
+    new directory, overwrites the same subdirectory and reads the same
+    rows back."""
+    import __spark_entry__ as entry
+
+    scratch = entry._scratch_dir()
+    made = []
+    mkdtemp = tempfile.mkdtemp
+    monkeypatch.setattr(
+        tempfile, "mkdtemp", lambda *a, **k: made.append(a or k) or mkdtemp(*a, **k)
+    )
+    qs = entry.queries()
+    for name, sub in (("er_jdbc_mapping_scan", "mapping_db"),
+                      ("er_orc_mention_scan", "mentions_orc")):
+        first = sorted(qs[name](spark, "").collect())
+        second = sorted(qs[name](spark, "").collect())
+        assert first and first == second, name
+        assert os.path.isdir(os.path.join(scratch, sub)), (name, os.listdir(scratch))
+    assert made == []
+    assert entry._scratch_dir() == scratch

@@ -17,6 +17,9 @@ reason.
 
 The clone guard reads ``__spark_entry__.py`` and ``blink_spark/`` as text:
 no 10 consecutive normalised lines may occur twice.
+
+The registry guard reads ``__spark_entry__.py``: every ``@_q(name, oracle)``
+passes its oracle, so a query and its oracle are registered in one place.
 """
 
 from __future__ import annotations
@@ -459,3 +462,40 @@ def test_clone_finder_on_synthetic_source():
     # one differing line breaks every window through it
     changed = [*block[:1], (2, "x2 = 9"), *block[2:]]
     assert _clones({"a.py": block, "b.py": changed}, 3) == []
+
+
+# ---- oracle registry guard -------------------------------------------------
+
+def _oracleless_queries(tree: ast.Module) -> list[str]:
+    """``line: name`` of every ``@_q(...)`` decorator that passes ``None``
+    or no oracle."""
+    found = []
+    for node in ast.walk(tree):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for d in node.decorator_list:
+            if not (isinstance(d, ast.Call) and isinstance(d.func, ast.Name)
+                    and d.func.id == "_q"):
+                continue
+            args = [*d.args, *(k.value for k in d.keywords)]
+            if len(args) < 2 or (isinstance(args[1], ast.Constant) and args[1].value is None):
+                found.append(f"{d.lineno}: {ast.unparse(args[0]) if args else '?'}")
+    return found
+
+
+def test_every_query_registers_its_oracle():
+    """Every ``@_q(...)`` in ``__spark_entry__.py`` passes its oracle: a
+    query's name and its oracle are registered once, side by side, and no
+    second registry fills in a ``None``."""
+    found = _oracleless_queries(_parse(REPO / "__spark_entry__.py"))
+    assert not found, f"{len(found)} queries register no oracle:\n" + "\n".join(found)
+
+
+def test_registry_guard_on_synthetic_source():
+    src = (
+        '@_q("a", None)\ndef a(): pass\n'
+        '@_q("b")\ndef b(): pass\n'
+        '@_q("c", "SELECT 1")\ndef c(): pass\n'
+        '@_q("d", oracle=_D_SQL)\ndef d(): pass\n'
+    )
+    assert _oracleless_queries(ast.parse(src)) == ["1: 'a'", "3: 'b'"]
