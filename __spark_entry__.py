@@ -10824,10 +10824,6 @@ def _er_degree_distribution(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# integer-exact PageRank over the gold match graph: every step is
-# BIGINT floor division ('//' here, 'div' in Spark — identical on the
-# non-negative values involved); sums cast ::BIGINT before arithmetic
-# so DuckDB never surfaces HUGEINT to the comparator
 # er_assortativity: spearman window-rank twin over the endpoint
 # degree pairs of the SAME raw/e/deg CTEs.
 @_q("er_assortativity", f"""
@@ -10891,6 +10887,10 @@ def _er_assortativity(spark: SparkSession, sf: str) -> DataFrame:
     return spearman_matrix(ed, ["deg_u", "deg_v"])
 
 
+# integer-exact PageRank over the gold match graph: every step is
+# BIGINT floor division ('//' here, 'div' in Spark — identical on the
+# non-negative values involved); sums cast ::BIGINT before arithmetic
+# so DuckDB never surfaces HUGEINT to the comparator
 @_q("er_match_pagerank", f"""
           WITH raw AS (
             SELECT least(mention_id_a, mention_id_b) AS u,
