@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import atexit
 import functools
+import itertools
 import os
 import shutil
 import sys
@@ -48,12 +49,16 @@ def _fixtures() -> dict[str, str]:
 @functools.cache
 def _scratch_dir() -> str:
     """This process's scratch directory, made on first use and removed at
-    interpreter exit. Queries that round-trip through a store write a fixed
-    subdirectory of it in overwrite mode. Per process, not a fixed path: an
-    embedded Derby database can be booted by one JVM only."""
+    interpreter exit. Queries that round-trip through a store write under
+    it: the JDBC query a fixed subdirectory in overwrite mode, the ORC query
+    one subdirectory per call. Per process, not a fixed path: an embedded
+    Derby database can be booted by one JVM only."""
     d = tempfile.mkdtemp(prefix="blink_scratch_")
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
+
+
+_ORC_CALLS = itertools.count()
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -11686,7 +11691,9 @@ def _er_orc_mention_scan(spark: SparkSession, sf: str) -> DataFrame:
     src = _fx(spark, "mentions").select(
         "mention_id", "mention", "world", "label_id"
     )
-    path = os.path.join(_scratch_dir(), "mentions_orc")
+    # a directory per call: a frame from an earlier call lists its files
+    # when it is made and must still find them after the next call
+    path = os.path.join(_scratch_dir(), "mentions_orc", str(next(_ORC_CALLS)))
     write_orc(src, path, partition_by="world")
     return (
         read_orc(spark, path)

@@ -8,7 +8,8 @@ Usage:
   python bench_extra.py                 # time the 4 declared queries, noop sink
   python bench_extra.py plans OUTDIR    # dump explain('formatted') per query
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS,
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
+(default: the CPUs this process may run on),
 SPARK_GRAFT_BENCH_REPS (default 3).
 """
 
@@ -22,8 +23,9 @@ import time
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
 
+from blink_spark.session import DEFAULT_CPUS as CPUS  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
 
 QUERY_NAMES = (

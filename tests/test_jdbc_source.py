@@ -81,3 +81,14 @@ def test_roundtrip_queries_reuse_one_scratch_dir(spark, monkeypatch):
         assert os.path.isdir(os.path.join(scratch, sub)), (name, os.listdir(scratch))
     assert made == []
     assert entry._scratch_dir() == scratch
+
+
+def test_orc_scan_frame_outlives_the_next_call(spark):
+    """A frame from an earlier er_orc_mention_scan call still reads after a
+    second call: each call writes its own subdirectory."""
+    import __spark_entry__ as entry
+
+    q = entry.queries()["er_orc_mention_scan"]
+    a = q(spark, "")
+    b = q(spark, "")
+    assert a.count() == b.count() > 0

@@ -7,6 +7,7 @@ from __future__ import annotations
 import itertools
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -298,6 +299,28 @@ def test_bcubed_hand_computed(spark):
     assert abs(row["bcubed_precision"] - p) < 2e-6
     assert abs(row["bcubed_recall"] - r) < 2e-6
     assert abs(row["bcubed_f1"] - 2 * p * r / (p + r)) < 4e-6
+
+
+def test_bcubed_overflow_boundary(spark):
+    """bcubed's per-group n_cl²·10⁹ is a BIGINT with no guard but ANSI,
+    which get_spark pins: one (cluster, label) group of 96,038 records
+    computes, and 96,039 raises (96,039²·10⁹ > 2⁶³−1)."""
+    from pyspark.errors import ArithmeticException
+
+    from blink_spark.operators.eval import bcubed
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+    def one_group(n):
+        ids = spark.range(n).selectExpr("CAST(id AS STRING) AS record_id")
+        return bcubed(ids.selectExpr("record_id", "'c' AS cluster_id"),
+                      ids.selectExpr("record_id", "'l' AS label")).collect()[0]
+
+    row = one_group(96_038)
+    assert row["n_records"] == 96_038
+    assert row["bcubed_precision"] == row["bcubed_recall"] == 1.0
+    with pytest.raises(ArithmeticException, match="ARITHMETIC_OVERFLOW"):
+        one_group(96_039)
 
 
 def test_bcubed_perfect_clustering(spark):
